@@ -2,12 +2,13 @@
 
 entry(spark)   — flagship: PII/toxicity scrub + quality filter over the
                  sf0.001 documents table with deterministic PII clauses
-                 appended (the engine's core semantics end-to-end).
-queries()      — 54 callables covering the operator families of
+                 appended (the engine's core semantics end-to-end), in
+                 one Python stage (operators/fused.py).
+queries()      — 93 callables covering the operator families of
                  SURVEY.md §2 plus the north-rule/training-data
                  additions (see COVERAGE.md for the full map).
-oracle_sql()   — a DuckDB oracle for EVERY query: 34 plain SQL
-                 equivalents, 20 computed-literal fixture oracles for
+oracle_sql()   — a DuckDB oracle for EVERY query: 43 plain SQL
+                 equivalents, 50 computed-literal fixture oracles for
                  the model-backed ops (langid, perplexity, minhash,
                  simhash, SRP-LSH, IVF, pair queries, image/audio/video
                  stages) — see pii_filter_spark/oracle_support.py.
@@ -126,7 +127,7 @@ def _sql_case_clause(col: str, values: list, quote: bool = True) -> str:
 # ---------------------------------------------------------------------------
 
 def q_pii_scrub_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_filter_spark.operators.scrub import scrub_stage
+    from pii_filter_spark.operators.fused import scrub_stage
 
     return scrub_stage(_captions(spark, sf_dir)).select(
         "doc_id",
@@ -136,7 +137,7 @@ def q_pii_scrub_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pii_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_filter_spark.operators.scrub import scrub_stage
+    from pii_filter_spark.operators.fused import scrub_stage
 
     # explode_outer, NOT explode: plain explode makes Catalyst push a
     # size()>0 pre-filter below the Generate, which re-evaluates the
@@ -156,7 +157,7 @@ def q_sensitive_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sensitive-topic (19-category) scrub — the reference's LLM stage
     made deterministic. Same clause-injection protocol as
     q_pii_scrub_captions, keyed doc_id % 6."""
-    from pii_filter_spark.operators.scrub import scrub_stage
+    from pii_filter_spark.operators.fused import scrub_stage
 
     clause = F.element_at(
         F.array(*[F.lit(c) for c in _SENS_CLAUSES]),
@@ -432,7 +433,7 @@ def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scrub → restore must be identity (reference R1+R3 inverse stage)."""
     from pii_filter_spark.operators.restore_stage import restore_stage
-    from pii_filter_spark.operators.scrub import scrub_stage
+    from pii_filter_spark.operators.fused import scrub_stage
 
     return restore_stage(scrub_stage(_captions(spark, sf_dir))).select(
         "doc_id", "restored_caption", "restore_ok"
@@ -444,7 +445,7 @@ def q_restore_label_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with cleanup_labels=True collapses doubled label words the restore
     re-creates (reference restoration_service.py:93-106)."""
     from pii_filter_spark.operators.restore_stage import restore_stage
-    from pii_filter_spark.operators.scrub import scrub_stage
+    from pii_filter_spark.operators.fused import scrub_stage
 
     clause = F.element_at(
         F.array(*[F.lit(c) for c in _DUP_CLAUSES]),
@@ -464,7 +465,7 @@ def q_scrub_golden_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference M1+M2: greedy span-overlap TP/FP/FN vs a golden label set,
     rolled up to one (tp, fp, fn, precision, recall, f1) row."""
     from pii_filter_spark.operators.evaluation import global_f1, span_f1_counts
-    from pii_filter_spark.operators.scrub import scrub_stage
+    from pii_filter_spark.operators.fused import scrub_stage
 
     det = (
         scrub_stage(_captions(spark, sf_dir))
@@ -1531,12 +1532,6 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parse_warc_archives(archives)
 
 
-# Java's \s is ASCII-only; spelled out so the Spark split, the DuckDB
-# twin and the pure-Python twin tokenize IDENTICALLY (python \s would
-# also match unicode spaces).
-_ASCII_WS = "[ \\t\\n\\x0B\\f\\r]+"
-
-
 def q_refinedweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL RefinedWeb chain end-to-end through this engine (Penedo
     et al. 2023 fig. 2): WARC shards (stage 0) → record explode → HTML
@@ -1549,6 +1544,7 @@ def q_refinedweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     twins."""
     from pii_filter_spark.operators.html_extract import strip_html
     from pii_filter_spark.operators.line_clean import line_clean
+    from pii_filter_spark.operators.quality_stage import ASCII_WS
     from pii_filter_spark.operators.textstats import language_id_col
     from pii_filter_spark.operators.warc_ingest import parse_warc_archives
     from pii_filter_spark.sources.warc import build_warc, http_response_block
@@ -1596,7 +1592,7 @@ def q_refinedweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_lines",
         "doc_keep",
         language_id_col(F.col("text_clean")).alias("lang"),
-        F.size(F.split(F.trim("text_clean"), _ASCII_WS)).alias("wc"),
+        F.size(F.split(F.trim("text_clean"), ASCII_WS)).alias("wc"),
         F.length("text_clean").alias("n_chars_clean"),
         F.md5("text_clean").alias("fp"),
     )
@@ -1942,8 +1938,8 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_quality_full(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full quality stage incl. langid+perplexity UDF (model-backed)."""
-    from pii_filter_spark.operators.quality_stage import quality_stage
+    """Full quality stage incl. langid+perplexity (model-backed)."""
+    from pii_filter_spark.operators.fused import quality_stage
 
     return quality_stage(_captions(spark, sf_dir)).select(
         "doc_id", "keep", F.col("lang").alias("lang_detected"),
@@ -1955,11 +1951,10 @@ def q_quality_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: scrub + quality over sf0.001 captions."""
-    from pii_filter_spark.operators.quality_stage import quality_stage
-    from pii_filter_spark.operators.scrub import scrub_stage
+    """Flagship: quality + scrub over sf0.001 captions, one Python stage."""
+    from pii_filter_spark.operators.fused import fused_quality_scrub
 
-    df = scrub_stage(quality_stage(_captions(spark, SF_DEFAULT)))
+    df = fused_quality_scrub(_captions(spark, SF_DEFAULT))
     return df.select(
         "doc_id", "keep", "drop_reasons", "scrubbed_caption", "scrub_count", "lang"
     )

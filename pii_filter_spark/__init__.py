@@ -9,8 +9,8 @@ transforms designed for 10^12-row scale.
 
 Layout:
   core/       pure-Python semantic kernels (shared by Spark UDF batches)
-  images/     pure-numpy image codecs (PNG lossless; deterministic lossy stub)
-  sources/    table IO seam (parquet + manifest; Iceberg if jars present)
+  images/     pure-numpy image codecs (PNG lossless; baseline JPEG)
+  sources/    table IO seam (parquet + Iceberg-style manifest)
   operators/  DataFrame -> DataFrame stages (scrub, quality, dedup, ANN, ...)
   pipeline.py full pipeline composition, checkpoint/resume, metrics
 """

@@ -239,13 +239,13 @@ def parse_merges_txt(text: str) -> List[Tuple[bytes, bytes]]:
             ) from e
 
     merges: List[Tuple[bytes, bytes]] = []
-    for ln in text.splitlines():
+    for i, ln in enumerate(text.splitlines()):
         ln = ln.strip()
-        # only the `#version` HEADER is a comment — GPT-2's released
-        # table contains legitimate merges whose left token begins with
-        # '#' ("# #", "## #", ...), which a bare startswith('#') skip
-        # would silently drop
-        if not ln or ln.startswith("#version"):
+        # only a `#version` HEADER on the first line is a comment —
+        # GPT-2's released table contains legitimate merges whose left
+        # token begins with '#' ("# #", "## #", ...), so any later line
+        # starting with '#' is a merge pair like every other
+        if not ln or (i == 0 and ln.startswith("#version")):
             continue
         parts = ln.split(" ")
         if len(parts) != 2:

@@ -7,7 +7,7 @@ precedence by span overlap to avoid index shift
 (/root/reference/tests/unit/test_pipeline_integration.py:49-143). We adopt
 that oracle semantics as the single-pass physical plan: detect everything
 on original offsets, resolve, substitute once. This also fuses three Arrow
-round-trips into one pandas-UDF stage (see operators/scrub.py).
+round-trips into one pandas-UDF stage (see operators/fused.py).
 
 Frozen convention (parity citations into /root/reference):
  1. Regex scan of the five patterns in declared order, candidates
@@ -271,7 +271,7 @@ def scrub_batch(
     with_toxicity: bool = True,
     with_sensitive: bool = True,
 ) -> List[Tuple[str, List[Dict[str, Any]]]]:
-    """Batch entry point used by the Arrow/pandas UDF in operators/scrub.py."""
+    """Batch entry point used by the caption-stage UDFs in operators/fused.py."""
     out = []
     for t in texts:
         if t is None or not isinstance(t, str):

@@ -173,7 +173,3 @@ def detect_language(text: str) -> str:
         if scores[i] > best_score:
             best_lang, best_score = lang, float(scores[i])
     return best_lang
-
-
-def detect_language_batch(texts) -> List[str]:
-    return [detect_language(t) if isinstance(t, str) else UND for t in texts]

@@ -65,12 +65,6 @@ def _train():
 _TRI, _BI, _V = _train()
 
 
-def log_prob_char(ctx: str, ch: str) -> float:
-    num = _TRI.get((ctx, ch), 0) + _K
-    den = _BI.get(ctx, 0) + _K * _V
-    return math.log(num / den)
-
-
 # --- dense-table vectorization ---------------------------------------------
 # The alphabet after normalization is tiny (~40 symbols), so the whole
 # add-k model densifies into an A³ float64 array (<1 MB). Scoring is then

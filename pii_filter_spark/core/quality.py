@@ -5,16 +5,14 @@ adapted to image-caption text, with caption-scale thresholds. No reference
 counterpart; the reference's analogue is its cheap-first stage ordering
 (run cheap filters before expensive stages — README.md:1264).
 
-Every rule is defined twice with IDENTICAL semantics:
-  * here in pure Python (`quality_signals` / `drop_reasons`) — used by the
-    fixture oracle and by unit tests;
-  * in operators/quality_stage.py as native Catalyst column expressions
-    (JVM whole-stage codegen, no Python in the hot path) for the rules that
-    are expressible, plus one Arrow-batched pandas UDF for langid+perplexity.
-tests/test_quality.py asserts the two implementations agree row-for-row.
+This is the ONLY implementation of the caption rules: the Spark caption
+stage (operators/fused.py) calls `drop_reasons` per row inside its pandas
+UDF, and the fixture oracle and unit tests call the same function.
+(operators/quality_stage.py's heuristic_keep is a separate, SQL-expressible
+rule subset over the documents table, not a mirror of these rules.)
 
-Tokenization contract (shared with the SQL/Catalyst mirror):
-tokens = non-empty pieces of trim(text) split on runs of whitespace.
+Tokenization contract:
+tokens = non-empty pieces of text.strip() split on runs of whitespace.
 Lines  = text split on "\n"; only lines with non-empty strip() count.
 
 Drop-reason codes are emitted in the fixed order of RULE_ORDER so
@@ -98,8 +96,8 @@ def drop_reasons(
 ) -> List[str]:
     """Ordered drop-reason codes; empty list == keep.
 
-    `lang`/`ppl` may be injected (Spark passes columns computed by the
-    langid/perplexity UDF); when None they are computed here.
+    `lang`/`ppl` may be injected (the caption stage computes them once
+    per row and passes them in); when None they are computed here.
     """
     if text is None or not text.strip():
         return ["empty"]

@@ -14,8 +14,6 @@ Brazilian government specs, written here from the spec.
 
 from __future__ import annotations
 
-_NON_DIGIT = str.maketrans("", "", "".join(chr(c) for c in range(128) if not chr(c).isdigit()))
-
 
 def digits_only(value: str) -> str:
     """Strip every non-digit character (ASCII fast path, unicode fallback)."""

@@ -1,15 +1,11 @@
 """Pure-numpy image codecs for the binary `bytes` column.
 
-No imaging library ships in this sandbox (no Pillow/libjpeg), so:
-  * PNG (lossless) is implemented for real — spec-conformant encoder and
-    decoder for 8-bit RGB (png_codec.py);
-  * the lossy slot ("jpeg" in the input_hint) is a deterministic
-    DCT-quantization codec (lossy_codec.py) with the same loss profile a
-    JPEG would have (blockwise frequency quantization, PSNR >= 40 dB at the
-    chosen quality). Real JPEG decode is gated behind a Pillow import-try
-    in codecs.decode_image and raises NotImplementedError when absent —
-    clearly-marked sandbox stub; the Spark-side plumbing (binary column,
-    mapInPandas batch shape, PSNR verification) is real and tested.
+No imaging library is a dependency (no Pillow/libjpeg), so both codecs
+are written from their specs and are deterministic across environments:
+  * PNG (lossless) — encoder and decoder for 8-bit RGB (png_codec.py);
+  * JPEG (lossy) — baseline sequential JFIF encoder and decoder
+    (jpeg_codec.py), PSNR >= 40 dB at the fixture quality.
+codecs.decode_image dispatches on magic bytes.
 """
 
 from .codecs import decode_image, encode_image, psnr  # noqa: F401

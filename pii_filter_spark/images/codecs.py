@@ -7,8 +7,6 @@ import math
 import numpy as np
 
 from .jpeg_codec import decode_jpeg, encode_jpeg
-from .lossy_codec import MAGIC as _LOSSY_MAGIC
-from .lossy_codec import decode_lossy
 from .png_codec import decode_png, encode_png
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
@@ -28,12 +26,9 @@ def encode_image(pixels: np.ndarray, fmt: str, quality: int = 90) -> bytes:
 
 def decode_image(data: bytes) -> np.ndarray:
     """Decode by magic bytes -> RGB uint8 (h, w, 3). JPEG is the real
-    baseline T.81 decoder (jpeg_codec.py); JQD1 dispatch remains for
-    bytes produced by older fixtures."""
+    baseline T.81 decoder (jpeg_codec.py)."""
     if data.startswith(_PNG_SIG):
         return decode_png(data)
-    if data.startswith(_LOSSY_MAGIC):
-        return decode_lossy(data)
     if data.startswith(_JPEG_SIG):
         return decode_jpeg(data)
     raise ValueError("unrecognized image container")

@@ -58,7 +58,6 @@ ZIGZAG = np.array(
      35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
      58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63],
     dtype=np.int64)
-_UNZIGZAG = np.argsort(ZIGZAG)
 
 # Annex K Huffman specs: (BITS[1..16], HUFFVAL)
 DC_LUM_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]

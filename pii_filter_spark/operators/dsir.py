@@ -127,20 +127,6 @@ def _bucket_counts(tokens: DataFrame) -> Dict[int, Tuple[int, int]]:
     }
 
 
-def dsir_bucket_log_ratios(
-    tokens: DataFrame,
-    *,
-    num_buckets: int,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """(bucket, lr_unats) ratio table as a DataFrame — the transcendental
-    step runs once, driver-side, in `log_ratio_unats`."""
-    rows = ratio_table_rows(_bucket_counts(tokens), num_buckets, alpha)
-    return tokens.sparkSession.createDataFrame(
-        rows, "_b long, lr_unats long"
-    )
-
-
 def dsir_select(
     df: DataFrame,
     is_target: Column,

@@ -1,20 +1,21 @@
-"""Fused quality + scrub stage: ONE Arrow round-trip per caption batch.
+"""The caption stage: one Arrow-batched pandas UDF per caption batch.
 
-quality_stage + scrub_stage are kept as composable operators, but chaining
-them creates two ArrowEvalPython stages — two Python workers per task and
-two Arrow (de)serializations of the caption column. And the native
-higher-order-function rule expressions (filter/transform lambdas) are
-interpreted JVM-side; measured at 32 local cores they add ~40% wall time
-from allocation contention, while the pure-Python rule evaluator does the
-same rows at ~60k rows/s/core. On a 10^12-row table the scalable shape is:
-JVM does scan + write, Python (which parallelizes linearly across workers)
-does all per-row logic in one vectorized batch stage.
+Every per-caption decision — language ID, perplexity, the quality rules
+(core/quality.py) and the PII/toxicity scrub (core/detect.py) — runs in
+Python on the frozen core semantics; the JVM only scans, projects and
+writes. The operators layer holds no rule logic of its own.
 
-`fused_quality_scrub` therefore computes lang, ppl, drop_reasons, keep,
-scrubbed_caption and pii_masked in a single pandas UDF built on the frozen
-core semantics (core/quality.py, core/detect.py). Output columns and
-values are identical to scrub_stage(quality_stage(df)) — asserted by
-tests/test_spark_stages.py::test_fused_stage_equals_chained_stages.
+Three stage functions, each ONE pandas UDF reading only the `caption`
+column (Catalyst prunes the MB-scale `bytes` column away):
+
+  * quality_stage       adds lang, ppl, drop_reasons, keep
+  * scrub_stage         adds scrubbed_caption, pii_masked, scrub_count
+  * fused_quality_scrub adds both sets — the production path
+                        (pipeline.transform) and `entry()`.
+
+scrub_stage(quality_stage(df)) yields the same columns and values as
+fused_quality_scrub(df) (tests/test_spark_stages.py). Pattern, dictionary
+and model state compile once per Python worker at module import.
 """
 
 from __future__ import annotations
@@ -27,6 +28,7 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DoubleType,
+    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -36,54 +38,95 @@ from ..core.detect import scrub_batch
 from ..core.langid import detect_language
 from ..core.perplexity import perplexity
 from ..core.quality import drop_reasons
-from .scrub import MAPPING_TYPE
 
-_FUSED_TYPE = StructType(
+MAPPING_TYPE = StructType(
     [
-        StructField("lang", StringType()),
-        StructField("ppl", DoubleType()),
-        StructField("drop_reasons", ArrayType(StringType())),
-        StructField("keep", BooleanType()),
-        StructField("scrubbed_caption", StringType()),
-        StructField("pii_masked", ArrayType(MAPPING_TYPE)),
+        StructField("placeholder", StringType()),
+        StructField("original_value", StringType()),
+        StructField("type", StringType()),
+        StructField("span_start", IntegerType()),
+        StructField("span_end", IntegerType()),
     ]
 )
 
+_QUALITY_FIELDS = [
+    StructField("lang", StringType()),
+    StructField("ppl", DoubleType()),
+    StructField("drop_reasons", ArrayType(StringType())),
+    StructField("keep", BooleanType()),
+]
+_SCRUB_FIELDS = [
+    StructField("scrubbed_caption", StringType()),
+    StructField("pii_masked", ArrayType(MAPPING_TYPE)),
+]
 
-@pandas_udf(_FUSED_TYPE)
-def fused_udf(captions: pd.Series) -> pd.DataFrame:
+
+def _quality_columns(captions: pd.Series) -> dict:
     langs, ppls, reasons = [], [], []
     for t in captions:
         if isinstance(t, str):
             lg, pp = detect_language(t), perplexity(t)
         else:
-            lg, pp = "und", 0.0
+            t, lg, pp = None, "und", 0.0
         langs.append(lg)
         ppls.append(pp)
-        reasons.append(drop_reasons(t if isinstance(t, str) else None, lg, pp))
+        reasons.append(drop_reasons(t, lg, pp))
+    return {
+        "lang": langs,
+        "ppl": ppls,
+        "drop_reasons": reasons,
+        "keep": [len(r) == 0 for r in reasons],
+    }
+
+
+def _scrub_columns(captions: pd.Series) -> dict:
     scrubbed = scrub_batch(captions)
-    return pd.DataFrame(
-        {
-            "lang": langs,
-            "ppl": ppls,
-            "drop_reasons": reasons,
-            "keep": [len(r) == 0 for r in reasons],
-            "scrubbed_caption": [r[0] for r in scrubbed],
-            "pii_masked": [r[1] for r in scrubbed],
-        }
-    )
+    return {
+        "scrubbed_caption": [r[0] for r in scrubbed],
+        "pii_masked": [r[1] for r in scrubbed],
+    }
 
 
-def fused_quality_scrub(df: DataFrame, caption_col: str = "caption") -> DataFrame:
-    """Equivalent of scrub_stage(quality_stage(df)) in one Python stage."""
-    out = df.withColumn("_fx", fused_udf(F.col(caption_col)))
-    return (
-        out.withColumn("lang", F.col("_fx.lang"))
-        .withColumn("ppl", F.col("_fx.ppl"))
-        .withColumn("drop_reasons", F.col("_fx.drop_reasons"))
-        .withColumn("keep", F.col("_fx.keep"))
-        .withColumn("scrubbed_caption", F.col("_fx.scrubbed_caption"))
-        .withColumn("pii_masked", F.col("_fx.pii_masked"))
-        .withColumn("scrub_count", F.size("pii_masked"))
-        .drop("_fx")
-    )
+def _caption_udf(name: str, fields, *column_fns):
+    def batch(captions: pd.Series) -> pd.DataFrame:
+        cols = {}
+        for fn in column_fns:
+            cols.update(fn(captions))
+        return pd.DataFrame(cols)
+
+    batch.__name__ = name  # the UDF's name in physical plans
+    return pandas_udf(batch, StructType(fields))
+
+
+_QUALITY_UDF = _caption_udf("caption_quality", _QUALITY_FIELDS, _quality_columns)
+_SCRUB_UDF = _caption_udf("caption_scrub", _SCRUB_FIELDS, _scrub_columns)
+_FUSED_UDF = _caption_udf(
+    "caption_quality_scrub",
+    _QUALITY_FIELDS + _SCRUB_FIELDS,
+    _quality_columns,
+    _scrub_columns,
+)
+
+
+def _apply(df: DataFrame, udf) -> DataFrame:
+    out = df.withColumn("_cs", udf(F.col("caption")))
+    for name in udf.returnType.fieldNames():
+        out = out.withColumn(name, F.col(f"_cs.{name}"))
+    return out.drop("_cs")
+
+
+def quality_stage(df: DataFrame) -> DataFrame:
+    """Adds lang, ppl, drop_reasons (core.quality.RULE_ORDER order), keep."""
+    return _apply(df, _QUALITY_UDF)
+
+
+def scrub_stage(df: DataFrame) -> DataFrame:
+    """Adds scrubbed_caption, pii_masked, scrub_count."""
+    out = _apply(df, _SCRUB_UDF)
+    return out.withColumn("scrub_count", F.size("pii_masked"))
+
+
+def fused_quality_scrub(df: DataFrame) -> DataFrame:
+    """quality_stage + scrub_stage columns in one Python stage."""
+    out = _apply(df, _FUSED_UDF)
+    return out.withColumn("scrub_count", F.size("pii_masked"))

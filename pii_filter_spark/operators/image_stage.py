@@ -4,9 +4,7 @@ The image `bytes` column is opaque binary with typed metadata (w, h, fmt).
 Decode-touching work runs in mapInPandas batches so each task streams
 Arrow record batches instead of materializing whole partitions (rows are
 MB-scale; session config caps maxRecordsPerBatch accordingly). Decoders:
-real PNG + deterministic lossy codec (images/); true JPEG/video paths are
-sandbox-stubbed (images/codecs.py raises NotImplementedError) while the
-Spark plumbing — schemas, batch iteration, column pruning — is real.
+the pure-numpy PNG and baseline JPEG codecs in images/.
 
 verify_images is the per-row invariant stage (FIXTURES.md B3): decoded
 pixels must exist, match the (w, h) metadata, and PSNR vs a reference

@@ -103,8 +103,6 @@ def line_clean(
 
 _P_COUNTER = re.compile(_COUNTER_RE)
 _P_NUMERIC = re.compile(_NUMERIC_RE)
-_P_TERMINAL = re.compile(_TERMINAL_RE[:-1] + r"\Z")  # $ -> \Z (no newline)
-_JAVA_WS_SPACE = " "
 
 
 def _line_removed_py(line: str) -> bool:

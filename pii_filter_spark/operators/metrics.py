@@ -13,11 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-METRICS_COLS = (
-    "part_id", "rows_in", "rows_kept", "rows_dropped", "scrub_count",
-    "drop_reason_counts",
-)
-
 
 def partition_metrics(df: DataFrame, part_col: str = "part_id") -> DataFrame:
     """Per-partition rollup: (part_id, rows_in, rows_kept, rows_dropped,
@@ -41,17 +36,3 @@ def partition_metrics(df: DataFrame, part_col: str = "part_id") -> DataFrame:
         )
     )
     return base.join(reasons, part_col, "left")
-
-
-def global_metrics(df: DataFrame) -> dict:
-    row = df.agg(
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.col("keep").cast("long")).alias("rows_kept"),
-        F.sum(F.col("scrub_count").cast("long")).alias("scrub_count"),
-    ).collect()[0]
-    return {
-        "rows_in": row["rows_in"],
-        "rows_kept": row["rows_kept"] or 0,
-        "rows_dropped": row["rows_in"] - (row["rows_kept"] or 0),
-        "scrub_count": row["scrub_count"] or 0,
-    }

@@ -1,191 +1,30 @@
-"""Quality-filter stage: language-ID + perplexity + heuristic rules.
+"""Native SQL-expressible quality rules for the documents table.
 
-Physical split (this is the point of the stage):
-  * Every Gopher/C4 heuristic (word counts, ratios, line statistics,
-    substring rules) is a NATIVE Catalyst column expression — split/
-    aggregate/filter/transform higher-order functions that run inside JVM
-    whole-stage codegen. No Python, no Arrow transfer, vectorized for free.
-  * Only language-ID and perplexity — which need the n-gram models — go
-    through one Arrow-batched pandas UDF returning a (lang, ppl) struct.
-
-Semantics are the exact mirror of core/quality.py (`drop_reasons`); the
-tests assert row-for-row agreement between this plan and the pure-Python
-rules. Drop-reason codes appear in core.quality.RULE_ORDER order.
+`heuristic_keep` and `rule_ablation` evaluate a C4/Gopher rule subset as
+Catalyst column expressions (no Python, no Arrow transfer) so their DuckDB
+oracles can render the same rules as plain SQL. This is a different
+semantic from the caption rules in core/quality.py (which the caption
+stage in operators/fused.py runs): only `#` counts as a symbol, tokens
+split on ASCII whitespace, and there is no language or perplexity rule.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+import functools
+import operator
+
 from pyspark.sql import functions as F
 
 # Java regex \s+ spelled as its explicit ASCII class so the DuckDB
 # oracles can use the IDENTICAL pattern (RE2's \s omits \x0B)
 ASCII_WS = "[ \\t\\n\\x0B\\f\\r]+"
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StringType, StructField, StructType
-
-from ..core import quality as Q
-from ..core.langid import detect_language
-from ..core.patterns import PORTUGUESE_STOP_WORDS
-from ..core.perplexity import PPL_THRESHOLD, perplexity
-
-_BULLET_CHARS = ["-", "*", "•", "‣", "▪"]
-# Java regex needs (?U) for unicode \W/\d classes to match Python's re.
-_ALPHA_JAVA = r"(?U)[^\W\d_]"
 
 
-_LANG_PPL_TYPE = StructType(
-    [StructField("lang", StringType()), StructField("ppl", DoubleType())]
-)
-
-
-@pandas_udf(_LANG_PPL_TYPE)
-def lang_ppl_udf(captions: pd.Series) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "lang": [detect_language(t) if isinstance(t, str) else "und" for t in captions],
-            "ppl": [perplexity(t) if isinstance(t, str) else 0.0 for t in captions],
-        }
-    )
-
-
-def _count_occurrences(col: Column, needle: str) -> Column:
-    return (F.length(col) - F.length(F.replace(col, F.lit(needle), F.lit("")))) / len(needle)
-
-
-def quality_signal_columns(caption: Column) -> dict[str, Column]:
-    """Native-expression mirror of core.quality.quality_signals."""
-    trimmed = F.trim(caption)
-    nonempty = caption.isNotNull() & (trimmed != F.lit(""))
-    tokens = F.when(nonempty, F.split(trimmed, r"\s+")).otherwise(
-        F.array().cast("array<string>")
-    )
-    wc = F.size(tokens)
-    total_len = F.aggregate(tokens, F.lit(0), lambda acc, t: acc + F.length(t))
-    mean_len = F.when(wc > 0, total_len.cast("double") / wc).otherwise(F.lit(0.0))
-    symbols = (
-        _count_occurrences(caption, "#")
-        + _count_occurrences(caption, "…")
-        + _count_occurrences(caption, "...")
-    )
-    alpha_toks = F.size(F.filter(tokens, lambda t: t.rlike(_ALPHA_JAVA)))
-    lines = F.filter(
-        F.transform(F.split(F.coalesce(caption, F.lit("")), "\n"), F.trim),
-        lambda l: l != F.lit(""),
-    )
-    n_lines = F.size(lines)
-    distinct_lines = F.size(F.array_distinct(lines))
-    bullet_lines = F.size(
-        F.filter(lines, lambda l: F.substring(l, 1, 1).isin(_BULLET_CHARS))
-    )
-    ellipsis_lines = F.size(
-        F.filter(lines, lambda l: l.endswith("...") | l.endswith("…"))
-    )
-    stop_hits = F.size(
-        F.filter(
-            tokens,
-            lambda t: F.regexp_replace(
-                F.lower(t), r"^[.,;:!?]+|[.,;:!?]+$", ""
-            ).isin(PORTUGUESE_STOP_WORDS),
-        )
-    )
-    return {
-        "nonempty": nonempty,
-        "word_count": wc,
-        "mean_word_len": mean_len,
-        "symbol_ratio": F.when(wc > 0, symbols.cast("double") / wc).otherwise(F.lit(0.0)),
-        "alpha_ratio": F.when(wc > 0, alpha_toks.cast("double") / wc).otherwise(F.lit(0.0)),
-        "has_lorem": F.contains(F.lower(F.coalesce(caption, F.lit(""))), F.lit("lorem ipsum")),
-        "has_brace": F.contains(F.coalesce(caption, F.lit("")), F.lit("{")),
-        "line_count": n_lines,
-        "repeated_line_ratio": F.when(
-            n_lines > 0, F.lit(1.0) - distinct_lines.cast("double") / n_lines
-        ).otherwise(F.lit(0.0)),
-        "bullet_line_ratio": F.when(
-            n_lines > 0, bullet_lines.cast("double") / n_lines
-        ).otherwise(F.lit(0.0)),
-        "ellipsis_line_ratio": F.when(
-            n_lines > 0, ellipsis_lines.cast("double") / n_lines
-        ).otherwise(F.lit(0.0)),
-        "stopword_count": stop_hits,
-    }
-
-
-def drop_reason_rules(caption: Column, lang: Column, ppl: Column) -> list[Column]:
-    """One WHEN per rule, in frozen core.quality.RULE_ORDER order."""
-    s = quality_signal_columns(caption)
-    ne = s["nonempty"]
-    rules = [
-        F.when(~ne, F.lit("empty")),
-        F.when(ne & (s["word_count"] < Q.MIN_WORDS), F.lit("too_short")),
-        F.when(ne & (s["word_count"] > Q.MAX_WORDS), F.lit("too_long")),
-        F.when(
-            ne
-            & ~(
-                (s["mean_word_len"] >= Q.MIN_MEAN_WORD_LEN)
-                & (s["mean_word_len"] <= Q.MAX_MEAN_WORD_LEN)
-            ),
-            F.lit("word_length"),
-        ),
-        F.when(ne & (s["symbol_ratio"] > Q.MAX_SYMBOL_RATIO), F.lit("symbol_ratio")),
-        F.when(ne & (s["alpha_ratio"] < Q.MIN_ALPHA_TOKEN_RATIO), F.lit("alpha_ratio")),
-        F.when(ne & s["has_lorem"], F.lit("lorem_ipsum")),
-        F.when(ne & s["has_brace"], F.lit("brace")),
-        F.when(
-            ne & (s["repeated_line_ratio"] > Q.MAX_REPEATED_LINE_RATIO),
-            F.lit("repeated_lines"),
-        ),
-        F.when(
-            ne & (s["bullet_line_ratio"] > Q.MAX_BULLET_LINE_RATIO),
-            F.lit("bullet_lines"),
-        ),
-        F.when(
-            ne & (s["ellipsis_line_ratio"] > Q.MAX_ELLIPSIS_LINE_RATIO),
-            F.lit("ellipsis_lines"),
-        ),
-        F.when(
-            ne & (s["word_count"] >= Q.MIN_STOPWORD_WORDS) & (s["stopword_count"] == 0),
-            F.lit("stopword"),
-        ),
-        F.when(ne & (lang != Q.TARGET_LANG), F.lit("lang")),
-        F.when(ne & (ppl > PPL_THRESHOLD), F.lit("perplexity")),
-    ]
-    return rules
-
-
-def quality_stage(
-    df: DataFrame, caption_col: str = "caption", keep_signals: bool = False
-) -> DataFrame:
-    """Adds lang, ppl, drop_reasons (ordered array<string>) and keep."""
-    caption = F.col(caption_col)
-
-    df = df.withColumn("_lp", lang_ppl_udf(caption))
-    lang = F.col("_lp.lang")
-    ppl = F.col("_lp.ppl")
-    rules = drop_reason_rules(caption, lang, ppl)
-    out = (
-        df.withColumn("lang", lang)
-        .withColumn("ppl", ppl)
-        .withColumn("drop_reasons", F.array_compact(F.array(*rules)))
-        .withColumn("keep", F.size("drop_reasons") == 0)
-        .drop("_lp")
-    )
-    if keep_signals:
-        for name, col in quality_signal_columns(caption).items():
-            if name != "nonempty":
-                out = out.withColumn(name, col)
-    return out
-
-
-def heuristic_keep(df, text_col: str, carry_cols):
-    """SQL-expressible C4/Gopher rule subset as a reusable stage: returns
-    (carry_cols..., keep boolean) with the token split staged once per
-    row. Shared by the standalone quality_filter_heuristic driver query
-    and the curation_pipeline composite so the thresholds cannot drift
-    between them (their DuckDB oracles render the same rules)."""
-    from pyspark.sql import functions as F
-
+def _staged_rules(df, text_col: str, carry_cols=()):
+    """Stage the token split once per row; returns the staged frame
+    (carry_cols..., text, _wc, _tok_chars, _hashes) and the PASS
+    condition of every rule over it, so heuristic_keep and
+    rule_ablation share expressions and thresholds and cannot drift."""
     c = F.col(text_col)
     staged = df.select(
         *carry_cols, c, F.split(F.trim(c), ASCII_WS).alias("_toks")
@@ -202,13 +41,24 @@ def heuristic_keep(df, text_col: str, carry_cols):
     )
     wc = F.col("_wc")
     mean_len = F.col("_tok_chars") / wc
-    keep = (
-        (wc >= 3) & (wc <= 256)
-        & (mean_len >= 2.0) & (mean_len <= 14.0)
-        & ~F.contains(F.lower(c), F.lit("lorem ipsum"))
-        & ~F.contains(c, F.lit("{"))
-        & (F.col("_hashes").cast("double") / wc <= 0.1)
-    )
+    passes = {
+        "word_count": (wc >= 3) & (wc <= 256),
+        "mean_word_len": (mean_len >= 2.0) & (mean_len <= 14.0),
+        "lorem_ipsum": ~F.contains(F.lower(c), F.lit("lorem ipsum")),
+        "brace": ~F.contains(c, F.lit("{")),
+        "hash_ratio": F.col("_hashes").cast("double") / wc <= 0.1,
+    }
+    return staged, passes
+
+
+def heuristic_keep(df, text_col: str, carry_cols):
+    """SQL-expressible C4/Gopher rule subset as a reusable stage: returns
+    (carry_cols..., keep boolean). Shared by the standalone
+    quality_filter_heuristic query and the curation_pipeline
+    composite so the thresholds cannot drift between them (their DuckDB
+    oracles render the same rules)."""
+    staged, passes = _staged_rules(df, text_col, carry_cols)
+    keep = functools.reduce(operator.and_, passes.values())
     return staged.select(*carry_cols, keep.alias("keep"))
 
 
@@ -216,41 +66,17 @@ def rule_ablation(df, text_col: str = "text"):
     """Per-rule loss accounting over the heuristic_keep rule set: for
     every rule, how many docs FAIL it (n_fail) and how many are dropped
     by it ALONE (n_unique_fail — the docs that rule uniquely costs the
-    corpus; the number ablation studies argue about). Same staged
-    expressions and thresholds as heuristic_keep so the two cannot
-    drift. ONE pass: five boolean columns → one partial-aggregated
-    global row → a 5-row stack; no UDF, one tiny final exchange."""
-    from pyspark.sql import functions as F
-
-    c = F.col(text_col)
-    staged = df.select(
-        c, F.split(F.trim(c), ASCII_WS).alias("_toks")
-    ).select(
-        c,
-        F.size("_toks").alias("_wc"),
-        F.aggregate("_toks", F.lit(0), lambda a, t: a + F.length(t))
-        .cast("double")
-        .alias("_tok_chars"),
-        (F.length(c) - F.length(F.replace(c, F.lit("#"), F.lit("")))).alias(
-            "_hashes"
-        ),
-    )
-    wc = F.col("_wc")
-    mean_len = F.col("_tok_chars") / wc
-    fails = {
-        "word_count": ~((wc >= 3) & (wc <= 256)),
-        "mean_word_len": ~((mean_len >= 2.0) & (mean_len <= 14.0)),
-        "lorem_ipsum": F.contains(F.lower(c), F.lit("lorem ipsum")),
-        "brace": F.contains(c, F.lit("{")),
-        "hash_ratio": F.col("_hashes").cast("double") / wc > 0.1,
-    }
+    corpus; the number ablation studies argue about). ONE pass: five
+    boolean columns → one partial-aggregated global row → a 5-row
+    stack; no UDF, one tiny final exchange."""
+    staged, passes = _staged_rules(df, text_col)
     flagged = staged.select(
-        *[v.alias(f"_f_{k}") for k, v in fails.items()]
+        *[(~v).alias(f"_f_{k}") for k, v in passes.items()]
     )
-    n_fails = [F.col(f"_f_{k}").cast("int") for k in fails]
+    n_fails = [F.col(f"_f_{k}").cast("int") for k in passes]
     total_fails = sum(n_fails[1:], n_fails[0])
     aggs = []
-    for k in fails:
+    for k in passes:
         f = F.col(f"_f_{k}").cast("int")
         aggs.append(F.sum(f).alias(f"nf_{k}"))
         aggs.append(
@@ -260,11 +86,11 @@ def rule_ablation(df, text_col: str = "text"):
         )
     wide = flagged.agg(*aggs)
     stack_args = ", ".join(
-        f"'{k}', nf_{k}, uf_{k}" for k in fails
+        f"'{k}', nf_{k}, uf_{k}" for k in passes
     )
     return wide.select(
         F.expr(
-            f"stack({len(fails)}, {stack_args}) "
+            f"stack({len(passes)}, {stack_args}) "
             "AS (rule, n_fail, n_unique_fail)"
         )
     )

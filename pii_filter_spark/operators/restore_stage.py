@@ -44,9 +44,6 @@ def _make_restore_udf(cleanup: bool):
     return _restore
 
 
-restore_udf = _make_restore_udf(cleanup=False)
-
-
 def restore_stage(
     df: DataFrame,
     scrubbed_col: str = "scrubbed_caption",

@@ -1,4 +1,4 @@
-"""Skew handling: salted repartition for hot keys [north-rule addition].
+"""Skew handling: salted two-phase aggregation for hot keys [north-rule addition].
 
 The synthetic (and any real) phash/language distribution is heavy-tailed —
 a few hot perceptual hashes (near-duplicate crops, blank images) can cover
@@ -6,15 +6,13 @@ double-digit percentages of a 10^12-row table, so any shuffle keyed on
 them alone puts whole hot keys in single tasks. The salt splits each hot
 key across `salt_buckets` tasks; aggregations then run in two phases
 (per-(key,salt) partial → per-key final), which is the classic two-level
-combine. AQE's skew-join splitting covers joins; this covers
-repartition/groupBy paths AQE doesn't touch.
+combine. AQE's skew-join splitting covers joins; this covers the
+groupBy paths AQE doesn't touch.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SALT_COL = "_salt"
@@ -24,21 +22,6 @@ def with_salt(df: DataFrame, salt_buckets: int = 16, id_col: str = "image_id") -
     """Deterministic per-row salt derived from the row id (NOT rand(), so
     retries/resumes land rows in the same bucket)."""
     return df.withColumn(SALT_COL, F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
-
-
-def salted_repartition(
-    df: DataFrame,
-    keys: List[str],
-    num_partitions: Optional[int] = None,
-    salt_buckets: int = 16,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Repartition on (keys..., salt) so hot key groups split across tasks."""
-    salted = with_salt(df, salt_buckets, id_col)
-    cols: List[Column] = [F.col(k) for k in keys] + [F.col(SALT_COL)]
-    if num_partitions:
-        return salted.repartition(num_partitions, *cols)
-    return salted.repartition(*cols)
 
 
 def salted_count_by_key(

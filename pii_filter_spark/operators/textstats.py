@@ -1,7 +1,7 @@
 """Text-analysis operators over a document table (training-data pipeline).
 
-All-native where possible (token counts, quality score, fingerprints stay
-in codegen); langid is the one model-backed pandas UDF.
+All-native where possible (token counts and fingerprints stay in
+codegen); langid is the one model-backed pandas UDF.
 """
 
 from __future__ import annotations
@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
 from ..core.langid import detect_language
-from .quality_stage import quality_signal_columns
 
 # "BPE-ish" tokenizer regex: word pieces OR single non-space symbols —
 # the standard pre-tokenization split used before byte-pair merging.
@@ -83,26 +82,6 @@ def bpe_counts_from_merges_txt(
         return pd.Series(holder[0].counts_batch(s), dtype="int64")
 
     return df.select(F.col(id_col), _bpe(F.col(text_col)).alias("n_bpe_tokens"))
-
-
-def quality_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Composite quality score in [0,1] from the shared signal expressions.
-
-    score = mean of 4 subscores: length band, alpha ratio, symbol cleanliness,
-    line diversity. Deterministic, all-native."""
-    s = quality_signal_columns(F.col(text_col))
-    length_ok = (
-        F.when(s["word_count"] >= 20, 1.0)
-        .when(s["word_count"] >= 5, 0.5)
-        .otherwise(0.0)
-    )
-    alpha = F.least(s["alpha_ratio"] / 0.9, F.lit(1.0))
-    symbols = F.greatest(F.lit(0.0), F.lit(1.0) - s["symbol_ratio"] * 5.0)
-    diversity = F.lit(1.0) - s["repeated_line_ratio"]
-    score = (length_ok + alpha + symbols + diversity) / 4.0
-    return df.select(
-        F.col(id_col), F.round(score, 6).alias("quality_score")
-    )
 
 
 def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

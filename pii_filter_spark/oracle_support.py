@@ -549,10 +549,9 @@ def emb_near_pairs_lsh_sql(sf_dir: str, threshold: float = 0.85,
 
 
 def quality_full_sql(sf_dir: str, pii_clauses: Sequence[str]) -> str:
-    """q_quality_full expected output via the pure-Python rule mirror
-    (core/quality.drop_reasons) that tests already pin row-equal to the
-    JVM-native rule columns, plus the same langid/perplexity models the
-    UDF calls."""
+    """q_quality_full expected output computed in plain Python through the
+    same core functions the caption-stage UDF calls (langid, perplexity,
+    core/quality.drop_reasons)."""
     from .core.langid import detect_language
     from .core.perplexity import perplexity
     from .core.quality import drop_reasons

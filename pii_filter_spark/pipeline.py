@@ -1,9 +1,8 @@
 """Full caption quality-filter + PII-scrub pipeline with checkpoint/resume.
 
-Composition (cheap-first stage ordering — the reference's own optimization
-principle, README.md:1264/1745-1752, applied to column transforms):
-    read → quality stage (native exprs + langid/ppl UDF)
-         → scrub stage   (fused PII/toxicity pandas UDF)
+Composition:
+    read → caption stage (one pandas UDF: langid, perplexity, quality
+                          rules, PII/toxicity scrub — operators/fused.py)
          → write partitioned by part_id, manifest entry per partition
 
 Checkpoint/resume [north rule]: rows hash deterministically into
@@ -15,7 +14,7 @@ manifest and reprocesses only missing partitions — identical final table,
 idempotent metrics (tests/test_checkpoint.py kills a run mid-way and
 asserts equality).
 
-Scale notes: the whole hot path is one scan → two UDF projections → one
+Scale notes: the whole hot path is one scan → one UDF projection → one
 partitioned write; no joins or aggregations touch the MB-scale `bytes`
 column. Metrics aggregate from the written output (also validating the
 persisted data). `batch_parts` bounds the blast radius of a failure; at
@@ -45,9 +44,8 @@ def with_part_id(df: DataFrame, num_parts: int, id_col: str = "image_id") -> Dat
 def transform(df: DataFrame) -> DataFrame:
     """The logical plan; bytes passes through untouched.
 
-    Uses the fused single-Arrow-round-trip stage — semantically identical
-    to scrub_stage(quality_stage(df)) (see operators/fused.py) but one
-    Python stage instead of two, halving worker-process pressure.
+    One Python stage computes the quality and scrub columns together
+    (operators/fused.fused_quality_scrub).
     """
     from .operators.fused import fused_quality_scrub
 

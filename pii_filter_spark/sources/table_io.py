@@ -1,8 +1,7 @@
-"""TableIO seam: Iceberg when the catalog jars are present, parquet+manifest
-otherwise.
+"""TableIO seam: a parquet-directory table with an Iceberg-style manifest.
 
-The production target is an Iceberg table (north rule / input_hint); this
-sandbox ships no Iceberg runtime jars, so the default engine is a
+The production target is an Iceberg table (north rule / input_hint); no
+Iceberg runtime jars ship with this engine, so the table is a
 parquet-directory table with an explicit JSON manifest directory that gives
 us the two Iceberg behaviours the pipeline depends on:
   * snapshot-ish atomicity — output partitions land under part_id=K
@@ -21,22 +20,6 @@ import os
 from typing import Dict, List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True only if the Iceberg runtime is actually on the JVM classpath.
-
-    NB: `spark._jvm.org.apache.iceberg.Table` is NOT a valid probe — py4j
-    resolves missing classes to a lazy JavaPackage without raising, so it
-    reports true on any classpath. Class.forName forces real loading.
-    """
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.catalog.Catalog"
-        )
-        return True
-    except Exception:
-        return False
 
 
 def read_table(

@@ -113,6 +113,18 @@ def test_parse_merges_txt_published_format():
     assert bpe.count(" world") == 5
 
 
+def test_parse_merges_txt_header_only_on_first_line():
+    """`#version` is skipped only as the line-0 header; a later two-token
+    line starting with '#' is a merge pair."""
+    from pii_filter_spark.core.bpe import parse_merges_txt
+
+    txt = "#version: 0.2\na b\n#version x\n"
+    assert parse_merges_txt(txt) == [(b"a", b"b"), (b"#version", b"x")]
+    assert parse_merges_txt("a b\n#version: 0.2\n") == [
+        (b"a", b"b"), (b"#version:", b"0.2")
+    ]
+
+
 def test_parse_merges_txt_rejects_garbage():
     import pytest
 

@@ -77,7 +77,7 @@ def test_global_f1_zero_division(spark):
 
 def test_restore_stage_roundtrip(spark):
     from pii_filter_spark.operators.restore_stage import restore_stage
-    from pii_filter_spark.operators.scrub import scrub_stage
+    from pii_filter_spark.operators.fused import scrub_stage
 
     pdf = gen_pandas(200, seed=123)[["image_id", "caption"]]
     df = spark.createDataFrame(pdf).repartition(8)

@@ -3,11 +3,16 @@ deterministic synthetic corpus. This is the F1≥0.99 / byte-equality gate of
 FIXTURES.md B3, exercised through the real Arrow-batched plan.
 """
 
+import re
+
 import pandas as pd
 import pytest
 
-from pii_filter_spark.operators.quality_stage import quality_stage
-from pii_filter_spark.operators.scrub import scrub_stage
+from pii_filter_spark.operators.fused import (
+    fused_quality_scrub,
+    quality_stage,
+    scrub_stage,
+)
 from pii_filter_spark.sources.synth import gen_pandas
 from tests.oracle import reference_semantics as oracle
 
@@ -83,8 +88,6 @@ def test_null_caption_safe(spark):
 def test_fused_stage_equals_chained_stages(spark, corpus):
     """fused_quality_scrub must be plan-for-plan replaceable with
     scrub_stage(quality_stage(df)) — same columns, same values."""
-    from pii_filter_spark.operators.fused import fused_quality_scrub
-
     df, _ = corpus
     chained = scrub_stage(quality_stage(df))
     fused = fused_quality_scrub(df)
@@ -95,3 +98,25 @@ def test_fused_stage_equals_chained_stages(spark, corpus):
     for k in a:
         ra, rb = a[k].asDict(True), b[k].asDict(True)
         assert ra == rb, k
+
+
+def _udfs_per_arrow_node(df):
+    """Python UDFs evaluated by each ArrowEvalPython node of the executed
+    plan (Spark puts independent UDFs over one input into ONE node, so
+    the node count alone would not see a chained second stage)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the final plan, without the initial one
+    nodes = re.findall(r"ArrowEvalPython \[.*?\], \[(.*?)\]", plan.toString())
+    return [n.count("pythonUDF") for n in nodes]
+
+
+def test_caption_paths_run_one_python_stage(spark, corpus):
+    import __spark_entry__ as em
+    from pii_filter_spark.pipeline import transform
+
+    df, _ = corpus
+    assert _udfs_per_arrow_node(em.entry(spark)) == [1]
+    assert _udfs_per_arrow_node(em.q_quality_full(spark, em.SF_DEFAULT)) == [1]
+    assert _udfs_per_arrow_node(transform(df)) == [1]

@@ -26,15 +26,6 @@ def test_token_counts_match_python(spark, docs):
         assert g["n_chars"] == len(t)
 
 
-def test_quality_scores_range_and_determinism(spark, docs):
-    from pii_filter_spark.operators.textstats import quality_scores
-
-    a = quality_scores(docs).toPandas().set_index("doc_id").quality_score
-    b = quality_scores(docs).toPandas().set_index("doc_id").quality_score
-    assert ((a >= 0) & (a <= 1)).all()
-    assert (a == b).all()
-
-
 def test_fingerprints_collapse_whitespace_case(spark):
     from pii_filter_spark.operators.textstats import fingerprints
 

@@ -196,6 +196,25 @@ def q_quality_filter_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heuristic_keep(_docs(spark, sf_dir), "text", ["doc_id"])
 
 
+def _snapshot_merge_dir(sf_dir: str) -> str:
+    """q_snapshot_merge's scratch table dir: one per (process, sf_dir),
+    wiped at query start and removed at interpreter exit. The pid keeps
+    concurrent gate/bench processes from deleting each other's tables;
+    the exit hook keeps per-process dirs from piling up in /tmp."""
+    import atexit
+    import hashlib
+    import os
+    import shutil
+    import tempfile
+
+    base_dir = os.path.join(
+        tempfile.gettempdir(),
+        f"snapmerge_{os.getpid()}_{hashlib.md5(sf_dir.encode()).hexdigest()[:12]}",
+    )
+    atexit.register(shutil.rmtree, base_dir, ignore_errors=True)
+    return base_dir
+
+
 def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Copy-on-write MERGE on the snapshot seam (the Iceberg CoW shape
     incremental crawls need): base snapshot of the documents table,
@@ -205,20 +224,11 @@ def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_snapshots). The anti-join's build side is the update key set
     (broadcastable at crawl scale). Oracle: plain SQL reconstructing the
     expected merged table."""
-    import hashlib
-    import os
     import shutil
-    import tempfile
 
     from pii_filter_spark.sources import table_io
 
-    # ONE deterministic scratch dir per sf_dir, wiped at query start —
-    # mkdtemp-per-call leaked two documents-table snapshots into /tmp on
-    # every bench/gate invocation
-    base_dir = os.path.join(
-        tempfile.gettempdir(),
-        "snapmerge_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
-    )
+    base_dir = _snapshot_merge_dir(sf_dir)
     shutil.rmtree(base_dir, ignore_errors=True)
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     base = docs.withColumn("rev", F.lit("base"))

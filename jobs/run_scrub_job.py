@@ -18,7 +18,10 @@ Local smoke (also what tests/test_checkpoint.py drives programmatically):
 
 Resume semantics: re-running with the same --output continues from the
 per-partition manifest — completed partitions are skipped, metrics stay
-idempotent. --num-parts must match the original run (it is recorded in
+idempotent. The JSON summary's row counts cover the whole manifest;
+`layer_ms_this_run` sums the caption UDF's per-layer time (quality,
+scrub; summed over tasks, so it can exceed wall time) over the batches
+this run processed. --num-parts must match the original run (it is recorded in
 the manifest and validated here).
 """
 
@@ -77,6 +80,12 @@ def main(argv=None) -> int:
             scrub_image_bytes=args.scrub_image_bytes,
         )
         manifest = table_io.read_manifest(args.output)
+        entries = {m["part_id"]: m for m in manifest}
+        # layer_ms is per batch, repeated in each entry: one entry per batch
+        layer_ms = {}
+        for first in processed[:: args.batch_parts]:
+            for layer, ms in entries[first]["layer_ms"].items():
+                layer_ms[layer] = round(layer_ms.get(layer, 0.0) + ms, 1)
         summary = {
             "partitions_total": args.num_parts,
             "partitions_resumed_from": len(done_before),
@@ -85,6 +94,7 @@ def main(argv=None) -> int:
             "rows_kept": sum(m["rows_kept"] for m in manifest),
             "rows_dropped": sum(m["rows_dropped"] for m in manifest),
             "scrub_count": sum(m["scrub_count"] for m in manifest),
+            "layer_ms_this_run": layer_ms,
             "output": args.output,
         }
         print(json.dumps(summary))

@@ -14,11 +14,17 @@ manifest and reprocesses only missing partitions — identical final table,
 idempotent metrics (tests/test_checkpoint.py kills a run mid-way and
 asserts equality).
 
+Metrics come from the pass that wrote the rows: the caption UDF folds
+each Arrow batch's output into a per-batch accumulator (per-part rows
+in/kept/dropped, scrub count, drop reasons; per-layer ms), and the
+manifest entries are built from it once the write returns. Nothing is
+read back.
+
 Scale notes: the whole hot path is one scan → one UDF projection → one
-partitioned write; no joins or aggregations touch the MB-scale `bytes`
-column. Metrics aggregate from the written output (also validating the
-persisted data). `batch_parts` bounds the blast radius of a failure; at
-10^12 rows you'd size num_parts so one partition ≈ one Iceberg file group.
+partitioned write; no joins, aggregations or shuffles, and the MB-scale
+`bytes` column never enters Python. `batch_parts` bounds the blast radius
+of a failure; at 10^12 rows you'd size num_parts so one partition ≈ one
+Iceberg file group.
 """
 
 from __future__ import annotations
@@ -31,7 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.metrics import partition_metrics
+from .operators.fused import PartCounts, fused_quality_scrub, layer_ms, part_counts
 from .sources import table_io
 
 PART_COL = "part_id"
@@ -47,9 +53,14 @@ def transform(df: DataFrame) -> DataFrame:
     One Python stage computes the quality and scrub columns together
     (operators/fused.fused_quality_scrub).
     """
-    from .operators.fused import fused_quality_scrub
-
     return fused_quality_scrub(df)
+
+
+def batch_frame(src: DataFrame, parts: List[int], counts) -> DataFrame:
+    """What run_pipeline writes for one batch of parts. Its caption UDF adds
+    the per-part counts and per-layer ms to `counts` (a PartCounts
+    accumulator); they are exact only while this plan has no Exchange."""
+    return fused_quality_scrub(src.where(F.col(PART_COL).isin(parts)), counts)
 
 
 def scrub_bytes_stage(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
@@ -107,32 +118,23 @@ def run_pipeline(
     for batch_idx in range(0, len(todo), batch_parts):
         batch = todo[batch_idx : batch_idx + batch_parts]
         t0 = time.perf_counter()
-        out = transform(src.where(F.col(PART_COL).isin(batch)))
+        counts = spark.sparkContext.accumulator({}, PartCounts())
         # dynamic overwrite: exactly these part_id directories are replaced
-        out.write.mode("overwrite").partitionBy(PART_COL).parquet(output_path)
+        batch_frame(src, batch, counts).write.mode("overwrite").partitionBy(
+            PART_COL
+        ).parquet(output_path)
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
-        # metrics from the PERSISTED batch (read-back validates the write)
-        written = table_io.read_table(spark, output_path).where(
-            F.col(PART_COL).isin(batch)
-        )
-        mrows = {r[PART_COL]: r.asDict() for r in partition_metrics(written).collect()}
+        # counted by the write's own UDF; complete once the action returns
+        value = counts.value
         for p in batch:
-            m = mrows.get(
-                p,
-                {"rows_in": 0, "rows_kept": 0, "rows_dropped": 0, "scrub_count": 0,
-                 "drop_reason_counts": None},
-            )
             table_io.write_manifest_entry(
                 output_path,
                 p,
                 {
                     "snapshot_id": snapshot_id,
-                    "rows_in": int(m["rows_in"] or 0),
-                    "rows_kept": int(m["rows_kept"] or 0),
-                    "rows_dropped": int(m["rows_dropped"] or 0),
-                    "scrub_count": int(m["scrub_count"] or 0),
-                    "drop_reason_counts": dict(m["drop_reason_counts"] or {}),
+                    **part_counts(value, p),
+                    "layer_ms": layer_ms(value),
                     "wall_ms": wall_ms,
                 },
             )

@@ -165,3 +165,34 @@ def test_expire_snapshots_and_orphan_cleanup(spark, tmp_path):
         os.path.join("data", f"s{s2:05d}"),
     ]
     assert table_io.read_table(spark, table).count() == 5
+
+
+def test_snapshot_merge_scratch_dir_is_per_process(tmp_path):
+    """Two concurrent processes get different q_snapshot_merge scratch dirs
+    for the same sf_dir (neither can rmtree the other's table), and each
+    dir is removed when its interpreter exits."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os, sys, __spark_entry__ as em\n"
+        "d = em._snapshot_merge_dir('/data/sf0.01')\n"
+        "os.makedirs(d)\n"
+        "print(d, flush=True)\n"
+        "sys.stdin.read()\n"  # stay alive until both have resolved
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    procs = [
+        subprocess.Popen([sys.executable, "-c", code], cwd=repo, env=env, text=True,
+                         stdin=subprocess.PIPE, stdout=subprocess.PIPE)
+        for _ in range(2)
+    ]
+    dirs = [p.stdout.readline().strip() for p in procs]
+    assert all(os.path.isdir(d) for d in dirs)
+    for p in procs:
+        p.communicate("", timeout=60)
+        assert p.returncode == 0
+    assert dirs[0] != dirs[1]
+    assert not any(os.path.exists(d) for d in dirs)

@@ -100,23 +100,38 @@ def test_fused_stage_equals_chained_stages(spark, corpus):
         assert ra == rb, k
 
 
-def _udfs_per_arrow_node(df):
-    """Python UDFs evaluated by each ArrowEvalPython node of the executed
-    plan (Spark puts independent UDFs over one input into ONE node, so
-    the node count alone would not see a chained second stage)."""
+def _executed_plan(df):
     df.collect()
     plan = df._jdf.queryExecution().executedPlan()
     if plan.nodeName() == "AdaptiveSparkPlan":
         plan = plan.executedPlan()  # the final plan, without the initial one
-    nodes = re.findall(r"ArrowEvalPython \[.*?\], \[(.*?)\]", plan.toString())
+    return plan.toString()
+
+
+def _udfs_per_arrow_node(df):
+    """Python UDFs evaluated by each ArrowEvalPython node of the executed
+    plan (Spark puts independent UDFs over one input into ONE node, so
+    the node count alone would not see a chained second stage)."""
+    nodes = re.findall(r"ArrowEvalPython \[.*?\], \[(.*?)\]", _executed_plan(df))
     return [n.count("pythonUDF") for n in nodes]
 
 
-def test_caption_paths_run_one_python_stage(spark, corpus):
+def test_caption_paths_run_one_python_stage(spark, corpus, tmp_path):
     import __spark_entry__ as em
-    from pii_filter_spark.pipeline import transform
+    from pii_filter_spark.operators.fused import PartCounts
+    from pii_filter_spark.pipeline import batch_frame, transform, with_part_id
+    from pii_filter_spark.sources import table_io
 
-    df, _ = corpus
+    df, pdf = corpus
     assert _udfs_per_arrow_node(em.entry(spark)) == [1]
     assert _udfs_per_arrow_node(em.q_quality_full(spark, em.SF_DEFAULT)) == [1]
     assert _udfs_per_arrow_node(transform(df)) == [1]
+
+    # run_pipeline's batch: its counts are exact only while the counted UDF
+    # runs once per row in result tasks, i.e. with no Exchange in the plan
+    spark.createDataFrame(pdf).write.parquet(str(tmp_path / "in"))
+    src = with_part_id(table_io.read_table(spark, str(tmp_path / "in")), 8)
+    counts = spark.sparkContext.accumulator({}, PartCounts())
+    batch = batch_frame(src, [0, 3, 5], counts)
+    assert _udfs_per_arrow_node(batch) == [1]
+    assert "Exchange" not in _executed_plan(batch)

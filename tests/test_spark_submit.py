@@ -78,6 +78,8 @@ def test_spark_submit_py_files_run_and_resume(tmp_path):
     assert s1["rows_in"] == 400
     assert s1["rows_kept"] + s1["rows_dropped"] == 400
     assert s1["rows_kept"] > 0
+    assert set(s1["layer_ms_this_run"]) == {"quality", "scrub"}
+    assert all(ms > 0 for ms in s1["layer_ms_this_run"].values())
 
     # Resume: same --output, nothing left to do, metrics idempotent.
     s2 = _submit(tmp, zpath, job, out)
@@ -86,3 +88,4 @@ def test_spark_submit_py_files_run_and_resume(tmp_path):
     assert s2["rows_in"] == 400
     assert s2["rows_kept"] == s1["rows_kept"]
     assert s2["scrub_count"] == s1["scrub_count"]
+    assert s2["layer_ms_this_run"] == {}

@@ -836,7 +836,7 @@ def q_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (north-rule image dedup): synthetic table ∪ re-encoded copies whose
     phash differs by 2 bits; banded hamming operator finds both the
     hot-phash exact groups (hamming 0) and the planted re-encodes."""
-    from pii_filter_spark.operators.dedup import phash_near_pairs
+    from pii_filter_spark.operators.dedup import hamming_near_pairs
     from pii_filter_spark.sources.synth import build_input_table
 
     imgs = build_input_table(spark, 400, seed=42, num_partitions=8).select(
@@ -847,7 +847,9 @@ def q_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat("image_id", F.lit("_re")).alias("image_id"),
         F.col("phash").bitwiseXOR(F.lit(5)).alias("phash"),  # 2-bit flip
     )
-    return phash_near_pairs(imgs.unionByName(copies), max_hamming=3)
+    return hamming_near_pairs(
+        imgs.unionByName(copies), "phash", "image_id", max_hamming=3
+    )
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1172,7 +1174,7 @@ def q_pixel_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs >= ~24 for unrelated images — still cleanly separable, and the
     fixture oracle re-derives both the hashes AND the chunk-bucket
     pairing, so the gate is exact regardless of banding recall."""
-    from pii_filter_spark.operators.dedup import phash_near_pairs
+    from pii_filter_spark.operators.dedup import hamming_near_pairs
     from pii_filter_spark.operators.image_stage import (
         compute_phash,
         reencode_variants,
@@ -1191,8 +1193,8 @@ def q_pixel_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes = compute_phash(imgs.unionByName(variants)).where(
         F.col("pixel_phash").isNotNull()
     )
-    return phash_near_pairs(
-        hashes, phash_col="pixel_phash", max_hamming=16, chunks=8
+    return hamming_near_pairs(
+        hashes, "pixel_phash", "image_id", max_hamming=16, chunks=8
     )
 
 

@@ -21,8 +21,9 @@ per-partition manifest — completed partitions are skipped, metrics stay
 idempotent. The JSON summary's row counts cover the whole manifest;
 `layer_ms_this_run` sums the caption UDF's per-layer time (quality,
 scrub; summed over tasks, so it can exceed wall time) over the batches
-this run processed. --num-parts must match the original run (it is recorded in
-the manifest and validated here).
+this run processed. --num-parts must match the original run: every
+manifest entry records it, and run_pipeline refuses a resume that
+disagrees.
 """
 
 from __future__ import annotations

@@ -188,26 +188,14 @@ def drop_overlapping(
     return kept
 
 
-def detect_all(
-    text: str,
-    validate: bool = True,
-    with_ner: bool = True,
-    with_toxicity: bool = True,
-    with_sensitive: bool = True,
-) -> List[Detection]:
+def detect_all(text: str, with_sensitive: bool = True) -> List[Detection]:
     """Full precedence-resolved detection set, sorted by start offset."""
     from .ner_dictionary import text_words
 
     words = text_words(text)  # one tokenization shared by all gated stages
-    regex_hits = resolve_regex_overlaps(find_regex_matches(text, validate))
-    ner_hits: List[Detection] = []
-    if with_ner:
-        ner_hits = drop_overlapping(find_entities(text, words), regex_hits)
-    tox_hits: List[Detection] = []
-    if with_toxicity:
-        tox_hits = drop_overlapping(
-            find_toxic(text, words), regex_hits + ner_hits
-        )
+    regex_hits = resolve_regex_overlaps(find_regex_matches(text))
+    ner_hits = drop_overlapping(find_entities(text, words), regex_hits)
+    tox_hits = drop_overlapping(find_toxic(text, words), regex_hits + ner_hits)
     sens_hits: List[Detection] = []
     if with_sensitive:
         sens_hits = drop_overlapping(
@@ -249,33 +237,19 @@ def substitute(text: str, detections: List[Detection]) -> Tuple[str, List[Dict[s
     return out, mappings
 
 
-def scrub_text(
-    text: str,
-    validate: bool = True,
-    with_ner: bool = True,
-    with_toxicity: bool = True,
-    with_sensitive: bool = True,
-) -> Tuple[str, List[Dict[str, Any]]]:
+def scrub_text(text: str) -> Tuple[str, List[Dict[str, Any]]]:
     """Detect + resolve + substitute for one caption. None-safe."""
     if not text:
         return text or "", []
-    return substitute(
-        text, detect_all(text, validate, with_ner, with_toxicity, with_sensitive)
-    )
+    return substitute(text, detect_all(text))
 
 
-def scrub_batch(
-    texts: Iterable[Any],
-    validate: bool = True,
-    with_ner: bool = True,
-    with_toxicity: bool = True,
-    with_sensitive: bool = True,
-) -> List[Tuple[str, List[Dict[str, Any]]]]:
+def scrub_batch(texts: Iterable[Any]) -> List[Tuple[str, List[Dict[str, Any]]]]:
     """Batch entry point used by the caption-stage UDFs in operators/fused.py."""
     out = []
     for t in texts:
         if t is None or not isinstance(t, str):
             out.append(("" if t is None else str(t), []))
         else:
-            out.append(scrub_text(t, validate, with_ner, with_toxicity, with_sensitive))
+            out.append(scrub_text(t))
     return out

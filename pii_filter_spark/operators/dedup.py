@@ -10,7 +10,8 @@ Five families, each picked for its shuffle shape at 10^11-row scale:
                    no single reducer ever sees a whole hot key.
   * MinHash+LSH  — char-shingle minhash signatures (one pandas UDF),
                    banded into buckets; candidate pairs only ever form
-                   WITHIN a bucket (groupBy band-hash, self-join inside),
+                   WITHIN a bucket (groupBy band-hash, pair expansion
+                   inside — _bucket_pairs, shared by every LSH operator),
                    so the quadratic blowup is bounded by bucket size, then
                    exact n-gram Jaccard verifies survivors.
   * SimHash      — 64-bit token-hash simhash (pandas UDF), banded into
@@ -45,68 +46,167 @@ def _normalize_expr(col):
 
 
 # Degenerate-bucket guard shared by every LSH pair generator (minhash,
-# simhash, SRP embedding). At 10^12 rows, boilerplate-identical or
+# 64-bit hamming, cosine). At 10^12 rows, boilerplate-identical or
 # near-empty content collapses into a handful of buckets; without a cap a
 # single task materializes an O(m^2) pair array. Buckets above this size
-# are rerouted through a linear star expansion instead (see
-# _bucket_pair_expansion). The default is far above any bucket a genuine
-# near-dup corpus produces (bucket = docs agreeing on a whole signature
-# band), so results are unchanged except under adversarial pile-ups.
+# take a linear star expansion instead (see _bucket_pairs). The cap is far
+# above any bucket a genuine near-dup corpus produces (bucket = docs
+# agreeing on a whole signature band), so results are unchanged except
+# under adversarial pile-ups.
 DEFAULT_MAX_BUCKET = 2048
+# Buckets larger than this (and within the cap) go through the vectorized
+# numpy expansion in _bucket_pairs.
+_VECTORIZE_FROM = 32
 
 
-def _bucket_pair_expansion(members, make_pair, keep, max_bucket_size):
-    """Expand each bucket's member array `ms` into candidate pairs
-    (NOT deduplicated — a pair colliding in several bands is emitted once
-    per band; the caller applies one dropDuplicates after unioning the
-    native and vectorized branches).
-
-    Buckets at or under `max_bucket_size` get the exact i<j quadratic
-    expansion (the normal case: LSH buckets are tiny on real near-dup
-    data). Oversized buckets — boilerplate/empty-content collisions where
-    one task would otherwise do an O(m^2) in-array expansion — are
-    rerouted to a STAR expansion: the min-id member pairs against every
-    other member, O(m) pairs. Every true duplicate stays reachable from
-    the bucket representative (connected components still merge the whole
-    cluster and survivor selection is unchanged); only pair EXHAUSTIVENESS
-    inside THAT pathological bucket is traded for bounded work — a pair
-    that also collides in any normal-sized bucket is still found there.
-    (A "first-colliding-band-only" emission guard was tried and REVERTED:
-    it silently dropped pairs whose first collision landed in a starred
-    oversized bucket even when a later normal bucket contained them.)
-    The sorted array and its head are staged as projections — referencing
-    array_sort(...) inside the HOF lambda would re-sort per element
-    (Catalyst does not hoist loop-invariant subexpressions out of
-    lambdas).
-    """
-    big = F.size("ms") > max_bucket_size
-    staged = (
-        members.withColumn("_srt", F.when(big, F.array_sort("ms")))
-        .withColumn("_x0", F.element_at("_srt", 1))
+def _band_keys(sig, bands: int, rows_per_band: int):
+    """Minhash band keys: xxhash64 over each band's raw longs + the band
+    index. (Casting the slice to a string before hashing cost ~1.6 s for
+    91k band keys in interpreted HOF eval; hashing the longs is ~30x
+    cheaper and groups identically.)"""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda bnd: F.xxhash64(
+            *[
+                F.element_at(sig, bnd * rows_per_band + j + 1)
+                for j in range(rows_per_band)
+            ],
+            bnd,
+        ),
     )
+
+
+def _chunk_keys(hash_col, bits: int, chunks: int):
+    """The low `bits` bits of a long split into `chunks` equal chunk
+    values, lowest chunk first."""
+    width = bits // chunks
+    mask = (1 << width) - 1
+    return F.array(
+        *[
+            F.shiftright(hash_col, width * i).bitwiseAND(F.lit(mask))
+            for i in range(chunks)
+        ]
+    )
+
+
+def _bucket_members(df: DataFrame, member, keys) -> DataFrame:
+    """keys -> members: one row per (band, bucket) with more than one
+    member, `ms` the collected `member` structs (one shuffle, map-side
+    combined). Every row of `df` joins one bucket per entry of `keys`."""
+    # the struct gets its own projection: next to a generator, a struct
+    # holding a lambda (the cosine member) loses its field names
+    banded = df.select(member.alias("m"), keys.alias("keys")).select(
+        "m",
+        # posexplode_outer, NOT posexplode: plain posexplode makes Catalyst
+        # insert a size(keys)>0 pre-filter below the Generate, which drags
+        # a signature UDF below the repartition exchange into each union
+        # branch — the UDF then runs twice per row (the round-1
+        # explode-over-UDF trap). keys always has a fixed number of
+        # entries, so the outer variant is row-identical.
+        F.posexplode_outer("keys").alias("band", "bucket"),
+    )
+    return (
+        banded.groupBy("band", "bucket")
+        .agg(F.collect_list("m").alias("ms"))
+        .where(F.size("ms") > 1)
+    )
+
+
+def _bucket_pairs(
+    members: DataFrame, score_col: str, score_type: str,
+    native_score, numpy_score, keep,
+) -> DataFrame:
+    """Verified pairs from LSH buckets: the one bucket->pairs step behind
+    every near-dup operator. Output (id_a < id_b, score_col), each pair
+    once.
+
+    `members` has an `ms` column: per bucket, an array of member structs
+    with an `id` field. The caller supplies only its score, in two forms
+    that must agree bit for bit: `native_score(x, y)` over two member
+    Columns and `numpy_score(ms)`, the (m, m) score matrix of one
+    bucket's members. `keep(score)` is the pair test, applied to a Column
+    and to a numpy array alike.
+
+    Routing, by bucket size (the module constants are read at call time):
+      * up to _VECTORIZE_FROM members: native nested-transform expansion.
+        Per-bucket Python overhead would dwarf a tiny bucket's handful of
+        comparisons.
+      * up to DEFAULT_MAX_BUCKET: one numpy score matrix per bucket in
+        mapInPandas. Interpreted HOF eval costs ~1 us per comparison, and
+        a family-heavy corpus concentrates most candidates in a few
+        hundred medium/large buckets (sf1: 85% of 18.5M candidates live in
+        buckets > 32).
+      * above the cap: a STAR expansion, natively. The min-id member pairs
+        against every other member, O(m) pairs. Every true duplicate stays
+        reachable from the bucket representative, so connected components
+        still merge the whole cluster; only pair exhaustiveness inside
+        that pathological bucket is traded for bounded work. A pair that
+        also collides in a normal-sized bucket is still found there. (A
+        "first-colliding-band-only" emission guard was tried and
+        REVERTED: it silently dropped pairs whose first collision landed
+        in a starred bucket even when a later normal bucket held them.)
+    A pair colliding in several buckets is emitted once per bucket, with
+    the same score every time (it depends only on the two members); ONE
+    dropDuplicates over the unioned branches keeps it once.
+    """
+    cap, vectorize_from = DEFAULT_MAX_BUCKET, _VECTORIZE_FROM
+    size = F.size("ms")
+
+    def _pair(x, y):
+        lt = x["id"] < y["id"]
+        return F.struct(
+            F.when(lt, x["id"]).otherwise(y["id"]).alias("id_a"),
+            F.when(lt, y["id"]).otherwise(x["id"]).alias("id_b"),
+            native_score(x, y).alias(score_col),
+        )
 
     def _expand(x, candidates):
         return F.filter(
-            F.transform(candidates, lambda y: make_pair(x, y)), keep
+            F.transform(candidates, lambda y: _pair(x, y)),
+            lambda p: keep(p[score_col]),
         )
 
+    # The sorted array and its head are staged as projections: referencing
+    # array_sort(...) inside the HOF lambda would re-sort per element
+    # (Catalyst does not hoist loop-invariant subexpressions out of
+    # lambdas).
+    big = size > cap
+    staged = (
+        members.where((size <= vectorize_from) | big)
+        .withColumn("_srt", F.when(big, F.array_sort("ms")))
+        .withColumn("_x0", F.element_at("_srt", 1))
+    )
     quad = F.flatten(
-        F.transform(
-            "ms", lambda x, i: _expand(x, F.slice("ms", i + 2, F.size("ms")))
-        )
+        F.transform("ms", lambda x, i: _expand(x, F.slice("ms", i + 2, size)))
     )
     star = _expand(F.col("_x0"), F.slice("_srt", 2, F.size("_srt")))
-    return staged.select(
+    native = staged.select(
         F.explode(F.when(big, star).otherwise(quad)).alias("p")
     ).select("p.*")
 
+    def _numpy_pairs(batches):
+        for pdf in batches:
+            out_a: List = []
+            out_b: List = []
+            out_s: List = []
+            for ms in pdf["ms"]:
+                ids = np.array([x["id"] for x in ms])  # int64 or unicode
+                iu, ju = np.triu_indices(len(ms), 1)
+                s = numpy_score(ms)[iu, ju]
+                k = keep(s)
+                ia, ib = ids[iu[k]], ids[ju[k]]
+                lt = ia < ib  # np.where: np.minimum has no unicode loop
+                out_a.extend(np.where(lt, ia, ib).tolist())
+                out_b.extend(np.where(lt, ib, ia).tolist())
+                out_s.extend(s[k].tolist())
+            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, score_col: out_s})
 
-def _ordered_id_pairs(ids, iu, ju, keep):
-    """Normalize kept (i, j) index pairs to (min_id, max_id) arrays.
-    np.where-based: np.minimum has no unicode loop for string ids."""
-    ia, ib = ids[iu[keep]], ids[ju[keep]]
-    lt = ia < ib
-    return np.where(lt, ia, ib), np.where(lt, ib, ia)
+    id_type = members.schema["ms"].dataType.elementType["id"].dataType.simpleString()
+    vectorized = members.where((size > vectorize_from) & (size <= cap)).mapInPandas(
+        _numpy_pairs,
+        schema=f"id_a {id_type}, id_b {id_type}, {score_col} {score_type}",
+    )
+    return native.unionByName(vectorized).dropDuplicates(["id_a", "id_b"])
 
 
 # --------------------------------------------------------------------------
@@ -219,25 +319,23 @@ def minhash_lsh_pairs(
     shingle_k: int = 5,
     threshold: float = 0.7,
     seed: int = 7,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b, est_jaccard >= threshold).
 
     Plan shape: sig UDF (evaluated ONCE) → degenerate-signature filter →
     explode bands → groupBy (band, bucket) collect_list (one shuffle,
-    map-side combined) → in-array pair expansion via nested transform (no
+    map-side combined) → in-bucket pair expansion (_bucket_pairs: no
     self-join, so the signature UDF isn't re-evaluated per join side),
-    with the signature-agreement estimate computed once per pair in its
-    first colliding band (once_guard — no dropDuplicates shuffle at all).
-    No all-pairs join ever materializes; a pathological bucket
-    (boilerplate-identical docs) is
-    capped by `max_bucket_size` with a linear star reroute
-    (_bucket_pair_expansion). Empty/whitespace docs hash to the all-zero
-    signature — no shingle content, so "similarity" among them is
-    meaningless; they are filtered before banding (handle exact empties
-    via dedup_exact) instead of piling 10^9 rows into one bucket per band.
+    with the signature-agreement estimate computed in the expansion —
+    pairs below threshold die before the one dropDuplicates shuffle, and
+    no signature array ever leaves its bucket task. No all-pairs join
+    ever materializes; a pathological bucket (boilerplate-identical docs)
+    is capped by DEFAULT_MAX_BUCKET with a linear star reroute.
+    Empty/whitespace docs hash to the all-zero signature — no shingle
+    content, so "similarity" among them is meaningless; they are filtered
+    before banding (handle exact empties via dedup_exact) instead of
+    piling 10^9 rows into one bucket per band.
     """
-    rows_per_band = num_hashes // bands
     # Degenerate filter on the INPUT text, not on the signature column: a
     # filter referencing the UDF output gets pushed below the repartition
     # exchange into each union branch while the original eval stays above
@@ -247,51 +345,14 @@ def minhash_lsh_pairs(
     # through identically in Spark and oracle and are bucket-capped).
     df = df.where(F.trim(F.col(text_col)) != "")
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k, seed)
+    # the band keys are not carried in the member struct: only the
+    # banding needs them, and they'd add 128 B/member to the shuffle
+    members = _bucket_members(
+        sigs,
+        F.struct(F.col(id_col).alias("id"), F.col("sig")),
+        _band_keys("sig", bands, num_hashes // bands),
+    )
 
-    # Band key: xxhash64 over the band's raw longs + the band index.
-    # The first implementation cast the slice array<long>→array<string>→
-    # string before hashing — per-element string materialization in
-    # interpreted HOF eval cost ~1.6 s for 91k band keys (measured);
-    # hashing the longs directly is ~30x cheaper and the grouping is
-    # identical (equal slices ⇔ equal keys either way). The whole key
-    # array rides inside the member struct so the pair expansion can
-    # check "did this pair already collide in an earlier band?" with one
-    # long comparison per earlier band (see once_guard below).
-    keyed = sigs.select(
-        F.col(id_col),
-        "sig",
-        F.transform(
-            F.sequence(F.lit(0), F.lit(bands - 1)),
-            lambda bnd: F.xxhash64(
-                *[
-                    F.element_at("sig", bnd * rows_per_band + j + 1)
-                    for j in range(rows_per_band)
-                ],
-                bnd,
-            ),
-        ).alias("keys"),
-    )
-    banded = keyed.select(
-        # keys are NOT carried in the member struct — only the banding
-        # columns need them, and they'd add 128 B/member to the shuffle
-        F.struct(F.col(id_col).alias("id"), F.col("sig")).alias("m"),
-        # posexplode_outer, NOT posexplode: plain posexplode makes Catalyst
-        # insert a size(keys)>0 pre-filter below the Generate, which drags
-        # the signature UDF below the repartition exchange into each union
-        # branch — the UDF then runs twice per row (the round-1
-        # explode-over-UDF trap). keys always has `bands` entries, so the
-        # outer variant is row-identical.
-        F.posexplode_outer("keys").alias("band", "bucket"),
-    )
-    members = (
-        banded.groupBy("band", "bucket")
-        .agg(F.collect_list("m").alias("ms"))
-        .where(F.size("ms") > 1)
-    )
-    # All i<j combinations inside the bucket, order-normalized by id, with
-    # the signature-agreement estimate computed IN the expansion — pairs
-    # below threshold die before the distinct shuffle, and no signature
-    # arrays ever leave the bucket task.
     def _est(x, y):
         return (
             F.size(
@@ -303,78 +364,19 @@ def minhash_lsh_pairs(
             / F.lit(num_hashes)
         )
 
-    def _pair(x, y):
-        return F.struct(
-            F.when(x["id"] < y["id"], x["id"]).otherwise(y["id"]).alias("id_a"),
-            F.when(x["id"] < y["id"], y["id"]).otherwise(x["id"]).alias("id_b"),
-            _est(x, y).alias("est_jaccard"),
-        )
+    def _est_matrix(ms):
+        # integer equality count / num_hashes in float64: bit-identical
+        # to the native cast(int)/lit division
+        sig = np.array([x["sig"] for x in ms], dtype=np.int64)
+        eq = np.zeros((len(ms), len(ms)), dtype=np.int32)
+        for c in sig.T:
+            eq += c[:, None] == c[None, :]
+        return eq / float(num_hashes)
 
-    # Hybrid expansion: interpreted HOF eval costs ~1 us per candidate
-    # comparison, and a family-heavy corpus concentrates most candidates
-    # in a few hundred medium/large buckets (sf1: 85% of 18.5M candidates
-    # live in buckets > 32). Those buckets take an Arrow+numpy route —
-    # one vectorized agreement matrix per bucket — while the long tail of
-    # tiny buckets stays native (per-bucket Python overhead would dwarf
-    # their handful of comparisons). A pair colliding in several bands is
-    # emitted once per colliding band (identical est every time — it only
-    # depends on the signatures); ONE dropDuplicates over the unioned
-    # branches keeps each pair once.
-    small = members.where(
-        (F.size("ms") <= _VECTORIZE_FROM) | (F.size("ms") > max_bucket_size)
+    return _bucket_pairs(
+        members, "est_jaccard", "double", _est, _est_matrix,
+        lambda est: est >= threshold,
     )
-    native = _bucket_pair_expansion(
-        small,
-        _pair,
-        lambda p: p["est_jaccard"] >= threshold,
-        max_bucket_size,
-    )
-    big = members.where(
-        (F.size("ms") > _VECTORIZE_FROM) & (F.size("ms") <= max_bucket_size)
-    )
-    id_type = dict(df.dtypes)[id_col]
-    vectorized = big.mapInPandas(
-        _make_minhash_bucket_fn(num_hashes, threshold),
-        schema=f"id_a {id_type}, id_b {id_type}, est_jaccard double",
-    )
-    return native.unionByName(vectorized).dropDuplicates(["id_a", "id_b"])
-
-
-# Buckets larger than this go through the vectorized numpy expansion.
-_VECTORIZE_FROM = 32
-
-
-def _make_minhash_bucket_fn(num_hashes: int, threshold: float):
-    """mapInPandas worker for medium/large minhash buckets: one numpy
-    agreement matrix per bucket row. Exact-match math: integer equality
-    count / num_hashes in float64 — bit-identical to the native
-    expression's cast(int)/lit division."""
-
-    def _fn(batches):
-        for pdf in batches:
-            out_a: List = []
-            out_b: List = []
-            out_e: List[float] = []
-            for ms in pdf["ms"]:
-                m = len(ms)
-                ids = np.array([x["id"] for x in ms])  # int64 or unicode
-                sig = np.array([x["sig"] for x in ms], dtype=np.int64)
-                eq = np.zeros((m, m), dtype=np.int32)
-                for h in range(num_hashes):
-                    c = sig[:, h]
-                    eq += c[:, None] == c[None, :]
-                iu, ju = np.triu_indices(m, 1)
-                est = eq[iu, ju] / float(num_hashes)
-                keep = est >= threshold
-                lo, hi = _ordered_id_pairs(ids, iu, ju, keep)
-                out_a.extend(lo.tolist())
-                out_b.extend(hi.tolist())
-                out_e.extend(est[keep].tolist())
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "est_jaccard": out_e}
-            )
-
-    return _fn
 
 
 def lsh_bucket_stats(
@@ -387,28 +389,18 @@ def lsh_bucket_stats(
     seed: int = 7,
 ) -> DataFrame:
     """Bucket-size distribution of the minhash banding — the diagnostic a
-    corpus operator runs BEFORE a 100-TB dedup pass to pick
-    max_bucket_size and predict candidate-pair volume. One row per
+    corpus operator runs BEFORE a 100-TB dedup pass to check the bucket
+    cap and predict candidate-pair volume. One row per
     bucket-size value: (bucket_size, n_buckets, candidate_pairs), where
     candidate_pairs = n_buckets * size*(size-1)/2. Total candidate volume
     is sum(candidate_pairs); any size near DEFAULT_MAX_BUCKET signals
     boilerplate families that will take the star reroute."""
-    rows_per_band = num_hashes // bands
     df = df.where(F.trim(F.col(text_col)) != "")  # see minhash_lsh_pairs
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k, seed)
     banded = sigs.select(
-        F.posexplode_outer(  # outer: see minhash_lsh_pairs explode note
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bnd: F.xxhash64(
-                    *[
-                        F.element_at("sig", bnd * rows_per_band + j + 1)
-                        for j in range(rows_per_band)
-                    ],
-                    bnd,
-                ),
-            )
-        ).alias("band", "bucket")
+        # outer: see _bucket_members
+        F.posexplode_outer(_band_keys("sig", bands, num_hashes // bands))
+        .alias("band", "bucket")
     )
     sizes = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("bucket_size")
@@ -477,7 +469,6 @@ def hamming_near_pairs(
     hash_col: str,
     id_col: str,
     max_hamming: int = 3,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
     chunks: int = 4,
 ) -> DataFrame:
     """Near-dup pairs among 64-bit hashes by hamming distance.
@@ -485,100 +476,47 @@ def hamming_near_pairs(
     Bands the 64 bits into `chunks` equal chunks — any pair within
     hamming <= chunks-1 must agree on >=1 whole chunk (pigeonhole), so
     recall is exact up to chunks-1 and probabilistic above; bucket by
-    chunk value, in-array pair expansion with first-colliding-chunk
-    emission (hash column evaluated once, no self-join, no distinct
-    shuffle), exact verify via bit_count(xor). Works for any 64-bit
-    locality hash: text simhash (simhash_near_pairs) and image
-    perceptual hash (the north rule's phash column) share this one
-    operator. Oversized buckets take the linear star reroute — see
-    _bucket_pair_expansion.
+    chunk value, in-bucket pair expansion (_bucket_pairs: hash column
+    evaluated once, no self-join, one dropDuplicates over the pairs of
+    all chunks), exact verify via bit_count(xor). Works for any 64-bit
+    locality hash: text simhash (simhash_near_pairs), image perceptual
+    hash (phash, pixel pHash), audio fingerprints and video middle-frame
+    pHash all share this one operator. Oversized buckets take the linear
+    star reroute.
 
     chunks is the recall/coarseness dial: 4 (16-bit chunks, default) has
     2^16 buckets per band — right for corpus scale; 8 (8-bit chunks)
     widens exact recall to hamming<=7 but leaves only 256 buckets per
     band, so use it only when rows-per-band/256 stays under
-    max_bucket_size (pHash drift from lossy re-encodes is wider than
+    DEFAULT_MAX_BUCKET (pHash drift from lossy re-encodes is wider than
     simhash drift from small edits — see q_pixel_phash_pairs)."""
     if 64 % chunks != 0:
         raise ValueError("chunks must divide 64")
-    width = 64 // chunks
-    mask = (1 << width) - 1
-    keyed = df.select(
-        F.col(id_col),
-        F.col(hash_col).alias("_h"),
-        F.array(
-            *[
-                F.shiftright(hash_col, width * i).bitwiseAND(F.lit(mask))
-                for i in range(chunks)
+    members = _bucket_members(
+        df,
+        F.struct(F.col(id_col).alias("id"), F.col(hash_col).alias("sh")),
+        _chunk_keys(hash_col, 64, chunks),
+    )
+
+    def _hamming_matrix(ms):
+        # xor + 16-bit-LUT popcount: integer math, trivially exact
+        sh = np.fromiter(
+            (x["sh"] for x in ms), dtype=np.int64, count=len(ms)
+        ).view(np.uint64)
+        x = sh[:, None] ^ sh[None, :]
+        ham = np.zeros(x.shape, dtype=np.int32)
+        for shift in (0, 16, 32, 48):
+            ham += _POPCOUNT16[
+                ((x >> np.uint64(shift)) & np.uint64(0xFFFF)).astype(np.int64)
             ]
-        ).alias("keys"),
-    )
-    chunks = keyed.select(
-        F.struct(F.col(id_col).alias("id"), F.col("_h").alias("sh")).alias("m"),
-        F.posexplode_outer("keys").alias("chunk_idx", "chunk_val"),  # see
-        # minhash_lsh_pairs note on the explode-over-UDF pre-filter trap
-    )
-    members = (
-        chunks.groupBy("chunk_idx", "chunk_val")
-        .agg(F.collect_list("m").alias("ms"))
-        .where(F.size("ms") > 1)
-    )
+        return ham
 
-    def _pair(x, y):
-        return F.struct(
-            F.when(x["id"] < y["id"], x["id"]).otherwise(y["id"]).alias("id_a"),
-            F.when(x["id"] < y["id"], y["id"]).otherwise(x["id"]).alias("id_b"),
-            F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias("hamming"),
-        )
-
-    # Hybrid expansion (see minhash_lsh_pairs): medium/large buckets take
-    # a vectorized numpy pass — xor + 16-bit-LUT popcount — while tiny
-    # buckets stay native. Hamming is integer math, trivially exact; one
-    # dropDuplicates over the unioned branches keeps each pair once.
-    small = members.where(
-        (F.size("ms") <= _VECTORIZE_FROM) | (F.size("ms") > max_bucket_size)
+    return _bucket_pairs(
+        members, "hamming", "int",
+        lambda x, y: F.bit_count(x["sh"].bitwiseXOR(y["sh"])),
+        _hamming_matrix,
+        lambda ham: ham <= max_hamming,
     )
-    native = _bucket_pair_expansion(
-        small,
-        _pair,
-        lambda p: p["hamming"] <= max_hamming,
-        max_bucket_size,
-    )
-    big = members.where(
-        (F.size("ms") > _VECTORIZE_FROM) & (F.size("ms") <= max_bucket_size)
-    )
-    id_type = dict(df.dtypes)[id_col]
-
-    def _vec_fn(batches):
-        lut = _POPCOUNT16
-        for pdf in batches:
-            out_a, out_b, out_h = [], [], []
-            for ms in pdf["ms"]:
-                m = len(ms)
-                ids = np.array([x["id"] for x in ms])  # int64 or unicode
-                sh = np.fromiter(
-                    (x["sh"] for x in ms), dtype=np.int64, count=m
-                ).view(np.uint64)
-                x = sh[:, None] ^ sh[None, :]
-                ham = (
-                    lut[(x & np.uint64(0xFFFF)).astype(np.int64)]
-                    + lut[((x >> np.uint64(16)) & np.uint64(0xFFFF)).astype(np.int64)]
-                    + lut[((x >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.int64)]
-                    + lut[(x >> np.uint64(48)).astype(np.int64)]
-                ).astype(np.int32)
-                iu, ju = np.triu_indices(m, 1)
-                hv = ham[iu, ju]
-                keep = hv <= max_hamming
-                lo, hi = _ordered_id_pairs(ids, iu, ju, keep)
-                out_a.extend(lo.tolist())
-                out_b.extend(hi.tolist())
-                out_h.extend(hv[keep].tolist())
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b, "hamming": out_h})
-
-    vectorized = big.mapInPandas(
-        _vec_fn, schema=f"id_a {id_type}, id_b {id_type}, hamming int"
-    )
-    return native.unionByName(vectorized).dropDuplicates(["id_a", "id_b"])
 
 
 _POPCOUNT16 = np.array(
@@ -591,7 +529,6 @@ def simhash_near_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
 ) -> DataFrame:
     """Near-dup text pairs by simhash — simhash_column ∘ hamming_near_pairs.
     Empty/whitespace docs are filtered on the INPUT text (not on
@@ -601,24 +538,7 @@ def simhash_near_pairs(
     engines and are bucket-capped."""
     df = df.where(F.trim(F.col(text_col)) != "")
     sims = simhash_column(df, text_col, id_col)
-    return hamming_near_pairs(sims, "simhash", id_col, max_hamming,
-                              max_bucket_size)
-
-
-def phash_near_pairs(
-    df: DataFrame,
-    phash_col: str = "phash",
-    id_col: str = "image_id",
-    max_hamming: int = 3,
-    max_bucket_size: int = DEFAULT_MAX_BUCKET,
-    chunks: int = 4,
-) -> DataFrame:
-    """Near-duplicate IMAGE pairs by perceptual-hash hamming distance —
-    the north rule's image-dedup discovery step (exact-phash dedup is
-    dedup_by_key; this catches re-encodes/resizes whose phash differs in
-    a few bits). Same banded operator as text simhash."""
-    return hamming_near_pairs(df, phash_col, id_col, max_hamming,
-                              max_bucket_size, chunks)
+    return hamming_near_pairs(sims, "simhash", id_col, max_hamming)
 
 
 # --------------------------------------------------------------------------

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .components import connected_components
-from .similarity import _norm_expr, cosine_pairs_from_buckets, ivf_assign
+from .similarity import _cosine_member, cosine_pairs_from_buckets, ivf_assign
 
 
 def semdedup(
@@ -44,36 +44,22 @@ def semdedup(
     threshold: float = 0.85,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    max_bucket_size: int = None,
 ) -> DataFrame:
     """(id, ivf_cluster, keep) — keep=false for every non-smallest
     member of a semantic-duplicate component."""
-    from .dedup import DEFAULT_MAX_BUCKET
-
-    if max_bucket_size is None:
-        max_bucket_size = DEFAULT_MAX_BUCKET
-
     assigned = ivf_assign(df, centroids, vec_col).select(
         F.col(id_col), F.col(vec_col), F.col("ivf_cluster")
     )
     members = (
         assigned.select(
-            "ivf_cluster",
-            F.struct(
-                F.col(id_col).alias("id"),
-                F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-                _norm_expr(F.col(vec_col)).alias("nrm"),
-            ).alias("m"),
+            "ivf_cluster", _cosine_member(id_col, vec_col).alias("m")
         )
         .where(F.col("m.nrm") > 0)
         .groupBy("ivf_cluster")
         .agg(F.collect_list("m").alias("ms"))
         .where(F.size("ms") > 1)
     )
-    id_type = dict(df.dtypes)[id_col]
-    pairs = cosine_pairs_from_buckets(
-        members, threshold, max_bucket_size, id_type
-    )
+    pairs = cosine_pairs_from_buckets(members, threshold)
     dropped = (
         connected_components(pairs)
         .where(F.col("id") != F.col("component"))

@@ -26,13 +26,15 @@ Two paths over `embeddings(vec_id, embedding array<float>, label)`:
 
 from __future__ import annotations
 
-from typing import Iterator, List, Sequence
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+
+from .dedup import _bucket_members, _bucket_pairs, _chunk_keys
 
 
 def _dot_expr(vec_col, query: Sequence[float]):
@@ -194,17 +196,15 @@ def cosine_near_pairs_lsh(
     id_col: str = "vec_id",
     seed: int = 31,
     dim: int = 64,
-    max_bucket_size: int = None,
 ) -> DataFrame:
     """Scale path: SRP-signature chunk bucketing (any pair of vectors at
     angle <= theta agrees on a whole chunk with high probability), bucket
-    collect_list, in-array pair expansion with exact cosine verification —
+    collect_list, in-bucket pair expansion with exact cosine verification —
     same no-self-join shape as minhash_lsh_pairs/simhash_near_pairs, so
     the signature UDF runs once and only verified pairs leave the task.
-    Buckets above `max_bucket_size` (identical/boilerplate embeddings
-    piling into one SRP chunk value at 10^12-row scale) take the linear
-    star reroute instead of the quadratic expansion — see
-    dedup._bucket_pair_expansion.
+    Buckets above dedup.DEFAULT_MAX_BUCKET (identical/boilerplate
+    embeddings piling into one SRP chunk value at 10^12-row scale) take
+    the linear star reroute instead of the quadratic expansion.
 
     The norm is computed ONCE per row as a struct field (an O(d)
     aggregate); normalizing inside a transform lambda instead would
@@ -212,65 +212,34 @@ def cosine_near_pairs_lsh(
     loop-invariant subexpressions out of HOF lambdas). Zero-norm vectors
     are dropped up front: they have no cosine direction and would
     otherwise emit NaN pairs silently."""
-    from .dedup import (
-        DEFAULT_MAX_BUCKET,
-        _VECTORIZE_FROM,
-        _bucket_pair_expansion,
-        _ordered_id_pairs,
-    )
-
-    if max_bucket_size is None:
-        max_bucket_size = DEFAULT_MAX_BUCKET
-    bits_per = planes // chunks
-    mask = (1 << bits_per) - 1
     sig_udf = srp_signature_udf(dim, planes, seed)
-    sigs = df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        sig_udf(F.col(vec_col)).alias("_sig"),
-    ).select(
-        F.struct(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-            _norm_expr(F.col(vec_col)).alias("nrm"),
-        ).alias("m"),
-        F.array(
-            *[
-                F.shiftright("_sig", bits_per * i).bitwiseAND(F.lit(mask))
-                for i in range(chunks)
-            ]
-        ).alias("keys"),
-    ).where(F.col("m.nrm") > 0)
-    chunked = sigs.select(
-        # outer: plain posexplode inserts a size>0 pre-filter below the
-        # Generate that drags the SRP UDF below the exchange (double eval)
-        "m", F.posexplode_outer("keys").alias("chunk_idx", "chunk_val")
+    sigs = df.where(_norm_expr(F.col(vec_col)) > 0).select(
+        F.col(id_col), F.col(vec_col), sig_udf(F.col(vec_col)).alias("_sig")
     )
-    members = (
-        chunked.groupBy("chunk_idx", "chunk_val")
-        .agg(F.collect_list("m").alias("ms"))
-        .where(F.size("ms") > 1)
+    members = _bucket_members(
+        sigs, _cosine_member(id_col, vec_col), _chunk_keys("_sig", planes, chunks)
     )
-    id_type = dict(df.dtypes)[id_col]
-    return cosine_pairs_from_buckets(members, threshold, max_bucket_size, id_type)
+    return cosine_pairs_from_buckets(members, threshold)
 
 
-def cosine_pairs_from_buckets(
-    members: DataFrame,
-    threshold: float,
-    max_bucket_size: int,
-    id_type: str,
-) -> DataFrame:
-    """Verified cosine pairs from pre-bucketed candidates: `members` has
-    an `ms` column of array<struct<id, v:array<double>, nrm:double>>
-    (any bucketing — SRP chunks, IVF clusters). Shared by
-    cosine_near_pairs_lsh and semdedup so the hybrid native/vectorized
-    expansion (and its bit-parity contract) lives in one place."""
-    from .dedup import (
-        _VECTORIZE_FROM,
-        _bucket_pair_expansion,
-        _ordered_id_pairs,
+def _cosine_member(id_col: str, vec_col: str):
+    """The member struct cosine_pairs_from_buckets expects."""
+    return F.struct(
+        F.col(id_col).alias("id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        _norm_expr(F.col(vec_col)).alias("nrm"),
     )
+
+
+def cosine_pairs_from_buckets(members: DataFrame, threshold: float) -> DataFrame:
+    """Verified cosine pairs (id_a < id_b, cos_sim >= threshold) from
+    pre-bucketed candidates: `members` has an `ms` column of
+    array<struct<id, v:array<double>, nrm:double>> (any bucketing — SRP
+    chunks, IVF clusters). Shared by cosine_near_pairs_lsh and semdedup.
+
+    The numpy score accumulates LEFT-TO-RIGHT over components —
+    bit-identical to the native HOF fold (numpy's pairwise-sum dot would
+    round differently and could flip a threshold boundary)."""
 
     def _cos(x, y):
         return F.aggregate(
@@ -279,63 +248,19 @@ def cosine_pairs_from_buckets(
             lambda acc, v: acc + v,
         ) / (x["nrm"] * y["nrm"])
 
-    def _pair(x, y):
-        return F.struct(
-            F.when(x["id"] < y["id"], x["id"]).otherwise(y["id"]).alias("id_a"),
-            F.when(x["id"] < y["id"], y["id"]).otherwise(x["id"]).alias("id_b"),
-            _cos(x, y).alias("cos_sim"),
-        )
+    def _cos_matrix(ms):
+        vecs = np.array([x["v"] for x in ms], dtype=np.float64)
+        nrm = np.fromiter((x["nrm"] for x in ms), dtype=np.float64,
+                          count=len(ms))
+        acc = np.zeros((len(ms), len(ms)), dtype=np.float64)
+        for c in vecs.T:  # left-to-right like the fold
+            acc += c[:, None] * c[None, :]
+        return acc / (nrm[:, None] * nrm[None, :])
 
-    # Hybrid expansion, mirroring dedup.minhash_lsh_pairs: cosine verify
-    # is a 64-element interpreted fold per candidate, so medium/large
-    # buckets route through a vectorized numpy pass while the tiny-bucket
-    # tail stays native. The numpy dot accumulates LEFT-TO-RIGHT over
-    # components — bit-identical to the HOF fold (numpy's pairwise-sum
-    # dot would round differently and could flip a threshold boundary).
-    # One dropDuplicates over the union keeps each pair once (the cosine
-    # is identical in every colliding chunk).
-    small = members.where(
-        (F.size("ms") <= _VECTORIZE_FROM) | (F.size("ms") > max_bucket_size)
+    return _bucket_pairs(
+        members, "cos_sim", "double", _cos, _cos_matrix,
+        lambda cos: cos >= threshold,
     )
-    native = _bucket_pair_expansion(
-        small,
-        _pair,
-        lambda p: p["cos_sim"] >= threshold,
-        max_bucket_size,
-    )
-    big = members.where(
-        (F.size("ms") > _VECTORIZE_FROM) & (F.size("ms") <= max_bucket_size)
-    )
-
-    def _vec_fn(batches):
-        for pdf in batches:
-            out_a, out_b, out_c = [], [], []
-            for ms in pdf["ms"]:
-                m = len(ms)
-                ids = np.array([x["id"] for x in ms])  # int64 or unicode
-                vecs = np.array([x["v"] for x in ms], dtype=np.float64)
-                nrm = np.fromiter((x["nrm"] for x in ms), dtype=np.float64,
-                                  count=m)
-                acc = np.zeros((m, m), dtype=np.float64)
-                for k in range(vecs.shape[1]):  # left-to-right like the fold
-                    c = vecs[:, k]
-                    acc += c[:, None] * c[None, :]
-                cos = acc / (nrm[:, None] * nrm[None, :])
-                iu, ju = np.triu_indices(m, 1)
-                cs = cos[iu, ju]
-                keep = cs >= threshold
-                lo, hi = _ordered_id_pairs(ids, iu, ju, keep)
-                out_a.extend(lo.tolist())
-                out_b.extend(hi.tolist())
-                out_c.extend(cs[keep].tolist())
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "cos_sim": out_c}
-            )
-
-    vectorized = big.mapInPandas(
-        _vec_fn, schema=f"id_a {id_type}, id_b {id_type}, cos_sim double"
-    )
-    return native.unionByName(vectorized).dropDuplicates(["id_a", "id_b"])
 
 
 def train_ivf_centroids(

@@ -230,15 +230,35 @@ def image_sharpness_sql(n: int = 120, seed: int = 42) -> str:
     )
 
 
+def _min_id_components(ids, pairs) -> dict:
+    """{id: smallest id of its connected component} over the (a, b) pair
+    graph: path-compressed union-find that always hooks the larger root
+    under the smaller, so every root is its component's min id. An
+    independent closure of the graph the Spark side closes with
+    iterative min-label propagation (connected_components)."""
+    parent = {i: i for i in ids}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in pairs:
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    return {i: find(i) for i in ids}
+
+
 def cross_modal_dedup_sql(
     n: int = 120, seed: int = 42, fresh_seed: int = 777,
     quality: int = 90, max_hamming: int = 7,
 ) -> str:
     """Pure twin of q_cross_modal_dedup: same input construction, caption
-    groups via the same normalize_text digest, image pairs via all-pairs
-    hamming <= 7 (exact — the operator's chunks=8 banding is pigeonhole-
-    exact at <= 7 and the asserted bucket sizes keep caps from firing),
-    union-find, min-id cluster labels."""
+    groups via the same normalize_text digest, image pairs via the
+    chunks=8 bucket pairing at hamming <= 7 (pigeonhole-exact: every such
+    pair shares a chunk), union-find, min-id cluster labels."""
     import hashlib
 
     from .images import decode_image
@@ -269,26 +289,11 @@ def cross_modal_dedup_sql(
                 "zz_" + r["image_id"], bytes(fresh[i]["bytes"]), r["caption"]
             ))
 
-    parent = {rid: rid for rid, _, _ in rows}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
     by_caption: dict = {}
     for rid, _, cap in rows:
         key = hashlib.md5(normalize_text(cap).encode("utf-8")).hexdigest()
         by_caption.setdefault(key, []).append(rid)
-    for members in by_caption.values():
-        for m in members[1:]:
-            union(members[0], m)
+    edges = [(ms[0], m) for ms in by_caption.values() for m in ms[1:]]
 
     hashes = []
     for rid, data, _ in rows:
@@ -296,25 +301,9 @@ def cross_modal_dedup_sql(
             hashes.append((rid, phash64(decode_image(data))))
         except (ValueError, NotImplementedError):
             continue
-    buckets: dict = {}
-    for rid, ph in hashes:
-        for c in range(8):
-            buckets.setdefault((c, (ph >> (8 * c)) & 0xFF), 0)
-            buckets[(c, (ph >> (8 * c)) & 0xFF)] += 1
-    assert max(buckets.values()) <= 2048, "fixture bucket exceeds LSH cap"
-    mask64 = (1 << 64) - 1
-    for i in range(len(hashes)):
-        for j in range(i + 1, len(hashes)):
-            (xa, pa), (xb, pb) = hashes[i], hashes[j]
-            if bin((pa ^ pb) & mask64).count("1") <= max_hamming:
-                union(xa, xb)
-
-    # find() compresses to the min id because union always hooks the
-    # larger root under the smaller — matching connected_components.
-    out = []
-    for rid, _, _ in rows:
-        cluster = find(rid)
-        out.append((rid, cluster, rid == cluster))
+    edges += [(a, b) for a, b, _ in _hamming_pairs(hashes, max_hamming, chunks=8)]
+    comp = _min_id_components([rid for rid, _, _ in rows], edges)
+    out = [(rid, comp[rid], rid == comp[rid]) for rid, _, _ in rows]
     return _values_sql(
         out,
         ["image_id", "cluster_id", "is_survivor"],
@@ -517,35 +506,22 @@ def emb_near_pairs_lsh_sql(sf_dir: str, threshold: float = 0.85,
             v[0] += 0.5
             all_ids.append(vid + 1_000_000)
             all_vecs.append(v)
-    mat = np.stack(all_vecs)
-    sigs = _srp_sigs(mat, planes, seed)
-    bits_per = planes // chunks
-    mask = (1 << bits_per) - 1
-    norms = [_fold_norm(v) for v in all_vecs]
-    buckets: dict = {}
-    for i in range(len(all_ids)):
-        if norms[i] <= 0:
-            continue
-        for c in range(chunks):
-            key = (c, (int(sigs[i]) >> (bits_per * c)) & mask)
-            buckets.setdefault(key, []).append(i)
-    pairs = {}
-    for members in buckets.values():
-        assert len(members) <= 2048, "fixture bucket exceeds LSH cap"
-        for ai in range(len(members)):
-            for bi in range(ai + 1, len(members)):
-                x, y = members[ai], members[bi]
-                ia, ib = all_ids[x], all_ids[y]
-                if ia > ib:
-                    ia, ib, x, y = ib, ia, y, x
-                if (ia, ib) in pairs:
-                    continue
-                cos = _fold_dot(all_vecs[x], all_vecs[y]) / (norms[x] * norms[y])
-                if cos >= threshold:
-                    pairs[(ia, ib)] = _round_like_spark(cos)
-    rows = [(a, b, c) for (a, b), c in sorted(pairs.items())]
-    return _values_sql(rows, ["id_a", "id_b", "cos_sim"],
-                       ["BIGINT", "BIGINT", "DOUBLE"])
+    sigs = _srp_sigs(np.stack(all_vecs), planes, seed)
+    keys = _chunk_keys(chunks, bits=planes)
+    rows = [
+        (vid, (v, nrm, int(sig)))
+        for vid, v, nrm, sig in zip(
+            all_ids, all_vecs, map(_fold_norm, all_vecs), sigs
+        )
+        if nrm > 0
+    ]
+    pairs = _banded_pairs(
+        rows, lambda r: keys(r[2]), _fold_cos, lambda cos: cos >= threshold
+    )
+    return _values_sql(
+        [(a, b, _round_like_spark(c)) for a, b, c in pairs],
+        ["id_a", "id_b", "cos_sim"], ["BIGINT", "BIGINT", "DOUBLE"],
+    )
 
 
 def quality_full_sql(sf_dir: str, pii_clauses: Sequence[str]) -> str:
@@ -576,6 +552,58 @@ def quality_full_sql(sf_dir: str, pii_clauses: Sequence[str]) -> str:
 # chunk value, modulo ~2^-64 collisions)
 # ---------------------------------------------------------------------------
 
+def _banded_pairs(rows, keys, score, keep):
+    """The LSH operators' bucket pairing as ONE pure twin shared by every
+    pair fixture: (id, value) rows, each placed in the bucket of every key
+    in keys(value) -> sorted (id_a, id_b, score) over the pairs that share
+    >= 1 bucket and pass keep(score). score must be symmetric. Asserts
+    bucket sizes stay under the operator's cap, where Spark reroutes to a
+    star expansion this quadratic twin does not model (a fixture over the
+    cap degrades to rows-only)."""
+    buckets: dict = {}
+    for rid, v in rows:
+        for k in keys(v):
+            buckets.setdefault(k, []).append((rid, v))
+    pairs: dict = {}
+    for members in buckets.values():
+        assert len(members) <= 2048, "fixture bucket exceeds LSH cap"
+        for i in range(len(members)):
+            for j in range(i + 1, len(members)):
+                (xa, va), (xb, vb) = members[i], members[j]
+                if xb < xa:
+                    xa, xb = xb, xa
+                if (xa, xb) in pairs:
+                    continue
+                sc = score(va, vb)
+                if keep(sc):
+                    pairs[(xa, xb)] = sc
+    return [(a, b, sc) for (a, b), sc in sorted(pairs.items())]
+
+
+def _chunk_keys(chunks: int, bits: int = 64):
+    """keys(hash): the chunk index and value of each of `chunks` equal
+    chunks of a `bits`-bit hash (the banded operator's bucket keys)."""
+    width = bits // chunks
+    mask = (1 << width) - 1
+    return lambda h: [(c, (h >> (width * c)) & mask) for c in range(chunks)]
+
+
+def _hamming_pairs(rows, max_hamming: int, chunks: int):
+    """(id, 64-bit hash) rows -> the banded hamming operator's pairs."""
+    mask64 = (1 << 64) - 1
+    return _banded_pairs(
+        rows,
+        _chunk_keys(chunks),
+        lambda a, b: bin((a ^ b) & mask64).count("1"),
+        lambda ham: ham <= max_hamming,
+    )
+
+
+def _fold_cos(a, b) -> float:
+    """Cosine of two (vector, norm, ...) values, in the fold order."""
+    return _fold_dot(a[0], b[0]) / (a[1] * b[1])
+
+
 def _minhash_pairs(sf_dir: str, num_hashes: int = 64, bands: int = 16,
                    shingle_k: int = 5, threshold: float = 0.5,
                    seed: int = 7):
@@ -597,32 +625,19 @@ def _minhash_pairs(sf_dir: str, num_hashes: int = 64, bands: int = 16,
         (d, t) for d, t in all_docs
         if t is not None and t.strip(" ") != ""
     ]
-    sigs = {d: minhash_sig(t, a, b, num_hashes, shingle_k) for d, t in all_docs}
+    rows = [(d, minhash_sig(t, a, b, num_hashes, shingle_k)) for d, t in all_docs]
     rpb = num_hashes // bands
-    buckets: dict = {}
-    for d, s in sigs.items():
-        for bnd in range(bands):
-            buckets.setdefault(
-                (bnd, tuple(s[bnd * rpb:(bnd + 1) * rpb])), []
-            ).append(d)
-    pairs: dict = {}
-    for members in buckets.values():
-        # Spark reroutes buckets above DEFAULT_MAX_BUCKET to a star
-        # expansion this quadratic oracle does not model; the fixture
-        # corpus must stay under the cap (degrades to rows-only if not).
-        assert len(members) <= 2048, "fixture bucket exceeds LSH cap"
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                x, y = members[i], members[j]
-                ia, ib = (x, y) if x < y else (y, x)
-                if (ia, ib) in pairs:
-                    continue
-                est = sum(
-                    1 for p, q in zip(sigs[x], sigs[y]) if p == q
-                ) / num_hashes
-                if est >= threshold:
-                    pairs[(ia, ib)] = _round_like_spark(est)
-    return pairs, [d for d, _ in all_docs]
+    pairs = _banded_pairs(
+        rows,
+        lambda s: [(bnd, tuple(s[bnd * rpb:(bnd + 1) * rpb]))
+                   for bnd in range(bands)],
+        lambda s1, s2: sum(1 for p, q in zip(s1, s2) if p == q) / num_hashes,
+        lambda est: est >= threshold,
+    )
+    return (
+        {(x, y): _round_like_spark(e) for x, y, e in pairs},
+        [d for d, _ in all_docs],
+    )
 
 
 def lsh_bucket_stats_sql(sf_dir: str, num_hashes: int = 64, bands: int = 16,
@@ -662,37 +677,11 @@ def minhash_lsh_pairs_sql(sf_dir: str) -> str:
 
 
 def dedup_clusters_sql(sf_dir: str) -> str:
-    """Union-find over the replicated minhash pairs → cluster labels.
-
-    An INDEPENDENT transitive closure (path-compressed union-find) of
-    the same pair graph the Spark side closes with iterative min-label
-    propagation — the strongest cross-check an iterative distributed
-    algorithm can get."""
+    """Union-find over the replicated minhash pairs → cluster labels
+    (see _min_id_components)."""
     pairs, all_ids = _minhash_pairs(sf_dir)
-    parent = {i: i for i in all_ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for (x, y) in pairs:
-        rx, ry = find(x), find(y)
-        if rx != ry:
-            if rx < ry:
-                parent[ry] = rx
-            else:
-                parent[rx] = ry
-    # representative = min id per component: union by min above keeps
-    # the root minimal, but verify via a second pass for safety
-    comp_min: dict = {}
-    for i in all_ids:
-        r = find(i)
-        comp_min[r] = min(comp_min.get(r, i), i)
-    rows = sorted(
-        (i, comp_min[find(i)], i == comp_min[find(i)]) for i in all_ids
-    )
+    comp = _min_id_components(all_ids, pairs)
+    rows = sorted((i, comp[i], i == comp[i]) for i in all_ids)
     return _values_sql(
         rows, ["doc_id", "cluster_id", "is_survivor"],
         ["BIGINT", "BIGINT", "BOOLEAN"],
@@ -710,31 +699,14 @@ def dedup_best_sql(sf_dir: str) -> str:
         if (d + 1_000_000) % 7 == 0
     ]
     length = {d: len(t or "") for d, t in all_docs}
-    parent = {i: i for i in all_ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for (x, y) in pairs:
-        rx, ry = find(x), find(y)
-        if rx != ry:
-            parent[max(rx, ry)] = min(rx, ry)
-    comp_min: dict = {}
-    for i in all_ids:
-        r = find(i)
-        comp_min[r] = min(comp_min.get(r, i), i)
+    comp = _min_id_components(all_ids, pairs)
     winners: dict = {}
     for i in all_ids:
-        c = comp_min[find(i)]
-        cur = winners.get(c)
+        cur = winners.get(comp[i])
         if cur is None or (length[i], -i) > (length[cur], -cur):
-            winners[c] = i
+            winners[comp[i]] = i
     rows = sorted(
-        (i, comp_min[find(i)], length[i], winners[comp_min[find(i)]] == i)
-        for i in all_ids
+        (i, comp[i], length[i], winners[comp[i]] == i) for i in all_ids
     )
     return _values_sql(
         rows,
@@ -756,26 +728,9 @@ def simhash_near_pairs_sql(sf_dir: str, max_hamming: int = 6) -> str:
         (d, t) for d, t in all_docs
         if t is not None and t.strip(" ") != ""  # mirrors Spark's trim filter
     ]
-    sh = {d: simhash64(t) for d, t in all_docs}
-    mask64 = (1 << 64) - 1
-    buckets: dict = {}
-    for d, s in sh.items():
-        for c in range(4):
-            buckets.setdefault((c, (s >> (16 * c)) & 0xFFFF), []).append(d)
-    pairs: dict = {}
-    for members in buckets.values():
-        assert len(members) <= 2048, "fixture bucket exceeds LSH cap"
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                x, y = members[i], members[j]
-                ia, ib = (x, y) if x < y else (y, x)
-                if (ia, ib) in pairs:
-                    continue
-                ham = bin((sh[x] ^ sh[y]) & mask64).count("1")
-                if ham <= max_hamming:
-                    pairs[(ia, ib)] = ham
-    rows = [(x, y, h) for (x, y), h in sorted(pairs.items())]
-    return _values_sql(rows, ["id_a", "id_b", "hamming"],
+    rows = [(d, simhash64(t)) for d, t in all_docs]
+    return _values_sql(_hamming_pairs(rows, max_hamming, chunks=4),
+                       ["id_a", "id_b", "hamming"],
                        ["BIGINT", "BIGINT", "INT"])
 
 
@@ -1111,68 +1066,16 @@ def audio_features_sql(n: int = 150, seed: int = 42) -> str:
 def phash_near_pairs_sql(n: int = 400, seed: int = 42,
                          max_hamming: int = 3) -> str:
     """q_phash_near_pairs expected pairs: synth rows ∪ 2-bit-flipped
-    copies of idx%5==0, banded into 4x16-bit chunks, hamming verify —
-    same set semantics as the Spark operator's first-chunk-once
-    emission."""
-    mask64 = (1 << 64) - 1
+    copies of idx%5==0, banded into 4x16-bit chunks, hamming verify."""
     rows = [(r["image_id"], r["phash"]) for r in _synth_rows(n, seed)]
     rows += [
         (rid + "_re", ph ^ 5)
         for i, (rid, ph) in enumerate(list(rows))
         if i % 5 == 0
     ]
-    buckets: dict = {}
-    for rid, ph in rows:
-        for c in range(4):
-            buckets.setdefault((c, (ph >> (16 * c)) & 0xFFFF), []).append(
-                (rid, ph)
-            )
-    pairs: dict = {}
-    for members in buckets.values():
-        assert len(members) <= 2048, "fixture bucket exceeds LSH cap"
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                (xa, pa), (xb, pb) = members[i], members[j]
-                ia, ib = (xa, xb) if xa < xb else (xb, xa)
-                if (ia, ib) in pairs:
-                    continue
-                ham = bin((pa ^ pb) & mask64).count("1")
-                if ham <= max_hamming:
-                    pairs[(ia, ib)] = ham
-    out = [(a, b, h) for (a, b), h in sorted(pairs.items())]
-    return _values_sql(out, ["id_a", "id_b", "hamming"],
+    return _values_sql(_hamming_pairs(rows, max_hamming, chunks=4),
+                       ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
-
-
-def _banded_pairs(rows, max_hamming: int, chunks: int = 8):
-    """The banded hamming operator's chunk-bucket pairing as ONE pure
-    twin shared by every 64-bit locality-hash fixture (pixel pHash,
-    audio fingerprint, video middle-frame pHash): (id, hash) rows ->
-    sorted (id_a, id_b, hamming) among pairs sharing >= 1 chunk value.
-    Asserts bucket sizes stay under the operator's cap so the exact
-    quadratic-branch semantics hold."""
-    mask64 = (1 << 64) - 1
-    width = 64 // chunks
-    cmask = (1 << width) - 1
-    buckets: dict = {}
-    for rid, hv in rows:
-        for c in range(chunks):
-            buckets.setdefault((c, (hv >> (width * c)) & cmask), []).append(
-                (rid, hv)
-            )
-    pairs: dict = {}
-    for members in buckets.values():
-        assert len(members) <= 2048, "fixture bucket exceeds LSH cap"
-        for i in range(len(members)):
-            for j in range(i + 1, len(members)):
-                (xa, pa), (xb, pb) = members[i], members[j]
-                ia, ib = (xa, xb) if xa < xb else (xb, xa)
-                if (ia, ib) in pairs:
-                    continue
-                ham = bin((pa ^ pb) & mask64).count("1")
-                if ham <= max_hamming:
-                    pairs[(ia, ib)] = ham
-    return [(a, b, h) for (a, b), h in sorted(pairs.items())]
 
 
 def audio_near_pairs_sql(n: int = 200, max_hamming: int = 7,
@@ -1195,8 +1098,8 @@ def audio_near_pairs_sql(n: int = 200, max_hamming: int = 7,
             )
             sr2, dec2 = decode_wav(encode_wav(noisy))
             rows.append((f"aud_{i:06d}_re", audio_fp64(dec2, sr2)))
-    out = _banded_pairs(rows, max_hamming, chunks)
-    return _values_sql(out, ["id_a", "id_b", "hamming"],
+    return _values_sql(_hamming_pairs(rows, max_hamming, chunks),
+                       ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
@@ -1219,8 +1122,8 @@ def video_near_dup_sql(n: int = 100, max_hamming: int = 7,
         rows.append((f"vid_{i:06d}", fp(90)))
         if i % 4 == 0:
             rows.append((f"vid_{i:06d}_re", fp(70)))
-    out = _banded_pairs(rows, max_hamming, chunks)
-    return _values_sql(out, ["id_a", "id_b", "hamming"],
+    return _values_sql(_hamming_pairs(rows, max_hamming, chunks),
+                       ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
@@ -1231,7 +1134,7 @@ def pixel_phash_pairs_sql(
     max_hamming: int = 16,
 ) -> str:
     """q_pixel_phash_pairs expected pairs: pHash from decoded pixels of
-    the synth rows ∪ q90 re-encodes of idx%4==0, then the SAME 4x16-bit
+    the synth rows ∪ q90 re-encodes of idx%4==0, then the SAME 8x8-bit
     chunk-bucket pairing the banded operator performs."""
     from .images import decode_image
     from .images.codecs import encode_image
@@ -1244,8 +1147,8 @@ def pixel_phash_pairs_sql(
         if i % 4 == 0:
             vpx = decode_image(encode_image(px, "jpeg", quality=quality))
             rows.append((r["image_id"] + "_re", phash64(vpx)))
-    out = _banded_pairs(rows, max_hamming, chunks=8)
-    return _values_sql(out, ["id_a", "id_b", "hamming"],
+    return _values_sql(_hamming_pairs(rows, max_hamming, chunks=8),
+                       ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
@@ -1415,41 +1318,20 @@ def semdedup_sql(sf_dir: str, kc: int = 8, iters: int = 8,
     mat = np.stack(all_vecs)
     unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
     assign_all = np.argmax(unit @ cent.T, axis=1)
-    norms = [_fold_norm(v) for v in all_vecs]
-    clusters: dict = {}
-    for i in range(len(all_ids)):
-        if norms[i] <= 0:
-            continue
-        clusters.setdefault(int(assign_all[i]), []).append(i)
-    parent = {}
-
-    def find(a):
-        while parent.get(a, a) != a:
-            parent[a] = parent.get(parent[a], parent[a])
-            a = parent[a]
-        return a
-
-    def union(a, b):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-
-    for members in clusters.values():
-        assert len(members) <= 2048, "fixture cluster exceeds bucket cap"
-        for ai in range(len(members)):
-            for bi in range(ai + 1, len(members)):
-                xi, yi = members[ai], members[bi]
-                cos = _fold_dot(all_vecs[xi], all_vecs[yi]) / (
-                    norms[xi] * norms[yi]
-                )
-                if cos >= threshold:
-                    union(all_ids[xi], all_ids[yi])
-    rows = []
-    for i in range(len(all_ids)):
-        vid = all_ids[i]
-        keep = find(vid) == vid  # untouched ids are their own root
-        rows.append((vid, int(assign_all[i]), keep))
+    rows = [
+        (vid, (v, nrm, int(c)))
+        for vid, v, nrm, c in zip(
+            all_ids, all_vecs, map(_fold_norm, all_vecs), assign_all
+        )
+        if nrm > 0
+    ]
+    pairs = _banded_pairs(
+        rows, lambda r: [r[2]], _fold_cos, lambda cos: cos >= threshold
+    )
+    comp = _min_id_components(all_ids, [(a, b) for a, b, _ in pairs])
+    rows = [
+        (vid, int(c), comp[vid] == vid) for vid, c in zip(all_ids, assign_all)
+    ]
     return _values_sql(
         rows, ["vec_id", "ivf_cluster", "keep"],
         ["BIGINT", "BIGINT", "BOOLEAN"],

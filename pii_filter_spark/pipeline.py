@@ -105,13 +105,26 @@ def run_pipeline(
     fail_after_batch is a test hook: raise after N committed batches to
     simulate a mid-run kill. scrub_image_bytes additionally rewrites the
     binary column with PNG/JPEG metadata stripped (see scrub_bytes_stage).
+
+    Raises ValueError when the output's manifest was written with another
+    num_parts: rows hash to different part_ids then, so resuming would
+    skip or duplicate rows.
     """
+    manifest = table_io.read_manifest(output_path)
+    # entries written before num_parts was recorded carry no count
+    recorded = {e.get("num_parts", num_parts) for e in manifest} - {num_parts}
+    if recorded:
+        raise ValueError(
+            f"num_parts={num_parts} does not match num_parts="
+            f"{', '.join(map(str, sorted(recorded)))} recorded in the "
+            f"manifest of {output_path}"
+        )
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     src = with_part_id(table_io.read_table(spark, input_path), num_parts)
     if scrub_image_bytes:
         src = scrub_bytes_stage(src)
 
-    done = set(table_io.completed_part_ids(output_path))
+    done = {e["part_id"] for e in manifest}
     todo = [p for p in range(num_parts) if p not in done]
     processed: List[int] = []
 
@@ -133,6 +146,7 @@ def run_pipeline(
                 p,
                 {
                     "snapshot_id": snapshot_id,
+                    "num_parts": num_parts,
                     **part_counts(value, p),
                     "layer_ms": layer_ms(value),
                     "wall_ms": wall_ms,

@@ -37,21 +37,21 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # Input-split sizing. Two opposing costs: a pandas-UDF task pays
-        # ~200 ms of per-task worker-protocol overhead (measured; it does
-        # not amortize across tasks), so tasks must be big enough that
-        # Python compute dominates; but splits fewer than the core count
-        # leave cores idle (the 4 MB default openCost makes many-small-file
-        # tables collapse to ~#cores/2 splits). 128 MB max + 1 MB openCost
-        # + minPartitionNum = parallelism keeps split count ≈ max(cores,
-        # bytes/128MB) at every cluster size — the same rule that holds on
-        # a 1000-executor scan of 100 TB.
         # Work around a Spark 4.1 optimizer defect: Union.rewriteConstraints
         # dies with "NoSuchElementException: key not found: <attr>" when a
         # union-sourced plan feeds two sibling branches (the LSH hybrid
         # native/vectorized split) — constraint inference only ADDS derived
         # filters, so disabling it never changes results, only plans.
         .config("spark.sql.constraintPropagation.enabled", "false")
+        # Input-split sizing. Two opposing costs: a pandas-UDF task pays
+        # ~200 ms of per-task worker-protocol overhead (measured; it does
+        # not amortize across tasks), so tasks must be big enough that
+        # Python compute dominates; but splits fewer than the core count
+        # leave cores idle (the 4 MB default openCost makes many-small-file
+        # tables collapse to ~#cores/2 splits). Spark's default 128 MB
+        # maxPartitionBytes + 1 MB openCost + minPartitionNum = parallelism
+        # keeps split count ≈ max(cores, bytes/128MB) at every cluster
+        # size — the same rule that holds on a 1000-executor scan of 100 TB.
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

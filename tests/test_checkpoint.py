@@ -103,3 +103,20 @@ def test_rerun_on_complete_output_is_noop(spark, tmp_path_factory):
     fp1 = _table_fingerprint(spark, out)
     assert run_pipeline(spark, inp, out, num_parts=4, batch_parts=2) == []
     assert _table_fingerprint(spark, out) == fp1
+
+
+def test_resume_with_other_num_parts_is_refused(spark, tmp_path_factory):
+    """Rows hash to part_ids by num_parts, so a resume with another count
+    would skip or duplicate rows: it must fail before writing anything."""
+    root = tmp_path_factory.mktemp("parts")
+    inp = str(root / "input")
+    write_input_table(spark, inp, 60, seed=SEED, num_partitions=2)
+    out = str(root / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, inp, out, num_parts=4, batch_parts=2,
+                     fail_after_batch=1)
+    before = table_io.read_manifest(out)
+    assert {e["num_parts"] for e in before} == {4}
+    with pytest.raises(ValueError, match=r"num_parts=8 .*num_parts=4"):
+        run_pipeline(spark, inp, out, num_parts=8, batch_parts=2)
+    assert table_io.read_manifest(out) == before

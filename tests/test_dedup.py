@@ -188,15 +188,17 @@ def test_connected_components_raises_on_iteration_cap(spark):
         connected_components(edges, max_iter=1, small_graph_threshold=0)
 
 
-def test_minhash_lsh_degenerate_bucket_guard(spark):
+def test_minhash_lsh_degenerate_bucket_guard(spark, monkeypatch):
     """10^12-scale hazard (round-2 VERDICT #1): boilerplate-identical docs
     collapse into ONE bucket per band; empty docs all hash to the
     all-zero signature. The guard must (a) filter degenerate signatures
     before banding and (b) reroute oversized buckets through the linear
     star expansion so no task goes quadratic — here 3000 identical docs
     with a cap of 100 must yield exactly n-1 star pairs, not n*(n-1)/2."""
+    import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.dedup import minhash_lsh_pairs
 
+    monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 100)
     n = 3000
     same = spark.range(n).select(
         F.col("id").alias("doc_id"),
@@ -210,9 +212,7 @@ def test_minhash_lsh_degenerate_bucket_guard(spark):
             "text"
         ),
     )
-    pairs = minhash_lsh_pairs(
-        same.unionByName(empty), threshold=0.5, max_bucket_size=100
-    ).toPandas()
+    pairs = minhash_lsh_pairs(same.unionByName(empty), threshold=0.5).toPandas()
     assert len(pairs) == n - 1                      # star, not quadratic
     assert (pairs.id_a == 0).all()                  # min-id representative
     assert set(pairs.id_b) == set(range(1, n))      # every doc reachable
@@ -220,9 +220,11 @@ def test_minhash_lsh_degenerate_bucket_guard(spark):
     assert (pairs.id_b < 100_000).all()             # empty docs filtered
 
 
-def test_simhash_degenerate_bucket_guard(spark):
+def test_simhash_degenerate_bucket_guard(spark, monkeypatch):
+    import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.dedup import simhash_near_pairs
 
+    monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 100)
     n = 3000
     same = spark.range(n).select(
         F.col("id").alias("doc_id"),
@@ -231,9 +233,7 @@ def test_simhash_degenerate_bucket_guard(spark):
     empty = spark.range(500).select(
         (F.col("id") + 100_000).alias("doc_id"), F.lit(" ").alias("text")
     )
-    pairs = simhash_near_pairs(
-        same.unionByName(empty), max_hamming=3, max_bucket_size=100
-    ).toPandas()
+    pairs = simhash_near_pairs(same.unionByName(empty), max_hamming=3).toPandas()
     assert len(pairs) == n - 1
     assert (pairs.id_a == 0).all()
     assert set(pairs.id_b) == set(range(1, n))
@@ -241,15 +241,15 @@ def test_simhash_degenerate_bucket_guard(spark):
     assert (pairs.id_b < 100_000).all()
 
 
-def test_lsh_cap_no_effect_below_threshold(spark, docs_with_dups):
+def test_lsh_cap_no_effect_below_threshold(spark, docs_with_dups, monkeypatch):
     """With buckets under the cap the guarded expansion must be
     pair-for-pair identical to the quadratic one (cap = no-op)."""
+    import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.dedup import minhash_lsh_pairs
 
     base = minhash_lsh_pairs(docs_with_dups, threshold=0.6).toPandas()
-    huge_cap = minhash_lsh_pairs(
-        docs_with_dups, threshold=0.6, max_bucket_size=10**9
-    ).toPandas()
+    monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 10**9)
+    huge_cap = minhash_lsh_pairs(docs_with_dups, threshold=0.6).toPandas()
     key = lambda df: sorted(zip(df.id_a, df.id_b, df.est_jaccard))
     assert key(base) == key(huge_cap)
 
@@ -273,7 +273,7 @@ def test_lsh_bucket_stats_accounting(spark, docs_with_dups):
 def test_phash_near_pairs_finds_planted_flips(spark):
     """Image near-dup discovery: 2-bit-flipped phash copies must pair
     with their originals at hamming 2; unrelated random hashes don't."""
-    from pii_filter_spark.operators.dedup import phash_near_pairs
+    from pii_filter_spark.operators.dedup import hamming_near_pairs
     from pii_filter_spark.sources.synth import gen_pandas
 
     pdf = gen_pandas(200, seed=7)[["image_id", "phash"]]
@@ -282,7 +282,9 @@ def test_phash_near_pairs_finds_planted_flips(spark):
         F.concat("image_id", F.lit("_re")).alias("image_id"),
         F.col("phash").bitwiseXOR(F.lit(3)).alias("phash"),
     )
-    pairs = phash_near_pairs(base.unionByName(flips), max_hamming=3).toPandas()
+    pairs = hamming_near_pairs(
+        base.unionByName(flips), "phash", "image_id", max_hamming=3
+    ).toPandas()
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
     for i in range(0, 200, 4):
         assert (f"img_{i:08d}", f"img_{i:08d}_re") in got
@@ -294,8 +296,7 @@ def test_phash_near_pairs_finds_planted_flips(spark):
 def test_vectorized_bucket_expansion_equals_native(spark):
     """Medium/large buckets route through the numpy expansion; the pair
     set and est values must be IDENTICAL to the native HOF expansion
-    (same i<j set, same first-band-once rule, same integer/num_hashes
-    division)."""
+    (same i<j set, same integer/num_hashes division)."""
     import pandas as pd
     import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.dedup import minhash_lsh_pairs
@@ -345,13 +346,15 @@ def test_vectorized_hamming_buckets_equal_native(spark):
     assert len(vec) >= 60 * 59 / 2
 
 
-def test_star_reroute_does_not_mask_pairs_found_in_normal_buckets(spark):
+def test_star_reroute_does_not_mask_pairs_found_in_normal_buckets(spark, monkeypatch):
     """Round-3 review regression: ids 90/91 are hamming-1 near-dups that
     share an OVERSIZED chunk-0 bucket (starred, only min-id pairs) AND a
     normal-sized chunk-1 bucket. The normal bucket must still emit the
     pair — a first-colliding-chunk emission guard silently dropped it."""
+    import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.dedup import hamming_near_pairs
 
+    monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 4)
     base = 0x0123000000000000  # chunks 1-3 vary below; chunk 0 = 0x0123? no:
     # construct: all rows share chunk 3 (bits 48-63) -> oversized bucket;
     # rows 90,91 additionally share chunks 0-2 except one flipped bit.
@@ -362,8 +365,7 @@ def test_star_reroute_does_not_mask_pairs_found_in_normal_buckets(spark):
     rows.append((90, (0x4444 << 48) | 0x0AAA_BBBB_C000))
     rows.append((91, (0x4444 << 48) | 0x0AAA_BBBB_C001))
     df = spark.createDataFrame(rows, "doc_id long, h long")
-    pairs = hamming_near_pairs(df, "h", "doc_id", max_hamming=3,
-                               max_bucket_size=4).toPandas()
+    pairs = hamming_near_pairs(df, "h", "doc_id", max_hamming=3).toPandas()
     got = {(a, b) for a, b in zip(pairs.id_a, pairs.id_b)}
     assert (90, 91) in got, got
 

@@ -117,7 +117,7 @@ def test_nome_fast_path_equals_alternation_regex():
     assert len(nome_pats) == 1
     pat = nome_pats[0]
 
-    texts = list(gen_pandas(300, seed=77)["caption"])
+    texts = list(gen_pandas(600, seed=77)["caption"])
     if os.path.exists("/root/reference/dataset.json"):
         texts += [
             c["prompt_text"] for c in json.load(open("/root/reference/dataset.json"))

@@ -47,7 +47,7 @@ def test_resize_invariance():
 
 
 def test_spark_compute_phash_and_pairs(spark):
-    from pii_filter_spark.operators.dedup import phash_near_pairs
+    from pii_filter_spark.operators.dedup import hamming_near_pairs
     from pii_filter_spark.operators.image_stage import (
         compute_phash,
         reencode_variants,
@@ -60,8 +60,8 @@ def test_spark_compute_phash_and_pairs(spark):
     variants = reencode_variants(imgs, quality=90)
     hashes = compute_phash(imgs.unionByName(variants))
     assert hashes.where("pixel_phash is null").count() == 0
-    pairs = phash_near_pairs(
-        hashes, phash_col="pixel_phash", max_hamming=16, chunks=8
+    pairs = hamming_near_pairs(
+        hashes, "pixel_phash", "image_id", max_hamming=16, chunks=8
     ).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     # contract: any pair agreeing on >= 1 of the 8 8-bit chunks with

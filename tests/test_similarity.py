@@ -160,12 +160,14 @@ def test_lsh_drops_zero_norm_vectors(spark):
     assert {(r.id_a, r.id_b) for r in got} == {(1, 2)}
 
 
-def test_srp_lsh_degenerate_bucket_guard(spark):
+def test_srp_lsh_degenerate_bucket_guard(spark, monkeypatch):
     """Identical embeddings all land in one SRP chunk bucket per chunk;
     the cap must reroute to the linear star expansion (n-1 pairs from
     the min-id representative) instead of an O(n^2) in-array blowup."""
+    import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.similarity import cosine_near_pairs_lsh
 
+    monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 100)
     n = 2000
     same = spark.range(n).select(
         F.col("id").alias("vec_id"),
@@ -177,7 +179,7 @@ def test_srp_lsh_degenerate_bucket_guard(spark):
     )
     pairs = cosine_near_pairs_lsh(
         same.unionByName(zeros), threshold=0.9, planes=16, chunks=4,
-        dim=8, max_bucket_size=100,
+        dim=8,
     ).toPandas()
     assert len(pairs) == n - 1
     assert (pairs.id_a == 0).all()

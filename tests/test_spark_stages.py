@@ -135,3 +135,31 @@ def test_caption_paths_run_one_python_stage(spark, corpus, tmp_path):
     batch = batch_frame(src, [0, 3, 5], counts)
     assert _udfs_per_arrow_node(batch) == [1]
     assert "Exchange" not in _executed_plan(batch)
+
+
+def test_lsh_pair_operators_evaluate_their_signature_udf_once(spark, corpus):
+    """The LSH pair operators bucket the output of a signature UDF and
+    split the buckets into a native and a numpy branch. A plain posexplode
+    or a filter on the UDF output drags the UDF below the exchange into
+    each branch, so it runs twice per row; each operator must plan one
+    ArrowEvalPython node with its one signature UDF."""
+    from pyspark.sql import functions as F
+
+    from pii_filter_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        simhash_near_pairs,
+    )
+    from pii_filter_spark.operators.similarity import cosine_near_pairs_lsh
+
+    df, _ = corpus
+    docs = df.select(F.col("image_id").alias("doc_id"),
+                     F.col("caption").alias("text"))
+    assert _udfs_per_arrow_node(minhash_lsh_pairs(docs, threshold=0.5)) == [1]
+    assert _udfs_per_arrow_node(simhash_near_pairs(docs)) == [1]
+
+    emb = spark.range(300, numPartitions=8).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin(F.col("id") % 40 + j) for j in range(8)]).alias("embedding"),
+    )
+    pairs = cosine_near_pairs_lsh(emb, threshold=0.9, planes=16, chunks=4, dim=8)
+    assert _udfs_per_arrow_node(pairs) == [1]

@@ -7,19 +7,31 @@ entry(spark)   — flagship: PII/toxicity scrub + quality filter over the
 queries()      — 93 callables covering the operator families of
                  SURVEY.md §2 plus the north-rule/training-data
                  additions (see COVERAGE.md for the full map).
-oracle_sql()   — a DuckDB oracle for EVERY query: 43 plain SQL
-                 equivalents, 50 computed-literal fixture oracles for
+oracle_sql()   — a DuckDB oracle for EVERY query: 41 plain SQL
+                 equivalents, 52 computed-literal fixture oracles for
                  the model-backed ops (langid, perplexity, minhash,
                  simhash, SRP-LSH, IVF, pair queries, image/audio/video
                  stages) — see pii_filter_spark/oracle_support.py.
+
+Each query is declared once: its builder q_<name>, with its oracle
+attached by @_oracle right above it. _GATE_ORDER lists the builders in
+gate order; queries() and oracle_sql() are views over it.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+import traceback
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pii_filter_spark import oracle_support as osup
+from pii_filter_spark.operators.html_extract import strip_html_sql
+from pii_filter_spark.operators.url_dedup import normalize_url_sql
+from pii_filter_spark.operators.url_rules import url_filter_sql
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -122,10 +134,35 @@ def _sql_case_clause(col: str, values: list, quote: bool = True) -> str:
     return " ".join(parts)
 
 
+# DuckDB renderings of the URL rule chain and the html strip chain, used
+# by the url_filter / html_extract oracles
+_URL_RULES = url_filter_sql("url")
+_PAGE_TEXT = strip_html_sql("html")
+
+
+def _oracle(sql: str | Callable[[str], str]):
+    """Attach a query's DuckDB oracle to its builder: a static SQL string
+    over the sf tables, or an oracle_support function of sf_dir that
+    returns a computed-literal relation."""
+
+    def mark(builder):
+        builder.oracle = sql
+        return builder
+
+    return mark
+
+
 # ---------------------------------------------------------------------------
 # queries
 # ---------------------------------------------------------------------------
 
+@_oracle(f"""
+            SELECT doc_id,
+                   text || {_sql_case_clause("doc_id", _SCRUBBED_CLAUSES)} AS scrubbed,
+                   CAST(CASE WHEN CAST(doc_id % 5 AS INT) = 4 THEN 0 ELSE 1 END AS INT)
+                       AS n_masked
+            FROM documents
+        """)
 def q_pii_scrub_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.fused import scrub_stage
 
@@ -136,6 +173,12 @@ def q_pii_scrub_captions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(f"""
+            SELECT pii_type, COUNT(*) AS cnt
+            FROM (SELECT {_sql_case_clause("doc_id", _CLAUSE_TYPES)} AS pii_type FROM documents)
+            WHERE pii_type IS NOT NULL
+            GROUP BY pii_type
+        """)
 def q_pii_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.fused import scrub_stage
 
@@ -153,6 +196,13 @@ def q_pii_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(f"""
+            SELECT doc_id,
+                   text || {_sql_case_clause("doc_id", _SENS_SCRUBBED)} AS scrubbed,
+                   CAST({_sql_case_clause("doc_id", _SENS_COUNTS, quote=False)}
+                        AS INT) AS n_masked
+            FROM documents
+        """)
 def q_sensitive_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sensitive-topic (19-category) scrub — the reference's LLM stage
     made deterministic. Same clause-injection protocol as
@@ -175,6 +225,17 @@ def q_sensitive_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(r"""
+            SELECT doc_id,
+                   len(regexp_split_to_array(trim(text), '\s+')) AS word_count,
+                   round(
+                     CAST(list_sum(list_transform(
+                          regexp_split_to_array(trim(text), '\s+'),
+                          t -> len(t))) AS DOUBLE)
+                     / len(regexp_split_to_array(trim(text), '\s+')), 4
+                   ) AS mean_word_len
+            FROM documents
+        """)
 def q_doc_word_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = F.col("text")
     toks = F.split(F.trim(c), r"\s+")
@@ -187,6 +248,24 @@ def q_doc_word_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(r"""
+            SELECT doc_id,
+              (wc >= 3 AND wc <= 256
+               AND ml >= 2.0 AND ml <= 14.0
+               AND NOT contains(lower(text), 'lorem ipsum')
+               AND NOT contains(text, '{')
+               AND CAST(hashes AS DOUBLE) / wc <= 0.1) AS keep
+            FROM (
+              SELECT doc_id, text,
+                     len(regexp_split_to_array(trim(text), '\s+')) AS wc,
+                     CAST(list_sum(list_transform(
+                          regexp_split_to_array(trim(text), '\s+'),
+                          t -> len(t))) AS DOUBLE)
+                       / len(regexp_split_to_array(trim(text), '\s+')) AS ml,
+                     len(text) - len(replace(text, '#', '')) AS hashes
+              FROM documents
+            )
+        """)
 def q_quality_filter_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4/Gopher SQL-expressible rule subset: keep decision per doc
     (operators/quality_stage.heuristic_keep — shared with the curation
@@ -215,6 +294,18 @@ def _snapshot_merge_dir(sf_dir: str) -> str:
     return base_dir
 
 
+@_oracle("""
+            SELECT doc_id,
+                   CASE WHEN doc_id % 10 = 0 THEN 'upd' ELSE 'base' END
+                       AS rev,
+                   CASE WHEN doc_id % 10 = 0 THEN length(text) + 3
+                        ELSE length(text) END AS n_chars
+            FROM documents
+            UNION ALL
+            SELECT doc_id + 1000000 AS doc_id, 'new' AS rev,
+                   length('new page ' || CAST(doc_id AS VARCHAR)) AS n_chars
+            FROM documents WHERE doc_id % 50 = 0
+        """)
 def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Copy-on-write MERGE on the snapshot seam (the Iceberg CoW shape
     incremental crawls need): base snapshot of the documents table,
@@ -253,30 +344,50 @@ def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.filter_ablation_sql)
 def q_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule loss accounting over the heuristic quality rules (the
     table every ablation study argues about): n_fail and n_unique_fail
     (docs dropped by that rule ALONE) per rule, same staged expressions
     as heuristic_keep so thresholds cannot drift. One codegen pass +
-    one tiny global aggregate + a 5-row stack. Oracle: identical
-    expressions in DuckDB."""
+    one tiny global aggregate + a 5-row stack. Oracle: pure Python twin
+    of the same rules with integer thresholds."""
     from pii_filter_spark.operators.quality_stage import rule_ablation
 
     return rule_ablation(_docs(spark, sf_dir))
 
 
+@_oracle(r"""
+            SELECT min(doc_id) AS doc_id
+            FROM documents
+            GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
+        """)
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.dedup import dedup_exact
 
     return dedup_exact(_docs(spark, sf_dir)).select("doc_id")
 
 
+@_oracle(r"""
+            SELECT doc_id,
+                   md5(regexp_replace(lower(trim(coalesce(text, ''))), '\s+', ' ', 'g'))
+                       AS fingerprint_md5
+            FROM documents
+        """)
 def q_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.textstats import fingerprints
 
     return fingerprints(_docs(spark, sf_dir)).select("doc_id", "fingerprint_md5")
 
 
+@_oracle(r"""
+            SELECT source,
+                   CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
+                       AS total_ws_tokens,
+                   CAST(SUM(len(text)) AS BIGINT) AS total_chars
+            FROM documents
+            GROUP BY source
+        """)
 def q_token_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.textstats import token_counts
 
@@ -292,10 +403,30 @@ def q_token_counts_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang")
 def q_lang_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _docs(spark, sf_dir).groupBy("lang").agg(F.count(F.lit(1)).alias("cnt"))
 
 
+@_oracle("""
+            WITH q AS (
+              SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+              FROM embeddings WHERE vec_id = 0
+            ), scored AS (
+              SELECT e.vec_id,
+                     round(
+                       list_sum(list_transform(
+                         list_zip(list_transform(e.embedding, x -> CAST(x AS DOUBLE)), q.qv),
+                         p -> p[1] * p[2]))
+                       / (sqrt(list_sum(list_transform(e.embedding,
+                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+                          * sqrt(list_sum(list_transform(q.qv, x -> x * x)))), 4
+                     ) AS cos_sim
+              FROM embeddings e, q
+            )
+            SELECT vec_id, cos_sim FROM scored
+            ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
+        """)
 def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.similarity import cosine_topk_bruteforce
 
@@ -306,6 +437,12 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
+@_oracle("""
+            SELECT vec_id,
+                   round(sqrt(list_sum(list_transform(embedding,
+                         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS l2_norm
+            FROM embeddings
+        """)
 def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.similarity import embedding_norms
 
@@ -314,6 +451,15 @@ def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT l_returnflag, l_linestatus,
+                   round(SUM(l_quantity), 4) AS sum_qty,
+                   round(SUM(l_extendedprice), 4) AS sum_price,
+                   round(SUM(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
+                   COUNT(*) AS count_order
+            FROM lineitem
+            GROUP BY l_returnflag, l_linestatus
+        """)
 def q_metrics_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The metrics-rollup relational shape (SURVEY §2.6): groupBy + sums."""
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -330,6 +476,14 @@ def q_metrics_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT n.n_name, COUNT(*) AS order_cnt,
+                   round(SUM(o.o_totalprice), 4) AS total_price
+            FROM orders o
+            JOIN customer c ON o.o_custkey = c.c_custkey
+            JOIN nation n ON c.c_nationkey = n.n_nationkey
+            GROUP BY n.n_name
+        """)
 def q_golden_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Golden-label join shape: big fact ⋈ broadcast small dim."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -349,6 +503,14 @@ def q_golden_broadcast_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT o_custkey, o_orderkey FROM (
+              SELECT o_custkey, o_orderkey,
+                     row_number() OVER (PARTITION BY o_custkey
+                                        ORDER BY o_orderdate, o_orderkey) AS rn
+              FROM orders
+            ) WHERE rn = 1
+        """)
 def q_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First order per customer (the phash-dedup window shape)."""
     from pyspark.sql import Window
@@ -362,6 +524,13 @@ def q_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT COUNT(*) AS remaining, CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
+            FROM orders
+            WHERE o_orderkey NOT IN (
+              SELECT o_orderkey FROM orders WHERE o_orderkey % 7 = 0
+            )
+        """)
 def q_resume_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint-resume shape: input anti-join completed-partition set."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -373,6 +542,11 @@ def q_resume_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT event_type, COUNT(*) AS cnt, round(SUM(value), 4) AS total_value
+            FROM events
+            GROUP BY event_type
+        """)
 def q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return ev.groupBy("event_type").agg(
@@ -381,6 +555,13 @@ def q_events_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT time_bucket(INTERVAL '6 hours', ts) AS window_start,
+                   event_type, COUNT(*) AS cnt,
+                   round(SUM(value), 4) AS total_value
+            FROM events
+            GROUP BY 1, 2
+        """)
 def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 6-hour windows per event type — the windowed-agg shape
     (tests/test_streaming.py runs the SAME aggregation through
@@ -401,6 +582,29 @@ def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            WITH flagged AS (
+              SELECT user_id, event_id, ts, value,
+                     CASE WHEN lag(ts) OVER w IS NULL
+                          OR epoch(ts) - epoch(lag(ts) OVER w) > 21600
+                          THEN 1 ELSE 0 END AS ns
+              FROM events
+              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+            ), idx AS (
+              SELECT user_id, ts, value,
+                     CAST(SUM(ns) OVER (PARTITION BY user_id
+                                        ORDER BY ts, event_id
+                                        ROWS UNBOUNDED PRECEDING) - 1
+                          AS BIGINT) AS session_idx
+              FROM flagged
+            )
+            SELECT user_id, session_idx,
+                   min(ts) AS session_start, max(ts) AS session_end,
+                   COUNT(*) AS n_events,
+                   round(SUM(value), 4) AS total_value
+            FROM idx
+            GROUP BY user_id, session_idx
+        """)
 def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (6 h) of the events table: lag-flag +
     running-sum session index + one aggregation, all native window
@@ -416,6 +620,13 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT event_type, COUNT(*) AS cnt,
+                   round(SUM(value), 4) AS total_value,
+                   COUNT(DISTINCT user_id) AS users
+            FROM events
+            GROUP BY event_type
+        """)
 def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """from_json/to_json surface (SURVEY §2.7: the reference's
     json.loads/dumps SSE payloads map to these built-ins): serialize each
@@ -440,6 +651,13 @@ def q_events_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# restore(scrub(x)) == x: the restored caption is the ORIGINAL clause
+@_oracle(f"""
+            SELECT doc_id,
+                   text || {_sql_case_clause("doc_id", _PII_CLAUSES)} AS restored_caption,
+                   TRUE AS restore_ok
+            FROM documents
+        """)
 def q_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scrub → restore must be identity (reference R1+R3 inverse stage)."""
     from pii_filter_spark.operators.restore_stage import restore_stage
@@ -450,6 +668,13 @@ def q_restore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(f"""
+            SELECT doc_id,
+                   text || {_sql_case_clause("doc_id", _DUP_CLEANED)}
+                       AS restored_caption,
+                   TRUE AS restore_ok
+            FROM documents
+        """)
 def q_restore_label_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R2 duplicate-label cleanup surfaced end-to-end: scrub → restore
     with cleanup_labels=True collapses doubled label words the restore
@@ -471,6 +696,13 @@ def q_restore_label_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT n AS tp, CAST(0 AS BIGINT) AS fp, CAST(0 AS BIGINT) AS fn,
+                   CAST(1.0 AS DOUBLE) AS precision, CAST(1.0 AS DOUBLE) AS recall,
+                   CAST(1.0 AS DOUBLE) AS f1
+            FROM (SELECT COUNT(*) AS n FROM documents
+                  WHERE CAST(doc_id % 5 AS INT) <> 4)
+        """)
 def q_scrub_golden_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference M1+M2: greedy span-overlap TP/FP/FN vs a golden label set,
     rolled up to one (tp, fp, fn, precision, recall, f1) row."""
@@ -509,6 +741,9 @@ def q_scrub_golden_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return global_f1(span_f1_counts(det, golden))
 
 
+@_oracle("""
+            SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type
+        """)
 def q_skew_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation over the skewed event_type keys."""
     from pii_filter_spark.operators.skew import salted_count_by_key
@@ -520,6 +755,7 @@ def q_skew_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- model-backed ops (no SQL oracle -> rows-only driver check) -------------
 
 
+@_oracle(osup.image_verify_sql)
 def q_image_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode/dims/PSNR invariants over a deterministic synthetic image
     table (input_hint shape; images aren't part of the driver testdata)."""
@@ -539,6 +775,7 @@ def q_image_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.image_features_sql)
 def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.image_stage import image_features
     from pii_filter_spark.sources.synth import build_input_table
@@ -552,6 +789,7 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.image_quality_sql)
 def q_image_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAION-style image-side quality rules (size / aspect / compression
     density / container whitelist) — pure Catalyst arithmetic on typed
@@ -563,6 +801,7 @@ def q_image_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_quality_filter(imgs)
 
 
+@_oracle(osup.export_prep_sql)
 def q_export_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-export prep (SDXL aspect-ratio bucketing + WebDataset
     shard assignment): bucket argmin is ONE codegen'd projection over an
@@ -576,6 +815,7 @@ def q_export_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return export_prep(imgs.select("image_id", "w", "h"), num_shards=8)
 
 
+@_oracle(osup.image_metadata_sql)
 def q_image_metadata_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub of PNG metadata chunks (tEXt/zTXt/iTXt/eXIf/tIME):
     extract text fields, run the full caption detection stack over them,
@@ -605,6 +845,7 @@ def q_image_metadata_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scrub_image_metadata(injected)
 
 
+@_oracle(osup.jpeg_exif_scrub_sql)
 def q_jpeg_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub of JPEG EXIF/COM metadata (images/jpeg_metadata.py —
     the TIFF/EXIF segment walker the PNG stage documents as its JPEG
@@ -647,6 +888,7 @@ _RESIZE_BUCKETS: tuple = tuple(
 )
 
 
+@_oracle(osup.image_resize_sql)
 def q_image_resize_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-export RESIZE (the step export_prep's bucket assignment
     feeds): decode through the real codecs, exact area-average resample
@@ -663,6 +905,7 @@ def q_image_resize_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resize_to_buckets(imgs, _RESIZE_BUCKETS)
 
 
+@_oracle(osup.video_frame_sample_sql)
 def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fan-out frame sampling over REAL MJPEG AVI bytes (video/avi.py,
     frames encoded by the real baseline JPEG codec): deterministic
@@ -696,6 +939,7 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.audio_features_sql)
 def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Acoustic features over REAL RIFF/WAVE PCM bytes (audio/wav.py):
     deterministic two-tone test signals encoded to 16-bit WAV on the
@@ -726,6 +970,7 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.video_near_dup_sql)
 def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video near-dup pairs — middle-frame pHash as the clip key (a
     re-encoded/re-hosted copy keeps its middle frame perceptually
@@ -773,6 +1018,7 @@ def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.audio_near_pairs_sql)
 def q_audio_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio near-dup pairs — the modality the banded hamming operator
     had not covered yet: REAL WAV bytes → 64-bit Haitsma-Kalker
@@ -818,6 +1064,7 @@ def q_audio_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.phash_dedup_sql)
 def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe dedup by perceptual hash on the synthetic image table —
     the north-rule dedup-by-phash path with a deliberately hot-keyed
@@ -831,6 +1078,7 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("image_id", "phash")
 
 
+@_oracle(osup.phash_near_pairs_sql)
 def q_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate IMAGE discovery by perceptual-hash hamming distance
     (north-rule image dedup): synthetic table ∪ re-encoded copies whose
@@ -852,6 +1100,7 @@ def q_phash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.minhash_lsh_pairs_sql)
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup discovery over documents ∪ perturbed copies of them."""
     from pii_filter_spark.operators.dedup import minhash_lsh_pairs
@@ -867,6 +1116,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.lsh_bucket_stats_sql)
 def q_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minhash banding bucket-size histogram — the pre-dedup diagnostic
     that predicts candidate-pair volume and flags boilerplate families
@@ -876,6 +1126,35 @@ def q_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_bucket_stats(_par(spark, _docs(spark, sf_dir)))
 
 
+@_oracle(r"""
+            WITH survivors AS (
+              SELECT min(doc_id) AS doc_id
+              FROM documents
+              GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
+            ), kept AS (
+              SELECT d.doc_id, d.lang
+              FROM documents d
+              JOIN survivors s USING (doc_id)
+              WHERE len(regexp_split_to_array(trim(d.text), '\s+')) BETWEEN 3 AND 256
+                AND CAST(list_sum(list_transform(
+                        regexp_split_to_array(trim(d.text), '\s+'),
+                        t -> len(t))) AS DOUBLE)
+                    / len(regexp_split_to_array(trim(d.text), '\s+'))
+                    BETWEEN 2.0 AND 14.0
+                AND NOT contains(lower(d.text), 'lorem ipsum')
+                AND NOT contains(d.text, '{')
+                AND CAST(len(d.text) - len(replace(d.text, '#', '')) AS DOUBLE)
+                    / len(regexp_split_to_array(trim(d.text), '\s+')) <= 0.1
+            )
+            SELECT lang, doc_id, sample_rank FROM (
+              SELECT lang, doc_id,
+                     row_number() OVER (
+                       PARTITION BY lang
+                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+                     ) AS sample_rank
+              FROM kept
+            ) WHERE sample_rank <= 10
+        """)
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end training-data curation composite: exact dedup ->
     heuristic quality keep -> per-language stratified quota sample.
@@ -897,6 +1176,25 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_take(kept, "lang", 10)
 
 
+@_oracle(r"""
+            WITH toks AS (
+              SELECT list_filter(string_split(regexp_replace(lower(trim(text)),
+                         '\s+', ' ', 'g'), ' '), w -> w <> '') AS t
+              FROM documents
+            ), grams AS (
+              SELECT unnest(list_transform(
+                       range(0, greatest(len(t) - 2, 0) + 1),
+                       i -> array_to_string(list_slice(t, i + 1, i + 2), ' ')
+                     )) AS ngram
+              FROM toks WHERE len(t) >= 2
+            )
+            SELECT ngram, cnt, rank FROM (
+              SELECT ngram, COUNT(*) AS cnt,
+                     row_number() OVER (ORDER BY COUNT(*) DESC, ngram ASC)
+                       AS rank
+              FROM grams GROUP BY ngram
+            ) WHERE rank <= 20
+        """)
 def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus top-20 word bigrams (two-phase global top-k — no full-
     vocabulary sort; operators/textstats.top_ngrams)."""
@@ -905,6 +1203,31 @@ def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_ngrams(_par(spark, _docs(spark, sf_dir)), n=2, k=20)
 
 
+@_oracle(r"""
+            WITH toks AS (
+              SELECT doc_id,
+                     list_filter(string_split(regexp_replace(lower(trim(text)),
+                                 '\s+', ' ', 'g'), ' '), w -> w <> '') AS t
+              FROM documents
+            ), doc_grams AS (
+              SELECT doc_id, g FROM (
+                SELECT doc_id,
+                       unnest(list_distinct(list_transform(
+                           range(0, greatest(len(t) - 8, 0) + 1),
+                           i -> array_to_string(list_slice(t, i + 1, i + 8), ' ')
+                       ))) AS g
+                FROM toks WHERE len(t) >= 8
+              )
+            ), bench_grams AS (
+              SELECT DISTINCT g FROM doc_grams WHERE doc_id % 50 = 0
+            ), hits AS (
+              SELECT DISTINCT d.doc_id
+              FROM doc_grams d JOIN bench_grams b USING (g)
+            )
+            SELECT doc_id,
+                   doc_id IN (SELECT doc_id FROM hits) AS contaminated
+            FROM documents
+        """)
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination (8-gram overlap): the 'benchmark' is a
     deterministic slice of the corpus itself (every doc_id % 50 == 0
@@ -917,6 +1240,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_flags(docs, bench)
 
 
+@_oracle(osup.dsir_selection_sql)
 def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance resampling (Xie et al. 2023): hashed-unigram
     log-likelihood-ratio weights against the 'src0' target slice, top-100
@@ -931,6 +1255,29 @@ def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_select(docs, F.col("source") == "src0", k=100)
 
 
+@_oracle(f"""
+        WITH u AS (
+          SELECT doc_id,
+                 (CASE doc_id % 3 WHEN 0 THEN 'http://'
+                                  WHEN 1 THEN 'https://'
+                                  ELSE 'https://www.' END)
+                 || (CASE doc_id % 2 WHEN 0 THEN 'Example.com'
+                                     ELSE 'example.com' END)
+                 || '/articles/item-' || CAST(doc_id % 120 AS VARCHAR)
+                 || (CASE doc_id % 5 WHEN 0 THEN '?utm_source=feed'
+                                     WHEN 1 THEN '?page=2&utm_medium=em'
+                                     WHEN 2 THEN '?page=2'
+                                     WHEN 3 THEN '/'
+                                     ELSE '#frag' END) AS url
+          FROM documents
+        ), n AS (
+          SELECT doc_id, url, {normalize_url_sql('url')} AS url_norm FROM u
+        )
+        SELECT doc_id, url, url_norm,
+               row_number() OVER (PARTITION BY url_norm ORDER BY doc_id) = 1
+                   AS keep
+        FROM n
+    """)
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL-key dedup (CCNet/RefinedWeb first stage): deterministic crawl
     URLs synthesized per doc_id (scheme/case/www/tracking-param/fragment
@@ -991,6 +1338,37 @@ def _synth_filter_url() -> F.Column:
     )
 
 
+@_oracle(f"""
+        WITH u AS (
+          SELECT doc_id,
+                 (CASE doc_id % 3 WHEN 0 THEN 'http://'
+                                  WHEN 1 THEN 'https://'
+                                  ELSE 'https://www.' END)
+                 || (CASE doc_id % 8
+                       WHEN 0 THEN 'spam-casino.biz'
+                       WHEN 1 THEN 'shop.free-lottery.win'
+                       WHEN 2 THEN 'en.wikipedia.org'
+                       WHEN 3 THEN 'Example.com'
+                       WHEN 4 THEN 'buy-viagra-pills.example.net'
+                       WHEN 5 THEN 'news.mysite.io'
+                       WHEN 6 THEN 'example.org'
+                       ELSE 'blog.example.net' END)
+                 || (CASE WHEN doc_id % 8 = 6
+                          THEN '/adult-webcam-casino' ELSE '' END)
+                 || '/p/' || CAST(doc_id % 40 AS VARCHAR)
+                 || (CASE doc_id % 6 WHEN 0 THEN '?utm_source=x'
+                                     WHEN 1 THEN '#frag'
+                                     WHEN 2 THEN '/'
+                                     ELSE '' END) AS url
+          FROM documents
+        )
+        SELECT doc_id, url,
+               {_URL_RULES['host']} AS host,
+               {_URL_RULES['domain']} AS domain,
+               {_URL_RULES['reason']} AS reason,
+               ({_URL_RULES['reason']}) IS NULL AS keep
+        FROM u
+    """)
 def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL keep/drop rules (RefinedWeb §3.1.1 stage 1): registered-domain
     blocklist (subdomains inherit), curated-host exclusion, and an
@@ -1008,6 +1386,30 @@ def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return url_filter(docs)
 
 
+@_oracle(r"""
+            WITH staged AS (
+              SELECT doc_id,
+                     list_filter(list_transform(
+                         regexp_extract_all(text, '[^.!?]+[.!?]*'),
+                         s -> trim(s)), s -> s <> '') AS sents,
+                     list_filter(regexp_split_to_array(trim(text), '\s+'),
+                                 w -> w <> '') AS words
+              FROM documents
+            )
+            SELECT doc_id,
+                   len(sents) AS n_sentences,
+                   CASE WHEN len(sents) > 0
+                        THEN round(1.0 - CAST(len(list_distinct(sents)) AS DOUBLE)
+                                         / len(sents), 4)
+                        ELSE 0.0 END AS dup_sent_frac,
+                   CASE WHEN len(words) > 0
+                        THEN round(CAST(list_max(list_transform(
+                                 list_distinct(words),
+                                 w -> len(list_filter(words, x -> x = w))))
+                               AS DOUBLE) / len(words), 4)
+                        ELSE 0.0 END AS top_word_frac
+            FROM staged
+        """)
 def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals per document: sentence metrics as
     in-row HOFs, top-word count RELATIONAL (explode + (doc, word)
@@ -1017,6 +1419,30 @@ def q_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_signals(_par(spark, _docs(spark, sf_dir)))
 
 
+@_oracle("""
+            WITH hashed AS (
+              SELECT DISTINCT event_type,
+                     CAST(CAST(concat('0x',
+                          substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
+                          AS UBIGINT) AS DOUBLE)
+                       / 1152921504606846976.0 AS u
+              FROM events
+            ), topk AS (
+              SELECT event_type, u,
+                     row_number() OVER (PARTITION BY event_type ORDER BY u)
+                       AS rn
+              FROM hashed
+            ), agg AS (
+              SELECT event_type, COUNT(*) AS n_hashes, max(u) AS kth_min
+              FROM topk WHERE rn <= 64 GROUP BY event_type
+            )
+            SELECT event_type, n_hashes,
+                   round(kth_min, 8) AS kth_min,
+                   round(CASE WHEN n_hashes < 64
+                         THEN CAST(n_hashes AS DOUBLE)
+                         ELSE 63.0 / kth_min END, 4) AS kmv_estimate
+            FROM agg
+        """)
 def q_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-count sketch (order-statistics estimator) over a
     PORTABLE md5-prefix hash — unlike HLL registers, bit-reproducible in
@@ -1027,6 +1453,16 @@ def q_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_distinct(ev, "event_type", "user_id", k=64)
 
 
+@_oracle("""
+            SELECT lang, doc_id, sample_rank FROM (
+              SELECT lang, doc_id,
+                     row_number() OVER (
+                       PARTITION BY lang
+                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
+                     ) AS sample_rank
+              FROM documents
+            ) WHERE sample_rank <= 20
+        """)
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language quota sampling (training-data mixing):
     first 20 docs per lang in md5(doc_id) order — portable-hash ordering
@@ -1036,6 +1472,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_take(_docs(spark, sf_dir), "lang", 20)
 
 
+@_oracle(osup.dedup_clusters_sql)
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs → CLUSTERS → survivors: iterative min-label connected
     components over the minhash near-dup pair graph (pure DataFrame
@@ -1054,6 +1491,19 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(union, pairs)
 
 
+@_oracle(f"""
+            WITH s AS (
+              SELECT doc_id,
+                     regexp_extract_all(
+                         text || {_sql_case_clause("doc_id", _PII_CLAUSES)},
+                         '[^.!?]+[.!?]*') AS sents
+              FROM documents
+            )
+            SELECT doc_id, CAST(u.i AS INT) AS sent_idx,
+                   trim(sents[u.i + 1]) AS sentence
+            FROM s, LATERAL unnest(range(0, len(sents))) AS u(i)
+            WHERE trim(sents[u.i + 1]) <> ''
+        """)
 def q_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF fan-out (PySpark 4 API surface): doc → sentence rows
     via SQL LATERAL; oracle runs the identical RE2 pattern in DuckDB.
@@ -1073,6 +1523,57 @@ _SPAN_BOILERPLATE = (
 )
 
 
+@_oracle(f"""
+            WITH docs AS (
+              SELECT doc_id,
+                     text || CASE WHEN doc_id % 7 = 0
+                                  THEN '{_SPAN_BOILERPLATE}'
+                                  ELSE '' END AS text
+              FROM documents
+            ), s0 AS (
+              SELECT doc_id,
+                     list_filter(list_transform(
+                         regexp_extract_all(text, '[^.!?]+[.!?]*'),
+                         x -> trim(x)), x -> x <> '') AS ss
+              FROM docs
+            ), sents AS (
+              SELECT doc_id, CAST(u.i AS INT) AS sent_idx,
+                     ss[u.i + 1] AS sentence
+              FROM s0, LATERAL unnest(range(0, len(ss))) AS u(i)
+            ), spans AS (
+              SELECT doc_id, sent_idx AS start_idx,
+                     lead(sent_idx, 1) OVER w AS i1,
+                     lead(sent_idx, 2) OVER w AS i2,
+                     md5(sentence || ' ' || lead(sentence, 1) OVER w
+                         || ' ' || lead(sentence, 2) OVER w) AS span_hash
+              FROM sents
+              WINDOW w AS (PARTITION BY doc_id ORDER BY sent_idx)
+            ), dup_spans AS (
+              SELECT doc_id, start_idx, i1, i2 FROM (
+                SELECT doc_id, start_idx, i1, i2,
+                       row_number() OVER (PARTITION BY span_hash
+                                          ORDER BY doc_id, start_idx) AS rn
+                FROM spans WHERE i2 IS NOT NULL
+              ) WHERE rn > 1
+            ), removals AS (
+              SELECT DISTINCT doc_id, CAST(u.x AS INT) AS sent_idx
+              FROM dup_spans, LATERAL unnest([start_idx, i1, i2]) AS u(x)
+            ), agg AS (
+              SELECT s.doc_id,
+                     COUNT(*) AS n_sentences,
+                     COUNT(r.sent_idx) AS n_removed,
+                     coalesce(string_agg(
+                         CASE WHEN r.sent_idx IS NULL THEN s.sentence END,
+                         ' ' ORDER BY s.sent_idx), '') AS text_dedup
+              FROM sents s LEFT JOIN removals r USING (doc_id, sent_idx)
+              GROUP BY s.doc_id
+            )
+            SELECT d.doc_id,
+                   coalesce(a.n_sentences, 0) AS n_sentences,
+                   coalesce(a.n_removed, 0) AS n_removed,
+                   coalesce(a.text_dedup, '') AS text_dedup
+            FROM docs d LEFT JOIN agg a USING (doc_id)
+        """)
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style global 3-sentence-span dedup (Raffel et al. 2020 §2.2):
     every doc_id % 7 == 0 doc gets the same boilerplate tail, so the
@@ -1096,6 +1597,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.exact_substring_sql)
 def q_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-substring dedup (Lee et al. 2022 §4 ExactSubstr): every
     duplicated 20-token span beyond its global first occurrence is
@@ -1117,6 +1619,7 @@ def q_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.clip_alignment_sql)
 def q_clip_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAION-style image-caption alignment filter (CLIP-score shape,
     Schuhmann et al. 2021 §2.2): one mapInPandas embeds both modalities
@@ -1135,6 +1638,7 @@ def q_clip_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return alignment_filter(imgs, threshold=STUB_THRESHOLD)
 
 
+@_oracle(osup.line_clean_sql)
 def q_line_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RefinedWeb/C4 line-wise cleaning (Penedo et al. 2023 §3.1.3):
     deterministic junk lines (social counters, numeric-only, all-caps
@@ -1161,6 +1665,7 @@ def q_line_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return line_clean(docs)
 
 
+@_oracle(osup.pixel_phash_pairs_sql)
 def q_pixel_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CONTENT near-dup for images: pHash computed FROM decoded pixels
     (area-mean 32x32 gray -> 2D DCT -> 8x8 low band vs median,
@@ -1198,6 +1703,7 @@ def q_pixel_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.multimodal_curation_sql)
 def q_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAION-style image-side curation composite over the synthetic
     table ∪ exact byte-copies of every 6th image (id-prefixed 'zz_' so
@@ -1225,6 +1731,7 @@ def q_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return multimodal_curation(table, align_threshold=STUB_THRESHOLD)
 
 
+@_oracle(osup.bloom_seen_sql)
 def q_bloom_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-crawl dedup primitive (CCNet/RefinedWeb cross-snapshot
     shape): a deterministic Bloom filter is built over the 'src0' slice's
@@ -1242,6 +1749,7 @@ def q_bloom_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seen_flags(docs, bloom)
 
 
+@_oracle(osup.dedup_best_sql)
 def q_dedup_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware duplicate-cluster survivors (RefinedWeb keeps the
     LONGEST duplicate, not an arbitrary one): same minhash pair graph as
@@ -1266,6 +1774,7 @@ def q_dedup_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters_best(scored, pairs, score_col="score")
 
 
+@_oracle(osup.quality_classifier_sql)
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned quality scorer (fastText-style hashed-ngram logistic
     classifier, distilled from the heuristic stage) + GPT-3 Pareto keep
@@ -1285,6 +1794,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_classifier_stage(docs, w, b)
 
 
+@_oracle(osup.source_mixture_sql)
 def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-flattened source mixing (XLM-R/mT5 recipe, T=2,
     target 200 rows): per-source keep rates from exact counts, per-row
@@ -1298,6 +1808,7 @@ def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.pack_sequences_sql)
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GPT-style contiguous sequence packing (seq_len=2048): global
     exclusive token offset per doc in id order via the two-phase prefix
@@ -1316,6 +1827,38 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_sequences(toks, seq_len=2048)
 
 
+@_oracle(r"""
+            WITH norm AS (
+              SELECT doc_id,
+                     string_split(regexp_replace(lower(trim(text)),
+                                                 '\s+', ' ', 'g'), ' ') AS toks
+              FROM documents WHERE doc_id % 10 = 0
+            ), norm_b AS (
+              SELECT doc_id,
+                     string_split(regexp_replace(lower(trim(
+                         text || ' extra tail tokens added here')),
+                         '\s+', ' ', 'g'), ' ') AS toks
+              FROM documents WHERE doc_id % 10 = 0
+            ), ga AS (
+              SELECT doc_id, list_distinct(list_transform(
+                       range(0, greatest(len(toks) - 3, 0) + 1),
+                       i -> array_to_string(list_slice(toks, i + 1, i + 3), ' ')
+                     )) AS g
+              FROM norm
+            ), gb AS (
+              SELECT doc_id, list_distinct(list_transform(
+                       range(0, greatest(len(toks) - 3, 0) + 1),
+                       i -> array_to_string(list_slice(toks, i + 1, i + 3), ' ')
+                     )) AS g
+              FROM norm_b
+            )
+            SELECT a.doc_id AS id_a, a.doc_id + 1000000 AS id_b,
+                   round(CASE WHEN len(list_distinct(list_concat(a.g, b.g))) > 0
+                         THEN CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
+                              / len(list_distinct(list_concat(a.g, b.g)))
+                         ELSE 0.0 END, 4) AS jaccard
+            FROM ga a JOIN gb b ON a.doc_id = b.doc_id
+        """)
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard verifier on deterministic candidate
     pairs (each doc_id % 10 == 0 vs a tail-extended copy of itself) —
@@ -1353,6 +1896,7 @@ def _emb_with_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.unionByName(copies)
 
 
+@_oracle(osup.semdedup_sql)
 def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means clusters as candidate
     buckets, within-cluster exact-cosine pairs >= 0.85, smallest id per
@@ -1368,6 +1912,30 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup(emb, cents, threshold=0.85)
 
 
+@_oracle("""
+            WITH base AS (
+              SELECT vec_id,
+                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+              FROM embeddings
+            ), all_vecs AS (
+              SELECT vec_id, v FROM base
+              UNION ALL
+              SELECT vec_id + 1000000,
+                     list_concat([v[1] + 0.5], v[2:len(v)])
+              FROM base WHERE vec_id % 10 = 0
+            ), unit AS (
+              SELECT vec_id, v,
+                     sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
+              FROM all_vecs
+            )
+            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+                   round(
+                     list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
+                     / (a.nrm * b.nrm), 4) AS cos_sim
+            FROM unit a JOIN unit b ON a.vec_id < b.vec_id
+            WHERE list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
+                  / (a.nrm * b.nrm) >= 0.85
+        """)
 def q_embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (broadcast matmul, no join)."""
     from pii_filter_spark.operators.similarity import cosine_near_pairs_exact
@@ -1377,6 +1945,7 @@ def q_embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
 
 
+@_oracle(osup.emb_near_pairs_lsh_sql)
 def q_embedding_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-bucketed scale path for the same near-dup discovery."""
     from pii_filter_spark.operators.similarity import cosine_near_pairs_lsh
@@ -1388,6 +1957,7 @@ def q_embedding_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
 
 
+@_oracle(osup.bpe_token_totals_sql)
 def q_bpe_token_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-EXACT byte-level BPE totals per source (frozen vocab,
     core/bpe.py — Sennrich 2016 / GPT-2 byte level), one Arrow pandas-UDF
@@ -1406,6 +1976,7 @@ def q_bpe_token_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.bpe_gpt2_counts_sql)
 def q_bpe_gpt2_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token totals through the PUBLIC-VOCAB seam (round-4 verdict
     missing #2): the frozen merge table serialized to the released GPT-2
@@ -1469,6 +2040,31 @@ def synth_page_py(doc_id: int, text: str) -> str:
     )
 
 
+@_oracle(f"""
+        WITH pages AS (
+          SELECT doc_id,
+                 '<html><head><title>T' || CAST(doc_id AS VARCHAR)
+                 || '</title><style>p{{color:red}}</style>'
+                 || '<script>track("' || CAST(doc_id AS VARCHAR)
+                 || '")</script>'
+                 || '</head><body><div id="nav"><ul><li>Home</li>'
+                 || '<li>About</li></ul></div><h1>Post '
+                 || CAST(doc_id AS VARCHAR)
+                 || '</h1><p>' || text || '</p>'
+                 || (CASE doc_id % 3
+                       WHEN 0 THEN '<p>Contact &amp; info: a &lt; b</p>'
+                       WHEN 1 THEN '<br>extra&nbsp;line'
+                       ELSE '' END)
+                 || '<!-- tracking --><div class="footer">&#39;fin&#39;'
+                 || '</div></body></html>' AS html
+          FROM documents
+        )
+        SELECT doc_id,
+               {_PAGE_TEXT} AS text,
+               len(string_split({_PAGE_TEXT}, chr(10))) AS n_lines,
+               length({_PAGE_TEXT}) AS n_chars
+        FROM pages
+    """)
 def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML main-text extraction (the trafilatura position, RefinedWeb
     §3.1.2; C4 used exactly this tag-level core): script/style/comment
@@ -1486,6 +2082,7 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return html_extract(pages)
 
 
+@_oracle(osup.corpus_lm_sql)
 def q_corpus_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed LM TRAINING + scoring (CCNet trains its n-gram LM on
     a corpus, then scores with it; the seed-trained perplexity stage
@@ -1503,6 +2100,19 @@ def q_corpus_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_lm_scores(docs)
 
 
+@_oracle("""
+            SELECT 'arc-' || CAST(CAST(floor(doc_id / 25) AS BIGINT) AS VARCHAR)
+                       AS archive_id,
+                   CAST(row_number() OVER (PARTITION BY floor(doc_id / 25)
+                                           ORDER BY doc_id) - 1 AS INT)
+                       AS rec_idx,
+                   CASE WHEN doc_id % 2 = 0 THEN 'conversion'
+                        ELSE 'response' END AS warc_type,
+                   'https://example.com/doc/' || CAST(doc_id AS VARCHAR)
+                       AS url,
+                   text
+            FROM documents
+        """)
 def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC/WET ingestion (web-pipeline stage 0 — the Common Crawl
     container CCNet/RefinedWeb start from, ISO 28500): documents are
@@ -1544,6 +2154,7 @@ def q_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return parse_warc_archives(archives)
 
 
+@_oracle(osup.refinedweb_sql)
 def q_refinedweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL RefinedWeb chain end-to-end through this engine (Penedo
     et al. 2023 fig. 2): WARC shards (stage 0) → record explode → HTML
@@ -1631,6 +2242,7 @@ def q_refinedweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.moore_lewis_sql)
 def q_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Moore-Lewis cross-entropy-difference data selection (Moore &
     Lewis 2010 — the classic in-domain selection method; DSIR is its
@@ -1647,6 +2259,7 @@ def q_moore_lewis(spark: SparkSession, sf_dir: str) -> DataFrame:
     return moore_lewis_scores(docs, F.col("source") == "src0")
 
 
+@_oracle(osup.simhash_near_pairs_sql)
 def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.dedup import simhash_near_pairs
 
@@ -1672,12 +2285,14 @@ def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
     )
 
 
+@_oracle(osup.langid_sql)
 def q_langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.textstats import language_id
 
     return language_id(_par(spark, _docs(spark, sf_dir)))
 
 
+@_oracle(osup.perplexity_sql)
 def q_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-trigram perplexity per document (model-backed; fixture oracle)."""
     from pii_filter_spark.operators.textstats import perplexity_scores
@@ -1685,6 +2300,7 @@ def q_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return perplexity_scores(_par(spark, _docs(spark, sf_dir)))
 
 
+@_oracle(osup.ccnet_bins_sql)
 def q_ccnet_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail perplexity binning per language (Wenzek
     et al. 2020 §4.3): cutoffs trained on a bounded md5-order sample
@@ -1697,6 +2313,7 @@ def q_ccnet_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ccnet_bins(_par(spark, _docs(spark, sf_dir)))
 
 
+@_oracle(osup.image_sharpness_sql)
 def q_image_sharpness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAION-shape image-side blur/placeholder filter: variance of the
     Laplacian + grayscale entropy from ONE decode pass (mapInPandas off
@@ -1725,6 +2342,20 @@ def q_image_sharpness(spark: SparkSession, sf_dir: str) -> DataFrame:
     return image_sharpness(imgs.unionByName(blurred).unionByName(flats))
 
 
+@_oracle(r"""
+            WITH b AS (
+              SELECT doc_id,
+                     CAST(CAST(concat('0x',
+                          substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))
+                          AS UBIGINT) AS BIGINT) % 10000 AS split_bucket
+              FROM documents
+            )
+            SELECT doc_id, split_bucket,
+                   CASE WHEN split_bucket < 9800 THEN 'train'
+                        WHEN split_bucket < 9900 THEN 'val'
+                        ELSE 'test' END AS split
+            FROM b
+        """)
 def q_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-stable train/val/test split (98/1/1): portable md5-prefix
     bucket vs literal cumulative thresholds, ONE codegen CASE — zero
@@ -1736,6 +2367,7 @@ def q_split_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return assign_splits(_docs(spark, sf_dir).select("doc_id"))
 
 
+@_oracle(osup.webdataset_shards_sql)
 def q_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset export facts: the synthetic table packed into 8 real
     POSIX ustar shards ({key}.jpg/.png + .txt + .json per sample, fixed
@@ -1752,6 +2384,7 @@ def q_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     return write_webdataset(imgs, num_shards=8)
 
 
+@_oracle(osup.cross_modal_dedup_sql)
 def q_cross_modal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal duplicate clusters: caption-digest stars (CCNet-
     normalized text) ∪ pixel-pHash near pairs (banded, pigeonhole-exact
@@ -1798,14 +2431,15 @@ def q_cross_modal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cross_modal_dedup(imgs.unionByName(rehosted).unionByName(zz))
 
 
+@_oracle(osup.compaction_plan_sql)
 def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction PLANNER (Iceberg rewriteDataFiles binpack
     shape): first-fit bin assignment in (size DESC, id) order via the
     two-phase banded prefix sum — size bands, driver exclusive prefix
     over <= 64 band totals, bounded per-band window; no single-task
     global window. Inventory here: one synthetic 'file' per document
-    with size = len(text). Oracle: static single-window SQL (integer
-    addition is associative, so two-phase == one-window exactly)."""
+    with size = len(text). Oracle: one Python prefix sum (integer
+    addition is associative, so two-phase == one pass exactly)."""
     from pii_filter_spark.operators.compaction import compaction_plan
 
     inv = _docs(spark, sf_dir).select(
@@ -1814,6 +2448,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return compaction_plan(inv, target_bytes=8192)
 
 
+@_oracle(osup.ccnet_normalize_sql)
 def q_ccnet_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet dedup-key normalization (Wenzek et al. 2020 §4.1): lower,
     frozen accent/punct translate tables, digits->0, drop non-printing,
@@ -1825,6 +2460,7 @@ def q_ccnet_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ccnet_normalize(_par(spark, _docs(spark, sf_dir)))
 
 
+@_oracle(osup.minhash_sql)
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc minhash signature, projected to one scalar column per hash
     (h00..h31): the driver's canonicalizer pandas-sorts every column and
@@ -1842,12 +2478,14 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.simhash_sql)
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.dedup import simhash_column
 
     return simhash_column(_par(spark, _docs(spark, sf_dir)))
 
 
+@_oracle(osup.ann_lsh_sql)
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.similarity import cosine_topk_lsh
 
@@ -1860,6 +2498,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
+@_oracle(osup.embedding_prototypes_sql)
 def q_embedding_prototypes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D4 prototypicality (Tirumala et al. 2023): after SemDeDup, drop
     each k-means cluster's most-prototypical points — near-copies of the
@@ -1879,6 +2518,7 @@ def q_embedding_prototypes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flag_prototypes(prototypicality_scores(emb, cents))
 
 
+@_oracle(osup.aesthetic_nsfw_sql)
 def q_aesthetic_nsfw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAION-5B embedding linear probes (Schuhmann et al. 2022 §3.2):
     aesthetic-score regression head + NSFW classifier head over the
@@ -1892,6 +2532,7 @@ def q_aesthetic_nsfw(spark: SparkSession, sf_dir: str) -> DataFrame:
     return probe_scores(_emb(spark, sf_dir))
 
 
+@_oracle(osup.ann_ivf_sql)
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF coarse-quantizer ANN: deterministic k-means + nprobe probe."""
     from pii_filter_spark.operators.similarity import (
@@ -1906,6 +2547,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
+@_oracle(osup.ann_batch_sql)
 def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch ANN: exact cosine top-5 for the first 5 embedding vectors in
     ONE pass — partition-local top-k accumulation, tiny global re-rank
@@ -1925,6 +2567,12 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT event_type, CAST(user_id % 4 AS INT) AS user_bucket,
+                   COUNT(*) AS cnt, round(SUM(value), 4) AS total_value
+            FROM events
+            GROUP BY ROLLUP(event_type, CAST(user_id % 4 AS INT))
+        """)
 def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouping-sets surface: ROLLUP over (event_type, user bucket)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -1936,6 +2584,19 @@ def q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle("""
+            SELECT custkey, 'active' AS status FROM (
+              SELECT c_custkey AS custkey FROM customer
+              INTERSECT
+              SELECT DISTINCT o_custkey FROM orders
+            )
+            UNION ALL
+            SELECT custkey, 'inactive' AS status FROM (
+              SELECT c_custkey AS custkey FROM customer
+              EXCEPT ALL
+              SELECT DISTINCT o_custkey FROM orders
+            )
+        """)
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-operation surface: INTERSECT / EXCEPT over customer keys."""
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -1949,6 +2610,7 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@_oracle(osup.quality_full_sql)
 def q_quality_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full quality stage incl. langid+perplexity (model-backed)."""
     from pii_filter_spark.operators.fused import quality_stage
@@ -1972,889 +2634,152 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
+# Gate order. The correctness gate checks the FIRST 50 entries of
+# queries() (a count cap, not a time budget), so the first 50 hold every
+# query without a green row in a CORRECTNESS_r*.json artifact; queries
+# already green there fill the rest. Enforced by
+# tests/test_queries.py::test_unverified_queries_in_first_50.
+_GATE_ORDER = (
+    q_export_prep,
+    q_span_dedup,
+    q_quality_full,
+    q_lsh_bucket_stats,
+    q_clip_alignment,
+    q_exact_substring,
+    q_phash_dedup,
+    q_dsir_selection,
+    q_phash_near_pairs,
+    q_scrub_golden_f1,
+    q_pack_sequences,
+    q_image_verify,
+    q_embedding_near_pairs_lsh,
+    q_pixel_phash_pairs,
+    q_quality_classifier,
+    q_simhash_near_pairs,
+    q_multimodal_curation,
+    q_minhash_lsh_pairs,
+    q_semdedup,
+    q_dedup_clusters,
+    q_dedup_best,
+    q_url_filter,
+    q_bpe_gpt2_counts,
+    q_jpeg_exif_scrub,
+    q_corpus_lm_perplexity,
+    q_html_extract,
+    q_image_resize_export,
+    q_embedding_prototypes,
+    q_moore_lewis,
+    q_warc_ingest,
+    q_refinedweb_pipeline,
+    q_audio_near_pairs,
+    q_video_near_dup,
+    q_filter_ablation,
+    q_snapshot_merge,
+    q_aesthetic_nsfw,
+    q_ccnet_bins,
+    q_ccnet_normalize,
+    q_image_sharpness,
+    q_compaction_plan,
+    q_cross_modal_dedup,
+    q_webdataset_shards,
+    q_split_assignment,
+    q_url_dedup,
+    q_ann_batch,
+    q_line_clean,
+    q_bloom_seen,
+    q_perplexity_scores,
+    q_source_mixture,
+    q_simhash,
+    # -- the gate's 50-entry cap ------------------------------------
+    q_image_metadata_scrub,
+    q_ann_lsh,
+    q_image_quality_filter,
+    q_langid_documents,
+    q_ann_ivf,
+    q_minhash_signatures,
+    q_repetition_signals,
+    q_top_bigrams,
+    q_curation_pipeline,
+    q_bpe_token_totals,
+    q_contamination,
+    q_stratified_sample,
+    q_events_rollup,
+    q_resume_antijoin,
+    q_audio_features,
+    q_set_ops,
+    q_token_counts_by_source,
+    q_sentence_split,
+    q_event_sessions,
+    q_video_frame_sample,
+    q_sensitive_scrub,
+    q_kmv_distinct_users,
+    q_image_features,
+    q_ngram_jaccard,
+    q_restore_label_cleanup,
+    q_embedding_near_pairs,
+    q_events_json_roundtrip,
+    q_lang_distribution,
+    q_embedding_norms,
+    q_skew_salted_counts,
+    q_events_windowed,
+    q_fingerprints,
+    q_events_by_type,
+    q_quality_filter_heuristic,
+    q_doc_word_stats,
+    q_dedup_window,
+    q_dedup_exact,
+    q_ann_bruteforce,
+    q_golden_broadcast_join,
+    q_metrics_rollup,
+    q_pii_type_counts,
+    q_pii_scrub_captions,
+    q_restore_roundtrip,
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # COVERAGE-FIRST ordering. The driver's correctness gate checks the
-    # FIRST 50 dict entries each round (a COUNT cap, not a time budget:
-    # r3 checked 50/63, r4 checked 50/71 — both exactly 50). So the
-    # prefix must contain every query that still lacks a driver-green
-    # row in the latest CORRECTNESS artifact; multi-round-green cheap
-    # queries rotate to the tail. Enforced by
-    # tests/test_queries.py::test_unverified_queries_in_first_50,
-    # which reads every CORRECTNESS_r*.json and fails if a query with
-    # no green row in ANY of them sits past position 50.
-    #
-    # Block 1 (21): every query whose last driver-green row is r3 or
-    # earlier — incl. the 7 never sampled (clip_alignment,
-    # exact_substring, dsir_selection, pack_sequences, pixel_phash_pairs,
-    # multimodal_curation, dedup_best) — cheapest-first within the block.
-    # Block 2 (21): queries NEW this round (never had a chance at a row).
-    #   21 + 21 = 42 of the 50 prefix slots are spoken for — only 8
-    #   slack slots remain; the guard test is the real arbiter.
-    # Block 3 (27): r4-green queries with the fewest green rounds.
-    # Block 4 (23): multi-round-green tail (3-4 green rows each).
-    return {
-        # -- block 1: no driver-green row since r3 (or ever) ------------
-        "export_prep": q_export_prep,
-        "span_dedup": q_span_dedup,
-        "quality_full": q_quality_full,
-        "lsh_bucket_stats": q_lsh_bucket_stats,
-        "clip_alignment": q_clip_alignment,
-        "exact_substring": q_exact_substring,
-        "phash_dedup": q_phash_dedup,
-        "dsir_selection": q_dsir_selection,
-        "phash_near_pairs": q_phash_near_pairs,
-        "scrub_golden_f1": q_scrub_golden_f1,
-        "pack_sequences": q_pack_sequences,
-        "image_verify": q_image_verify,
-        "embedding_near_pairs_lsh": q_embedding_near_pairs_lsh,
-        "pixel_phash_pairs": q_pixel_phash_pairs,
-        "quality_classifier": q_quality_classifier,
-        "simhash_near_pairs": q_simhash_near_pairs,
-        "multimodal_curation": q_multimodal_curation,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "semdedup": q_semdedup,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_best": q_dedup_best,
-        # -- block 2: new this round ------------------------------------
-        "url_filter": q_url_filter,
-        "bpe_gpt2_counts": q_bpe_gpt2_counts,
-        "jpeg_exif_scrub": q_jpeg_exif_scrub,
-        "corpus_lm_perplexity": q_corpus_lm_perplexity,
-        "html_extract": q_html_extract,
-        "image_resize_export": q_image_resize_export,
-        "embedding_prototypes": q_embedding_prototypes,
-        "moore_lewis": q_moore_lewis,
-        "warc_ingest": q_warc_ingest,
-        "refinedweb_pipeline": q_refinedweb_pipeline,
-        "audio_near_pairs": q_audio_near_pairs,
-        "video_near_dup": q_video_near_dup,
-        "filter_ablation": q_filter_ablation,
-        "snapshot_merge": q_snapshot_merge,
-        "aesthetic_nsfw": q_aesthetic_nsfw,
-        "ccnet_bins": q_ccnet_bins,
-        "ccnet_normalize": q_ccnet_normalize,
-        "image_sharpness": q_image_sharpness,
-        "compaction_plan": q_compaction_plan,
-        "cross_modal_dedup": q_cross_modal_dedup,
-        "webdataset_shards": q_webdataset_shards,
-        "split_assignment": q_split_assignment,
-        # -- block 3: r4-green, fewest prior green rounds ----------------
-        "url_dedup": q_url_dedup,
-        "ann_batch": q_ann_batch,
-        "line_clean": q_line_clean,
-        "bloom_seen": q_bloom_seen,
-        "perplexity_scores": q_perplexity_scores,
-        "source_mixture": q_source_mixture,
-        "simhash": q_simhash,
-        "image_metadata_scrub": q_image_metadata_scrub,
-        "ann_lsh": q_ann_lsh,
-        "image_quality_filter": q_image_quality_filter,
-        "langid_documents": q_langid_documents,
-        "ann_ivf": q_ann_ivf,
-        "minhash_signatures": q_minhash_signatures,
-        "repetition_signals": q_repetition_signals,
-        "top_bigrams": q_top_bigrams,
-        "curation_pipeline": q_curation_pipeline,
-        "bpe_token_totals": q_bpe_token_totals,
-        "contamination": q_contamination,
-        "stratified_sample": q_stratified_sample,
-        "events_rollup": q_events_rollup,
-        "resume_antijoin": q_resume_antijoin,
-        "audio_features": q_audio_features,
-        "set_ops": q_set_ops,
-        "token_counts_by_source": q_token_counts_by_source,
-        "sentence_split": q_sentence_split,
-        "event_sessions": q_event_sessions,
-        "video_frame_sample": q_video_frame_sample,
-        # -- block 4: multi-round-green tail (past the 50-entry cap) ----
-        "sensitive_scrub": q_sensitive_scrub,
-        "kmv_distinct_users": q_kmv_distinct_users,
-        "image_features": q_image_features,
-        "ngram_jaccard": q_ngram_jaccard,
-        "restore_label_cleanup": q_restore_label_cleanup,
-        "embedding_near_pairs": q_embedding_near_pairs,
-        "events_json_roundtrip": q_events_json_roundtrip,
-        "lang_distribution": q_lang_distribution,
-        "embedding_norms": q_embedding_norms,
-        "skew_salted_counts": q_skew_salted_counts,
-        "events_windowed": q_events_windowed,
-        "fingerprints": q_fingerprints,
-        "events_by_type": q_events_by_type,
-        "quality_filter_heuristic": q_quality_filter_heuristic,
-        "doc_word_stats": q_doc_word_stats,
-        "dedup_window": q_dedup_window,
-        "dedup_exact": q_dedup_exact,
-        "ann_bruteforce": q_ann_bruteforce,
-        "golden_broadcast_join": q_golden_broadcast_join,
-        "metrics_rollup": q_metrics_rollup,
-        "pii_type_counts": q_pii_type_counts,
-        "pii_scrub_captions": q_pii_scrub_captions,
-        "restore_roundtrip": q_restore_roundtrip,
-    }
+    """{name: builder} in gate order; a builder q_<name> is query <name>."""
+    return {q.__name__.removeprefix("q_"): q for q in _GATE_ORDER}
 
 
-def oracle_sql() -> dict[str, str]:
-    scrub_case = _sql_case_clause("doc_id", _SCRUBBED_CLAUSES)
-    type_case = _sql_case_clause("doc_id", _CLAUSE_TYPES)
-    # restore(scrub(x)) == x: the restored caption is the ORIGINAL clause
-    scrub_restored_case = _sql_case_clause("doc_id", _PII_CLAUSES)
-    oracles = _fixture_oracles()
-    oracles.update(_static_oracles(scrub_case, type_case, scrub_restored_case))
-    return oracles
+_FIXTURE_CACHE: tuple[str, dict[str, str]] | None = None
 
 
-def _url_dedup_oracle_sql() -> str:
-    """DuckDB twin of q_url_dedup: same synthesized URLs, same
-    normalization chain (operators/url_dedup.normalize_url_sql)."""
-    from pii_filter_spark.operators.url_dedup import normalize_url_sql
-
-    return f"""
-        WITH u AS (
-          SELECT doc_id,
-                 (CASE doc_id % 3 WHEN 0 THEN 'http://'
-                                  WHEN 1 THEN 'https://'
-                                  ELSE 'https://www.' END)
-                 || (CASE doc_id % 2 WHEN 0 THEN 'Example.com'
-                                     ELSE 'example.com' END)
-                 || '/articles/item-' || CAST(doc_id % 120 AS VARCHAR)
-                 || (CASE doc_id % 5 WHEN 0 THEN '?utm_source=feed'
-                                     WHEN 1 THEN '?page=2&utm_medium=em'
-                                     WHEN 2 THEN '?page=2'
-                                     WHEN 3 THEN '/'
-                                     ELSE '#frag' END) AS url
-          FROM documents
-        ), n AS (
-          SELECT doc_id, url, {normalize_url_sql('url')} AS url_norm FROM u
-        )
-        SELECT doc_id, url, url_norm,
-               row_number() OVER (PARTITION BY url_norm ORDER BY doc_id) = 1
-                   AS keep
-        FROM n
-    """
-
-
-def _url_filter_oracle_sql() -> str:
-    """DuckDB twin of q_url_filter: the identical synthesized URLs
-    (_synth_filter_url's CASE arms) through the identical rule chain
-    (operators/url_rules.url_filter_sql)."""
-    from pii_filter_spark.operators.url_rules import url_filter_sql
-
-    frags = url_filter_sql("url")
-    return f"""
-        WITH u AS (
-          SELECT doc_id,
-                 (CASE doc_id % 3 WHEN 0 THEN 'http://'
-                                  WHEN 1 THEN 'https://'
-                                  ELSE 'https://www.' END)
-                 || (CASE doc_id % 8
-                       WHEN 0 THEN 'spam-casino.biz'
-                       WHEN 1 THEN 'shop.free-lottery.win'
-                       WHEN 2 THEN 'en.wikipedia.org'
-                       WHEN 3 THEN 'Example.com'
-                       WHEN 4 THEN 'buy-viagra-pills.example.net'
-                       WHEN 5 THEN 'news.mysite.io'
-                       WHEN 6 THEN 'example.org'
-                       ELSE 'blog.example.net' END)
-                 || (CASE WHEN doc_id % 8 = 6
-                          THEN '/adult-webcam-casino' ELSE '' END)
-                 || '/p/' || CAST(doc_id % 40 AS VARCHAR)
-                 || (CASE doc_id % 6 WHEN 0 THEN '?utm_source=x'
-                                     WHEN 1 THEN '#frag'
-                                     WHEN 2 THEN '/'
-                                     ELSE '' END) AS url
-          FROM documents
-        )
-        SELECT doc_id, url,
-               {frags['host']} AS host,
-               {frags['domain']} AS domain,
-               {frags['reason']} AS reason,
-               ({frags['reason']}) IS NULL AS keep
-        FROM u
-    """
-
-
-def _html_extract_oracle_sql() -> str:
-    """DuckDB twin of q_html_extract: identical synthesized pages
-    (_synth_html's concat arms), identical step chain
-    (operators/html_extract.strip_html_sql)."""
-    from pii_filter_spark.operators.html_extract import strip_html_sql
-
-    text = strip_html_sql("html")
-    return f"""
-        WITH pages AS (
-          SELECT doc_id,
-                 '<html><head><title>T' || CAST(doc_id AS VARCHAR)
-                 || '</title><style>p{{color:red}}</style>'
-                 || '<script>track("' || CAST(doc_id AS VARCHAR)
-                 || '")</script>'
-                 || '</head><body><div id="nav"><ul><li>Home</li>'
-                 || '<li>About</li></ul></div><h1>Post '
-                 || CAST(doc_id AS VARCHAR)
-                 || '</h1><p>' || text || '</p>'
-                 || (CASE doc_id % 3
-                       WHEN 0 THEN '<p>Contact &amp; info: a &lt; b</p>'
-                       WHEN 1 THEN '<br>extra&nbsp;line'
-                       ELSE '' END)
-                 || '<!-- tracking --><div class="footer">&#39;fin&#39;'
-                 || '</div></body></html>' AS html
-          FROM documents
-        )
-        SELECT doc_id,
-               {text} AS text,
-               len(string_split({text}, chr(10))) AS n_lines,
-               length({text}) AS n_chars
-        FROM pages
-    """
-
-
-def _static_oracles(scrub_case, type_case, scrub_restored_case) -> dict[str, str]:
-    return {
-        "pii_scrub_captions": f"""
-            SELECT doc_id,
-                   text || {scrub_case} AS scrubbed,
-                   CAST(CASE WHEN CAST(doc_id % 5 AS INT) = 4 THEN 0 ELSE 1 END AS INT)
-                       AS n_masked
-            FROM documents
-        """,
-        "sensitive_scrub": f"""
-            SELECT doc_id,
-                   text || {_sql_case_clause("doc_id", _SENS_SCRUBBED)} AS scrubbed,
-                   CAST({_sql_case_clause("doc_id", _SENS_COUNTS, quote=False)}
-                        AS INT) AS n_masked
-            FROM documents
-        """,
-        "pii_type_counts": f"""
-            SELECT pii_type, COUNT(*) AS cnt
-            FROM (SELECT {type_case} AS pii_type FROM documents)
-            WHERE pii_type IS NOT NULL
-            GROUP BY pii_type
-        """,
-        "doc_word_stats": r"""
-            SELECT doc_id,
-                   len(regexp_split_to_array(trim(text), '\s+')) AS word_count,
-                   round(
-                     CAST(list_sum(list_transform(
-                          regexp_split_to_array(trim(text), '\s+'),
-                          t -> len(t))) AS DOUBLE)
-                     / len(regexp_split_to_array(trim(text), '\s+')), 4
-                   ) AS mean_word_len
-            FROM documents
-        """,
-        "quality_filter_heuristic": r"""
-            SELECT doc_id,
-              (wc >= 3 AND wc <= 256
-               AND ml >= 2.0 AND ml <= 14.0
-               AND NOT contains(lower(text), 'lorem ipsum')
-               AND NOT contains(text, '{')
-               AND CAST(hashes AS DOUBLE) / wc <= 0.1) AS keep
-            FROM (
-              SELECT doc_id, text,
-                     len(regexp_split_to_array(trim(text), '\s+')) AS wc,
-                     CAST(list_sum(list_transform(
-                          regexp_split_to_array(trim(text), '\s+'),
-                          t -> len(t))) AS DOUBLE)
-                       / len(regexp_split_to_array(trim(text), '\s+')) AS ml,
-                     len(text) - len(replace(text, '#', '')) AS hashes
-              FROM documents
-            )
-        """,
-        "dedup_exact": r"""
-            SELECT min(doc_id) AS doc_id
-            FROM documents
-            GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        """,
-        "split_assignment": r"""
-            WITH b AS (
-              SELECT doc_id,
-                     CAST(CAST(concat('0x',
-                          substr(md5(CAST(doc_id AS VARCHAR)), 1, 7))
-                          AS UBIGINT) AS BIGINT) % 10000 AS split_bucket
-              FROM documents
-            )
-            SELECT doc_id, split_bucket,
-                   CASE WHEN split_bucket < 9800 THEN 'train'
-                        WHEN split_bucket < 9900 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM b
-        """,
-        "compaction_plan": r"""
-            WITH inv AS (
-              SELECT doc_id, CAST(len(text) AS BIGINT) AS size_bytes
-              FROM documents
-            ), c AS (
-              SELECT doc_id, size_bytes,
-                     COALESCE(SUM(size_bytes) OVER (
-                         ORDER BY size_bytes DESC, doc_id
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0) AS cum_before
-              FROM inv
-            )
-            SELECT doc_id, size_bytes, cum_before,
-                   cum_before // 8192 AS compaction_group
-            FROM c
-        """,
-        "fingerprints": r"""
-            SELECT doc_id,
-                   md5(regexp_replace(lower(trim(coalesce(text, ''))), '\s+', ' ', 'g'))
-                       AS fingerprint_md5
-            FROM documents
-        """,
-        "token_counts_by_source": r"""
-            SELECT source,
-                   CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT)
-                       AS total_ws_tokens,
-                   CAST(SUM(len(text)) AS BIGINT) AS total_chars
-            FROM documents
-            GROUP BY source
-        """,
-        "lang_distribution": "SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY lang",
-        "ann_bruteforce": """
-            WITH q AS (
-              SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-              FROM embeddings WHERE vec_id = 0
-            ), scored AS (
-              SELECT e.vec_id,
-                     round(
-                       list_sum(list_transform(
-                         list_zip(list_transform(e.embedding, x -> CAST(x AS DOUBLE)), q.qv),
-                         p -> p[1] * p[2]))
-                       / (sqrt(list_sum(list_transform(e.embedding,
-                              x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                          * sqrt(list_sum(list_transform(q.qv, x -> x * x)))), 4
-                     ) AS cos_sim
-              FROM embeddings e, q
-            )
-            SELECT vec_id, cos_sim FROM scored
-            ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
-        """,
-        "embedding_norms": """
-            SELECT vec_id,
-                   round(sqrt(list_sum(list_transform(embedding,
-                         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))), 4) AS l2_norm
-            FROM embeddings
-        """,
-        "metrics_rollup": """
-            SELECT l_returnflag, l_linestatus,
-                   round(SUM(l_quantity), 4) AS sum_qty,
-                   round(SUM(l_extendedprice), 4) AS sum_price,
-                   round(SUM(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-                   COUNT(*) AS count_order
-            FROM lineitem
-            GROUP BY l_returnflag, l_linestatus
-        """,
-        "golden_broadcast_join": """
-            SELECT n.n_name, COUNT(*) AS order_cnt,
-                   round(SUM(o.o_totalprice), 4) AS total_price
-            FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            GROUP BY n.n_name
-        """,
-        "url_dedup": _url_dedup_oracle_sql(),
-        "url_filter": _url_filter_oracle_sql(),
-        "snapshot_merge": """
-            SELECT doc_id,
-                   CASE WHEN doc_id % 10 = 0 THEN 'upd' ELSE 'base' END
-                       AS rev,
-                   CASE WHEN doc_id % 10 = 0 THEN length(text) + 3
-                        ELSE length(text) END AS n_chars
-            FROM documents
-            UNION ALL
-            SELECT doc_id + 1000000 AS doc_id, 'new' AS rev,
-                   length('new page ' || CAST(doc_id AS VARCHAR)) AS n_chars
-            FROM documents WHERE doc_id % 50 = 0
-        """,
-        "filter_ablation": r"""
-            WITH s AS (
-              SELECT len(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS wc,
-                     CAST(list_sum(list_transform(
-                          regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+'),
-                          t -> len(t))) AS DOUBLE)
-                       / len(regexp_split_to_array(trim(text), '[ \t\n\x0B\f\r]+')) AS ml,
-                     len(text) - len(replace(text, '#', '')) AS hashes,
-                     contains(lower(text), 'lorem ipsum') AS lor,
-                     contains(text, '{') AS brc
-              FROM documents
-            ), f AS (
-              SELECT CAST(NOT (wc >= 3 AND wc <= 256) AS INT) AS f1,
-                     CAST(NOT (ml >= 2.0 AND ml <= 14.0) AS INT) AS f2,
-                     CAST(lor AS INT) AS f3,
-                     CAST(brc AS INT) AS f4,
-                     CAST(CAST(hashes AS DOUBLE) / wc > 0.1 AS INT) AS f5
-              FROM s
-            ), t AS (SELECT *, f1+f2+f3+f4+f5 AS tot FROM f)
-            SELECT 'word_count' AS rule, SUM(f1) AS n_fail,
-                   SUM(CASE WHEN f1 = 1 AND tot = 1 THEN 1 ELSE 0 END)
-                       AS n_unique_fail FROM t
-            UNION ALL SELECT 'mean_word_len', SUM(f2),
-                   SUM(CASE WHEN f2 = 1 AND tot = 1 THEN 1 ELSE 0 END) FROM t
-            UNION ALL SELECT 'lorem_ipsum', SUM(f3),
-                   SUM(CASE WHEN f3 = 1 AND tot = 1 THEN 1 ELSE 0 END) FROM t
-            UNION ALL SELECT 'brace', SUM(f4),
-                   SUM(CASE WHEN f4 = 1 AND tot = 1 THEN 1 ELSE 0 END) FROM t
-            UNION ALL SELECT 'hash_ratio', SUM(f5),
-                   SUM(CASE WHEN f5 = 1 AND tot = 1 THEN 1 ELSE 0 END) FROM t
-        """,
-        "warc_ingest": """
-            SELECT 'arc-' || CAST(CAST(floor(doc_id / 25) AS BIGINT) AS VARCHAR)
-                       AS archive_id,
-                   CAST(row_number() OVER (PARTITION BY floor(doc_id / 25)
-                                           ORDER BY doc_id) - 1 AS INT)
-                       AS rec_idx,
-                   CASE WHEN doc_id % 2 = 0 THEN 'conversion'
-                        ELSE 'response' END AS warc_type,
-                   'https://example.com/doc/' || CAST(doc_id AS VARCHAR)
-                       AS url,
-                   text
-            FROM documents
-        """,
-        "html_extract": _html_extract_oracle_sql(),
-        "dedup_window": """
-            SELECT o_custkey, o_orderkey FROM (
-              SELECT o_custkey, o_orderkey,
-                     row_number() OVER (PARTITION BY o_custkey
-                                        ORDER BY o_orderdate, o_orderkey) AS rn
-              FROM orders
-            ) WHERE rn = 1
-        """,
-        "resume_antijoin": """
-            SELECT COUNT(*) AS remaining, CAST(SUM(o_orderkey) AS BIGINT) AS key_sum
-            FROM orders
-            WHERE o_orderkey NOT IN (
-              SELECT o_orderkey FROM orders WHERE o_orderkey % 7 = 0
-            )
-        """,
-        "events_by_type": """
-            SELECT event_type, COUNT(*) AS cnt, round(SUM(value), 4) AS total_value
-            FROM events
-            GROUP BY event_type
-        """,
-        "events_windowed": """
-            SELECT time_bucket(INTERVAL '6 hours', ts) AS window_start,
-                   event_type, COUNT(*) AS cnt,
-                   round(SUM(value), 4) AS total_value
-            FROM events
-            GROUP BY 1, 2
-        """,
-        "event_sessions": """
-            WITH flagged AS (
-              SELECT user_id, event_id, ts, value,
-                     CASE WHEN lag(ts) OVER w IS NULL
-                          OR epoch(ts) - epoch(lag(ts) OVER w) > 21600
-                          THEN 1 ELSE 0 END AS ns
-              FROM events
-              WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-            ), idx AS (
-              SELECT user_id, ts, value,
-                     CAST(SUM(ns) OVER (PARTITION BY user_id
-                                        ORDER BY ts, event_id
-                                        ROWS UNBOUNDED PRECEDING) - 1
-                          AS BIGINT) AS session_idx
-              FROM flagged
-            )
-            SELECT user_id, session_idx,
-                   min(ts) AS session_start, max(ts) AS session_end,
-                   COUNT(*) AS n_events,
-                   round(SUM(value), 4) AS total_value
-            FROM idx
-            GROUP BY user_id, session_idx
-        """,
-        "events_json_roundtrip": """
-            SELECT event_type, COUNT(*) AS cnt,
-                   round(SUM(value), 4) AS total_value,
-                   COUNT(DISTINCT user_id) AS users
-            FROM events
-            GROUP BY event_type
-        """,
-        "restore_roundtrip": f"""
-            SELECT doc_id,
-                   text || {scrub_restored_case} AS restored_caption,
-                   TRUE AS restore_ok
-            FROM documents
-        """,
-        "restore_label_cleanup": f"""
-            SELECT doc_id,
-                   text || {_sql_case_clause("doc_id", _DUP_CLEANED)}
-                       AS restored_caption,
-                   TRUE AS restore_ok
-            FROM documents
-        """,
-        "scrub_golden_f1": """
-            SELECT n AS tp, CAST(0 AS BIGINT) AS fp, CAST(0 AS BIGINT) AS fn,
-                   CAST(1.0 AS DOUBLE) AS precision, CAST(1.0 AS DOUBLE) AS recall,
-                   CAST(1.0 AS DOUBLE) AS f1
-            FROM (SELECT COUNT(*) AS n FROM documents
-                  WHERE CAST(doc_id % 5 AS INT) <> 4)
-        """,
-        "skew_salted_counts": """
-            SELECT event_type, COUNT(*) AS cnt FROM events GROUP BY event_type
-        """,
-        "embedding_near_pairs": """
-            WITH base AS (
-              SELECT vec_id,
-                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-              FROM embeddings
-            ), all_vecs AS (
-              SELECT vec_id, v FROM base
-              UNION ALL
-              SELECT vec_id + 1000000,
-                     list_concat([v[1] + 0.5], v[2:len(v)])
-              FROM base WHERE vec_id % 10 = 0
-            ), unit AS (
-              SELECT vec_id, v,
-                     sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm
-              FROM all_vecs
-            )
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(
-                     list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
-                     / (a.nrm * b.nrm), 4) AS cos_sim
-            FROM unit a JOIN unit b ON a.vec_id < b.vec_id
-            WHERE list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2]))
-                  / (a.nrm * b.nrm) >= 0.85
-        """,
-        "events_rollup": """
-            SELECT event_type, CAST(user_id % 4 AS INT) AS user_bucket,
-                   COUNT(*) AS cnt, round(SUM(value), 4) AS total_value
-            FROM events
-            GROUP BY ROLLUP(event_type, CAST(user_id % 4 AS INT))
-        """,
-        "set_ops": """
-            SELECT custkey, 'active' AS status FROM (
-              SELECT c_custkey AS custkey FROM customer
-              INTERSECT
-              SELECT DISTINCT o_custkey FROM orders
-            )
-            UNION ALL
-            SELECT custkey, 'inactive' AS status FROM (
-              SELECT c_custkey AS custkey FROM customer
-              EXCEPT ALL
-              SELECT DISTINCT o_custkey FROM orders
-            )
-        """,
-        "sentence_split": f"""
-            WITH s AS (
-              SELECT doc_id,
-                     regexp_extract_all(
-                         text || {_sql_case_clause("doc_id", _PII_CLAUSES)},
-                         '[^.!?]+[.!?]*') AS sents
-              FROM documents
-            )
-            SELECT doc_id, CAST(u.i AS INT) AS sent_idx,
-                   trim(sents[u.i + 1]) AS sentence
-            FROM s, LATERAL unnest(range(0, len(sents))) AS u(i)
-            WHERE trim(sents[u.i + 1]) <> ''
-        """,
-        "span_dedup": f"""
-            WITH docs AS (
-              SELECT doc_id,
-                     text || CASE WHEN doc_id % 7 = 0
-                                  THEN '{_SPAN_BOILERPLATE}'
-                                  ELSE '' END AS text
-              FROM documents
-            ), s0 AS (
-              SELECT doc_id,
-                     list_filter(list_transform(
-                         regexp_extract_all(text, '[^.!?]+[.!?]*'),
-                         x -> trim(x)), x -> x <> '') AS ss
-              FROM docs
-            ), sents AS (
-              SELECT doc_id, CAST(u.i AS INT) AS sent_idx,
-                     ss[u.i + 1] AS sentence
-              FROM s0, LATERAL unnest(range(0, len(ss))) AS u(i)
-            ), spans AS (
-              SELECT doc_id, sent_idx AS start_idx,
-                     lead(sent_idx, 1) OVER w AS i1,
-                     lead(sent_idx, 2) OVER w AS i2,
-                     md5(sentence || ' ' || lead(sentence, 1) OVER w
-                         || ' ' || lead(sentence, 2) OVER w) AS span_hash
-              FROM sents
-              WINDOW w AS (PARTITION BY doc_id ORDER BY sent_idx)
-            ), dup_spans AS (
-              SELECT doc_id, start_idx, i1, i2 FROM (
-                SELECT doc_id, start_idx, i1, i2,
-                       row_number() OVER (PARTITION BY span_hash
-                                          ORDER BY doc_id, start_idx) AS rn
-                FROM spans WHERE i2 IS NOT NULL
-              ) WHERE rn > 1
-            ), removals AS (
-              SELECT DISTINCT doc_id, CAST(u.x AS INT) AS sent_idx
-              FROM dup_spans, LATERAL unnest([start_idx, i1, i2]) AS u(x)
-            ), agg AS (
-              SELECT s.doc_id,
-                     COUNT(*) AS n_sentences,
-                     COUNT(r.sent_idx) AS n_removed,
-                     coalesce(string_agg(
-                         CASE WHEN r.sent_idx IS NULL THEN s.sentence END,
-                         ' ' ORDER BY s.sent_idx), '') AS text_dedup
-              FROM sents s LEFT JOIN removals r USING (doc_id, sent_idx)
-              GROUP BY s.doc_id
-            )
-            SELECT d.doc_id,
-                   coalesce(a.n_sentences, 0) AS n_sentences,
-                   coalesce(a.n_removed, 0) AS n_removed,
-                   coalesce(a.text_dedup, '') AS text_dedup
-            FROM docs d LEFT JOIN agg a USING (doc_id)
-        """,
-        "kmv_distinct_users": """
-            WITH hashed AS (
-              SELECT DISTINCT event_type,
-                     CAST(CAST(concat('0x',
-                          substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                          AS UBIGINT) AS DOUBLE)
-                       / 1152921504606846976.0 AS u
-              FROM events
-            ), topk AS (
-              SELECT event_type, u,
-                     row_number() OVER (PARTITION BY event_type ORDER BY u)
-                       AS rn
-              FROM hashed
-            ), agg AS (
-              SELECT event_type, COUNT(*) AS n_hashes, max(u) AS kth_min
-              FROM topk WHERE rn <= 64 GROUP BY event_type
-            )
-            SELECT event_type, n_hashes,
-                   round(kth_min, 8) AS kth_min,
-                   round(CASE WHEN n_hashes < 64
-                         THEN CAST(n_hashes AS DOUBLE)
-                         ELSE 63.0 / kth_min END, 4) AS kmv_estimate
-            FROM agg
-        """,
-        "stratified_sample": """
-            SELECT lang, doc_id, sample_rank FROM (
-              SELECT lang, doc_id,
-                     row_number() OVER (
-                       PARTITION BY lang
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                     ) AS sample_rank
-              FROM documents
-            ) WHERE sample_rank <= 20
-        """,
-        "ngram_jaccard": r"""
-            WITH norm AS (
-              SELECT doc_id,
-                     string_split(regexp_replace(lower(trim(text)),
-                                                 '\s+', ' ', 'g'), ' ') AS toks
-              FROM documents WHERE doc_id % 10 = 0
-            ), norm_b AS (
-              SELECT doc_id,
-                     string_split(regexp_replace(lower(trim(
-                         text || ' extra tail tokens added here')),
-                         '\s+', ' ', 'g'), ' ') AS toks
-              FROM documents WHERE doc_id % 10 = 0
-            ), ga AS (
-              SELECT doc_id, list_distinct(list_transform(
-                       range(0, greatest(len(toks) - 3, 0) + 1),
-                       i -> array_to_string(list_slice(toks, i + 1, i + 3), ' ')
-                     )) AS g
-              FROM norm
-            ), gb AS (
-              SELECT doc_id, list_distinct(list_transform(
-                       range(0, greatest(len(toks) - 3, 0) + 1),
-                       i -> array_to_string(list_slice(toks, i + 1, i + 3), ' ')
-                     )) AS g
-              FROM norm_b
-            )
-            SELECT a.doc_id AS id_a, a.doc_id + 1000000 AS id_b,
-                   round(CASE WHEN len(list_distinct(list_concat(a.g, b.g))) > 0
-                         THEN CAST(len(list_intersect(a.g, b.g)) AS DOUBLE)
-                              / len(list_distinct(list_concat(a.g, b.g)))
-                         ELSE 0.0 END, 4) AS jaccard
-            FROM ga a JOIN gb b ON a.doc_id = b.doc_id
-        """,
-        "curation_pipeline": r"""
-            WITH survivors AS (
-              SELECT min(doc_id) AS doc_id
-              FROM documents
-              GROUP BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-            ), kept AS (
-              SELECT d.doc_id, d.lang
-              FROM documents d
-              JOIN survivors s USING (doc_id)
-              WHERE len(regexp_split_to_array(trim(d.text), '\s+')) BETWEEN 3 AND 256
-                AND CAST(list_sum(list_transform(
-                        regexp_split_to_array(trim(d.text), '\s+'),
-                        t -> len(t))) AS DOUBLE)
-                    / len(regexp_split_to_array(trim(d.text), '\s+'))
-                    BETWEEN 2.0 AND 14.0
-                AND NOT contains(lower(d.text), 'lorem ipsum')
-                AND NOT contains(d.text, '{')
-                AND CAST(len(d.text) - len(replace(d.text, '#', '')) AS DOUBLE)
-                    / len(regexp_split_to_array(trim(d.text), '\s+')) <= 0.1
-            )
-            SELECT lang, doc_id, sample_rank FROM (
-              SELECT lang, doc_id,
-                     row_number() OVER (
-                       PARTITION BY lang
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
-                     ) AS sample_rank
-              FROM kept
-            ) WHERE sample_rank <= 10
-        """,
-        "top_bigrams": r"""
-            WITH toks AS (
-              SELECT list_filter(string_split(regexp_replace(lower(trim(text)),
-                         '\s+', ' ', 'g'), ' '), w -> w <> '') AS t
-              FROM documents
-            ), grams AS (
-              SELECT unnest(list_transform(
-                       range(0, greatest(len(t) - 2, 0) + 1),
-                       i -> array_to_string(list_slice(t, i + 1, i + 2), ' ')
-                     )) AS ngram
-              FROM toks WHERE len(t) >= 2
-            )
-            SELECT ngram, cnt, rank FROM (
-              SELECT ngram, COUNT(*) AS cnt,
-                     row_number() OVER (ORDER BY COUNT(*) DESC, ngram ASC)
-                       AS rank
-              FROM grams GROUP BY ngram
-            ) WHERE rank <= 20
-        """,
-        "contamination": r"""
-            WITH toks AS (
-              SELECT doc_id,
-                     list_filter(string_split(regexp_replace(lower(trim(text)),
-                                 '\s+', ' ', 'g'), ' '), w -> w <> '') AS t
-              FROM documents
-            ), doc_grams AS (
-              SELECT doc_id, g FROM (
-                SELECT doc_id,
-                       unnest(list_distinct(list_transform(
-                           range(0, greatest(len(t) - 8, 0) + 1),
-                           i -> array_to_string(list_slice(t, i + 1, i + 8), ' ')
-                       ))) AS g
-                FROM toks WHERE len(t) >= 8
-              )
-            ), bench_grams AS (
-              SELECT DISTINCT g FROM doc_grams WHERE doc_id % 50 = 0
-            ), hits AS (
-              SELECT DISTINCT d.doc_id
-              FROM doc_grams d JOIN bench_grams b USING (g)
-            )
-            SELECT doc_id,
-                   doc_id IN (SELECT doc_id FROM hits) AS contaminated
-            FROM documents
-        """,
-        "repetition_signals": r"""
-            WITH staged AS (
-              SELECT doc_id,
-                     list_filter(list_transform(
-                         regexp_extract_all(text, '[^.!?]+[.!?]*'),
-                         s -> trim(s)), s -> s <> '') AS sents,
-                     list_filter(regexp_split_to_array(trim(text), '\s+'),
-                                 w -> w <> '') AS words
-              FROM documents
-            )
-            SELECT doc_id,
-                   len(sents) AS n_sentences,
-                   CASE WHEN len(sents) > 0
-                        THEN round(1.0 - CAST(len(list_distinct(sents)) AS DOUBLE)
-                                         / len(sents), 4)
-                        ELSE 0.0 END AS dup_sent_frac,
-                   CASE WHEN len(words) > 0
-                        THEN round(CAST(list_max(list_transform(
-                                 list_distinct(words),
-                                 w -> len(list_filter(words, x -> x = w))))
-                               AS DOUBLE) / len(words), 4)
-                        ELSE 0.0 END AS top_word_frac
-            FROM staged
-        """,
-    }
-
-
-_FIXTURE_CACHE: dict | None = None
-
-
-def _fixture_oracles() -> dict[str, str]:
-    """Computed-literal oracles for the deterministic model-backed queries
-    (pii_filter_spark/oracle_support.py). The driver runs correctness at
-    sf0.01; each generator recomputes expected values from that parquet
-    through the same pure functions the UDFs call. Any failure (missing
-    dir, version skew) degrades that query to rows-only, never to red.
-
-    Pair queries (minhash_lsh_pairs, simhash_near_pairs) replicate the
-    LSH grouping by banded-signature EQUALITY — Spark's xxhash64 bucket
-    key is just an injective-modulo-2^-64 rename of the slice, so equal
-    slices <=> equal buckets. Synthetic-table queries (image/audio/
-    video/phash) replicate because gen_row(seed, idx) and every decoder
-    are pure per-row functions the mapInPandas stages import from the
-    same modules.
-    """
-    import os
-
-    global _FIXTURE_CACHE
-    sf = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-    if _FIXTURE_CACHE is not None and _FIXTURE_CACHE.get("_sf") == sf:
-        return {k: v for k, v in _FIXTURE_CACHE.items() if k != "_sf"}
+def _fixtures(sf: str) -> dict[str, str]:
+    """The computed-literal oracles (pii_filter_spark/oracle_support.py)
+    recomputed from the parquet in sf. A generator that raises, or a
+    missing sf dir, leaves its query rows-only, never red."""
     out: dict[str, str] = {}
     if not os.path.isdir(sf):
         return out
-    from pii_filter_spark import oracle_support as osup
-
-    for name, gen in [
-        ("quality_full", lambda sf: osup.quality_full_sql(sf, _PII_CLAUSES)),
-        ("simhash", osup.simhash_sql),
-        ("minhash_lsh_pairs", osup.minhash_lsh_pairs_sql),
-        ("lsh_bucket_stats", osup.lsh_bucket_stats_sql),
-        ("dedup_clusters", osup.dedup_clusters_sql),
-        ("dedup_best", osup.dedup_best_sql),
-        ("simhash_near_pairs", osup.simhash_near_pairs_sql),
-        ("image_verify", lambda sf: osup.image_verify_sql()),
-        ("clip_alignment", lambda sf: osup.clip_alignment_sql()),
-        ("image_features", lambda sf: osup.image_features_sql()),
-        ("image_metadata_scrub", lambda sf: osup.image_metadata_sql()),
-        ("jpeg_exif_scrub", lambda sf: osup.jpeg_exif_scrub_sql()),
-        ("corpus_lm_perplexity", osup.corpus_lm_sql),
-        ("image_resize_export", lambda sf: osup.image_resize_sql()),
-        ("embedding_prototypes", osup.embedding_prototypes_sql),
-        ("aesthetic_nsfw", osup.aesthetic_nsfw_sql),
-        ("moore_lewis", osup.moore_lewis_sql),
-        ("refinedweb_pipeline", osup.refinedweb_sql),
-        ("audio_near_pairs", lambda sf: osup.audio_near_pairs_sql()),
-        ("video_near_dup", lambda sf: osup.video_near_dup_sql()),
-        ("image_quality_filter", lambda sf: osup.image_quality_sql()),
-        ("export_prep", lambda sf: osup.export_prep_sql()),
-        ("video_frame_sample", lambda sf: osup.video_frame_sample_sql()),
-        ("audio_features", lambda sf: osup.audio_features_sql()),
-        ("phash_dedup", lambda sf: osup.phash_dedup_sql()),
-        ("phash_near_pairs", lambda sf: osup.phash_near_pairs_sql()),
-        ("pixel_phash_pairs", lambda sf: osup.pixel_phash_pairs_sql()),
-        ("multimodal_curation", lambda sf: osup.multimodal_curation_sql()),
-        ("quality_classifier", osup.quality_classifier_sql),
-        ("source_mixture", osup.source_mixture_sql),
-        ("semdedup", osup.semdedup_sql),
-        ("langid_documents", osup.langid_sql),
-        ("perplexity_scores", osup.perplexity_sql),
-        ("ccnet_bins", osup.ccnet_bins_sql),
-        ("ccnet_normalize", osup.ccnet_normalize_sql),
-        ("image_sharpness", lambda sf: osup.image_sharpness_sql()),
-        ("cross_modal_dedup", lambda sf: osup.cross_modal_dedup_sql()),
-        ("webdataset_shards", lambda sf: osup.webdataset_shards_sql()),
-        ("minhash_signatures", osup.minhash_sql),
-        ("ann_lsh", osup.ann_lsh_sql),
-        ("ann_ivf", osup.ann_ivf_sql),
-        ("ann_batch", osup.ann_batch_sql),
-        ("embedding_near_pairs_lsh", osup.emb_near_pairs_lsh_sql),
-        ("exact_substring", osup.exact_substring_sql),
-        ("bpe_token_totals", osup.bpe_token_totals_sql),
-        ("bpe_gpt2_counts", osup.bpe_gpt2_counts_sql),
-        ("bloom_seen", osup.bloom_seen_sql),
-        ("line_clean", osup.line_clean_sql),
-        ("pack_sequences", osup.pack_sequences_sql),
-        ("dsir_selection", osup.dsir_selection_sql),
-    ]:
+    for name, q in queries().items():
+        if isinstance(q.oracle, str):
+            continue
         try:
-            out[name] = gen(sf)
+            out[name] = q.oracle(sf)
         except Exception as e:  # noqa: BLE001 — degrade to rows-only
-            import sys
-            import traceback
-
             print(
                 f"[fixture-oracle] {name}: degraded to rows-only check "
                 f"({type(e).__name__}: {e})",
                 file=sys.stderr,
             )
             traceback.print_exc(file=sys.stderr)
-    _FIXTURE_CACHE = dict(out)
-    _FIXTURE_CACHE["_sf"] = sf
     return out
+
+
+def oracle_sql() -> dict[str, str]:
+    """{name: DuckDB SQL} in gate order. Fixture oracles are computed from
+    $SPARK_GRAFT_ORACLE_SF (default: the sf0.01 dir beside SF_DEFAULT, the
+    gate's correctness sf) and cached per sf dir."""
+    global _FIXTURE_CACHE
+    sf = os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF", os.path.join(os.path.dirname(SF_DEFAULT), "sf0.01")
+    )
+    if _FIXTURE_CACHE is None or _FIXTURE_CACHE[0] != sf:
+        _FIXTURE_CACHE = (sf, _fixtures(sf))
+    fixtures = _FIXTURE_CACHE[1]
+    return {
+        name: q.oracle if isinstance(q.oracle, str) else fixtures[name]
+        for name, q in queries().items()
+        if isinstance(q.oracle, str) or name in fixtures
+    }

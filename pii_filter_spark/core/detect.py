@@ -207,7 +207,8 @@ def detect_all(text: str, with_sensitive: bool = True) -> List[Detection]:
 
 
 def substitute(text: str, detections: List[Detection]) -> Tuple[str, List[Dict[str, Any]]]:
-    """Single right-to-left substitution pass with per-type L2R numbering.
+    """Single left-to-right substitution pass with per-type L2R numbering,
+    linear in len(text) (the spans must not overlap).
 
     Returns (scrubbed_text, mappings) where each mapping is
     {placeholder, original_value, type, span_start, span_end} with spans in
@@ -230,11 +231,12 @@ def substitute(text: str, detections: List[Detection]) -> Tuple[str, List[Dict[s
                 "span_end": det["end"],
             }
         )
-    # splice right-to-left so earlier offsets stay valid
-    out = text
-    for mp in reversed(mappings):
-        out = out[: mp["span_start"]] + mp["placeholder"] + out[mp["span_end"]:]
-    return out, mappings
+    parts, pos = [], 0
+    for mp in mappings:
+        parts += (text[pos:mp["span_start"]], mp["placeholder"])
+        pos = mp["span_end"]
+    parts.append(text[pos:])
+    return "".join(parts), mappings
 
 
 def scrub_text(text: str) -> Tuple[str, List[Dict[str, Any]]]:

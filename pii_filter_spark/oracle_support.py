@@ -16,8 +16,11 @@ results replicate Spark's arithmetic exactly: higher-order-function
 aggregates fold left-to-right (NOT numpy pairwise sums) and F.round's
 BigDecimal HALF_UP is matched with decimal.Decimal on repr().
 
-Generators read the parquet with DuckDB (no Spark session) and take
-~100 ms total at sf0.01. oracle_sql() calls them inside a try/except:
+Every public *_sql generator takes exactly sf_dir, with its query's
+parameters as constants in the body (the synthetic image/audio/video
+ones ignore sf_dir), and is attached to its q_* builder in
+__spark_entry__ by @_oracle. Generators read the parquet with DuckDB (no
+Spark session); oracle_sql() calls them inside a try/except:
 if the fixture dir is absent or anything fails, the affected queries
 simply stay rows-only — never a red row from a fixture bug.
 """
@@ -89,24 +92,39 @@ def _values_sql(rows: List[tuple], cols: List[str], types: List[str]) -> str:
     )
 
 
-def _read_docs(sf_dir: str) -> List[Tuple[int, str]]:
+def _read(sf_dir: str, table: str, cols: str) -> list:
+    """Rows of an sf table, ordered by the first of cols."""
     con = duckdb.connect()
     rows = con.execute(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet')"
-        " ORDER BY doc_id"
+        f"SELECT {cols} FROM read_parquet('{sf_dir}/{table}.parquet') ORDER BY 1"
     ).fetchall()
     con.close()
     return rows
+
+
+def _read_docs(sf_dir: str) -> List[Tuple[int, str]]:
+    return _read(sf_dir, "documents", "doc_id, text")
+
+
+def _read_sourced_docs(sf_dir: str) -> List[Tuple[int, str, str]]:
+    return _read(sf_dir, "documents", "doc_id, source, text")
+
+
+_JAVA_WS = "[ \t\n\x0b\f\r]+"  # Java regex \s is ASCII-only; Python's isn't
+
+
+def _spark_trim(t: str) -> str:
+    """Twin of F.trim: strips the space character only."""
+    return t.strip(" ")
+
+
+def _nonblank(docs):
+    """The (doc_id, text) rows a Spark `trim(text) != ''` filter keeps."""
+    return [(d, t) for d, t in docs if t is not None and _spark_trim(t) != ""]
 
 
 def _read_embeddings(sf_dir: str) -> List[Tuple[int, list]]:
-    con = duckdb.connect()
-    rows = con.execute(
-        f"SELECT vec_id, embedding FROM read_parquet('{sf_dir}/embeddings.parquet')"
-        " ORDER BY vec_id"
-    ).fetchall()
-    con.close()
-    return rows
+    return _read(sf_dir, "embeddings", "vec_id, embedding")
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +154,7 @@ def perplexity_sql(sf_dir: str) -> str:
     return _values_sql(rows, ["doc_id", "ppl"], ["BIGINT", "DOUBLE"])
 
 
-def ccnet_bins_sql(sf_dir: str, sample_per_lang: int = 256) -> str:
+def ccnet_bins_sql(sf_dir: str) -> str:
     """Pure twin of operators/ccnet_bins.ccnet_bins: same langid/ppl
     models, same md5(id)-order bounded sample, same discrete tercile
     cutoffs, same <= comparisons."""
@@ -157,7 +175,7 @@ def ccnet_bins_sql(sf_dir: str, sample_per_lang: int = 256) -> str:
     for lg, ids in by_lang.items():
         ids.sort(key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
         cuts[lg] = tercile_cutoffs(
-            sorted(ppl[i] for i in ids[:sample_per_lang])
+            sorted(ppl[i] for i in ids[:256])
         )
 
     rows = []
@@ -188,7 +206,7 @@ def ccnet_normalize_sql(sf_dir: str) -> str:
     )
 
 
-def image_sharpness_sql(n: int = 120, seed: int = 42) -> str:
+def image_sharpness_sql(sf_dir: str) -> str:
     """Pure twin of q_image_sharpness: same synth rows, same box-blur /
     flat-placeholder variants, same numpy metrics and thresholds."""
     from .images import decode_image
@@ -211,7 +229,7 @@ def image_sharpness_sql(n: int = 120, seed: int = 42) -> str:
         keep = lv is not None and lv >= LAPVAR_MIN and ent >= ENTROPY_MIN
         rows.append((iid, lv, ent, keep))
 
-    synth = _synth_rows(n, seed)
+    synth = _synth_rows(120)
     for r in synth:
         emit(r["image_id"], bytes(r["bytes"]))
     for i, r in enumerate(synth):
@@ -251,10 +269,7 @@ def _min_id_components(ids, pairs) -> dict:
     return {i: find(i) for i in ids}
 
 
-def cross_modal_dedup_sql(
-    n: int = 120, seed: int = 42, fresh_seed: int = 777,
-    quality: int = 90, max_hamming: int = 7,
-) -> str:
+def cross_modal_dedup_sql(sf_dir: str) -> str:
     """Pure twin of q_cross_modal_dedup: same input construction, caption
     groups via the same normalize_text digest, image pairs via the
     chunks=8 bucket pairing at hamming <= 7 (pigeonhole-exact: every such
@@ -267,15 +282,15 @@ def cross_modal_dedup_sql(
     from .operators.ccnet_normalize import normalize_text
 
     rows = []  # (image_id, bytes, caption)
-    synth = _synth_rows(n, seed)
-    fresh = _synth_rows(n, fresh_seed)
+    synth = _synth_rows(120)
+    fresh = _synth_rows(120, seed=777)
     for i, r in enumerate(synth):
         rows.append((r["image_id"], bytes(r["bytes"]), r["caption"]))
     for i, r in enumerate(synth):
         if i % 4 == 0:
             try:
                 px = decode_image(bytes(r["bytes"]))
-                data = encode_image(px, "jpeg", quality=quality)
+                data = encode_image(px, "jpeg", quality=90)
             except (ValueError, NotImplementedError):
                 continue
             rid = r["image_id"] + "_re"
@@ -301,7 +316,7 @@ def cross_modal_dedup_sql(
             hashes.append((rid, phash64(decode_image(data))))
         except (ValueError, NotImplementedError):
             continue
-    edges += [(a, b) for a, b, _ in _hamming_pairs(hashes, max_hamming, chunks=8)]
+    edges += [(a, b) for a, b, _ in _hamming_pairs(hashes, 7, chunks=8)]
     comp = _min_id_components([rid for rid, _, _ in rows], edges)
     out = [(rid, comp[rid], rid == comp[rid]) for rid, _, _ in rows]
     return _values_sql(
@@ -311,8 +326,7 @@ def cross_modal_dedup_sql(
     )
 
 
-def webdataset_shards_sql(n: int = 120, seed: int = 42,
-                          num_shards: int = 8) -> str:
+def webdataset_shards_sql(sf_dir: str) -> str:
     """Pure twin of q_webdataset_shards: same shard hash, same in-shard
     order, same ustar codec — md5 equality proves byte-exact archives."""
     import hashlib
@@ -320,13 +334,13 @@ def webdataset_shards_sql(n: int = 120, seed: int = 42,
     from .sources.webdataset import build_shard_tar, shard_of
 
     by_shard: dict = {}
-    for r in _synth_rows(n, seed):
+    for r in _synth_rows(120):
         row = {
             "image_id": r["image_id"], "bytes": bytes(r["bytes"]),
             "caption": r["caption"], "fmt": r["fmt"],
             "w": r["w"], "h": r["h"],
         }
-        by_shard.setdefault(shard_of(r["image_id"], num_shards), []).append(row)
+        by_shard.setdefault(shard_of(r["image_id"], 8), []).append(row)
     rows = []
     for sid in sorted(by_shard):
         data = build_shard_tar(by_shard[sid])
@@ -339,24 +353,67 @@ def webdataset_shards_sql(n: int = 120, seed: int = 42,
     )
 
 
-def minhash_sql(sf_dir: str, num_hashes: int = 32, shingle_k: int = 5,
-                seed: int = 7) -> str:
+def minhash_sql(sf_dir: str) -> str:
     """One row per doc, one scalar column per hash (h00..h31) — mirrors
     q_minhash_signatures' fan-out-free projection."""
     from .operators.dedup import _minhash_params, minhash_sig
 
-    a, b = _minhash_params(num_hashes, seed)
-    rows = [
-        (d, *minhash_sig(t, a, b, num_hashes, shingle_k))
-        for d, t in _read_docs(sf_dir)
-    ]
-    cols = ["doc_id"] + [f"h{i:02d}" for i in range(num_hashes)]
-    return _values_sql(rows, cols, ["BIGINT"] * (num_hashes + 1))
+    a, b = _minhash_params(32, 7)
+    rows = [(d, *minhash_sig(t, a, b, 32, 5)) for d, t in _read_docs(sf_dir)]
+    cols = ["doc_id"] + [f"h{i:02d}" for i in range(32)]
+    return _values_sql(rows, cols, ["BIGINT"] * 33)
 
 
 # ---------------------------------------------------------------------------
 # embedding oracles (SRP-LSH / IVF ANN) — numpy math identical to the UDFs
 # ---------------------------------------------------------------------------
+
+def _emb_matrix(sf_dir: str):
+    """([vec_id], float64 matrix) of the embeddings table, vec_id order."""
+    emb = _read_embeddings(sf_dir)
+    ids = [int(r[0]) for r in emb]
+    return ids, np.stack([np.asarray(r[1], dtype=np.float64) for r in emb])
+
+
+def _emb_with_neardups(sf_dir: str):
+    """The planted input of q_semdedup / q_embedding_near_pairs_lsh
+    (__spark_entry__._emb_with_neardups): every embedding plus a copy of
+    each vec_id % 10 == 0 with +0.5 on component 0 under id + 1_000_000.
+    Returns ([vec_id], [float64 vector])."""
+    ids, mat = _emb_matrix(sf_dir)
+    all_ids, all_vecs = list(ids), list(mat)
+    for vid, v in zip(ids, mat):
+        if vid % 10 == 0:
+            v = v.copy()
+            v[0] += 0.5
+            all_ids.append(vid + 1_000_000)
+            all_vecs.append(v)
+    return all_ids, all_vecs
+
+
+def _train_centroids(ids, vecs) -> np.ndarray:
+    """train_ivf_centroids(k=8, iters=8)'s exact math on the same
+    vec_id-ordered first-2048 sample (numpy only, same seed path)."""
+    x = np.stack(vecs)[np.argsort(ids, kind="stable")][:2048]
+    x = x / np.linalg.norm(x, axis=1, keepdims=True)
+    rng = np.random.default_rng(17)
+    cent = x[rng.choice(len(x), size=min(8, len(x)), replace=False)]
+    for _ in range(8):
+        assign = np.argmax(x @ cent.T, axis=1)
+        for c in range(len(cent)):
+            members = x[assign == c]
+            if len(members):
+                m = members.mean(axis=0)
+                cent[c] = m / (np.linalg.norm(m) or 1.0)
+    return cent
+
+
+def _nearest_centroid(vecs, cent) -> np.ndarray:
+    """Index of each vector's nearest centroid by cosine."""
+    mat = np.stack(vecs)
+    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    return np.argmax(unit @ cent.T, axis=1)
+
 
 def _srp_sigs(mat: np.ndarray, planes: int, seed: int) -> np.ndarray:
     rng = np.random.default_rng(seed)
@@ -365,49 +422,31 @@ def _srp_sigs(mat: np.ndarray, planes: int, seed: int) -> np.ndarray:
     return (bits.astype(np.int64) << np.arange(planes, dtype=np.int64)).sum(axis=1)
 
 
-def ann_lsh_sql(sf_dir: str, k: int = 10, planes: int = 16, max_flip: int = 6,
-                seed: int = 31) -> str:
-    emb = _read_embeddings(sf_dir)
-    ids = np.array([r[0] for r in emb], dtype=np.int64)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in emb])
-    query = list(mat[ids.tolist().index(0)])
-    sigs = _srp_sigs(mat, planes, seed)
-    qsig = _srp_sigs(np.asarray([query]), planes, seed)[0]
-    qnorm = float(np.sqrt(np.dot(query, query)))
-    cand = [
-        i for i in range(len(ids))
-        if bin(int(sigs[i]) ^ int(qsig)).count("1") <= max_flip
-    ]
-    # order on the UNROUNDED cosine (Spark's orderBy runs before the
-    # final round(...) projection), round only for emission
+def _top10_cosine(ids, mat, cand) -> str:
+    """vec_id/cos_sim of the 10 candidate rows nearest vec_id 0, ordered
+    on the UNROUNDED fold cosine (Spark's orderBy runs before the final
+    round(...) projection), rounded only for emission."""
+    query = list(mat[ids.index(0)])
+    qnorm = float(np.linalg.norm(query))
     scored = [
-        (int(ids[i]), _fold_dot(mat[i], query) / (_fold_norm(mat[i]) * qnorm))
+        (ids[i], _fold_dot(mat[i], query) / (_fold_norm(mat[i]) * qnorm))
         for i in cand
     ]
     scored.sort(key=lambda r: (-r[1], r[0]))
-    rows = [(i, _round_like_spark(c)) for i, c in scored[:k]]
+    rows = [(i, _round_like_spark(c)) for i, c in scored[:10]]
     return _values_sql(rows, ["vec_id", "cos_sim"], ["BIGINT", "DOUBLE"])
 
 
-def _twin_centroids(sf_dir: str, kc: int = 8, iters: int = 8):
-    """train_ivf_centroids' exact math on the same vec_id-ordered
-    sample (numpy only, same seed path). Returns (centroids, [(id,
-    vector), ...])."""
-    emb = _read_embeddings(sf_dir)
-    ids = np.array([r[0] for r in emb], dtype=np.int64)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in emb])
-    x = mat[np.argsort(ids, kind="stable")][:2048]
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)
-    rng = np.random.default_rng(17)
-    cent = x[rng.choice(len(x), size=min(kc, len(x)), replace=False)]
-    for _ in range(iters):
-        assign = np.argmax(x @ cent.T, axis=1)
-        for c in range(len(cent)):
-            members = x[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cent[c] = m / (np.linalg.norm(m) or 1.0)
-    return cent, [(int(i), v) for i, v in zip(ids, mat)]
+def ann_lsh_sql(sf_dir: str) -> str:
+    """q_ann_lsh: 16-plane SRP candidates within 6 flipped bits of the
+    query's signature."""
+    ids, mat = _emb_matrix(sf_dir)
+    sigs = _srp_sigs(mat, 16, 31)
+    qsig = int(_srp_sigs(mat[[ids.index(0)]], 16, 31)[0])
+    cand = [
+        i for i in range(len(ids)) if bin(int(sigs[i]) ^ qsig).count("1") <= 6
+    ]
+    return _top10_cosine(ids, mat, cand)
 
 
 def embedding_prototypes_sql(sf_dir: str) -> str:
@@ -416,8 +455,10 @@ def embedding_prototypes_sql(sf_dir: str) -> str:
     codebook."""
     from .operators.prototypes import prototypicality_rows
 
-    cent, vecs = _twin_centroids(sf_dir)
-    rows = prototypicality_rows(vecs, cent, drop_frac=0.1)
+    ids, mat = _emb_matrix(sf_dir)
+    rows = prototypicality_rows(
+        list(zip(ids, mat)), _train_centroids(ids, mat), drop_frac=0.1
+    )
     return _values_sql(
         rows,
         ["vec_id", "ivf_cluster", "proto_micro", "is_prototype"],
@@ -425,50 +466,26 @@ def embedding_prototypes_sql(sf_dir: str) -> str:
     )
 
 
-def ann_ivf_sql(sf_dir: str, k: int = 10, kc: int = 8, iters: int = 8,
-                nprobe: int = 4) -> str:
-    # train_ivf_centroids takes a Spark df; replicate its exact math on
-    # the same vec_id-ordered sample (numpy only, same seed path).
-    emb = _read_embeddings(sf_dir)
-    ids = np.array([r[0] for r in emb], dtype=np.int64)
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in emb])
-    x = mat[np.argsort(ids, kind="stable")][:2048]
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)
-    rng = np.random.default_rng(17)
-    cent = x[rng.choice(len(x), size=min(kc, len(x)), replace=False)]
-    for _ in range(iters):
-        assign = np.argmax(x @ cent.T, axis=1)
-        for c in range(len(cent)):
-            members = x[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cent[c] = m / (np.linalg.norm(m) or 1.0)
-    query = list(mat[ids.tolist().index(0)])
-    q = np.asarray(query) / np.linalg.norm(query)
-    probes = set(np.argsort(-(cent @ q))[:nprobe].tolist())
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    assign_all = np.argmax(unit @ cent.T, axis=1)
-    qnorm = float(np.linalg.norm(query))
-    scored = [
-        (int(ids[i]), _fold_dot(mat[i], query) / (_fold_norm(mat[i]) * qnorm))
-        for i in range(len(ids))
-        if int(assign_all[i]) in probes
-    ]
-    scored.sort(key=lambda r: (-r[1], r[0]))
-    rows = [(i, _round_like_spark(c)) for i, c in scored[:k]]
-    return _values_sql(rows, ["vec_id", "cos_sim"], ["BIGINT", "DOUBLE"])
+def ann_ivf_sql(sf_dir: str) -> str:
+    """q_ann_ivf: the rows of the 4 centroids nearest the query."""
+    ids, mat = _emb_matrix(sf_dir)
+    cent = _train_centroids(ids, mat)
+    q = mat[ids.index(0)] / np.linalg.norm(mat[ids.index(0)])
+    probes = set(np.argsort(-(cent @ q))[:4].tolist())
+    assign = _nearest_centroid(mat, cent)
+    return _top10_cosine(
+        ids, mat, [i for i in range(len(ids)) if int(assign[i]) in probes]
+    )
 
 
-def ann_batch_sql(sf_dir: str, n_queries: int = 5, k: int = 5) -> str:
+def ann_batch_sql(sf_dir: str) -> str:
     """q_ann_batch expected rows: loop-accumulated cosines (the same
     component-order arithmetic the partition UDF uses — deliberately not
-    BLAS matmul) for the first n_queries embedding vectors, top-k per
-    query with (-cos, vec_id) ordering."""
-    emb = _read_embeddings(sf_dir)
-    ids = [int(r[0]) for r in emb]
-    mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in emb])
-    order = np.argsort(ids, kind="stable")
-    qm = mat[order[:n_queries]]
+    BLAS matmul) for the first 5 embedding vectors, top-5 per query with
+    (-cos, vec_id) ordering."""
+    ids, mat = _emb_matrix(sf_dir)
+    n_queries = 5
+    qm = mat[np.argsort(ids, kind="stable")[:n_queries]]
     qn = np.sqrt((qm * qm).sum(axis=1))
     dim = mat.shape[1]
     acc = np.zeros((len(ids), n_queries))
@@ -483,7 +500,7 @@ def ann_batch_sql(sf_dir: str, n_queries: int = 5, k: int = 5) -> str:
         scored = sorted(
             ((ids[i], cos[i, qi]) for i in range(len(ids))),
             key=lambda t: (-t[1], t[0]),
-        )[:k]
+        )[:5]
         for rank, (vid, cs) in enumerate(scored, 1):
             rows.append((qi, vid, _round_like_spark(cs), rank))
     return _values_sql(
@@ -492,31 +509,25 @@ def ann_batch_sql(sf_dir: str, n_queries: int = 5, k: int = 5) -> str:
     )
 
 
-def emb_near_pairs_lsh_sql(sf_dir: str, threshold: float = 0.85,
-                           planes: int = 64, chunks: int = 8,
-                           seed: int = 31) -> str:
-    emb = _read_embeddings(sf_dir)
-    ids = [int(r[0]) for r in emb]
-    vecs = [np.asarray(r[1], dtype=np.float64) for r in emb]
-    # _emb_with_neardups: copies of vec_id % 10 == 0 with +0.5 on comp 0
-    all_ids, all_vecs = list(ids), list(vecs)
-    for i, vid in enumerate(ids):
-        if vid % 10 == 0:
-            v = vecs[i].copy()
-            v[0] += 0.5
-            all_ids.append(vid + 1_000_000)
-            all_vecs.append(v)
-    sigs = _srp_sigs(np.stack(all_vecs), planes, seed)
-    keys = _chunk_keys(chunks, bits=planes)
+def _cosine_pairs(ids, vecs, tags, keys):
+    """(id_a, id_b, cos) with fold cosine >= 0.85 among the nonzero
+    vectors that share a bucket in keys(tag)."""
     rows = [
-        (vid, (v, nrm, int(sig)))
-        for vid, v, nrm, sig in zip(
-            all_ids, all_vecs, map(_fold_norm, all_vecs), sigs
-        )
+        (vid, (v, nrm, int(tag)))
+        for vid, v, nrm, tag in zip(ids, vecs, map(_fold_norm, vecs), tags)
         if nrm > 0
     ]
-    pairs = _banded_pairs(
-        rows, lambda r: keys(r[2]), _fold_cos, lambda cos: cos >= threshold
+    return _banded_pairs(
+        rows, lambda r: keys(r[2]), _fold_cos, lambda cos: cos >= 0.85
+    )
+
+
+def emb_near_pairs_lsh_sql(sf_dir: str) -> str:
+    """q_embedding_near_pairs_lsh: 64-plane SRP signatures bucketed by
+    8 chunks of 8 bits."""
+    ids, vecs = _emb_with_neardups(sf_dir)
+    pairs = _cosine_pairs(
+        ids, vecs, _srp_sigs(np.stack(vecs), 64, 31), _chunk_keys(8)
     )
     return _values_sql(
         [(a, b, _round_like_spark(c)) for a, b, c in pairs],
@@ -524,17 +535,36 @@ def emb_near_pairs_lsh_sql(sf_dir: str, threshold: float = 0.85,
     )
 
 
-def quality_full_sql(sf_dir: str, pii_clauses: Sequence[str]) -> str:
+def semdedup_sql(sf_dir: str) -> str:
+    """q_semdedup expected rows: re-derives the whole SemDeDup pipeline
+    executor-free — centroid training (train_ivf_centroids' exact numpy
+    math), nearest-centroid assignment, within-cluster fold-order
+    cosines (the HOF/vectorized bit-parity contract), union-find
+    components, min-id survivor."""
+    ids, vecs = _emb_with_neardups(sf_dir)
+    assign = _nearest_centroid(vecs, _train_centroids(ids, vecs))
+    pairs = _cosine_pairs(ids, vecs, assign, lambda c: [c])
+    comp = _min_id_components(ids, [(a, b) for a, b, _ in pairs])
+    rows = [(vid, int(c), comp[vid] == vid) for vid, c in zip(ids, assign)]
+    return _values_sql(
+        rows, ["vec_id", "ivf_cluster", "keep"],
+        ["BIGINT", "BIGINT", "BOOLEAN"],
+    )
+
+
+def quality_full_sql(sf_dir: str) -> str:
     """q_quality_full expected output computed in plain Python through the
     same core functions the caption-stage UDF calls (langid, perplexity,
     core/quality.drop_reasons)."""
+    from __spark_entry__ import _PII_CLAUSES
+
     from .core.langid import detect_language
     from .core.perplexity import perplexity
     from .core.quality import drop_reasons
 
     rows = []
     for d, t in _read_docs(sf_dir):
-        caption = t + pii_clauses[d % len(pii_clauses)]
+        caption = t + _PII_CLAUSES[d % len(_PII_CLAUSES)]
         lang = detect_language(caption)
         ppl = perplexity(caption)
         keep = not drop_reasons(caption, lang=lang, ppl=ppl)
@@ -580,10 +610,10 @@ def _banded_pairs(rows, keys, score, keep):
     return [(a, b, sc) for (a, b), sc in sorted(pairs.items())]
 
 
-def _chunk_keys(chunks: int, bits: int = 64):
+def _chunk_keys(chunks: int):
     """keys(hash): the chunk index and value of each of `chunks` equal
-    chunks of a `bits`-bit hash (the banded operator's bucket keys)."""
-    width = bits // chunks
+    chunks of a 64-bit hash (the banded operator's bucket keys)."""
+    width = 64 // chunks
     mask = (1 << width) - 1
     return lambda h: [(c, (h >> (width * c)) & mask) for c in range(chunks)]
 
@@ -604,58 +634,48 @@ def _fold_cos(a, b) -> float:
     return _fold_dot(a[0], b[0]) / (a[1] * b[1])
 
 
-def _minhash_pairs(sf_dir: str, num_hashes: int = 64, bands: int = 16,
-                   shingle_k: int = 5, threshold: float = 0.5,
-                   seed: int = 7):
-    """(pairs dict, all doc ids) — shared by the pairs and cluster oracles."""
+def _minhash_rows(docs):
+    """(doc_id, signature) under the 64-hash minhash (shingle 5, seed 7)
+    that q_minhash_lsh_pairs and q_lsh_bucket_stats band."""
     from .operators.dedup import _minhash_params, minhash_sig
 
-    a, b = _minhash_params(num_hashes, seed)
-    docs = list(_read_docs(sf_dir))
-    # q_minhash_lsh_pairs unions perturbed copies; the .where runs AFTER
-    # the doc_id rename, so the filter applies to the SHIFTED id
-    all_docs = docs + [
+    a, b = _minhash_params(64, 7)
+    return [(d, minhash_sig(t, a, b, 64, 5)) for d, t in docs]
+
+
+def _minhash_band_keys(sig):
+    """16 bands of 4 rows: (band, slice) keys."""
+    return [(bnd, tuple(sig[4 * bnd:4 * bnd + 4])) for bnd in range(16)]
+
+
+def _minhash_pairs(sf_dir: str):
+    """(pairs {(id_a, id_b): est_jaccard}, [(doc_id, text)]) over the
+    planted input of q_minhash_lsh_pairs / q_dedup_clusters /
+    q_dedup_best: the docs plus a perturbed copy of each doc whose
+    SHIFTED id d + 1_000_000 is divisible by 7 (Spark's .where runs
+    after the rename), minus blank texts."""
+    docs = _read_docs(sf_dir)
+    docs = _nonblank(docs + [
         (d + 1_000_000, t + " extra trailing tokens here")
         for d, t in docs
         if (d + 1_000_000) % 7 == 0
-    ]
-    # Spark drops rows with trim(text) == '' BEFORE the signature UDF
-    # (space-trim, mirroring F.trim); mirror exactly.
-    all_docs = [
-        (d, t) for d, t in all_docs
-        if t is not None and t.strip(" ") != ""
-    ]
-    rows = [(d, minhash_sig(t, a, b, num_hashes, shingle_k)) for d, t in all_docs]
-    rpb = num_hashes // bands
+    ])
     pairs = _banded_pairs(
-        rows,
-        lambda s: [(bnd, tuple(s[bnd * rpb:(bnd + 1) * rpb]))
-                   for bnd in range(bands)],
-        lambda s1, s2: sum(1 for p, q in zip(s1, s2) if p == q) / num_hashes,
-        lambda est: est >= threshold,
+        _minhash_rows(docs),
+        _minhash_band_keys,
+        lambda s1, s2: sum(1 for p, q in zip(s1, s2) if p == q) / 64,
+        lambda est: est >= 0.5,
     )
-    return (
-        {(x, y): _round_like_spark(e) for x, y, e in pairs},
-        [d for d, _ in all_docs],
-    )
+    return {(x, y): _round_like_spark(e) for x, y, e in pairs}, docs
 
 
-def lsh_bucket_stats_sql(sf_dir: str, num_hashes: int = 64, bands: int = 16,
-                         shingle_k: int = 5, seed: int = 7) -> str:
+def lsh_bucket_stats_sql(sf_dir: str) -> str:
     """Bucket-size histogram of the minhash banding over the plain
     documents table — banding replicated by slice equality (equal slices
     <=> equal xxhash64 band keys, modulo ~2^-64 collisions)."""
-    from .operators.dedup import _minhash_params, minhash_sig
-
-    a, b = _minhash_params(num_hashes, seed)
-    rpb = num_hashes // bands
     buckets: dict = {}
-    for d, t in _read_docs(sf_dir):
-        if t is None or t.strip(" ") == "":  # mirrors Spark's trim filter
-            continue
-        s = minhash_sig(t, a, b, num_hashes, shingle_k)
-        for bnd in range(bands):
-            key = (bnd, tuple(s[bnd * rpb:(bnd + 1) * rpb]))
+    for _, s in _minhash_rows(_nonblank(_read_docs(sf_dir))):
+        for key in _minhash_band_keys(s):
             buckets[key] = buckets.get(key, 0) + 1
     hist: dict = {}
     for size in buckets.values():
@@ -679,9 +699,10 @@ def minhash_lsh_pairs_sql(sf_dir: str) -> str:
 def dedup_clusters_sql(sf_dir: str) -> str:
     """Union-find over the replicated minhash pairs → cluster labels
     (see _min_id_components)."""
-    pairs, all_ids = _minhash_pairs(sf_dir)
-    comp = _min_id_components(all_ids, pairs)
-    rows = sorted((i, comp[i], i == comp[i]) for i in all_ids)
+    pairs, docs = _minhash_pairs(sf_dir)
+    ids = [d for d, _ in docs]
+    comp = _min_id_components(ids, pairs)
+    rows = sorted((i, comp[i], i == comp[i]) for i in ids)
     return _values_sql(
         rows, ["doc_id", "cluster_id", "is_survivor"],
         ["BIGINT", "BIGINT", "BOOLEAN"],
@@ -691,22 +712,16 @@ def dedup_clusters_sql(sf_dir: str) -> str:
 def dedup_best_sql(sf_dir: str) -> str:
     """q_dedup_best expected output: union-find closure of the same pair
     graph, then argmax(len(text)) survivor per cluster (min-id ties)."""
-    pairs, all_ids = _minhash_pairs(sf_dir)
-    docs = list(_read_docs(sf_dir))
-    all_docs = docs + [
-        (d + 1_000_000, t + " extra trailing tokens here")
-        for d, t in docs
-        if (d + 1_000_000) % 7 == 0
-    ]
-    length = {d: len(t or "") for d, t in all_docs}
-    comp = _min_id_components(all_ids, pairs)
+    pairs, docs = _minhash_pairs(sf_dir)
+    length = {d: len(t) for d, t in docs}
+    comp = _min_id_components(list(length), pairs)
     winners: dict = {}
-    for i in all_ids:
+    for i in length:
         cur = winners.get(comp[i])
         if cur is None or (length[i], -i) > (length[cur], -cur):
             winners[comp[i]] = i
     rows = sorted(
-        (i, comp[i], length[i], winners[comp[i]] == i) for i in all_ids
+        (i, comp[i], length[i], winners[comp[i]] == i) for i in length
     )
     return _values_sql(
         rows,
@@ -715,21 +730,17 @@ def dedup_best_sql(sf_dir: str) -> str:
     )
 
 
-def simhash_near_pairs_sql(sf_dir: str, max_hamming: int = 6) -> str:
+def simhash_near_pairs_sql(sf_dir: str) -> str:
     from .operators.dedup import simhash64
 
-    docs = list(_read_docs(sf_dir))
-    all_docs = docs + [
+    docs = _read_docs(sf_dir)
+    docs += [
         (d + 1_000_000, t + " zz")
         for d, t in docs
         if (d + 1_000_000) % 11 == 0
     ]
-    all_docs = [
-        (d, t) for d, t in all_docs
-        if t is not None and t.strip(" ") != ""  # mirrors Spark's trim filter
-    ]
-    rows = [(d, simhash64(t)) for d, t in all_docs]
-    return _values_sql(_hamming_pairs(rows, max_hamming, chunks=4),
+    rows = [(d, simhash64(t)) for d, t in _nonblank(docs)]
+    return _values_sql(_hamming_pairs(rows, 6, chunks=4),
                        ["id_a", "id_b", "hamming"],
                        ["BIGINT", "BIGINT", "INT"])
 
@@ -746,13 +757,13 @@ def _synth_rows(n: int, seed: int = 42):
     return [gen_row(seed, i) for i in range(n)]
 
 
-def image_verify_sql(n: int = 300, seed: int = 42) -> str:
+def image_verify_sql(sf_dir: str) -> str:
     from .images import decode_image, psnr
     from .images.codecs import encode_image
     from .sources.synth import LOSSY_QUALITY
 
     rows = []
-    for r in _synth_rows(n, seed):
+    for r in _synth_rows(300):
         ok = dims = False
         mean = q = float("nan")
         try:
@@ -778,7 +789,7 @@ def image_verify_sql(n: int = 300, seed: int = 42) -> str:
     )
 
 
-def image_resize_sql(n: int = 200, seed: int = 42) -> str:
+def image_resize_sql(sf_dir: str) -> str:
     """q_image_resize_export expected output: bucket dims + re-encoded
     length/md5 through the same pure resize_export_row (decode -> exact
     area resample -> real JPEG encode)."""
@@ -788,7 +799,7 @@ def image_resize_sql(n: int = 200, seed: int = 42) -> str:
     from __spark_entry__ import _RESIZE_BUCKETS
 
     rows = []
-    for r in _synth_rows(n, seed):
+    for r in _synth_rows(200):
         bw, bh, ln, md5, _ = resize_export_row(
             bytes(r["bytes"]), _RESIZE_BUCKETS, LOSSY_QUALITY
         )
@@ -800,11 +811,11 @@ def image_resize_sql(n: int = 200, seed: int = 42) -> str:
     )
 
 
-def image_features_sql(n: int = 200, seed: int = 42) -> str:
+def image_features_sql(sf_dir: str) -> str:
     from .images import decode_image
 
     rows = []
-    for r in _synth_rows(n, seed):
+    for r in _synth_rows(200):
         try:
             px = decode_image(bytes(r["bytes"])).astype(np.float64)
         except (ValueError, NotImplementedError):
@@ -823,14 +834,14 @@ def image_features_sql(n: int = 200, seed: int = 42) -> str:
     )
 
 
-def clip_alignment_sql(n: int = 300, seed: int = 42) -> str:
+def clip_alignment_sql(sf_dir: str) -> str:
     """q_clip_alignment expected output via operators.alignment's
     pure-Python row twin (same decode, same stand-in encoders, same
     left-to-right fold dot, same HALF_UP rounding)."""
     from .operators.alignment import STUB_THRESHOLD, alignment_row
 
     rows = []
-    for r in _synth_rows(n, seed):
+    for r in _synth_rows(300):
         image_id, sim, keep = alignment_row(r, threshold=STUB_THRESHOLD)
         rows.append(
             (image_id, None if sim is None else _round_like_spark(sim), keep)
@@ -842,7 +853,7 @@ def clip_alignment_sql(n: int = 300, seed: int = 42) -> str:
     )
 
 
-def image_metadata_sql(n: int = 300, seed: int = 42) -> str:
+def image_metadata_sql(sf_dir: str) -> str:
     """Re-derive the image_metadata_scrub query end-to-end: same synth
     rows, same deterministic injection, same scrub_row pure function —
     so the value hash checks chunk walking, text extraction, the PII
@@ -850,7 +861,7 @@ def image_metadata_sql(n: int = 300, seed: int = 42) -> str:
     from .operators.image_metadata import inject_fixture_metadata, scrub_row
 
     rows = []
-    for i, r in enumerate(_synth_rows(n, seed)):
+    for i, r in enumerate(_synth_rows(300)):
         data = inject_fixture_metadata(bytes(r["bytes"]), i)
         rows.append((r["image_id"], *scrub_row(data)))
     return _values_sql(
@@ -869,13 +880,7 @@ def corpus_lm_sql(sf_dir: str) -> str:
     quantization)."""
     from .operators.corpus_lm import corpus_lm_rows
 
-    con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') "
-        "ORDER BY doc_id"
-    ).fetchall()
-    con.close()
-    rows = corpus_lm_rows(docs)
+    rows = corpus_lm_rows(_read_docs(sf_dir))
     return _values_sql(
         rows,
         ["doc_id", "n_grams", "nll_micronats"],
@@ -900,14 +905,10 @@ def refinedweb_sql(sf_dir: str) -> str:
     from .operators.line_clean import line_clean_rows
 
     con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT doc_id, text FROM read_parquet('{sf_dir}/documents.parquet') "
-        "ORDER BY doc_id"
-    ).fetchall()
     con.execute("CREATE TABLE pages (doc_id BIGINT, html VARCHAR)")
     con.executemany(
         "INSERT INTO pages VALUES (?, ?)",
-        [(d, synth_page_py(d, t or "")) for d, t in docs],
+        [(d, synth_page_py(d, t or "")) for d, t in _read_docs(sf_dir)],
     )
     extracted = con.execute(
         f"SELECT doc_id, {strip_html_sql('html')} FROM pages ORDER BY doc_id"
@@ -948,12 +949,7 @@ def moore_lewis_sql(sf_dir: str) -> str:
     slice."""
     from .operators.corpus_lm import moore_lewis_rows
 
-    con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT doc_id, source, text "
-        f"FROM read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    con.close()
+    docs = _read_sourced_docs(sf_dir)
     texts = [(d, t) for d, _, t in docs]
     in_ids = {d for d, s, _ in docs if s == "src0"}
     rows = moore_lewis_rows(texts, in_ids)
@@ -964,7 +960,7 @@ def moore_lewis_sql(sf_dir: str) -> str:
     )
 
 
-def jpeg_exif_scrub_sql(n: int = 300, seed: int = 42) -> str:
+def jpeg_exif_scrub_sql(sf_dir: str) -> str:
     """Re-derive the jpeg_exif_scrub query end-to-end: same synth rows,
     same deterministic EXIF/COM/GPS injection, same scrub_jpeg_row pure
     function — the value hash checks marker walking, TIFF IFD parsing,
@@ -976,7 +972,7 @@ def jpeg_exif_scrub_sql(n: int = 300, seed: int = 42) -> str:
     )
 
     rows = []
-    for i, r in enumerate(_synth_rows(n, seed)):
+    for i, r in enumerate(_synth_rows(300)):
         data = inject_jpeg_fixture_metadata(bytes(r["bytes"]), i)
         rows.append((r["image_id"], *scrub_jpeg_row(data)))
     return _values_sql(
@@ -988,14 +984,14 @@ def jpeg_exif_scrub_sql(n: int = 300, seed: int = 42) -> str:
     )
 
 
-def image_quality_sql(n: int = 400, seed: int = 42) -> str:
+def image_quality_sql(sf_dir: str) -> str:
     from .operators.image_quality import image_quality_row
 
     rows = [
         image_quality_row(
             r["image_id"], r["w"], r["h"], r["fmt"], len(r["bytes"])
         )
-        for r in _synth_rows(n, seed)
+        for r in _synth_rows(400)
     ]
     return _values_sql(
         rows,
@@ -1006,13 +1002,13 @@ def image_quality_sql(n: int = 400, seed: int = 42) -> str:
     )
 
 
-def export_prep_sql(n: int = 400, seed: int = 42, num_shards: int = 8) -> str:
+def export_prep_sql(sf_dir: str) -> str:
     """Fixture oracle for export_prep: the pure-Python twin recomputes
     the quantized log-aspect argmin, the md5 shard hash, and the
     (md5, id)-ordered position for the same synthetic corpus."""
     from .operators.export_prep import export_prep_rows
 
-    rows = export_prep_rows(_synth_rows(n, seed), num_shards=num_shards)
+    rows = export_prep_rows(_synth_rows(400), num_shards=8)
     return _values_sql(
         rows,
         ["image_id", "w", "h", "bucket_idx", "bucket_w", "bucket_h",
@@ -1022,16 +1018,15 @@ def export_prep_sql(n: int = 400, seed: int = 42, num_shards: int = 8) -> str:
     )
 
 
-def video_frame_sample_sql(n: int = 100, seed: int = 42,
-                           every_n: int = 2) -> str:
+def video_frame_sample_sql(sf_dir: str) -> str:
     from .video.avi import decode_avi_mjpeg, encode_avi_mjpeg, synth_clip
 
     rows = []
-    for i in range(n):
+    for i in range(100):
         clip = encode_avi_mjpeg(synth_clip(i), fps=10, quality=90)
         _, frames = decode_avi_mjpeg(clip)
         for idx, px in enumerate(frames):
-            if idx % every_n:
+            if idx % 2:
                 continue
             rows.append((
                 f"vid_{i:06d}", idx, px.shape[1], px.shape[0],
@@ -1044,11 +1039,11 @@ def video_frame_sample_sql(n: int = 100, seed: int = 42,
     )
 
 
-def audio_features_sql(n: int = 150, seed: int = 42) -> str:
+def audio_features_sql(sf_dir: str) -> str:
     from .audio.wav import decode_wav, encode_wav, synth_tone
 
     rows = []
-    for i in range(n):
+    for i in range(150):
         sr, pcm = decode_wav(encode_wav(synth_tone(i)))
         ns = len(pcm)
         zc = float(np.mean(np.abs(np.diff(np.signbit(pcm))))) if ns > 1 else 0.0
@@ -1063,23 +1058,21 @@ def audio_features_sql(n: int = 150, seed: int = 42) -> str:
     )
 
 
-def phash_near_pairs_sql(n: int = 400, seed: int = 42,
-                         max_hamming: int = 3) -> str:
+def phash_near_pairs_sql(sf_dir: str) -> str:
     """q_phash_near_pairs expected pairs: synth rows ∪ 2-bit-flipped
     copies of idx%5==0, banded into 4x16-bit chunks, hamming verify."""
-    rows = [(r["image_id"], r["phash"]) for r in _synth_rows(n, seed)]
+    rows = [(r["image_id"], r["phash"]) for r in _synth_rows(400)]
     rows += [
         (rid + "_re", ph ^ 5)
         for i, (rid, ph) in enumerate(list(rows))
         if i % 5 == 0
     ]
-    return _values_sql(_hamming_pairs(rows, max_hamming, chunks=4),
+    return _values_sql(_hamming_pairs(rows, 3, chunks=4),
                        ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
-def audio_near_pairs_sql(n: int = 200, max_hamming: int = 7,
-                         chunks: int = 8) -> str:
+def audio_near_pairs_sql(sf_dir: str) -> str:
     """q_audio_near_pairs expected pairs: same synth/encode/decode/
     fingerprint chain, then the chunks x (64/chunks)-bit bucket pairing
     the banded operator performs."""
@@ -1087,7 +1080,7 @@ def audio_near_pairs_sql(n: int = 200, max_hamming: int = 7,
     from .audio.wav import decode_wav, encode_wav, synth_tone
 
     rows = []
-    for i in range(n):
+    for i in range(200):
         x = synth_tone(i)
         sr, dec = decode_wav(encode_wav(x))
         rows.append((f"aud_{i:06d}", audio_fp64(dec, sr)))
@@ -1098,20 +1091,19 @@ def audio_near_pairs_sql(n: int = 200, max_hamming: int = 7,
             )
             sr2, dec2 = decode_wav(encode_wav(noisy))
             rows.append((f"aud_{i:06d}_re", audio_fp64(dec2, sr2)))
-    return _values_sql(_hamming_pairs(rows, max_hamming, chunks),
+    return _values_sql(_hamming_pairs(rows, 7, chunks=8),
                        ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
-def video_near_dup_sql(n: int = 100, max_hamming: int = 7,
-                       chunks: int = 8) -> str:
+def video_near_dup_sql(sf_dir: str) -> str:
     """q_video_near_dup expected pairs: same synth/encode/decode/
     middle-frame-pHash chain, same chunk-bucket pairing."""
     from .images.phash import phash64
     from .video.avi import decode_avi_mjpeg, encode_avi_mjpeg, synth_clip
 
     rows = []
-    for i in range(n):
+    for i in range(100):
         frames = synth_clip(i)
 
         def fp(quality):
@@ -1122,17 +1114,12 @@ def video_near_dup_sql(n: int = 100, max_hamming: int = 7,
         rows.append((f"vid_{i:06d}", fp(90)))
         if i % 4 == 0:
             rows.append((f"vid_{i:06d}_re", fp(70)))
-    return _values_sql(_hamming_pairs(rows, max_hamming, chunks),
+    return _values_sql(_hamming_pairs(rows, 7, chunks=8),
                        ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
-def pixel_phash_pairs_sql(
-    n: int = 120,
-    seed: int = 42,
-    quality: int = 90,
-    max_hamming: int = 16,
-) -> str:
+def pixel_phash_pairs_sql(sf_dir: str) -> str:
     """q_pixel_phash_pairs expected pairs: pHash from decoded pixels of
     the synth rows ∪ q90 re-encodes of idx%4==0, then the SAME 8x8-bit
     chunk-bucket pairing the banded operator performs."""
@@ -1141,18 +1128,18 @@ def pixel_phash_pairs_sql(
     from .images.phash import phash64
 
     rows = []
-    for i, r in enumerate(_synth_rows(n, seed)):
+    for i, r in enumerate(_synth_rows(120)):
         px = decode_image(bytes(r["bytes"]))
         rows.append((r["image_id"], phash64(px)))
         if i % 4 == 0:
-            vpx = decode_image(encode_image(px, "jpeg", quality=quality))
+            vpx = decode_image(encode_image(px, "jpeg", quality=90))
             rows.append((r["image_id"] + "_re", phash64(vpx)))
-    return _values_sql(_hamming_pairs(rows, max_hamming, chunks=8),
+    return _values_sql(_hamming_pairs(rows, 16, chunks=8),
                        ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
-def multimodal_curation_sql(n: int = 400, seed: int = 42) -> str:
+def multimodal_curation_sql(sf_dir: str) -> str:
     """q_multimodal_curation expected output: per-row composition of the
     SAME pure twins (image_quality_row keep, alignment fold-dot, pHash)
     plus a dict min-id survivor over synth rows ∪ 'zz_'-prefixed exact
@@ -1163,7 +1150,7 @@ def multimodal_curation_sql(n: int = 400, seed: int = 42) -> str:
     from .operators.image_quality import image_quality_row
 
     recs = []
-    for i, r in enumerate(_synth_rows(n, seed)):
+    for i, r in enumerate(_synth_rows(400)):
         recs.append((r["image_id"], r))
         if i % 6 == 0:
             recs.append(("zz_" + r["image_id"], r))
@@ -1214,9 +1201,9 @@ def multimodal_curation_sql(n: int = 400, seed: int = 42) -> str:
     )
 
 
-def phash_dedup_sql(n: int = 400, seed: int = 42) -> str:
+def phash_dedup_sql(sf_dir: str) -> str:
     winners: dict = {}
-    for r in _synth_rows(n, seed):
+    for r in _synth_rows(400):
         cur = winners.get(r["phash"])
         if cur is None or r["image_id"] < cur:
             winners[r["phash"]] = r["image_id"]
@@ -1224,7 +1211,7 @@ def phash_dedup_sql(n: int = 400, seed: int = 42) -> str:
     return _values_sql(rows, ["image_id", "phash"], ["VARCHAR", "BIGINT"])
 
 
-def quality_classifier_sql(sf_dir: str, sample: int = 512) -> str:
+def quality_classifier_sql(sf_dir: str) -> str:
     """Retrains + rescores through the operator's own pure functions —
     an executor-free re-derivation of the learned stage (training is
     deterministic: zeros init, fixed epochs, id-ordered accumulation),
@@ -1238,7 +1225,7 @@ def quality_classifier_sql(sf_dir: str, sample: int = 512) -> str:
 
     docs = _read_docs(sf_dir)  # already ascending doc_id
     w, b = train_quality_classifier(
-        [(t, distill_label(t)) for _, t in docs[:sample]]
+        [(t, distill_label(t)) for _, t in docs[:512]]
     )
     rows = []
     for d, t in docs:
@@ -1251,9 +1238,7 @@ def quality_classifier_sql(sf_dir: str, sample: int = 512) -> str:
     )
 
 
-def source_mixture_sql(
-    sf_dir: str, temperature: float = 2.0, target_rows: int = 200
-) -> str:
+def source_mixture_sql(sf_dir: str) -> str:
     """Per-source thresholds recomputed from exact DuckDB counts through
     the operator's own pure function (sorted-source float sums), then
     the per-row keep is PLAIN SQL on the shared 60-bit md5-prefix
@@ -1269,7 +1254,7 @@ def source_mixture_sql(
         ).fetchall()
     )
     con.close()
-    rates = mixture_rates(counts, temperature, target_rows)
+    rates = mixture_rates(counts, 2.0, 200)
     vals = ",\n".join(
         f"('{s.replace(chr(39), chr(39) * 2)}', {t}::UBIGINT, {rate!r})"
         for s, (rate, t) in sorted(rates.items())
@@ -1285,72 +1270,11 @@ def source_mixture_sql(
     """
 
 
-def semdedup_sql(sf_dir: str, kc: int = 8, iters: int = 8,
-                 threshold: float = 0.85) -> str:
-    """q_semdedup expected rows: re-derives the whole SemDeDup pipeline
-    executor-free — centroid training on the vec_id-ordered sample
-    (train_ivf_centroids' exact numpy math), nearest-centroid
-    assignment, within-cluster fold-order cosines (the HOF/vectorized
-    bit-parity contract), union-find components, min-id survivor."""
-    emb = _read_embeddings(sf_dir)
-    ids = [int(r[0]) for r in emb]
-    vecs = [np.asarray(r[1], dtype=np.float64) for r in emb]
-    # planted near-dups, same construction as _emb_with_neardups
-    all_ids, all_vecs = list(ids), list(vecs)
-    for i, vid in enumerate(ids):
-        if vid % 10 == 0:
-            v = vecs[i].copy()
-            v[0] += 0.5
-            all_ids.append(vid + 1_000_000)
-            all_vecs.append(v)
-    order = np.argsort(np.array(all_ids), kind="stable")
-    x = np.stack(all_vecs)[order][:2048]
-    x = x / np.linalg.norm(x, axis=1, keepdims=True)
-    rng = np.random.default_rng(17)
-    cent = x[rng.choice(len(x), size=min(kc, len(x)), replace=False)]
-    for _ in range(iters):
-        assign = np.argmax(x @ cent.T, axis=1)
-        for c in range(len(cent)):
-            members = x[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cent[c] = m / (np.linalg.norm(m) or 1.0)
-    mat = np.stack(all_vecs)
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    assign_all = np.argmax(unit @ cent.T, axis=1)
-    rows = [
-        (vid, (v, nrm, int(c)))
-        for vid, v, nrm, c in zip(
-            all_ids, all_vecs, map(_fold_norm, all_vecs), assign_all
-        )
-        if nrm > 0
-    ]
-    pairs = _banded_pairs(
-        rows, lambda r: [r[2]], _fold_cos, lambda cos: cos >= threshold
-    )
-    comp = _min_id_components(all_ids, [(a, b) for a, b, _ in pairs])
-    rows = [
-        (vid, int(c), comp[vid] == vid) for vid, c in zip(all_ids, assign_all)
-    ]
-    return _values_sql(
-        rows, ["vec_id", "ivf_cluster", "keep"],
-        ["BIGINT", "BIGINT", "BOOLEAN"],
-    )
-
-
 # ---------------------------------------------------------------------------
 # packing / DSIR oracles (round-4: the two round-3 driver hash-FAILs were
 # cross-engine fragility — DuckDB window SQL + DuckDB ln() — so both are now
 # pure-Python computed-literal re-derivations, no second engine in the loop)
 # ---------------------------------------------------------------------------
-
-_JAVA_WS = "[ \t\n\x0b\f\r]+"  # Java regex \s is ASCII-only; Python's isn't
-
-
-def _spark_trim(t: str) -> str:
-    """Twin of F.trim: strips the space character only."""
-    return t.strip(" ")
-
 
 def _dsir_tokens(t: str) -> List[str]:
     """Twin of operators.dsir._token_array: lower + whitespace-normalize +
@@ -1364,7 +1288,59 @@ def _dsir_tokens(t: str) -> List[str]:
     ]
 
 
-def exact_substring_sql(sf_dir: str, span_tokens: int = 20) -> str:
+def compaction_plan_sql(sf_dir: str) -> str:
+    """q_compaction_plan expected plan: ONE exclusive prefix sum of
+    len(text) in (size DESC, doc_id) order, then // 8192, in exact Python
+    integers (the operator's two-phase banded sum is associative, so it
+    must equal this single pass)."""
+    inv = sorted(
+        ((d, len(t)) for d, t in _read_docs(sf_dir)), key=lambda r: (-r[1], r[0])
+    )
+    rows, running = [], 0
+    for d, size in inv:
+        rows.append((d, size, running, running // 8192))
+        running += size
+    return _values_sql(
+        rows,
+        ["doc_id", "size_bytes", "cum_before", "compaction_group"],
+        ["BIGINT", "BIGINT", "BIGINT", "BIGINT"],
+    )
+
+
+def filter_ablation_sql(sf_dir: str) -> str:
+    """q_filter_ablation expected table: the native heuristic rule subset
+    (operators/quality_stage._staged_rules) re-derived per doc — tokens
+    are the Java-whitespace split of the space-trimmed text, only `#`
+    counts as a symbol, and the two ratio thresholds are integer
+    cross-multiplications (2*wc <= tok_chars <= 14*wc, 10*hashes <= wc),
+    so no float crosses the engine boundary."""
+    import re
+
+    n_fail: dict = {}
+    n_unique: dict = {}
+    for _, t in _read_docs(sf_dir):
+        toks = re.split(_JAVA_WS, _spark_trim(t))
+        wc, tok_chars = len(toks), sum(map(len, toks))
+        fails = {
+            "word_count": not 3 <= wc <= 256,
+            "mean_word_len": not 2 * wc <= tok_chars <= 14 * wc,
+            "lorem_ipsum": "lorem ipsum" in t.lower(),
+            "brace": "{" in t,
+            "hash_ratio": 10 * t.count("#") > wc,
+        }
+        for rule, failed in fails.items():
+            n_fail[rule] = n_fail.get(rule, 0) + failed
+            n_unique[rule] = n_unique.get(rule, 0) + (
+                failed and sum(fails.values()) == 1
+            )
+    return _values_sql(
+        [(rule, n_fail[rule], n_unique[rule]) for rule in n_fail],
+        ["rule", "n_fail", "n_unique_fail"],
+        ["VARCHAR", "BIGINT", "BIGINT"],
+    )
+
+
+def exact_substring_sql(sf_dir: str) -> str:
     """q_exact_substring expected output: the operator's pure-Python twin
     (operators/exact_substring.exact_substring_dedup_rows) re-derives the
     global first-occurrence removal over the same parquet — md5 span keys
@@ -1372,7 +1348,7 @@ def exact_substring_sql(sf_dir: str, span_tokens: int = 20) -> str:
     so the fixture is exact with no cross-engine float or window SQL."""
     from .operators.exact_substring import exact_substring_dedup_rows
 
-    rows = exact_substring_dedup_rows(_read_docs(sf_dir), span_tokens)
+    rows = exact_substring_dedup_rows(_read_docs(sf_dir), 20)
     return _values_sql(
         rows,
         ["doc_id", "n_tokens", "n_removed", "text_dedup"],
@@ -1414,12 +1390,7 @@ def bloom_seen_sql(sf_dir: str) -> str:
     digests, same k positions, same bitmap — exact including FPs."""
     from .operators.bloom import bloom_rows
 
-    con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT doc_id, source, text "
-        f"FROM read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    con.close()
+    docs = _read_sourced_docs(sf_dir)
     seen = [t for _, s, t in docs if s == "src0"]
     rows = bloom_rows(seen, [(d, t) for d, _, t in docs])
     return _values_sql(rows, ["doc_id", "seen"], ["BIGINT", "BOOLEAN"])
@@ -1430,13 +1401,8 @@ def bpe_token_totals_sql(sf_dir: str) -> str:
     through the SAME frozen tokenizer (core/bpe.py) — exact integers."""
     from .core.bpe import bpe_token_count
 
-    con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT source, text FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    con.close()
     totals: dict = {}
-    for src, t in docs:
+    for _, src, t in _read_sourced_docs(sf_dir):
         totals[src] = totals.get(src, 0) + bpe_token_count(t or "")
     return _values_sql(
         sorted(totals.items()),
@@ -1453,13 +1419,8 @@ def bpe_gpt2_counts_sql(sf_dir: str) -> str:
     from .core.bpe import ByteBPE, frozen_merges_txt
 
     bpe = ByteBPE.from_merges_txt(frozen_merges_txt())
-    con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT source, text FROM read_parquet('{sf_dir}/documents.parquet')"
-    ).fetchall()
-    con.close()
     agg: dict = {}
-    for src, t in docs:
+    for _, src, t in _read_sourced_docs(sf_dir):
         n = bpe.count(t or "")
         tot, mx, cnt = agg.get(src, (0, 0, 0))
         agg[src] = (tot + n, max(mx, n), cnt + 1)
@@ -1471,7 +1432,7 @@ def bpe_gpt2_counts_sql(sf_dir: str) -> str:
     )
 
 
-def pack_sequences_sql(sf_dir: str, seq_len: int = 2048) -> str:
+def pack_sequences_sql(sf_dir: str) -> str:
     """q_pack_sequences expected output: global exclusive token prefix sum
     in doc_id order over tokenizer-exact BPE counts (core/bpe.py, the same
     pure function the pandas UDF calls), re-derived with exact Python
@@ -1483,7 +1444,7 @@ def pack_sequences_sql(sf_dir: str, seq_len: int = 2048) -> str:
     rows, running = [], 0
     for d, t in docs:
         n = bpe_token_count(t or "")
-        rows.append((d, n, running, running // seq_len, running % seq_len))
+        rows.append((d, n, running, running // 2048, running % 2048))
         running += n
     return _values_sql(
         rows,
@@ -1492,14 +1453,7 @@ def pack_sequences_sql(sf_dir: str, seq_len: int = 2048) -> str:
     )
 
 
-def dsir_selection_sql(
-    sf_dir: str,
-    *,
-    target_source: str = "src0",
-    num_buckets: int = 1024,
-    alpha: float = 0.5,
-    k: int = 100,
-) -> str:
+def dsir_selection_sql(sf_dir: str) -> str:
     """q_dsir_selection expected output, re-derived end-to-end in Python:
     md5-prefix bucket twin, exact integer counts, and the SAME
     operators.dsir.log_ratio_unats the Spark plan folds in as literals —
@@ -1508,33 +1462,26 @@ def dsir_selection_sql(
 
     from .operators.dsir import ratio_table_rows
 
-    con = duckdb.connect()
-    docs = con.execute(
-        f"SELECT doc_id, source, text "
-        f"FROM read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    con.close()
-
     def bucket(w: str) -> int:
-        return int(hashlib.md5(w.encode("utf-8")).hexdigest()[:7], 16) % num_buckets
+        return int(hashlib.md5(w.encode("utf-8")).hexdigest()[:7], 16) % 1024
 
     counts: dict = {}
     doc_buckets: List[Tuple[int, List[int]]] = []  # raw docs only
-    for d, src, t in docs:
-        tgt = src == target_source
+    for d, src, t in _read_sourced_docs(sf_dir):
+        tgt = src == "src0"
         bs = [bucket(w) for w in _dsir_tokens(t or "")]
         for b in bs:
             ct, cr = counts.get(b, (0, 0))
             counts[b] = (ct + 1, cr) if tgt else (ct, cr + 1)
         if not tgt:
             doc_buckets.append((d, bs))
-    lr = dict(ratio_table_rows(counts, num_buckets, alpha))
+    lr = dict(ratio_table_rows(counts, 1024, 0.5))
     scored = [
         (d, sum(lr[b] for b in bs)) for d, bs in doc_buckets if bs
     ]
     scored.sort(key=lambda r: (-r[1], r[0]))
     return _values_sql(
-        scored[:k],
+        scored[:100],
         ["doc_id", "dsir_weight_unats"],
         ["BIGINT", "BIGINT"],
     )

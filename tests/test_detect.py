@@ -163,3 +163,75 @@ def test_trigger_gates_are_necessary_conditions():
                 assert not pattern.search(text), (ent_type, text)
                 skipped_checked += 1
     assert skipped_checked > 100  # the gate actually fires on these corpora
+
+
+def _splice_substitute(text, mappings):
+    """The former substitute body: one right-to-left splice per mapping,
+    quadratic in len(text). Kept as the reference for the linear pass."""
+    out = text
+    for mp in reversed(mappings):
+        out = out[: mp["span_start"]] + mp["placeholder"] + out[mp["span_end"]:]
+    return out
+
+
+def _random_disjoint_detections(rng, n_chars):
+    """A random text and a shuffled set of disjoint (possibly adjacent)
+    detections over it, including spans at both ends."""
+    alphabet = "abc XYZ 09-.,\nçãé€😀"
+    text = "".join(rng.choice(list(alphabet), size=n_chars))
+    cuts = sorted(set(rng.integers(0, n_chars + 1, size=int(rng.integers(0, 12))).tolist())
+                  | {0, n_chars})
+    spans = [(s, e) for s, e in zip(cuts, cuts[1:]) if rng.random() < 0.6]
+    dets = [{"type": str(rng.choice(["CPF", "EMAIL", "NOME_COMPLETO"])),
+             "value": text[s:e], "start": s, "end": e} for s, e in spans]
+    rng.shuffle(dets)
+    return text, dets
+
+
+def test_substitute_equals_right_to_left_splice():
+    """The left-to-right join is byte-identical to the splice it replaced,
+    on random disjoint detection sets and on 100k synthetic captions."""
+    import numpy as np
+
+    from pii_filter_spark.core.detect import detect_all, substitute
+    from pii_filter_spark.sources.synth import make_caption
+
+    rng = np.random.default_rng(2024)
+    for _ in range(3000):
+        text, dets = _random_disjoint_detections(rng, int(rng.integers(0, 200)))
+        out, mappings = substitute(text, dets)
+        assert out == _splice_substitute(text, mappings), (text, dets)
+
+    n_mapped = 0
+    for i in range(100_000):
+        text = make_caption(np.random.default_rng((31, i)))
+        out, mappings = substitute(text, detect_all(text))
+        assert out == _splice_substitute(text, mappings), text
+        n_mapped += len(mappings)
+    assert n_mapped > 100_000  # the captions really carry detections
+
+
+def test_substitute_time_is_linear_in_text_size():
+    """16x the characters (and detections) must cost well under the 256x
+    a quadratic splice pays; min of 3 runs per size."""
+    import time
+
+    from pii_filter_spark.core.detect import substitute
+
+    unit = "Contato CPF 123.456.789-01 na sala. "
+    hit = unit.index("123")
+
+    def best_secs(reps):
+        text = unit * reps
+        dets = [{"type": "CPF", "value": "123.456.789-01",
+                 "start": k * len(unit) + hit, "end": k * len(unit) + hit + 14}
+                for k in range(reps)]
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.perf_counter()
+            substitute(text, dets)
+            best = min(best, time.perf_counter() - t0)
+        return best
+
+    small, large = best_secs(2_000), best_secs(32_000)
+    assert large / small < 64, (small, large)

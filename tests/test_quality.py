@@ -70,3 +70,31 @@ def test_filter_ablation_ws_class_matches_oracle_on_vertical_tab(spark):
            for r in rule_ablation(df, text_col="text").collect()}
     # doc 1: VT splits -> 3 words (>=3 passes word_count)
     assert got["word_count"][0] == 0
+
+
+def test_filter_ablation_fixture_oracle_matches_rule_ablation(spark, tmp_path):
+    """The pure filter_ablation twin (oracle_support) equals the native
+    rule_ablation on text that trips every rule: synthetic captions plus
+    Java-whitespace, blank, brace, hash and boundary-ratio edge cases."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from pii_filter_spark import oracle_support
+    from pii_filter_spark.operators.quality_stage import rule_ablation
+    from pii_filter_spark.sources.synth import make_caption
+
+    texts = [make_caption(np.random.default_rng((13, i))) for i in range(2000)]
+    texts += ["", "   ", "\tlead tab words", "alpha\x0bbeta gamma", "a b c",
+              "ab cd ef", "abcdefghijklmno pq rs", "# " + "w " * 9,
+              "## " + "w " * 9, "x {y} z", "LOREM Ipsum dolor"]
+    pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+        tmp_path / "documents.parquet")
+    res = duckdb.sql(oracle_support.filter_ablation_sql(str(tmp_path)))
+    want = {r[0]: (r[1], r[2]) for r in res.fetchall()}
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id: long, text: string")
+    got = {r["rule"]: (r["n_fail"], r["n_unique_fail"])
+           for r in rule_ablation(df, text_col="text").collect()}
+    assert got == want
+    assert all(n_fail > 0 for n_fail, _ in want.values())

@@ -104,3 +104,55 @@ def test_unverified_queries_in_first_50():
         f"queries with no driver-green row sit past position 50 and will "
         f"never be checked: {late_unproven} — move them into the prefix"
     )
+
+
+def test_every_query_has_an_oracle():
+    """No oracle may silently degrade: a fixture generator that raises
+    would turn its query into a rows-only check that still passes."""
+    assert set(entry_mod.oracle_sql()) == set(entry_mod.queries())
+
+
+def test_every_builder_is_declared_once():
+    """Every q_* builder of the module sits in the gate order exactly once,
+    under the name its function carries."""
+    builders = {k for k, v in vars(entry_mod).items()
+                if k.startswith("q_") and callable(v)}
+    order = [q.__name__ for q in entry_mod._GATE_ORDER]
+    assert sorted(order) == sorted(builders)
+    assert [f"q_{n}" for n in entry_mod.queries()] == order
+
+
+def test_oracle_check_writes_forensics_on_mismatch(tmp_path, monkeypatch):
+    import importlib.util
+    import json
+
+    spec = importlib.util.spec_from_file_location(
+        "oracle_check",
+        os.path.join(os.path.dirname(__file__), "..", "tools", "oracle_check.py"),
+    )
+    oc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(oc)
+    monkeypatch.chdir(tmp_path)
+    path = oc.write_forensics(
+        "demo",
+        [(1, 0.5), (2, None), (2, None)], ["id", "x"],
+        [(0.5, 1), (None, 2), (0.25, 3)], ["x", "id"],
+    )
+    out = json.loads((tmp_path / path).read_text())
+    assert path == "oracle_forensics_demo.json"
+    assert out["only_spark"] == ["2|NULL"]
+    assert out["only_oracle"] == ["3|0.25"]
+    assert set(out["versions"]) == {"duckdb", "pyspark"}
+
+
+def test_fixture_generators_take_only_sf_dir():
+    import inspect
+
+    from pii_filter_spark import oracle_support
+
+    gens = {k: v for k, v in vars(oracle_support).items()
+            if k.endswith("_sql") and not k.startswith("_")
+            and inspect.isfunction(v)}
+    assert len(gens) == 52
+    for name, fn in gens.items():
+        assert list(inspect.signature(fn).parameters) == ["sf_dir"], name

@@ -3,7 +3,10 @@
 Runs every queries() entry on Spark at the given sf dir and, when an
 oracle_sql() entry exists, the same SQL in DuckDB over the same parquet
 tables; compares row count, column names, and a value hash computed over
-columns sorted by name and rows sorted by all columns.
+columns sorted by name and rows sorted by all columns. On a hash
+mismatch it writes oracle_forensics_<query>.json (see write_forensics).
+
+    python tools/oracle_check.py [SF_DIR] [QUERY ...]
 """
 
 from __future__ import annotations
@@ -36,16 +39,45 @@ def _norm_cell(v):
     return str(v)
 
 
-def value_hash(rows, cols):
+def norm_lines(rows, cols):
+    """Rows as normalized lines: columns sorted by name, lines sorted."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
+    return sorted(
         "|".join(_norm_cell(r[i]) for i in order) for r in rows
     )
+
+
+def value_hash(rows, cols):
     h = hashlib.md5()
-    for ln in lines:
+    for ln in norm_lines(rows, cols):
         h.update(ln.encode())
         h.update(b"\n")
     return h.hexdigest()
+
+
+def write_forensics(name, srows, scols, orows, ocols):
+    """oracle_forensics_<name>.json in the working directory: the first 10
+    normalized lines only one side has (multiset difference), per side,
+    plus the engine versions."""
+    import json
+    from collections import Counter
+
+    import pyspark
+
+    spark_lines = Counter(norm_lines(srows, scols))
+    oracle_lines = Counter(norm_lines(orows, ocols))
+    path = f"oracle_forensics_{name}.json"
+    with open(path, "w") as f:
+        json.dump({
+            "query": name,
+            "versions": {"duckdb": duckdb.__version__,
+                         "pyspark": pyspark.__version__},
+            "columns": {"spark": sorted(scols), "oracle": sorted(ocols)},
+            "rows": {"spark": len(srows), "oracle": len(orows)},
+            "only_spark": sorted((spark_lines - oracle_lines).elements())[:10],
+            "only_oracle": sorted((oracle_lines - spark_lines).elements())[:10],
+        }, f, indent=1)
+    return path
 
 
 def main(sf_dir: str, only=None):
@@ -102,16 +134,20 @@ def main(sf_dir: str, only=None):
             continue
         ok_rows = len(srows) == len(orows)
         ok_cols = sorted(scols) == sorted(ocols)
-        sh = value_hash([tuple(r) for r in srows], scols)
+        srows = [tuple(r) for r in srows]
+        sh = value_hash(srows, scols)
         oh = value_hash(orows, ocols)
         ok_hash = sh == oh
         status = "OK" if (ok_rows and ok_cols and ok_hash) else "MISMATCH"
+        forensics = ""
         if status != "OK":
             failures.append(name)
+        if not ok_hash:
+            forensics = " -> " + write_forensics(name, srows, scols, orows, ocols)
         print(
             f"{name}: {status} rows={len(srows)}/{len(orows)} "
             f"cols={'ok' if ok_cols else f'{sorted(scols)} vs {sorted(ocols)}'} "
-            f"hash={'ok' if ok_hash else f'{sh[:8]} vs {oh[:8]}'}"
+            f"hash={'ok' if ok_hash else f'{sh[:8]} vs {oh[:8]}'}{forensics}"
         )
     spark.stop()
     if failures:

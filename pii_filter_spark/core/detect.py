@@ -18,8 +18,9 @@ Frozen convention (parity citations into /root/reference):
     keep the minimum-priority-number match of the group, first-wins on ties
     (regex_service.py:104-108 via min()).
  3. Dictionary-NER candidates with noise guards + longest-match filter
-    (ner_dictionary.py; ner_service.py:95-216), then DROP any that overlap
-    a surviving regex span (test_pipeline_integration.py:101-116).
+    (ner_dictionary.py over rules.py; ner_service.py:95-216), then DROP
+    any that overlap a surviving regex span
+    (test_pipeline_integration.py:101-116).
  4. Toxicity word hits, dropped if overlapping any surviving regex/NER span
     (north-rule addition; same precedence rule as the reference's third
     stage, test_pipeline_integration.py:122-139).
@@ -30,8 +31,9 @@ Frozen convention (parity citations into /root/reference):
     numbering quirk (local_llm_service.py:185-198) is normalized to the
     L2R convention of every other stage.
  5. One substitution pass: placeholders "[{TYPE}_{n}]" numbered
-    left-to-right per type, replacements applied right-to-left so indices
-    never shift (regex_service.py:115-161). Mapping spans record ORIGINAL
+    left-to-right per type, the output joined left-to-right from the
+    original text's slices between the spans (the reference splices
+    right-to-left, regex_service.py:115-161). Mapping spans record ORIGINAL
     text offsets (the regex-stage convention, regex_service.py:146; we
     normalize the reference NER stage's post-substitution-span asymmetry,
     ner_service.py:273, in favor of original offsets).
@@ -41,20 +43,16 @@ Overlap predicate everywhere: a.start < b.end AND a.end > b.start
 
 from __future__ import annotations
 
+from bisect import bisect_left
+from itertools import accumulate
 from typing import Any, Dict, Iterable, List, Sequence, Tuple
 
 from .ner_dictionary import find_entities
 from .patterns import DEFAULT_PRIORITY, PII_PATTERNS, TYPE_PRIORITY, make_placeholder
+from .rules import Detection, text_words
 from .sensitive import find_sensitive
 from .toxicity import find_toxic
 from .validators import validate_pii
-
-Detection = Dict[str, Any]  # {type, value, start, end}
-
-
-def spans_overlap(a_start: int, a_end: int, b_start: int, b_end: int) -> bool:
-    return a_start < b_end and a_end > b_start
-
 
 # Region-scan acceleration for the regex stage (round-3 VERDICT #7).
 # Every one of the five PII patterns must contain a digit or '@', so the
@@ -179,19 +177,26 @@ def resolve_regex_overlaps(matches: List[Detection]) -> List[Detection]:
 def drop_overlapping(
     candidates: Iterable[Detection], winners: Sequence[Detection]
 ) -> List[Detection]:
-    """Keep candidates that overlap none of the winners' spans."""
+    """Keep candidates that overlap none of the winners' spans.
+
+    A candidate overlaps some winner iff, among the winners that start
+    before the candidate ends, the largest end lies after the candidate's
+    start: one bisect into the winners' sorted starts plus a prefix
+    maximum of their ends, O((n + m) log m) instead of O(n * m).
+    """
+    spans = sorted((w["start"], w["end"]) for w in winners)
+    starts = [s for s, _ in spans]
+    max_end = list(accumulate((e for _, e in spans), max))
     kept = []
     for c in candidates:
-        cs, ce = c["start"], c["end"]
-        if not any(spans_overlap(cs, ce, w["start"], w["end"]) for w in winners):
+        k = bisect_left(starts, c["end"])
+        if not k or max_end[k - 1] <= c["start"]:
             kept.append(c)
     return kept
 
 
 def detect_all(text: str, with_sensitive: bool = True) -> List[Detection]:
     """Full precedence-resolved detection set, sorted by start offset."""
-    from .ner_dictionary import text_words
-
     words = text_words(text)  # one tokenization shared by all gated stages
     regex_hits = resolve_regex_overlaps(find_regex_matches(text))
     ner_hits = drop_overlapping(find_entities(text, words), regex_hits)

@@ -87,16 +87,20 @@ UND = "und"
 
 # Language evidence lives in letters: digits, underscores and punctuation
 # (PII numbers, e-mail syntax, markup) are noise shared by every language,
-# so they are stripped before n-gram extraction.
+# so they are stripped before n-gram extraction. The perplexity LMs
+# (core/perplexity.py, operators/corpus_lm.py) score the same normal form,
+# so a caption dense with CPF/phone/CEP numbers is not penalized for
+# trigrams the digit-free seed corpora never saw.
 _NON_LETTER = re.compile(r"[^\w\s]|[\d_]")
 
 
-def _clean(text: str) -> str:
+def normalize_for_lm(text: str) -> str:
+    """Lowercased letters-only text, whitespace runs collapsed to one space."""
     return " ".join(_NON_LETTER.sub(" ", text.lower()).split())
 
 
 def _trigrams(text: str) -> List[str]:
-    cleaned = _clean(text)
+    cleaned = normalize_for_lm(text)
     if not cleaned:
         return []
     t = " " + cleaned + " "

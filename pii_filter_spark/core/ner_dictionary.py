@@ -24,6 +24,8 @@ from __future__ import annotations
 import re
 from typing import Any, Dict, List, Tuple
 
+from .rules import Rule, alternation, gate_words, longest_match, scan, text_words
+
 # ---------------------------------------------------------------------------
 # Vocabularies (module-level constants — shipped with --py-files, effectively
 # broadcast: each Python worker holds one copy per process).
@@ -308,31 +310,28 @@ _CAP = rf"[{_UC}][{_LC}]+(?:[-'][{_UC}{_LC}][{_LC}]+)*"
 # names never do, so the wider token shape is confined to ORG grammars.
 _ORGW = rf"(?:{_CAP}|[A-Z][A-Z0-9]{{1,4}}\b)"
 
-def _alts(words) -> str:
-    # Longest-first alternation so e.g. "coordenadora" beats "coordenador".
-    return "|".join(sorted((re.escape(w) if "\\" not in w else w for w in words),
-                           key=len, reverse=True))
-
-_ROLE = _alts(ROLE_WORDS)
-_SEN = _alts(SENIORITY_WORDS)
-_DOM = _alts(ROLE_DOMAIN_WORDS)
-_ADJ = _alts(ROLE_ADJECTIVES)
-_ENG = _alts(ENGLISH_TITLES)
-_ORG_SUF_W = _alts(ORG_SUFFIX_WORDS)
-_SINGLE = _alts(SINGLE_WORD_CARGOS)
-_CITY = _alts(CITIES)
-_NBH = _alts(NEIGHBORHOODS)
+# Vocabulary alternations, entries ranked by their escaped length.
+(_ROLE, _SEN, _DOM, _ADJ, _ENG, _ORG_SUF_W, _SINGLE, _CITY, _NBH, _ORG_PRE,
+ _CONN, _OCONN, _BRANDS) = (
+    alternation(map(re.escape, words), str) for words in (
+        ROLE_WORDS, SENIORITY_WORDS, ROLE_DOMAIN_WORDS, ROLE_ADJECTIVES,
+        ENGLISH_TITLES, ORG_SUFFIX_WORDS, SINGLE_WORD_CARGOS, CITIES,
+        NEIGHBORHOODS, ORG_PREFIXES, NAME_CONNECTIVES, ORG_CONNECTIVES,
+        BRAND_ORGS))
 _STREET = "|".join(STREET_PREFIXES)
-_ORG_PRE = _alts(ORG_PREFIXES)
 _ORG_SUF = "|".join(ORG_SUFFIXES)
-_CONN = _alts(NAME_CONNECTIVES)
-_OCONN = _alts(ORG_CONNECTIVES)
-_BRANDS = _alts(BRAND_ORGS)
+_CAPITALIZED_CARGOS = ({w[0].upper() + w[1:] for w in ROLE_WORDS}
+                       | {"VP"} | set(CAPITALIZED_ONLY_CARGOS))
+_NAME_FORMS = frozenset(n[0].upper() + n[1:] for n in FIRST_NAMES)
 
-# Each entry: (type, compiled pattern). Scanned in order; longest-match
-# conflicts are resolved by the overlap filter below, mirroring spaCy
-# EntityRuler's filter_spans longest-wins behaviour (ner_service.py:194-216).
-GRAMMARS: List[Tuple[str, re.Pattern]] = [
+# Each rule: (type, pattern, 0, gate), scanned in order by rules.scan;
+# longest-match conflicts are resolved by rules.longest_match, mirroring
+# spaCy EntityRuler's filter_spans longest-wins behaviour
+# (ner_service.py:194-216). Each gate holds the words one of which every
+# match contains as a token (the legal-suffix grammar gates on a symbol
+# regex instead: "S.A." and "Ltda" tokenize into letters too common to
+# gate on).
+RULES: List[Rule] = [
     # CARGO: dev stack pattern must come before generic role pattern.
     # ALL qualifiers optional for the dev words — the reference's second
     # profession pattern (constants.py: dev/desenvolvedor[a] + OP:"?"
@@ -340,61 +339,64 @@ GRAMMARS: List[Tuple[str, re.Pattern]] = [
     # cover the one-word spellings of back end / front end.
     # (?<![-\d]): not an ID suffix — "Matrícula 8890-DEV" is a registration
     # code, not a title.
-    ("CARGO", re.compile(
+    Rule("CARGO", re.compile(
         rf"(?<![-\d])\b(?:desenvolvedor|desenvolvedora|dev)"
         rf"(?:\s+(?:full|back|front|backend|frontend|mobile|devops))?"
         rf"(?:\s+(?:stack|end))?"
-        rf"(?:\s+(?:{_SEN}))?\b", re.IGNORECASE)),
+        rf"(?:\s+(?:{_SEN}))?\b", re.IGNORECASE), 0,
+        frozenset({"desenvolvedor", "desenvolvedora", "dev"})),
     # engenheiro keeps a REQUIRED qualifier (reference pattern 1 demands a
     # following token: {"OP": "+"}).
-    ("CARGO", re.compile(
+    Rule("CARGO", re.compile(
         rf"\b(?:engenheiro|engenheira)"
         rf"(?:\s+(?:full|back|front|backend|frontend|mobile|devops))"
         rf"(?:\s+(?:stack|end))?"
-        rf"(?:\s+(?:{_SEN}))?\b", re.IGNORECASE)),
-    ("CARGO", re.compile(
-        rf"\b(?:{_ENG})(?:\s+(?:{_SEN}))?\b", re.IGNORECASE)),
+        rf"(?:\s+(?:{_SEN}))?\b", re.IGNORECASE), 0,
+        frozenset({"engenheiro", "engenheira"})),
+    Rule("CARGO", re.compile(
+        rf"\b(?:{_ENG})(?:\s+(?:{_SEN}))?\b", re.IGNORECASE), 0,
+        gate_words(ENGLISH_TITLES)),
     # role word + AT LEAST one qualifier (adjective / de-domain / english
     # tail / seniority) — a bare role word in running text ("assistência
     # técnica", "atestado médico") is usually not a job title.
-    ("CARGO", re.compile(
+    Rule("CARGO", re.compile(
         rf"\b(?:{_ROLE})"
         rf"(?:\s+(?:(?:{_ADJ})|(?:(?:de|em)\s+)?(?:{_DOM})|(?:{_ENG})|(?:{_SEN})))+"
-        rf"\b", re.IGNORECASE)),
-    ("CARGO", re.compile(rf"\b(?:{_SINGLE})\b", re.IGNORECASE)),
+        rf"\b", re.IGNORECASE), 0, gate_words(ROLE_WORDS)),
+    Rule("CARGO", re.compile(rf"\b(?:{_SINGLE})\b", re.IGNORECASE), 0,
+         gate_words(SINGLE_WORD_CARGOS)),
     # Capitalized bare role word ("contratada como Diretora") — the
     # title-case form is a job title far more reliably than the lowercase
     # running-text form ("assistência técnica"), so this pattern is
     # deliberately case-SENSITIVE.
-    ("CARGO", re.compile(
-        r"\b(?:"
-        + "|".join(sorted({w[0].upper() + w[1:] for w in ROLE_WORDS}
-                          | {"VP"} | set(CAPITALIZED_ONLY_CARGOS),
-                          key=len, reverse=True))
-        + r")\b")),
+    Rule("CARGO", re.compile(
+        r"\b(?:" + alternation(_CAPITALIZED_CARGOS, str) + r")\b"), 0,
+        gate_words(_CAPITALIZED_CARGOS)),
     # NOME_COMPLETO: first-name-dictionary-anchored capitalized run — the
     # first token is one of the known given names (capitalized form baked
     # into the alternation so the scan can't be swallowed by a preceding
     # capitalized non-name), then >=1 further capitalized tokens with
-    # optional connectives (da/de/dos/...) between them.
-    ("NOME_COMPLETO", re.compile(
-        r"\b(?:"
-        + "|".join(sorted({n[0].upper() + n[1:] for n in FIRST_NAMES},
-                          key=len, reverse=True))
-        + rf")(?:\s+(?:(?:{_CONN})\s+)?{_CAP})+")),
+    # optional connectives (da/de/dos/...) between them. find_entities
+    # matches it with the fast path below, not with this pattern.
+    Rule("NOME_COMPLETO", re.compile(
+        r"\b(?:" + alternation(_NAME_FORMS, str)
+        + rf")(?:\s+(?:(?:{_CONN})\s+)?{_CAP})+"), 0, gate_words(_NAME_FORMS)),
     # ORGANIZACAO: keyword-prefixed, legal-suffix, brand-suffix, or
     # known-brand forms. Org tokens use _ORGW (acronyms/alnum allowed);
     # org connectives keep "e" ("Alves e Souza Ltda").
-    ("ORGANIZACAO", re.compile(
+    Rule("ORGANIZACAO", re.compile(
         rf"\b(?:{_ORG_PRE})(?:\s+(?:(?:{_OCONN})\s+)?{_ORGW})+"
-        rf"(?:\s+(?:{_ORG_SUF}))?")),
-    ("ORGANIZACAO", re.compile(
-        rf"\b{_ORGW}(?:\s+{_ORGW})*\s+(?:{_ORG_SUF})")),
-    ("ORGANIZACAO", re.compile(
-        rf"\b{_ORGW}(?:\s+{_ORGW})*\s+(?:{_ORG_SUF_W})\b")),
+        rf"(?:\s+(?:{_ORG_SUF}))?"), 0, gate_words(ORG_PREFIXES)),
+    Rule("ORGANIZACAO", re.compile(
+        rf"\b{_ORGW}(?:\s+{_ORGW})*\s+(?:{_ORG_SUF})"), 0,
+        re.compile(rf"\s(?:{_ORG_SUF})")),
+    Rule("ORGANIZACAO", re.compile(
+        rf"\b{_ORGW}(?:\s+{_ORGW})*\s+(?:{_ORG_SUF_W})\b"), 0,
+        gate_words(ORG_SUFFIX_WORDS)),
     # anchor-less brands: exact dictionary mention, optional branded tail
-    ("ORGANIZACAO", re.compile(
-        rf"\b(?:{_BRANDS})(?:\s+(?:{_ORG_SUF_W}))?\b")),
+    Rule("ORGANIZACAO", re.compile(
+        rf"\b(?:{_BRANDS})(?:\s+(?:{_ORG_SUF_W}))?\b"), 0,
+        gate_words(BRAND_ORGS)),
     # LOCAL: street grammar. The span deliberately EXCLUDES any trailing
     # house number: the reference's digit noise guard (ner_service.py:122-127)
     # rejects digit-containing entities, so including ", 123" would kill the
@@ -403,14 +405,18 @@ GRAMMARS: List[Tuple[str, re.Pattern]] = [
     # street-name tokens: capitalized words, roman numerals ("Rua XV de
     # Novembro"), or date-style numbers ("Rua 24 de Outubro"); the
     # trailing house number stays excluded (comma-separated).
-    ("LOCAL", re.compile(
+    Rule("LOCAL", re.compile(
         rf"\b(?:{_STREET})"
-        rf"(?:\s+(?:(?:{_OCONN})\s+)?(?:{_CAP}|[IVXLC]{{2,5}}\b|\d{{1,3}}\b))+")),
-    ("LOCAL", re.compile(rf"\bBairro(?:\s+{_CAP})+")),
+        rf"(?:\s+(?:(?:{_OCONN})\s+)?(?:{_CAP}|[IVXLC]{{2,5}}\b|\d{{1,3}}\b))+"), 0,
+        gate_words(STREET_PREFIXES)),
+    Rule("LOCAL", re.compile(rf"\bBairro(?:\s+{_CAP})+"), 0,
+         frozenset({"bairro"})),
     # city, optionally suffixed with the state code ("Guarulhos-SP")
-    ("LOCAL", re.compile(rf"\b(?:{_CITY})(?:-[A-Z]{{2}})?\b")),
-    ("LOCAL", re.compile(rf"\b(?:{_NBH})\b")),
+    Rule("LOCAL", re.compile(rf"\b(?:{_CITY})(?:-[A-Z]{{2}})?\b"), 0,
+         gate_words(CITIES)),
+    Rule("LOCAL", re.compile(rf"\b(?:{_NBH})\b"), 0, gate_words(NEIGHBORHOODS)),
 ]
+GRAMMARS: List[Tuple[str, re.Pattern]] = [(r.type, r.pattern) for r in RULES]
 
 _NAME_SUFFIXES = (" ii", " iii", " iv", " v", " jr", " sr", " filho", " neto")
 
@@ -434,9 +440,21 @@ _ADJ_HEAD_NOUNS = frozenset({
     "tratamento", "acompanhamento", "diretoria", "gerência", "gerencia",
     "corpo", "erro", "conselho", "departamento", "equipe", "secretaria",
 })
-_PREV_WORD_RE = re.compile(r"([\w]+)\s*$", re.UNICODE)
 _NEXT_CAP_RE = re.compile(rf"\s+{_CAP}")
 _NEXT_PUNCT_RE = re.compile(r"\s*[:'\"”’]")
+
+
+def _prev_word(text: str, start: int) -> str:
+    """The \\w+ run that ends just before `start` once the whitespace in
+    between is skipped ("" if a non-word character comes first). Scans
+    backwards from `start`, so the cost does not grow with the prefix."""
+    end = start
+    while end and text[end - 1].isspace():
+        end -= 1
+    begin = end
+    while begin and (text[begin - 1].isalnum() or text[begin - 1] == "_"):
+        begin -= 1
+    return text[begin:end]
 
 
 def _cargo_context_ok(text: str, start: int, end: int, value: str) -> bool:
@@ -446,13 +464,10 @@ def _cargo_context_ok(text: str, start: int, end: int, value: str) -> bool:
         return False
     if _NEXT_CAP_RE.match(text, end):
         return False
-    prev = _PREV_WORD_RE.search(text, 0, start)
-    if prev and prev.group(1).lower() in _ADJ_HEAD_NOUNS:
-        return False
-    return True
+    return _prev_word(text, start).lower() not in _ADJ_HEAD_NOUNS
 
 
-def _passes_noise_guards(text: str, ent_type: str = "") -> bool:
+def _passes_noise_guards(text: str, ent_type: str) -> bool:
     """Reference noise-guard stack (ner_service.py:95-127), same order.
 
     One documented deviation: the digit guard exempts ORGANIZACAO
@@ -503,10 +518,7 @@ def _passes_noise_guards(text: str, ent_type: str = "") -> bool:
 # byte-equality tests (test_spark_stages) and the dataset F1 pins.
 _NAME_RUN_RE = re.compile(rf"\b{_CAP}(?:\s+(?:(?:{_CONN})\s+)?{_CAP})*")
 _RUN_WORD_RE = re.compile(r"\S+")
-_NAME_FORMS = frozenset(n[0].upper() + n[1:] for n in FIRST_NAMES)
-_NOME_PATTERN_IDS = {
-    id(p) for t, p in GRAMMARS if t == "NOME_COMPLETO"
-}
+_SCANNED = [r for r in RULES if r.type != "NOME_COMPLETO"]
 
 
 def _find_names_fast(text: str) -> List[Tuple[int, int]]:
@@ -519,64 +531,6 @@ def _find_names_fast(text: str) -> List[Tuple[int, int]]:
                 out.append((run.start() + w.start(), run.end()))
                 break  # the greedy match consumes to run end, like finditer
     return out
-
-
-# --- trigger gates ----------------------------------------------------------
-# Every CARGO pattern needs at least one role/title word and every LOCAL
-# pattern a street/city/bairro word; one cheap lowercase-token-set check
-# per text skips whole pattern groups on texts that cannot match (a
-# necessary-condition filter, so skipping is behavior-preserving — the
-# equivalence is exercised by the same parity tests as the NOME path).
-_WORD_SPLIT_RE = re.compile(r"\w+", re.UNICODE)
-
-
-def _first_word(vocab_entry: str) -> str:
-    m = _WORD_SPLIT_RE.search(vocab_entry.lower())
-    return m.group(0) if m else vocab_entry.lower()
-
-
-def _rarest_word(vocab_entry: str) -> str:
-    # For multi-word titles pick the LONGEST token as the gate key:
-    # every phrase word is a necessary condition, and first words like
-    # "key"/"data" ("key account", "data scientist") saturate generic
-    # corpora (measured: gate fired on 92% of the synthetic documents,
-    # re-enabling the pattern scans the gate exists to skip).
-    words = _WORD_SPLIT_RE.findall(vocab_entry.lower())
-    return max(words, key=len) if words else vocab_entry.lower()
-
-
-_CARGO_TRIGGERS = frozenset(
-    [
-        _first_word(w)
-        for group in (ROLE_WORDS, SINGLE_WORD_CARGOS,
-                      ("desenvolvedor", "desenvolvedora", "dev",
-                       "engenheiro", "engenheira"))
-        for w in group
-    ]
-    + [_rarest_word(w) for w in ENGLISH_TITLES]
-    + [w.lower() for w in CAPITALIZED_ONLY_CARGOS]
-    + ["vp"]
-)
-_LOCAL_TRIGGERS = frozenset(
-    [_first_word(w) for w in CITIES]
-    + [_first_word(w) for w in NEIGHBORHOODS]
-    + ["rua", "avenida", "av", "travessa", "praça", "alameda", "rodovia",
-       "estrada", "via", "largo", "bairro"]
-)
-# ORG gate: prefix/brand/suffix words as tokens; the legal suffixes
-# ("S.A.", "Ltda") tokenize into letters too common to gate on, so they
-# get one tiny dedicated regex scan instead.
-_ORG_TRIGGERS = frozenset(
-    [w.lower() for w in ORG_PREFIXES]
-    + [_first_word(w) for w in BRAND_ORGS]
-    + [w.lower() for w in ORG_SUFFIX_WORDS]
-)
-_ORG_SUFFIX_RE = re.compile(r"\b(?:Ltda|S\.A\.|S/A|Eireli|ME|EPP)\b")
-
-
-def text_words(text: str) -> frozenset:
-    """Lowercased \\w+ token set — the shared gate key for all detectors."""
-    return frozenset(w.lower() for w in _WORD_SPLIT_RE.findall(text))
 
 
 def find_entities(text: str, words: frozenset | None = None) -> List[Dict[str, Any]]:
@@ -595,51 +549,18 @@ def find_entities(text: str, words: frozenset | None = None) -> List[Dict[str, A
             )
     if words is None:
         words = text_words(text)
-    run_cargo = not words.isdisjoint(_CARGO_TRIGGERS)
-    run_local = not words.isdisjoint(_LOCAL_TRIGGERS)
-    run_org = (
-        not words.isdisjoint(_ORG_TRIGGERS)
-        or _ORG_SUFFIX_RE.search(text) is not None
-    )
-    for ent_type, pattern in GRAMMARS:
-        if id(pattern) in _NOME_PATTERN_IDS:
-            continue  # handled by the fast path above
-        if ent_type == "CARGO" and not run_cargo:
+    for cand in scan(_SCANNED, text, words):
+        # trim whitespace the grammar may have captured
+        raw = cand["value"]
+        value = raw.strip()
+        if not value or not _passes_noise_guards(value, cand["type"]):
             continue
-        if ent_type == "LOCAL" and not run_local:
+        start = cand["start"] + len(raw) - len(raw.lstrip())
+        end = start + len(value)
+        if cand["type"] == "CARGO" and not _cargo_context_ok(
+            text, start, end, value
+        ):
             continue
-        if ent_type == "ORGANIZACAO" and not run_org:
-            continue
-        for m in pattern.finditer(text):
-            value = m.group(0)
-            start, end = m.start(), m.end()
-            # trim trailing whitespace the grammar may have captured
-            stripped = value.rstrip()
-            end -= len(value) - len(stripped)
-            value = stripped
-            lead = len(value) - len(value.lstrip())
-            start += lead
-            value = value.lstrip()
-            if not value:
-                continue
-            if not _passes_noise_guards(value, ent_type):
-                continue
-            if ent_type == "CARGO" and not _cargo_context_ok(
-                text, start, end, value
-            ):
-                continue
-            candidates.append(
-                {"type": ent_type, "value": value, "start": start, "end": end}
-            )
-
-    # Longest-match overlap resolution (parity with ner_service.py:194-216):
-    # sort by (start, -length), greedily keep entities that begin at or after
-    # the end of the last kept one.
-    candidates.sort(key=lambda c: (c["start"], -(c["end"] - c["start"])))
-    kept: List[Dict[str, Any]] = []
-    frontier = -1
-    for cand in candidates:
-        if cand["start"] >= frontier:
-            kept.append(cand)
-            frontier = cand["end"]
-    return kept
+        cand.update(value=value, start=start, end=end)
+        candidates.append(cand)
+    return longest_match(candidates)

@@ -16,11 +16,10 @@ KenLM binary to executors.
 from __future__ import annotations
 
 import math
-import re
 from collections import Counter
 from typing import List
 
-from .langid import _SEED_CORPORA
+from .langid import _SEED_CORPORA, normalize_for_lm
 
 _K = 0.1  # add-k smoothing
 _BOS = "\x02"
@@ -33,25 +32,15 @@ _TRAIN = _SEED_CORPORA["pt"]
 PPL_THRESHOLD = 31.0
 
 
-# Like the langid stage, the LM scores LETTERS: digits and punctuation are
-# stripped so a caption dense with CPF/phone/CEP numbers is not penalized
-# for containing trigrams the (digit-free) training corpus never saw.
-# Symbol-only junk then normalizes to "" -> ppl 0.0; the symbol_ratio /
-# alpha_ratio quality rules own that failure mode instead.
-_NON_LETTER = re.compile(r"[^\w\s]|[\d_]")
-
-
-def _normalize(text: str) -> str:
-    return " ".join(_NON_LETTER.sub(" ", text.lower()).split())
-
-
-# public alias: the corpus-trained LM operator (operators/corpus_lm.py)
-# must normalize EXACTLY like the seed-trained one so scores compare
-normalize_for_lm = _normalize
+# Like the langid stage, the LM scores LETTERS, through langid's normal
+# form (normalize_for_lm, also used by operators/corpus_lm.py so the
+# corpus-trained and seed-trained scores compare). Symbol-only junk then
+# normalizes to "" -> ppl 0.0; the symbol_ratio / alpha_ratio quality
+# rules own that failure mode instead.
 
 
 def _train():
-    text = _BOS + _BOS + _normalize(_TRAIN)
+    text = _BOS + _BOS + normalize_for_lm(_TRAIN)
     tri = Counter()
     bi = Counter()
     charset = set(text)
@@ -72,7 +61,7 @@ _TRI, _BI, _V = _train()
 # char-loop throughput. Any character outside the training charset maps to
 # one OOV code, exactly reproducing the dict .get(…, 0) semantics (count 0
 # for both the trigram and its context).
-_ALPHABET = sorted(set(_BOS + _BOS + _normalize(_TRAIN)))
+_ALPHABET = sorted(set(_BOS + _BOS + normalize_for_lm(_TRAIN)))
 _A = len(_ALPHABET) + 1          # +1 = shared OOV bucket
 _OOV = _A - 1
 _CODE = {c: i for i, c in enumerate(_ALPHABET)}
@@ -102,7 +91,7 @@ def perplexity(text: str) -> float:
     quality rule, not the perplexity rule)."""
     if not text or not text.strip():
         return 0.0
-    t = _BOS + _BOS + _normalize(text)
+    t = _BOS + _BOS + normalize_for_lm(text)
     if len(t) <= 2:
         return 0.0
     codes = _np.frombuffer(t.translate(_TAB).encode("latin-1"), dtype=_np.uint8)

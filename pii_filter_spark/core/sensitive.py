@@ -40,7 +40,9 @@ same spirit as detect.py's offset normalization):
 from __future__ import annotations
 
 import re
-from typing import Any, Dict, List, Tuple
+from typing import Any, Dict, List
+
+from .rules import Rule, alternation, gate_words, longest_match, scan, text_words
 
 # Parity constant: /root/reference/src/core/constants.py:29-49.
 SENSITIVE_CATEGORIES = [
@@ -64,13 +66,6 @@ SENSITIVE_CATEGORIES = [
     "DATA_NASCIMENTO",
     "CONTA_BANCARIA",
 ]
-
-
-def _phrase_alt(words) -> str:
-    return "|".join(
-        re.escape(w).replace("\\ ", r"\s+")
-        for w in sorted(words, key=len, reverse=True)
-    )
 
 
 _HEALTH_PHRASES = (
@@ -155,30 +150,21 @@ _PERSONAL_PHRASES = (
 
 # --- per-rule trigger gates -------------------------------------------------
 # The naive design (one big alternation regex scanned per text) measured
-# 435 us/row — dominating the whole scrub stage. Instead: tokenize once
-# (\w+, lowercase, frozenset) and gate EACH rule on its own anchor-word
-# set; symbol-anchored rules (IPv4, currency amounts) gate on one small
-# symbol regex. A text that triggers nothing costs one findall + set
-# probes (~20 us); a false trigger costs one pattern scan, not all ~20.
+# 435 us/row — dominating the whole scrub stage. Instead each rule gates on
+# its own anchor words (rules.scan against the shared token set); symbol-
+# anchored rules (IPv4, currency amounts) gate on one small symbol regex.
+# A text that triggers nothing costs set probes only (~20 us with the
+# tokenization); a false trigger costs one pattern scan, not all ~20.
+# The phrase rules (\b-delimited literals) and the symbol rules gate on a
+# necessary condition. The context-anchored rules are not all \b-anchored
+# and accept spelling variants ("descontos de R$ 1.200,00",
+# "contribuiçao", "subsetor Financeiro"), so there a text can match without
+# holding the anchor token: for those rules the gate is a heuristic.
+_SYM = re.compile(r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d|R\$|US\$|USD|EUR|GBP|€|£")
 
-_WORD_RE = re.compile(r"\w+", re.UNICODE)
-_SYM_RE = re.compile(r"\d{1,3}\.\d{1,3}\.\d{1,3}\.\d|R\$|US\$|USD|EUR|GBP|€|£")
-_SYM = None  # sentinel: rule is gated by _SYM_RE, not by tokens
 
-
-def _first_words(phrases) -> frozenset:
-    r"""Gate token per phrase: the first word — but tokenized the same way
-    texts are (\w+), so a hyphenated phrase like "não-concorrência"
-    gates on its LONGEST \w chunk ("concorrência": rarer than "não" and
-    guaranteed present when the phrase matches). A gate token that can
-    never appear in the \w+ token set would make its phrase undetectable.
-    """
-    out = set()
-    for p in phrases:
-        first = p.split()[0].lower()
-        parts = _WORD_RE.findall(first)
-        out.add(max(parts, key=len) if parts else first)
-    return frozenset(out)
+def _phrases(words) -> str:
+    return alternation(words, lambda w: re.escape(w).replace("\\ ", r"\s+"))
 
 
 _AMT = r"(?:R\$|US\$|USD|EUR|GBP|€|£)\s?[\d.]+,\d{2}"
@@ -188,84 +174,84 @@ _CAP = (
     r"|\s+[A-ZÁÂÃÀÉÊÍÓÔÕÚÜÇ][\w]*)*"
 )
 
-# Each rule: (category, compiled pattern, report group index, trigger).
+# Each rule: (category, compiled pattern, report group index, gate).
 # Group 0 = whole match (topic phrases / anchored fragments); group 1 =
 # the value next to a context anchor (the golden-label convention for
-# those categories). Trigger = frozenset of gate tokens, or _SYM.
-SENSITIVE_RULES: List[Tuple[str, re.Pattern, int, Any]] = [
-    ("IP_ADDRESS", re.compile(
+# those categories). Gate = frozenset of anchor words, or _SYM.
+SENSITIVE_RULES: List[Rule] = [
+    Rule("IP_ADDRESS", re.compile(
         r"\b(?:\d{1,3}\.){3}\d{1,3}\b"), 0, _SYM),
-    ("USUARIO_REDE", re.compile(
+    Rule("USUARIO_REDE", re.compile(
         r"(?:usu[áa]rio|login|rede)[^.\n]{0,20}?"
         r"'?\b([a-z]{1,3}\.[a-z]{2,})\b", re.IGNORECASE), 1,
-     frozenset({"usuário", "usuario", "login", "rede"})),
-    ("REGISTRO_PONTO", re.compile(
+        frozenset({"usuário", "usuario", "login", "rede"})),
+    Rule("REGISTRO_PONTO", re.compile(
         r"(?:registro\s+de\s+ponto|ponto\s+(?:batido|registrado)|"
         r"entrada|sa[íi]da)\s+às\s+(\d{1,2}[:h]\d{2})", re.IGNORECASE), 1,
-     frozenset({"registro", "ponto", "entrada", "saída", "saida"})),
-    ("AGENCIA_BANCARIA", re.compile(
+        frozenset({"registro", "ponto", "entrada", "saída", "saida"})),
+    Rule("AGENCIA_BANCARIA", re.compile(
         r"ag[êe]ncia\s*(?:n[ºo°]?\.?\s*)?:?\s*(\d{3,5}(?:-[\dxX])?)",
         re.IGNORECASE), 1, frozenset({"agência", "agencia"})),
-    ("CONTA_BANCARIA", re.compile(
+    Rule("CONTA_BANCARIA", re.compile(
         r"conta(?:\s+(?:corrente|poupan[çc]a|sal[áa]rio|judicial|"
         r"banc[áa]ria|conjunta|de\s+investimento))?"
         r"\s*(?:n[ºo°]?\.?\s*)?:?\s*(\d{4,12}-[\dxX]|\d{5,12})",
         re.IGNORECASE), 1, frozenset({"conta"})),
-    ("MATRICULA", re.compile(
+    Rule("MATRICULA", re.compile(
         r"matr[íi]cula\D{0,20}?"
         r"(\d[\dA-Za-z]*(?:-[\dA-Za-z]+)?)", re.IGNORECASE), 1,
-     frozenset({"matrícula", "matricula", "matrículas", "matriculas"})),
+        frozenset({"matrícula", "matricula", "matrículas", "matriculas"})),
     # second value of "matrícula X muda para Y" / "matrículas X e Y"
-    ("MATRICULA", re.compile(
+    Rule("MATRICULA", re.compile(
         r"matr[íi]culas?\D{0,30}?\d[\dA-Za-z-]*\s+(?:e|muda\s+para)\s+"
         r"(\d[\dA-Za-z]*(?:-[\dA-Za-z]+)?)", re.IGNORECASE), 1,
-     frozenset({"matrícula", "matricula", "matrículas", "matriculas"})),
+        frozenset({"matrícula", "matricula", "matrículas", "matriculas"})),
     # the golden set types work-card numbers as MATRICULA
-    ("MATRICULA", re.compile(
+    Rule("MATRICULA", re.compile(
         r"carteira\s+de\s+trabalho\s+(\d+(?:\s+S[ée]rie\s+\d+)?)",
         re.IGNORECASE), 1, frozenset({"carteira"})),
     # ---- INF_FIN anchored fragments listed BEFORE the salary rule: the
     # golden set types an amount by its governing phrase, and these
     # fragments start before any nearby "salário" token so they win the
     # earliest-start overlap resolution against the SALARIO value rule.
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         rf"saldo\s+de\s+sal[áa]rio\s+de\s+{_AMT}", re.IGNORECASE), 0,
-     frozenset({"saldo"})),
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+        frozenset({"saldo"})),
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         rf"contribui[çc][ãa]o\s+mensal[^.\n]{{0,60}}?{_AMT}",
         re.IGNORECASE), 0, frozenset({"contribuição", "contribuicao"})),
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         rf"rendimentos\s+tribut[áa]veis[^.\n]{{0,40}}?{_AMT}",
         re.IGNORECASE), 0, frozenset({"rendimentos"})),
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         rf"adiantamento[^.\n]{{0,60}}?{_AMT}", re.IGNORECASE), 0,
-     frozenset({"adiantamento"})),
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+        frozenset({"adiantamento"})),
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         rf"totalizando\s+(?:uma?\s+\w+\s+de\s+)?{_AMT}", re.IGNORECASE), 0,
-     frozenset({"totalizando"})),
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+        frozenset({"totalizando"})),
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         rf"receber\s+{_AMT}", re.IGNORECASE), 0, frozenset({"receber"})),
     # "desconto ... R$X" is financial detail UNLESS the amount is the
     # salary itself ("desconto aplicado no salário base de R$X") — the
     # tempered dot blocks any 'salári' between anchor and amount.
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         rf"(?:desconto|dedu[çc][ãa]o)(?:(?!sal[áa]ri)[^.\n]){{0,30}}?{_AMT}",
         re.IGNORECASE), 0, frozenset({"desconto", "dedução", "deducao"})),
     # percentage-based payroll movements ("retenção de 15% dos
     # vencimentos", "adicional de transferência de 25%", "bloqueio
     # judicial de 30% dos vencimentos líquidos")
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
         r"(?:desconto|reten[çc][ãa]o|contribui[çc][ãa]o|adicional"
         r"|movimenta[çc][ãa]o|bloqueio|multa|financiar[áa])"
         r"[^.\n]{0,30}?\d{1,3}\s?%"
         r"(?:\s+(?:sobre\s+o|d[oe]s?)\s+[\wáâãàéêíóôõúüç-]+"
         r"(?:\s+l[íi]quidos?|\s+base)?)?",
         re.IGNORECASE), 0,
-     frozenset({"desconto", "retenção", "retencao", "contribuição",
-                "contribuicao", "adicional", "movimentação",
-                "movimentacao", "bloqueio", "multa", "financiará",
-                "financiara"})),
-    ("SALARIO", re.compile(
+        frozenset({"desconto", "retenção", "retencao", "contribuição",
+                   "contribuicao", "adicional", "movimentação",
+                   "movimentacao", "bloqueio", "multa", "financiará",
+                   "financiara"})),
+    Rule("SALARIO", re.compile(
         r"(?:sal[áa]ri[oa]l?s?|remunera[çc][ãa]o|vencimentos?|proventos"
         r"|piso|renda\s+(?:bruta|mensal)|rendimentos?\s+mensal"
         r"|bolsa-aux[íi]lio|bolsas?\b|pr[óo]-labore"
@@ -276,61 +262,59 @@ SENSITIVE_RULES: List[Tuple[str, re.Pattern, int, Any]] = [
         r"|iniciando\s+com|finalizando\s+com)"
         rf"[^.\n]{{0,60}}?({_AMT})",
         re.IGNORECASE), 1,
-     frozenset({
-         "salário", "salario", "salarial", "salários", "salarios",
-         "remuneração", "remuneracao", "vencimento", "vencimentos",
-         "proventos", "piso", "renda", "rendimento", "rendimentos",
-         "bolsa", "bolsas", "labore",
-         "terço", "terco", "constitucional", "bruto", "reajustado",
-         "reajustada", "cachê", "cache", "cachês", "caches", "pacote",
-         "líquido", "liquido", "iniciando", "finalizando"})),
+        frozenset({
+            "salário", "salario", "salarial", "salários", "salarios",
+            "remuneração", "remuneracao", "vencimento", "vencimentos",
+            "proventos", "piso", "renda", "rendimento", "rendimentos",
+            "bolsa", "bolsas", "labore",
+            "terço", "terco", "constitucional", "bruto", "reajustado",
+            "reajustada", "cachê", "cache", "cachês", "caches", "pacote",
+            "líquido", "liquido", "iniciando", "finalizando"})),
     # "ajustar o salário de R$X para R$Y" — the second amount is the
     # (new) salary; "R$X atuais" — current-salary comparisons
-    ("SALARIO", re.compile(
+    Rule("SALARIO", re.compile(
         rf"sal[áa]rio\s+de\s+{_AMT}\s+para\s+({_AMT})", re.IGNORECASE), 1,
-     frozenset({"salário", "salario"})),
-    ("SALARIO", re.compile(rf"({_AMT})\s+atuais", re.IGNORECASE), 1, _SYM),
-    ("DATA_NASCIMENTO", re.compile(
+        frozenset({"salário", "salario"})),
+    Rule("SALARIO", re.compile(rf"({_AMT})\s+atuais", re.IGNORECASE), 1, _SYM),
+    Rule("DATA_NASCIMENTO", re.compile(
         r"(?:nascid[oa]\s+em|nasceu\s+em|dn|(?:data\s+de\s+)?nascimento)"
         r"\s*:?\s*(\d{2}/\d{2}/\d{4})", re.IGNORECASE), 1,
-     # NOT "data": every pattern alternative requires one of these
-     # tokens anyway, and bare "data" fires on 79% of corpus rows
-     frozenset({"nascido", "nascida", "nasceu", "dn", "nascimento"})),
-    ("DEPARTAMENTO", re.compile(
+        # NOT "data": every pattern alternative requires one of these
+        # tokens anyway, and bare "data" fires on 79% of corpus rows
+        frozenset({"nascido", "nascida", "nasceu", "dn", "nascimento"})),
+    Rule("DEPARTAMENTO", re.compile(
         r"(?:departamento|setor"
         r"|área(?:\s+de\s+(?:aloca[çc][ãa]o|atua[çc][ãa]o)\s+ser[áa])?)"
         rf"\s+(?:de\s+)?({_CAP})"), 1,
-     frozenset({"departamento", "setor", "área", "area"})),
+        frozenset({"departamento", "setor", "área", "area"})),
     # org-unit anchors; all-caps acronym teams ("equipe de TI/QA/IAM")
     # are operational references the golden set does not label
-    ("DEPARTAMENTO", re.compile(
+    Rule("DEPARTAMENTO", re.compile(
         r"(?:[Ee]quipe|[Dd]ivis[ãa]o|[Dd]iretoria|[Ss]quad)"
         rf"\s+(?:de\s+)?(?![A-Z]{{1,4}}\b)(?!Bem\b)({_CAP})"), 1,
-     frozenset({"equipe", "divisão", "divisao", "diretoria", "squad"})),
+        frozenset({"equipe", "divisão", "divisao", "diretoria", "squad"})),
     # ICD diagnosis codes name a health condition by themselves
-    ("CONDICAO_DE_SAUDE", re.compile(
+    Rule("CONDICAO_DE_SAUDE", re.compile(
         r"\bCID\s+[A-Z]\d{1,3}(?:\.\d+)?\b"), 0, frozenset({"cid"})),
-    ("CONDICAO_DE_SAUDE", re.compile(
-        rf"\b(?:{_phrase_alt(_HEALTH_PHRASES)})\b", re.IGNORECASE), 0,
-     _first_words(_HEALTH_PHRASES)),
-    ("HISTORICO_DISCIPLINAR", re.compile(
-        rf"\b(?:{_phrase_alt(_DISCIPLINE_PHRASES)})\b", re.IGNORECASE), 0,
-     _first_words(_DISCIPLINE_PHRASES)),
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
-        rf"\b(?:{_phrase_alt(_FINANCE_PHRASES)})\b", re.IGNORECASE), 0,
-     _first_words(_FINANCE_PHRASES)),
-    ("PROBLEMA_PESSOAL_FAMILIAR", re.compile(
-        rf"\b(?:{_phrase_alt(_PERSONAL_PHRASES)})\b", re.IGNORECASE), 0,
-     _first_words(_PERSONAL_PHRASES)),
+    Rule("CONDICAO_DE_SAUDE", re.compile(
+        rf"\b(?:{_phrases(_HEALTH_PHRASES)})\b", re.IGNORECASE), 0,
+        gate_words(_HEALTH_PHRASES)),
+    Rule("HISTORICO_DISCIPLINAR", re.compile(
+        rf"\b(?:{_phrases(_DISCIPLINE_PHRASES)})\b", re.IGNORECASE), 0,
+        gate_words(_DISCIPLINE_PHRASES)),
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(
+        rf"\b(?:{_phrases(_FINANCE_PHRASES)})\b", re.IGNORECASE), 0,
+        gate_words(_FINANCE_PHRASES)),
+    Rule("PROBLEMA_PESSOAL_FAMILIAR", re.compile(
+        rf"\b(?:{_phrases(_PERSONAL_PHRASES)})\b", re.IGNORECASE), 0,
+        gate_words(_PERSONAL_PHRASES)),
     # fallback: any other currency amount in an HR document is detailed
     # financial information (the golden set labels the surrounding phrase;
     # span-overlap scoring credits the amount inside it). Listed LAST so
     # the salary-context rule claims its amounts first (stable sort keeps
     # the earlier rule on identical spans).
-    ("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(_AMT), 0, _SYM),
+    Rule("INFORMACAO_FINANCEIRA_DETALHADA", re.compile(_AMT), 0, _SYM),
 ]
-
-_GATED_RULES = SENSITIVE_RULES
 
 
 def find_sensitive(text: str, words: frozenset | None = None) -> List[Dict[str, Any]]:
@@ -342,34 +326,9 @@ def find_sensitive(text: str, words: frozenset | None = None) -> List[Dict[str, 
     tokenization across all gated detectors.
     """
     if words is None:
-        words = frozenset(w.lower() for w in _WORD_RE.findall(text))
-    has_sym = _SYM_RE.search(text) is not None
-    candidates: List[Dict[str, Any]] = []
-    for category, pattern, grp, trig in _GATED_RULES:
-        if trig is _SYM:
-            if not has_sym:
-                continue
-        elif words.isdisjoint(trig):
-            continue
-        for m in pattern.finditer(text):
-            value = m.group(grp)
-            if not value:
-                continue
-            candidates.append({
-                "type": category,
-                "value": value,
-                "start": m.start(grp),
-                "end": m.end(grp),
-            })
-    # longest-match overlap resolution, identical to the NER stage
-    candidates.sort(key=lambda c: (c["start"], -(c["end"] - c["start"])))
-    kept: List[Dict[str, Any]] = []
-    frontier = -1
-    for cand in candidates:
-        if cand["start"] >= frontier:
-            kept.append(cand)
-            frontier = cand["end"]
-    return _merge_adjacent(text, kept)
+        words = text_words(text)
+    return _merge_adjacent(
+        text, longest_match(scan(SENSITIVE_RULES, text, words)))
 
 
 # The reference LLM extracts whole topical FRAGMENTS ("diagnosticada com

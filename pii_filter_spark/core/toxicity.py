@@ -13,6 +13,8 @@ from __future__ import annotations
 import re
 from typing import Any, Dict, List
 
+from .rules import Rule, alternation, gate_words, scan, text_words
+
 # Mild demonstration list (pt + en). Word-boundary, case-insensitive.
 TOXIC_WORDS = (
     "idiota", "imbecil", "estúpido", "estúpida", "burro", "burra",
@@ -25,24 +27,15 @@ TOXIC_WORDS = (
 TOXIC_TYPE = "TOXICO"
 
 _PATTERN = re.compile(
-    r"\b(?:" + "|".join(sorted((re.escape(w) for w in TOXIC_WORDS),
-                               key=len, reverse=True)) + r")\b",
-    re.IGNORECASE,
-)
+    r"\b(?:" + alternation(TOXIC_WORDS, re.escape) + r")\b", re.IGNORECASE)
 
-# token gate: every entry's first word, so the alternation scan is
-# skipped on clean texts (the overwhelmingly common case).
-_TRIGGERS = frozenset(w.split()[0] for w in TOXIC_WORDS)
-_WORD_RE = re.compile(r"\w+", re.UNICODE)
+# gated on the word list, so the alternation scan is skipped on clean
+# texts (the overwhelmingly common case)
+RULES = [Rule(TOXIC_TYPE, _PATTERN, 0, gate_words(TOXIC_WORDS))]
 
 
 def find_toxic(text: str, words: frozenset | None = None) -> List[Dict[str, Any]]:
     """All toxic-word occurrences as {type, value, start, end} dicts."""
     if words is None:
-        words = frozenset(w.lower() for w in _WORD_RE.findall(text))
-    if words.isdisjoint(_TRIGGERS):
-        return []
-    return [
-        {"type": TOXIC_TYPE, "value": m.group(0), "start": m.start(), "end": m.end()}
-        for m in _PATTERN.finditer(text)
-    ]
+        words = text_words(text)
+    return scan(RULES, text, words)

@@ -131,38 +131,125 @@ def test_nome_fast_path_equals_alternation_regex():
     assert checked > 300  # the corpora really exercise the name grammar
 
 
-def test_trigger_gates_are_necessary_conditions():
-    """Whenever the CARGO/LOCAL trigger gate skips a pattern group, the
-    skipped patterns must genuinely have no matches in that text."""
+def _gate_inputs():
+    """Synthetic captions, their concatenations, and adversarial inputs:
+    long capitalized runs behind ORG words, and legal suffixes that are
+    not followed by a word character."""
     import json
     import os
 
-    from pii_filter_spark.core.ner_dictionary import (
-        GRAMMARS,
-        _CARGO_TRIGGERS,
-        _LOCAL_TRIGGERS,
-        _WORD_SPLIT_RE,
-    )
-    from pii_filter_spark.sources.synth import gen_pandas
+    import numpy as np
+
+    from pii_filter_spark.sources.synth import gen_pandas, make_caption
 
     texts = list(gen_pandas(300, seed=55)["caption"])
+    texts += [make_caption(np.random.default_rng((55, i))) for i in range(2000)]
+    texts += [" ".join(texts[i:i + 40]) for i in range(0, 2000, 40)]
+    texts += [
+        "Banco Abcd " * 200, "Empresa Ltda. " + "Abcd " * 200,
+        "Amil Saúde " + "Abcd " * 50, "A Petro S.A. cresceu.",
+        "Contrato com Xyz Ltda. e Abc S/A", "Loja Abc MEU ponto", "Abc EPP",
+        "laudo médico, Diretora Ana Lima, Rua XV de Novembro, Caxias do Sul",
+    ]
     if os.path.exists("/root/reference/dataset.json"):
         texts += [
             c["prompt_text"] for c in json.load(open("/root/reference/dataset.json"))
         ]
-    skipped_checked = 0
-    for text in texts:
-        words = frozenset(w.lower() for w in _WORD_SPLIT_RE.findall(text))
-        skips = []
-        if words.isdisjoint(_CARGO_TRIGGERS):
-            skips.append("CARGO")
-        if words.isdisjoint(_LOCAL_TRIGGERS):
-            skips.append("LOCAL")
-        for ent_type, pattern in GRAMMARS:
-            if ent_type in skips:
-                assert not pattern.search(text), (ent_type, text)
-                skipped_checked += 1
-    assert skipped_checked > 100  # the gate actually fires on these corpora
+    return texts
+
+
+def test_rule_gates_are_necessary_conditions():
+    """Whenever a rule's gate skips a text, the rule's pattern has no match
+    in it, for every rule of the NER, sensitive-topic and toxicity tables.
+    The context-anchored sensitive gates are heuristics in general
+    (sensitive.py); on these inputs they hold too."""
+    from pii_filter_spark.core import ner_dictionary, sensitive, toxicity
+    from pii_filter_spark.core.rules import text_words
+
+    rules = ner_dictionary.RULES + sensitive.SENSITIVE_RULES + toxicity.RULES
+    skipped = set()
+    for text in _gate_inputs():
+        words = text_words(text)
+        for i, rule in enumerate(rules):
+            if isinstance(rule.gate, frozenset):
+                opens = not words.isdisjoint(rule.gate)
+            else:
+                opens = rule.gate.search(text) is not None
+            if not opens:
+                assert rule.pattern.search(text) is None, (rule.type, i, text)
+                skipped.add(i)
+    assert skipped == set(range(len(rules)))  # every gate really skips
+
+
+def test_legal_suffix_org_needs_no_other_org_word():
+    """The legal-suffix ORG grammar runs on its own suffix, also when no
+    other ORG word is in the text and the suffix ends in a dot."""
+    from pii_filter_spark.core.ner_dictionary import find_entities
+    from tests.oracle.reference_semantics import ner_stage
+
+    for text, org in [("A Petro S.A. cresceu.", "Petro S.A."),
+                      ("Loja Abc MEU ponto", "Loja Abc ME")]:
+        got = [(d["type"], d["value"]) for d in find_entities(text)]
+        assert ("ORGANIZACAO", org) in got, got
+        assert got == [(h.type, h.value) for h in ner_stage(text)]
+
+
+def test_cargo_context_reads_the_previous_word():
+    """The single-word CARGO guard rejects a title right after an
+    adjectival head noun ("laudo médico") across whitespace of any kind,
+    and _prev_word gives the word the former whole-prefix regex found."""
+    import re
+
+    import numpy as np
+
+    from pii_filter_spark.core.ner_dictionary import _cargo_context_ok, _prev_word
+
+    def ok(text, word="médico"):
+        s = text.index(word)
+        return _cargo_context_ok(text, s, s + len(word), word)
+
+    assert not ok("laudo médico")
+    assert not ok("Laudo\n\t médico")
+    assert not ok("o exame  médico")
+    assert ok("médico")              # nothing before it
+    assert ok("laudo_x médico")      # "_" is a word character
+    assert ok("x_laudo médico")
+    assert ok("laudo, médico")       # punctuation ends the look-back
+    assert ok("o médico")
+
+    prev_word_re = re.compile(r"([\w]+)\s*$", re.UNICODE)
+    rng = np.random.default_rng(9)
+    alphabet = list("ab_ç9 \n\t\u00a0.,-é")
+    for _ in range(5000):
+        text = "".join(rng.choice(alphabet, size=int(rng.integers(0, 12))))
+        for start in range(len(text) + 1):
+            m = prev_word_re.search(text, 0, start)
+            assert _prev_word(text, start) == (m.group(1) if m else ""), (text, start)
+
+
+def test_drop_overlapping_equals_all_pairs_check():
+    """The bisect + prefix-max filter keeps exactly the candidates that
+    overlap no winner under a.start < b.end and a.end > b.start, on random
+    span sets with adjacent, nested, duplicate and empty spans."""
+    import numpy as np
+
+    from pii_filter_spark.core.detect import drop_overlapping
+
+    def spans(rng, n):
+        out = []
+        for _ in range(n):
+            s = int(rng.integers(0, 40))
+            out.append({"start": s, "end": s + int(rng.integers(0, 8))})
+        return out
+
+    rng = np.random.default_rng(11)
+    for _ in range(3000):
+        cands = spans(rng, int(rng.integers(0, 12)))
+        winners = spans(rng, int(rng.integers(0, 12)))
+        expected = [c for c in cands
+                    if not any(c["start"] < w["end"] and c["end"] > w["start"]
+                               for w in winners)]
+        assert drop_overlapping(cands, winners) == expected, (cands, winners)
 
 
 def _splice_substitute(text, mappings):

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from pii_filter_spark import oracle_support as osup
 from pii_filter_spark.operators.html_extract import strip_html_sql
+from pii_filter_spark.operators.rowmap import map_rows
 from pii_filter_spark.operators.url_dedup import normalize_url_sql
 from pii_filter_spark.operators.url_rules import url_filter_sql
 
@@ -830,17 +831,11 @@ def q_image_metadata_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     imgs = build_input_table(spark, 300, seed=42, num_partitions=8)
 
-    def _inject(batches):
-        for pdf in batches:
-            pdf = pdf[["image_id", "bytes"]].copy()
-            pdf["bytes"] = [
-                inject_fixture_metadata(bytes(b), int(i[4:]))
-                for i, b in zip(pdf["image_id"], pdf["bytes"])
-            ]
-            yield pdf
+    def _inject(i, b):
+        yield i, inject_fixture_metadata(bytes(b), int(i[4:]))
 
-    injected = imgs.select("image_id", "bytes").mapInPandas(
-        _inject, schema="image_id string, bytes binary"
+    injected = map_rows(
+        imgs, ["image_id", "bytes"], "image_id string, bytes binary", _inject
     )
     return scrub_image_metadata(injected)
 
@@ -864,17 +859,11 @@ def q_jpeg_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     imgs = build_input_table(spark, 300, seed=42, num_partitions=8)
 
-    def _inject(batches):
-        for pdf in batches:
-            pdf = pdf[["image_id", "bytes"]].copy()
-            pdf["bytes"] = [
-                inject_jpeg_fixture_metadata(bytes(b), int(i[4:]))
-                for i, b in zip(pdf["image_id"], pdf["bytes"])
-            ]
-            yield pdf
+    def _inject(i, b):
+        yield i, inject_jpeg_fixture_metadata(bytes(b), int(i[4:]))
 
-    injected = imgs.select("image_id", "bytes").mapInPandas(
-        _inject, schema="image_id string, bytes binary"
+    injected = map_rows(
+        imgs, ["image_id", "bytes"], "image_id string, bytes binary", _inject
     )
     return scrub_jpeg_metadata(injected)
 
@@ -913,25 +902,16 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample, one mapInPandas fan-out. The fixture oracle re-derives every
     row through the same synth/encode/decode chain."""
     from pii_filter_spark.operators.image_stage import sample_video_frames
+    from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
 
-    def _gen(batches):
-        import pandas as pd
+    def _gen(i):
+        frames = synth_clip(i)
+        h, w = frames[0].shape[:2]
+        yield f"vid_{i:06d}", encode_avi_mjpeg(frames, fps=10, quality=90), w, h
 
-        from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                frames = synth_clip(int(i))
-                h, w = frames[0].shape[:2]
-                rows.append(
-                    (f"vid_{int(i):06d}",
-                     encode_avi_mjpeg(frames, fps=10, quality=90), w, h)
-                )
-            yield pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h"])
-
-    vids = spark.range(0, 100, numPartitions=8).mapInPandas(
-        _gen, schema="image_id string, bytes binary, w int, h int"
+    vids = map_rows(
+        spark.range(0, 100, numPartitions=8), ["id"],
+        "image_id string, bytes binary, w int, h int", _gen,
     )
     return sample_video_frames(vids, every_n=2).select(
         "video_id", "frame_idx", "frame_w", "frame_h",
@@ -946,22 +926,15 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     executors, decoded by the real codec in the feature stage. The
     fixture oracle re-derives every row through the same synth/encode/
     decode/feature functions."""
+    from pii_filter_spark.audio.wav import encode_wav, synth_tone
     from pii_filter_spark.operators.audio_stage import audio_features
 
-    def _gen(batches):
-        import pandas as pd
+    def _gen(i):
+        yield f"aud_{i:06d}", encode_wav(synth_tone(i))
 
-        from pii_filter_spark.audio.wav import encode_wav, synth_tone
-
-        for pdf in batches:
-            rows = [
-                (f"aud_{int(i):06d}", encode_wav(synth_tone(int(i))))
-                for i in pdf["id"]
-            ]
-            yield pd.DataFrame(rows, columns=["image_id", "bytes"])
-
-    auds = spark.range(0, 150, numPartitions=8).mapInPandas(
-        _gen, schema="image_id string, bytes binary"
+    auds = map_rows(
+        spark.range(0, 150, numPartitions=8), ["id"],
+        "image_id string, bytes binary", _gen,
     )
     return audio_features(auds).select(
         "audio_id", "sample_rate", "n_samples",
@@ -985,32 +958,11 @@ def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.image_stage import (
         video_middle_frame_phash,
     )
+    from pii_filter_spark.video.avi import planted_clips
 
-    def _gen(batches):
-        import pandas as pd
-
-        from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                frames = synth_clip(i)
-                rows.append(
-                    (f"vid_{i:06d}", encode_avi_mjpeg(frames, fps=10,
-                                                      quality=90))
-                )
-                if i % 4 == 0:
-                    rows.append(
-                        (f"vid_{i:06d}_re",
-                         encode_avi_mjpeg(frames, fps=10, quality=70))
-                    )
-            yield pd.DataFrame(rows, columns=["video_id", "bytes"])
-
-    vids = (
-        spark.range(100)
-        .repartition(8)
-        .mapInPandas(_gen, schema="video_id string, bytes binary")
+    vids = map_rows(
+        spark.range(100).repartition(8), ["id"],
+        "video_id string, bytes binary", planted_clips,
     )
     fps = video_middle_frame_phash(vids)
     return hamming_near_pairs(
@@ -1030,33 +982,12 @@ def q_audio_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrelated clips ~32. Fixture oracle re-derives every fingerprint
     and the 8-chunk bucket pairing."""
     from pii_filter_spark.operators.audio_stage import audio_fingerprints
+    from pii_filter_spark.audio.wav import planted_tones
     from pii_filter_spark.operators.dedup import hamming_near_pairs
 
-    def _gen(batches):
-        import numpy as np
-        import pandas as pd
-
-        from pii_filter_spark.audio.wav import encode_wav, synth_tone
-
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                x = synth_tone(i)
-                rows.append((f"aud_{i:06d}", encode_wav(x)))
-                if i % 5 == 0:
-                    rng = np.random.default_rng((77, i))
-                    noisy = np.clip(
-                        0.95 * x + 0.01 * rng.standard_normal(len(x)),
-                        -1.0, 1.0,
-                    )
-                    rows.append((f"aud_{i:06d}_re", encode_wav(noisy)))
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes"])
-
-    auds = (
-        spark.range(200)
-        .repartition(8)
-        .mapInPandas(_gen, schema="audio_id string, bytes binary")
+    auds = map_rows(
+        spark.range(200).repartition(8), ["id"],
+        "audio_id string, bytes binary", planted_tones,
     )
     fps = audio_fingerprints(auds)
     return hamming_near_pairs(

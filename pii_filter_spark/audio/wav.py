@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import math
 import struct
-from typing import Tuple
+from typing import List, Tuple
 
 import numpy as np
 
@@ -47,8 +47,16 @@ def decode_wav(data: bytes) -> Tuple[int, np.ndarray]:
     """PCM WAVE bytes -> (sample_rate, float32 mono in [-1, 1]).
 
     Supports 8-bit unsigned and 16-bit signed PCM, any channel count
-    (channels are mean-downmixed). Raises ValueError on anything else.
+    (channels are mean-downmixed). Raises ValueError on anything else,
+    truncated chunks included.
     """
+    try:
+        return _decode_wav(data)
+    except struct.error as exc:
+        raise ValueError(f"malformed WAVE: {exc!r}") from exc
+
+
+def _decode_wav(data: bytes) -> Tuple[int, np.ndarray]:
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE container")
     pos = 12
@@ -67,6 +75,8 @@ def decode_wav(data: bytes) -> Tuple[int, np.ndarray]:
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     if sr is None or pcm is None:
         raise ValueError("WAVE missing fmt/data chunk")
+    if not sr:
+        raise ValueError("WAVE sample rate 0")
     if bits == 16:
         x = np.frombuffer(pcm, dtype="<i2").astype(np.float32) / 32767.0
     elif bits == 8:
@@ -94,3 +104,19 @@ def synth_tone(idx: int, sample_rate: int = 16_000) -> np.ndarray:
         + 0.05 * rng.standard_normal(n)
     )
     return np.clip(x, -1.0, 1.0)
+
+
+def planted_tones(idx: int) -> List[Tuple[str, bytes]]:
+    """[(audio_id, WAV bytes)]: synth tone idx, plus a noisy gain-scaled
+    re-encode of every 5th tone — the planted near-dup of
+    q_audio_near_pairs. Pure function shared by the query's input
+    builder and its fixture oracle."""
+    x = synth_tone(idx)
+    out = [(f"aud_{idx:06d}", encode_wav(x))]
+    if idx % 5 == 0:
+        rng = np.random.default_rng((77, idx))
+        noisy = np.clip(
+            0.95 * x + 0.01 * rng.standard_normal(len(x)), -1.0, 1.0
+        )
+        out.append((f"aud_{idx:06d}_re", encode_wav(noisy)))
+    return out

@@ -14,10 +14,10 @@ not the ORG suffix grammars). A gate is either
 
 A gate is meant to be a necessary condition: whenever its pattern matches,
 the text holds one of the gate words as a whole \\w+ token, or the symbol
-regex matches. Two known limits: a word gate lowercases with str.lower(),
-which does not fold the characters re.IGNORECASE also folds ("ı", "ſ",
-"İ"), and sensitive.py documents which of its anchor-word gates are
-heuristics rather than necessary conditions.
+regex matches. Words are case-folded the way re.IGNORECASE compares them
+(`fold`), so "ſtupid" opens the "stupid" gate. One known limit:
+sensitive.py documents which of its anchor-word gates are heuristics
+rather than necessary conditions.
 """
 
 from __future__ import annotations
@@ -26,6 +26,12 @@ import re
 from typing import Any, Callable, Dict, Iterable, List, NamedTuple, Union
 
 _WORD_RE = re.compile(r"\w+")
+# The characters re.IGNORECASE matches to a gate-vocabulary letter that
+# str.lower() does not turn into it: dotless ı and long ſ are extra
+# equivalences of i and s, and "İ".lower() is "i" plus a combining dot.
+# tests/test_detect.py checks the table against every code point.
+_FOLD = str.maketrans("İıſ", "iis")
+_FOLD_CHARS = re.compile("[İıſ]")
 
 Detection = Dict[str, Any]  # {type, value, start, end}
 
@@ -37,19 +43,29 @@ class Rule(NamedTuple):
     gate: Union[frozenset, re.Pattern]
 
 
+def fold(text: str) -> str:
+    """Lowercase text as re.IGNORECASE compares it (see _FOLD). Keeps the
+    \\w+ tokens: İ is the one character str.lower() lengthens. The search
+    first is cheaper than always translating, which would double the cost
+    of text_words on captions without those characters."""
+    if _FOLD_CHARS.search(text):
+        text = text.translate(_FOLD)
+    return text.lower()
+
+
 def text_words(text: str) -> frozenset:
-    """Lowercased \\w+ token set: the word-gate key of every detector."""
-    return frozenset(w.lower() for w in _WORD_RE.findall(text))
+    """Folded \\w+ token set: the word-gate key of every detector."""
+    return frozenset(_WORD_RE.findall(fold(text)))
 
 
 def gate_words(entries: Iterable[str]) -> frozenset:
-    """One gate word per vocabulary entry: its longest \\w+ word, lowercased.
+    """One gate word per vocabulary entry: its longest \\w+ word, folded.
 
     Every word of a literal phrase is a whole token of any text the phrase
     matches, and the longest one is usually the rarest ("key account"
     gates on "account": "key" and "data" fire on most documents).
     """
-    return frozenset(max(_WORD_RE.findall(e.lower()), key=len) for e in entries)
+    return frozenset(max(_WORD_RE.findall(fold(e)), key=len) for e in entries)
 
 
 def alternation(entries: Iterable[str], form: Callable[[str], str]) -> str:

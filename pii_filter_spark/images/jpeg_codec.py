@@ -409,7 +409,17 @@ class _HuffTable:
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
-    """Baseline sequential JPEG -> RGB uint8 (h, w, 3)."""
+    """Baseline sequential JPEG -> RGB uint8 (h, w, 3). Malformed bytes
+    (truncated, corrupt tables or headers) raise ValueError; valid
+    non-baseline JPEGs raise NotImplementedError."""
+    try:
+        return _decode_jpeg(data)
+    except (struct.error, EOFError, IndexError, KeyError, OverflowError,
+            ZeroDivisionError) as exc:
+        raise ValueError(f"malformed JPEG: {exc!r}") from exc
+
+
+def _decode_jpeg(data: bytes) -> np.ndarray:
     if not data.startswith(b"\xff\xd8"):
         raise ValueError("not a JPEG (missing SOI)")
     qt: Dict[int, np.ndarray] = {}

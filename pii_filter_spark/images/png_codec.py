@@ -75,7 +75,16 @@ def _unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:
 
 
 def decode_png(data: bytes) -> np.ndarray:
-    """PNG bytes -> RGB uint8 array (h, w, 3). 8-bit RGB/RGBA, no interlace."""
+    """PNG bytes -> RGB uint8 array (h, w, 3). 8-bit RGB/RGBA, no
+    interlace. Malformed bytes (truncated chunks, corrupt zlib stream)
+    raise ValueError."""
+    try:
+        return _decode_png(data)
+    except (struct.error, zlib.error) as exc:
+        raise ValueError(f"malformed PNG: {exc!r}") from exc
+
+
+def _decode_png(data: bytes) -> np.ndarray:
     if not data.startswith(_SIGNATURE):
         raise ValueError("not a PNG stream")
     pos = len(_SIGNATURE)

@@ -5,7 +5,7 @@ CLIP cosine similarity is below a threshold (0.28 for EN in Schuhmann
 et al. 2021 §2.2). This operator implements that pipeline stage
 Spark-first for the input_hint table (image_id, bytes, caption):
 
-  * ONE mapInPandas over (image_id, bytes, caption) computes both
+  * ONE row-mapping pass over (image_id, bytes, caption) computes both
     embeddings per row — the MB-scale `bytes` column enters exactly one
     Python stage straight off the scan and never shuffles;
   * the cosine is JVM-side: `zip_with` product + left-to-right
@@ -28,12 +28,13 @@ metrics) is the production operator.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator, List, Optional
+from typing import Callable, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .rowmap import map_rows
 
 DIM = 64
 _PROJ_SEED = 23
@@ -111,26 +112,16 @@ def alignment_filter(
     img_fn = image_embed or image_embedding
     txt_fn = text_embed or caption_embedding
 
-    def _embed(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..images import decode_image
+    from ..images import decode_image
 
-        for pdf in batches:
-            rows: List[tuple] = []
-            for rec in pdf.itertuples():
-                try:
-                    px = decode_image(bytes(rec.bytes))
-                    ie = img_fn(px).tolist()
-                except (ValueError, NotImplementedError):
-                    ie = None
-                te = txt_fn(rec.caption).tolist()
-                rows.append((rec.image_id, ie, te))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "img_emb", "txt_emb"]
-            )
+    def _embed(image_id, data, caption):
+        try:
+            ie = img_fn(decode_image(bytes(data))).tolist()
+        except (ValueError, NotImplementedError):
+            ie = None
+        yield image_id, ie, txt_fn(caption).tolist()
 
-    emb = df.select("image_id", "bytes", "caption").mapInPandas(
-        _embed, schema=_EMB_SCHEMA
-    )
+    emb = map_rows(df, ["image_id", "bytes", "caption"], _EMB_SCHEMA, _embed)
     dot = F.aggregate(
         F.zip_with("img_emb", "txt_emb", lambda a, b: a * b),
         F.lit(0.0),

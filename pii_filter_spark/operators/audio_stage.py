@@ -5,18 +5,19 @@ any channel count, mono downmix); bytes without the RIFF magic fall back
 to the deterministic stub so legacy fixtures keep decoding. A production
 deployment injects a soundfile/ffmpeg-backed decoder
 `(bytes) -> (sample_rate, float32 mono ndarray)` for compressed
-containers. Everything Spark-side — mapInPandas batching, column
-pruning, output schema — is real and tested.
+containers. Everything Spark-side — Arrow batching (rowmap.map_rows),
+column pruning, output schema — is real and tested. Undecodable rows
+are quarantined to NULL features / fingerprints, never a failed task.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .rowmap import map_rows
 
 AUDIO_FEATURE_SCHEMA = (
     "audio_id string, sample_rate int, n_samples long, duration_s double, "
@@ -49,69 +50,50 @@ def audio_features(
     id_col: str = "image_id",
     decoder=None,
 ) -> DataFrame:
-    """Per-row acoustic features: duration, RMS, zero-crossing rate, peak."""
+    """Per-row acoustic features: duration, RMS, zero-crossing rate, peak.
+    Undecodable rows get NULL features."""
     decode = decoder or _default_audio_decoder
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                try:
-                    sr, pcm = decode(bytes(getattr(rec, bytes_col)))
-                except NotImplementedError:
-                    rows.append((getattr(rec, id_col), None, None, None,
-                                 None, None, None))
-                    continue
-                n = len(pcm)
-                zc = float(np.mean(np.abs(np.diff(np.signbit(pcm))))) if n > 1 else 0.0
-                rows.append(
-                    (
-                        getattr(rec, id_col),
-                        int(sr),
-                        int(n),
-                        float(n / sr),
-                        float(np.sqrt(np.mean(pcm**2))) if n else 0.0,
-                        zc,
-                        float(np.abs(pcm).max()) if n else 0.0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "audio_id", "sample_rate", "n_samples", "duration_s",
-                    "rms", "zero_crossing_rate", "peak",
-                ],
-            )
+    def _feat(audio_id, data):
+        try:
+            sr, pcm = decode(bytes(data))
+        except (ValueError, NotImplementedError):
+            yield audio_id, None, None, None, None, None, None
+            return
+        n = len(pcm)
+        yield (
+            audio_id,
+            int(sr),
+            int(n),
+            float(n / sr),
+            float(np.sqrt(np.mean(pcm**2))) if n else 0.0,
+            float(np.mean(np.abs(np.diff(np.signbit(pcm))))) if n > 1 else 0.0,
+            float(np.abs(pcm).max()) if n else 0.0,
+        )
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _feat, schema=AUDIO_FEATURE_SCHEMA
-    )
+    return map_rows(df, [id_col, bytes_col], AUDIO_FEATURE_SCHEMA, _feat)
 
 
 def audio_fingerprints(
-    df: DataFrame,
-    id_col: str = "audio_id",
-    bytes_col: str = "bytes",
-    decoder=None,
+    df: DataFrame, id_col: str = "audio_id", bytes_col: str = "bytes"
 ) -> DataFrame:
     """(id, fp64): 64-bit Haitsma-Kalker fingerprint per clip
     (audio/fingerprint.py) — decode + fingerprint in ONE Arrow pass,
     bytes never shuffle. Feeds dedup.hamming_near_pairs (chunks=8 for
     exact recall to hamming<=7), extending near-dup detection to the
     audio modality with the same banded operator text simhash and image
-    pHash use."""
+    pHash use. Undecodable rows get a NULL fingerprint, which drops out
+    of the pairing."""
     from ..audio.fingerprint import audio_fp64
 
-    dec = decoder or _default_audio_decoder
+    def _fp(audio_id, data):
+        try:
+            sr, samples = _default_audio_decoder(bytes(data))
+            fp = audio_fp64(samples, sr)
+        except (ValueError, NotImplementedError):
+            fp = None
+        yield audio_id, fp
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in zip(pdf[id_col], pdf[bytes_col]):
-                sr, samples = dec(bytes(rec[1]))
-                rows.append((rec[0], audio_fp64(samples, sr)))
-            yield pd.DataFrame(rows, columns=["audio_id", "fp64"])
-
-    return df.select(id_col, bytes_col).mapInPandas(
-        _fp, schema="audio_id string, fp64 long"
+    return map_rows(
+        df, [id_col, bytes_col], "audio_id string, fp64 long", _fp
     )

@@ -30,7 +30,8 @@ from typing import Iterator, List
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from .rowmap import map_rows
 
 DEFAULT_M_BITS = 1 << 17  # 16 KB; FP ~0.1% at ~9k entries with k=7
 DEFAULT_K = 7
@@ -103,25 +104,17 @@ def seen_flags(
     sc = df.sparkSession.sparkContext
     b = sc.broadcast(bloom)
 
-    def _flag(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = np.frombuffer(b.value, dtype=np.uint8)
-        for pdf in batches:
-            out = []
-            for rec in pdf.itertuples():
-                t = getattr(rec, text_col)
-                hit = all(
-                    bits[p >> 3] & (1 << (p & 7))
-                    for p in _digest_positions(
-                        text_digest(t if isinstance(t, str) else ""),
-                        m_bits,
-                        k,
-                    )
-                )
-                out.append((getattr(rec, id_col), bool(hit)))
-            yield pd.DataFrame(out, columns=[id_col, "seen"])
+    def _flag(doc_id, t):
+        bits = b.value
+        yield doc_id, all(
+            bits[p >> 3] & (1 << (p & 7))
+            for p in _digest_positions(
+                text_digest(t if isinstance(t, str) else ""), m_bits, k
+            )
+        )
 
-    return df.select(id_col, text_col).mapInPandas(
-        _flag, schema=f"{id_col} long, seen boolean"
+    return map_rows(
+        df, [id_col, text_col], f"{id_col} long, seen boolean", _flag
     )
 
 

@@ -38,24 +38,12 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
-from .textstats import language_id_col
+from .textstats import language_id_col, perplexity_col
 
 HEAD, MIDDLE, TAIL = "head", "middle", "tail"
-
-
-def _ppl_col(text_col) -> "F.Column":
-    from ..core.perplexity import perplexity_batch
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(texts: pd.Series) -> pd.Series:
-        return pd.Series(perplexity_batch(texts), dtype="float64")
-
-    return F.round(_ppl(text_col), 4)
 
 
 def tercile_cutoffs(sorted_ppls: list) -> tuple:
@@ -87,7 +75,7 @@ def ccnet_bins(
     scored = df.select(
         F.col(id_col),
         language_id_col(F.col(text_col)).alias("lang"),
-        _ppl_col(F.col(text_col)).alias("ppl"),
+        perplexity_col(F.col(text_col)).alias("ppl"),
     )
 
     h = F.md5(F.col(id_col).cast("string"))
@@ -125,7 +113,7 @@ def ccnet_bins(
         df.select(
             F.col(id_col),
             language_id_col(F.col(text_col)).alias("lang"),
-            _ppl_col(F.col(text_col)).alias("ppl"),
+            perplexity_col(F.col(text_col)).alias("ppl"),
         )
         .join(F.broadcast(cuts), "lang")
         .select(

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core.perplexity import normalize_for_lm
+from .rowmap import map_rows
 
 _BOS = "\x02"
 MICRO = 1_000_000
@@ -127,21 +128,14 @@ def corpus_lm_scores(
     )
     table, oov = train_micronat_table(counts, top_k)
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ngs, nlls = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                gs = trigrams(t if isinstance(t, str) else "")
-                ids.append(i)
-                ngs.append(len(gs))
-                nlls.append(sum(table.get(g, oov) for g in gs))
-            yield pd.DataFrame(
-                {"id": ids, "n_grams": ngs, "nll_micronats": nlls}
-            )
+    def _score(doc_id, t):
+        gs = trigrams(t if isinstance(t, str) else "")
+        yield doc_id, len(gs), sum(table.get(g, oov) for g in gs)
 
-    out = docs.select(id_col, text_col).mapInPandas(
-        _score, schema=f"id {dict(docs.dtypes)[id_col]}, "
-        "n_grams long, nll_micronats long"
+    out = map_rows(
+        docs, [id_col, text_col],
+        f"id {dict(docs.dtypes)[id_col]}, n_grams long, nll_micronats long",
+        _score,
     )
     return out.withColumnRenamed("id", id_col)
 
@@ -231,24 +225,16 @@ def moore_lewis_scores(
     t_in, oov_in = train_micronat_table(counts_in, top_k, materialize=False)
     t_gen, oov_gen = train_micronat_table(counts_gen, top_k, materialize=False)
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ngs, deltas = [], [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                gs = trigrams(t if isinstance(t, str) else "")
-                nll_in = sum(t_in.get(g, oov_in) for g in gs)
-                nll_gen = sum(t_gen.get(g, oov_gen) for g in gs)
-                ids.append(i)
-                ngs.append(len(gs))
-                deltas.append(nll_in - nll_gen)
-            yield pd.DataFrame(
-                {"id": ids, "n_grams": ngs, "delta_micronats": deltas}
-            )
+    def _score(doc_id, t):
+        gs = trigrams(t if isinstance(t, str) else "")
+        nll_in = sum(t_in.get(g, oov_in) for g in gs)
+        nll_gen = sum(t_gen.get(g, oov_gen) for g in gs)
+        yield doc_id, len(gs), nll_in - nll_gen
 
-    dtype = dict(docs.dtypes)[id_col]
-    out = docs.select(id_col, text_col).mapInPandas(
+    out = map_rows(
+        docs, [id_col, text_col],
+        f"id {dict(docs.dtypes)[id_col]}, n_grams long, delta_micronats long",
         _score,
-        schema=f"id {dtype}, n_grams long, delta_micronats long",
     ).withColumnRenamed("id", id_col)
     avg = F.when(
         F.col("n_grams") > 0,

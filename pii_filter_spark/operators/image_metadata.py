@@ -11,9 +11,9 @@ only pixel-bearing chunks. Decoded pixels are bit-identical afterwards
 (lossless container rewrite — the north rule's PSNR>=40dB invariant
 holds trivially at inf).
 
-Scale shape (100 TB): ONE mapInPandas pass — bytes stream through Arrow
-record batches, never enter a shuffle, and the output projects small
-scalar facts (plus optionally the cleaned bytes for a writeback job).
+Scale shape (100 TB): ONE row-mapping pass (rowmap.map_rows) — bytes
+stream through Arrow record batches, never enter a shuffle, and the
+output projects small scalar facts.
 Chunk walking is a linear scan of the byte string; non-PNG rows (JPEG
 at 10^12-scale would use the same seam with a TIFF/EXIF segment walker)
 pass through untouched and flagged, never erroring the batch.
@@ -22,9 +22,7 @@ pass through untouched and flagged, never erroring the batch.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..core.detect import detect_all
@@ -36,6 +34,7 @@ from ..images.metadata import (
     is_png,
     strip_ancillary,
 )
+from .rowmap import map_rows
 
 META_SCHEMA = (
     "image_id string, is_png boolean, meta_chunks int, meta_fields int, "
@@ -106,26 +105,15 @@ def scrub_image_metadata(
     needed columns before the Arrow exchange so MB-scale rows outside
     them are pruned at the scan."""
 
-    def _scrub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rec[0], *scrub_row(bytes(rec[1])))
-                for rec in zip(pdf[id_col], pdf[bytes_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "is_png", "meta_chunks", "meta_fields",
-                    "meta_pii", "meta_toxic", "bytes_removed", "clean_md5",
-                ],
-            )
+    def _scrub(image_id, data):
+        yield (image_id, *scrub_row(bytes(data)))
 
-    return df.select(id_col, bytes_col).mapInPandas(_scrub, schema=META_SCHEMA)
+    return map_rows(df, [id_col, bytes_col], META_SCHEMA, _scrub)
 
 
 # ---------------------------------------------------------------------------
 # JPEG container twin (images/jpeg_metadata.py): EXIF/COM extraction, GPS
-# detection, lossless APP1/APP13/COM strip. Same one-pass mapInPandas
+# detection, lossless APP1/APP13/COM strip. Same one-pass row-mapping
 # shape as the PNG stage; decode never happens (the strip is a marker-
 # level rewrite that leaves the entropy-coded scan byte-identical).
 # ---------------------------------------------------------------------------
@@ -176,27 +164,13 @@ def scrub_jpeg_metadata(
     df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
 ) -> DataFrame:
     """Per-image JPEG EXIF/COM scrub facts (see scrub_jpeg_row): ONE
-    mapInPandas pass, bytes never shuffle, non-JPEG rows pass through
+    Arrow pass, bytes never shuffle, non-JPEG rows pass through
     flagged."""
 
-    def _scrub(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (rec[0], *scrub_jpeg_row(bytes(rec[1])))
-                for rec in zip(pdf[id_col], pdf[bytes_col])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "is_jpeg", "meta_segments", "meta_fields",
-                    "meta_pii", "meta_toxic", "has_gps", "bytes_removed",
-                    "clean_md5",
-                ],
-            )
+    def _scrub(image_id, data):
+        yield (image_id, *scrub_jpeg_row(bytes(data)))
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _scrub, schema=JPEG_META_SCHEMA
-    )
+    return map_rows(df, [id_col, bytes_col], JPEG_META_SCHEMA, _scrub)
 
 
 def inject_jpeg_fixture_metadata(data: bytes, idx: int) -> bytes:

@@ -10,11 +10,12 @@ blur statistic is the variance of the Laplacian (Pech-Pacheco et al.
 pure numpy, no cv2).
 
 Execution shape — the same one every pixel-touching operator in this
-repo uses: ONE mapInPandas pass directly off the scan (`bytes` never
-shuffles), per-batch vectorized numpy, a codegen keep predicate on the
-two scalar metrics. At 10^12 rows this is a map-only stage fused into
-the scan; undecodable rows surface as keep=false with null metrics
-(quarantine semantics, same as verify_images).
+repo uses: ONE row-mapping pass (rowmap.map_rows) directly off the
+scan (`bytes` never shuffles), vectorized numpy per image, a codegen
+keep predicate on the two scalar metrics. At 10^12 rows this is a
+map-only stage fused into the scan; undecodable rows surface as
+keep=false with null metrics (quarantine semantics, same as
+verify_images).
 
 Thresholds are STUB-CALIBRATED to the deterministic synthetic corpus
 (documented in README's seam table): gradient+noise synth images
@@ -27,14 +28,12 @@ lap_var ~100) is a threshold swap, not a code change.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..images import decode_image
 from ..images.sharpness import gray_entropy, laplacian_var
+from .rowmap import map_rows
 
 LAPVAR_MIN = 25.0
 ENTROPY_MIN = 3.0
@@ -62,22 +61,15 @@ def blur_variants(
     from ..images.codecs import encode_image
     from ..images.sharpness import box_blur
 
-    def _re(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                try:
-                    px = decode_image(bytes(getattr(rec, bytes_col)))
-                    rows.append((
-                        getattr(rec, id_col) + id_suffix,
-                        encode_image(box_blur(px, k), "png"),
-                    ))
-                except (ValueError, NotImplementedError):
-                    continue
-            yield pd.DataFrame(rows, columns=[id_col, bytes_col])
+    def _re(image_id, data):
+        try:
+            out = encode_image(box_blur(decode_image(bytes(data)), k), "png")
+        except (ValueError, NotImplementedError):
+            return
+        yield image_id + id_suffix, out
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _re, schema=f"{id_col} string, {bytes_col} binary"
+    return map_rows(
+        df, [id_col, bytes_col], f"{id_col} string, {bytes_col} binary", _re
     )
 
 
@@ -104,20 +96,14 @@ def image_sharpness(
     """(image_id, lap_var, entropy, keep): one decode pass, keep is a
     codegen predicate over the two metrics."""
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                try:
-                    lv, ent = sharpness_row(bytes(getattr(rec, bytes_col)))
-                except (ValueError, NotImplementedError):
-                    lv = ent = None
-                rows.append((getattr(rec, id_col), lv, ent))
-            yield pd.DataFrame(rows, columns=["image_id", "lap_var", "entropy"])
+    def _score(image_id, data):
+        try:
+            lv, ent = sharpness_row(bytes(data))
+        except (ValueError, NotImplementedError):
+            lv = ent = None
+        yield image_id, lv, ent
 
-    scored = df.select(
-        F.col(id_col).alias("image_id"), F.col(bytes_col).alias(bytes_col)
-    ).mapInPandas(_score, schema=_SCHEMA)
+    scored = map_rows(df, [id_col, bytes_col], _SCHEMA, _score)
     return scored.select(
         "image_id",
         "lap_var",

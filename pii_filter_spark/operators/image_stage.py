@@ -1,10 +1,11 @@
 """Multimodal (image) column operators: verify, features, resize, sampling.
 
 The image `bytes` column is opaque binary with typed metadata (w, h, fmt).
-Decode-touching work runs in mapInPandas batches so each task streams
-Arrow record batches instead of materializing whole partitions (rows are
-MB-scale; session config caps maxRecordsPerBatch accordingly). Decoders:
-the pure-numpy PNG and baseline JPEG codecs in images/.
+Decode-touching work runs row by row through rowmap.map_rows, so each
+task streams Arrow record batches instead of materializing whole
+partitions (rows are MB-scale; session config caps maxRecordsPerBatch
+accordingly). Decoders: the pure-numpy PNG and baseline JPEG codecs in
+images/.
 
 verify_images is the per-row invariant stage (FIXTURES.md B3): decoded
 pixels must exist, match the (w, h) metadata, and PSNR vs a reference
@@ -14,16 +15,14 @@ decode must clear 40 dB for lossy formats (infinite for lossless).
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..images import decode_image, psnr
 from ..images.codecs import encode_image
 from ..sources.synth import LOSSY_QUALITY
+from .rowmap import map_rows
 
 VERIFY_SCHEMA = (
     "image_id string, decode_ok boolean, dims_ok boolean, "
@@ -36,7 +35,7 @@ FEATURE_SCHEMA = (
 )
 
 
-def verify_images(df: DataFrame, thumb: int = 0) -> DataFrame:
+def verify_images(df: DataFrame) -> DataFrame:
     """Decode every image; emit per-row verification facts.
 
     reencode_psnr: decode → re-encode with the same codec → decode again,
@@ -44,32 +43,23 @@ def verify_images(df: DataFrame, thumb: int = 0) -> DataFrame:
     NaN-safe large sentinel 999.0); lossy formats must stay >= 40 dB.
     """
 
-    def _verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                ok = dims = False
-                mean = q = float("nan")
-                try:
-                    px = decode_image(bytes(rec.bytes))
-                    ok = True
-                    dims = px.shape[0] == rec.h and px.shape[1] == rec.w
-                    mean = float(px.mean())
-                    second = decode_image(
-                        encode_image(px, rec.fmt, quality=LOSSY_QUALITY)
-                    )
-                    p = psnr(px, second)
-                    q = 999.0 if math.isinf(p) else p
-                except (ValueError, NotImplementedError):
-                    pass
-                rows.append((rec.image_id, ok, dims, mean, q))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "decode_ok", "dims_ok", "px_mean", "reencode_psnr"],
-            )
+    def _verify(image_id, data, w, h, fmt):
+        ok = dims = False
+        mean = q = float("nan")
+        try:
+            px = decode_image(bytes(data))
+            ok = True
+            dims = px.shape[0] == h and px.shape[1] == w
+            mean = float(px.mean())
+            second = decode_image(encode_image(px, fmt, quality=LOSSY_QUALITY))
+            p = psnr(px, second)
+            q = 999.0 if math.isinf(p) else p
+        except (ValueError, NotImplementedError):
+            pass
+        yield image_id, ok, dims, mean, q
 
-    return df.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        _verify, schema=VERIFY_SCHEMA
+    return map_rows(
+        df, ["image_id", "bytes", "w", "h", "fmt"], VERIFY_SCHEMA, _verify
     )
 
 
@@ -79,36 +69,26 @@ def image_features(df: DataFrame, thumb_size: int = 8) -> DataFrame:
     This is the feature/resize plumbing a real CLIP/embedding stage would
     occupy; the features themselves are deterministic stand-ins."""
 
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                try:
-                    px = decode_image(bytes(rec.bytes)).astype(np.float64)
-                except (ValueError, NotImplementedError):
-                    rows.append((rec.image_id, None, None, None, None, None))
-                    continue
-                gray = px.mean(axis=2)
-                h, w = gray.shape
-                yi = np.linspace(0, h - 1, thumb_size).round().astype(int)
-                xi = np.linspace(0, w - 1, thumb_size).round().astype(int)
-                tb = gray[np.ix_(yi, xi)].round().astype(int).ravel().tolist()
-                rows.append(
-                    (
-                        rec.image_id,
-                        float(px[:, :, 0].mean()),
-                        float(px[:, :, 1].mean()),
-                        float(px[:, :, 2].mean()),
-                        float(gray.std()),
-                        tb,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "mean_r", "mean_g", "mean_b", "std_gray", "thumb"],
-            )
+    def _feat(image_id, data):
+        try:
+            px = decode_image(bytes(data)).astype(np.float64)
+        except (ValueError, NotImplementedError):
+            yield image_id, None, None, None, None, None
+            return
+        gray = px.mean(axis=2)
+        h, w = gray.shape
+        yi = np.linspace(0, h - 1, thumb_size).round().astype(int)
+        xi = np.linspace(0, w - 1, thumb_size).round().astype(int)
+        yield (
+            image_id,
+            float(px[:, :, 0].mean()),
+            float(px[:, :, 1].mean()),
+            float(px[:, :, 2].mean()),
+            float(gray.std()),
+            gray[np.ix_(yi, xi)].round().astype(int).ravel().tolist(),
+        )
 
-    return df.select("image_id", "bytes").mapInPandas(_feat, schema=FEATURE_SCHEMA)
+    return map_rows(df, ["image_id", "bytes"], FEATURE_SCHEMA, _feat)
 
 
 FRAME_SCHEMA = (
@@ -132,8 +112,8 @@ def _fake_video_decoder(data: bytes, w: int, h: int):
     """SANDBOX decode stub (no video codec in this container): yields a
     deterministic pseudo-frame sequence derived from the byte content —
     frame count = len(data) // 1024 + 1, pixels seeded by (digest, idx).
-    A production deployment injects a PyAV/ffmpeg-backed decoder with the
-    same signature: (bytes, w, h) -> iterator of (idx, HxWx3 uint8)."""
+    A production deployment swaps in a PyAV/ffmpeg-backed decoder with
+    the same signature: (bytes, w, h) -> iterator of (idx, HxWx3 uint8)."""
     import hashlib
 
     digest = hashlib.blake2b(data, digest_size=8).digest()
@@ -144,77 +124,51 @@ def _fake_video_decoder(data: bytes, w: int, h: int):
         yield idx, rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
 
 
-def sample_video_frames(
-    df: DataFrame, every_n: int = 30, decoder=None
-) -> DataFrame:
+def sample_video_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
     """Every-Nth-frame sampling over an opaque video `bytes` column.
 
-    The Spark plumbing is real — mapInPandas fan-out (one input row →
+    The Spark plumbing is real — a row-mapping fan-out (one input row →
     many frame rows), Arrow-batched, column-pruned to (image_id, bytes,
     w, h) — and the codec is REAL for MJPEG AVI input (video/avi.py);
-    other bytes hit the documented injectable stub. Frames are
-    re-encoded as PNG bytes so the output column is storable/chainable
-    into image operators.
+    other bytes hit the documented stub. Undecodable clips yield no
+    frames. Frames are re-encoded as PNG bytes so the output column is
+    storable/chainable into image operators.
     """
-    decode = decoder or _default_video_decoder
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                try:
-                    frames = decode(bytes(rec.bytes), rec.w, rec.h)
-                except NotImplementedError:
-                    continue
-                for idx, px in frames:
-                    if idx % every_n:
-                        continue
-                    rows.append(
-                        (
-                            rec.image_id,
-                            idx,
-                            px.shape[1],
-                            px.shape[0],
-                            float(px.mean()),
-                            encode_image(px, "png"),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "video_id", "frame_idx", "frame_w", "frame_h",
-                    "frame_gray_mean", "frame_bytes",
-                ],
-            )
+    def _sample(image_id, data, w, h):
+        try:
+            frames = _default_video_decoder(bytes(data), w, h)
+        except (ValueError, NotImplementedError):
+            return
+        for idx, px in frames:
+            if idx % every_n == 0:
+                yield (
+                    image_id, idx, px.shape[1], px.shape[0],
+                    float(px.mean()), encode_image(px, "png"),
+                )
 
-    return df.select("image_id", "bytes", "w", "h").mapInPandas(
-        _sample, schema=FRAME_SCHEMA
-    )
+    return map_rows(df, ["image_id", "bytes", "w", "h"], FRAME_SCHEMA, _sample)
 
 
 def compute_phash(
     df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
 ) -> DataFrame:
     """(id, pixel_phash) — DCT pHash computed FROM decoded pixel content
-    (images/phash.py), one mapInPandas pass; the MB-scale bytes column
-    never shuffles. Decode failures yield NULL. Feeding these hashes to
+    (images/phash.py), one Arrow pass; the MB-scale bytes column never
+    shuffles. Decode failures yield NULL. Feeding these hashes to
     dedup.hamming_near_pairs turns phash near-dup into CONTENT near-dup
     (robust to re-encodes — see q_pixel_phash_pairs)."""
     from ..images.phash import phash64
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                try:
-                    ph = phash64(decode_image(bytes(getattr(rec, bytes_col))))
-                except (ValueError, NotImplementedError):
-                    ph = None
-                rows.append((getattr(rec, id_col), ph))
-            yield pd.DataFrame(rows, columns=[id_col, "pixel_phash"])
+    def _hash(image_id, data):
+        try:
+            ph = phash64(decode_image(bytes(data)))
+        except (ValueError, NotImplementedError):
+            ph = None
+        yield image_id, ph
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _hash, schema=f"{id_col} string, pixel_phash long"
+    return map_rows(
+        df, [id_col, bytes_col], f"{id_col} string, pixel_phash long", _hash
     )
 
 
@@ -227,22 +181,18 @@ def reencode_variants(
 ) -> DataFrame:
     """Lossy re-encodes of each image (decode -> jpeg at `quality`) with
     suffixed ids — the deterministic stand-in for the re-crawled /
-    re-hosted copies a web corpus contains."""
+    re-hosted copies a web corpus contains. Undecodable rows get no
+    variant."""
 
-    def _re(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in pdf.itertuples():
-                try:
-                    px = decode_image(bytes(getattr(rec, bytes_col)))
-                    data = encode_image(px, "jpeg", quality=quality)
-                    rows.append((getattr(rec, id_col) + id_suffix, data))
-                except (ValueError, NotImplementedError):
-                    continue
-            yield pd.DataFrame(rows, columns=[id_col, bytes_col])
+    def _re(image_id, data):
+        try:
+            out = encode_image(decode_image(bytes(data)), "jpeg", quality=quality)
+        except (ValueError, NotImplementedError):
+            return
+        yield image_id + id_suffix, out
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _re, schema=f"{id_col} string, {bytes_col} binary"
+    return map_rows(
+        df, [id_col, bytes_col], f"{id_col} string, {bytes_col} binary", _re
     )
 
 
@@ -286,35 +236,24 @@ def resize_to_buckets(
     bytes_col: str = "bytes",
 ) -> DataFrame:
     """Training-export resize: every image decoded, area-resampled to its
-    SDXL-style aspect bucket, re-encoded as baseline JPEG — ONE
-    mapInPandas pass, bytes never shuffle. with_bytes=True emits the
-    re-encoded bytes for a writeback job; default emits scalar facts
-    (len + md5) so the driver query stays cheap to hash-check."""
+    SDXL-style aspect bucket, re-encoded as baseline JPEG — ONE Arrow
+    pass, bytes never shuffle. with_bytes=True emits the re-encoded
+    bytes for a writeback job; default emits scalar facts (len + md5) so
+    the driver query stays cheap to hash-check."""
     if not buckets:
         # misconfiguration must fail fast here — inside the task it
         # would be swallowed by the per-row quarantine below
         raise ValueError("buckets must be non-empty")
+    width = 5 if with_bytes else 4
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    bw, bh, n, md5, jb = resize_export_row(
-                        rec[1], buckets, quality
-                    )
-                except (ValueError, NotImplementedError):
-                    # quarantine undecodable rows (null facts) instead
-                    # of failing the whole export task deterministically
-                    bw = bh = n = md5 = jb = None
-                row = [rec[0], bw, bh, n, md5]
-                if with_bytes:
-                    row.append(jb)
-                rows.append(tuple(row))
-            cols = [id_col, "bucket_w", "bucket_h", "out_len", "out_md5"]
-            if with_bytes:
-                cols.append("out_bytes")
-            yield pd.DataFrame(rows, columns=cols)
+    def _resize(image_id, data):
+        try:
+            facts = resize_export_row(data, buckets, quality)
+        except (ValueError, NotImplementedError):
+            # quarantine undecodable rows (null facts) instead of
+            # failing the whole export task deterministically
+            facts = (None,) * 5
+        yield (image_id, *facts[:width])
 
     schema = (
         f"{id_col} string, bucket_w int, bucket_h int, "
@@ -322,7 +261,7 @@ def resize_to_buckets(
     )
     if with_bytes:
         schema += ", out_bytes binary"
-    return df.select(id_col, bytes_col).mapInPandas(_resize, schema=schema)
+    return map_rows(df, [id_col, bytes_col], schema, _resize)
 
 
 def video_middle_frame_phash(
@@ -338,24 +277,17 @@ def video_middle_frame_phash(
     from ..images.phash import phash64
     from ..video.avi import decode_avi_mjpeg
 
-    def _fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in zip(pdf[id_col], pdf[bytes_col]):
-                try:
-                    _, frames = decode_avi_mjpeg(bytes(rec[1]))
-                    if not frames:
-                        raise ValueError("zero-frame clip")
-                    mid = frames[len(frames) // 2]
-                    rows.append((rec[0], len(frames), phash64(mid)))
-                except (ValueError, NotImplementedError):
-                    # quarantine, same semantics as compute_phash: the
-                    # null hash drops out of the near-dup pairing
-                    rows.append((rec[0], None, None))
-            yield pd.DataFrame(
-                rows, columns=["video_id", "n_frames", "mid_phash"]
-            )
+    def _fp(video_id, data):
+        try:
+            _, frames = decode_avi_mjpeg(bytes(data))
+            fp = (len(frames), phash64(frames[len(frames) // 2]))
+        except (ValueError, NotImplementedError):
+            # quarantine, same semantics as compute_phash: the null hash
+            # drops out of the near-dup pairing
+            fp = (None, None)
+        yield (video_id, *fp)
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _fp, schema="video_id string, n_frames int, mid_phash long"
+    return map_rows(
+        df, [id_col, bytes_col],
+        "video_id string, n_frames int, mid_phash long", _fp,
     )

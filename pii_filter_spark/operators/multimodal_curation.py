@@ -10,7 +10,7 @@ decode cost:
   3. content dedup           — pixel pHash, min-id survivor per hash.
 
 The expensive part at 10^12 rows is DECODING BYTES — so gates 2 and 3
-share ONE mapInPandas pass: decode once, emit (img_emb, txt_emb,
+share ONE row-mapping pass: decode once, emit (img_emb, txt_emb,
 pixel_phash) together. Everything downstream is JVM-side: the fold
 cosine, the keep conjunction, and the two-phase skew-safe min-id
 survivor (dedup_by_key). The bytes column never shuffles; the only
@@ -22,13 +22,11 @@ columns a curation report needs for per-gate loss accounting.
 
 from __future__ import annotations
 
-from typing import Iterator, List
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .alignment import DEFAULT_THRESHOLD, caption_embedding, image_embedding
+from .rowmap import map_rows
 
 _FUSED_SCHEMA = (
     "image_id string, img_emb array<double>, txt_emb array<double>, "
@@ -38,31 +36,19 @@ _FUSED_SCHEMA = (
 
 def _fused_decode_stage(df: DataFrame) -> DataFrame:
     """One decode per image -> both embeddings + pixel pHash."""
+    from ..images import decode_image
+    from ..images.phash import phash64
 
-    def _go(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..images import decode_image
-        from ..images.phash import phash64
+    def _go(image_id, data, caption):
+        te = caption_embedding(caption).tolist()
+        try:
+            px = decode_image(bytes(data))
+            ie, ph = image_embedding(px).tolist(), phash64(px)
+        except (ValueError, NotImplementedError):
+            ie = ph = None
+        yield image_id, ie, te, ph
 
-        for pdf in batches:
-            rows: List[tuple] = []
-            for rec in pdf.itertuples():
-                te = caption_embedding(rec.caption).tolist()
-                try:
-                    px = decode_image(bytes(rec.bytes))
-                    rows.append(
-                        (rec.image_id, image_embedding(px).tolist(), te,
-                         phash64(px))
-                    )
-                except (ValueError, NotImplementedError):
-                    rows.append((rec.image_id, None, te, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "img_emb", "txt_emb", "pixel_phash"],
-            )
-
-    return df.select("image_id", "bytes", "caption").mapInPandas(
-        _go, schema=_FUSED_SCHEMA
-    )
+    return map_rows(df, ["image_id", "bytes", "caption"], _FUSED_SCHEMA, _go)
 
 
 def multimodal_curation(

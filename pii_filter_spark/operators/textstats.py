@@ -1,7 +1,7 @@
 """Text-analysis operators over a document table (training-data pipeline).
 
 All-native where possible (token counts and fingerprints stay in
-codegen); langid is the one model-backed pandas UDF.
+codegen); langid and perplexity are the model-backed pandas UDFs.
 """
 
 from __future__ import annotations
@@ -9,7 +9,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import DoubleType, StringType
 
 from ..core.langid import detect_language
 
@@ -117,18 +117,22 @@ def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def perplexity_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, ppl): char-trigram perplexity, rounded to 4 decimals."""
-    from pyspark.sql.types import DoubleType
-
+def perplexity_col(text_col) -> "F.Column":
+    """Char-trigram perplexity rounded to 4 decimals, as a COLUMN (Arrow
+    UDF) — the perplexity twin of language_id_col."""
     from ..core.perplexity import perplexity_batch
 
     @F.pandas_udf(DoubleType())
     def _ppl(texts: pd.Series) -> pd.Series:
         return pd.Series(perplexity_batch(texts), dtype="float64")
 
+    return F.round(_ppl(text_col), 4)
+
+
+def perplexity_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(id, ppl): char-trigram perplexity, rounded to 4 decimals."""
     return df.select(
-        F.col(id_col), F.round(_ppl(F.col(text_col)), 4).alias("ppl")
+        F.col(id_col), perplexity_col(F.col(text_col)).alias("ppl")
     )
 
 

@@ -1,24 +1,22 @@
 """WARC/WET archive → record rows (web-pipeline stage 0 as a Spark
 operator).
 
-One mapInPandas pass: each input row holds one archive shard blob
-(exactly how Common Crawl ships — ~1 GB .warc.gz shards of per-record
-gzip members); the stage explodes it into (archive_id, rec_idx,
-warc_type, url, text) rows. Nothing shuffles; at 10^12 scale the
-parallelism is the shard count and each task's memory is bounded by one
-shard. Downstream this feeds html_extract → line_clean → langid →
-quality → dedup — the full RefinedWeb chain, every link of which exists
-in this repo.
+One row-mapping pass (rowmap.map_rows): each input row holds one
+archive shard blob (exactly how Common Crawl ships — ~1 GB .warc.gz
+shards of per-record gzip members); the stage explodes it into
+(archive_id, rec_idx, warc_type, url, text) rows. Nothing shuffles; at
+10^12 scale the parallelism is the shard count and each task's memory
+is bounded by one shard. Downstream this feeds html_extract →
+line_clean → langid → quality → dedup — the full RefinedWeb chain, every
+link of which exists in this repo.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..sources.warc import extract_text_records
+from .rowmap import map_rows
 
 WARC_SCHEMA = (
     "archive_id string, rec_idx int, warc_type string, url string, "
@@ -32,19 +30,8 @@ def parse_warc_archives(
     """(archive_id, rec_idx, warc_type, url, text) for every text-bearing
     record of every archive blob."""
 
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for rec in zip(pdf[id_col], pdf[bytes_col]):
-                for i, (wtype, uri, text) in enumerate(
-                    extract_text_records(bytes(rec[1]))
-                ):
-                    rows.append((rec[0], i, wtype, uri, text))
-            yield pd.DataFrame(
-                rows,
-                columns=["archive_id", "rec_idx", "warc_type", "url", "text"],
-            )
+    def _parse(archive_id, data):
+        for i, (wtype, uri, text) in enumerate(extract_text_records(bytes(data))):
+            yield archive_id, i, wtype, uri, text
 
-    return df.select(id_col, bytes_col).mapInPandas(
-        _parse, schema=WARC_SCHEMA
-    )
+    return map_rows(df, [id_col, bytes_col], WARC_SCHEMA, _parse)

@@ -1073,47 +1073,33 @@ def phash_near_pairs_sql(sf_dir: str) -> str:
 
 
 def audio_near_pairs_sql(sf_dir: str) -> str:
-    """q_audio_near_pairs expected pairs: same synth/encode/decode/
-    fingerprint chain, then the chunks x (64/chunks)-bit bucket pairing
-    the banded operator performs."""
+    """q_audio_near_pairs expected pairs: same planted WAV bytes, same
+    decode/fingerprint chain, then the chunks x (64/chunks)-bit bucket
+    pairing the banded operator performs."""
     from .audio.fingerprint import audio_fp64
-    from .audio.wav import decode_wav, encode_wav, synth_tone
+    from .audio.wav import decode_wav, planted_tones
 
     rows = []
     for i in range(200):
-        x = synth_tone(i)
-        sr, dec = decode_wav(encode_wav(x))
-        rows.append((f"aud_{i:06d}", audio_fp64(dec, sr)))
-        if i % 5 == 0:
-            rng = np.random.default_rng((77, i))
-            noisy = np.clip(
-                0.95 * x + 0.01 * rng.standard_normal(len(x)), -1.0, 1.0
-            )
-            sr2, dec2 = decode_wav(encode_wav(noisy))
-            rows.append((f"aud_{i:06d}_re", audio_fp64(dec2, sr2)))
+        for aid, data in planted_tones(i):
+            sr, pcm = decode_wav(data)
+            rows.append((aid, audio_fp64(pcm, sr)))
     return _values_sql(_hamming_pairs(rows, 7, chunks=8),
                        ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])
 
 
 def video_near_dup_sql(sf_dir: str) -> str:
-    """q_video_near_dup expected pairs: same synth/encode/decode/
-    middle-frame-pHash chain, same chunk-bucket pairing."""
+    """q_video_near_dup expected pairs: same planted AVI bytes, same
+    decode/middle-frame-pHash chain, same chunk-bucket pairing."""
     from .images.phash import phash64
-    from .video.avi import decode_avi_mjpeg, encode_avi_mjpeg, synth_clip
+    from .video.avi import decode_avi_mjpeg, planted_clips
 
     rows = []
     for i in range(100):
-        frames = synth_clip(i)
-
-        def fp(quality):
-            data = encode_avi_mjpeg(frames, fps=10, quality=quality)
-            decoded = decode_avi_mjpeg(data)[1]
-            return phash64(decoded[len(decoded) // 2])
-
-        rows.append((f"vid_{i:06d}", fp(90)))
-        if i % 4 == 0:
-            rows.append((f"vid_{i:06d}_re", fp(70)))
+        for vid, data in planted_clips(i):
+            frames = decode_avi_mjpeg(data)[1]
+            rows.append((vid, phash64(frames[len(frames) // 2])))
     return _values_sql(_hamming_pairs(rows, 7, chunks=8),
                        ["id_a", "id_b", "hamming"],
                        ["VARCHAR", "VARCHAR", "INT"])

@@ -119,7 +119,6 @@ def run_pipeline(
             f"{', '.join(map(str, sorted(recorded)))} recorded in the "
             f"manifest of {output_path}"
         )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     src = with_part_id(table_io.read_table(spark, input_path), num_parts)
     if scrub_image_bytes:
         src = scrub_bytes_stage(src)
@@ -132,10 +131,11 @@ def run_pipeline(
         batch = todo[batch_idx : batch_idx + batch_parts]
         t0 = time.perf_counter()
         counts = spark.sparkContext.accumulator({}, PartCounts())
-        # dynamic overwrite: exactly these part_id directories are replaced
-        batch_frame(src, batch, counts).write.mode("overwrite").partitionBy(
-            PART_COL
-        ).parquet(output_path)
+        # dynamic overwrite, set on this write only (the session's mode is
+        # left alone): exactly these part_id directories are replaced
+        batch_frame(src, batch, counts).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(PART_COL).parquet(output_path)
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
         # counted by the write's own UDF; complete once the action returns

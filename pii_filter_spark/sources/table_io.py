@@ -7,7 +7,7 @@ us the two Iceberg behaviours the pipeline depends on:
   * snapshot-ish atomicity — output partitions land under part_id=K
     directories and only count once their manifest entry exists;
   * metadata for checkpoint/resume — the manifest doubles as the
-    completed-partition set (operators/checkpoint.py).
+    completed-partition set (pipeline.run_pipeline).
 
 Keeping reads/writes behind this seam means swapping in
 `spark.read.format("iceberg")` is a config change, not a code change.

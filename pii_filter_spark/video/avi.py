@@ -85,7 +85,16 @@ def encode_avi_mjpeg(
 
 
 def decode_avi_mjpeg(data: bytes) -> Tuple[float, List[np.ndarray]]:
-    """MJPEG AVI bytes -> (fps, frames as RGB uint8 arrays)."""
+    """MJPEG AVI bytes -> (fps, frames as RGB uint8 arrays). Malformed
+    bytes (truncated chunks, corrupt frames, LIST nesting deeper than the
+    recursive chunk walk) raise ValueError."""
+    try:
+        return _decode_avi_mjpeg(data)
+    except (struct.error, RecursionError) as exc:
+        raise ValueError(f"malformed AVI: {exc!r}") from exc
+
+
+def _decode_avi_mjpeg(data: bytes) -> Tuple[float, List[np.ndarray]]:
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         raise ValueError("not a RIFF/AVI container")
     fps = 0.0
@@ -148,3 +157,17 @@ def synth_clip(idx: int, n_frames: int = None) -> List[np.ndarray]:
         )
         frames.append(np.clip(px, 0, 255).astype(np.uint8))
     return frames
+
+
+def planted_clips(idx: int) -> List[Tuple[str, bytes]]:
+    """[(video_id, MJPEG AVI bytes)]: synth clip idx at quality 90, plus a
+    quality-70 re-encode of every 4th clip — the planted near-dup of
+    q_video_near_dup. Pure function shared by the query's input builder
+    and its fixture oracle."""
+    frames = synth_clip(idx)
+    out = [(f"vid_{idx:06d}", encode_avi_mjpeg(frames, fps=10, quality=90))]
+    if idx % 4 == 0:
+        out.append(
+            (f"vid_{idx:06d}_re", encode_avi_mjpeg(frames, fps=10, quality=70))
+        )
+    return out

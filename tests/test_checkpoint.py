@@ -120,3 +120,19 @@ def test_resume_with_other_num_parts_is_refused(spark, tmp_path_factory):
     with pytest.raises(ValueError, match=r"num_parts=8 .*num_parts=4"):
         run_pipeline(spark, inp, out, num_parts=8, batch_parts=2)
     assert table_io.read_manifest(out) == before
+
+
+def test_run_pipeline_leaves_the_session_overwrite_mode(spark, tmp_path):
+    """The pipeline sets dynamic partition overwrite on its own writes; the
+    caller's session keeps its partitionOverwriteMode, so a later overwrite
+    in that session still replaces the whole table."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    inp = str(tmp_path / "input")
+    write_input_table(spark, inp, 40, seed=SEED, num_partitions=2)
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        run_pipeline(spark, inp, str(tmp_path / "out"), num_parts=4, batch_parts=2)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, before)

@@ -150,7 +150,12 @@ def _gate_inputs():
         "Amil Saúde " + "Abcd " * 50, "A Petro S.A. cresceu.",
         "Contrato com Xyz Ltda. e Abc S/A", "Loja Abc MEU ponto", "Abc EPP",
         "laudo médico, Diretora Ana Lima, Rua XV de Novembro, Caxias do Sul",
+        "ſtupid", "İDIOTA", "Dıretor Comercial", "Dİretor de Vendas",
     ]
+    # the characters re.IGNORECASE folds onto i and s but str.lower() does not
+    texts += [t.replace("i", "ı") for t in texts[:300]]
+    texts += [t.replace("s", "ſ") for t in texts[:300]]
+    texts += [t.replace("I", "İ").replace("i", "İ") for t in texts[:300]]
     if os.path.exists("/root/reference/dataset.json"):
         texts += [
             c["prompt_text"] for c in json.load(open("/root/reference/dataset.json"))
@@ -179,6 +184,30 @@ def test_rule_gates_are_necessary_conditions():
                 assert rule.pattern.search(text) is None, (rule.type, i, text)
                 skipped.add(i)
     assert skipped == set(range(len(rules)))  # every gate really skips
+
+
+def test_fold_maps_ignorecase_matches_onto_gate_letters():
+    """rules.fold turns every code point that re.IGNORECASE matches to a
+    letter of the gate vocabularies into exactly that letter, so a folded
+    word equals the gate word whenever a case-insensitive pattern equals it."""
+    import re
+
+    from pii_filter_spark.core import ner_dictionary, sensitive, toxicity
+    from pii_filter_spark.core.rules import fold
+
+    rules = ner_dictionary.RULES + sensitive.SENSITIVE_RULES + toxicity.RULES
+    letters = {
+        ch for r in rules if isinstance(r.gate, frozenset) for w in r.gate for ch in w
+    }
+    any_letter = re.compile("[" + re.escape("".join(sorted(letters))) + "]", re.I)
+    folded = 0
+    for cp in range(0x110000):
+        c = chr(cp)
+        if any_letter.fullmatch(c):
+            matched = {g for g in letters if re.fullmatch(re.escape(g), c, re.I)}
+            assert matched == {fold(c)}, (hex(cp), matched, fold(c))
+            folded += fold(c) != c.lower()
+    assert folded == 3  # İ, ı and ſ
 
 
 def test_legal_suffix_org_needs_no_other_org_word():

@@ -36,7 +36,10 @@ def map_rows(
             rows = []
             for values in pdf.itertuples(index=False, name=None):
                 rows.extend(fn(*values))
-            yield pd.DataFrame(rows, columns=names)
+            # object columns: Arrow converts each Python value to the
+            # schema type, where pandas would widen an int column that
+            # holds a NULL to float64 and round 64-bit hashes to 53 bits
+            yield pd.DataFrame(rows, columns=names, dtype=object)
 
     _rows.__name__ = fn.__name__
     return df.select(*cols).mapInPandas(_rows, schema=schema)

@@ -104,9 +104,14 @@ def test_named_malformed_cases_are_value_errors():
 
 
 def test_truncated_rows_are_quarantined_by_the_stages(spark):
-    """compute_phash, verify_images, audio_fingerprints, audio_features and
-    sample_video_frames complete over truncated files; those rows get NULL
-    hashes and features, decode_ok false, no frames."""
+    """compute_phash, the fused curation decode, verify_images,
+    audio_fingerprints, audio_features, sample_video_frames and
+    video_middle_frame_phash complete over truncated files; those rows get
+    NULL hashes and features, decode_ok false, no frames. Each table is one
+    partition, so the healthy row shares its Arrow batch with the NULL rows
+    and must keep its exact 64-bit hash."""
+    from pii_filter_spark.audio.fingerprint import audio_fp64
+    from pii_filter_spark.images.phash import phash64
     from pii_filter_spark.operators.audio_stage import (
         audio_features,
         audio_fingerprints,
@@ -115,7 +120,10 @@ def test_truncated_rows_are_quarantined_by_the_stages(spark):
         compute_phash,
         sample_video_frames,
         verify_images,
+        video_middle_frame_phash,
     )
+    from pii_filter_spark.operators.multimodal_curation import _fused_decode_stage
+    from pyspark.sql import functions as F
 
     files = _valid()
     png, jpeg, wav = files["png"][1], files["jpeg"][1], files["wav"][1]
@@ -129,10 +137,16 @@ def test_truncated_rows_are_quarantined_by_the_stages(spark):
     df = spark.createDataFrame(
         [(i, b, 24, 16, f) for i, b, f in images],
         "image_id string, bytes binary, w int, h int, fmt string",
-    ).repartition(2)
-    hashes = {r.image_id: r.pixel_phash for r in compute_phash(df).collect()}
-    assert hashes.pop("ok_png") is not None
-    assert hashes == {i: None for i, _, _ in images[1:]}
+    ).coalesce(1)
+    expected = phash64(decode_image(png))
+    assert abs(expected) > 2**53  # not exact in float64
+    for hashes in (
+        {r.image_id: r.pixel_phash for r in compute_phash(df).collect()},
+        {r.image_id: r.pixel_phash for r in _fused_decode_stage(
+            df.withColumn("caption", F.lit("uma foto"))).collect()},
+    ):
+        assert hashes.pop("ok_png") == expected
+        assert hashes == {i: None for i, _, _ in images[1:]}
     verified = {r.image_id: r for r in verify_images(df).collect()}
     assert verified.pop("ok_png").decode_ok
     assert sorted(verified) == sorted(i for i, _, _ in images[1:])
@@ -141,9 +155,11 @@ def test_truncated_rows_are_quarantined_by_the_stages(spark):
     audio = spark.createDataFrame(
         [("ok", wav), ("wav_30", wav[:30]), ("half", wav[: len(wav) // 2 + 1])],
         "audio_id string, bytes binary",
-    )
+    ).coalesce(1)
     fps = {r.audio_id: r.fp64 for r in audio_fingerprints(audio).collect()}
-    assert fps["ok"] is not None and fps["wav_30"] is None
+    expected = audio_fp64(*decode_wav(wav)[::-1])
+    assert abs(expected) > 2**53
+    assert fps["ok"] == expected and fps["wav_30"] is None
     assert len(fps) == 3
     feats = {r.audio_id: r for r in audio_features(audio, id_col="audio_id").collect()}
     assert feats["ok"].sample_rate == 16_000 and feats["wav_30"].sample_rate is None
@@ -152,6 +168,12 @@ def test_truncated_rows_are_quarantined_by_the_stages(spark):
     clips = spark.createDataFrame(
         [("ok", avi, 24, 16), ("half", avi[: len(avi) // 2], 24, 16)],
         "image_id string, bytes binary, w int, h int",
-    )
+    ).coalesce(1)
     frames = {r.video_id for r in sample_video_frames(clips, every_n=1).collect()}
     assert frames == {"ok"}
+    mid = decode_avi_mjpeg(avi)[1]
+    expected = phash64(mid[len(mid) // 2])
+    assert abs(expected) > 2**53
+    mids = {r.video_id: r.mid_phash for r in video_middle_frame_phash(
+        clips.withColumnRenamed("image_id", "video_id")).collect()}
+    assert mids == {"ok": expected, "half": None}

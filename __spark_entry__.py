@@ -905,13 +905,11 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
 
     def _gen(i):
-        frames = synth_clip(i)
-        h, w = frames[0].shape[:2]
-        yield f"vid_{i:06d}", encode_avi_mjpeg(frames, fps=10, quality=90), w, h
+        yield f"vid_{i:06d}", encode_avi_mjpeg(synth_clip(i), fps=10, quality=90)
 
     vids = map_rows(
         spark.range(0, 100, numPartitions=8), ["id"],
-        "image_id string, bytes binary, w int, h int", _gen,
+        "image_id string, bytes binary", _gen,
     )
     return sample_video_frames(vids, every_n=2).select(
         "video_id", "frame_idx", "frame_w", "frame_h",

@@ -1,12 +1,10 @@
 """RIFF/WAVE PCM codec — real audio bytes, pure stdlib+numpy.
 
-Round-3/4 realism push (same motivation as images/jpeg_codec.py): the
-audio column previously carried opaque bytes decoded by a documented
-stub. WAVE PCM is a trivial public container (Microsoft/IBM RIFF spec,
-1991), so the decode seam can be REAL: these bytes open in any audio
-player, and any PCM WAV (8/16-bit, any channel count — downmixed to
-mono) decodes here. Non-RIFF bytes still fall back to the injectable
-stub in operators/audio_stage.py, keeping the old plumbing contract.
+WAVE PCM is a trivial public container (Microsoft/IBM RIFF spec, 1991),
+so the audio decode is real: these bytes open in any audio player, and
+any PCM WAV (8/16-bit, any channel count — downmixed to mono) decodes
+here. Anything else, non-RIFF bytes included, raises ValueError, which
+the stages in operators/audio_stage.py quarantine.
 
 Everything is deterministic integer/float math shared verbatim by the
 Spark stage and the fixture oracle.

@@ -29,6 +29,8 @@ from typing import Dict, List, Tuple
 
 import numpy as np
 
+from .phash import _dct_matrix
+
 # --- public spec constants (ITU-T T.81 Annex K) ----------------------------
 
 QUANT_LUM = np.array(
@@ -100,17 +102,12 @@ AC_CHROM_VALS = [
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA]
 
 
-def _dct_matrix() -> np.ndarray:
-    n = 8
-    k = np.arange(n)
-    mat = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / (2 * n))
-    mat *= np.sqrt(2.0 / n)
-    mat[0, :] = np.sqrt(1.0 / n)
-    return mat
-
-
-_DCT = _dct_matrix()
+_DCT = _dct_matrix(8)
 _IDCT = _DCT.T
+# 8-bit samples keep the DC coefficient within [-1024, 1016] (T.81 A.3.3)
+# and DC differences are coded in magnitude categories <= 11 (Table F.1):
+# a DC predictor beyond +-2047 comes only from a corrupt scan.
+_DC_MAX = 2047
 
 
 def _scaled_quant(base: np.ndarray, quality: int) -> np.ndarray:
@@ -410,8 +407,9 @@ class _HuffTable:
 
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Baseline sequential JPEG -> RGB uint8 (h, w, 3). Malformed bytes
-    (truncated, corrupt tables or headers) raise ValueError; valid
-    non-baseline JPEGs raise NotImplementedError."""
+    (truncated, corrupt tables, headers or coefficients) and valid
+    non-baseline JPEGs (progressive, lossless, arithmetic) raise
+    ValueError."""
     try:
         return _decode_jpeg(data)
     except (struct.error, EOFError, IndexError, KeyError, OverflowError,
@@ -477,7 +475,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                 )
         elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
                         0xCD, 0xCE, 0xCF):
-            raise NotImplementedError(
+            raise ValueError(
                 f"non-baseline JPEG (SOF marker 0x{marker:02X})"
             )
         elif marker == 0xDD:  # DRI
@@ -532,6 +530,8 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                     size = dc_tbl.decode(br)
                     diff = _extend(br.receive(size), size) if size else 0
                     prev_dc[ci] += diff
+                    if abs(prev_dc[ci]) > _DC_MAX:
+                        raise ValueError("DC coefficient out of range")
                     zz[0] = prev_dc[ci]
                     k = 1
                     while k < 64:

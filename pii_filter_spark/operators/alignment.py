@@ -117,7 +117,7 @@ def alignment_filter(
     def _embed(image_id, data, caption):
         try:
             ie = img_fn(decode_image(bytes(data))).tolist()
-        except (ValueError, NotImplementedError):
+        except ValueError:
             ie = None
         yield image_id, ie, txt_fn(caption).tolist()
 
@@ -142,7 +142,7 @@ def alignment_row(rec: dict, threshold: float = DEFAULT_THRESHOLD):
     try:
         px = decode_image(bytes(rec["bytes"]))
         ie = image_embedding(px)
-    except (ValueError, NotImplementedError):
+    except ValueError:
         return rec["image_id"], None, False
     te = caption_embedding(rec["caption"])
     acc = 0.0

@@ -1,22 +1,21 @@
 """Audio-column operators: opaque `bytes` + typed metadata, like images.
 
-The default decoder handles REAL RIFF/WAVE PCM (audio/wav.py — 8/16-bit,
-any channel count, mono downmix); bytes without the RIFF magic fall back
-to the deterministic stub so legacy fixtures keep decoding. A production
-deployment injects a soundfile/ffmpeg-backed decoder
-`(bytes) -> (sample_rate, float32 mono ndarray)` for compressed
-containers. Everything Spark-side — Arrow batching (rowmap.map_rows),
-column pruning, output schema — is real and tested. Undecodable rows
-are quarantined to NULL features / fingerprints, never a failed task.
+Clips decode with the RIFF/WAVE PCM codec (audio/wav.py — 8/16-bit, any
+channel count, mono downmix). `audio_features` takes the decoder as a
+parameter, the seam a production deployment fills with a
+soundfile/ffmpeg-backed `(bytes) -> (sample_rate, float32 mono ndarray)`
+for compressed containers. Everything Spark-side — Arrow batching
+(rowmap.map_rows), column pruning, output schema — is real and tested.
+Rows the decoder rejects with ValueError (non-WAVE bytes included) are
+quarantined to NULL features / fingerprints, never a failed task.
 """
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 from pyspark.sql import DataFrame
 
+from ..audio.wav import decode_wav
 from .rowmap import map_rows
 
 AUDIO_FEATURE_SCHEMA = (
@@ -25,39 +24,19 @@ AUDIO_FEATURE_SCHEMA = (
 )
 
 
-def _default_audio_decoder(data: bytes):
-    """Real WAV when the container says so; deterministic stub otherwise."""
-    if data[:4] == b"RIFF":
-        from ..audio.wav import decode_wav
-
-        return decode_wav(data)
-    return _fake_audio_decoder(data)
-
-
-def _fake_audio_decoder(data: bytes):
-    """Deterministic pseudo-PCM derived from the byte content."""
-    digest = hashlib.blake2b(data, digest_size=8).digest()
-    rng = np.random.default_rng(int.from_bytes(digest, "little") % (2**63))
-    sr = 16_000
-    n = max(1, len(data)) * 4  # 4 "samples" per input byte
-    pcm = rng.standard_normal(n).astype(np.float32) * 0.1
-    return sr, pcm
-
-
 def audio_features(
     df: DataFrame,
     bytes_col: str = "bytes",
     id_col: str = "image_id",
-    decoder=None,
+    decoder=decode_wav,
 ) -> DataFrame:
     """Per-row acoustic features: duration, RMS, zero-crossing rate, peak.
-    Undecodable rows get NULL features."""
-    decode = decoder or _default_audio_decoder
+    Rows the decoder rejects with ValueError get NULL features."""
 
     def _feat(audio_id, data):
         try:
-            sr, pcm = decode(bytes(data))
-        except (ValueError, NotImplementedError):
+            sr, pcm = decoder(bytes(data))
+        except ValueError:
             yield audio_id, None, None, None, None, None, None
             return
         n = len(pcm)
@@ -88,9 +67,9 @@ def audio_fingerprints(
 
     def _fp(audio_id, data):
         try:
-            sr, samples = _default_audio_decoder(bytes(data))
+            sr, samples = decode_wav(bytes(data))
             fp = audio_fp64(samples, sr)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             fp = None
         yield audio_id, fp
 

@@ -5,7 +5,8 @@ Decode-touching work runs row by row through rowmap.map_rows, so each
 task streams Arrow record batches instead of materializing whole
 partitions (rows are MB-scale; session config caps maxRecordsPerBatch
 accordingly). Decoders: the pure-numpy PNG and baseline JPEG codecs in
-images/.
+images/ and the MJPEG AVI codec in video/; a row any of them rejects
+with ValueError is quarantined, never a failed task.
 
 verify_images is the per-row invariant stage (FIXTURES.md B3): decoded
 pixels must exist, match the (w, h) metadata, and PSNR vs a reference
@@ -22,6 +23,7 @@ from pyspark.sql import DataFrame
 from ..images import decode_image, psnr
 from ..images.codecs import encode_image
 from ..sources.synth import LOSSY_QUALITY
+from ..video.avi import decode_avi_mjpeg
 from .rowmap import map_rows
 
 VERIFY_SCHEMA = (
@@ -54,7 +56,7 @@ def verify_images(df: DataFrame) -> DataFrame:
             second = decode_image(encode_image(px, fmt, quality=LOSSY_QUALITY))
             p = psnr(px, second)
             q = 999.0 if math.isinf(p) else p
-        except (ValueError, NotImplementedError):
+        except ValueError:
             pass
         yield image_id, ok, dims, mean, q
 
@@ -72,7 +74,7 @@ def image_features(df: DataFrame, thumb_size: int = 8) -> DataFrame:
     def _feat(image_id, data):
         try:
             px = decode_image(bytes(data)).astype(np.float64)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             yield image_id, None, None, None, None, None
             return
         gray = px.mean(axis=2)
@@ -97,57 +99,30 @@ FRAME_SCHEMA = (
 )
 
 
-def _default_video_decoder(data: bytes, w: int, h: int):
-    """Real MJPEG AVI when the container says so (video/avi.py); the
-    deterministic stub otherwise (legacy fixtures / opaque bytes)."""
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..video.avi import decode_avi_mjpeg
-
-        _, frames = decode_avi_mjpeg(data)
-        return enumerate(frames)
-    return _fake_video_decoder(data, w, h)
-
-
-def _fake_video_decoder(data: bytes, w: int, h: int):
-    """SANDBOX decode stub (no video codec in this container): yields a
-    deterministic pseudo-frame sequence derived from the byte content —
-    frame count = len(data) // 1024 + 1, pixels seeded by (digest, idx).
-    A production deployment swaps in a PyAV/ffmpeg-backed decoder with
-    the same signature: (bytes, w, h) -> iterator of (idx, HxWx3 uint8)."""
-    import hashlib
-
-    digest = hashlib.blake2b(data, digest_size=8).digest()
-    seed = int.from_bytes(digest, "little")
-    n_frames = len(data) // 1024 + 1
-    for idx in range(n_frames):
-        rng = np.random.default_rng((seed + idx) % (2**63))
-        yield idx, rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
-
-
 def sample_video_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Every-Nth-frame sampling over an opaque video `bytes` column.
+    """Every-Nth-frame sampling over a video `bytes` column of MJPEG AVI
+    clips (video/avi.py).
 
-    The Spark plumbing is real — a row-mapping fan-out (one input row →
-    many frame rows), Arrow-batched, column-pruned to (image_id, bytes,
-    w, h) — and the codec is REAL for MJPEG AVI input (video/avi.py);
-    other bytes hit the documented stub. Undecodable clips yield no
-    frames. Frames are re-encoded as PNG bytes so the output column is
-    storable/chainable into image operators.
+    A row-mapping fan-out (one input row → many frame rows), Arrow-
+    batched, column-pruned to (image_id, bytes). Clips the codec rejects
+    (non-AVI bytes included) yield no frames. Frames are re-encoded as
+    PNG bytes so the output column is storable/chainable into image
+    operators.
     """
 
-    def _sample(image_id, data, w, h):
+    def _sample(image_id, data):
         try:
-            frames = _default_video_decoder(bytes(data), w, h)
-        except (ValueError, NotImplementedError):
+            _, frames = decode_avi_mjpeg(bytes(data))
+        except ValueError:
             return
-        for idx, px in frames:
+        for idx, px in enumerate(frames):
             if idx % every_n == 0:
                 yield (
                     image_id, idx, px.shape[1], px.shape[0],
                     float(px.mean()), encode_image(px, "png"),
                 )
 
-    return map_rows(df, ["image_id", "bytes", "w", "h"], FRAME_SCHEMA, _sample)
+    return map_rows(df, ["image_id", "bytes"], FRAME_SCHEMA, _sample)
 
 
 def compute_phash(
@@ -163,7 +138,7 @@ def compute_phash(
     def _hash(image_id, data):
         try:
             ph = phash64(decode_image(bytes(data)))
-        except (ValueError, NotImplementedError):
+        except ValueError:
             ph = None
         yield image_id, ph
 
@@ -187,7 +162,7 @@ def reencode_variants(
     def _re(image_id, data):
         try:
             out = encode_image(decode_image(bytes(data)), "jpeg", quality=quality)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             return
         yield image_id + id_suffix, out
 
@@ -249,7 +224,7 @@ def resize_to_buckets(
     def _resize(image_id, data):
         try:
             facts = resize_export_row(data, buckets, quality)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             # quarantine undecodable rows (null facts) instead of
             # failing the whole export task deterministically
             facts = (None,) * 5
@@ -275,13 +250,12 @@ def video_middle_frame_phash(
     hamming operator, completing near-dup coverage across text, image,
     audio and video with ONE pairing implementation."""
     from ..images.phash import phash64
-    from ..video.avi import decode_avi_mjpeg
 
     def _fp(video_id, data):
         try:
             _, frames = decode_avi_mjpeg(bytes(data))
             fp = (len(frames), phash64(frames[len(frames) // 2]))
-        except (ValueError, NotImplementedError):
+        except ValueError:
             # quarantine, same semantics as compute_phash: the null hash
             # drops out of the near-dup pairing
             fp = (None, None)

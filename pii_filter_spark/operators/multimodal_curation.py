@@ -44,7 +44,7 @@ def _fused_decode_stage(df: DataFrame) -> DataFrame:
         try:
             px = decode_image(bytes(data))
             ie, ph = image_embedding(px).tolist(), phash64(px)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             ie = ph = None
         yield image_id, ie, te, ph
 

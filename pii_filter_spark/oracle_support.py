@@ -224,7 +224,7 @@ def image_sharpness_sql(sf_dir: str) -> str:
     def emit(iid: str, data: bytes) -> None:
         try:
             lv, ent = sharpness_row(data)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             lv = ent = None
         keep = lv is not None and lv >= LAPVAR_MIN and ent >= ENTROPY_MIN
         rows.append((iid, lv, ent, keep))
@@ -236,7 +236,7 @@ def image_sharpness_sql(sf_dir: str) -> str:
         if i % 4 == 0:
             try:
                 px = decode_image(bytes(r["bytes"]))
-            except (ValueError, NotImplementedError):
+            except ValueError:
                 continue
             emit(r["image_id"] + "~blur", encode_image(box_blur(px), "png"))
     for iid, data in flat_placeholder_rows():
@@ -291,7 +291,7 @@ def cross_modal_dedup_sql(sf_dir: str) -> str:
             try:
                 px = decode_image(bytes(r["bytes"]))
                 data = encode_image(px, "jpeg", quality=90)
-            except (ValueError, NotImplementedError):
+            except ValueError:
                 continue
             rid = r["image_id"] + "_re"
             cap = "re-hosted copy " + rid.translate(
@@ -314,7 +314,7 @@ def cross_modal_dedup_sql(sf_dir: str) -> str:
     for rid, data, _ in rows:
         try:
             hashes.append((rid, phash64(decode_image(data))))
-        except (ValueError, NotImplementedError):
+        except ValueError:
             continue
     edges += [(a, b) for a, b, _ in _hamming_pairs(hashes, 7, chunks=8)]
     comp = _min_id_components([rid for rid, _, _ in rows], edges)
@@ -776,7 +776,7 @@ def image_verify_sql(sf_dir: str) -> str:
             )
             p = psnr(px, second)
             q = 999.0 if math.isinf(p) else p
-        except (ValueError, NotImplementedError):
+        except ValueError:
             pass
         rows.append((
             r["image_id"], ok, dims,
@@ -818,7 +818,7 @@ def image_features_sql(sf_dir: str) -> str:
     for r in _synth_rows(200):
         try:
             px = decode_image(bytes(r["bytes"])).astype(np.float64)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             rows.append((r["image_id"], None, None, None))
             continue
         gray = px.mean(axis=2)
@@ -1151,7 +1151,7 @@ def multimodal_curation_sql(sf_dir: str) -> str:
             px = decode_image(bytes(r["bytes"]))
             ie = image_embedding(px)
             ph = phash64(px)
-        except (ValueError, NotImplementedError):
+        except ValueError:
             ie = ph = None
         te = caption_embedding(r["caption"])
         from .operators.alignment import STUB_THRESHOLD

@@ -8,10 +8,9 @@ provider (transformWithState's backing store); the caller's session must
 set spark.sql.streaming.stateStore.providerClass accordingly — see
 tests/test_streaming.py for the exact conf.
 
-SANDBOX GAP (same class as images/codecs.py's JPEG decode): the
-transformWithState state protocol speaks protobuf and this container
-ships no `google.protobuf`, so the end-to-end test auto-skips here and
-runs wherever protobuf exists. The hot-path stateful operators
+The transformWithState state protocol speaks protobuf, so the
+end-to-end test skips itself where `google.protobuf` is not installed
+and runs wherever it is. The hot-path stateful operators
 (streaming/dedup.py, streaming/sessions.py) use applyInPandasWithState,
 which has no such dependency and is fully tested.
 

@@ -1,13 +1,12 @@
 """RIFF/AVI Motion-JPEG codec — real video bytes, pure Python/numpy.
 
-Completes the multimodal realism push (images/jpeg_codec.py, audio/
-wav.py): the video column previously carried opaque bytes decoded by a
-documented stub. AVI is the RIFF container (Microsoft spec) and MJPEG
-stores each frame as a baseline JPEG — which this repo already encodes
-and decodes for real — so a minimal single-stream MJPEG AVI is fully
-implementable: these bytes open in standard players (ffplay/VLC decode
-MJPEG AVI natively), and any MJPEG AVI with '00dc'/'00db' frame chunks
-decodes here.
+The one video codec of the video stages (operators/image_stage.py). AVI
+is the RIFF container (Microsoft spec) and MJPEG stores each frame as a
+baseline JPEG — which this repo already encodes and decodes for real —
+so a minimal single-stream MJPEG AVI is fully implementable: these bytes
+open in standard players (ffplay/VLC decode MJPEG AVI natively), and any
+MJPEG AVI with '00dc'/'00db' frame chunks decodes here. Anything else,
+non-RIFF bytes included, raises ValueError.
 
 Writer emits: RIFF('AVI ') → LIST hdrl (avih + LIST strl (strh 'vids'/
 'MJPG' + strf BITMAPINFOHEADER)) → LIST movi ('00dc' JPEG frames,

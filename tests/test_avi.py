@@ -1,5 +1,5 @@
 """RIFF/AVI MJPEG codec (video/avi.py): structure, roundtrip fidelity,
-fps metadata, malformed rejection, and the video-stage dispatch."""
+fps metadata, malformed rejection, and the video stage over it."""
 
 import struct
 
@@ -44,18 +44,16 @@ def test_malformed_rejected():
 def test_video_stage_dispatch(spark):
     from pii_filter_spark.operators.image_stage import sample_video_frames
 
-    clips = [
-        (f"v{i}", encode_avi_mjpeg(synth_clip(i), fps=10),
-         synth_clip(i)[0].shape[1], synth_clip(i)[0].shape[0])
-        for i in range(3)
-    ]
-    df = spark.createDataFrame(
-        clips, "image_id string, bytes binary, w int, h int"
-    )
+    clips = [(f"v{i}", encode_avi_mjpeg(synth_clip(i), fps=10)) for i in range(3)]
+    # bytes without the RIFF/AVI magic (a WAVE file, opaque bytes) are
+    # quarantined: no frames
+    clips += [("wave", b"RIFF\x04\x00\x00\x00WAVE"), ("opaque", b"opaque")]
+    df = spark.createDataFrame(clips, "image_id string, bytes binary")
     rows = sample_video_frames(df, every_n=1).collect()
     by_vid = {}
     for r in rows:
         by_vid.setdefault(r.video_id, []).append(r)
+    assert sorted(by_vid) == ["v0", "v1", "v2"]
     for i in range(3):
         frames = synth_clip(i)
         got = sorted(by_vid[f"v{i}"], key=lambda r: r.frame_idx)
@@ -63,8 +61,3 @@ def test_video_stage_dispatch(spark):
         assert (got[0].frame_w, got[0].frame_h) == (
             frames[0].shape[1], frames[0].shape[0]
         )
-    # non-RIFF bytes keep the legacy stub contract (still yields frames)
-    legacy = spark.createDataFrame(
-        [("x", b"opaque", 8, 8)], "image_id string, bytes binary, w int, h int"
-    )
-    assert sample_video_frames(legacy, every_n=1).count() >= 1

@@ -89,16 +89,18 @@ def test_jpeg_reencode_psnr_headroom():
 
 
 def test_sample_video_frames_plumbing(spark):
-    """Fan-out mapInPandas: one row -> every_n-sampled frame rows, PNG
-    re-encoded, deterministic across runs (decode is the sandbox stub)."""
+    """Fan-out mapInPandas: one MJPEG AVI row -> every_n-sampled frame
+    rows, PNG re-encoded, deterministic across runs."""
     from pii_filter_spark.images import decode_image
     from pii_filter_spark.operators.image_stage import sample_video_frames
-    from pii_filter_spark.sources.synth import gen_pandas
+    from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
 
-    pdf = gen_pandas(6, seed=11)
-    df = spark.createDataFrame(pdf).repartition(3)
+    clips = [(f"v{i}", encode_avi_mjpeg(synth_clip(i), fps=10)) for i in range(6)]
+    df = spark.createDataFrame(clips, "image_id string, bytes binary").repartition(3)
     out = sample_video_frames(df, every_n=2).collect()
-    assert len(out) > 0
+    assert sorted((r.video_id, r.frame_idx) for r in out) == sorted(
+        (f"v{i}", idx) for i in range(6) for idx in range(0, len(synth_clip(i)), 2)
+    )
     again = sample_video_frames(df, every_n=2).collect()
     assert sorted((r.video_id, r.frame_idx) for r in out) == \
            sorted((r.video_id, r.frame_idx) for r in again)
@@ -110,22 +112,23 @@ def test_sample_video_frames_plumbing(spark):
 
 
 def test_audio_features_plumbing(spark):
+    from pii_filter_spark.audio.wav import encode_wav, synth_tone
     from pii_filter_spark.operators.audio_stage import audio_features
-    from pii_filter_spark.sources.synth import gen_pandas
 
-    pdf = gen_pandas(8, seed=12)
-    df = spark.createDataFrame(pdf).repartition(2)
+    tones = [(f"a{i}", encode_wav(synth_tone(i))) for i in range(8)]
+    df = spark.createDataFrame(tones, "image_id string, bytes binary").repartition(2)
     rows = {r.audio_id: r for r in audio_features(df).collect()}
     assert len(rows) == 8
-    for r in rows.values():
+    for i in range(8):
+        r = rows[f"a{i}"]
         assert r.sample_rate == 16_000
-        assert r.n_samples > 0
+        assert r.n_samples == len(synth_tone(i))
         assert abs(r.duration_s - r.n_samples / 16_000) < 1e-9
         assert 0.0 < r.rms < 1.0
         assert 0.0 <= r.zero_crossing_rate <= 1.0
 
     def deny(data):  # a decoder that refuses -> null features, no crash
-        raise NotImplementedError
+        raise ValueError("refused")
 
     nulls = audio_features(df, decoder=deny).collect()
     assert len(nulls) == 8 and all(r.sample_rate is None for r in nulls)

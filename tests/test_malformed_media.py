@@ -1,12 +1,14 @@
 """Malformed media is bad input, never a task failure.
 
-Every decoder reports a malformed file as ValueError (NotImplementedError
-for valid files of an unsupported kind), which every decode stage
-quarantines. The corpus is truncations and single-bit flips of valid
-PNG, JPEG, WAV and AVI bytes.
+Every decoder reports a file it cannot decode as ValueError, malformed
+or of an unsupported kind alike, and raises nothing else, not even a
+warning; every decode stage quarantines those rows. The corpus is
+truncations and single-bit flips of valid PNG, JPEG, WAV and AVI bytes,
+plus bytes of the wrong kind.
 """
 
 import struct
+import warnings
 from functools import lru_cache
 
 import numpy as np
@@ -17,8 +19,6 @@ from hypothesis import strategies as st
 from pii_filter_spark.audio.wav import decode_wav, encode_wav, synth_tone
 from pii_filter_spark.images.codecs import decode_image, encode_image
 from pii_filter_spark.video.avi import decode_avi_mjpeg, encode_avi_mjpeg, synth_clip
-
-BAD_INPUT = (ValueError, NotImplementedError)
 
 
 @lru_cache(maxsize=None)
@@ -36,10 +36,12 @@ def _valid():
 
 
 def _decodes_or_rejects(decode, data: bytes) -> None:
-    try:
-        decode(data)
-    except BAD_INPUT:
-        pass
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        try:
+            decode(data)
+        except ValueError:
+            pass
 
 
 def _flip(data: bytes, pos: int, bit: int) -> bytes:
@@ -85,7 +87,8 @@ def test_named_malformed_cases_are_value_errors():
     JPEG and AVI (EOFError), a 30-byte WAV (struct.error) and an AVI
     nested deeper than the recursion limit (RecursionError) — each a
     ValueError chained from the original error. A WAV with sample rate 0
-    is rejected too: the feature stage divides by it."""
+    is rejected too: the feature stage divides by it. So is a valid JPEG
+    whose SOF0 marker is rewritten to SOF2 (progressive, not decoded)."""
     files = _valid()
     cases = [
         ("png", files["png"][1][: len(files["png"][1]) // 2]),
@@ -101,15 +104,22 @@ def test_named_malformed_cases_are_value_errors():
         assert info.value.__cause__ is not None, name
     with pytest.raises(ValueError, match="sample rate 0"):
         decode_wav(encode_wav(np.zeros(10), sample_rate=0))
+    jpeg = files["jpeg"][1]
+    sof2 = jpeg.replace(b"\xff\xc0", b"\xff\xc2", 1)
+    assert sof2 != jpeg
+    with pytest.raises(ValueError, match="non-baseline JPEG"):
+        decode_image(sof2)
 
 
 def test_truncated_rows_are_quarantined_by_the_stages(spark):
     """compute_phash, the fused curation decode, verify_images,
     audio_fingerprints, audio_features, sample_video_frames and
-    video_middle_frame_phash complete over truncated files; those rows get
-    NULL hashes and features, decode_ok false, no frames. Each table is one
-    partition, so the healthy row shares its Arrow batch with the NULL rows
-    and must keep its exact 64-bit hash."""
+    video_middle_frame_phash complete over truncated files and, for the
+    audio and video stages, over bytes without the RIFF magic (empty,
+    two bytes, a PNG, plain text); those rows get NULL hashes and
+    features, decode_ok false, no frames. Each table is one partition, so
+    the healthy row shares its Arrow batch with the NULL rows and must
+    keep its exact values."""
     from pii_filter_spark.audio.fingerprint import audio_fp64
     from pii_filter_spark.images.phash import phash64
     from pii_filter_spark.operators.audio_stage import (
@@ -127,6 +137,8 @@ def test_truncated_rows_are_quarantined_by_the_stages(spark):
 
     files = _valid()
     png, jpeg, wav = files["png"][1], files["jpeg"][1], files["wav"][1]
+    no_magic = [("empty", b""), ("two_bytes", b"\x00\x01"), ("png", png),
+                ("text", b"plain text, not a media file")]
     images = [
         ("ok_png", png, "png"),
         ("half_png", png[: len(png) // 2], "png"),
@@ -152,28 +164,40 @@ def test_truncated_rows_are_quarantined_by_the_stages(spark):
     assert sorted(verified) == sorted(i for i, _, _ in images[1:])
     assert not any(r.decode_ok or r.dims_ok for r in verified.values())
 
+    bad_audio = [("wav_30", wav[:30]), ("half", wav[: len(wav) // 2 + 1]),
+                 *no_magic]
     audio = spark.createDataFrame(
-        [("ok", wav), ("wav_30", wav[:30]), ("half", wav[: len(wav) // 2 + 1])],
-        "audio_id string, bytes binary",
+        [("ok", wav), *bad_audio], "audio_id string, bytes binary",
     ).coalesce(1)
     fps = {r.audio_id: r.fp64 for r in audio_fingerprints(audio).collect()}
-    expected = audio_fp64(*decode_wav(wav)[::-1])
+    sr, pcm = decode_wav(wav)
+    expected = audio_fp64(pcm, sr)
     assert abs(expected) > 2**53
-    assert fps["ok"] == expected and fps["wav_30"] is None
-    assert len(fps) == 3
+    assert fps == {"ok": expected, **{i: None for i, _ in bad_audio}}
     feats = {r.audio_id: r for r in audio_features(audio, id_col="audio_id").collect()}
-    assert feats["ok"].sample_rate == 16_000 and feats["wav_30"].sample_rate is None
+    ok = feats.pop("ok")
+    assert (ok.sample_rate, ok.n_samples) == (sr, len(pcm))
+    assert ok.rms == float(np.sqrt(np.mean(pcm**2)))
+    assert ok.peak == float(np.abs(pcm).max())
+    assert sorted(feats) == sorted(i for i, _ in bad_audio)
+    assert all(set(r[1:]) == {None} for r in feats.values())
 
     avi = files["avi"][1]
+    bad_clips = [("half", avi[: len(avi) // 2]), ("wav", wav), *no_magic]
     clips = spark.createDataFrame(
-        [("ok", avi, 24, 16), ("half", avi[: len(avi) // 2], 24, 16)],
-        "image_id string, bytes binary, w int, h int",
+        [("ok", avi), *bad_clips], "video_id string, bytes binary",
     ).coalesce(1)
-    frames = {r.video_id for r in sample_video_frames(clips, every_n=1).collect()}
-    assert frames == {"ok"}
     mid = decode_avi_mjpeg(avi)[1]
+    frames = sorted(
+        (r.video_id, r.frame_idx, r.frame_gray_mean)
+        for r in sample_video_frames(
+            clips.withColumnRenamed("video_id", "image_id"), every_n=1
+        ).collect()
+    )
+    assert frames == [("ok", i, float(px.mean())) for i, px in enumerate(mid)]
     expected = phash64(mid[len(mid) // 2])
     assert abs(expected) > 2**53
-    mids = {r.video_id: r.mid_phash for r in video_middle_frame_phash(
-        clips.withColumnRenamed("image_id", "video_id")).collect()}
-    assert mids == {"ok": expected, "half": None}
+    mids = {r.video_id: (r.n_frames, r.mid_phash)
+            for r in video_middle_frame_phash(clips).collect()}
+    assert mids == {"ok": (len(mid), expected),
+                    **{i: (None, None) for i, _ in bad_clips}}

@@ -1,6 +1,6 @@
 """RIFF/WAVE PCM codec (audio/wav.py): exact roundtrip, container
 structure, stereo downmix, 8-bit path, malformed rejection, and the
-audio_features default-decoder dispatch."""
+audio stages' default decoder."""
 
 import struct
 
@@ -52,16 +52,20 @@ def test_malformed_rejected():
         decode_wav(b"RIFF\x04\x00\x00\x00WAVE")  # no fmt/data
 
 
-def test_default_decoder_dispatch():
+def test_default_decoder_dispatch(spark):
+    """The audio stages decode WAVE; non-RIFF bytes are quarantined."""
     from pii_filter_spark.operators.audio_stage import (
-        _default_audio_decoder,
-        _fake_audio_decoder,
+        audio_features,
+        audio_fingerprints,
     )
 
-    wav = encode_wav(synth_tone(3))
-    sr, pcm = _default_audio_decoder(wav)
-    assert sr == 16_000 and len(pcm) == len(synth_tone(3))
-    # non-RIFF bytes keep the legacy stub contract
-    sr2, pcm2 = _default_audio_decoder(b"opaque blob")
-    sr3, pcm3 = _fake_audio_decoder(b"opaque blob")
-    assert sr2 == sr3 and np.array_equal(pcm2, pcm3)
+    df = spark.createDataFrame(
+        [("wav", encode_wav(synth_tone(3))), ("blob", b"opaque blob")],
+        "audio_id string, bytes binary",
+    ).coalesce(1)
+    feats = {r.audio_id: r for r in audio_features(df, id_col="audio_id").collect()}
+    assert feats["wav"].sample_rate == 16_000
+    assert feats["wav"].n_samples == len(synth_tone(3))
+    assert feats["blob"].sample_rate is None and feats["blob"].rms is None
+    fps = {r.audio_id: r.fp64 for r in audio_fingerprints(df).collect()}
+    assert fps["wav"] is not None and fps["blob"] is None

@@ -1,6 +1,7 @@
 """Regenerate PLANS.md: formatted physical plans for the load-bearing
 queries, with the scale-relevant property each plan is meant to exhibit.
-Run from the repo root: python tools/dump_plans.py
+Run: python tools/dump_plans.py (imports and rewrites the checkout the
+script sits in).
 """
 
 from __future__ import annotations
@@ -8,8 +9,10 @@ from __future__ import annotations
 import io
 import sys
 from contextlib import redirect_stdout
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 SF = "/root/testdata/sf0.01"
 
@@ -400,7 +403,7 @@ def main() -> None:
         "shuffle; it rides the scan straight to the write.\n\n"
         f"```\n{buf.getvalue().strip()}\n```\n"
     )
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write(out.getvalue())
     print("wrote PLANS.md")
     spark.stop()

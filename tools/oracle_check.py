@@ -14,10 +14,11 @@ from __future__ import annotations
 import hashlib
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",

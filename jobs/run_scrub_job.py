@@ -18,10 +18,15 @@ Local smoke (also what tests/test_checkpoint.py drives programmatically):
 
 Resume semantics: re-running with the same --output continues from the
 per-partition manifest — completed partitions are skipped, metrics stay
-idempotent. The JSON summary's row counts cover the whole manifest;
+idempotent. Each batch of partitions is one plain parquet write into
+<output>/batch-<first part id>, and its manifest entries name it; a
+resume first deletes every batch directory that is not fully committed
+(a batch killed between its write and its last entry). Read the output
+with table_io.read_table, which reads the directories the manifest
+names. The JSON summary's row counts cover the whole manifest;
 `layer_ms_this_run` sums the caption UDF's per-layer time (quality,
-scrub; summed over tasks, so it can exceed wall time) over the batches
-this run processed. --num-parts must match the original run: every
+scrub; summed over tasks, so it can exceed wall time) once per batch
+directory this run wrote. --num-parts must match the original run: every
 manifest entry records it, and run_pipeline refuses a resume that
 disagrees.
 """
@@ -82,10 +87,11 @@ def main(argv=None) -> int:
         )
         manifest = table_io.read_manifest(args.output)
         entries = {m["part_id"]: m for m in manifest}
-        # layer_ms is per batch, repeated in each entry: one entry per batch
+        # layer_ms is per batch, repeated in each entry: once per batch dir
+        per_batch = {entries[p]["batch_dir"]: entries[p]["layer_ms"] for p in processed}
         layer_ms = {}
-        for first in processed[:: args.batch_parts]:
-            for layer, ms in entries[first]["layer_ms"].items():
+        for batch_ms in per_batch.values():
+            for layer, ms in batch_ms.items():
                 layer_ms[layer] = round(layer_ms.get(layer, 0.0) + ms, 1)
         summary = {
             "partitions_total": args.num_parts,

@@ -3,16 +3,21 @@
 Composition:
     read → caption stage (one pandas UDF: langid, perplexity, quality
                           rules, PII/toxicity scrub — operators/fused.py)
-         → write partitioned by part_id, manifest entry per partition
+         → one plain parquet write per batch of partitions, into its own
+           batch-<first part_id> directory; a manifest entry per partition
 
 Checkpoint/resume [north rule]: rows hash deterministically into
 `num_parts` logical partitions (pmod(xxhash64(image_id), P)); partitions
-are processed in batches, each batch lands via dynamic partition overwrite
-(idempotent re-runs), and a manifest entry per completed partition is the
-commit record. A restart anti-joins the partition list against the
-manifest and reprocesses only missing partitions — identical final table,
-idempotent metrics (tests/test_checkpoint.py kills a run mid-way and
-asserts equality).
+are processed in batches, and each batch overwrites its own directory,
+with `part_id` kept as a column. The manifest entry per completed
+partition is the commit record: it names the batch directory and lists
+the batch's parts, and the table is the directories the entries name
+(table_io.read_table). A restart first deletes every batch directory
+that is not fully committed (some part of its batch has no entry naming
+it), with the entries of a partly committed batch, then reprocesses
+only the missing partitions — identical final table, idempotent metrics
+(tests/test_checkpoint.py kills runs mid-way, also between a batch's
+write and its entries, and asserts equality).
 
 Metrics come from the pass that wrote the rows: the caption UDF folds
 each Arrow batch's output into a per-batch accumulator (per-part rows
@@ -21,16 +26,19 @@ manifest entries are built from it once the write returns. Nothing is
 read back.
 
 Scale notes: the whole hot path is one scan → one UDF projection → one
-partitioned write; no joins, aggregations or shuffles, and the MB-scale
-`bytes` column never enters Python. `batch_parts` bounds the blast radius
-of a failure; at 10^12 rows you'd size num_parts so one partition ≈ one
-Iceberg file group.
+plain write; no joins, aggregations or shuffles, and the MB-scale
+`bytes` column never enters Python. A batch writes one file per task,
+not one per task and part, so files per batch equal its tasks.
+`batch_parts` bounds the blast radius of a failure; at 10^12 rows you'd
+size num_parts so one partition ≈ one Iceberg file group.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
-from typing import List, Optional
+from typing import Dict, List, Optional
 
 import pandas as pd
 
@@ -41,6 +49,7 @@ from .operators.fused import PartCounts, fused_quality_scrub, layer_ms, part_cou
 from .sources import table_io
 
 PART_COL = "part_id"
+BATCH_PREFIX = "batch-"
 
 
 def with_part_id(df: DataFrame, num_parts: int, id_col: str = "image_id") -> DataFrame:
@@ -59,8 +68,36 @@ def transform(df: DataFrame) -> DataFrame:
 def batch_frame(src: DataFrame, parts: List[int], counts) -> DataFrame:
     """What run_pipeline writes for one batch of parts. Its caption UDF adds
     the per-part counts and per-layer ms to `counts` (a PartCounts
-    accumulator); they are exact only while this plan has no Exchange."""
-    return fused_quality_scrub(src.where(F.col(PART_COL).isin(parts)), counts)
+    accumulator); they are exact only while this plan has no Exchange.
+    `part_id` comes last, as an int: the schema a `partitionBy(part_id)`
+    table reads back with."""
+    out = fused_quality_scrub(src.where(F.col(PART_COL).isin(parts)), counts)
+    cols = [c for c in out.columns if c != PART_COL]
+    return out.select(*cols, F.col(PART_COL).cast("int"))
+
+
+def drop_uncommitted(output_path: str, manifest: List[Dict]) -> List[Dict]:
+    """Delete every batch directory that is not fully committed, and the
+    entries of a partly committed batch; returns the entries kept.
+
+    A directory is fully committed when each part its entries list has an
+    entry naming it. Entries go before their directory, so a cleanup
+    killed midway leaves a batch that the next one deletes.
+    """
+    by_part = {e["part_id"]: e for e in manifest}
+    committed = {
+        e["batch_dir"] for e in manifest
+        if all(by_part.get(p, {}).get("batch_dir") == e["batch_dir"]
+               for p in e["batch_part_ids"])
+    }
+    for e in manifest:
+        if e["batch_dir"] not in committed:
+            table_io.drop_manifest_entry(output_path, e["part_id"])
+    names = os.listdir(output_path) if os.path.isdir(output_path) else []
+    for name in names:
+        if name.startswith(BATCH_PREFIX) and name not in committed:
+            shutil.rmtree(os.path.join(output_path, name))
+    return [e for e in manifest if e["batch_dir"] in committed]
 
 
 def scrub_bytes_stage(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
@@ -102,23 +139,36 @@ def run_pipeline(
 ) -> List[int]:
     """Run (or resume) the pipeline. Returns the part_ids processed this run.
 
+    Each batch is one plain parquet write into
+    `<output_path>/batch-<first part_id, 5 digits>`; its manifest entries,
+    written after it, name that directory and list the batch's parts.
+    Before planning, a run deletes every batch directory that is not
+    fully committed (drop_uncommitted), so a kill between a batch's write
+    and its last entry costs only that batch.
+
     fail_after_batch is a test hook: raise after N committed batches to
     simulate a mid-run kill. scrub_image_bytes additionally rewrites the
     binary column with PNG/JPEG metadata stripped (see scrub_bytes_stage).
 
     Raises ValueError when the output's manifest was written with another
-    num_parts: rows hash to different part_ids then, so resuming would
-    skip or duplicate rows.
+    num_parts (rows hash to different part_ids then, so resuming would
+    skip or duplicate rows), or names no batch directories (an output of
+    the earlier part_id=K layout, which this run cannot extend).
     """
     manifest = table_io.read_manifest(output_path)
-    # entries written before num_parts was recorded carry no count
-    recorded = {e.get("num_parts", num_parts) for e in manifest} - {num_parts}
+    if any("batch_dir" not in e for e in manifest):
+        raise ValueError(
+            f"the manifest of {output_path} names no batch directories; "
+            "write into a fresh output"
+        )
+    recorded = {e["num_parts"] for e in manifest} - {num_parts}
     if recorded:
         raise ValueError(
             f"num_parts={num_parts} does not match num_parts="
             f"{', '.join(map(str, sorted(recorded)))} recorded in the "
             f"manifest of {output_path}"
         )
+    manifest = drop_uncommitted(output_path, manifest)
     src = with_part_id(table_io.read_table(spark, input_path), num_parts)
     if scrub_image_bytes:
         src = scrub_bytes_stage(src)
@@ -129,13 +179,12 @@ def run_pipeline(
 
     for batch_idx in range(0, len(todo), batch_parts):
         batch = todo[batch_idx : batch_idx + batch_parts]
+        batch_dir = f"{BATCH_PREFIX}{batch[0]:05d}"
         t0 = time.perf_counter()
         counts = spark.sparkContext.accumulator({}, PartCounts())
-        # dynamic overwrite, set on this write only (the session's mode is
-        # left alone): exactly these part_id directories are replaced
-        batch_frame(src, batch, counts).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(PART_COL).parquet(output_path)
+        batch_frame(src, batch, counts).write.mode("overwrite").parquet(
+            os.path.join(output_path, batch_dir)
+        )
         wall_ms = int((time.perf_counter() - t0) * 1000)
 
         # counted by the write's own UDF; complete once the action returns
@@ -147,6 +196,8 @@ def run_pipeline(
                 {
                     "snapshot_id": snapshot_id,
                     "num_parts": num_parts,
+                    "batch_dir": batch_dir,
+                    "batch_part_ids": batch,
                     **part_counts(value, p),
                     "layer_ms": layer_ms(value),
                     "wall_ms": wall_ms,

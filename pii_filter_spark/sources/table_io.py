@@ -4,8 +4,10 @@ The production target is an Iceberg table (north rule / input_hint); no
 Iceberg runtime jars ship with this engine, so the table is a
 parquet-directory table with an explicit JSON manifest directory that gives
 us the two Iceberg behaviours the pipeline depends on:
-  * snapshot-ish atomicity — output partitions land under part_id=K
-    directories and only count once their manifest entry exists;
+  * snapshot-ish atomicity — each batch of output partitions lands in
+    its own directory, and a table with a manifest reads only the
+    directories its entries name, so rows count only once their manifest
+    entry exists;
   * metadata for checkpoint/resume — the manifest doubles as the
     completed-partition set (pipeline.run_pipeline).
 
@@ -30,8 +32,9 @@ def read_table(
     If the table has a snapshot log (written via snapshot_write), reads
     resolve through it: the CURRENT snapshot's file list by default, or
     any retained historical snapshot via `snapshot_id` — the Iceberg
-    time-travel surface (`VERSION AS OF`) on the parquet fallback. Plain
-    directories without a snapshot log read directly.
+    time-travel surface (`VERSION AS OF`) on the parquet fallback. A
+    table with a manifest (pipeline.run_pipeline's output) reads the
+    batch directories its entries name. Plain directories read directly.
     """
     if snapshot_id is not None or os.path.isdir(snapshots_dir(path)):
         snaps = {s["snapshot_id"]: s for s in list_snapshots(path)}
@@ -44,6 +47,10 @@ def read_table(
             )
         files = [os.path.join(path, f) for f in snaps[snapshot_id]["files"]]
         return spark.read.parquet(*files)
+    entries = read_manifest(path)
+    if entries:
+        dirs = sorted({e["batch_dir"] for e in entries})
+        return spark.read.parquet(*(os.path.join(path, d) for d in dirs))
     return spark.read.parquet(path)
 
 
@@ -213,6 +220,10 @@ def write_manifest_entry(table_path: str, part_id: int, payload: Dict) -> None:
     with open(tmp, "w", encoding="utf-8") as fh:
         json.dump({"part_id": part_id, **payload}, fh, sort_keys=True)
     os.replace(tmp, final)
+
+
+def drop_manifest_entry(table_path: str, part_id: int) -> None:
+    os.remove(os.path.join(manifest_dir(table_path), f"part-{part_id:05d}.json"))
 
 
 def read_manifest(table_path: str) -> List[Dict]:

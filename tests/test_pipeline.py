@@ -1,4 +1,4 @@
-"""End-to-end pipeline: input table → scrub+quality → partitioned output +
+"""End-to-end pipeline: input table → scrub+quality → batch directories +
 manifest, with the per-row invariants of FIXTURES.md B3."""
 
 import numpy as np

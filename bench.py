@@ -30,11 +30,12 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 SCRATCH = os.path.join(REPO, ".bench_scratch")
 # Large enough that UDF compute dominates fixed scheduling/Arrow overhead —
-# required for the scaling-efficiency measurement to mean anything. Local
-# mode pays ~200 ms of task-lifecycle overhead per Python-UDF task
-# (measured; independent of Arrow vs pickle), so the scaling run sizes
-# splits to ~2 waves of multi-second tasks per level — the same shape a
-# real 128 MB-split cluster scan has.
+# required for the scaling-efficiency measurement to mean anything. Each
+# Python-UDF task pays a fixed worker start-up cost: ~5-30 ms, or ~200 ms
+# when the worker keeps the zip importers that importlib.invalidate_caches()
+# re-reads at every task start (pii_filter_spark/__init__.py drops them);
+# the scaling run sizes splits to ~2 waves of multi-second tasks per
+# level — the same shape a real 128 MB-split cluster scan has.
 PIPE_N = int(os.environ.get("SPARK_GRAFT_PIPE_N", "320000"))
 PIPE_SEED = 42
 WAVES = 2  # task waves per scaling level, see run_level

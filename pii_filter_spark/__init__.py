@@ -15,4 +15,25 @@ Layout:
   pipeline.py full pipeline composition, checkpoint/resume, metrics
 """
 
+import sys
+import zipimport
+
 __version__ = "0.1.0"
+
+
+def _drop_worker_zip_importers() -> None:
+    """Spark's Python worker calls importlib.invalidate_caches() at the
+    start of every task, and on Python < 3.13 each cached zipimporter then
+    re-reads its archive's whole central directory: ~200 ms per task for
+    the 16 a reused worker holds (2 on the spark-core jar, which Spark puts
+    on the worker path and which holds no Python, and 11 on pyspark.zip).
+    Drop the jars from sys.path and the zipimporters from the importer
+    cache; imports recreate the few they still need."""
+    sys.path[:] = [p for p in sys.path if not p.endswith(".jar")]
+    for key, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[key]
+
+
+if "pyspark.worker" in sys.modules:
+    _drop_worker_zip_importers()

@@ -43,15 +43,18 @@ def get_spark(
         # native/vectorized split) — constraint inference only ADDS derived
         # filters, so disabling it never changes results, only plans.
         .config("spark.sql.constraintPropagation.enabled", "false")
-        # Input-split sizing. Two opposing costs: a pandas-UDF task pays
-        # ~200 ms of per-task worker-protocol overhead (measured; it does
-        # not amortize across tasks), so tasks must be big enough that
-        # Python compute dominates; but splits fewer than the core count
-        # leave cores idle (the 4 MB default openCost makes many-small-file
-        # tables collapse to ~#cores/2 splits). Spark's default 128 MB
-        # maxPartitionBytes + 1 MB openCost + minPartitionNum = parallelism
-        # keeps split count ≈ max(cores, bytes/128MB) at every cluster
-        # size — the same rule that holds on a 1000-executor scan of 100 TB.
+        # Input-split sizing. Two opposing costs: a pandas-UDF task pays a
+        # fixed start-up cost in its Python worker (~5-30 ms, or ~200 ms
+        # when the worker keeps the zip importers that
+        # importlib.invalidate_caches() re-reads at every task start;
+        # pii_filter_spark/__init__.py drops them), so tasks must be big
+        # enough that Python compute dominates; but splits fewer than the
+        # core count leave cores idle (the 4 MB default openCost makes
+        # many-small-file tables collapse to ~#cores/2 splits). Spark's
+        # default 128 MB maxPartitionBytes + 1 MB openCost + minPartitionNum
+        # = parallelism keeps split count ≈ max(cores, bytes/128MB) at every
+        # cluster size — the same rule that holds on a 1000-executor scan
+        # of 100 TB.
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
         .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))

@@ -11,8 +11,10 @@ us the two Iceberg behaviours the pipeline depends on:
   * metadata for checkpoint/resume — the manifest doubles as the
     completed-partition set (pipeline.run_pipeline).
 
-Keeping reads/writes behind this seam means swapping in
-`spark.read.format("iceberg")` is a config change, not a code change.
+Moving to Iceberg is a code change, not a config change: `read_table`
+resolves the manifest and the snapshot log itself, and the manifest and
+snapshot writers here, with run_pipeline's per-batch parquet write, would
+give way to Iceberg's reader, writer and snapshot metadata.
 """
 
 from __future__ import annotations
@@ -52,18 +54,6 @@ def read_table(
         dirs = sorted({e["batch_dir"] for e in entries})
         return spark.read.parquet(*(os.path.join(path, d) for d in dirs))
     return spark.read.parquet(path)
-
-
-def write_table(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: Optional[List[str]] = None,
-) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
 
 
 # --- snapshot log (Iceberg-style time travel on the parquet fallback) -------
@@ -114,7 +104,6 @@ def snapshot_write(
     df: DataFrame,
     table_path: str,
     mode: str = "append",
-    partition_by: Optional[List[str]] = None,
 ) -> int:
     """Write `df` as a new snapshot of the table; returns its id.
 
@@ -131,10 +120,7 @@ def snapshot_write(
     new_id = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
     rel_dir = os.path.join("data", f"s{new_id:05d}")
     out_dir = os.path.join(table_path, rel_dir)
-    writer = df.write.mode("errorifexists")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(out_dir)
+    df.write.mode("errorifexists").parquet(out_dir)
     inherited: List[str] = []
     if mode == "append" and parent is not None:
         by_id = {s["snapshot_id"]: s for s in snaps}

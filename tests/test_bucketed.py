@@ -1,18 +1,9 @@
 """Bucketed co-located join: the plan must contain no Exchange."""
 
-import io
-from contextlib import redirect_stdout
-
 from pyspark.sql import functions as F
 
 from pii_filter_spark.sources.bucketed import bucketed_join, write_bucketed
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from tests.plans import Plan
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
@@ -29,9 +20,9 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         # large table would
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         joined = bucketed_join(spark, "b_orders", "b_customer", ["o_custkey"])
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
+        plan = Plan(joined)
+        assert plan.has("SortMergeJoin"), plan.text
+        assert not plan.has("Exchange"), plan.text
 
         # correctness: same result as the plain join
         plain = orders.join(
@@ -43,7 +34,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         unbucketed = spark.read.parquet("/root/testdata/sf0.001/customer.parquet") \
             .withColumnRenamed("c_custkey", "o_custkey")
         mixed = spark.table("b_orders").join(unbucketed, "o_custkey")
-        assert "Exchange" in _plan(mixed)
+        assert Plan(mixed).has("Exchange")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
         spark.sql("DROP TABLE IF EXISTS b_orders")

@@ -9,6 +9,7 @@ join, no cartesian product).
 from pyspark.sql import functions as F
 
 from pii_filter_spark.operators.dsir import dsir_select, hashed_bucket
+from tests.plans import Plan
 
 
 def _corpus(spark):
@@ -75,9 +76,9 @@ def test_dsir_plan_zero_shuffle_scoring(spark):
     is one aggregate HOF per doc: scan -> project -> TakeOrdered. No
     join, no exchange — the exploded-token shuffle keyed by doc_id is
     gone from the scoring side entirely."""
-    plan = dsir_select(
+    plan = Plan(dsir_select(
         _corpus(spark), F.col("source") == "tgt", num_buckets=256, k=6
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan
-    assert "Join" not in plan
-    assert "Exchange" not in plan
+    ))
+    assert plan.has("TakeOrderedAndProject")
+    assert not plan.has("Join")
+    assert not plan.has("Exchange")

@@ -11,6 +11,7 @@ from pii_filter_spark.operators.export_prep import (
     export_prep,
     export_prep_rows,
 )
+from tests.plans import Plan
 
 
 def test_square_and_extreme_aspects_bucket_correctly(spark):
@@ -64,14 +65,9 @@ def test_spark_matches_pure_python_twin(spark):
 
 def test_bucketing_plan_has_no_shuffle_or_udf(spark):
     df = spark.createDataFrame([("a", 30, 40)], ["image_id", "w", "h"])
-    plan = (
-        assign_aspect_buckets(df)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    plan = Plan(assign_aspect_buckets(df))
+    assert not plan.has("Exchange")
+    assert not plan.has("ArrowEvalPython") and not plan.has("BatchEvalPython")
 
 
 def test_default_bucket_list_covers_all_indices(spark):

@@ -9,6 +9,7 @@ from pii_filter_spark.operators.html_extract import (
     html_extract,
     strip_html_sql,
 )
+from tests.plans import Plan
 
 CASES = [
     (0, "<p>Hello world</p>", "Hello world"),
@@ -72,10 +73,10 @@ def test_shape_facts(spark):
 
 def test_plan_is_one_codegen_projection(spark):
     df = spark.createDataFrame([(0, "<p>x</p>")], "doc_id long, html string")
-    plan = html_extract(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    plan = Plan(html_extract(df))
+    assert not plan.has("Exchange")
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert marker not in plan
+        assert not plan.has(marker)
 
 
 def test_synth_page_py_matches_spark_column(spark):

@@ -5,6 +5,7 @@ from pii_filter_spark.operators.image_quality import (
     image_quality_row,
 )
 from pii_filter_spark.sources.synth import build_input_table, gen_row
+from tests.plans import Plan
 
 
 def test_rule_logic_pure():
@@ -45,8 +46,7 @@ def test_operator_matches_pure_and_stays_native(spark):
     df = build_input_table(spark, 60, seed=42, num_partitions=4)
     out = image_quality_filter(df)
     # no Python evaluation anywhere in the plan — pure codegen projection
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
+    assert not Plan(out).has("EvalPython")
     got = {r["image_id"]: tuple(r) for r in out.collect()}
     kept = 0
     for i in range(60):

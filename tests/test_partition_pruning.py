@@ -6,7 +6,8 @@ file set BEFORE any data is read."""
 import pytest
 from pyspark.sql import functions as F
 
-from pii_filter_spark.sources.table_io import read_table, write_table
+from pii_filter_spark.sources.table_io import read_table
+from tests.plans import Plan, columns
 
 
 @pytest.fixture()
@@ -17,18 +18,16 @@ def part_table(spark, tmp_path):
          for i in range(200)],
         "doc_id long, text string, lang string",
     )
-    write_table(df, path, partition_by=["lang"])
+    df.write.partitionBy("lang").parquet(path)
     return path
 
 
 def test_partition_filter_reaches_scan(spark, part_table):
     df = read_table(spark, part_table).where(F.col("lang") == "en")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
+    (scan,) = Plan(df).named("Scan parquet")
     # the predicate must appear in PartitionFilters (metadata-level),
     # not PushedFilters (row-level) — pruning happens before any read
-    pf = plan[plan.index("PartitionFilters"):]
-    assert "lang" in pf.split("PushedFilters")[0]
+    assert "lang" in columns(scan["PartitionFilters"])
 
 
 def _files_read(df) -> int:

@@ -3,8 +3,6 @@ deterministic synthetic corpus. This is the F1≥0.99 / byte-equality gate of
 FIXTURES.md B3, exercised through the real Arrow-batched plan.
 """
 
-import re
-
 import pandas as pd
 import pytest
 
@@ -15,6 +13,7 @@ from pii_filter_spark.operators.fused import (
 )
 from pii_filter_spark.sources.synth import gen_pandas
 from tests.oracle import reference_semantics as oracle
+from tests.plans import Plan
 
 N = 400
 SEED = 99
@@ -100,22 +99,6 @@ def test_fused_stage_equals_chained_stages(spark, corpus):
         assert ra == rb, k
 
 
-def _executed_plan(df):
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan":
-        plan = plan.executedPlan()  # the final plan, without the initial one
-    return plan.toString()
-
-
-def _udfs_per_arrow_node(df):
-    """Python UDFs evaluated by each ArrowEvalPython node of the executed
-    plan (Spark puts independent UDFs over one input into ONE node, so
-    the node count alone would not see a chained second stage)."""
-    nodes = re.findall(r"ArrowEvalPython \[.*?\], \[(.*?)\]", _executed_plan(df))
-    return [n.count("pythonUDF") for n in nodes]
-
-
 def test_caption_paths_run_one_python_stage(spark, corpus, tmp_path):
     import __spark_entry__ as em
     from pii_filter_spark.operators.fused import PartCounts
@@ -123,9 +106,8 @@ def test_caption_paths_run_one_python_stage(spark, corpus, tmp_path):
     from pii_filter_spark.sources import table_io
 
     df, pdf = corpus
-    assert _udfs_per_arrow_node(em.entry(spark)) == [1]
-    assert _udfs_per_arrow_node(em.q_quality_full(spark, em.SF_DEFAULT)) == [1]
-    assert _udfs_per_arrow_node(transform(df)) == [1]
+    for frame in (em.entry(spark), em.q_quality_full(spark, em.SF_DEFAULT), transform(df)):
+        assert Plan(frame, executed=True).udfs_per_arrow_node() == [1]
 
     # run_pipeline's batch: its counts are exact only while the counted UDF
     # runs once per row in result tasks, i.e. with no Exchange in the plan
@@ -133,8 +115,9 @@ def test_caption_paths_run_one_python_stage(spark, corpus, tmp_path):
     src = with_part_id(table_io.read_table(spark, str(tmp_path / "in")), 8)
     counts = spark.sparkContext.accumulator({}, PartCounts())
     batch = batch_frame(src, [0, 3, 5], counts)
-    assert _udfs_per_arrow_node(batch) == [1]
-    assert "Exchange" not in _executed_plan(batch)
+    plan = Plan(batch, executed=True)
+    assert plan.udfs_per_arrow_node() == [1]
+    assert not plan.has("Exchange")
 
 
 def test_lsh_pair_operators_evaluate_their_signature_udf_once(spark, corpus):
@@ -154,12 +137,12 @@ def test_lsh_pair_operators_evaluate_their_signature_udf_once(spark, corpus):
     df, _ = corpus
     docs = df.select(F.col("image_id").alias("doc_id"),
                      F.col("caption").alias("text"))
-    assert _udfs_per_arrow_node(minhash_lsh_pairs(docs, threshold=0.5)) == [1]
-    assert _udfs_per_arrow_node(simhash_near_pairs(docs)) == [1]
+    for pairs in (minhash_lsh_pairs(docs, threshold=0.5), simhash_near_pairs(docs)):
+        assert Plan(pairs, executed=True).udfs_per_arrow_node() == [1]
 
     emb = spark.range(300, numPartitions=8).select(
         F.col("id").alias("vec_id"),
         F.array(*[F.sin(F.col("id") % 40 + j) for j in range(8)]).alias("embedding"),
     )
     pairs = cosine_near_pairs_lsh(emb, threshold=0.9, planes=16, chunks=4, dim=8)
-    assert _udfs_per_arrow_node(pairs) == [1]
+    assert Plan(pairs, executed=True).udfs_per_arrow_node() == [1]

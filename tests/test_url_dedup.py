@@ -3,6 +3,7 @@
 from pii_filter_spark.operators.url_dedup import normalize_url, url_dedup
 
 import pyspark.sql.functions as F
+from tests.plans import Plan
 
 
 def _norm_one(spark, url: str) -> str:
@@ -40,5 +41,4 @@ def test_dedup_keeps_min_id_per_normalized_key(spark):
     assert [out[i]["keep"] for i in (1, 2, 3, 4)] == [True, False, False, True]
     assert out[2]["url_norm"] == out[1]["url_norm"] == "example.com/a"
     # pure Catalyst — no Python anywhere in the plan
-    plan = url_dedup(df)._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan
+    assert not Plan(url_dedup(df)).has("EvalPython")

@@ -9,6 +9,7 @@ from pii_filter_spark.operators.url_rules import (
     DEFAULT_THRESHOLD,
     url_filter,
 )
+from tests.plans import Plan
 
 
 @pytest.fixture(scope="module")
@@ -77,15 +78,11 @@ def test_threshold_boundary(spark):
 
 
 def test_literal_path_plan_has_no_shuffle(urls):
-    plan = url_filter(urls)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert not Plan(url_filter(urls)).has("Exchange")
 
 
 def test_join_path_is_broadcast(spark, urls):
     deny = spark.createDataFrame([("spam-casino.biz",)], ["domain"])
-    plan = (
-        url_filter(urls, blocklist_df=deny)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoop" in plan
-    assert "SortMergeJoin" not in plan
+    plan = Plan(url_filter(urls, blocklist_df=deny))
+    assert plan.has("BroadcastHashJoin") or plan.has("BroadcastNestedLoop")
+    assert not plan.has("SortMergeJoin")

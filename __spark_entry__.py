@@ -106,24 +106,31 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-def _captions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents.text + deterministic PII clause as the caption column.
+def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
+    """Spread single-file test scans across cores before UDF stages.
 
-    Repartitioned before the pandas-UDF stages: the sf test tables are
-    single parquet files, which would otherwise serialize the whole UDF
-    through one task. Shuffling the 2-column text projection is cheap and
-    buys full-core parallelism (at production scale the scan itself yields
-    many splits and this becomes a no-op via AQE coalesce).
-    """
+    Hash-partitions on the frame's first column (always the unique id in
+    this module) instead of round-robin: round-robin repartition pays a
+    full local sort of every column (sortBeforeRepartition, for retry
+    determinism) — measured ~2x on text-heavy frames — while hash
+    partitioning is one hash per row and equally uniform on unique ids.
+    At production scale the scan yields many splits and this exchange is
+    the familiar pre-UDF spread, not a new cost class."""
+    return df.repartition(
+        spark.sparkContext.defaultParallelism, F.col(df.columns[0])
+    )
+
+
+def _captions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents.text + deterministic PII clause as the caption column,
+    spread by _par before the pandas-UDF stages (shuffling the 2-column
+    text projection is cheap)."""
     clause = F.element_at(
         F.array(*[F.lit(c) for c in _PII_CLAUSES]),
         (F.col("doc_id") % 5 + 1).cast("int"),
     )
-    return (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.concat(F.col("text"), clause).alias("caption"))
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    )
+    return _par(spark, _docs(spark, sf_dir).select(
+        "doc_id", F.concat(F.col("text"), clause).alias("caption")))
 
 
 def _sql_case_clause(col: str, values: list, quote: bool = True) -> str:
@@ -214,11 +221,8 @@ def q_sensitive_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(c) for c in _SENS_CLAUSES]),
         (F.col("doc_id") % 6 + 1).cast("int"),
     )
-    caps = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.concat(F.col("text"), clause).alias("caption"))
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    )
+    caps = _par(spark, _docs(spark, sf_dir).select(
+        "doc_id", F.concat(F.col("text"), clause).alias("caption")))
     return scrub_stage(caps).select(
         "doc_id",
         F.col("scrubbed_caption").alias("scrubbed"),
@@ -687,11 +691,8 @@ def q_restore_label_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array(*[F.lit(c) for c in _DUP_CLAUSES]),
         (F.col("doc_id") % 5 + 1).cast("int"),
     )
-    caps = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.concat(F.col("text"), clause).alias("caption"))
-        .repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    )
+    caps = _par(spark, _docs(spark, sf_dir).select(
+        "doc_id", F.concat(F.col("text"), clause).alias("caption")))
     return restore_stage(scrub_stage(caps), cleanup_labels=True).select(
         "doc_id", "restored_caption", "restore_ok"
     )
@@ -2094,10 +2095,10 @@ def q_refinedweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     a real pipeline must. Oracle: the html-strip hop re-derived through
     the proven-parity DuckDB chain, every later hop through the pure
     twins."""
+    from pii_filter_spark.operators.fused import caption_stage
     from pii_filter_spark.operators.html_extract import strip_html
     from pii_filter_spark.operators.line_clean import line_clean
     from pii_filter_spark.operators.quality_stage import ASCII_WS
-    from pii_filter_spark.operators.textstats import language_id_col
     from pii_filter_spark.operators.warc_ingest import parse_warc_archives
     from pii_filter_spark.sources.warc import build_warc, http_response_block
 
@@ -2137,13 +2138,14 @@ def q_refinedweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleaned = line_clean(extracted).select(
         "doc_id", "n_lines", "doc_keep", "text_clean"
     )
-    # lang as an in-place column (language_id_col), NOT a join back on
-    # doc_id — the join form costs a corpus-wide shuffle for nothing
-    scored = cleaned.select(
+    # lang as an in-place column (the caption stage's lang layer), NOT a
+    # join back on doc_id — the join form costs a corpus-wide shuffle for
+    # nothing
+    scored = caption_stage(cleaned, ["lang"], "text_clean").select(
         "doc_id",
         "n_lines",
         "doc_keep",
-        language_id_col(F.col("text_clean")).alias("lang"),
+        "lang",
         F.size(F.split(F.trim("text_clean"), ASCII_WS)).alias("wc"),
         F.length("text_clean").alias("n_chars_clean"),
         F.md5("text_clean").alias("fp"),
@@ -2198,20 +2200,6 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     ).where(F.col("doc_id") % 11 == 0)
     return simhash_near_pairs(docs.unionByName(copies), max_hamming=6)
-
-def _par(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Spread single-file test scans across cores before UDF stages.
-
-    Hash-partitions on the frame's first column (always the unique id in
-    this module) instead of round-robin: round-robin repartition pays a
-    full local sort of every column (sortBeforeRepartition, for retry
-    determinism) — measured ~2x on text-heavy frames — while hash
-    partitioning is one hash per row and equally uniform on unique ids.
-    At production scale the scan yields many splits and this exchange is
-    the familiar pre-UDF spread, not a new cost class."""
-    return df.repartition(
-        spark.sparkContext.defaultParallelism, F.col(df.columns[0])
-    )
 
 
 @_oracle(osup.langid_sql)

@@ -73,7 +73,7 @@ def _ensure_pipeline_input(spark, n: int) -> str:
 
 
 def _pipeline_secs(spark, input_path: str) -> float:
-    """Timed flagship job: scan -> quality stage -> scrub stage -> write."""
+    """Timed flagship job: scan -> one fused quality+scrub stage -> noop."""
     from pii_filter_spark.pipeline import transform
 
     df = spark.read.parquet(input_path)

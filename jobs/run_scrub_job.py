@@ -24,11 +24,11 @@ resume first deletes every batch directory that is not fully committed
 (a batch killed between its write and its last entry). Read the output
 with table_io.read_table, which reads the directories the manifest
 names. The JSON summary's row counts cover the whole manifest;
-`layer_ms_this_run` sums the caption UDF's per-layer time (quality,
-scrub; summed over tasks, so it can exceed wall time) once per batch
-directory this run wrote. --num-parts must match the original run: every
-manifest entry records it, and run_pipeline refuses a resume that
-disagrees.
+`layer_ms_this_run` sums the caption UDF's per-layer time (lang, ppl,
+rules, scrub; summed over tasks, so it can exceed wall time) once per
+batch directory this run wrote. --num-parts must match the original
+run: every manifest entry records it, and run_pipeline refuses a resume
+that disagrees.
 """
 
 from __future__ import annotations
@@ -51,7 +51,6 @@ def main(argv=None) -> int:
     p.add_argument("--output", required=True)
     p.add_argument("--num-parts", type=int, default=256)
     p.add_argument("--batch-parts", type=int, default=32)
-    p.add_argument("--snapshot-id", default="snap-0")
     p.add_argument("--seed", type=int, default=42)
     p.add_argument("--master", default=None,
                    help="override master (default: spark-submit's)")
@@ -82,7 +81,6 @@ def main(argv=None) -> int:
             args.output,
             num_parts=args.num_parts,
             batch_parts=args.batch_parts,
-            snapshot_id=args.snapshot_id,
             scrub_image_bytes=args.scrub_image_bytes,
         )
         manifest = table_io.read_manifest(args.output)

@@ -17,7 +17,7 @@ from __future__ import annotations
 import math
 import re
 from collections import Counter
-from typing import Dict, List
+from typing import Dict, List, Optional
 
 _SEED_CORPORA: Dict[str, str] = {
     "pt": (
@@ -144,8 +144,9 @@ for _l, _lang in enumerate(LANGS):
         _ADV[_VOCAB_ID[_g], _l] = _p - _m["unseen"]
 
 
-def detect_language(text: str) -> str:
-    """Most likely language label, or "und" with no evidence."""
+def detect_language(text: Optional[str]) -> str:
+    """Most likely language label, or "und" with no evidence (None or
+    blank text included)."""
     if not text or not text.strip():
         return UND
     # Script check first: CJK text has near-zero trigram overlap with any

@@ -513,9 +513,10 @@ def _passes_noise_guards(text: str, ent_type: str) -> bool:
 # dominates find_entities (~3x the cost of all other patterns together).
 # Equivalent fast path: find generic capitalized runs with the SAME tail
 # structure, then check tokens against the name set (O(1) membership
-# instead of O(names) alternation). Equivalence with the alternation
-# pattern — which the fixture oracle still executes — is enforced by the
-# byte-equality tests (test_spark_stages) and the dataset F1 pins.
+# instead of O(names) alternation). tests/test_detect.py (synth captions)
+# and tests/test_properties.py (generated runs) compare it with the
+# alternation in GRAMMARS; the test oracle's ner_stage scans GRAMMARS
+# too, so the byte-equality tests against it cover the swap end to end.
 _NAME_RUN_RE = re.compile(rf"\b{_CAP}(?:\s+(?:(?:{_CONN})\s+)?{_CAP})*")
 _RUN_WORD_RE = re.compile(r"\S+")
 _SCANNED = [r for r in RULES if r.type != "NOME_COMPLETO"]

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import math
 from collections import Counter
-from typing import List
+from typing import Optional
 
 from .langid import _SEED_CORPORA, normalize_for_lm
 
@@ -85,10 +85,10 @@ for _ctx, _cnt in _BI.items():
 _LOGP = _np.log((_NUM + _K) / (_DEN[:, :, None] + _K * _V))
 
 
-def perplexity(text: str) -> float:
+def perplexity(text: Optional[str]) -> float:
     """Char-trigram perplexity; +inf-ish high for empty input is avoided by
-    returning the threshold sentinel (empty text is handled by the 'empty'
-    quality rule, not the perplexity rule)."""
+    returning the 0.0 sentinel for None or blank text (empty text is
+    handled by the 'empty' quality rule, not the perplexity rule)."""
     if not text or not text.strip():
         return 0.0
     t = _BOS + _BOS + normalize_for_lm(text)
@@ -97,7 +97,3 @@ def perplexity(text: str) -> float:
     codes = _np.frombuffer(t.translate(_TAB).encode("latin-1"), dtype=_np.uint8)
     lp = _LOGP[codes[:-2], codes[1:-1], codes[2:]]
     return float(math.exp(-lp.mean()))
-
-
-def perplexity_batch(texts) -> List[float]:
-    return [perplexity(t) if isinstance(t, str) else 0.0 for t in texts]

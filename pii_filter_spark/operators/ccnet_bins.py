@@ -8,9 +8,10 @@ wildly across languages. CCNet trains the cutoffs on a SAMPLE of each
 language and then applies them as plain threshold comparisons — it
 never sorts the corpus — and that is exactly the shape here:
 
-  1. one Arrow pass adds (lang, ppl) columns in place — the same
-     ``detect_language`` / ``perplexity_batch`` twins the standalone
-     langid / perplexity queries are oracle-checked against;
+  1. one Arrow pass adds (lang, ppl) columns in place — the `lang` and
+     `ppl` layers of the caption stage (operators/fused.caption_stage),
+     the same layers the standalone langid / perplexity queries are
+     oracle-checked through;
   2. a bounded deterministic sample per language picks threshold
      training rows by md5(id)-order (the repo's engine-portable
      pseudo-random permutation, same total order as
@@ -31,8 +32,8 @@ langid/perplexity Arrow pass runs twice (threshold pass + scoring
 pass) just as CCNet runs its scoring twice — trading a second bounded
 compute pass for never materializing a corpus-sized score table.
 
-Reference seam: the char-trigram LM stands in for CCNet's KenLM 5-gram
-model behind the same ``perplexity_batch`` signature.
+Reference seam: the char-trigram LM (core/perplexity.perplexity) stands
+in for CCNet's KenLM 5-gram model behind the stage's `ppl` layer.
 """
 from __future__ import annotations
 
@@ -41,7 +42,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .textstats import language_id_col, perplexity_col
+from .fused import caption_stage
 
 HEAD, MIDDLE, TAIL = "head", "middle", "tail"
 
@@ -71,11 +72,10 @@ def ccnet_bins(
 
     # Threshold pass: lang for every row (needed to stratify), ppl only
     # carried along — both evaluate in the same Arrow stage; the window
-    # then sees a narrow (id, lang, ppl) projection.
-    scored = df.select(
-        F.col(id_col),
-        language_id_col(F.col(text_col)).alias("lang"),
-        perplexity_col(F.col(text_col)).alias("ppl"),
+    # then sees a narrow (id, lang, ppl) projection. The scoring pass
+    # below evaluates the same frame again.
+    scored = caption_stage(df, ["lang", "ppl"], text_col).select(
+        F.col(id_col), "lang", F.round("ppl", 4).alias("ppl")
     )
 
     h = F.md5(F.col(id_col).cast("string"))
@@ -110,12 +110,7 @@ def ccnet_bins(
     # one CASE. Every language present got a cutoff row (each non-empty
     # stratum samples >= 1 row), so the inner join drops nothing.
     return (
-        df.select(
-            F.col(id_col),
-            language_id_col(F.col(text_col)).alias("lang"),
-            perplexity_col(F.col(text_col)).alias("ppl"),
-        )
-        .join(F.broadcast(cuts), "lang")
+        scored.join(F.broadcast(cuts), "lang")
         .select(
             id_col,
             "lang",

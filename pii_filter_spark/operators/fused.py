@@ -1,28 +1,38 @@
-"""The caption stage: one Arrow-batched pandas UDF per caption batch.
+"""The caption stage: one Arrow-batched pandas UDF over a text column.
 
-Every per-caption decision — language ID, perplexity, the quality rules
+Every per-text decision — language ID, perplexity, the quality rules
 (core/quality.py) and the PII/toxicity scrub (core/detect.py) — runs in
 Python on the frozen core semantics; the JVM only scans, projects and
 writes. The operators layer holds no rule logic of its own.
 
-Three stage functions, each ONE pandas UDF reading only the `caption`
-column, plus `part_id` when counting (Catalyst prunes the MB-scale
-`bytes` column away):
+`_LAYERS` is the one ordered layer table. Each layer maps a batch of
+texts, plus the columns of earlier layers, to its own columns:
 
-  * quality_stage       adds lang, ppl, drop_reasons, keep
-  * scrub_stage         adds scrubbed_caption, pii_masked, scrub_count
-  * fused_quality_scrub adds both sets — the production path
-                        (pipeline.transform) and `entry()`.
+  * lang   adds lang
+  * ppl    adds ppl
+  * rules  adds drop_reasons, keep (reads lang and ppl)
+  * scrub  adds scrubbed_caption, pii_masked (and scrub_count, natively)
+
+`caption_stage(df, layers, text_col)` runs a selection of them as ONE
+pandas UDF reading only `text_col`, plus `part_id` when counting
+(Catalyst prunes the MB-scale `bytes` column away). The caption
+selections keep their names in physical plans:
+
+  * quality_stage       lang, ppl, rules    (caption_quality)
+  * scrub_stage         scrub               (caption_scrub)
+  * fused_quality_scrub all four            (caption_quality_scrub) —
+                        the production path (pipeline.transform) and
+                        `entry()`.
 
 scrub_stage(quality_stage(df)) yields the same columns and values as
 fused_quality_scrub(df) (tests/test_spark_stages.py). Pattern, dictionary
 and model state compile once per Python worker at module import.
 
-Counting: given a PartCounts accumulator, fused_quality_scrub's UDF also
-reads `part_id` and adds each Arrow batch's per-part counts and per-layer
-ms to it (pipeline.run_pipeline's manifest). The counts are exact because
-Spark merges a result task's update once, from its first successful
-attempt: this holds while the counted plan has no Exchange.
+Counting: given a PartCounts accumulator, the UDF also reads `part_id`
+and adds each Arrow batch's per-part counts and per-layer ms to it
+(pipeline.run_pipeline's manifest). The counts are exact because Spark
+merges a result task's update once, from its first successful attempt:
+this holds while the counted plan has no Exchange.
 """
 
 from __future__ import annotations
@@ -60,48 +70,39 @@ MAPPING_TYPE = StructType(
     ]
 )
 
-_QUALITY_FIELDS = [
-    StructField("lang", StringType()),
-    StructField("ppl", DoubleType()),
-    StructField("drop_reasons", ArrayType(StringType())),
-    StructField("keep", BooleanType()),
-]
-_SCRUB_FIELDS = [
-    StructField("scrubbed_caption", StringType()),
-    StructField("pii_masked", ArrayType(MAPPING_TYPE)),
-]
+
+def _rules(texts: pd.Series, cols: dict) -> dict:
+    reasons = [drop_reasons(t, lg, pp)
+               for t, lg, pp in zip(texts, cols["lang"], cols["ppl"])]
+    return {"drop_reasons": reasons, "keep": [not r for r in reasons]}
 
 
-def _quality_columns(captions: pd.Series) -> dict:
-    langs, ppls, reasons = [], [], []
-    for t in captions:
-        if isinstance(t, str):
-            lg, pp = detect_language(t), perplexity(t)
-        else:
-            t, lg, pp = None, "und", 0.0
-        langs.append(lg)
-        ppls.append(pp)
-        reasons.append(drop_reasons(t, lg, pp))
-    return {
-        "lang": langs,
-        "ppl": ppls,
-        "drop_reasons": reasons,
-        "keep": [len(r) == 0 for r in reasons],
-    }
-
-
-def _scrub_columns(captions: pd.Series) -> dict:
-    scrubbed = scrub_batch(captions)
+def _scrub(texts: pd.Series, cols: dict) -> dict:
+    scrubbed = scrub_batch(texts)
     return {
         "scrubbed_caption": [r[0] for r in scrubbed],
         "pii_masked": [r[1] for r in scrubbed],
     }
 
 
+# name -> (output fields, fn(texts, columns of earlier layers) -> columns);
+# a None text gets lang "und" and ppl 0.0 from the core functions
 _LAYERS = {
-    "quality": (_QUALITY_FIELDS, _quality_columns),
-    "scrub": (_SCRUB_FIELDS, _scrub_columns),
+    "lang": ([StructField("lang", StringType())],
+             lambda texts, cols: {"lang": [detect_language(t) for t in texts]}),
+    "ppl": ([StructField("ppl", DoubleType())],
+            lambda texts, cols: {"ppl": [perplexity(t) for t in texts]}),
+    "rules": ([StructField("drop_reasons", ArrayType(StringType())),
+               StructField("keep", BooleanType())], _rules),
+    "scrub": ([StructField("scrubbed_caption", StringType()),
+               StructField("pii_masked", ArrayType(MAPPING_TYPE))], _scrub),
 }
+QUALITY_LAYERS = ("lang", "ppl", "rules")
+ALL_LAYERS = (*QUALITY_LAYERS, "scrub")
+# the caption selections' UDF names in physical plans; any other
+# selection is named by its layers ("lang_ppl")
+_NAMES = {QUALITY_LAYERS: "caption_quality", ("scrub",): "caption_scrub",
+          ALL_LAYERS: "caption_quality_scrub"}
 
 
 class PartCounts(AccumulatorParam):
@@ -146,52 +147,48 @@ def layer_ms(value: dict) -> dict:
     return {layer: round(value.get(("layer_ms", layer), 0.0), 1) for layer in _LAYERS}
 
 
-def _caption_udf(name: str, layers, counts=None):
-    def batch(captions: pd.Series, parts: pd.Series = None) -> pd.DataFrame:
+def caption_stage(df: DataFrame, layers, text_col: str, counts=None) -> DataFrame:
+    """Adds the columns of the selected `layers` (names of `_LAYERS`, run
+    in table order) computed from `text_col`, in one Python stage; with
+    `scrub`, also scrub_count. With `counts`, an accumulator of
+    PartCounts, the UDF also reads `part_id` and adds every batch's
+    per-part counts and per-layer ms to it (all four layers selected).
+
+    Raises ValueError for `rules` without `lang` and `ppl`."""
+    sel = tuple(sorted(set(layers), key=list(_LAYERS).index))
+    if "rules" in sel and not {"lang", "ppl"} <= set(sel):
+        raise ValueError(f"layer selection {sel}: rules reads lang and ppl")
+
+    def batch(texts: pd.Series, parts: pd.Series = None) -> pd.DataFrame:
         cols, ms = {}, {}
-        for layer in layers:
+        for layer in sel:
             t0 = time.perf_counter()
-            cols.update(_LAYERS[layer][1](captions))
+            cols.update(_LAYERS[layer][1](texts, cols))
             ms[layer] = (time.perf_counter() - t0) * 1000
         if counts is not None:
             counts.add(_fold_counts(parts, cols, ms))
         return pd.DataFrame(cols)
 
-    batch.__name__ = name  # the UDF's name in physical plans
-    fields = [f for layer in layers for f in _LAYERS[layer][0]]
-    return pandas_udf(batch, StructType(fields))
-
-
-_QUALITY_UDF = _caption_udf("caption_quality", ["quality"])
-_SCRUB_UDF = _caption_udf("caption_scrub", ["scrub"])
-_FUSED = ("caption_quality_scrub", ["quality", "scrub"])
-_FUSED_UDF = _caption_udf(*_FUSED)
-
-
-def _apply(df: DataFrame, udf, *extra_cols: str) -> DataFrame:
-    out = df.withColumn("_cs", udf(F.col("caption"), *map(F.col, extra_cols)))
+    batch.__name__ = _NAMES.get(sel, "_".join(sel))  # the UDF's name in plans
+    udf = pandas_udf(batch, StructType([f for layer in sel for f in _LAYERS[layer][0]]))
+    args = [F.col(text_col)] + ([F.col("part_id")] if counts is not None else [])
+    out = df.withColumn("_cs", udf(*args))
     for name in udf.returnType.fieldNames():
         out = out.withColumn(name, F.col(f"_cs.{name}"))
-    return out.drop("_cs")
+    out = out.drop("_cs")
+    return out.withColumn("scrub_count", F.size("pii_masked")) if "scrub" in sel else out
 
 
 def quality_stage(df: DataFrame) -> DataFrame:
     """Adds lang, ppl, drop_reasons (core.quality.RULE_ORDER order), keep."""
-    return _apply(df, _QUALITY_UDF)
+    return caption_stage(df, QUALITY_LAYERS, "caption")
 
 
 def scrub_stage(df: DataFrame) -> DataFrame:
     """Adds scrubbed_caption, pii_masked, scrub_count."""
-    out = _apply(df, _SCRUB_UDF)
-    return out.withColumn("scrub_count", F.size("pii_masked"))
+    return caption_stage(df, ("scrub",), "caption")
 
 
-def fused_quality_scrub(df: DataFrame, counts=None) -> DataFrame:
-    """quality_stage + scrub_stage columns in one Python stage. With
-    `counts`, an accumulator of PartCounts, the UDF also reads `part_id`
-    and adds every batch's per-part counts and per-layer ms to it."""
-    if counts is None:
-        out = _apply(df, _FUSED_UDF)
-    else:
-        out = _apply(df, _caption_udf(*_FUSED, counts), "part_id")
-    return out.withColumn("scrub_count", F.size("pii_masked"))
+def fused_quality_scrub(df: DataFrame) -> DataFrame:
+    """quality_stage + scrub_stage columns in one Python stage."""
+    return caption_stage(df, ALL_LAYERS, "caption")

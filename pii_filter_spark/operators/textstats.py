@@ -1,7 +1,8 @@
 """Text-analysis operators over a document table (training-data pipeline).
 
 All-native where possible (token counts and fingerprints stay in
-codegen); langid and perplexity are the model-backed pandas UDFs.
+codegen); langid and perplexity are layers of the one model-backed
+caption stage (operators/fused.caption_stage).
 """
 
 from __future__ import annotations
@@ -9,9 +10,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
-
-from ..core.langid import detect_language
 
 # "BPE-ish" tokenizer regex: word pieces OR single non-space symbols —
 # the standard pre-tokenization split used before byte-pair merging.
@@ -96,43 +94,21 @@ def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     )
 
 
-def language_id_col(text_col) -> "F.Column":
-    """Language-ID as a COLUMN (Arrow UDF) — composable without a join:
-    `df.withColumn("lang", language_id_col(F.col("text")))` adds the
-    language in place, no shuffle."""
-
-    @F.pandas_udf(StringType())
-    def _lang(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [detect_language(t) if isinstance(t, str) else "und" for t in texts]
-        )
-
-    return _lang(text_col)
-
-
 def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    return df.select(
-        F.col(id_col),
-        language_id_col(F.col(text_col)).alias("lang_detected"),
+    """(id, lang_detected): the caption stage's `lang` layer."""
+    from .fused import caption_stage
+
+    return caption_stage(df, ["lang"], text_col).select(
+        F.col(id_col), F.col("lang").alias("lang_detected")
     )
-
-
-def perplexity_col(text_col) -> "F.Column":
-    """Char-trigram perplexity rounded to 4 decimals, as a COLUMN (Arrow
-    UDF) — the perplexity twin of language_id_col."""
-    from ..core.perplexity import perplexity_batch
-
-    @F.pandas_udf(DoubleType())
-    def _ppl(texts: pd.Series) -> pd.Series:
-        return pd.Series(perplexity_batch(texts), dtype="float64")
-
-    return F.round(_ppl(text_col), 4)
 
 
 def perplexity_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(id, ppl): char-trigram perplexity, rounded to 4 decimals."""
-    return df.select(
-        F.col(id_col), perplexity_col(F.col(text_col)).alias("ppl")
+    from .fused import caption_stage
+
+    return caption_stage(df, ["ppl"], text_col).select(
+        F.col(id_col), F.round("ppl", 4).alias("ppl")
     )
 
 

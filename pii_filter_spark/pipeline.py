@@ -38,14 +38,16 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.fused import PartCounts, fused_quality_scrub, layer_ms, part_counts
+from .operators.fused import (
+    ALL_LAYERS, PartCounts, caption_stage, fused_quality_scrub, layer_ms, part_counts,
+)
 from .sources import table_io
 
 PART_COL = "part_id"
@@ -71,7 +73,9 @@ def batch_frame(src: DataFrame, parts: List[int], counts) -> DataFrame:
     accumulator); they are exact only while this plan has no Exchange.
     `part_id` comes last, as an int: the schema a `partitionBy(part_id)`
     table reads back with."""
-    out = fused_quality_scrub(src.where(F.col(PART_COL).isin(parts)), counts)
+    out = caption_stage(
+        src.where(F.col(PART_COL).isin(parts)), ALL_LAYERS, "caption", counts
+    )
     cols = [c for c in out.columns if c != PART_COL]
     return out.select(*cols, F.col(PART_COL).cast("int"))
 
@@ -133,8 +137,6 @@ def run_pipeline(
     output_path: str,
     num_parts: int = 32,
     batch_parts: int = 8,
-    fail_after_batch: Optional[int] = None,
-    snapshot_id: str = "snap-0",
     scrub_image_bytes: bool = False,
 ) -> List[int]:
     """Run (or resume) the pipeline. Returns the part_ids processed this run.
@@ -146,9 +148,8 @@ def run_pipeline(
     fully committed (drop_uncommitted), so a kill between a batch's write
     and its last entry costs only that batch.
 
-    fail_after_batch is a test hook: raise after N committed batches to
-    simulate a mid-run kill. scrub_image_bytes additionally rewrites the
-    binary column with PNG/JPEG metadata stripped (see scrub_bytes_stage).
+    scrub_image_bytes additionally rewrites the binary column with
+    PNG/JPEG metadata stripped (see scrub_bytes_stage).
 
     Raises ValueError when the output's manifest was written with another
     num_parts (rows hash to different part_ids then, so resuming would
@@ -194,7 +195,6 @@ def run_pipeline(
                 output_path,
                 p,
                 {
-                    "snapshot_id": snapshot_id,
                     "num_parts": num_parts,
                     "batch_dir": batch_dir,
                     "batch_part_ids": batch,
@@ -204,7 +204,4 @@ def run_pipeline(
                 },
             )
         processed.extend(batch)
-        batches_done = batch_idx // batch_parts + 1
-        if fail_after_batch is not None and batches_done >= fail_after_batch:
-            raise RuntimeError(f"injected failure after batch {batches_done}")
     return processed

@@ -49,6 +49,21 @@ def _recount(path):
     return counts
 
 
+def _killed_after(entries):
+    """A table_io.write_manifest_entry that raises right after writing its
+    `entries`-th entry: run_pipeline dies once those entries' batches
+    have committed, before the next batch's write."""
+    write_entry = table_io.write_manifest_entry
+    written = []
+
+    def killed(path, part_id, payload):
+        write_entry(path, part_id, payload)
+        written.append(part_id)
+        if len(written) == entries:
+            raise RuntimeError("killed after a batch commit")
+    return killed
+
+
 @pytest.fixture(scope="module")
 def source(spark, tmp_path_factory):
     inp = str(tmp_path_factory.mktemp("ckpt_in") / "input")
@@ -66,9 +81,10 @@ def runs(spark, source, tmp_path_factory):
 
     # killed run: dies after 2 of 4 batches, then resumes
     out = str(root / "resumed")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, source, out, num_parts=PARTS, batch_parts=BATCH,
-                     fail_after_batch=2)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(table_io, "write_manifest_entry", _killed_after(2 * BATCH))
+        with pytest.raises(RuntimeError, match="killed after a batch commit"):
+            run_pipeline(spark, source, out, num_parts=PARTS, batch_parts=BATCH)
     done_before = set(table_io.completed_part_ids(out))
     processed = run_pipeline(spark, source, out, num_parts=PARTS, batch_parts=BATCH)
     return ref_out, out, done_before, processed
@@ -104,7 +120,7 @@ def test_manifest_equals_independent_recount(runs, which):
     for p, e in manifest.items():
         assert {k: e[k] for k in COUNT_FIELDS} == recount[p], p
         assert list(e["drop_reason_counts"]) == sorted(e["drop_reason_counts"])
-        assert set(e["layer_ms"]) == {"quality", "scrub"}
+        assert set(e["layer_ms"]) == {"lang", "ppl", "rules", "scrub"}
         assert all(ms >= 0 for ms in e["layer_ms"].values())
     # the synth rows exercise every counter
     assert sum(c["rows_dropped"] for c in recount.values()) > 0
@@ -194,16 +210,17 @@ def test_rerun_on_complete_output_is_noop(spark, tmp_path_factory):
     assert _table_fingerprint(spark, out) == fp1
 
 
-def test_resume_with_other_num_parts_is_refused(spark, tmp_path_factory):
+def test_resume_with_other_num_parts_is_refused(spark, tmp_path_factory, monkeypatch):
     """Rows hash to part_ids by num_parts, so a resume with another count
     would skip or duplicate rows: it must fail before writing anything."""
     root = tmp_path_factory.mktemp("parts")
     inp = str(root / "input")
     write_input_table(spark, inp, 60, seed=SEED, num_partitions=2)
     out = str(root / "out")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, inp, out, num_parts=4, batch_parts=2,
-                     fail_after_batch=1)
+    monkeypatch.setattr(table_io, "write_manifest_entry", _killed_after(2))
+    with pytest.raises(RuntimeError, match="killed after a batch commit"):
+        run_pipeline(spark, inp, out, num_parts=4, batch_parts=2)
+    monkeypatch.undo()
     before = table_io.read_manifest(out)
     assert {e["num_parts"] for e in before} == {4}
     with pytest.raises(ValueError, match=r"num_parts=8 .*num_parts=4"):

@@ -221,11 +221,11 @@ CLAIMS = {
         shuffles=[SPREAD],
         executed=dict(interpreted=[]),
     ),
-    # langid + perplexity in one Arrow node, cutoffs broadcast
+    # the stage's lang + ppl layers in one UDF, cutoffs broadcast
     "ccnet_bins": dict(
         nodes={"ArrowEvalPython": 1, "Exchange": 1, "BroadcastExchange": 1,
                "BroadcastHashJoin": 1},
-        python_calls=["_lang(text)", "_ppl(text)"],
+        python_calls=["lang_ppl(text)"],
         joins=["BroadcastHashJoin Inner"],
         shuffles=[SPREAD],
     ),
@@ -299,12 +299,12 @@ CLAIMS = {
         python_calls=["_build(doc_id, text, archive_num)", "_parse(archive_id, data)"],
         shuffles=["hashpartitioning(archive_num), ENSURE_REQUIREMENTS"],
     ),
-    # archive fixture, record explode, one langid UDF, the fp window
+    # archive fixture, record explode, the stage's lang layer, the fp window
     "refinedweb_pipeline": dict(
         nodes={"ArrowEvalPython": 1, "MapInPandas": 1,
                "FlatMapGroupsInPandas": 1, "Exchange": 2, "Window": 1},
         python_calls=["_build(doc_id, html, archive_num)", "_parse(archive_id, data)",
-                      "_lang(text_clean)"],
+                      "lang(text_clean)"],
         shuffles=["hashpartitioning(archive_num), ENSURE_REQUIREMENTS",
                   "hashpartitioning(fp), ENSURE_REQUIREMENTS"],
         window_keys=[["fp"]],

@@ -146,3 +146,14 @@ def test_lsh_pair_operators_evaluate_their_signature_udf_once(spark, corpus):
     )
     pairs = cosine_near_pairs_lsh(emb, threshold=0.9, planes=16, chunks=4, dim=8)
     assert Plan(pairs, executed=True).udfs_per_arrow_node() == [1]
+
+
+def test_rules_without_lang_and_ppl_is_refused(corpus):
+    """rules reads the lang and ppl columns: a layer selection without them
+    fails while the plan is built."""
+    from pii_filter_spark.operators.fused import caption_stage
+
+    df, _ = corpus
+    for layers in (["rules"], ["lang", "rules"], ["ppl", "rules", "scrub"]):
+        with pytest.raises(ValueError, match="rules reads lang and ppl"):
+            caption_stage(df, layers, "caption")

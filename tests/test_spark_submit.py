@@ -78,7 +78,7 @@ def test_spark_submit_py_files_run_and_resume(tmp_path):
     assert s1["rows_in"] == 400
     assert s1["rows_kept"] + s1["rows_dropped"] == 400
     assert s1["rows_kept"] > 0
-    assert set(s1["layer_ms_this_run"]) == {"quality", "scrub"}
+    assert set(s1["layer_ms_this_run"]) == {"lang", "ppl", "rules", "scrub"}
     assert all(ms > 0 for ms in s1["layer_ms_this_run"].values())
 
     # Resume: same --output, nothing left to do, metrics idempotent.

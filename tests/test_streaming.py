@@ -216,59 +216,6 @@ def test_sessionize_stream_cross_batch_continuity(spark, tmp_path):
     }
 
 
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas: ValueState survives across
-    micro-batches (cumulative totals keep growing in batch 2)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's state protocol needs protobuf "
-               "(absent in this sandbox; see streaming/tws.py)",
-    )
-    import pandas as pd
-
-    from pii_filter_spark.streaming.tws import running_user_totals
-
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        src = tmp_path / "tws_src"
-        src.mkdir()
-        pd.DataFrame({"user_id": [1, 1, 2], "value": [1.0, 2.0, 10.0]}
-                     ).to_parquet(src / "b1.parquet")
-        pd.DataFrame({"user_id": [1, 3], "value": [4.0, 7.0]}
-                     ).to_parquet(src / "b2.parquet")
-        stream = (
-            spark.readStream.schema("user_id long, value double")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        q = (
-            running_user_totals(stream)
-            .writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "tws_ck"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {(r.user_id, r.n_events, r.total_value)
-               for r in spark.sql("select * from tws_out").collect()}
-        # batch 1 emissions + batch 2 CUMULATIVE emissions
-        assert got == {
-            (1, 2, 3.0), (2, 1, 10.0),   # after batch 1
-            (1, 3, 7.0), (3, 1, 7.0),    # after batch 2 (user 1 carried state)
-        }
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-
-
 def test_watermark_drops_late_events(spark, tmp_path):
     """Append-mode windowed agg: an event arriving BELOW the watermark in
     a later micro-batch must not resurrect or alter its finalized window."""

@@ -19,11 +19,13 @@ Local smoke (also what tests/test_checkpoint.py drives programmatically):
 Resume semantics: re-running with the same --output continues from the
 per-partition manifest — completed partitions are skipped, metrics stay
 idempotent. Each batch of partitions is one plain parquet write into
-<output>/batch-<first part id>, and its manifest entries name it; a
+<output>/batch-<first part id>, and its manifest entries name it. Two
+batches run at once, so a later batch may commit before an earlier one,
+and a kill leaves at most the two batches in flight uncommitted; a
 resume first deletes every batch directory that is not fully committed
-(a batch killed between its write and its last entry). Read the output
-with table_io.read_table, which reads the directories the manifest
-names. The JSON summary's row counts cover the whole manifest;
+(a batch killed during its write or before its last entry). Read the
+output with table_io.read_table, which reads the directories the
+manifest names. The JSON summary's row counts cover the whole manifest;
 `layer_ms_this_run` sums the caption UDF's per-layer time (lang, ppl,
 rules, scrub; summed over tasks, so it can exceed wall time) once per
 batch directory this run wrote. --num-parts must match the original

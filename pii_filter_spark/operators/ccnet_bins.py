@@ -108,9 +108,12 @@ def ccnet_bins(
 
     # Scoring pass: recompute (lang, ppl), broadcast-join the cutoffs,
     # one CASE. Every language present got a cutoff row (each non-empty
-    # stratum samples >= 1 row), so the inner join drops nothing.
+    # stratum samples >= 1 row), so a left join keeps what an inner one
+    # would; unlike an inner join it lets constraint propagation infer no
+    # isnotnull(lang) filter below the UDF projection, which would
+    # evaluate the Python stage twice per row.
     return (
-        scored.join(F.broadcast(cuts), "lang")
+        scored.join(F.broadcast(cuts), "lang", "left")
         .select(
             id_col,
             "lang",

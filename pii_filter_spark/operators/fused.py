@@ -172,11 +172,12 @@ def caption_stage(df: DataFrame, layers, text_col: str, counts=None) -> DataFram
     batch.__name__ = _NAMES.get(sel, "_".join(sel))  # the UDF's name in plans
     udf = pandas_udf(batch, StructType([f for layer in sel for f in _LAYERS[layer][0]]))
     args = [F.col(text_col)] + ([F.col("part_id")] if counts is not None else [])
-    out = df.withColumn("_cs", udf(*args))
-    for name in udf.returnType.fieldNames():
-        out = out.withColumn(name, F.col(f"_cs.{name}"))
-    out = out.drop("_cs")
-    return out.withColumn("scrub_count", F.size("pii_masked")) if "scrub" in sel else out
+    # one projection for every output column: each withColumn re-analyses
+    # the plan, and every batch of run_pipeline builds this one
+    cols = {name: F.col(f"_cs.{name}") for name in udf.returnType.fieldNames()}
+    if "scrub" in sel:
+        cols["scrub_count"] = F.size("_cs.pii_masked")
+    return df.withColumn("_cs", udf(*args)).withColumns(cols).drop("_cs")
 
 
 def quality_stage(df: DataFrame) -> DataFrame:

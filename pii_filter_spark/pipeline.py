@@ -19,6 +19,15 @@ only the missing partitions — identical final table, idempotent metrics
 (tests/test_checkpoint.py kills runs mid-way, also between a batch's
 write and its entries, and asserts equality).
 
+Batches in flight: run_pipeline keeps two batch jobs running at once
+(IN_FLIGHT), each from its own driver thread, so one batch's fixed cost
+(plan build, job start, the tail of its tasks, the commit) overlaps the
+other's tasks. Each batch keeps its own accumulator, plan and directory,
+and writes its own entries once its own write returns, so entries may
+land out of batch order; the commit rule above is unchanged. After a
+failure no batch starts, the other batch in flight is cancelled and
+waited for, and the first error is raised.
+
 Metrics come from the pass that wrote the rows: the caption UDF folds
 each Arrow batch's output into a per-batch accumulator (per-part rows
 in/kept/dropped, scrub count, drop reasons; per-layer ms), and the
@@ -35,13 +44,17 @@ size num_parts so one partition ≈ one Iceberg file group.
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 import time
-from typing import Dict, List
+import uuid
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from typing import Dict, List, Set
 
 import pandas as pd
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,6 +65,8 @@ from .sources import table_io
 
 PART_COL = "part_id"
 BATCH_PREFIX = "batch-"
+# batch jobs run_pipeline keeps running at once; more measured no faster
+IN_FLIGHT = 2
 
 
 def with_part_id(df: DataFrame, num_parts: int, id_col: str = "image_id") -> DataFrame:
@@ -144,9 +159,14 @@ def run_pipeline(
     Each batch is one plain parquet write into
     `<output_path>/batch-<first part_id, 5 digits>`; its manifest entries,
     written after it, name that directory and list the batch's parts.
-    Before planning, a run deletes every batch directory that is not
-    fully committed (drop_uncommitted), so a kill between a batch's write
-    and its last entry costs only that batch.
+    Two batches run at once, each from a driver thread that carries the
+    caller's local properties (job group, description, scheduler pool),
+    so a later batch may commit first; the next batch starts when one of
+    them has committed. The first failure starts no more batches,
+    cancels the other batch's jobs (by a job tag of this run), waits for
+    it and is raised. Before planning, a run deletes every batch
+    directory that is not fully committed (drop_uncommitted), so a kill
+    costs only the batches in flight.
 
     scrub_image_bytes additionally rewrites the binary column with
     PNG/JPEG metadata stripped (see scrub_bytes_stage).
@@ -176,13 +196,16 @@ def run_pipeline(
 
     done = {e["part_id"] for e in manifest}
     todo = [p for p in range(num_parts) if p not in done]
-    processed: List[int] = []
+    batches = iter([todo[i : i + batch_parts] for i in range(0, len(todo), batch_parts)])
+    sc = spark.sparkContext
+    tag = f"run_pipeline-{uuid.uuid4().hex}"
 
-    for batch_idx in range(0, len(todo), batch_parts):
-        batch = todo[batch_idx : batch_idx + batch_parts]
+    def commit(batch: List[int]) -> None:
+        """One batch's write, then its manifest entries."""
+        sc.addJobTag(tag)
         batch_dir = f"{BATCH_PREFIX}{batch[0]:05d}"
         t0 = time.perf_counter()
-        counts = spark.sparkContext.accumulator({}, PartCounts())
+        counts = sc.accumulator({}, PartCounts())
         batch_frame(src, batch, counts).write.mode("overwrite").parquet(
             os.path.join(output_path, batch_dir)
         )
@@ -203,5 +226,23 @@ def run_pipeline(
                     "wall_ms": wall_ms,
                 },
             )
-        processed.extend(batch)
-    return processed
+
+    def submit(pool: ThreadPoolExecutor, n: int) -> Set[Future]:
+        # wrapped per batch, in the caller's thread: the wrapper copies the
+        # caller's local properties once, and two batches sharing one copy
+        # would also share the spark.sql.execution.id each write sets
+        return {pool.submit(inheritable_thread_target(spark)(commit), b)
+                for b in itertools.islice(batches, n)}
+
+    with ThreadPoolExecutor(IN_FLIGHT) as pool:
+        running = submit(pool, IN_FLIGHT)
+        while running:
+            finished, running = wait(running, return_when=FIRST_COMPLETED)
+            failed = [f for f in finished if f.exception() is not None]
+            if failed:
+                while running:  # its job may start after a cancel
+                    sc.cancelJobsWithTag(tag)
+                    running = wait(running, timeout=0.1).not_done
+                raise failed[0].exception()
+            running |= submit(pool, len(finished))
+    return todo

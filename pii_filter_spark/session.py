@@ -37,12 +37,6 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # Constraint inference only ADDS derived filters, so disabling it
-        # never changes results, only plans; on, it evaluates a Python UDF
-        # twice per row: ccnet_bins' inner join on the UDF's `lang` gets an
-        # inferred isnotnull(lang) pushed below the UDF projection, giving
-        # a second ArrowEvalPython (test_plan_claim[ccnet_bins]).
-        .config("spark.sql.constraintPropagation.enabled", "false")
         # Input-split sizing. Two opposing costs: a pandas-UDF task pays a
         # fixed start-up cost in its Python worker (~5-30 ms, or ~200 ms
         # when the worker keeps the zip importers that

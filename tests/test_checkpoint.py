@@ -2,10 +2,17 @@
 
 import os
 import shutil
+import threading
+import time
 
+import pandas as pd
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import PySparkException
+from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
+from pii_filter_spark import pipeline
 from pii_filter_spark.pipeline import run_pipeline
 from pii_filter_spark.sources import table_io
 from pii_filter_spark.sources.synth import write_input_table
@@ -13,6 +20,9 @@ from pii_filter_spark.sources.synth import write_input_table
 N = 200
 SEED = 13
 PARTS, BATCH = 12, 3
+# how long a test waits for a second batch in flight; a run that keeps one
+# batch at a time fails after it instead of hanging
+IN_FLIGHT_WAIT_S = 30
 COUNT_FIELDS = ("rows_in", "rows_kept", "rows_dropped", "scrub_count",
                 "drop_reason_counts")
 # what spark.read.parquet gave for the earlier partitionBy(part_id) layout
@@ -51,15 +61,20 @@ def _recount(path):
 
 def _killed_after(entries):
     """A table_io.write_manifest_entry that raises right after writing its
-    `entries`-th entry: run_pipeline dies once those entries' batches
-    have committed, before the next batch's write."""
+    `entries`-th entry, counted over every batch thread. The batch that
+    wrote it fails: no further batch starts, and run_pipeline raises once
+    the other batch in flight is cancelled or has committed. Batches
+    whose entries all landed stay committed."""
     write_entry = table_io.write_manifest_entry
     written = []
+    lock = threading.Lock()
 
     def killed(path, part_id, payload):
         write_entry(path, part_id, payload)
-        written.append(part_id)
-        if len(written) == entries:
+        with lock:
+            written.append(part_id)
+            n = len(written)
+        if n == entries:
             raise RuntimeError("killed after a batch commit")
     return killed
 
@@ -133,18 +148,21 @@ def test_manifest_equals_independent_recount(runs, which):
                          ids=["after_write", "after_first_entry"])
 def test_resume_after_a_kill_inside_a_batch_commit(
         spark, source, runs, tmp_path, monkeypatch, entries_before_kill):
-    """A run killed after batch 2's write, before any or after one of its
-    manifest entries. The resume must give the straight run's table and
-    counts: the half-committed batch's rows must neither be lost nor kept
-    twice, and its directory must not outlive the resume."""
+    """A run killed once a first batch has committed, after the next
+    batch's write, before any or after one of its manifest entries. The
+    resume must give the straight run's table and counts: the
+    half-committed batch's rows must neither be lost nor kept twice, and
+    its directory must not outlive the resume."""
     out = str(tmp_path / "out")
     write_entry = table_io.write_manifest_entry
     written = []
+    lock = threading.Lock()
 
     def killed(path, part_id, payload):
-        if len(written) == BATCH + entries_before_kill:
-            raise RuntimeError("killed inside the commit")
-        written.append(part_id)
+        with lock:
+            if len(written) == BATCH + entries_before_kill:
+                raise RuntimeError("killed inside the commit")
+            written.append(part_id)
         write_entry(path, part_id, payload)
 
     monkeypatch.setattr(table_io, "write_manifest_entry", killed)
@@ -161,6 +179,116 @@ def test_resume_after_a_kill_inside_a_batch_commit(
     for p, e in manifest.items():
         assert {k: e[k] for k in COUNT_FIELDS} == recount[p], p
     assert _batch_dirs(out) == _batch_dirs(runs[0])
+
+
+def test_resume_after_a_later_batch_committed_first(spark, source, runs, tmp_path,
+                                                   monkeypatch):
+    """Batch 0's first entry is held until batch 1 has committed, then the
+    run dies: the later batch is committed and the earlier one not. The
+    resume must give the straight run's table, counts and directories."""
+    out = str(tmp_path / "out")
+    write_entry = table_io.write_manifest_entry
+    batch1_committed = threading.Event()
+
+    def held(path, part_id, payload):
+        if part_id == 0:
+            if not batch1_committed.wait(IN_FLIGHT_WAIT_S):
+                raise TimeoutError("batch 1 did not commit while batch 0 was held")
+            raise RuntimeError("killed before batch 0's first entry")
+        write_entry(path, part_id, payload)
+        if part_id == 2 * BATCH - 1:
+            batch1_committed.set()
+
+    monkeypatch.setattr(table_io, "write_manifest_entry", held)
+    with pytest.raises(RuntimeError, match="killed before batch 0's first entry"):
+        run_pipeline(spark, source, out, num_parts=PARTS, batch_parts=BATCH)
+    monkeypatch.undo()
+    done = set(table_io.completed_part_ids(out))
+    assert set(range(BATCH, 2 * BATCH)) <= done
+    assert not done & set(range(BATCH))
+
+    processed = run_pipeline(spark, source, out, num_parts=PARTS, batch_parts=BATCH)
+    assert set(processed) == set(range(PARTS)) - done
+    assert _table_fingerprint(spark, out) == _table_fingerprint(spark, runs[0])
+    recount = _recount(out)
+    manifest = {e["part_id"]: e for e in table_io.read_manifest(out)}
+    assert set(manifest) == set(range(PARTS))
+    for p, e in manifest.items():
+        assert {k: e[k] for k in COUNT_FIELDS} == recount[p], p
+    assert _batch_dirs(out) == _batch_dirs(runs[0])
+
+
+def test_a_batch_failure_cancels_the_other_batch_and_starts_no_more(
+        spark, source, tmp_path, monkeypatch):
+    """Batch 0 fails inside its write while batch 1, whose one task would
+    run for a minute, is in flight. The run must raise batch 0's error
+    soon after, with batch 1's job cancelled, no later batch built, and
+    nothing committed."""
+    out = str(tmp_path / "out")
+    frame = pipeline.batch_frame
+    built = []
+    batch1_built = threading.Event()
+
+    @pandas_udf("int")
+    def slow(part: pd.Series) -> pd.Series:
+        import time
+
+        time.sleep(60)
+        return part
+
+    def failing(src, parts, counts):
+        built.append(parts[0])
+        df = frame(src, parts, counts)
+        if parts[0] == BATCH:
+            batch1_built.set()
+            return df.coalesce(1).withColumn("part_id", slow("part_id"))
+        if not batch1_built.wait(IN_FLIGHT_WAIT_S):
+            raise TimeoutError("batch 1 did not start while batch 0 ran")
+        return df.withColumn("part_id", F.when(
+            F.col("part_id") >= 0, F.raise_error(F.lit("batch 0 fails in its write"))
+        ).otherwise(F.col("part_id")))
+
+    monkeypatch.setattr(pipeline, "batch_frame", failing)
+    t0 = time.perf_counter()
+    with pytest.raises(PySparkException, match="batch 0 fails in its write"):
+        run_pipeline(spark, source, out, num_parts=PARTS, batch_parts=BATCH)
+    assert time.perf_counter() - t0 < IN_FLIGHT_WAIT_S
+    assert sorted(built) == [0, BATCH]
+    assert table_io.read_manifest(out) == []
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
+def test_batch_jobs_keep_the_callers_job_group_and_properties(
+        spark, source, tmp_path, monkeypatch):
+    """With two batches in flight, every batch job runs in the caller's job
+    group, and every batch sees the caller's local properties."""
+    sc = spark.sparkContext
+    frame = pipeline.batch_frame
+    both = threading.Barrier(2, timeout=IN_FLIGHT_WAIT_S)
+    seen = {}
+
+    def in_flight(src, parts, counts):
+        seen[parts[0]] = sc.getLocalProperty("caller.note")
+        if parts[0] < 2 * BATCH:
+            both.wait()  # batches 0 and 1 are in flight together
+        return frame(src, parts, counts)
+
+    monkeypatch.setattr(pipeline, "batch_frame", in_flight)
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup())
+    sc.setJobGroup("caller", "a caller's own job group")
+    sc.setLocalProperty("caller.note", "kept")
+    try:
+        run_pipeline(spark, source, str(tmp_path / "out"), num_parts=PARTS,
+                     batch_parts=BATCH)
+    finally:
+        for key in ("caller.note", "spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert seen == {b: "kept" for b in range(0, PARTS, BATCH)}
+    # no job of the run left the group: the batch writes, and the input
+    # read's own job from the caller's thread
+    assert set(sc.statusTracker().getJobIdsForGroup()) == ungrouped
+    assert len(sc.statusTracker().getJobIdsForGroup("caller")) >= PARTS // BATCH
 
 
 def test_batches_are_plain_directories_that_the_manifest_names(

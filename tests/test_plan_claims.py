@@ -226,7 +226,7 @@ CLAIMS = {
         nodes={"ArrowEvalPython": 1, "Exchange": 1, "BroadcastExchange": 1,
                "BroadcastHashJoin": 1},
         python_calls=["lang_ppl(text)"],
-        joins=["BroadcastHashJoin Inner"],
+        joins=["BroadcastHashJoin LeftOuter"],
         shuffles=[SPREAD],
     ),
     "split_assignment": dict(
@@ -380,3 +380,16 @@ def test_plan_claim(spark, name):
     _check(Plan(df), claim, COUNTED)
     if executed:
         _check(Plan(df, executed=True), executed, ())
+
+
+def test_ccnet_bins_plan_holds_with_constraint_propagation(spark):
+    """ccnet_bins keeps its claimed plan (one lang+ppl UDF) with Spark's
+    default constraint propagation on, as in a session that get_spark did
+    not build: no inferred filter may evaluate the UDF a second time."""
+    key = "spark.sql.constraintPropagation.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        test_plan_claim(spark, "ccnet_bins")
+    finally:
+        spark.conf.set(key, before)

@@ -18,8 +18,12 @@ Local smoke (also what tests/test_checkpoint.py drives programmatically):
 
 Resume semantics: re-running with the same --output continues from the
 per-partition manifest — completed partitions are skipped, metrics stay
-idempotent. Each batch of partitions is one plain parquet write into
-<output>/batch-<first part id>, and its manifest entries name it. Two
+idempotent. Rows map to partitions by their input file: the sorted
+listing's file i of N owns parts [⌊iP/N⌋, ⌊(i+1)P/N⌋), at least one
+wide, and a row takes its range's start plus pmod(xxhash64(image_id),
+range width). Each batch of partitions reads only the files whose ranges
+meet it and is one plain parquet write into <output>/batch-<first part
+id>, and its manifest entries name it. Two
 batches run at once, so a later batch may commit before an earlier one,
 and a kill leaves at most the two batches in flight uncommitted; a
 resume first deletes every batch directory that is not fully committed
@@ -28,9 +32,11 @@ output with table_io.read_table, which reads the directories the
 manifest names. The JSON summary's row counts cover the whole manifest;
 `layer_ms_this_run` sums the caption UDF's per-layer time (lang, ppl,
 rules, scrub; summed over tasks, so it can exceed wall time) once per
-batch directory this run wrote. --num-parts must match the original
-run: every manifest entry records it, and run_pipeline refuses a resume
-that disagrees.
+batch directory this run wrote. --num-parts and the input's file
+listing must match the original run: every manifest entry records
+num_parts and the listing's file count and digest, and run_pipeline
+refuses a resume that disagrees on either (add input files by writing a
+new output).
 """
 
 from __future__ import annotations
@@ -49,7 +55,8 @@ def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", help="input table path (input_hint schema)")
     p.add_argument("--synthetic", type=int, default=0,
-                   help="generate N synthetic rows instead of reading --input")
+                   help="generate N synthetic rows instead of reading --input "
+                        "(written once, next to --output, and reused on resume)")
     p.add_argument("--output", required=True)
     p.add_argument("--num-parts", type=int, default=256)
     p.add_argument("--batch-parts", type=int, default=32)
@@ -73,8 +80,11 @@ def main(argv=None) -> int:
     try:
         input_path = args.input
         if args.synthetic:
-            input_path = f"{args.output.rstrip('/')}_synth_input"
-            write_input_table(spark, input_path, args.synthetic, seed=args.seed)
+            # written once per (rows, seed): a rewrite would give new file
+            # names, and run_pipeline refuses to resume on another listing
+            input_path = f"{args.output.rstrip('/')}_synth_n{args.synthetic}_s{args.seed}"
+            if not os.path.exists(os.path.join(input_path, "_SUCCESS")):
+                write_input_table(spark, input_path, args.synthetic, seed=args.seed)
 
         done_before = set(table_io.completed_part_ids(args.output))
         processed = run_pipeline(

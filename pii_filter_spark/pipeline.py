@@ -6,9 +6,14 @@ Composition:
          → one plain parquet write per batch of partitions, into its own
            batch-<first part_id> directory; a manifest entry per partition
 
-Checkpoint/resume [north rule]: rows hash deterministically into
-`num_parts` logical partitions (pmod(xxhash64(image_id), P)); partitions
-are processed in batches, and each batch overwrites its own directory,
+Checkpoint/resume [north rule]: rows map deterministically into
+`num_parts` logical partitions by their input file. The sorted input
+listing of N files gives file i the part range [⌊iP/N⌋, ⌊(i+1)P/N⌋), at
+least one part wide, and a row's part is its range's start plus
+pmod(xxhash64(image_id), range width) (with_part_id): one file gives
+pmod(xxhash64(image_id), P), and N ≥ P files give one part per file.
+Partitions are processed in batches, each batch reads only the files
+whose ranges meet it, and each batch overwrites its own directory,
 with `part_id` kept as a column. The manifest entry per completed
 partition is the commit record: it names the batch directory and lists
 the batch's parts, and the table is the directories the entries name
@@ -17,7 +22,9 @@ that is not fully committed (some part of its batch has no entry naming
 it), with the entries of a partly committed batch, then reprocesses
 only the missing partitions — identical final table, idempotent metrics
 (tests/test_checkpoint.py kills runs mid-way, also between a batch's
-write and its entries, and asserts equality).
+write and its entries, and asserts equality). Every entry records the
+listing's file count and digest, and a resume against another listing
+is refused: its rows would map to other parts.
 
 Batches in flight: run_pipeline keeps two batch jobs running at once
 (IN_FLIGHT), each from its own driver thread, so one batch's fixed cost
@@ -36,27 +43,34 @@ read back.
 
 Scale notes: the whole hot path is one scan → one UDF projection → one
 plain write; no joins, aggregations or shuffles, and the MB-scale
-`bytes` column never enters Python. A batch writes one file per task,
-not one per task and part, so files per batch equal its tasks.
+`bytes` column never enters Python. A batch scans only its own files,
+so the input is read about once per pass, not once per batch; a file
+whose range straddles two batches is read by both. A batch writes one
+file per task, not one per task and part, so files per batch equal its
+tasks.
 `batch_parts` bounds the blast radius of a failure; at 10^12 rows you'd
 size num_parts so one partition ≈ one Iceberg file group.
 """
 
 from __future__ import annotations
 
+import hashlib
 import itertools
 import os
+import re
 import shutil
 import time
 import uuid
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
-from typing import Dict, List, Set
+from typing import Collection, Dict, List, Set
+from urllib.parse import unquote
 
 import pandas as pd
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .operators.fused import (
     ALL_LAYERS, PartCounts, caption_stage, fused_quality_scrub, layer_ms, part_counts,
@@ -65,12 +79,79 @@ from .sources import table_io
 
 PART_COL = "part_id"
 BATCH_PREFIX = "batch-"
-# batch jobs run_pipeline keeps running at once; more measured no faster
+# batch jobs run_pipeline keeps running at once. With per-batch reads, a
+# warm local[4] session passed the 16-file perfbench input (256 parts, 32
+# per batch) in 1.70, 1.64 and 1.65 s at 2, 3 and 4 in flight (medians of
+# 3 sessions); too close to change without alternating perfbench pairs
 IN_FLIGHT = 2
+# `scheme:///path` (DataFrame.inputFiles) and `scheme:/path`
+# (_metadata.file_path) name the same file; both normalize to the latter
+_EMPTY_AUTHORITY = r"^([A-Za-z][A-Za-z0-9+.-]*):///"
+
+
+def _normalized(path: str) -> str:
+    return re.sub(_EMPTY_AUTHORITY, r"\1:/", path)
+
+
+def _normalized_col(path: Column) -> Column:
+    return F.regexp_replace(path, _EMPTY_AUTHORITY, "$1:/")
+
+
+def part_ranges(files: Collection[str], num_parts: int) -> Dict[str, range]:
+    """The part range each input file owns, in listing (sorted) order:
+    file i of N owns [⌊iP/N⌋, ⌊(i+1)P/N⌋), at least one part wide, so
+    the ranges cover every part and N ≥ P files own one part each."""
+    files = sorted(files)
+    out = {}
+    for i, f in enumerate(files):
+        start = i * num_parts // len(files)
+        out[f] = range(start, max((i + 1) * num_parts // len(files), start + 1))
+    return out
+
+
+def _with_file_parts(df: DataFrame, ranges: Dict[str, range], id_col: str) -> DataFrame:
+    """Adds part_id: the start of the row's file range plus
+    pmod(xxhash64(id_col), its width). A row of a file that `ranges` does
+    not hold fails its task; it never gets a NULL part_id."""
+    pairs = []
+    for f, r in ranges.items():
+        pairs += [F.lit(_normalized(f)),
+                  F.struct(F.lit(r.start).alias("start"), F.lit(len(r)).alias("width"))]
+    path = F.col("_metadata.file_path")
+    rng = F.coalesce(
+        F.try_element_at(F.create_map(*pairs), _normalized_col(path)),
+        F.raise_error(F.concat(F.lit("no part range for input file "), path)),
+    )
+    return df.withColumn(
+        PART_COL, rng["start"] + F.pmod(F.xxhash64(F.col(id_col)), rng["width"]))
 
 
 def with_part_id(df: DataFrame, num_parts: int, id_col: str = "image_id") -> DataFrame:
-    return df.withColumn(PART_COL, F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_parts)))
+    """Adds each row's part_id by the ranges of `df`'s own input files
+    (part_ranges over df.inputFiles()); `df` reads parquet files."""
+    return _with_file_parts(df, part_ranges(df.inputFiles(), num_parts), id_col)
+
+
+def _table_root(spark: SparkSession, path: str) -> str:
+    """The directory a table's partition columns (`k=v` directories) are
+    found under: `path`, or a file's own directory."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    return path if fs.getFileStatus(jpath).isDirectory() else jpath.getParent().toString()
+
+
+def batch_input(spark: SparkSession, ranges: Dict[str, range], schema: StructType,
+                root: str, parts: List[int]) -> DataFrame:
+    """The rows of the input files whose ranges meet `parts`, with their
+    part_id; it reads only those files, with the resolved `schema` and
+    the partition columns of the table under `root` (_table_root), and
+    maps rows over those files' ranges only."""
+    wanted = set(parts)
+    mine = {f: r for f, r in ranges.items() if not wanted.isdisjoint(r)}
+    # inputFiles() names are URIs; a reader path is a glob, unescaped
+    paths = [re.sub(r"([\\{}\[\]*?])", r"\\\1", unquote(f)) for f in mine]
+    df = spark.read.schema(schema).option("basePath", root).parquet(*paths)
+    return _with_file_parts(df, mine, "image_id")
 
 
 def transform(df: DataFrame) -> DataFrame:
@@ -156,7 +237,11 @@ def run_pipeline(
 ) -> List[int]:
     """Run (or resume) the pipeline. Returns the part_ids processed this run.
 
-    Each batch is one plain parquet write into
+    The input is listed once (table_io.read_table; its sorted
+    inputFiles() and schema), and each input file owns a range of parts
+    (part_ranges). Each batch reads only the files whose ranges meet its
+    parts (batch_input), so a file is read by every batch its range
+    meets, and is one plain parquet write into
     `<output_path>/batch-<first part_id, 5 digits>`; its manifest entries,
     written after it, name that directory and list the batch's parts.
     Two batches run at once, each from a driver thread that carries the
@@ -172,9 +257,10 @@ def run_pipeline(
     PNG/JPEG metadata stripped (see scrub_bytes_stage).
 
     Raises ValueError when the output's manifest was written with another
-    num_parts (rows hash to different part_ids then, so resuming would
-    skip or duplicate rows), or names no batch directories (an output of
-    the earlier part_id=K layout, which this run cannot extend).
+    num_parts or another input listing (file count and digest; rows map
+    to other part_ids then, so resuming would skip or duplicate rows), or
+    names no batch directories (an output of the earlier part_id=K
+    layout, which this run cannot extend).
     """
     manifest = table_io.read_manifest(output_path)
     if any("batch_dir" not in e for e in manifest):
@@ -189,10 +275,18 @@ def run_pipeline(
             f"{', '.join(map(str, sorted(recorded)))} recorded in the "
             f"manifest of {output_path}"
         )
+    listed = table_io.read_table(spark, input_path)
+    files, schema = listed.inputFiles(), listed.schema
+    digest = hashlib.sha256("\n".join(sorted(map(_normalized, files))).encode())
+    listing = {"input_files": len(files), "input_digest": digest.hexdigest()}
+    if any({k: e.get(k) for k in listing} != listing for e in manifest):
+        raise ValueError(
+            f"the input listing of {input_path} ({len(files)} files, digest "
+            f"{listing['input_digest'][:12]}) does not match the listing "
+            f"recorded in the manifest of {output_path}"
+        )
     manifest = drop_uncommitted(output_path, manifest)
-    src = with_part_id(table_io.read_table(spark, input_path), num_parts)
-    if scrub_image_bytes:
-        src = scrub_bytes_stage(src)
+    ranges, root = part_ranges(files, num_parts), _table_root(spark, input_path)
 
     done = {e["part_id"] for e in manifest}
     todo = [p for p in range(num_parts) if p not in done]
@@ -206,6 +300,9 @@ def run_pipeline(
         batch_dir = f"{BATCH_PREFIX}{batch[0]:05d}"
         t0 = time.perf_counter()
         counts = sc.accumulator({}, PartCounts())
+        src = batch_input(spark, ranges, schema, root, batch)
+        if scrub_image_bytes:
+            src = scrub_bytes_stage(src)
         batch_frame(src, batch, counts).write.mode("overwrite").parquet(
             os.path.join(output_path, batch_dir)
         )
@@ -219,6 +316,7 @@ def run_pipeline(
                 p,
                 {
                     "num_parts": num_parts,
+                    **listing,
                     "batch_dir": batch_dir,
                     "batch_part_ids": batch,
                     **part_counts(value, p),

@@ -15,7 +15,7 @@ from pyspark.sql.functions import pandas_udf
 from pii_filter_spark import pipeline
 from pii_filter_spark.pipeline import run_pipeline
 from pii_filter_spark.sources import table_io
-from pii_filter_spark.sources.synth import write_input_table
+from pii_filter_spark.sources.synth import build_input_table, write_input_table
 
 N = 200
 SEED = 13
@@ -43,12 +43,12 @@ def _table_fingerprint(spark, path):
     return sorted((r[0], r[1], r[2], r[3], r[4]) for r in rows)
 
 
-def _recount(path):
+def _recount(path, parts=PARTS):
     """Per-part manifest counts recomputed from the written parquet with
     pyarrow, independent of Spark and of the pipeline's own counting."""
     t = pq.read_table(path, columns=["part_id", "keep", "drop_reasons", "pii_masked"])
     counts = {p: {"rows_in": 0, "rows_kept": 0, "rows_dropped": 0, "scrub_count": 0,
-                  "drop_reason_counts": {}} for p in range(PARTS)}
+                  "drop_reason_counts": {}} for p in range(parts)}
     for r in t.to_pylist():
         c = counts[r["part_id"]]
         c["rows_in"] += 1
@@ -105,6 +105,20 @@ def runs(spark, source, tmp_path_factory):
     return ref_out, out, done_before, processed
 
 
+@pytest.fixture(scope="module")
+def five_files(spark, tmp_path_factory):
+    """(a 5-file input, its uninterrupted output). Its file part ranges
+    straddle batch boundaries, so a batch reads a file that another batch
+    reads too."""
+    root = tmp_path_factory.mktemp("ckpt5")
+    inp, ref_out = str(root / "input"), str(root / "ref")
+    write_input_table(spark, inp, N, seed=SEED, num_partitions=5)
+    ranges = list(pipeline.part_ranges(table_io.read_table(spark, inp).inputFiles(), PARTS).values())
+    assert [(r.start, r.stop) for r in ranges] == [(0, 2), (2, 4), (4, 7), (7, 9), (9, 12)]
+    run_pipeline(spark, inp, ref_out, num_parts=PARTS, batch_parts=BATCH)
+    return inp, ref_out
+
+
 def _batch_dirs(path):
     return {n for n in os.listdir(path) if n.startswith("batch-")}
 
@@ -144,15 +158,21 @@ def test_manifest_equals_independent_recount(runs, which):
     assert len({r for c in recount.values() for r in c["drop_reason_counts"]}) > 1
 
 
-@pytest.mark.parametrize("entries_before_kill", [0, 1],
-                         ids=["after_write", "after_first_entry"])
+@pytest.mark.parametrize("entries_before_kill, five", [
+    pytest.param(0, False, id="after_write"),
+    pytest.param(1, False, id="after_first_entry"),
+    pytest.param(0, True, id="after_write-5_files"),
+    pytest.param(1, True, id="after_first_entry-5_files"),
+])
 def test_resume_after_a_kill_inside_a_batch_commit(
-        spark, source, runs, tmp_path, monkeypatch, entries_before_kill):
+        spark, source, runs, tmp_path, monkeypatch, request, entries_before_kill, five):
     """A run killed once a first batch has committed, after the next
-    batch's write, before any or after one of its manifest entries. The
-    resume must give the straight run's table and counts: the
-    half-committed batch's rows must neither be lost nor kept twice, and
-    its directory must not outlive the resume."""
+    batch's write, before any or after one of its manifest entries, on
+    the 4-file input (one file per batch) and on the 5-file one (file
+    ranges straddle batches). The resume must give the straight run's
+    table and counts: the half-committed batch's rows must neither be
+    lost nor kept twice, and its directory must not outlive the resume."""
+    source, ref_out = request.getfixturevalue("five_files") if five else (source, runs[0])
     out = str(tmp_path / "out")
     write_entry = table_io.write_manifest_entry
     written = []
@@ -172,13 +192,13 @@ def test_resume_after_a_kill_inside_a_batch_commit(
     assert len(table_io.read_manifest(out)) == BATCH + entries_before_kill
 
     run_pipeline(spark, source, out, num_parts=PARTS, batch_parts=BATCH)
-    assert _table_fingerprint(spark, out) == _table_fingerprint(spark, runs[0])
+    assert _table_fingerprint(spark, out) == _table_fingerprint(spark, ref_out)
     recount = _recount(out)
     manifest = {e["part_id"]: e for e in table_io.read_manifest(out)}
     assert set(manifest) == set(range(PARTS))
     for p, e in manifest.items():
         assert {k: e[k] for k in COUNT_FIELDS} == recount[p], p
-    assert _batch_dirs(out) == _batch_dirs(runs[0])
+    assert _batch_dirs(out) == _batch_dirs(ref_out)
 
 
 def test_resume_after_a_later_batch_committed_first(spark, source, runs, tmp_path,
@@ -339,7 +359,7 @@ def test_rerun_on_complete_output_is_noop(spark, tmp_path_factory):
 
 
 def test_resume_with_other_num_parts_is_refused(spark, tmp_path_factory, monkeypatch):
-    """Rows hash to part_ids by num_parts, so a resume with another count
+    """Rows map to part_ids by num_parts, so a resume with another count
     would skip or duplicate rows: it must fail before writing anything."""
     root = tmp_path_factory.mktemp("parts")
     inp = str(root / "input")
@@ -370,3 +390,63 @@ def test_run_pipeline_leaves_the_session_overwrite_mode(spark, tmp_path):
         assert spark.conf.get(key) == "static"
     finally:
         spark.conf.set(key, before)
+
+
+def test_resume_against_a_changed_listing_is_refused(spark, tmp_path):
+    """Rows map to part_ids by their input file's place in the listing, so
+    a resume after an input file was added would skip or duplicate rows:
+    it must fail before writing anything, naming the listing."""
+    inp = str(tmp_path / "input")
+    write_input_table(spark, inp, 60, seed=SEED, num_partitions=2)
+    out = str(tmp_path / "out")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(table_io, "write_manifest_entry", _killed_after(2))
+        with pytest.raises(RuntimeError, match="killed after a batch commit"):
+            run_pipeline(spark, inp, out, num_parts=6, batch_parts=2)
+    before = table_io.read_manifest(out)
+    assert 0 < len(before) < 6
+
+    first = sorted(f for f in os.listdir(inp) if f.endswith(".parquet"))[0]
+    shutil.copy(os.path.join(inp, first), os.path.join(inp, "part-99999-added.parquet"))
+    with pytest.raises(ValueError, match=r"input listing .*3 files.* does not match"):
+        run_pipeline(spark, inp, out, num_parts=6, batch_parts=2)
+    assert table_io.read_manifest(out) == before
+
+
+def test_no_row_is_lost_on_an_input_path_with_a_space_and_percent(
+        spark, tmp_path, monkeypatch):
+    """Rows match their input file through `_metadata.file_path`, which
+    spells the file another way than the listing does (`file:/` against
+    `file:///`, escapes kept), and a batch reads its files by name, glob
+    characters and all: every row must get its part once. A row whose
+    file is not matched must fail its batch, never be dropped."""
+    inp = str(tmp_path / "in put 100%")
+    write_input_table(spark, inp, 60, seed=SEED, num_partitions=3)
+    # a file name that, read as a glob, also matches the other files
+    first = sorted(f for f in os.listdir(inp) if f.endswith(".parquet"))[0]
+    os.rename(os.path.join(inp, first), os.path.join(inp, "part-[0]*.parquet"))
+    out = str(tmp_path / "out")
+    run_pipeline(spark, inp, out, num_parts=6, batch_parts=2)
+    assert sum(e["rows_in"] for e in table_io.read_manifest(out)) == 60
+    assert _recount(out, 6) == {e["part_id"]: {k: e[k] for k in COUNT_FIELDS}
+                                for e in table_io.read_manifest(out)}
+
+    # the listing kept as inputFiles() spells it: no row's file matches
+    monkeypatch.setattr(pipeline, "_normalized", lambda path: path)
+    with pytest.raises(PySparkException, match="no part range for input file"):
+        run_pipeline(spark, inp, str(tmp_path / "unmatched"), num_parts=6, batch_parts=2)
+    assert table_io.read_manifest(str(tmp_path / "unmatched")) == []
+
+
+def test_a_hive_partitioned_input_keeps_its_partition_columns(spark, tmp_path):
+    """A batch reads its input files one by one; the `fmt=<value>`
+    directories they sit in must still give every row its `fmt`."""
+    inp = str(tmp_path / "input")
+    build_input_table(spark, 60, seed=SEED, num_partitions=2).write.partitionBy("fmt").parquet(inp)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, inp, out, num_parts=6, batch_parts=2)
+
+    def fmts(path):
+        return sorted(tuple(r) for r in table_io.read_table(spark, path).select("image_id", "fmt").collect())
+    assert fmts(out) == fmts(inp)
+    assert {f for _, f in fmts(out)} == {"png", "jpeg"}

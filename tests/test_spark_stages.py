@@ -100,21 +100,38 @@ def test_fused_stage_equals_chained_stages(spark, corpus):
 
 
 def test_caption_paths_run_one_python_stage(spark, corpus, tmp_path):
+    from pyspark.sql import functions as F
+
     import __spark_entry__ as em
     from pii_filter_spark.operators.fused import PartCounts
-    from pii_filter_spark.pipeline import batch_frame, transform, with_part_id
+    from pii_filter_spark.pipeline import (
+        batch_frame, batch_input, part_ranges, transform, with_part_id,
+    )
     from pii_filter_spark.sources import table_io
 
     df, pdf = corpus
     for frame in (em.entry(spark), em.q_quality_full(spark, em.SF_DEFAULT), transform(df)):
         assert Plan(frame, executed=True).udfs_per_arrow_node() == [1]
 
-    # run_pipeline's batch: its counts are exact only while the counted UDF
-    # runs once per row in result tasks, i.e. with no Exchange in the plan
-    spark.createDataFrame(pdf).write.parquet(str(tmp_path / "in"))
-    src = with_part_id(table_io.read_table(spark, str(tmp_path / "in")), 8)
+    # one input file: every row keeps the part of the earlier whole-input rule
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(str(tmp_path / "one"))
+    rows = with_part_id(table_io.read_table(spark, str(tmp_path / "one")), 8).select(
+        "part_id", F.pmod(F.xxhash64("image_id"), F.lit(8)).alias("old")).collect()
+    assert len(rows) == N
+    assert all(r["part_id"] == r["old"] for r in rows)
+
+    # run_pipeline's batch reads only the files whose part ranges meet it;
+    # its counts are exact only while the counted UDF runs once per row in
+    # result tasks, i.e. with no Exchange in the plan
+    spark.createDataFrame(pdf).repartition(5).write.parquet(str(tmp_path / "in"))
+    src = table_io.read_table(spark, str(tmp_path / "in"))
+    ranges = part_ranges(src.inputFiles(), 8)
+    assert [(r.start, r.stop) for r in ranges.values()] == [
+        (0, 1), (1, 3), (3, 4), (4, 6), (6, 8)]
     counts = spark.sparkContext.accumulator({}, PartCounts())
-    batch = batch_frame(src, [0, 3, 5], counts)
+    batch = batch_frame(batch_input(spark, ranges, src.schema, str(tmp_path / "in"), [0, 3, 5]), [0, 3, 5], counts)
+    files = sorted(ranges)
+    assert sorted(batch.inputFiles()) == [files[0], files[2], files[3]]
     plan = Plan(batch, executed=True)
     assert plan.udfs_per_arrow_node() == [1]
     assert not plan.has("Exchange")

@@ -613,8 +613,7 @@ def q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (6 h) of the events table: lag-flag +
     running-sum session index + one aggregation, all native window
-    functions (operators/sessions.py); the streaming twin with
-    cross-batch state is tested in test_streaming."""
+    functions (operators/sessions.py)."""
     from pii_filter_spark.operators.sessions import sessionize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

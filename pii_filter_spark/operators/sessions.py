@@ -10,8 +10,7 @@ aggregation) and stays in whole-stage codegen.
 At 100 TB the window partitioning is by user_id: millions of small
 partitions, no skew amplification (a pathological single user is
 bounded by their own event count, and AQE skew handling applies to the
-shuffle like any other). The streaming twin with cross-batch state is
-streaming/sessions.py.
+shuffle like any other).
 """
 
 from __future__ import annotations
@@ -39,10 +38,9 @@ def sessionize(
     prev_ts = F.lag(ts_col).over(w)
     # Interval comparison keeps sub-second precision: unix_timestamp()
     # truncates to seconds, which would disagree with the fractional-epoch
-    # DuckDB oracle and the streaming twin (total_seconds()) for gaps
-    # landing in (gap, gap+1) s on microsecond timestamps. Timestamp
-    # subtraction works for both TIMESTAMP and TIMESTAMP_NTZ (a double
-    # cast does not) and involves no timezone.
+    # DuckDB oracle for gaps landing in (gap, gap+1) s on microsecond
+    # timestamps. Timestamp subtraction works for both TIMESTAMP and
+    # TIMESTAMP_NTZ (a double cast does not) and involves no timezone.
     new_session = (
         prev_ts.isNull()
         | (

@@ -24,7 +24,9 @@ only the missing partitions — identical final table, idempotent metrics
 (tests/test_checkpoint.py kills runs mid-way, also between a batch's
 write and its entries, and asserts equality). Every entry records the
 listing's file count and digest, and a resume against another listing
-is refused: its rows would map to other parts.
+is refused: its rows would map to other parts. The digest is over the
+file names relative to the input's root, so an input that moves keeps
+it.
 
 Batches in flight: run_pipeline keeps two batch jobs running at once
 (IN_FLIGHT), each from its own driver thread, so one batch's fixed cost
@@ -109,9 +111,9 @@ def part_ranges(files: Collection[str], num_parts: int) -> Dict[str, range]:
     return out
 
 
-def _with_file_parts(df: DataFrame, ranges: Dict[str, range], id_col: str) -> DataFrame:
+def _with_file_parts(df: DataFrame, ranges: Dict[str, range]) -> DataFrame:
     """Adds part_id: the start of the row's file range plus
-    pmod(xxhash64(id_col), its width). A row of a file that `ranges` does
+    pmod(xxhash64(image_id), its width). A row of a file that `ranges` does
     not hold fails its task; it never gets a NULL part_id."""
     pairs = []
     for f, r in ranges.items():
@@ -123,21 +125,31 @@ def _with_file_parts(df: DataFrame, ranges: Dict[str, range], id_col: str) -> Da
         F.raise_error(F.concat(F.lit("no part range for input file "), path)),
     )
     return df.withColumn(
-        PART_COL, rng["start"] + F.pmod(F.xxhash64(F.col(id_col)), rng["width"]))
+        PART_COL, rng["start"] + F.pmod(F.xxhash64(F.col("image_id")), rng["width"]))
 
 
-def with_part_id(df: DataFrame, num_parts: int, id_col: str = "image_id") -> DataFrame:
+def with_part_id(df: DataFrame, num_parts: int) -> DataFrame:
     """Adds each row's part_id by the ranges of `df`'s own input files
     (part_ranges over df.inputFiles()); `df` reads parquet files."""
-    return _with_file_parts(df, part_ranges(df.inputFiles(), num_parts), id_col)
+    return _with_file_parts(df, part_ranges(df.inputFiles(), num_parts))
 
 
 def _table_root(spark: SparkSession, path: str) -> str:
-    """The directory a table's partition columns (`k=v` directories) are
-    found under: `path`, or a file's own directory."""
+    """The qualified directory a table's partition columns (`k=v`
+    directories) are found under: `path`, or a file's own directory."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    return path if fs.getFileStatus(jpath).isDirectory() else jpath.getParent().toString()
+    jpath = fs.makeQualified(jpath)
+    return (jpath if fs.getFileStatus(jpath).isDirectory() else jpath.getParent()).toString()
+
+
+def _listing_digest(files: Collection[str], root: str) -> str:
+    """sha256 of the sorted file names relative to the table root, so an
+    unchanged input keeps its digest when its directory moves.
+    inputFiles() names are escaped URIs; `root` (_table_root) is not."""
+    prefix = _normalized(root).rstrip("/") + "/"
+    names = sorted(unquote(_normalized(f)).removeprefix(prefix) for f in files)
+    return hashlib.sha256("\n".join(names).encode()).hexdigest()
 
 
 def batch_input(spark: SparkSession, ranges: Dict[str, range], schema: StructType,
@@ -151,7 +163,7 @@ def batch_input(spark: SparkSession, ranges: Dict[str, range], schema: StructTyp
     # inputFiles() names are URIs; a reader path is a glob, unescaped
     paths = [re.sub(r"([\\{}\[\]*?])", r"\\\1", unquote(f)) for f in mine]
     df = spark.read.schema(schema).option("basePath", root).parquet(*paths)
-    return _with_file_parts(df, mine, "image_id")
+    return _with_file_parts(df, mine)
 
 
 def transform(df: DataFrame) -> DataFrame:
@@ -277,8 +289,8 @@ def run_pipeline(
         )
     listed = table_io.read_table(spark, input_path)
     files, schema = listed.inputFiles(), listed.schema
-    digest = hashlib.sha256("\n".join(sorted(map(_normalized, files))).encode())
-    listing = {"input_files": len(files), "input_digest": digest.hexdigest()}
+    root = _table_root(spark, input_path)
+    listing = {"input_files": len(files), "input_digest": _listing_digest(files, root)}
     if any({k: e.get(k) for k in listing} != listing for e in manifest):
         raise ValueError(
             f"the input listing of {input_path} ({len(files)} files, digest "
@@ -286,7 +298,7 @@ def run_pipeline(
             f"recorded in the manifest of {output_path}"
         )
     manifest = drop_uncommitted(output_path, manifest)
-    ranges, root = part_ranges(files, num_parts), _table_root(spark, input_path)
+    ranges = part_ranges(files, num_parts)
 
     done = {e["part_id"] for e in manifest}
     todo = [p for p in range(num_parts) if p not in done]

@@ -142,53 +142,6 @@ def snapshot_write(
     return new_id
 
 
-def expire_snapshots(table_path: str, keep_last: int = 2) -> Dict:
-    """Iceberg `expireSnapshots` + orphan-file cleanup for the snapshot
-    log: retain the newest `keep_last` snapshots (always including the
-    current one), delete the older snapshot JSONs, then delete any data
-    directory no RETAINED snapshot references.
-
-    Expiry order is the metadata order (snapshot id), data deletion is
-    reference-counted against the retained set only — so a data dir
-    inherited by a newer append snapshot survives even when the snapshot
-    that added it expires, exactly Iceberg's semantics. Time travel to
-    an expired snapshot raises thereafter (by design).
-
-    Returns {"expired": [ids], "retained": [ids], "removed_dirs": [...]}.
-    """
-    import shutil
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    snaps = sorted(list_snapshots(table_path), key=lambda s: s["snapshot_id"])
-    cur = current_snapshot_id(table_path)
-    keep_ids = {s["snapshot_id"] for s in snaps[-keep_last:]}
-    if cur is not None:
-        keep_ids.add(cur)
-    retained = [s for s in snaps if s["snapshot_id"] in keep_ids]
-    expired = [s for s in snaps if s["snapshot_id"] not in keep_ids]
-
-    for s in expired:
-        os.remove(
-            os.path.join(snapshots_dir(table_path), f"v{s['snapshot_id']:05d}.json")
-        )
-
-    referenced = {f for s in retained for f in s["files"]}
-    removed = []
-    data_root = os.path.join(table_path, "data")
-    if os.path.isdir(data_root):
-        for name in sorted(os.listdir(data_root)):
-            rel = os.path.join("data", name)
-            if rel not in referenced:
-                shutil.rmtree(os.path.join(data_root, name))
-                removed.append(rel)
-    return {
-        "expired": [s["snapshot_id"] for s in expired],
-        "retained": [s["snapshot_id"] for s in retained],
-        "removed_dirs": removed,
-    }
-
-
 # --- manifest (snapshot/lineage sidecar) -----------------------------------
 
 def manifest_dir(table_path: str) -> str:

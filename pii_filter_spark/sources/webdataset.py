@@ -1,4 +1,4 @@
-"""WebDataset shard export/ingest: real POSIX ustar tar, pure Python.
+"""WebDataset shard export: real POSIX ustar tar, pure Python.
 
 WebDataset (the de-facto image-training shard format — used by the
 LAION/OpenCLIP training stacks) is just a tar archive per shard where
@@ -64,21 +64,6 @@ def tar_bytes(entries: Iterable[Tuple[str, bytes]]) -> bytes:
         out.write(b"\0" * pad)
     out.write(b"\0" * (2 * BLOCK))
     return out.getvalue()
-
-
-def untar_bytes(data: bytes) -> List[Tuple[str, bytes]]:
-    """Parse a ustar archive back into (name, data) entries."""
-    out, off = [], 0
-    while off + BLOCK <= len(data):
-        head = data[off : off + BLOCK]
-        if head == b"\0" * BLOCK:
-            break
-        name = head[0:100].rstrip(b"\0").decode()
-        size = int(head[124:136].rstrip(b"\0 ").decode(), 8)
-        body = data[off + BLOCK : off + BLOCK + size]
-        out.append((name, body))
-        off += BLOCK + size + ((-size) % BLOCK)
-    return out
 
 
 _EXT = {"jpeg": "jpg", "png": "png"}
@@ -158,45 +143,3 @@ def write_webdataset(df, num_shards: int, out_dir: str | None = None):
         schema="shard_id long, n_samples long, tar_len long, tar_md5 string",
     )
 
-
-def read_webdataset(spark, shard_dir: str):
-    """Ingest WebDataset shards back into (image_id, bytes, caption,
-    fmt, w, h): one mapInPandas over the shard file list — each task
-    untars its own shards (files never pass through the driver)."""
-    import pandas as pd
-
-    shards = sorted(
-        os.path.join(shard_dir, f)
-        for f in os.listdir(shard_dir)
-        if f.endswith(".tar")
-    )
-    paths = spark.createDataFrame([(p,) for p in shards], "path string")
-
-    def _read(batches):
-        for pdf in batches:
-            rows = []
-            for path in pdf["path"]:
-                with open(path, "rb") as fh:
-                    entries = dict(untar_bytes(fh.read()))
-                keys = sorted(
-                    {n.rsplit(".", 1)[0] for n in entries},
-                    key=shard_order_key,
-                )
-                for k in keys:
-                    meta = json.loads(entries[f"{k}.json"])
-                    ext = _EXT.get(meta["fmt"], "bin")
-                    rows.append((
-                        meta["image_id"], entries[f"{k}.{ext}"],
-                        entries[f"{k}.txt"].decode("utf-8"),
-                        meta["fmt"], meta["w"], meta["h"],
-                    ))
-            yield pd.DataFrame(
-                rows,
-                columns=["image_id", "bytes", "caption", "fmt", "w", "h"],
-            )
-
-    return paths.repartition(max(1, len(shards))).mapInPandas(
-        _read,
-        schema="image_id string, bytes binary, caption string, "
-               "fmt string, w int, h int",
-    )

@@ -413,6 +413,31 @@ def test_resume_against_a_changed_listing_is_refused(spark, tmp_path):
     assert table_io.read_manifest(out) == before
 
 
+def test_resume_after_the_input_directory_moved(spark, tmp_path):
+    """The listing digest is over file names relative to the input's root:
+    an unchanged input that moved elsewhere resumes, and the resumed
+    output equals a straight run's."""
+    inp, moved = str(tmp_path / "input"), str(tmp_path / "moved" / "input")
+    write_input_table(spark, inp, 60, seed=SEED, num_partitions=2)
+    ref_out, out = str(tmp_path / "ref"), str(tmp_path / "out")
+    run_pipeline(spark, inp, ref_out, num_parts=6, batch_parts=2)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(table_io, "write_manifest_entry", _killed_after(2))
+        with pytest.raises(RuntimeError, match="killed after a batch commit"):
+            run_pipeline(spark, inp, out, num_parts=6, batch_parts=2)
+    assert 0 < len(table_io.read_manifest(out)) < 6
+
+    os.makedirs(os.path.dirname(moved))
+    os.rename(inp, moved)
+    assert run_pipeline(spark, moved, out, num_parts=6, batch_parts=2)
+    assert _table_fingerprint(spark, out) == _table_fingerprint(spark, ref_out)
+    manifest = table_io.read_manifest(out)
+    assert _recount(out, 6) == _recount(ref_out, 6) == {
+        e["part_id"]: {k: e[k] for k in COUNT_FIELDS} for e in manifest}
+    ref_digests = {e["input_digest"] for e in table_io.read_manifest(ref_out)}
+    assert {e["input_digest"] for e in manifest} == ref_digests
+
+
 def test_no_row_is_lost_on_an_input_path_with_a_space_and_percent(
         spark, tmp_path, monkeypatch):
     """Rows match their input file through `_metadata.file_path`, which

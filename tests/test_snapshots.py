@@ -132,41 +132,6 @@ def test_merge_upsert_cow_semantics_and_time_travel(spark, tmp_path):
     assert old.where(F.col("doc_id") == 2).first()["text"] == "t2"
 
 
-def test_expire_snapshots_and_orphan_cleanup(spark, tmp_path):
-    import os
-
-    from pii_filter_spark.sources import table_io
-
-    table = str(tmp_path / "tbl")
-    # s1 append, s2 append (inherits s1's data), s3 overwrite (own data)
-    s1 = table_io.snapshot_write(spark.range(0, 10).toDF("a"), table)
-    s2 = table_io.snapshot_write(spark.range(10, 20).toDF("a"), table)
-    s3 = table_io.snapshot_write(
-        spark.range(100, 105).toDF("a"), table, mode="overwrite"
-    )
-
-    # keep the last 2 (s2, s3): s1 expires, but its DATA dir survives
-    # because the retained s2 still references it (Iceberg semantics).
-    res = table_io.expire_snapshots(table, keep_last=2)
-    assert res["expired"] == [s1]
-    assert sorted(res["retained"]) == [s2, s3]
-    assert res["removed_dirs"] == []
-    assert os.path.isdir(os.path.join(table, "data", f"s{s1:05d}"))
-    assert table_io.read_table(spark, table, snapshot_id=s2).count() == 20
-    with pytest.raises(ValueError):
-        table_io.read_table(spark, table, snapshot_id=s1)
-
-    # keep only the current overwrite snapshot: s1+s2 data now orphaned
-    res2 = table_io.expire_snapshots(table, keep_last=1)
-    assert res2["expired"] == [s2]
-    assert res2["retained"] == [s3]
-    assert sorted(res2["removed_dirs"]) == [
-        os.path.join("data", f"s{s1:05d}"),
-        os.path.join("data", f"s{s2:05d}"),
-    ]
-    assert table_io.read_table(spark, table).count() == 5
-
-
 def test_snapshot_merge_scratch_dir_is_per_process(tmp_path):
     """Two concurrent processes get different q_snapshot_merge scratch dirs
     for the same sf_dir (neither can rmtree the other's table), and each

@@ -1,11 +1,12 @@
-"""Structured Streaming ingestion parity.
+"""Structured Streaming parity for the batch operators.
 
 The reference has no streaming surface (SURVEY §2.6) and the north rule
-mandates batch, but the engine's event-aggregation shapes must also hold
-under incremental execution: the SAME windowed aggregation run through
-readStream (availableNow trigger, event-time watermark) must produce the
-batch answer. This pins the operators to expressions that are legal in
-both execution modes (no batch-only constructs in the shared path).
+mandates batch; the library has no streaming operator of its own. These
+tests pin that the batch expressions stay legal under incremental
+execution: the windowed event aggregation and the fused caption
+transform, each run through readStream (availableNow trigger), give the
+batch answer, and an append-mode windowed aggregation drops an event
+that arrives below its watermark.
 """
 
 import os
@@ -72,42 +73,6 @@ def test_stream_windowed_agg_matches_batch(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_stateful_distinct_across_microbatches(spark, tmp_path):
-    """applyInPandasWithState dedup: a key re-sent in a later micro-batch
-    must not be emitted again."""
-    import pandas as pd
-
-    from pii_filter_spark.streaming import stateful_distinct
-
-    src = tmp_path / "src"
-    src.mkdir()
-    # batch 1: ids 0..9 ; batch 2: ids 5..14 (5 overlaps)
-    pd.DataFrame({"image_id": [f"i{k}" for k in range(10)],
-                  "v": list(range(10))}).to_parquet(src / "b1.parquet")
-    pd.DataFrame({"image_id": [f"i{k}" for k in range(5, 15)],
-                  "v": list(range(100, 110))}).to_parquet(src / "b2.parquet")
-
-    stream = (
-        spark.readStream.schema("image_id string, v long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        stateful_distinct(stream, "image_id")
-        .writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from dedup_out").collect()
-    ids = [r.image_id for r in rows]
-    assert sorted(ids) == sorted({f"i{k}" for k in range(15)})
-    assert len(ids) == len(set(ids)) == 15
-
-
 def test_streaming_scrub_pipeline_matches_batch(spark, tmp_path):
     """readStream → fused quality+scrub transform → writeStream parquet:
     the streaming ingest of the image+caption table must produce exactly
@@ -148,72 +113,6 @@ def test_streaming_scrub_pipeline_matches_batch(spark, tmp_path):
     }
     assert got == expected
     assert len(got) == 120
-
-
-def test_sessionize_stream_cross_batch_continuity(spark, tmp_path):
-    """Streaming gap-sessionization must MERGE a batch-2 event into the
-    open batch-1 session (cross-batch state), and close sessions only
-    when a later event arrives past the gap."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from pii_filter_spark.streaming.sessions import sessionize_stream
-
-    t0 = dt.datetime(2024, 1, 1, 8, 0, 0)
-    m = dt.timedelta(minutes=1)
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    # user 1: two events in batch 1 (one session), batch 2 event 7h later
-    #         closes it and opens a new (unemitted) session
-    def _write(name, rows):
-        df = pd.DataFrame(rows)
-        df["ts"] = df["ts"].astype("datetime64[us]")  # Spark-readable TIMESTAMP(MICROS)
-        df.to_parquet(src / name)
-
-    _write("b1.parquet", {
-        "event_id": [1, 2, 10],
-        "user_id": [1, 1, 2],
-        "ts": [t0, t0 + 10 * m, t0],
-        "value": [1.0, 2.0, 5.0],
-    })
-    _write("b2.parquet", {
-        "event_id": [3, 11, 12],
-        "user_id": [1, 2, 2],
-        "ts": [t0 + 7 * 60 * m, t0 + 10 * m, t0 + 8 * 60 * m],
-        "value": [4.0, 7.0, 9.0],
-    })
-
-    stream = (
-        spark.readStream.schema("event_id long, user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        sessionize_stream(stream, gap_minutes=360, flush_timeout_ms=0)
-        .writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "sess_ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, r.total_value)
-        for r in spark.sql("select * from sess_out").collect()
-    }
-    # closed-by-a-later-event sessions MUST be present with exact values:
-    # user 1's batch-1 session, and user 2's session whose +10min event
-    # arrived in batch 2 and MERGED into the open batch-1 state
-    assert (1, t0, t0 + 10 * m, 2, 3.0) in got
-    assert (2, t0, t0 + 10 * m, 2, 12.0) in got
-    # with the idle flush disabled the two still-open sessions are NOT
-    # emitted — output is exactly the closed pair
-    assert got == {
-        (1, t0, t0 + 10 * m, 2, 3.0),
-        (2, t0, t0 + 10 * m, 2, 12.0),
-    }
 
 
 def test_watermark_drops_late_events(spark, tmp_path):

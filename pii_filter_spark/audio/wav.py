@@ -87,13 +87,13 @@ def _decode_wav(data: bytes) -> Tuple[int, np.ndarray]:
     return int(sr), x
 
 
-def synth_tone(idx: int, sample_rate: int = 16_000) -> np.ndarray:
+def synth_tone(idx: int) -> np.ndarray:
     """Deterministic per-id test signal: two-tone + seeded noise,
     0.05–0.3 s — enough structure for RMS/ZCR features to differ
     per row. Pure function shared by the query and its oracle."""
     rng = np.random.default_rng((1234, idx))
-    n = int(sample_rate * (0.05 + 0.25 * float(rng.random())))
-    t = np.arange(n, dtype=np.float64) / sample_rate
+    n = int(16_000 * (0.05 + 0.25 * float(rng.random())))
+    t = np.arange(n, dtype=np.float64) / 16_000
     f1 = 110.0 * (1 + idx % 17)
     f2 = 60.0 * (1 + idx % 29)
     x = (

@@ -46,32 +46,6 @@ TYPE_PRIORITY: Dict[str, int] = {
 
 DEFAULT_PRIORITY = 99
 
-# Sensitive non-PII categories recognized by the contextual stage of the
-# reference (constants.py:29-49). Kept for schema/category parity; in this
-# engine contextual categories are produced by the dictionary/toxicity
-# stages, not a network LLM.
-SENSITIVE_CATEGORIES = [
-    "CONDICAO_DE_SAUDE",
-    "INFORMACAO_FINANCEIRA_DETALHADA",
-    "HISTORICO_DISCIPLINAR",
-    "PROBLEMA_PESSOAL_FAMILIAR",
-    "USUARIO_REDE",
-    "IP_ADDRESS",
-    "REGISTRO_PONTO",
-    "CARGO",
-    "DEPARTAMENTO",
-    "MATRICULA",
-    "SALARIO",
-    "ENDERECO_COMPLETO",
-    "ENDERECO_LOGRADOURO",
-    "ENDERECO_BAIRRO",
-    "ENDERECO_CIDADE",
-    "NOME_BANCO",
-    "AGENCIA_BANCARIA",
-    "DATA_NASCIMENTO",
-    "CONTA_BANCARIA",
-]
-
 # Portuguese stop words (reference constants.py:53-81); also used by the
 # C4-style minimum-stopword quality rule and the language-ID tie-breaker.
 PORTUGUESE_STOP_WORDS = [

@@ -7,9 +7,8 @@ import math
 import numpy as np
 
 from .jpeg_codec import decode_jpeg, encode_jpeg
-from .png_codec import decode_png, encode_png
+from .png_codec import PNG_SIGNATURE, decode_png, encode_png
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _JPEG_SIG = b"\xff\xd8\xff"
 
 
@@ -27,7 +26,7 @@ def encode_image(pixels: np.ndarray, fmt: str, quality: int = 90) -> bytes:
 def decode_image(data: bytes) -> np.ndarray:
     """Decode by magic bytes -> RGB uint8 (h, w, 3). JPEG is the real
     baseline T.81 decoder (jpeg_codec.py)."""
-    if data.startswith(_PNG_SIG):
+    if data.startswith(PNG_SIGNATURE):
         return decode_png(data)
     if data.startswith(_JPEG_SIG):
         return decode_jpeg(data)

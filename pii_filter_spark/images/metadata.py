@@ -25,7 +25,8 @@ import struct
 import zlib
 from typing import Iterator, List, Tuple
 
-_SIGNATURE = b"\x89PNG\r\n\x1a\n"
+from .png_codec import PNG_SIGNATURE
+
 # Chunks that determine decoded pixel values. Everything else (text,
 # EXIF, time, gamma/ICC rendering hints) is dropped by the scrub.
 _PIXEL_CHUNKS = frozenset((b"IHDR", b"PLTE", b"tRNS", b"IDAT", b"IEND"))
@@ -33,13 +34,13 @@ _PRINTABLE = set(string.printable) - set("\x0b\x0c")
 
 
 def is_png(data: bytes) -> bool:
-    return data.startswith(_SIGNATURE)
+    return data.startswith(PNG_SIGNATURE)
 
 
 def iter_chunks(data: bytes) -> Iterator[Tuple[bytes, bytes]]:
     """Yield (tag, payload) for each well-formed chunk; stop at IEND or
     the first structurally-truncated chunk (tolerant of trailing junk)."""
-    pos = len(_SIGNATURE)
+    pos = len(PNG_SIGNATURE)
     n = len(data)
     while pos + 12 <= n:
         (length,) = struct.unpack(">I", data[pos : pos + 4])
@@ -57,8 +58,8 @@ def _latin1(b: bytes) -> str:
     return b.decode("latin-1", errors="replace")
 
 
-def _ascii_runs(payload: bytes, min_len: int = 4) -> List[str]:
-    """Printable-ASCII runs >= min_len chars (the strings(1) heuristic),
+def _ascii_runs(payload: bytes) -> List[str]:
+    """Printable-ASCII runs >= 4 chars (the strings(1) heuristic),
     used for eXIf blobs where full TIFF parsing is out of scope."""
     runs, cur = [], []
     for byte in payload:
@@ -66,10 +67,10 @@ def _ascii_runs(payload: bytes, min_len: int = 4) -> List[str]:
         if ch in _PRINTABLE and ch not in "\r\n\t":
             cur.append(ch)
         else:
-            if len(cur) >= min_len:
+            if len(cur) >= 4:
                 runs.append("".join(cur))
             cur = []
-    if len(cur) >= min_len:
+    if len(cur) >= 4:
         runs.append("".join(cur))
     return runs
 
@@ -127,7 +128,7 @@ def strip_ancillary(data: bytes) -> bytes:
     returned unchanged."""
     if not is_png(data):
         return data
-    parts = [_SIGNATURE]
+    parts = [PNG_SIGNATURE]
     for tag, payload in iter_chunks(data):
         if tag in _PIXEL_CHUNKS:
             parts.append(
@@ -151,7 +152,7 @@ def add_text_chunk(data: bytes, keyword: str, text: str) -> bytes:
         + struct.pack(">I", zlib.crc32(b"tEXt" + payload) & 0xFFFFFFFF)
     )
     # first IDAT chunk header = 4-byte length || b"IDAT"
-    pos = len(_SIGNATURE)
+    pos = len(PNG_SIGNATURE)
     while pos + 12 <= len(data):
         (length,) = struct.unpack(">I", data[pos : pos + 4])
         if data[pos + 4 : pos + 8] == b"IDAT":

@@ -12,7 +12,7 @@ import zlib
 
 import numpy as np
 
-_SIGNATURE = b"\x89PNG\r\n\x1a\n"
+PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -35,7 +35,7 @@ def encode_png(pixels: np.ndarray) -> bytes:
         [np.zeros((h, 1), dtype=np.uint8), pixels.reshape(h, w * 3)], axis=1
     ).tobytes()
     return (
-        _SIGNATURE
+        PNG_SIGNATURE
         + _chunk(b"IHDR", ihdr)
         + _chunk(b"IDAT", zlib.compress(raw, 6))
         + _chunk(b"IEND", b"")
@@ -85,9 +85,9 @@ def decode_png(data: bytes) -> np.ndarray:
 
 
 def _decode_png(data: bytes) -> np.ndarray:
-    if not data.startswith(_SIGNATURE):
+    if not data.startswith(PNG_SIGNATURE):
         raise ValueError("not a PNG stream")
-    pos = len(_SIGNATURE)
+    pos = len(PNG_SIGNATURE)
     w = h = None
     channels = 3
     idat = b""

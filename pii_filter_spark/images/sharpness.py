@@ -68,8 +68,8 @@ def _box1d(a: np.ndarray, k: int, axis: int) -> np.ndarray:
     return sums / (hi - lo).reshape(shape)
 
 
-def box_blur(px: np.ndarray, k: int = 7) -> np.ndarray:
-    """Deterministic separable k x k box blur (true moving-average
+def box_blur(px: np.ndarray) -> np.ndarray:
+    """Deterministic separable 7 x 7 box blur (true moving-average
     low-pass; NOT a downscale/upscale round-trip, whose block-replication
     upsampling would ADD hard edges and raise the Laplacian). Exact
     integral-image arithmetic, np.rint half-to-even — bit-identical in
@@ -77,6 +77,6 @@ def box_blur(px: np.ndarray, k: int = 7) -> np.ndarray:
     a = px.astype(np.float64)
     if a.ndim == 2:
         a = a[:, :, None]
-    out = _box1d(_box1d(a, k, 0), k, 1)
+    out = _box1d(_box1d(a, 7, 0), 7, 1)
     out = np.clip(np.rint(out), 0, 255).astype(np.uint8)
     return out[:, :, 0] if px.ndim == 2 else out

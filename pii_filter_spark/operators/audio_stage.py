@@ -26,7 +26,6 @@ AUDIO_FEATURE_SCHEMA = (
 
 def audio_features(
     df: DataFrame,
-    bytes_col: str = "bytes",
     id_col: str = "image_id",
     decoder=decode_wav,
 ) -> DataFrame:
@@ -50,15 +49,13 @@ def audio_features(
             float(np.abs(pcm).max()) if n else 0.0,
         )
 
-    return map_rows(df, [id_col, bytes_col], AUDIO_FEATURE_SCHEMA, _feat)
+    return map_rows(df, [id_col, "bytes"], AUDIO_FEATURE_SCHEMA, _feat)
 
 
-def audio_fingerprints(
-    df: DataFrame, id_col: str = "audio_id", bytes_col: str = "bytes"
-) -> DataFrame:
-    """(id, fp64): 64-bit Haitsma-Kalker fingerprint per clip
-    (audio/fingerprint.py) — decode + fingerprint in ONE Arrow pass,
-    bytes never shuffle. Feeds dedup.hamming_near_pairs (chunks=8 for
+def audio_fingerprints(df: DataFrame) -> DataFrame:
+    """(audio_id, fp64) from (audio_id, bytes): 64-bit Haitsma-Kalker
+    fingerprint per clip (audio/fingerprint.py) — decode + fingerprint
+    in ONE Arrow pass, bytes never shuffle. Feeds dedup.hamming_near_pairs (chunks=8 for
     exact recall to hamming<=7), extending near-dup detection to the
     audio modality with the same banded operator text simhash and image
     pHash use. Undecodable rows get a NULL fingerprint, which drops out
@@ -74,5 +71,5 @@ def audio_fingerprints(
         yield audio_id, fp
 
     return map_rows(
-        df, [id_col, bytes_col], "audio_id string, fp64 long", _fp
+        df, ["audio_id", "bytes"], "audio_id string, fp64 long", _fp
     )

@@ -37,13 +37,13 @@ DEFAULT_M_BITS = 1 << 17  # 16 KB; FP ~0.1% at ~9k entries with k=7
 DEFAULT_K = 7
 
 
-def _digest_positions(digest: str, m_bits: int, k: int) -> List[int]:
+def _digest_positions(digest: str) -> List[int]:
     """k bit positions via the Kirsch-Mitzenmacher double-hash trick
     over the md5 digest (h1 + i*h2 mod m) — deterministic everywhere."""
     d = hashlib.md5(digest.encode("utf-8")).digest()
     h1 = int.from_bytes(d[:8], "big")
     h2 = int.from_bytes(d[8:], "big") | 1  # odd -> full cycle on 2^n
-    return [(h1 + i * h2) % m_bits for i in range(k)]
+    return [(h1 + i * h2) % DEFAULT_M_BITS for i in range(DEFAULT_K)]
 
 
 def _normalize(text: str) -> str:
@@ -55,52 +55,38 @@ def text_digest(text: str) -> str:
     return hashlib.md5(_normalize(text).encode("utf-8")).hexdigest()
 
 
-def build_bloom(
-    df: DataFrame,
-    text_col: str = "text",
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> bytes:
-    """Bloom bitmap (m_bits/8 bytes) over normalized-text digests.
+def build_bloom(df: DataFrame) -> bytes:
+    """Bloom bitmap (DEFAULT_M_BITS/8 bytes) over the normalized digests
+    of the `text` column.
 
     Distributed build: each partition ORs its own bitmap, the driver ORs
     the partials (one small array per partition; digests never move).
     """
-    if m_bits & (m_bits - 1):
-        raise ValueError("m_bits must be a power of two")
 
     def _partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bits = np.zeros(m_bits // 8, dtype=np.uint8)
+        bits = np.zeros(DEFAULT_M_BITS // 8, dtype=np.uint8)
         any_rows = False
         for pdf in batches:
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 any_rows = True
-                for pos in _digest_positions(
-                    text_digest(t if isinstance(t, str) else ""), m_bits, k
-                ):
+                digest = text_digest(t if isinstance(t, str) else "")
+                for pos in _digest_positions(digest):
                     bits[pos >> 3] |= 1 << (pos & 7)
         if any_rows:
             yield pd.DataFrame({"bitmap": [bits.tobytes()]})
 
     partials = (
-        df.select(text_col).mapInPandas(_partial, schema="bitmap binary")
+        df.select("text").mapInPandas(_partial, schema="bitmap binary")
     ).collect()
-    out = np.zeros(m_bits // 8, dtype=np.uint8)
+    out = np.zeros(DEFAULT_M_BITS // 8, dtype=np.uint8)
     for r in partials:
         out |= np.frombuffer(r["bitmap"], dtype=np.uint8)
     return out.tobytes()
 
 
-def seen_flags(
-    df: DataFrame,
-    bloom: bytes,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """(id, seen) — True iff the doc's digest hits every Bloom position
-    (possibly seen: exact for members, FP-rate for non-members)."""
-    m_bits = len(bloom) * 8
+def seen_flags(df: DataFrame, bloom: bytes) -> DataFrame:
+    """(doc_id, seen) — True iff the digest of `text` hits every Bloom
+    position (possibly seen: exact for members, FP-rate for non-members)."""
     sc = df.sparkSession.sparkContext
     b = sc.broadcast(bloom)
 
@@ -108,14 +94,10 @@ def seen_flags(
         bits = b.value
         yield doc_id, all(
             bits[p >> 3] & (1 << (p & 7))
-            for p in _digest_positions(
-                text_digest(t if isinstance(t, str) else ""), m_bits, k
-            )
+            for p in _digest_positions(text_digest(t if isinstance(t, str) else ""))
         )
 
-    return map_rows(
-        df, [id_col, text_col], f"{id_col} long, seen boolean", _flag
-    )
+    return map_rows(df, ["doc_id", "text"], "doc_id long, seen boolean", _flag)
 
 
 # ---------------------------------------------------------------------------
@@ -123,22 +105,17 @@ def seen_flags(
 # ---------------------------------------------------------------------------
 
 
-def bloom_rows(
-    seen_texts: List[str],
-    probe_rows: List,
-    m_bits: int = DEFAULT_M_BITS,
-    k: int = DEFAULT_K,
-) -> List:
+def bloom_rows(seen_texts: List[str], probe_rows: List) -> List:
     """Twin of build_bloom + seen_flags: same digests, same positions."""
-    bits = bytearray(m_bits // 8)
+    bits = bytearray(DEFAULT_M_BITS // 8)
     for t in seen_texts:
-        for p in _digest_positions(text_digest(t or ""), m_bits, k):
+        for p in _digest_positions(text_digest(t or "")):
             bits[p >> 3] |= 1 << (p & 7)
     out = []
     for doc_id, t in probe_rows:
         hit = all(
             bits[p >> 3] & (1 << (p & 7))
-            for p in _digest_positions(text_digest(t or ""), m_bits, k)
+            for p in _digest_positions(text_digest(t or ""))
         )
         out.append((doc_id, bool(hit)))
     return out

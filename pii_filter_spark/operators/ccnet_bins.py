@@ -60,32 +60,27 @@ def tercile_cutoffs(sorted_ppls: list) -> tuple:
     return t_head, t_mid
 
 
-def ccnet_bins(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sample_per_lang: int = 256,
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """(id, lang, ppl, bin): CCNet head/middle/tail per language."""
+def ccnet_bins(df: DataFrame, sample_per_lang: int = 256) -> DataFrame:
+    """(doc_id, lang, ppl, bin): CCNet head/middle/tail per language of
+    each row's `text`."""
     spark = df.sparkSession
 
     # Threshold pass: lang for every row (needed to stratify), ppl only
     # carried along — both evaluate in the same Arrow stage; the window
     # then sees a narrow (id, lang, ppl) projection. The scoring pass
     # below evaluates the same frame again.
-    scored = caption_stage(df, ["lang", "ppl"], text_col).select(
-        F.col(id_col), "lang", F.round("ppl", 4).alias("ppl")
+    scored = caption_stage(df, ["lang", "ppl"], "text").select(
+        F.col("doc_id"), "lang", F.round("ppl", 4).alias("ppl")
     )
 
-    h = F.md5(F.col(id_col).cast("string"))
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    w1 = Window.partitionBy("lang", salt).orderBy(h, id_col)
+    h = F.md5(F.col("doc_id").cast("string"))
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32))
+    w1 = Window.partitionBy("lang", salt).orderBy(h, "doc_id")
     local = (
         scored.withColumn("_lrn", F.row_number().over(w1))
         .where(F.col("_lrn") <= sample_per_lang)
     )
-    w2 = Window.partitionBy("lang").orderBy(h, id_col)
+    w2 = Window.partitionBy("lang").orderBy(h, "doc_id")
     sample = (
         local.withColumn("_rn", F.row_number().over(w2))
         .where(F.col("_rn") <= sample_per_lang)
@@ -115,7 +110,7 @@ def ccnet_bins(
     return (
         scored.join(F.broadcast(cuts), "lang", "left")
         .select(
-            id_col,
+            "doc_id",
             "lang",
             "ppl",
             F.when(F.col("ppl") <= F.col("t_head"), F.lit(HEAD))

@@ -30,6 +30,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .quality_stage import ASCII_WS
+
 # -- frozen 1:1 character tables ------------------------------------------
 # accent -> base letter (input is lowercased first, so lowercase only)
 _ACCENT_PAIRS = [
@@ -64,7 +66,6 @@ PUNCT_DST = "".join(d * len(s) for s, d in _PUNCT_PAIRS)
 # `re` (explicit char classes; never bare \s, whose meaning differs).
 _ELLIPSIS = "…"
 _DROP_RE = "[\\x00-\\x08\\x0E-\\x1F\\x7F​‌‍﻿]"
-_WS_RE = "[ \\t\\n\\x0B\\f\\r]+"
 
 
 def normalize_expr(col: Column) -> Column:
@@ -75,7 +76,7 @@ def normalize_expr(col: Column) -> Column:
     s = F.translate(s, PUNCT_SRC, PUNCT_DST)
     s = F.regexp_replace(s, "[0-9]", "0")
     s = F.regexp_replace(s, _DROP_RE, "")
-    return F.trim(F.regexp_replace(s, _WS_RE, " "))
+    return F.trim(F.regexp_replace(s, ASCII_WS, " "))
 
 
 def normalize_text(text) -> str:
@@ -86,16 +87,15 @@ def normalize_text(text) -> str:
     s = s.translate(str.maketrans(PUNCT_SRC, PUNCT_DST))
     s = re.sub("[0-9]", "0", s)
     s = re.sub(_DROP_RE, "", s)
-    return re.sub(_WS_RE, " ", s).strip(" ")
+    return re.sub(ASCII_WS, " ", s).strip(" ")
 
 
-def ccnet_normalize(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, norm_text, norm_digest): dedup key per CCNet §4.1."""
-    norm = normalize_expr(F.col(text_col))
+def ccnet_normalize(df: DataFrame) -> DataFrame:
+    """(doc_id, norm_text, norm_digest): dedup key of `text` per CCNet
+    §4.1."""
+    norm = normalize_expr(F.col("text"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         norm.alias("norm_text"),
         F.md5(norm).alias("norm_digest"),
     )

@@ -41,12 +41,10 @@ TARGET_BYTES = 8192
 
 def compaction_plan(
     df: DataFrame,
-    size_col: str = "size_bytes",
-    id_col: str = "doc_id",
     target_bytes: int = TARGET_BYTES,
     n_groups: int = 64,
 ) -> DataFrame:
-    """(id, size, cum_before, compaction_group) for a file inventory.
+    """(doc_id, size_bytes, cum_before, compaction_group) for a file inventory.
 
     compaction_group = exclusive-prefix-sum(size, over size DESC, id)
     div target_bytes — contiguous ~target-sized groups, largest first.
@@ -54,28 +52,28 @@ def compaction_plan(
     if target_bytes <= 0:
         raise ValueError("target_bytes must be > 0")
     bounds = df.agg(
-        F.min(size_col).alias("lo"), F.max(size_col).alias("hi")
+        F.min("size_bytes").alias("lo"), F.max("size_bytes").alias("hi")
     ).collect()[0]
     if bounds["lo"] is None:
-        id_type = df.schema[id_col].dataType.simpleString()
+        id_type = df.schema["doc_id"].dataType.simpleString()
         return df.sparkSession.createDataFrame(
             [],
-            f"{id_col} {id_type}, {size_col} long, cum_before long, "
+            f"doc_id {id_type}, size_bytes long, cum_before long, "
             "compaction_group long",
         )
     lo, hi = int(bounds["lo"]), int(bounds["hi"])
     span = max(1, (hi - lo + n_groups) // n_groups)
 
     base = df.select(
-        F.col(id_col),
-        F.col(size_col).cast("long").alias(size_col),
-        F.floor((F.lit(hi) - F.col(size_col)) / F.lit(span)).alias("_band"),
+        F.col("doc_id"),
+        F.col("size_bytes").cast("long").alias("size_bytes"),
+        F.floor((F.lit(hi) - F.col("size_bytes")) / F.lit(span)).alias("_band"),
     )
 
     totals = {
         int(r["_band"]): int(r["tot"])
         for r in base.groupBy("_band")
-        .agg(F.sum(size_col).alias("tot"))
+        .agg(F.sum("size_bytes").alias("tot"))
         .collect()
     }
     offsets, running = {}, 0
@@ -93,13 +91,13 @@ def compaction_plan(
 
     w = (
         Window.partitionBy("_band")
-        .orderBy(F.col(size_col).desc(), F.col(id_col))
+        .orderBy(F.col("size_bytes").desc(), F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    cum = (F.coalesce(F.sum(size_col).over(w), F.lit(0)) + band_base).alias(
+    cum = (F.coalesce(F.sum("size_bytes").over(w), F.lit(0)) + band_base).alias(
         "cum_before"
     )
-    return base.select(F.col(id_col), F.col(size_col), cum).withColumn(
+    return base.select(F.col("doc_id"), F.col("size_bytes"), cum).withColumn(
         "compaction_group", F.expr(f"cum_before div {int(target_bytes)}")
     )
 

@@ -139,13 +139,11 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
     max_iter: int = 50,
     small_graph_threshold: int = 2_000_000,
 ) -> DataFrame:
-    """(id, component) for every vertex in the edge list; component =
-    min vertex id of the connected component.
+    """(id, component) for every vertex of the (id_a, id_b) edge list;
+    component = min vertex id of the connected component.
 
     Two physical strategies behind one contract:
 
@@ -167,7 +165,7 @@ def connected_components(
     and the gate queries exercise the small path against union-find
     twin oracles)."""
     e = _canon(
-        edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).localCheckpoint()
     n_edges = e.count()
     if n_edges <= small_graph_threshold:
@@ -213,18 +211,14 @@ def connected_components(
 
 
 def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
+    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:
     """Every doc with its duplicate-cluster id and survivor flag.
 
     Docs that appear in no pair form singleton clusters of themselves.
     The survivor is the min id per cluster (deterministic).
     """
-    comp = connected_components(pairs, a_col, b_col)
+    comp = connected_components(pairs)
     out = docs.select(id_col).join(
         comp.withColumnRenamed("id", id_col), id_col, "left"
     )
@@ -236,14 +230,7 @@ def dedup_clusters(
     )
 
 
-def dedup_clusters_best(
-    docs: DataFrame,
-    pairs: DataFrame,
-    score_col: str,
-    id_col: str = "doc_id",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-) -> DataFrame:
+def dedup_clusters_best(docs: DataFrame, pairs: DataFrame, score_col: str) -> DataFrame:
     """Quality-aware survivor selection: per duplicate cluster keep the
     HIGHEST-`score_col` member (ties break to the min id, so the result
     is deterministic).
@@ -263,28 +250,28 @@ def dedup_clusters_best(
     (same as dedup_clusters); both branches share its exchange, which
     AQE reuses.
     """
-    comp = connected_components(pairs, a_col, b_col)
-    labeled = docs.select(id_col, score_col).join(
-        comp.withColumnRenamed("id", id_col), id_col, "left"
+    comp = connected_components(pairs)
+    labeled = docs.select("doc_id", score_col).join(
+        comp.withColumnRenamed("id", "doc_id"), "doc_id", "left"
     )
     dup = labeled.where(F.col("component").isNotNull())
     # deterministic argmax: (score, -id) lexicographic via a struct —
     # max_by on the struct is a single map-side-combinable aggregate
     rank = F.struct(
-        F.col(score_col).alias("s"), (-F.col(id_col)).alias("neg_id")
+        F.col(score_col).alias("s"), (-F.col("doc_id")).alias("neg_id")
     )
     winners = dup.groupBy("component").agg(
-        F.max_by(F.col(id_col), rank).alias("_winner")
+        F.max_by(F.col("doc_id"), rank).alias("_winner")
     )
     dup_out = dup.join(winners, "component").select(
-        id_col,
+        "doc_id",
         F.col("component").alias("cluster_id"),
         F.col(score_col),
-        (F.col(id_col) == F.col("_winner")).alias("is_survivor"),
+        (F.col("doc_id") == F.col("_winner")).alias("is_survivor"),
     )
     single_out = labeled.where(F.col("component").isNull()).select(
-        id_col,
-        F.col(id_col).alias("cluster_id"),
+        "doc_id",
+        F.col("doc_id").alias("cluster_id"),
         F.col(score_col),
         F.lit(True).alias("is_survivor"),
     )

@@ -59,21 +59,21 @@ def trigrams(text: str) -> List[str]:
     return [t[i - 2 : i + 1] for i in range(2, len(t))]
 
 
-def trigram_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(gram, cnt) global counts. One Arrow pass with per-batch Counter
+def trigram_counts(docs: DataFrame) -> DataFrame:
+    """(gram, cnt) global counts over `text`. One Arrow pass with per-batch Counter
     combine, one groupBy-sum shuffle of partition-local partials."""
 
     def _count(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             c: Counter = Counter()
-            for t in pdf[text_col]:
+            for t in pdf["text"]:
                 c.update(trigrams(t if isinstance(t, str) else ""))
             if c:
                 yield pd.DataFrame(
                     {"gram": list(c.keys()), "cnt": list(c.values())}
                 )
 
-    partials = docs.select(text_col).mapInPandas(
+    partials = docs.select("text").mapInPandas(
         _count, schema="gram string, cnt long"
     )
     return partials.groupBy("gram").agg(F.sum("cnt").alias("cnt"))
@@ -114,18 +114,14 @@ def train_micronat_table(
 
 def corpus_lm_scores(
     docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     top_k: int = 4096,
     train_docs: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, n_grams, nll_micronats): exact-integer negative log-likelihood
-    of each doc under the trigram LM trained on `train_docs` (default:
-    the scored corpus itself — self-perplexity, the CCNet quality
-    signal). Zero shuffles in the scoring pass."""
-    counts = trigram_counts(
-        docs if train_docs is None else train_docs, text_col
-    )
+    """(doc_id, n_grams, nll_micronats): exact-integer negative
+    log-likelihood of each doc's `text` under the trigram LM trained on
+    `train_docs` (default: the scored corpus itself — self-perplexity,
+    the CCNet quality signal). Zero shuffles in the scoring pass."""
+    counts = trigram_counts(docs if train_docs is None else train_docs)
     table, oov = train_micronat_table(counts, top_k)
 
     def _score(doc_id, t):
@@ -133,11 +129,11 @@ def corpus_lm_scores(
         yield doc_id, len(gs), sum(table.get(g, oov) for g in gs)
 
     out = map_rows(
-        docs, [id_col, text_col],
-        f"id {dict(docs.dtypes)[id_col]}, n_grams long, nll_micronats long",
+        docs, ["doc_id", "text"],
+        f"id {dict(docs.dtypes)['doc_id']}, n_grams long, nll_micronats long",
         _score,
     )
-    return out.withColumnRenamed("id", id_col)
+    return out.withColumnRenamed("id", "doc_id")
 
 
 def corpus_lm_rows(
@@ -162,13 +158,7 @@ def corpus_lm_rows(
     return out
 
 
-def moore_lewis_scores(
-    docs: DataFrame,
-    in_domain,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_k: int = 4096,
-) -> DataFrame:
+def moore_lewis_scores(docs: DataFrame, in_domain) -> DataFrame:
     """Moore-Lewis cross-entropy-difference selection (Moore & Lewis
     2010, "Intelligent Selection of Language Model Training Data"): rank
     general-corpus docs by H_in(doc) - H_gen(doc) — low means "reads
@@ -179,7 +169,7 @@ def moore_lewis_scores(
     Built from the distributed trainer: TWO trigram LMs (in-domain
     slice, full corpus) trained by the same bounded-partials pipeline,
     then ONE scoring Arrow pass computes both integer micro-nat NLLs
-    simultaneously. Output (id, n_grams, delta_micronats,
+    simultaneously over `text`. Output (doc_id, n_grams, delta_micronats,
     avg_delta_micro): delta = nll_in - nll_gen exactly;
     avg_delta_micro = HALF_UP(delta / n_grams) — one IEEE divide of two
     exact integers, identical in both engines, HALF_UP matching
@@ -197,7 +187,7 @@ def moore_lewis_scores(
         for pdf in batches:
             c_in: Counter = Counter()
             c_all: Counter = Counter()
-            for t, fl in zip(pdf[text_col], pdf["_in_domain"]):
+            for t, fl in zip(pdf["text"], pdf["_in_domain"]):
                 gs = trigrams(t if isinstance(t, str) else "")
                 c_all.update(gs)
                 if fl:
@@ -212,7 +202,7 @@ def moore_lewis_scores(
 
     flag = in_domain if not isinstance(in_domain, str) else F.expr(in_domain)
     fused = (
-        docs.select(F.col(text_col), flag.alias("_in_domain"))
+        docs.select(F.col("text"), flag.alias("_in_domain"))
         .mapInPandas(_count2, schema="gram string, cnt_in long, cnt long")
         .groupBy("gram")
         .agg(F.sum("cnt_in").alias("cnt_in"), F.sum("cnt").alias("cnt"))
@@ -222,8 +212,8 @@ def moore_lewis_scores(
         "gram", F.col("cnt_in").alias("cnt")
     )
     counts_gen = fused.select("gram", "cnt")
-    t_in, oov_in = train_micronat_table(counts_in, top_k, materialize=False)
-    t_gen, oov_gen = train_micronat_table(counts_gen, top_k, materialize=False)
+    t_in, oov_in = train_micronat_table(counts_in, 4096, materialize=False)
+    t_gen, oov_gen = train_micronat_table(counts_gen, 4096, materialize=False)
 
     def _score(doc_id, t):
         gs = trigrams(t if isinstance(t, str) else "")
@@ -232,24 +222,20 @@ def moore_lewis_scores(
         yield doc_id, len(gs), nll_in - nll_gen
 
     out = map_rows(
-        docs, [id_col, text_col],
-        f"id {dict(docs.dtypes)[id_col]}, n_grams long, delta_micronats long",
+        docs, ["doc_id", "text"],
+        f"id {dict(docs.dtypes)['doc_id']}, n_grams long, delta_micronats long",
         _score,
-    ).withColumnRenamed("id", id_col)
+    ).withColumnRenamed("id", "doc_id")
     avg = F.when(
         F.col("n_grams") > 0,
         F.round(F.col("delta_micronats") / F.col("n_grams")).cast("long"),
     )
     return out.select(
-        id_col, "n_grams", "delta_micronats", avg.alias("avg_delta_micro")
+        "doc_id", "n_grams", "delta_micronats", avg.alias("avg_delta_micro")
     )
 
 
-def moore_lewis_rows(
-    texts: list,
-    in_domain_ids: set,
-    top_k: int = 4096,
-) -> list:
+def moore_lewis_rows(texts: list, in_domain_ids: set) -> list:
     """Pure twin of moore_lewis_scores. texts = [(id, text), ...]."""
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -259,7 +245,7 @@ def moore_lewis_rows(
             c.update(trigrams(t or ""))
         total, v = sum(c.values()), len(c)
         denom = total + v + 1
-        top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
+        top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:4096]
         tb = {g: round(-math.log((n + 1) / denom) * MICRO) for g, n in top}
         return tb, round(-math.log(1 / denom) * MICRO)
 

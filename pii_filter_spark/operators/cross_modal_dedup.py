@@ -33,47 +33,39 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def caption_digest_edges(
-    df: DataFrame,
-    caption_col: str = "caption",
-    id_col: str = "image_id",
-) -> DataFrame:
-    """(id_a, id_b) min-id star per normalized-caption digest."""
+def caption_digest_edges(df: DataFrame) -> DataFrame:
+    """(id_a, id_b) min-id star of `image_id`s per normalized-caption
+    digest."""
     from .ccnet_normalize import normalize_expr
 
     keyed = df.select(
-        F.col(id_col), F.md5(normalize_expr(F.col(caption_col))).alias("_ck")
+        F.col("image_id"), F.md5(normalize_expr(F.col("caption"))).alias("_ck")
     )
     w = Window.partitionBy("_ck")
     return (
-        keyed.withColumn("_hub", F.min(id_col).over(w))
-        .where(F.col(id_col) != F.col("_hub"))
-        .select(F.col("_hub").alias("id_a"), F.col(id_col).alias("id_b"))
+        keyed.withColumn("_hub", F.min("image_id").over(w))
+        .where(F.col("image_id") != F.col("_hub"))
+        .select(F.col("_hub").alias("id_a"), F.col("image_id").alias("id_b"))
     )
 
 
-def cross_modal_dedup(
-    df: DataFrame,
-    caption_col: str = "caption",
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    max_hamming: int = 7,
-) -> DataFrame:
-    """(image_id, cluster_id, is_survivor) over text ∪ image edges."""
+def cross_modal_dedup(df: DataFrame) -> DataFrame:
+    """(image_id, cluster_id, is_survivor) over text ∪ image edges of an
+    (image_id, caption, bytes) frame."""
     from .components import dedup_clusters
     from .dedup import hamming_near_pairs
     from .image_stage import compute_phash
 
-    text_edges = caption_digest_edges(df, caption_col, id_col)
-    hashes = compute_phash(df, id_col=id_col, bytes_col=bytes_col).where(
+    text_edges = caption_digest_edges(df)
+    hashes = compute_phash(df).where(
         F.col("pixel_phash").isNotNull()
     )
     image_edges = hamming_near_pairs(
         hashes,
         hash_col="pixel_phash",
-        id_col=id_col,
-        max_hamming=max_hamming,
+        id_col="image_id",
+        max_hamming=7,
         chunks=8,  # pigeonhole-exact recall at <= 7 bits
     ).select("id_a", "id_b")
     edges = text_edges.unionByName(image_edges)
-    return dedup_clusters(df, edges, id_col=id_col)
+    return dedup_clusters(df, edges, id_col="image_id")

@@ -213,10 +213,10 @@ def _bucket_pairs(
 # exact + by-key
 # --------------------------------------------------------------------------
 
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id row per normalized-text digest."""
-    keyed = df.withColumn("_dk", F.md5(_normalize_expr(F.col(text_col))))
-    return dedup_by_key(keyed, "_dk", id_col, salt_buckets=8).drop("_dk")
+def dedup_exact(df: DataFrame) -> DataFrame:
+    """Keep the min-`doc_id` row per normalized-`text` digest."""
+    keyed = df.withColumn("_dk", F.md5(_normalize_expr(F.col("text"))))
+    return dedup_by_key(keyed, "_dk", "doc_id", salt_buckets=8).drop("_dk")
 
 
 def dedup_by_key(
@@ -290,37 +290,26 @@ def minhash_sig(
     return hv.min(axis=1).tolist()
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_k: int = 5,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, sig array<long>) — one vectorized pandas UDF, O(shingles x H) numpy."""
-    a, b = _minhash_params(num_hashes, seed)
+def minhash_signatures(df: DataFrame, num_hashes: int = 64) -> DataFrame:
+    """(doc_id, sig array<long>) over `text`, 5-char shingles, seed 7 —
+    one vectorized pandas UDF, O(shingles x H) numpy."""
+    a, b = _minhash_params(num_hashes)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sig(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [minhash_sig(t, a, b, num_hashes, shingle_k) for t in texts]
-        )
+        return pd.Series([minhash_sig(t, a, b, num_hashes, 5) for t in texts])
 
-    return df.select(id_col, _sig(F.col(text_col)).alias("sig"))
+    return df.select("doc_id", _sig(F.col("text")).alias("sig"))
 
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 64,
     bands: int = 16,
-    shingle_k: int = 5,
     threshold: float = 0.7,
-    seed: int = 7,
 ) -> DataFrame:
-    """Near-duplicate candidate pairs (id_a < id_b, est_jaccard >= threshold).
+    """Near-duplicate candidate pairs (id_a < id_b, est_jaccard >= threshold)
+    among the `text`s of a (doc_id, text) frame.
 
     Plan shape: sig UDF (evaluated ONCE) → degenerate-signature filter →
     explode bands → groupBy (band, bucket) collect_list (one shuffle,
@@ -343,13 +332,13 @@ def minhash_lsh_pairs(
     # plan). trim(text) != '' is the exact condition minhash_sig zeroes
     # on (space-trim; rarer all-zero sigs, e.g. newline-only docs, pass
     # through identically in Spark and oracle and are bucket-capped).
-    df = df.where(F.trim(F.col(text_col)) != "")
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k, seed)
+    df = df.where(F.trim(F.col("text")) != "")
+    sigs = minhash_signatures(df, num_hashes)
     # the band keys are not carried in the member struct: only the
     # banding needs them, and they'd add 128 B/member to the shuffle
     members = _bucket_members(
         sigs,
-        F.struct(F.col(id_col).alias("id"), F.col("sig")),
+        F.struct(F.col("doc_id").alias("id"), F.col("sig")),
         _band_keys("sig", bands, num_hashes // bands),
     )
 
@@ -379,27 +368,19 @@ def minhash_lsh_pairs(
     )
 
 
-def lsh_bucket_stats(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-    seed: int = 7,
-) -> DataFrame:
-    """Bucket-size distribution of the minhash banding — the diagnostic a
-    corpus operator runs BEFORE a 100-TB dedup pass to check the bucket
-    cap and predict candidate-pair volume. One row per
+def lsh_bucket_stats(df: DataFrame, bands: int = 16) -> DataFrame:
+    """Bucket-size distribution of the 64-hash minhash banding of `text`
+    — the diagnostic a corpus operator runs BEFORE a 100-TB dedup pass to
+    check the bucket cap and predict candidate-pair volume. One row per
     bucket-size value: (bucket_size, n_buckets, candidate_pairs), where
     candidate_pairs = n_buckets * size*(size-1)/2. Total candidate volume
     is sum(candidate_pairs); any size near DEFAULT_MAX_BUCKET signals
     boilerplate families that will take the star reroute."""
-    df = df.where(F.trim(F.col(text_col)) != "")  # see minhash_lsh_pairs
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k, seed)
+    df = df.where(F.trim(F.col("text")) != "")  # see minhash_lsh_pairs
+    sigs = minhash_signatures(df)
     banded = sigs.select(
         # outer: see _bucket_members
-        F.posexplode_outer(_band_keys("sig", bands, num_hashes // bands))
+        F.posexplode_outer(_band_keys("sig", bands, 64 // bands))
         .alias("band", "bucket")
     )
     sizes = banded.groupBy("band", "bucket").agg(
@@ -452,16 +433,15 @@ def simhash64(text) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-def simhash_column(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, simhash long): 64-bit token-hash simhash, numpy bit-count."""
+def simhash_column(df: DataFrame) -> DataFrame:
+    """(doc_id, simhash long): 64-bit token-hash simhash of `text`, numpy
+    bit-count."""
 
     @F.pandas_udf(LongType())
     def _sim(texts: pd.Series) -> pd.Series:
         return pd.Series([simhash64(t) for t in texts], dtype="int64")
 
-    return df.select(id_col, _sim(F.col(text_col)).alias("simhash"))
+    return df.select("doc_id", _sim(F.col("text")).alias("simhash"))
 
 
 def hamming_near_pairs(
@@ -524,35 +504,25 @@ _POPCOUNT16 = np.array(
 )
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup text pairs by simhash — simhash_column ∘ hamming_near_pairs.
-    Empty/whitespace docs are filtered on the INPUT text (not on
-    simhash != 0: a filter referencing the UDF output gets pushed below
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs of (doc_id, text) docs by simhash —
+    simhash_column ∘ hamming_near_pairs. Empty/whitespace docs are
+    filtered on the INPUT text (not on simhash != 0: a filter referencing the UDF output gets pushed below
     the exchange and double-evaluates the UDF — see minhash_lsh_pairs);
     token-less non-empty docs (sh == 0) pass through identically in both
     engines and are bucket-capped."""
-    df = df.where(F.trim(F.col(text_col)) != "")
-    sims = simhash_column(df, text_col, id_col)
-    return hamming_near_pairs(sims, "simhash", id_col, max_hamming)
+    df = df.where(F.trim(F.col("text")) != "")
+    sims = simhash_column(df)
+    return hamming_near_pairs(sims, "simhash", "doc_id", max_hamming)
 
 
 # --------------------------------------------------------------------------
 # exact n-gram Jaccard (verifier / small-scale)
 # --------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(
-    pairs_df: DataFrame,
-    docs_df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """Exact word-n-gram Jaccard for given (id_a, id_b) candidate pairs.
+def ngram_jaccard_pairs(pairs_df: DataFrame, docs_df: DataFrame) -> DataFrame:
+    """Exact word-trigram Jaccard for given (id_a, id_b) candidate pairs
+    of (doc_id, text) docs.
 
     Plan shape: join FIRST, gram-expand after — grams exist only for
     rows that participate in a candidate pair (the verifier's whole
@@ -562,15 +532,15 @@ def ngram_jaccard_pairs(
     re-running normalize+split per sequence element inside the HOF
     lambda (the first version did exactly that — measured 5.2 s for 500
     pairs at sf0.1, now ~1 s)."""
-    toks = F.split(_normalize_expr(F.col(text_col)), " ")
-    a = docs_df.select(F.col(id_col).alias("id_a"), toks.alias("_ta"))
-    b = docs_df.select(F.col(id_col).alias("id_b"), toks.alias("_tb"))
+    toks = F.split(_normalize_expr(F.col("text")), " ")
+    a = docs_df.select(F.col("doc_id").alias("id_a"), toks.alias("_ta"))
+    b = docs_df.select(F.col("doc_id").alias("id_b"), toks.alias("_tb"))
 
     def grams(tcol):
         return F.array_distinct(
             F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(tcol) - n, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice(tcol, i + 1, n)),
+                F.sequence(F.lit(0), F.greatest(F.size(tcol) - 3, F.lit(0))),
+                lambda i: F.concat_ws(" ", F.slice(tcol, i + 1, 3)),
             )
         )
 

@@ -49,11 +49,12 @@ scan is cheaper than materializing an exploded token table.
 from __future__ import annotations
 
 import math
-from decimal import ROUND_HALF_UP, Decimal
 from typing import Dict, List, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .export_prep import half_up_int
 
 
 def _token_array(text_col: str) -> Column:
@@ -79,13 +80,6 @@ def hashed_bucket(col: Column, num_buckets: int) -> Column:
     )
 
 
-def _half_up_int(x: float) -> int:
-    """BigDecimal-style HALF_UP on the shortest-repr decimal — kept for
-    continuity with the previous F.round(…) semantics.  Parity needs only
-    "one function, evaluated once", which driver-side computation gives."""
-    return int(Decimal(repr(x)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
-
-
 def log_ratio_unats(
     ct: int, cr: int, tt: int, tr: int, num_buckets: int, alpha: float = 0.5
 ) -> int:
@@ -96,7 +90,7 @@ def log_ratio_unats(
     lr = math.log((ct + alpha) / (tt + alpha * num_buckets)) - math.log(
         (cr + alpha) / (tr + alpha * num_buckets)
     )
-    return _half_up_int(lr * 1e6)
+    return half_up_int(lr * 1e6)
 
 
 def ratio_table_rows(
@@ -131,36 +125,34 @@ def dsir_select(
     df: DataFrame,
     is_target: Column,
     *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_buckets: int = 1024,
-    alpha: float = 0.5,
     k: int = 100,
 ) -> DataFrame:
-    """Top-k raw documents by DSIR importance weight against the target
-    slice selected by `is_target`.  Returns (id_col, dsir_weight_unats),
-    deterministic under the total order (weight desc, id asc)."""
+    """Top-k raw documents by DSIR importance weight (smoothing alpha 0.5)
+    of their `text` against the target slice selected by `is_target`.
+    Returns (doc_id, dsir_weight_unats), deterministic under the total
+    order (weight desc, id asc)."""
     tok = df.select(
         is_target.alias("_tgt"),
-        F.explode(_token_array(text_col)).alias("_w"),
+        F.explode(_token_array("text")).alias("_w"),
     ).select("_tgt", hashed_bucket(F.col("_w"), num_buckets).alias("_b"))
     counts = _bucket_counts(tok)
-    lr = dict(ratio_table_rows(counts, num_buckets, alpha))
+    lr = dict(ratio_table_rows(counts, num_buckets))
     # dense bucket -> micro-nat lookup; buckets never seen in the count
     # pass cannot appear at scoring time (scoring tokens are a subset of
     # counted tokens), but get the principled (0, 0) smoothed value
     tt = sum(ct for ct, _ in counts.values())
     tr = sum(cr for _, cr in counts.values())
-    empty = log_ratio_unats(0, 0, tt, tr, num_buckets, alpha)
+    empty = log_ratio_unats(0, 0, tt, tr, num_buckets)
     ratio_arr = F.array(
         *[F.lit(int(lr.get(b, empty))) for b in range(num_buckets)]
     )  # all-literal CreateArray — constant-folds into ONE array literal
     scored = (
         df.where(~is_target)
-        .select(F.col(id_col), _token_array(text_col).alias("_toks"))
+        .select(F.col("doc_id"), _token_array("text").alias("_toks"))
         .where(F.size("_toks") > 0)
         .select(
-            id_col,
+            "doc_id",
             F.aggregate(
                 "_toks",
                 F.lit(0).cast("long"),
@@ -173,5 +165,5 @@ def dsir_select(
         )
     )
     return scored.orderBy(
-        F.desc("dsir_weight_unats"), F.asc(id_col)
+        F.desc("dsir_weight_unats"), F.asc("doc_id")
     ).limit(k)

@@ -50,26 +50,20 @@ def greedy_span_match(
     return tp, len(det), fn
 
 
-def span_f1_counts(
-    detections: DataFrame,
-    golden: DataFrame,
-    id_col: str = "doc_id",
-    type_col: str = "type",
-    start_col: str = "span_start",
-    end_col: str = "span_end",
-) -> DataFrame:
-    """Per-id (tp, fp, fn): collect_list both sides → outer join → one
-    vectorized matcher UDF over array columns."""
-    span = lambda df: F.struct(  # noqa: E731
-        F.col(type_col).alias("t"),
-        F.col(start_col).cast("long").alias("s"),
-        F.col(end_col).cast("long").alias("e"),
+def span_f1_counts(detections: DataFrame, golden: DataFrame) -> DataFrame:
+    """Per-doc_id (tp, fp, fn) over (doc_id, type, span_start, span_end)
+    spans: collect_list both sides → outer join → one vectorized matcher
+    UDF over array columns."""
+    span = F.struct(
+        F.col("type").alias("t"),
+        F.col("span_start").cast("long").alias("s"),
+        F.col("span_end").cast("long").alias("e"),
     )
-    det = detections.groupBy(F.col(id_col).alias("_id")).agg(
-        F.collect_list(span(detections)).alias("_det")
+    det = detections.groupBy(F.col("doc_id").alias("_id")).agg(
+        F.collect_list(span).alias("_det")
     )
-    gold = golden.groupBy(F.col(id_col).alias("_id")).agg(
-        F.collect_list(span(golden)).alias("_gold")
+    gold = golden.groupBy(F.col("doc_id").alias("_id")).agg(
+        F.collect_list(span).alias("_gold")
     )
 
     @pandas_udf("struct<tp: long, fp: long, fn: long>")
@@ -95,7 +89,7 @@ def span_f1_counts(
         det.join(gold, "_id", "full_outer")
         .withColumn("_m", _match(F.col("_det"), F.col("_gold")))
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.col("_m.tp").alias("tp"),
             F.col("_m.fp").alias("fp"),
             F.col("_m.fn").alias("fn"),

@@ -47,9 +47,9 @@ from typing import Dict, Iterable, List, Tuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DEFAULT_SPAN_TOKENS = 50  # Lee et al. 2022's deployed threshold
+from .quality_stage import ASCII_WS
 
-_JAVA_WS = "[ \t\n\x0b\f\r]+"  # Java \s is ASCII-only
+DEFAULT_SPAN_TOKENS = 50  # Lee et al. 2022's deployed threshold
 
 
 def _tokens_col(text_col: str):
@@ -139,7 +139,7 @@ def exact_substring_dedup(
 def _tokenize(text: str) -> List[str]:
     return [
         w
-        for w in re.sub(_JAVA_WS, " ", (text or "").strip(" ")).split(" ")
+        for w in re.sub(ASCII_WS, " ", (text or "").strip(" ")).split(" ")
         if w != ""
     ]
 

@@ -49,94 +49,77 @@ DEFAULT_BUCKETS: tuple = (
 )
 
 
-def _half_up_int(x: float) -> int:
+def half_up_int(x: float) -> int:
     """Twin of F.round(double): BigDecimal shortest-repr HALF_UP — the
     builtin round() is half-to-even and would diverge on exact .5
-    micro-log boundaries (round-3 ADVICE)."""
+    boundaries. Shared with operators/dsir.py."""
     return int(Decimal(repr(x)).quantize(Decimal(1), rounding=ROUND_HALF_UP))
 
 
 def _log_aspect_micro(w: float, h: float) -> int:
-    return _half_up_int(1e6 * math.log(w / h))
+    return half_up_int(1e6 * math.log(w / h))
 
 
-def assign_aspect_buckets(
-    df: DataFrame,
-    buckets: tuple = DEFAULT_BUCKETS,
-    w_col: str = "w",
-    h_col: str = "h",
-) -> DataFrame:
-    """Adds (bucket_idx, bucket_w, bucket_h): the bucket minimizing
-    |log(w/h) - log(bw/bh)| in integer micro-log-units, ties to the
-    lowest index. Pure Catalyst: array-literal argmin, no shuffle."""
-    la = F.round(F.log(F.col(w_col).cast("double") / F.col(h_col)) * 1e6).cast(
-        "long"
-    )
+def assign_aspect_buckets(df: DataFrame) -> DataFrame:
+    """Adds (bucket_idx, bucket_w, bucket_h): the DEFAULT_BUCKETS entry
+    minimizing |log(w/h) - log(bw/bh)| in integer micro-log-units, ties
+    to the lowest index. Pure Catalyst: array-literal argmin, no shuffle."""
+    la = F.round(F.log(F.col("w").cast("double") / F.col("h")) * 1e6).cast("long")
     cand = F.array(
         *[
             F.struct(
                 F.abs(la - F.lit(_log_aspect_micro(bw, bh))).alias("d"),
                 F.lit(i).alias("i"),
             )
-            for i, (bw, bh) in enumerate(buckets)
+            for i, (bw, bh) in enumerate(DEFAULT_BUCKETS)
         ]
     )
     idx = F.array_min(cand)["i"]
-    bw = F.element_at(F.array(*[F.lit(b[0]) for b in buckets]), idx + 1)
-    bh = F.element_at(F.array(*[F.lit(b[1]) for b in buckets]), idx + 1)
+    bw = F.element_at(F.array(*[F.lit(b[0]) for b in DEFAULT_BUCKETS]), idx + 1)
+    bh = F.element_at(F.array(*[F.lit(b[1]) for b in DEFAULT_BUCKETS]), idx + 1)
     return df.withColumns(
         {"bucket_idx": idx, "bucket_w": bw, "bucket_h": bh}
     )
 
 
-def assign_shards(
-    df: DataFrame,
-    num_shards: int,
-    id_col: str = "image_id",
-) -> DataFrame:
-    """Adds (shard_id, pos_in_shard): portable md5-prefix shard hash and
-    a 1-based position under the total order (md5 hex, id). One window
-    shuffle over a uniform key; no global sort."""
-    h = F.md5(F.col(id_col).cast("binary"))
+def assign_shards(df: DataFrame, num_shards: int) -> DataFrame:
+    """Adds (shard_id, pos_in_shard): portable md5-prefix shard hash of
+    `image_id` and a 1-based position under the total order (md5 hex,
+    image_id). One window shuffle over a uniform key; no global sort."""
+    h = F.md5(F.col("image_id").cast("binary"))
     shard = F.pmod(
         F.conv(F.substring(h, 1, 7), 16, 10).cast("long"), F.lit(num_shards)
     )
     out = df.withColumns({"shard_id": shard, "_h": h})
-    w = Window.partitionBy("shard_id").orderBy("_h", id_col)
+    w = Window.partitionBy("shard_id").orderBy("_h", "image_id")
     return out.withColumn("pos_in_shard", F.row_number().over(w)).drop("_h")
 
 
-def export_prep(
-    df: DataFrame,
-    num_shards: int = 8,
-    buckets: tuple = DEFAULT_BUCKETS,
-) -> DataFrame:
+def export_prep(df: DataFrame, num_shards: int = 8) -> DataFrame:
     """Bucketing + sharding over (image_id, w, h): the export manifest."""
-    return assign_shards(
-        assign_aspect_buckets(df, buckets), num_shards
-    ).select(
+    return assign_shards(assign_aspect_buckets(df), num_shards).select(
         "image_id", "w", "h", "bucket_idx", "bucket_w", "bucket_h",
         "shard_id", "pos_in_shard",
     )
 
 
-def export_prep_rows(rows, num_shards: int = 8, buckets: tuple = DEFAULT_BUCKETS):
+def export_prep_rows(rows, num_shards: int = 8):
     """Pure-Python twin of export_prep for the fixture oracle: same
     quantized argmin, same md5 shard hash, same (md5, id) ordering.
     `rows` is an iterable of dicts with image_id/w/h."""
     staged = []
     for r in rows:
-        la = _half_up_int(1e6 * math.log(r["w"] / r["h"]))
+        la = half_up_int(1e6 * math.log(r["w"] / r["h"]))
         d_i = min(
             (abs(la - _log_aspect_micro(bw, bh)), i)
-            for i, (bw, bh) in enumerate(buckets)
+            for i, (bw, bh) in enumerate(DEFAULT_BUCKETS)
         )
         i = d_i[1]
         hx = hashlib.md5(r["image_id"].encode()).hexdigest()
         staged.append(
             (
                 r["image_id"], r["w"], r["h"], i,
-                buckets[i][0], buckets[i][1],
+                DEFAULT_BUCKETS[i][0], DEFAULT_BUCKETS[i][1],
                 int(hx[:7], 16) % num_shards, hx,
             )
         )

@@ -84,15 +84,13 @@ def strip_html_sql(expr: str) -> str:
     return f"trim({out})"
 
 
-def html_extract(
-    df: DataFrame, html_col: str = "html", id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, text, n_lines, n_chars): extracted main text plus the two
-    cheap shape facts downstream quality rules key on. One codegen
-    projection."""
-    text = strip_html(F.col(html_col))
+def html_extract(df: DataFrame) -> DataFrame:
+    """(doc_id, text, n_lines, n_chars): main text extracted from `html`
+    plus the two cheap shape facts downstream quality rules key on. One
+    codegen projection."""
+    text = strip_html(F.col("html"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         text.alias("text"),
         (F.size(F.split(text, "\n")) ).alias("n_lines"),
         F.length(text).alias("n_chars"),

@@ -98,17 +98,15 @@ def inject_fixture_metadata(data: bytes, idx: int) -> bytes:
     return data
 
 
-def scrub_image_metadata(
-    df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
-) -> DataFrame:
+def scrub_image_metadata(df: DataFrame) -> DataFrame:
     """Per-image metadata scrub facts (see scrub_row). Projects the two
-    needed columns before the Arrow exchange so MB-scale rows outside
-    them are pruned at the scan."""
+    needed columns (image_id, bytes) before the Arrow exchange so
+    MB-scale rows outside them are pruned at the scan."""
 
     def _scrub(image_id, data):
         yield (image_id, *scrub_row(bytes(data)))
 
-    return map_rows(df, [id_col, bytes_col], META_SCHEMA, _scrub)
+    return map_rows(df, ["image_id", "bytes"], META_SCHEMA, _scrub)
 
 
 # ---------------------------------------------------------------------------
@@ -160,17 +158,15 @@ def scrub_jpeg_row(data: bytes):
     )
 
 
-def scrub_jpeg_metadata(
-    df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
-) -> DataFrame:
-    """Per-image JPEG EXIF/COM scrub facts (see scrub_jpeg_row): ONE
-    Arrow pass, bytes never shuffle, non-JPEG rows pass through
-    flagged."""
+def scrub_jpeg_metadata(df: DataFrame) -> DataFrame:
+    """Per-image JPEG EXIF/COM scrub facts of (image_id, bytes) rows (see
+    scrub_jpeg_row): ONE Arrow pass, bytes never shuffle, non-JPEG rows
+    pass through flagged."""
 
     def _scrub(image_id, data):
         yield (image_id, *scrub_jpeg_row(bytes(data)))
 
-    return map_rows(df, [id_col, bytes_col], JPEG_META_SCHEMA, _scrub)
+    return map_rows(df, ["image_id", "bytes"], JPEG_META_SCHEMA, _scrub)
 
 
 def inject_jpeg_fixture_metadata(data: bytes, idx: int) -> bytes:

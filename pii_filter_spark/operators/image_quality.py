@@ -24,8 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Default thresholds (LAION-style; tuned so the synthetic 24-64 px
-# corpus exercises every rule).
+# Thresholds (LAION-style; tuned so the synthetic 24-64 px corpus
+# exercises every rule).
 MIN_SIDE = 32          # both dimensions at least this many pixels
 MAX_ASPECT = 2.0       # max(w,h)/min(w,h)
 MIN_BYTES_PER_PX = 0.02   # below: blank/degenerate content
@@ -33,14 +33,7 @@ MAX_BYTES_PER_PX = 4.0    # above: corrupt / not really an image stream
 ALLOWED_FMTS = ("png", "jpeg")
 
 
-def image_quality_filter(
-    df: DataFrame,
-    min_side: int = MIN_SIDE,
-    max_aspect: float = MAX_ASPECT,
-    min_bpp: float = MIN_BYTES_PER_PX,
-    max_bpp: float = MAX_BYTES_PER_PX,
-    fmts: tuple = ALLOWED_FMTS,
-) -> DataFrame:
+def image_quality_filter(df: DataFrame) -> DataFrame:
     """Per-image rule verdicts + keep flag, all JVM-native.
 
     Output: (image_id, w, h, fmt, aspect, bytes_per_px, size_ok,
@@ -61,14 +54,14 @@ def image_quality_filter(
         ~degenerate,
         F.try_divide(F.length("bytes"), F.col("w") * F.col("h") * F.lit(3)),
     )
-    size_ok = ~degenerate & (F.col("w") >= min_side) & (F.col("h") >= min_side)
+    size_ok = ~degenerate & (F.col("w") >= MIN_SIDE) & (F.col("h") >= MIN_SIDE)
     aspect_ok = F.when(degenerate, F.lit(False)).otherwise(
-        aspect <= F.lit(float(max_aspect))
+        aspect <= F.lit(float(MAX_ASPECT))
     )
     density_ok = F.when(degenerate, F.lit(False)).otherwise(
-        (bpp >= F.lit(float(min_bpp))) & (bpp <= F.lit(float(max_bpp)))
+        (bpp >= F.lit(float(MIN_BYTES_PER_PX))) & (bpp <= F.lit(float(MAX_BYTES_PER_PX)))
     )
-    fmt_ok = F.col("fmt").isin(*fmts)
+    fmt_ok = F.col("fmt").isin(*ALLOWED_FMTS)
     return df.select(
         "image_id", "w", "h", "fmt",
         F.round(aspect, 4).alias("aspect"),
@@ -81,31 +74,20 @@ def image_quality_filter(
     )
 
 
-def image_quality_row(
-    image_id: str,
-    w: int,
-    h: int,
-    fmt: str,
-    n_bytes: int,
-    min_side: int = MIN_SIDE,
-    max_aspect: float = MAX_ASPECT,
-    min_bpp: float = MIN_BYTES_PER_PX,
-    max_bpp: float = MAX_BYTES_PER_PX,
-    fmts: tuple = ALLOWED_FMTS,
-):
+def image_quality_row(image_id: str, w: int, h: int, fmt: str, n_bytes: int):
     """Pure-Python twin of image_quality_filter for the fixture oracle
     (same unrounded comparisons, same reported rounding)."""
     from ..oracle_support import _round_like_spark
 
     if w <= 0 or h <= 0:  # degenerate dims: explicit drop, null diagnostics
         return (image_id, w, h, fmt, None, None, False, False, False,
-                fmt in fmts, False)
+                fmt in ALLOWED_FMTS, False)
     aspect = max(w, h) / min(w, h)
     bpp = n_bytes / (w * h * 3)
-    size_ok = w >= min_side and h >= min_side
-    aspect_ok = aspect <= max_aspect
-    density_ok = min_bpp <= bpp <= max_bpp
-    fmt_ok = fmt in fmts
+    size_ok = w >= MIN_SIDE and h >= MIN_SIDE
+    aspect_ok = aspect <= MAX_ASPECT
+    density_ok = MIN_BYTES_PER_PX <= bpp <= MAX_BYTES_PER_PX
+    fmt_ok = fmt in ALLOWED_FMTS
     return (
         image_id, w, h, fmt,
         _round_like_spark(aspect, 4),

@@ -47,14 +47,8 @@ def sharpness_row(data: bytes):
     return laplacian_var(px), gray_entropy(px)
 
 
-def blur_variants(
-    df: DataFrame,
-    id_suffix: str = "~blur",
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    k: int = 7,
-) -> DataFrame:
-    """Box-blurred LOSSLESS (PNG) twins with suffixed ids — the
+def blur_variants(df: DataFrame) -> DataFrame:
+    """7-px box-blurred LOSSLESS (PNG) twins with "~blur"-suffixed ids — the
     deterministic stand-in for the blurred thumbnails and bad upscales a
     web corpus contains (PNG so the blurred pixels, and therefore the
     metrics, are exact in any engine)."""
@@ -63,14 +57,12 @@ def blur_variants(
 
     def _re(image_id, data):
         try:
-            out = encode_image(box_blur(decode_image(bytes(data)), k), "png")
+            out = encode_image(box_blur(decode_image(bytes(data))), "png")
         except ValueError:
             return
-        yield image_id + id_suffix, out
+        yield image_id + "~blur", out
 
-    return map_rows(
-        df, [id_col, bytes_col], f"{id_col} string, {bytes_col} binary", _re
-    )
+    return map_rows(df, ["image_id", "bytes"], "image_id string, bytes binary", _re)
 
 
 def flat_placeholder_rows():
@@ -86,15 +78,10 @@ def flat_placeholder_rows():
     ]
 
 
-def image_sharpness(
-    df: DataFrame,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    lapvar_min: float = LAPVAR_MIN,
-    entropy_min: float = ENTROPY_MIN,
-) -> DataFrame:
+def image_sharpness(df: DataFrame) -> DataFrame:
     """(image_id, lap_var, entropy, keep): one decode pass, keep is a
-    codegen predicate over the two metrics."""
+    codegen predicate over the two metrics against LAPVAR_MIN and
+    ENTROPY_MIN."""
 
     def _score(image_id, data):
         try:
@@ -103,14 +90,14 @@ def image_sharpness(
             lv = ent = None
         yield image_id, lv, ent
 
-    scored = map_rows(df, [id_col, bytes_col], _SCHEMA, _score)
+    scored = map_rows(df, ["image_id", "bytes"], _SCHEMA, _score)
     return scored.select(
         "image_id",
         "lap_var",
         "entropy",
         (
             F.col("lap_var").isNotNull()
-            & (F.col("lap_var") >= lapvar_min)
-            & (F.col("entropy") >= entropy_min)
+            & (F.col("lap_var") >= LAPVAR_MIN)
+            & (F.col("entropy") >= ENTROPY_MIN)
         ).alias("keep"),
     )

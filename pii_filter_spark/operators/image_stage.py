@@ -65,9 +65,9 @@ def verify_images(df: DataFrame) -> DataFrame:
     )
 
 
-def image_features(df: DataFrame, thumb_size: int = 8) -> DataFrame:
+def image_features(df: DataFrame) -> DataFrame:
     """Deterministic feature extraction: channel means, gray std, and a
-    nearest-neighbor thumbnail (flattened gray thumb_size x thumb_size).
+    nearest-neighbor thumbnail (flattened gray 8 x 8).
     This is the feature/resize plumbing a real CLIP/embedding stage would
     occupy; the features themselves are deterministic stand-ins."""
 
@@ -79,8 +79,8 @@ def image_features(df: DataFrame, thumb_size: int = 8) -> DataFrame:
             return
         gray = px.mean(axis=2)
         h, w = gray.shape
-        yi = np.linspace(0, h - 1, thumb_size).round().astype(int)
-        xi = np.linspace(0, w - 1, thumb_size).round().astype(int)
+        yi = np.linspace(0, h - 1, 8).round().astype(int)
+        xi = np.linspace(0, w - 1, 8).round().astype(int)
         yield (
             image_id,
             float(px[:, :, 0].mean()),
@@ -125,10 +125,8 @@ def sample_video_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
     return map_rows(df, ["image_id", "bytes"], FRAME_SCHEMA, _sample)
 
 
-def compute_phash(
-    df: DataFrame, id_col: str = "image_id", bytes_col: str = "bytes"
-) -> DataFrame:
-    """(id, pixel_phash) — DCT pHash computed FROM decoded pixel content
+def compute_phash(df: DataFrame) -> DataFrame:
+    """(image_id, pixel_phash) — DCT pHash computed FROM decoded pixel content
     (images/phash.py), one Arrow pass; the MB-scale bytes column never
     shuffles. Decode failures yield NULL. Feeding these hashes to
     dedup.hamming_near_pairs turns phash near-dup into CONTENT near-dup
@@ -143,19 +141,13 @@ def compute_phash(
         yield image_id, ph
 
     return map_rows(
-        df, [id_col, bytes_col], f"{id_col} string, pixel_phash long", _hash
+        df, ["image_id", "bytes"], "image_id string, pixel_phash long", _hash
     )
 
 
-def reencode_variants(
-    df: DataFrame,
-    quality: int,
-    id_suffix: str = "_re",
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-) -> DataFrame:
+def reencode_variants(df: DataFrame, quality: int) -> DataFrame:
     """Lossy re-encodes of each image (decode -> jpeg at `quality`) with
-    suffixed ids — the deterministic stand-in for the re-crawled /
+    "_re"-suffixed ids — the deterministic stand-in for the re-crawled /
     re-hosted copies a web corpus contains. Undecodable rows get no
     variant."""
 
@@ -164,11 +156,9 @@ def reencode_variants(
             out = encode_image(decode_image(bytes(data)), "jpeg", quality=quality)
         except ValueError:
             return
-        yield image_id + id_suffix, out
+        yield image_id + "_re", out
 
-    return map_rows(
-        df, [id_col, bytes_col], f"{id_col} string, {bytes_col} binary", _re
-    )
+    return map_rows(df, ["image_id", "bytes"], "image_id string, bytes binary", _re)
 
 
 def resize_export_row(
@@ -207,8 +197,6 @@ def resize_to_buckets(
     buckets: tuple,
     quality: int = LOSSY_QUALITY,
     with_bytes: bool = False,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
 ) -> DataFrame:
     """Training-export resize: every image decoded, area-resampled to its
     SDXL-style aspect bucket, re-encoded as baseline JPEG — ONE Arrow
@@ -231,18 +219,16 @@ def resize_to_buckets(
         yield (image_id, *facts[:width])
 
     schema = (
-        f"{id_col} string, bucket_w int, bucket_h int, "
+        "image_id string, bucket_w int, bucket_h int, "
         "out_len long, out_md5 string"
     )
     if with_bytes:
         schema += ", out_bytes binary"
-    return map_rows(df, [id_col, bytes_col], schema, _resize)
+    return map_rows(df, ["image_id", "bytes"], schema, _resize)
 
 
-def video_middle_frame_phash(
-    df: DataFrame, id_col: str = "video_id", bytes_col: str = "bytes"
-) -> DataFrame:
-    """(id, n_frames, mid_phash): perceptual hash of each clip's MIDDLE
+def video_middle_frame_phash(df: DataFrame) -> DataFrame:
+    """(video_id, n_frames, mid_phash): perceptual hash of each clip's MIDDLE
     frame — the cheap video near-dup key (a re-encoded/re-hosted copy of
     a clip keeps its middle frame perceptually identical). One Arrow
     pass: decode MJPEG AVI (video/avi.py), pHash the frame
@@ -262,6 +248,5 @@ def video_middle_frame_phash(
         yield (video_id, *fp)
 
     return map_rows(
-        df, [id_col, bytes_col],
-        "video_id string, n_frames int, mid_phash long", _fp,
+        df, ["video_id", "bytes"], "video_id string, n_frames int, mid_phash long", _fp
     )

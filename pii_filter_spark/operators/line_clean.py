@@ -17,7 +17,7 @@ frozen):
       ( . ! ? " ) at the end.
 
   the DOCUMENT is dropped (doc_keep = false) when removed characters
-  exceed `max_removed_frac` (default 0.05, the RefinedWeb recipe) of
+  exceed MAX_REMOVED_FRAC (0.05, the RefinedWeb recipe) of
   total line characters.
 
 Everything is a single codegen'd projection: split on newline, one
@@ -55,14 +55,10 @@ def _line_removed(line: Column) -> Column:
     return counter | numeric | allcaps | fragment
 
 
-def line_clean(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_removed_frac: float = MAX_REMOVED_FRAC,
-) -> DataFrame:
-    """(id, n_lines, n_removed, removed_frac, doc_keep, text_clean)."""
-    lines = F.split(F.coalesce(F.col(text_col), F.lit("")), "\n")
+def line_clean(df: DataFrame) -> DataFrame:
+    """(doc_id, n_lines, n_removed, removed_frac, doc_keep, text_clean)
+    from `text`."""
+    lines = F.split(F.coalesce(F.col("text"), F.lit("")), "\n")
     tagged = F.transform(
         lines,
         lambda l: F.struct(
@@ -75,7 +71,7 @@ def line_clean(
     # and inlined it would be re-evaluated per consumer (measured ~4x
     # at sf0.1). CollapseProject keeps the staging projection because
     # the alias is expensive and multiply-referenced.
-    staged = df.select(F.col(id_col), tagged.alias("_tagged"))
+    staged = df.select(F.col("doc_id"), tagged.alias("_tagged"))
     tg = F.col("_tagged")
     total = F.aggregate(tg, F.lit(0.0), lambda acc, x: acc + x["n"])
     removed = F.aggregate(
@@ -86,11 +82,11 @@ def line_clean(
     frac = F.when(total > 0, removed / total).otherwise(F.lit(0.0))
     kept = F.filter(tg, lambda x: ~x["rm"])
     return staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(tg).alias("n_lines"),
         (F.size(tg) - F.size(kept)).alias("n_removed"),
         F.round(frac, 4).alias("removed_frac"),
-        (frac <= F.lit(max_removed_frac)).alias("doc_keep"),
+        (frac <= F.lit(MAX_REMOVED_FRAC)).alias("doc_keep"),
         F.array_join(
             F.transform(kept, lambda x: x["l"]), "\n"
         ).alias("text_clean"),
@@ -123,7 +119,6 @@ def _line_removed_py(line: str) -> bool:
 
 def line_clean_rows(
     rows: Iterable[Tuple[int, str]],
-    max_removed_frac: float = MAX_REMOVED_FRAC,
 ) -> List[Tuple[int, int, int, float, bool, str]]:
     """Twin of line_clean; returns the UNROUNDED frac (caller rounds)."""
     out = []
@@ -140,7 +135,7 @@ def line_clean_rows(
                 len(ls),
                 len(ls) - len(kept),
                 frac,
-                frac <= max_removed_frac,
+                frac <= MAX_REMOVED_FRAC,
                 "\n".join(kept),
             )
         )

@@ -81,34 +81,32 @@ def temperature_sample(
     df: DataFrame,
     temperature: float,
     target_rows: int,
-    source_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Rows surviving the temperature-mixed sample, with the applied
     per-source keep rate attached."""
     counts = {
         r[0]: r[1]
-        for r in df.groupBy(source_col).count().collect()
+        for r in df.groupBy("source").count().collect()
         if r[0] is not None
     }
     rates = mixture_rates(counts, temperature, target_rows)
     if not rates:
         return df.select(
-            F.col(id_col),
-            F.col(source_col),
+            F.col("doc_id"),
+            F.col("source"),
             F.lit(0.0).alias("keep_rate"),
         ).where(F.lit(False))
 
     thresh = None
     rate_col = None
     for s, (rate, t) in sorted(rates.items()):
-        cond = F.col(source_col) == F.lit(s)
+        cond = F.col("source") == F.lit(s)
         thresh = F.when(cond, F.lit(t)) if thresh is None else thresh.when(cond, F.lit(t))
         rate_col = (
             F.when(cond, F.lit(rate)) if rate_col is None else rate_col.when(cond, F.lit(rate))
         )
     return (
-        df.select(F.col(id_col), F.col(source_col))
-        .where(hash60(F.col(id_col)) < thresh)
+        df.select(F.col("doc_id"), F.col("source"))
+        .where(hash60(F.col("doc_id")) < thresh)
         .withColumn("keep_rate", rate_col)
     )

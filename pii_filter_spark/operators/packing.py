@@ -39,43 +39,37 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pack_sequences(
-    df: DataFrame,
-    seq_len: int,
-    token_col: str = "n_tokens",
-    id_col: str = "doc_id",
-    n_groups: int = 64,
-) -> DataFrame:
+def pack_sequences(df: DataFrame, seq_len: int, n_groups: int = 64) -> DataFrame:
     """Per-document packing coordinates for fixed-`seq_len` blocks.
 
-    Returns (id, n_tokens, tok_start, bin_id, bin_offset) where
+    Returns (doc_id, n_tokens, tok_start, bin_id, bin_offset) where
     tok_start is the global exclusive token offset in id order,
     bin_id = tok_start // seq_len and bin_offset = tok_start % seq_len.
     """
     if seq_len <= 0:
         raise ValueError("seq_len must be > 0")
     bounds = df.agg(
-        F.min(id_col).alias("lo"), F.max(id_col).alias("hi")
+        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
     ).collect()[0]
     if bounds["lo"] is None:
         return df.sparkSession.createDataFrame(
             [],
-            f"{id_col} long, {token_col} long, tok_start long, "
+            "doc_id long, n_tokens long, tok_start long, "
             "bin_id long, bin_offset long",
         )
     lo, hi = int(bounds["lo"]), int(bounds["hi"])
     span = max(1, (hi - lo + n_groups) // n_groups)
 
-    grp = F.floor((F.col(id_col) - F.lit(lo)) / F.lit(span)).alias("grp")
+    grp = F.floor((F.col("doc_id") - F.lit(lo)) / F.lit(span)).alias("grp")
     base = df.select(
-        F.col(id_col), F.col(token_col).cast("long").alias(token_col), grp
+        F.col("doc_id"), F.col("n_tokens").cast("long").alias("n_tokens"), grp
     )
 
     # phase 1: per-group totals -> driver exclusive prefix (tiny).
     totals = {
         int(r["grp"]): int(r["tot"])
         for r in base.groupBy("grp")
-        .agg(F.sum(token_col).alias("tot"))
+        .agg(F.sum("n_tokens").alias("tot"))
         .collect()
     }
     offsets, running = {}, 0
@@ -95,14 +89,14 @@ def pack_sequences(
     # phase 2: bounded per-group window for the local exclusive cumsum.
     w = (
         Window.partitionBy("grp")
-        .orderBy(id_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     start = (
-        F.coalesce(F.sum(token_col).over(w), F.lit(0)) + grp_base
+        F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) + grp_base
     ).alias("tok_start")
     return (
-        base.select(F.col(id_col), F.col(token_col), start)
+        base.select(F.col("doc_id"), F.col("n_tokens"), start)
         # `div` is exact integral division — a double-typed `/` would
         # round above 2^53 token offsets, reachable at corpus scale.
         .withColumn("bin_id", F.expr(f"tok_start div {int(seq_len)}"))

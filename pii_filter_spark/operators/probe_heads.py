@@ -82,19 +82,15 @@ def _map_scores(sims: np.ndarray) -> Tuple[int, int]:
     return int(np.rint(aes * MICRO)), int(np.rint(nsfw * MICRO))
 
 
-def probe_scores(
-    df: DataFrame,
-    heads: Dict[str, np.ndarray] | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, aes_micro, nsfw_micro, keep) — one Arrow pass, no shuffle.
+def probe_scores(df: DataFrame, heads: Dict[str, np.ndarray] | None = None) -> DataFrame:
+    """(vec_id, aes_micro, nsfw_micro, keep) from `embedding` — one Arrow
+    pass, no shuffle.
 
     keep = aes_micro >= AES_KEEP_MICRO AND nsfw_micro < NSFW_MAX_MICRO,
     evaluated as a codegen'd projection over the UDF output.
     """
     if heads is None:
-        dim = len(df.select(vec_col).first()[0])
+        dim = len(df.select("embedding").first()[0])
         heads = default_heads(dim)
     mat = np.stack(
         [np.asarray(heads[n], dtype=np.float64) for n in ("aesthetic", "nsfw")]
@@ -108,22 +104,22 @@ def probe_scores(
                 continue
             aes = np.empty(len(pdf), dtype=np.int64)
             nsf = np.empty(len(pdf), dtype=np.int64)
-            for j, v in enumerate(pdf[vec_col]):
+            for j, v in enumerate(pdf["embedding"]):
                 a = np.asarray(v, dtype=np.float64)
                 n = np.linalg.norm(a) or 1.0
                 # per-row gemv, not a batched gemm (see module doc)
                 sims = (a / n) @ hm.T
                 aes[j], nsf[j] = _map_scores(sims)
             yield pd.DataFrame(
-                {"id": pdf[id_col].values, "aes_micro": aes, "nsfw_micro": nsf}
+                {"id": pdf["vec_id"].values, "aes_micro": aes, "nsfw_micro": nsf}
             )
 
-    dtype = dict(df.dtypes)[id_col]
-    out = df.select(id_col, vec_col).mapInPandas(
+    dtype = dict(df.dtypes)["vec_id"]
+    out = df.select("vec_id", "embedding").mapInPandas(
         _score, schema=f"id {dtype}, aes_micro long, nsfw_micro long"
     )
     return out.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("vec_id"),
         "aes_micro",
         "nsfw_micro",
         (

@@ -32,13 +32,8 @@ from pyspark.sql import functions as F
 MICRO = 1_000_000
 
 
-def prototypicality_scores(
-    df: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, ivf_cluster, proto_micro): nearest-centroid id and the
+def prototypicality_scores(df: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """(vec_id, ivf_cluster, proto_micro): nearest-centroid id and the
     cosine to that centroid in integer micro-units. One Arrow pass."""
     b_cent = df.sparkSession.sparkContext.broadcast(
         np.asarray(centroids, dtype=np.float64)
@@ -57,7 +52,7 @@ def prototypicality_scores(
             # twin's, row by row, whatever the batch layout.
             clusters = np.empty(len(pdf), dtype=np.int64)
             micros = np.empty(len(pdf), dtype=np.int64)
-            for j, v in enumerate(pdf[vec_col]):
+            for j, v in enumerate(pdf["embedding"]):
                 a = np.asarray(v, dtype=np.float64)
                 n = np.linalg.norm(a) or 1.0
                 sims = (a / n) @ cent.T
@@ -66,38 +61,34 @@ def prototypicality_scores(
                 micros[j] = int(np.rint(sims[c] * MICRO))
             yield pd.DataFrame(
                 {
-                    "id": pdf[id_col].values,
+                    "id": pdf["vec_id"].values,
                     "ivf_cluster": clusters,
                     "proto_micro": micros,
                 }
             )
 
-    dtype = dict(df.dtypes)[id_col]
-    out = df.select(id_col, vec_col).mapInPandas(
+    dtype = dict(df.dtypes)["vec_id"]
+    out = df.select("vec_id", "embedding").mapInPandas(
         _score, schema=f"id {dtype}, ivf_cluster long, proto_micro long"
     )
-    return out.withColumnRenamed("id", id_col)
+    return out.withColumnRenamed("id", "vec_id")
 
 
-def flag_prototypes(
-    scores: DataFrame,
-    drop_frac: float = 0.1,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """(id, ivf_cluster, proto_micro, is_prototype): marks the
-    ceil(drop_frac * cluster_size) most-prototypical rows per cluster
+def flag_prototypes(scores: DataFrame) -> DataFrame:
+    """(vec_id, ivf_cluster, proto_micro, is_prototype): marks the
+    ceil(0.1 * cluster_size) most-prototypical rows per cluster
     (ties by lowest id — fully deterministic). D4 DROPS these."""
     w = Window.partitionBy("ivf_cluster").orderBy(
-        F.desc("proto_micro"), F.asc(id_col)
+        F.desc("proto_micro"), F.asc("vec_id")
     )
     wc = Window.partitionBy("ivf_cluster")
     return scores.select(
-        id_col,
+        "vec_id",
         "ivf_cluster",
         "proto_micro",
         (
             F.row_number().over(w)
-            <= F.ceil(F.count(F.lit(1)).over(wc) * F.lit(drop_frac))
+            <= F.ceil(F.count(F.lit(1)).over(wc) * F.lit(0.1))
         ).alias("is_prototype"),
     )
 

@@ -60,24 +60,25 @@ _TOKEN_RE = re.compile(r"\w+", re.UNICODE)
 
 
 @lru_cache(maxsize=1 << 20)
-def _hash_index(token: str, dim: int) -> int:
+def _hash_index(token: str) -> int:
     # Memoized: token frequencies are Zipf-distributed, so the cache
     # absorbs almost every blake2b call on a scoring pass. Pure
-    # function of (token, dim) — values (and therefore every score
+    # function of the token — values (and therefore every score
     # and the oracle twin's retraining) are bit-identical.
     h = hashlib.blake2b(token.encode("utf-8"), digest_size=8).digest()
-    return int.from_bytes(h, "little") % dim
+    return int.from_bytes(h, "little") % DIM
 
 
-def hashed_features(text: str, dim: int = DIM) -> Dict[int, float]:
-    """Mean-pooled bag of hashed unigrams + bigrams (fastText form)."""
+def hashed_features(text: str) -> Dict[int, float]:
+    """Mean-pooled bag of unigrams + bigrams hashed into DIM buckets
+    (fastText form)."""
     toks = _TOKEN_RE.findall((text or "").lower())
     counts: Dict[int, float] = {}
     for t in toks:
-        i = _hash_index(t, dim)
+        i = _hash_index(t)
         counts[i] = counts.get(i, 0) + 1
     for a, b in zip(toks, toks[1:]):
-        i = _hash_index(a + " " + b, dim)
+        i = _hash_index(a + " " + b)
         counts[i] = counts.get(i, 0) + 1
     total = float(len(toks) + max(len(toks) - 1, 0))
     if total == 0.0:
@@ -102,8 +103,8 @@ def score_features(
     return _sigmoid(acc)
 
 
-def score_text(text: str, w: Sequence[float], b: float, dim: int = DIM) -> float:
-    return score_features(hashed_features(text, dim), w, b)
+def score_text(text: str, w: Sequence[float], b: float) -> float:
+    return score_features(hashed_features(text), w, b)
 
 
 def pareto_uniform(doc_id) -> float:
@@ -112,12 +113,12 @@ def pareto_uniform(doc_id) -> float:
     return int(h[:16], 16) / float(1 << 64)
 
 
-def pareto_keep(prob: float, doc_id, alpha: float = PARETO_ALPHA) -> bool:
-    """GPT-3 rule: keep iff pareto(alpha) draw > 1 - score, with the
+def pareto_keep(prob: float, doc_id) -> bool:
+    """GPT-3 rule: keep iff pareto(PARETO_ALPHA) draw > 1 - score, with the
     draw derived deterministically from the id (inverse-CDF transform
     of the md5-uniform)."""
     u = pareto_uniform(doc_id)
-    draw = math.pow(1.0 - u, -1.0 / alpha) - 1.0
+    draw = math.pow(1.0 - u, -1.0 / PARETO_ALPHA) - 1.0
     return draw > 1.0 - prob
 
 
@@ -135,10 +136,7 @@ def distill_label(text: str) -> int:
 
 def train_quality_classifier(
     samples: List[Tuple[str, int]],
-    dim: int = DIM,
     epochs: int = 30,
-    lr: float = 4.0,
-    l2: float = 1e-4,
 ) -> Tuple[List[float], float]:
     """Full-batch logistic regression, deterministic (see module doc).
 
@@ -149,13 +147,13 @@ def train_quality_classifier(
     rule fires on 20% of docs — does not collapse to the majority
     constant.
     """
-    featurized = [(hashed_features(t, dim), float(y)) for t, y in samples]
+    featurized = [(hashed_features(t), float(y)) for t, y in samples]
     n = float(len(featurized)) or 1.0
     n_pos = float(sum(1.0 for _, y in featurized if y == 1.0))
     n_neg = n - n_pos
     w_pos = n / (2.0 * n_pos) if n_pos else 0.0
     w_neg = n / (2.0 * n_neg) if n_neg else 0.0
-    w = [0.0] * dim
+    w = [0.0] * DIM
     b = 0.0
     for _ in range(epochs):
         grad: Dict[int, float] = {}
@@ -166,51 +164,40 @@ def train_quality_classifier(
             gb += err
             for i in sorted(feats):
                 grad[i] = grad.get(i, 0.0) + err * feats[i]
+        # learning rate 4.0, L2 weight 1e-4
         for i in sorted(grad):
-            w[i] -= lr * (grad[i] / n + l2 * w[i])
-        b -= lr * (gb / n)
+            w[i] -= 4.0 * (grad[i] / n + 1e-4 * w[i])
+        b -= 4.0 * (gb / n)
     return w, b
 
 
-def training_sample(
-    df: DataFrame,
-    sample: int = 512,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> List[Tuple[str, int]]:
+def training_sample(df: DataFrame, sample: int = 512) -> List[Tuple[str, int]]:
     """Bounded driver-side sample in ascending id order (cluster-
     invariant, like train_ivf_centroids) with distilled labels."""
-    rows = df.select(id_col, text_col).orderBy(id_col).limit(sample).collect()
+    rows = df.select("doc_id", "text").orderBy("doc_id").limit(sample).collect()
     return [(r[1], distill_label(r[1])) for r in rows]
 
 
-def quality_classifier_stage(
-    df: DataFrame,
-    w: Sequence[float],
-    b: float,
-    dim: int = DIM,
-    alpha: float = PARETO_ALPHA,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, q_prob, keep_clf, keep_pareto) — one Arrow pass, no shuffle."""
-    w_list, b_f, dim_i, alpha_f = list(w), float(b), int(dim), float(alpha)
+def quality_classifier_stage(df: DataFrame, w: Sequence[float], b: float) -> DataFrame:
+    """(doc_id, q_prob, keep_clf, keep_pareto) over `text` — one Arrow
+    pass, no shuffle."""
+    w_list, b_f = list(w), float(b)
 
     @pandas_udf("struct<q_prob:double,keep_clf:boolean,keep_pareto:boolean>")
     def _clf(ids: pd.Series, texts: pd.Series) -> pd.DataFrame:
         probs, keeps, paretos = [], [], []
         for i, t in zip(ids, texts):
-            p = score_text(t, w_list, b_f, dim_i)
+            p = score_text(t, w_list, b_f)
             probs.append(p)
             keeps.append(p >= 0.5)
-            paretos.append(pareto_keep(p, i, alpha_f))
+            paretos.append(pareto_keep(p, i))
         return pd.DataFrame(
             {"q_prob": probs, "keep_clf": keeps, "keep_pareto": paretos}
         )
 
-    out = df.withColumn("_q", _clf(F.col(id_col), F.col(text_col)))
+    out = df.withColumn("_q", _clf(F.col("doc_id"), F.col("text")))
     return out.select(
-        id_col,
+        "doc_id",
         F.col("_q.q_prob").alias("q_prob"),
         F.col("_q.keep_clf").alias("keep_clf"),
         F.col("_q.keep_pareto").alias("keep_pareto"),

@@ -44,12 +44,7 @@ def _make_restore_udf(cleanup: bool):
     return _restore
 
 
-def restore_stage(
-    df: DataFrame,
-    scrubbed_col: str = "scrubbed_caption",
-    mappings_col: str = "pii_masked",
-    cleanup_labels: bool = False,
-) -> DataFrame:
+def restore_stage(df: DataFrame, cleanup_labels: bool = False) -> DataFrame:
     """Adds restored_caption + restore_ok.
 
     cleanup_labels applies the reference's duplicate-label regex pass
@@ -61,7 +56,7 @@ def restore_stage(
     time of the plain round-trip).
     """
     udf = _make_restore_udf(cleanup_labels)
-    out = df.withColumn("_r", udf(F.col(scrubbed_col), F.col(mappings_col)))
+    out = df.withColumn("_r", udf(F.col("scrubbed_caption"), F.col("pii_masked")))
     return (
         out.withColumn("restored_caption", F.col("_r.restored_caption"))
         .withColumn("restore_ok", F.col("_r.restore_ok"))

@@ -42,17 +42,15 @@ def semdedup(
     df: DataFrame,
     centroids: "np.ndarray",
     threshold: float = 0.85,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id, ivf_cluster, keep) — keep=false for every non-smallest
+    """(vec_id, ivf_cluster, keep) — keep=false for every non-smallest
     member of a semantic-duplicate component."""
-    assigned = ivf_assign(df, centroids, vec_col).select(
-        F.col(id_col), F.col(vec_col), F.col("ivf_cluster")
+    assigned = ivf_assign(df, centroids).select(
+        F.col("vec_id"), F.col("embedding"), F.col("ivf_cluster")
     )
     members = (
         assigned.select(
-            "ivf_cluster", _cosine_member(id_col, vec_col).alias("m")
+            "ivf_cluster", _cosine_member("vec_id", "embedding").alias("m")
         )
         .where(F.col("m.nrm") > 0)
         .groupBy("ivf_cluster")
@@ -63,15 +61,15 @@ def semdedup(
     dropped = (
         connected_components(pairs)
         .where(F.col("id") != F.col("component"))
-        .select(F.col("id").alias(id_col), F.lit(False).alias("_drop"))
+        .select(F.col("id").alias("vec_id"), F.lit(False).alias("_drop"))
     )
     # No broadcast hint: the dropped list is the duplicate mass, which
     # at web scale can be a large fraction of the corpus — AQE picks
     # broadcast when it is actually small.
     return (
-        assigned.join(dropped, id_col, "left")
+        assigned.join(dropped, "vec_id", "left")
         .select(
-            id_col,
+            "vec_id",
             "ivf_cluster",
             F.col("_drop").isNull().alias("keep"),
         )

@@ -19,23 +19,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-    gap_minutes: int = 30,
-) -> DataFrame:
+def sessionize(df: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Per-user gap sessionization → one row per session.
 
     Output: (user, session_idx, session_start, session_end, n_events,
     total_value). session_idx is 0-based in ts order per user; ties on
     ts break by event id for determinism.
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_s = gap_minutes * 60
-    prev_ts = F.lag(ts_col).over(w)
+    prev_ts = F.lag("ts").over(w)
     # Interval comparison keeps sub-second precision: unix_timestamp()
     # truncates to seconds, which would disagree with the fractional-epoch
     # DuckDB oracle for gaps landing in (gap, gap+1) s on microsecond
@@ -44,7 +37,7 @@ def sessionize(
     new_session = (
         prev_ts.isNull()
         | (
-            (F.col(ts_col) - prev_ts)
+            (F.col("ts") - prev_ts)
             > F.make_dt_interval(secs=F.lit(float(gap_s)))
         )
     ).cast("int")
@@ -55,11 +48,11 @@ def sessionize(
         ) - 1,
     )
     return (
-        with_idx.groupBy(user_col, "session_idx")
+        with_idx.groupBy("user_id", "session_idx")
         .agg(
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(value_col), 4).alias("total_value"),
+            F.round(F.sum("value"), 4).alias("total_value"),
         )
     )

@@ -60,15 +60,14 @@ def cosine_topk_bruteforce(
     df: DataFrame,
     query: Sequence[float],
     k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Exact cosine top-k, fully JVM-side."""
     qnorm = float(np.sqrt(np.dot(query, query)))
-    sim = _dot_expr(F.col(vec_col), query) / (_norm_expr(F.col(vec_col)) * F.lit(qnorm))
+    vec = F.col("embedding")
+    sim = _dot_expr(vec, query) / (_norm_expr(vec) * F.lit(qnorm))
     return (
-        df.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        df.select(F.col("vec_id"), sim.alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -90,8 +89,8 @@ def srp_signature_udf(dim: int, planes: int = 16, seed: int = 31):
     return _sig
 
 
-def srp_query_signature(query: Sequence[float], planes: int = 16, seed: int = 31) -> int:
-    rng = np.random.default_rng(seed)
+def srp_query_signature(query: Sequence[float], planes: int = 16) -> int:
+    rng = np.random.default_rng(31)
     mat = rng.standard_normal((len(query), planes))
     bits = (np.asarray(query, dtype=np.float64) @ mat) > 0
     return int((bits.astype(np.int64) << np.arange(planes, dtype=np.int64)).sum())
@@ -103,37 +102,31 @@ def cosine_topk_lsh(
     k: int = 10,
     planes: int = 16,
     max_flip: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 31,
 ) -> DataFrame:
     """Approximate top-k: SRP bucket filter, exact cosine on survivors."""
     dim = len(query)
-    sig_udf = srp_signature_udf(dim, planes, seed)
-    qsig = srp_query_signature(query, planes, seed)
+    sig_udf = srp_signature_udf(dim, planes)
+    qsig = srp_query_signature(query, planes)
     qnorm = float(np.sqrt(np.dot(query, query)))
-    candidates = df.withColumn("_sig", sig_udf(F.col(vec_col))).where(
+    vec = F.col("embedding")
+    candidates = df.withColumn("_sig", sig_udf(vec)).where(
         F.bit_count(F.col("_sig").bitwiseXOR(F.lit(qsig))) <= max_flip
     )
-    sim = _dot_expr(F.col(vec_col), query) / (_norm_expr(F.col(vec_col)) * F.lit(qnorm))
+    sim = _dot_expr(vec, query) / (_norm_expr(vec) * F.lit(qnorm))
     return (
-        candidates.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        candidates.select(F.col("vec_id"), sim.alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def embedding_norms(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    return df.select(F.col(id_col), _norm_expr(F.col(vec_col)).alias("l2_norm"))
+def embedding_norms(df: DataFrame) -> DataFrame:
+    return df.select(F.col("vec_id"), _norm_expr(F.col("embedding")).alias("l2_norm"))
 
 
 def cosine_near_pairs_exact(
     df: DataFrame,
     threshold: float = 0.9,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     max_rows: int = 1_000_000,
 ) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (id_a < id_b, cos_sim >= t).
@@ -148,14 +141,14 @@ def cosine_near_pairs_exact(
     bounded-side precondition is ENFORCED: more than `max_rows` rows
     raises instead of silently OOMing the driver at scale.
     """
-    probe = df.select(id_col).limit(max_rows + 1).count()
+    probe = df.select("vec_id").limit(max_rows + 1).count()
     if probe > max_rows:
         raise ValueError(
             f"cosine_near_pairs_exact: input exceeds max_rows={max_rows} "
             "(driver-collected broadcast baseline); use cosine_near_pairs_lsh "
             "for unbounded tables, or raise max_rows explicitly."
         )
-    rows = df.select(id_col, vec_col).collect()
+    rows = df.select("vec_id", "embedding").collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
     mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
@@ -168,10 +161,10 @@ def cosine_near_pairs_exact(
         for pdf in batches:
             if not len(pdf):
                 continue
-            q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
             q = q / np.linalg.norm(q, axis=1, keepdims=True)
             sims = q @ m.T
-            qid = pdf[id_col].to_numpy(dtype=np.int64)
+            qid = pdf["vec_id"].to_numpy(dtype=np.int64)
             # id_a < id_b keeps each unordered pair exactly once
             ri, ci = np.nonzero((sims >= threshold) & (qid[:, None] < idv[None, :]))
             yield pd.DataFrame(
@@ -182,7 +175,7 @@ def cosine_near_pairs_exact(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(
+    return df.select("vec_id", "embedding").mapInPandas(
         _pairs, schema="id_a long, id_b long, cos_sim double"
     )
 
@@ -263,28 +256,20 @@ def cosine_pairs_from_buckets(members: DataFrame, threshold: float) -> DataFrame
     )
 
 
-def train_ivf_centroids(
-    df: DataFrame,
-    k: int = 16,
-    sample: int = 2048,
-    iters: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 17,
-) -> np.ndarray:
+def train_ivf_centroids(df: DataFrame, k: int = 16, iters: int = 10) -> np.ndarray:
     """Deterministic k-means coarse quantizer (IVF training).
 
-    Trains driver-side on a bounded sample — the standard IVF recipe:
-    the codebook is tiny (k × dim) and training needs one pass over a
-    sample, not the table. numpy only, fixed iteration count, seeded
-    init, and the sample is taken in `id_col` order (plain limit() picks
-    rows by partition layout), so the same data yields the same centroids
-    on any cluster."""
-    rows = df.select(id_col, vec_col).orderBy(id_col).limit(sample).collect()
+    Trains driver-side on a bounded sample of 2048 rows — the standard
+    IVF recipe: the codebook is tiny (k × dim) and training needs one
+    pass over a sample, not the table. numpy only, fixed iteration
+    count, seeded init, and the sample is taken in `vec_id` order (plain
+    limit() picks rows by partition layout), so the same data yields the
+    same centroids on any cluster."""
+    rows = df.select("vec_id", "embedding").orderBy("vec_id").limit(2048).collect()
     rows = [(r[1],) for r in rows]
     x = np.stack([np.asarray(r[0], dtype=np.float64) for r in rows])
     x = x / np.linalg.norm(x, axis=1, keepdims=True)
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(17)
     cent = x[rng.choice(len(x), size=min(k, len(x)), replace=False)]
     for _ in range(iters):
         assign = np.argmax(x @ cent.T, axis=1)  # cosine on unit vectors
@@ -296,13 +281,9 @@ def train_ivf_centroids(
     return cent
 
 
-def ivf_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Adds `ivf_cluster`: nearest-centroid id per row (one numpy matmul
-    per Arrow batch). At production scale this column becomes the
+def ivf_assign(df: DataFrame, centroids: np.ndarray) -> DataFrame:
+    """Adds `ivf_cluster`: nearest-centroid id of each row's `embedding`
+    (one numpy matmul per Arrow batch). At production scale this column becomes the
     table's partition/bucket key so probes prune partitions."""
     b_cent = df.sparkSession.sparkContext.broadcast(centroids)
 
@@ -315,7 +296,7 @@ def ivf_assign(
         arr = arr / np.linalg.norm(arr, axis=1, keepdims=True)
         return pd.Series(np.argmax(arr @ cent.T, axis=1).astype(np.int64))
 
-    return df.withColumn("ivf_cluster", _assign(F.col(vec_col)))
+    return df.withColumn("ivf_cluster", _assign(F.col("embedding")))
 
 
 def cosine_topk_ivf(
@@ -324,8 +305,6 @@ def cosine_topk_ivf(
     centroids: np.ndarray,
     k: int = 10,
     nprobe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF probe: exact cosine top-k over only the `nprobe` clusters
     nearest to the query. The cluster filter is a native IN-list
@@ -335,23 +314,18 @@ def cosine_topk_ivf(
     q = q / np.linalg.norm(q)
     probes = np.argsort(-(centroids @ q))[:nprobe].tolist()
     qnorm = float(np.linalg.norm(query))
-    assigned = ivf_assign(df, centroids, vec_col)
-    sim = _dot_expr(F.col(vec_col), query) / (_norm_expr(F.col(vec_col)) * F.lit(qnorm))
+    assigned = ivf_assign(df, centroids)
+    vec = F.col("embedding")
+    sim = _dot_expr(vec, query) / (_norm_expr(vec) * F.lit(qnorm))
     return (
         assigned.where(F.col("ivf_cluster").isin(probes))
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
+        .select(F.col("vec_id"), sim.alias("cos_sim"))
+        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
         .limit(k)
     )
 
 
-def cosine_topk_batch(
-    df: DataFrame,
-    queries: "np.ndarray",
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk_batch(df: DataFrame, queries: "np.ndarray", k: int = 10) -> DataFrame:
     """Exact cosine top-k for a BATCH of query vectors (Q x D numpy) —
     the realistic retrieval shape (one driver query per probe doesn't
     scale past a handful of lookups).
@@ -375,7 +349,7 @@ def cosine_topk_batch(
     spark = df.sparkSession
     b_q = spark.sparkContext.broadcast(q)
     b_qn = spark.sparkContext.broadcast(qnorm)
-    id_type = dict(df.dtypes)[id_col]
+    id_type = dict(df.dtypes)["vec_id"]
 
     def _local_topk(batches):
         qm, qn = b_q.value, b_qn.value
@@ -386,9 +360,9 @@ def cosine_topk_batch(
             if not len(pdf):
                 continue
             vecs = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
             )
-            ids = np.array(list(pdf[id_col]))
+            ids = np.array(list(pdf["vec_id"]))
             acc = np.zeros((len(vecs), nq), dtype=np.float64)
             for c in range(dim):  # deterministic order, see docstring
                 acc += vecs[:, c][:, None] * qm[None, :, c]
@@ -416,18 +390,18 @@ def cosine_topk_batch(
             out_id.extend(best_id[qi][i] for i in order)
             out_c.extend(best_sim[qi][i] for i in order)
         yield pd.DataFrame(
-            {"query_idx": out_q, id_col: out_id, "cos_sim": out_c}
+            {"query_idx": out_q, "vec_id": out_id, "cos_sim": out_c}
         )
 
-    local = df.select(id_col, vec_col).mapInPandas(
+    local = df.select("vec_id", "embedding").mapInPandas(
         _local_topk,
-        schema=f"query_idx int, {id_col} {id_type}, cos_sim double",
+        schema=f"query_idx int, vec_id {id_type}, cos_sim double",
     )
     w = Window.partitionBy("query_idx").orderBy(
-        F.desc("cos_sim"), F.asc(id_col)
+        F.desc("cos_sim"), F.asc("vec_id")
     )
     return (
         local.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_idx", id_col, "cos_sim", "rank")
+        .select("query_idx", "vec_id", "cos_sim", "rank")
     )

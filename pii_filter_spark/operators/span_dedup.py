@@ -50,19 +50,15 @@ def sentences_expr(text_col: str):
     return F.expr(_SENTS_EXPR.format(col=text_col, re=SENTENCE_RE))
 
 
-def span_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    span_sentences: int = 3,
-) -> DataFrame:
-    """(id, n_sentences, n_removed, text_dedup) with C4 span-dedup applied."""
+def span_dedup(df: DataFrame, span_sentences: int = 3) -> DataFrame:
+    """(doc_id, n_sentences, n_removed, text_dedup) with C4 span-dedup
+    applied to `text`."""
     if span_sentences < 2:
         raise ValueError("span_sentences must be >= 2")
 
     sents = df.select(
-        F.col(id_col).alias("_id"),
-        F.posexplode_outer(sentences_expr(text_col)).alias(
+        F.col("doc_id").alias("_id"),
+        F.posexplode_outer(sentences_expr("text")).alias(
             "sent_idx", "sentence"
         ),
     )
@@ -114,5 +110,5 @@ def span_dedup(
                 " ",
             ).alias("text_dedup"),
         )
-        .withColumnRenamed("_id", id_col)
+        .withColumnRenamed("_id", "doc_id")
     )

@@ -29,32 +29,27 @@ DEFAULT_SPLITS: List[Tuple[str, int]] = [
 ]
 
 
-def split_bucket(id_col: Column, denom: int = 10000) -> Column:
-    """Portable md5-prefix bucket in [0, denom)."""
+def split_bucket(id_col: Column) -> Column:
+    """Portable md5-prefix bucket in [0, 10000)."""
     h = F.md5(id_col.cast("string"))
     return F.pmod(
-        F.conv(F.substring(h, 1, 7), 16, 10).cast("long"), F.lit(denom)
+        F.conv(F.substring(h, 1, 7), 16, 10).cast("long"), F.lit(10000)
     )
 
 
-def assign_splits(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    splits: List[Tuple[str, int]] = None,
-    denom: int = 10000,
-) -> DataFrame:
+def assign_splits(df: DataFrame, splits: List[Tuple[str, int]] = None) -> DataFrame:
     """Adds (split_bucket, split): hash-stable split membership.
 
     `splits` is a list of (name, cumulative_threshold) ending at
-    `denom`; a row belongs to the first split whose threshold exceeds
+    10000; a row belongs to the first split whose threshold exceeds
     its bucket. Membership never changes across runs/partitionings.
     """
     splits = splits or DEFAULT_SPLITS
-    if splits[-1][1] != denom:
-        raise ValueError("last split threshold must equal denom")
+    if splits[-1][1] != 10000:
+        raise ValueError("last split threshold must equal 10000")
     if any(b[1] <= a[1] for a, b in zip(splits, splits[1:])):
         raise ValueError("split thresholds must be strictly increasing")
-    b = split_bucket(F.col(id_col), denom)
+    b = split_bucket(F.col("doc_id"))
     expr = None
     for name, cum in splits[:-1]:
         cond = b < F.lit(cum)

@@ -18,25 +18,24 @@ from pyspark.sql import functions as F
 BPE_TOKEN_RE = r"[\p{L}\p{N}_]+|[^\p{L}\p{N}_\s]"
 
 
-def token_counts(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, ws_tokens, bpe_tokens, n_chars) — all native expressions."""
-    c = F.col(text_col)
+def token_counts(df: DataFrame) -> DataFrame:
+    """(doc_id, ws_tokens, bpe_tokens, n_chars) of `text` — all native
+    expressions."""
+    c = F.col("text")
     trimmed = F.trim(c)
     ws = F.when(
         c.isNotNull() & (trimmed != ""), F.size(F.split(trimmed, r"\s+"))
     ).otherwise(F.lit(0))
     bpe = F.when(c.isNotNull(), F.regexp_count(c, F.lit(BPE_TOKEN_RE))).otherwise(0)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         ws.alias("ws_tokens"),
         bpe.alias("bpe_tokens"),
         F.length(F.coalesce(c, F.lit(""))).alias("n_chars"),
     )
 
 
-def bpe_exact_counts(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bpe_exact_counts(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, n_bpe_tokens) — tokenizer-EXACT byte-level BPE counts under
     the frozen vocab (core/bpe.py), one Arrow-batched pandas UDF. This is
     the count training-export stages must use (pack_sequences boundaries,
@@ -50,13 +49,12 @@ def bpe_exact_counts(
 
         return pd.Series(bpe_token_counts_batch(s), dtype="int64")
 
-    return df.select(F.col(id_col), _bpe(F.col(text_col)).alias("n_bpe_tokens"))
+    return df.select(F.col(id_col), _bpe(F.col("text")).alias("n_bpe_tokens"))
 
 
 def bpe_counts_from_merges_txt(
     df: DataFrame,
     merges_txt: str,
-    text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
     """(id, n_bpe_tokens) under an ARBITRARY released-format vocabulary:
@@ -79,48 +77,44 @@ def bpe_counts_from_merges_txt(
             holder.append(ByteBPE.from_merges_txt(merges_txt))
         return pd.Series(holder[0].counts_batch(s), dtype="int64")
 
-    return df.select(F.col(id_col), _bpe(F.col(text_col)).alias("n_bpe_tokens"))
+    return df.select(F.col(id_col), _bpe(F.col("text")).alias("n_bpe_tokens"))
 
 
-def fingerprints(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def fingerprints(df: DataFrame) -> DataFrame:
     """Document fingerprints: md5 digest of whitespace-normalized lowercase
     text (exact-dup key) + a 64-bit xxhash (cheap join key)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.coalesce(F.col(text_col), F.lit("")))),
+    norm = F.regexp_replace(F.lower(F.trim(F.coalesce(F.col("text"), F.lit("")))),
                             r"\s+", " ")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.md5(norm).alias("fingerprint_md5"),
         F.xxhash64(norm).alias("fingerprint_64"),
     )
 
 
-def language_id(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, lang_detected): the caption stage's `lang` layer."""
+def language_id(df: DataFrame) -> DataFrame:
+    """(doc_id, lang_detected): the caption stage's `lang` layer over
+    `text`."""
     from .fused import caption_stage
 
-    return caption_stage(df, ["lang"], text_col).select(
-        F.col(id_col), F.col("lang").alias("lang_detected")
+    return caption_stage(df, ["lang"], "text").select(
+        F.col("doc_id"), F.col("lang").alias("lang_detected")
     )
 
 
-def perplexity_scores(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(id, ppl): char-trigram perplexity, rounded to 4 decimals."""
+def perplexity_scores(df: DataFrame) -> DataFrame:
+    """(doc_id, ppl): char-trigram perplexity of `text`, rounded to 4
+    decimals."""
     from .fused import caption_stage
 
-    return caption_stage(df, ["ppl"], text_col).select(
-        F.col(id_col), F.round("ppl", 4).alias("ppl")
+    return caption_stage(df, ["ppl"], "text").select(
+        F.col("doc_id"), F.round("ppl", 4).alias("ppl")
     )
 
 
-def stratified_take(
-    df: DataFrame,
-    stratum_col: str,
-    n_per_stratum: int,
-    id_col: str = "doc_id",
-    salt_buckets: int = 32,
-) -> DataFrame:
+def stratified_take(df: DataFrame, stratum_col: str, n_per_stratum: int) -> DataFrame:
     """Deterministic stratified subsample: the first n rows per stratum
-    in md5(id)-order — the data-mixing/curation shape (cap each language
+    in md5(doc_id)-order — the data-mixing/curation shape (cap each language
     / source / quality bucket at a quota) with cluster-invariant row
     selection. md5 over the stringified id gives an order-stable,
     engine-portable pseudo-random permutation (same expression exists in
@@ -129,31 +123,29 @@ def stratified_take(
     TWO-PHASE window for skew: strata are often few and huge (5 language
     values over 10^12 rows), so a single window per stratum would push a
     whole language through one task. Phase 1 takes the local top-n per
-    (stratum, salt(id)) — salt_buckets way spread, each partition
-    bounded; phase 2 re-ranks only the ≤ n*salt_buckets survivors per
+    (stratum, salt(id)) — 32-way spread, each partition bounded;
+    phase 2 re-ranks only the ≤ n*32 survivors per
     stratum. Selection is by a TOTAL order (md5, id), so the two-phase
     result is row-identical to the single-window form: the global top-n
     of a stratum is contained in the union of its per-salt top-n."""
     from pyspark.sql import Window
 
-    h = F.md5(F.col(id_col).cast("string"))
-    salt = F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets))
-    w1 = Window.partitionBy(stratum_col, salt).orderBy(h, id_col)
+    h = F.md5(F.col("doc_id").cast("string"))
+    salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32))
+    w1 = Window.partitionBy(stratum_col, salt).orderBy(h, "doc_id")
     local = (
         df.withColumn("_lrn", F.row_number().over(w1))
         .where(F.col("_lrn") <= n_per_stratum)
     )
-    w2 = Window.partitionBy(stratum_col).orderBy(h, id_col)
+    w2 = Window.partitionBy(stratum_col).orderBy(h, "doc_id")
     return (
         local.withColumn("_rn", F.row_number().over(w2))
         .where(F.col("_rn") <= n_per_stratum)
-        .select(stratum_col, id_col, F.col("_rn").alias("sample_rank"))
+        .select(stratum_col, "doc_id", F.col("_rn").alias("sample_rank"))
     )
 
 
-def repetition_signals(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document (Rae et al. 2021 §A1.1
     "repetitious" filters, adapted to sentence granularity because the
     corpus rows are single-line):
@@ -171,17 +163,15 @@ def repetition_signals(
     100k-word web document. The shuffle keys on (doc, word), so hot
     words do not concentrate (doc_id spreads them), and word counting
     is strictly linear."""
-    sents_raw = F.expr(
-        f"regexp_extract_all({text_col}, '[^.!?]+[.!?]*', 0)"
-    )
+    sents_raw = F.expr("regexp_extract_all(text, '[^.!?]+[.!?]*', 0)")
     staged = df.select(
-        id_col,
+        "doc_id",
         F.filter(
             F.transform(sents_raw, lambda s: F.trim(s)), lambda s: s != ""
         ).alias("_sents"),
         # split('') yields [''] — drop empties so blank docs count 0 words
         F.filter(
-            F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: w != ""
+            F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != ""
         ).alias("_words"),
     )
     n_sent = F.size("_sents")
@@ -193,88 +183,77 @@ def repetition_signals(
         ),
     ).otherwise(F.lit(0.0))
     sent_stats = staged.select(
-        id_col,
+        "doc_id",
         n_sent.alias("n_sentences"),
         dup_frac.alias("dup_sent_frac"),
         F.size("_words").alias("_n_words"),
     )
     word_counts = (
-        staged.select(id_col, F.explode_outer("_words").alias("_w"))
+        staged.select("doc_id", F.explode_outer("_words").alias("_w"))
         .where(F.col("_w").isNotNull())
-        .groupBy(id_col, "_w")
+        .groupBy("doc_id", "_w")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.max("_c").alias("_top"))
     )
-    joined = sent_stats.join(word_counts, id_col, "left")
+    joined = sent_stats.join(word_counts, "doc_id", "left")
     top_frac = F.when(
         F.col("_n_words") > 0,
         F.round(F.col("_top").cast("double") / F.col("_n_words"), 4),
     ).otherwise(F.lit(0.0))
     return joined.select(
-        id_col,
+        "doc_id",
         "n_sentences",
         "dup_sent_frac",
         top_frac.alias("top_word_frac"),
     )
 
 
-def contamination_flags(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
-    n: int = 8,
-) -> DataFrame:
-    """Benchmark decontamination: flag documents sharing any word n-gram
-    with a benchmark/eval set (the GPT-3/PaLM data-prep recipe; n=8 is
-    the conventional window). Output: (id, contaminated boolean).
+def contamination_flags(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
+    """Benchmark decontamination: flag documents whose `text` shares any
+    word 8-gram with the `text` of a benchmark/eval set (the GPT-3/PaLM
+    data-prep recipe; 8 is the conventional window). Output: (doc_id,
+    contaminated boolean).
 
     Plan: both sides normalize identically (lower, whitespace-collapse)
     and explode to distinct n-gram rows; the benchmark side is tiny by
     definition (an eval set), so the semi-join broadcasts — each doc
     n-gram probes a hash map, no shuffle of the corpus side. Docs
-    shorter than n words cannot be contaminated. At production scale
+    shorter than 8 words cannot be contaminated. At production scale
     the benchmark n-gram set is exactly the bloom-filter build side;
     the semi-join keeps the declarative form.
     """
-    def grams(df, tcol, carry):
+    def grams(df, carry):
         toks = F.filter(
-            F.split(F.regexp_replace(F.lower(F.trim(F.col(tcol))), r"\s+", " "), " "),
+            F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "),
             lambda w: w != "",
         )
-        staged = df.select(*carry, toks.alias("_t")).where(F.size("_t") >= n)
+        staged = df.select(*carry, toks.alias("_t")).where(F.size("_t") >= 8)
         g = F.transform(
-            F.sequence(F.lit(0), F.size("_t") - n),
-            lambda i: F.concat_ws(" ", F.slice("_t", i + 1, n)),
+            F.sequence(F.lit(0), F.size("_t") - 8),
+            lambda i: F.concat_ws(" ", F.slice("_t", i + 1, 8)),
         )
         return staged.select(*carry, F.explode(F.array_distinct(g)).alias("_g"))
 
-    bench_grams = grams(benchmark, bench_text_col, []).distinct()
-    doc_grams = grams(docs, text_col, [id_col])
+    bench_grams = grams(benchmark, []).distinct()
+    doc_grams = grams(docs, ["doc_id"])
     hits = (
         doc_grams.join(F.broadcast(bench_grams), "_g", "leftsemi")
-        .select(id_col)
+        .select("doc_id")
         .distinct()
         .withColumn("contaminated", F.lit(True))
     )
     return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
+        docs.select("doc_id")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("contaminated", F.lit(False)).alias("contaminated"),
         )
     )
 
 
-def top_ngrams(
-    df: DataFrame,
-    n: int = 2,
-    k: int = 20,
-    text_col: str = "text",
-) -> DataFrame:
+def top_ngrams(df: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     """Corpus-level vocabulary stats: the k most frequent word n-grams
     with counts — the standard corpus-inspection step before choosing
     boilerplate/stop filters. Output: (ngram, cnt, rank), rank 1-based
@@ -288,7 +267,7 @@ def top_ngrams(
     from pyspark.sql import Window
 
     toks = F.filter(
-        F.split(F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "),
+        F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "),
         lambda w: w != "",
     )
     staged = df.select(toks.alias("_t")).where(F.size("_t") >= n)

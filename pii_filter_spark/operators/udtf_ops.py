@@ -37,8 +37,7 @@ class SentenceSplit:
                 yield doc_id, i, s
 
 
-def split_sentences(df: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
+def split_sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Apply the UDTF via SQL LATERAL over an arbitrary input frame."""
     spark = df.sparkSession
     spark.udtf.register("sentence_split", SentenceSplit)
@@ -46,10 +45,10 @@ def split_sentences(df: DataFrame, id_col: str = "doc_id",
     # hash() is salted per process and collision-prone mod 10k, so two
     # split_sentences calls with different column pairs could share (and
     # overwrite) one global temp view.
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", f"{id_col}__{text_col}")
+    safe = re.sub(r"[^A-Za-z0-9_]", "_", f"doc_id__{text_col}")
     view = f"_udtf_in_{safe}"
     df.createOrReplaceTempView(view)
     return spark.sql(
         f"SELECT s.doc_id, s.sent_idx, s.sentence "
-        f"FROM {view}, LATERAL sentence_split({id_col}, {text_col}) s"
+        f"FROM {view}, LATERAL sentence_split(doc_id, {text_col}) s"
     )

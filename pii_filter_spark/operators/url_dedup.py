@@ -59,18 +59,14 @@ def normalize_url_sql(expr: str) -> str:
     return out
 
 
-def url_dedup(
-    df: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, url, url_norm, keep): keep marks the minimum-id row per
+def url_dedup(df: DataFrame) -> DataFrame:
+    """(doc_id, url, url_norm, keep): keep marks the minimum-id row per
     normalized URL. One window shuffle; groups are crawl-dup sized."""
-    out = df.withColumn("url_norm", normalize_url(F.col(url_col)))
-    w = Window.partitionBy("url_norm").orderBy(id_col)
+    out = df.withColumn("url_norm", normalize_url(F.col("url")))
+    w = Window.partitionBy("url_norm").orderBy("doc_id")
     return out.select(
-        F.col(id_col),
-        F.col(url_col),
+        F.col("doc_id"),
+        F.col("url"),
         "url_norm",
         (F.row_number().over(w) == 1).alias("keep"),
     )

@@ -30,7 +30,7 @@ broadcast-side).
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence
+from typing import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -38,8 +38,7 @@ from pyspark.sql import functions as F
 from .url_dedup import normalize_url, normalize_url_sql
 
 # Deny set at registered-domain granularity. Original demo entries (a
-# production run swaps in its curation blocklist via the parameters or
-# the DataFrame path).
+# production run swaps in its curation blocklist via the DataFrame path).
 DEFAULT_BLOCKLIST: tuple = (
     "spam-casino.biz",
     "free-lottery.win",
@@ -77,28 +76,19 @@ def _host(norm: Column) -> Column:
     return F.regexp_replace(F.regexp_extract(norm, _HOST_RE, 1), _PORT_RE, "")
 
 
-def url_filter(
-    df: DataFrame,
-    url_col: str = "url",
-    id_col: str = "doc_id",
-    blocklist: Sequence[str] = DEFAULT_BLOCKLIST,
-    curated: Sequence[str] = DEFAULT_CURATED,
-    soft_words: Mapping[str, int] = DEFAULT_SOFT_WORDS,
-    threshold: int = DEFAULT_THRESHOLD,
-    blocklist_df: DataFrame | None = None,
-) -> DataFrame:
-    """(id, url, host, domain, reason, keep): keep=true iff no rule
+def url_filter(df: DataFrame, blocklist_df: DataFrame | None = None) -> DataFrame:
+    """(doc_id, url, host, domain, reason, keep): keep=true iff no rule
     fires; reason names the first firing rule else NULL.
 
     `blocklist_df` (one column `domain`) is the production-scale path:
     a broadcast left join replaces the literal `isin`, everything else
     identical.
     """
-    norm = normalize_url(F.col(url_col))
+    norm = normalize_url(F.col("url"))
     host = _host(norm)
     out = df.select(
-        F.col(id_col),
-        F.col(url_col),
+        F.col("doc_id"),
+        F.col("url"),
         host.alias("host"),
         F.regexp_extract(host, _DOMAIN_RE, 1).alias("domain"),
         norm.alias("_norm"),
@@ -110,21 +100,21 @@ def url_filter(
         out = out.join(F.broadcast(deny), "domain", "left")
         blocked = F.coalesce(F.col("_blocked"), F.lit(False))
     else:
-        blocked = F.col("domain").isin(*blocklist)
+        blocked = F.col("domain").isin(*DEFAULT_BLOCKLIST)
     score = None
-    for word, weight in sorted(soft_words.items()):
+    for word, weight in sorted(DEFAULT_SOFT_WORDS.items()):
         term = F.when(F.col("_norm").contains(word), F.lit(weight)).otherwise(
             F.lit(0)
         )
         score = term if score is None else (score + term)
     reason = (
         F.when(blocked, F.lit("blocklist"))
-        .when(F.col("host").isin(*curated), F.lit("curated"))
-        .when(score >= F.lit(threshold), F.lit("word_score"))
+        .when(F.col("host").isin(*DEFAULT_CURATED), F.lit("curated"))
+        .when(score >= F.lit(DEFAULT_THRESHOLD), F.lit("word_score"))
     )
     return out.select(
-        id_col,
-        url_col,
+        "doc_id",
+        "url",
         "host",
         "domain",
         reason.alias("reason"),
@@ -132,13 +122,7 @@ def url_filter(
     )
 
 
-def url_filter_sql(
-    url_expr: str,
-    blocklist: Sequence[str] = DEFAULT_BLOCKLIST,
-    curated: Sequence[str] = DEFAULT_CURATED,
-    soft_words: Mapping[str, int] = DEFAULT_SOFT_WORDS,
-    threshold: int = DEFAULT_THRESHOLD,
-) -> dict:
+def url_filter_sql(url_expr: str) -> dict:
     """The same rule chain as DuckDB SQL fragments (oracle parity):
     returns {'host': ..., 'domain': ..., 'reason': ...} expressions over
     `url_expr`."""
@@ -148,15 +132,15 @@ def url_filter_sql(
         f"'{_PORT_RE}', '')"
     )
     domain = f"regexp_extract({host}, '{_DOMAIN_RE}', 1)"
-    deny = ", ".join(f"'{d}'" for d in blocklist)
-    cur = ", ".join(f"'{h}'" for h in curated)
+    deny = ", ".join(f"'{d}'" for d in DEFAULT_BLOCKLIST)
+    cur = ", ".join(f"'{h}'" for h in DEFAULT_CURATED)
     score = " + ".join(
         f"(CASE WHEN contains({norm}, '{w}') THEN {wt} ELSE 0 END)"
-        for w, wt in sorted(soft_words.items())
+        for w, wt in sorted(DEFAULT_SOFT_WORDS.items())
     )
     reason = (
         f"CASE WHEN {domain} IN ({deny}) THEN 'blocklist' "
         f"WHEN {host} IN ({cur}) THEN 'curated' "
-        f"WHEN ({score}) >= {threshold} THEN 'word_score' END"
+        f"WHEN ({score}) >= {DEFAULT_THRESHOLD} THEN 'word_score' END"
     )
     return {"host": host, "domain": domain, "reason": reason}

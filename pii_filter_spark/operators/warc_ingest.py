@@ -24,9 +24,7 @@ WARC_SCHEMA = (
 )
 
 
-def parse_warc_archives(
-    df: DataFrame, id_col: str = "archive_id", bytes_col: str = "data"
-) -> DataFrame:
+def parse_warc_archives(df: DataFrame) -> DataFrame:
     """(archive_id, rec_idx, warc_type, url, text) for every text-bearing
     record of every archive blob."""
 
@@ -34,4 +32,4 @@ def parse_warc_archives(
         for i, (wtype, uri, text) in enumerate(extract_text_records(bytes(data))):
             yield archive_id, i, wtype, uri, text
 
-    return map_rows(df, [id_col, bytes_col], WARC_SCHEMA, _parse)
+    return map_rows(df, ["archive_id", "data"], WARC_SCHEMA, _parse)

@@ -212,9 +212,9 @@ def drop_uncommitted(output_path: str, manifest: List[Dict]) -> List[Dict]:
     return [e for e in manifest if e["batch_dir"] in committed]
 
 
-def scrub_bytes_stage(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
+def scrub_bytes_stage(df: DataFrame) -> DataFrame:
     """Optional image-bytes PII writeback stage (default OFF — the
-    flagship keeps bytes out of Python entirely): rewrites the binary
+    flagship keeps bytes out of Python entirely): rewrites the `bytes`
     column with metadata stripped — PNG ancillary chunks
     (images/metadata.strip_ancillary) or JPEG APP1/APP13/COM segments
     (images/jpeg_metadata.strip_jpeg_metadata). Both strips are
@@ -236,7 +236,7 @@ def scrub_bytes_stage(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
 
         return pd.Series([one(x) for x in s])
 
-    return df.withColumn(bytes_col, _clean(F.col(bytes_col)))
+    return df.withColumn("bytes", _clean(F.col("bytes")))
 
 
 def run_pipeline(

@@ -250,8 +250,8 @@ def gen_row(seed: int, idx: int) -> dict:
     }
 
 
-def gen_pandas(n: int, seed: int = 42, start: int = 0) -> pd.DataFrame:
-    return pd.DataFrame([gen_row(seed, i) for i in range(start, start + n)])
+def gen_pandas(n: int, seed: int = 42) -> pd.DataFrame:
+    return pd.DataFrame([gen_row(seed, i) for i in range(n)])
 
 
 def build_input_table(spark, n: int, seed: int = 42, num_partitions: int = 32):

@@ -91,11 +91,11 @@ def build_warc(
     return b"".join(parts)
 
 
-def http_response_block(body: bytes, content_type: str = "text/html") -> bytes:
-    """An HTTP/1.1 response block for a WARC `response` record."""
+def http_response_block(body: bytes) -> bytes:
+    """An HTTP/1.1 text/html response block for a WARC `response` record."""
     head = (
         b"HTTP/1.1 200 OK" + _CRLF
-        + b"Content-Type: " + content_type.encode() + _CRLF
+        + b"Content-Type: text/html" + _CRLF
         + b"Content-Length: " + str(len(body)).encode() + _CRLF
         + _CRLF
     )

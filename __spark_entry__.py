@@ -144,8 +144,8 @@ def _sql_case_clause(col: str, values: list, quote: bool = True) -> str:
 
 # DuckDB renderings of the URL rule chain and the html strip chain, used
 # by the url_filter / html_extract oracles
-_URL_RULES = url_filter_sql("url")
-_PAGE_TEXT = strip_html_sql("html")
+_URL_RULES = url_filter_sql()
+_PAGE_TEXT = strip_html_sql()
 
 
 def _oracle(sql: str | Callable[[str], str]):
@@ -277,7 +277,7 @@ def q_quality_filter_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite so thresholds cannot drift)."""
     from pii_filter_spark.operators.quality_stage import heuristic_keep
 
-    return heuristic_keep(_docs(spark, sf_dir), "text", ["doc_id"])
+    return heuristic_keep(_docs(spark, sf_dir), ["doc_id"])
 
 
 def _snapshot_merge_dir(sf_dir: str) -> str:
@@ -328,7 +328,7 @@ def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(base_dir, ignore_errors=True)
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     base = docs.withColumn("rev", F.lit("base"))
-    table_io.snapshot_write(base, base_dir, mode="overwrite")
+    table_io.snapshot_write(base, base_dir)
     upd = docs.where(F.col("doc_id") % 10 == 0).select(
         "doc_id",
         F.concat(F.col("text"), F.lit(" v2")).alias("text"),
@@ -341,9 +341,7 @@ def q_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit("new").alias("rev"),
     )
-    table_io.merge_upsert(
-        spark, base_dir, upd.unionByName(ins), key_col="doc_id"
-    )
+    table_io.merge_upsert(spark, base_dir, upd.unionByName(ins))
     return table_io.read_table(spark, base_dir).select(
         "doc_id", "rev", F.length("text").alias("n_chars")
     )
@@ -438,7 +436,7 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = (
         _emb(spark, sf_dir).where(F.col("vec_id") == 0).select("embedding").first()[0]
     )
-    out = cosine_topk_bruteforce(_emb(spark, sf_dir), [float(x) for x in query], k=10)
+    out = cosine_topk_bruteforce(_emb(spark, sf_dir), [float(x) for x in query])
     return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
@@ -617,7 +615,7 @@ def q_event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.sessions import sessionize
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize(ev, gap_minutes=360).select(
+    return sessionize(ev).select(
         "user_id",
         F.col("session_idx").cast("long").alias("session_idx"),
         "session_start", "session_end", "n_events", "total_value",
@@ -750,7 +748,7 @@ def q_skew_salted_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.skew import salted_count_by_key
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return salted_count_by_key(ev, "event_type", id_col="event_id")
+    return salted_count_by_key(ev)
 
 
 # --- model-backed ops (no SQL oracle -> rows-only driver check) -------------
@@ -813,7 +811,7 @@ def q_export_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.sources.synth import build_input_table
 
     imgs = build_input_table(spark, 400, seed=42, num_partitions=8)
-    return export_prep(imgs.select("image_id", "w", "h"), num_shards=8)
+    return export_prep(imgs.select("image_id", "w", "h"))
 
 
 @_oracle(osup.image_metadata_sql)
@@ -868,15 +866,6 @@ def q_jpeg_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scrub_jpeg_metadata(injected)
 
 
-_RESIZE_BUCKETS: tuple = tuple(
-    (w // 16, h // 16)
-    for (w, h) in (
-        (512, 2048), (576, 1664), (704, 1408), (832, 1216), (1024, 1024),
-        (1216, 832), (1408, 704), (1664, 576), (2048, 512),
-    )
-)
-
-
 @_oracle(osup.image_resize_sql)
 def q_image_resize_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-export RESIZE (the step export_prep's bucket assignment
@@ -891,7 +880,7 @@ def q_image_resize_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.sources.synth import build_input_table
 
     imgs = build_input_table(spark, 200, seed=42, num_partitions=8)
-    return resize_to_buckets(imgs, _RESIZE_BUCKETS)
+    return resize_to_buckets(imgs)
 
 
 @_oracle(osup.video_frame_sample_sql)
@@ -905,13 +894,13 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
 
     def _gen(i):
-        yield f"vid_{i:06d}", encode_avi_mjpeg(synth_clip(i), fps=10, quality=90)
+        yield f"vid_{i:06d}", encode_avi_mjpeg(synth_clip(i), quality=90)
 
     vids = map_rows(
         spark.range(0, 100, numPartitions=8), ["id"],
         "image_id string, bytes binary", _gen,
     )
-    return sample_video_frames(vids, every_n=2).select(
+    return sample_video_frames(vids).select(
         "video_id", "frame_idx", "frame_w", "frame_h",
         F.round("frame_gray_mean", 2).alias("frame_gray_mean"),
     )
@@ -1040,7 +1029,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" extra trailing tokens here")).alias("text"),
     ).where(F.col("doc_id") % 7 == 0)
     return (
-        minhash_lsh_pairs(_par(spark, docs.unionByName(copies)), threshold=0.5)
+        minhash_lsh_pairs(_par(spark, docs.unionByName(copies)))
         .select("id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"))
     )
 
@@ -1098,11 +1087,11 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _par(spark, _docs(spark, sf_dir))
     survivors = dedup_exact(docs)
     kept = (
-        heuristic_keep(survivors, "text", ["doc_id", "lang"])
+        heuristic_keep(survivors, ["doc_id", "lang"])
         .where(F.col("keep"))
         .select("doc_id", "lang")
     )
-    return stratified_take(kept, "lang", 10)
+    return stratified_take(kept, 10)
 
 
 @_oracle(r"""
@@ -1129,7 +1118,7 @@ def q_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary sort; operators/textstats.top_ngrams)."""
     from pii_filter_spark.operators.textstats import top_ngrams
 
-    return top_ngrams(_par(spark, _docs(spark, sf_dir)), n=2, k=20)
+    return top_ngrams(_par(spark, _docs(spark, sf_dir)))
 
 
 @_oracle(r"""
@@ -1181,7 +1170,7 @@ def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.dsir import dsir_select
 
     docs = _par(spark, _docs(spark, sf_dir).select("doc_id", "source", "text"))
-    return dsir_select(docs, F.col("source") == "src0", k=100)
+    return dsir_select(docs, F.col("source") == "src0")
 
 
 @_oracle(f"""
@@ -1200,7 +1189,7 @@ def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      ELSE '#frag' END) AS url
           FROM documents
         ), n AS (
-          SELECT doc_id, url, {normalize_url_sql('url')} AS url_norm FROM u
+          SELECT doc_id, url, {normalize_url_sql()} AS url_norm FROM u
         )
         SELECT doc_id, url, url_norm,
                row_number() OVER (PARTITION BY url_norm ORDER BY doc_id) = 1
@@ -1379,7 +1368,7 @@ def q_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.sketch import kmv_distinct
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return kmv_distinct(ev, "event_type", "user_id", k=64)
+    return kmv_distinct(ev)
 
 
 @_oracle("""
@@ -1398,7 +1387,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     so DuckDB reproduces the exact selection."""
     from pii_filter_spark.operators.textstats import stratified_take
 
-    return stratified_take(_docs(spark, sf_dir), "lang", 20)
+    return stratified_take(_docs(spark, sf_dir), 20)
 
 
 @_oracle(osup.dedup_clusters_sql)
@@ -1416,7 +1405,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" extra trailing tokens here")).alias("text"),
     ).where(F.col("doc_id") % 7 == 0)
     union = _par(spark, docs.unionByName(copies))
-    pairs = minhash_lsh_pairs(union, threshold=0.5)
+    pairs = minhash_lsh_pairs(union)
     return dedup_clusters(union, pairs)
 
 
@@ -1440,7 +1429,7 @@ def q_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     out to 2+ sentence rows."""
     from pii_filter_spark.operators.udtf_ops import split_sentences
 
-    return split_sentences(_captions(spark, sf_dir), text_col="caption")
+    return split_sentences(_captions(spark, sf_dir))
 
 
 # Four sentences so >= 3 identical trailing sentences survive even when
@@ -1543,9 +1532,7 @@ def q_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file test scans arrive as ONE split; spread the in-row
     # hashing across cores the way a many-split corpus scan would be
     docs = _par(spark, _docs(spark, sf_dir)).select("doc_id", "text")
-    return exact_substring_dedup(
-        docs, span_tokens=20, id_col="doc_id", text_col="text"
-    )
+    return exact_substring_dedup(docs)
 
 
 @_oracle(osup.clip_alignment_sql)
@@ -1553,18 +1540,14 @@ def q_clip_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAION-style image-caption alignment filter (CLIP-score shape,
     Schuhmann et al. 2021 §2.2): one mapInPandas embeds both modalities
     off the scan (bytes never shuffle), cosine is a JVM-side zip_with/
-    aggregate fold over unit vectors, keep >= 0.28 is codegen. The
-    encoders are the documented deterministic stand-ins behind the
-    injectable model seam; the fixture oracle re-derives rows through
-    the identical pure functions."""
-    from pii_filter_spark.operators.alignment import (
-        STUB_THRESHOLD,
-        alignment_filter,
-    )
+    aggregate fold over unit vectors, keep >= STUB_THRESHOLD is codegen.
+    The encoders are the documented deterministic stand-ins; the fixture
+    oracle re-derives rows through the identical pure functions."""
+    from pii_filter_spark.operators.alignment import alignment_filter
     from pii_filter_spark.sources.synth import build_input_table
 
     imgs = build_input_table(spark, 300, seed=42, num_partitions=8)
-    return alignment_filter(imgs, threshold=STUB_THRESHOLD)
+    return alignment_filter(imgs)
 
 
 @_oracle(osup.line_clean_sql)
@@ -1623,7 +1606,7 @@ def q_pixel_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     idx = F.substring("image_id", 5, 8).cast("int")
-    variants = reencode_variants(imgs.where(idx % 4 == 0), quality=90)
+    variants = reencode_variants(imgs.where(idx % 4 == 0))
     hashes = compute_phash(imgs.unionByName(variants)).where(
         F.col("pixel_phash").isNotNull()
     )
@@ -1651,13 +1634,11 @@ def q_multimodal_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies = imgs.where(idx % 6 == 0).withColumn(
         "image_id", F.concat(F.lit("zz_"), F.col("image_id"))
     )
-    from pii_filter_spark.operators.alignment import STUB_THRESHOLD
-
     # materialize the synthesized input once — the operator consumes it
     # twice (metadata gate + decode gate) and regenerating 467 JPEGs per
     # consumer is a test-harness artifact a real parquet scan doesn't have
     table = imgs.unionByName(copies).localCheckpoint()
-    return multimodal_curation(table, align_threshold=STUB_THRESHOLD)
+    return multimodal_curation(table)
 
 
 @_oracle(osup.bloom_seen_sql)
@@ -1698,9 +1679,9 @@ def q_dedup_best(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).where(F.col("doc_id") % 7 == 0)
     union = _par(spark, docs.unionByName(copies))
-    pairs = minhash_lsh_pairs(union, threshold=0.5)
+    pairs = minhash_lsh_pairs(union)
     scored = union.select("doc_id", F.length("text").alias("score"))
-    return dedup_clusters_best(scored, pairs, score_col="score")
+    return dedup_clusters_best(scored, pairs)
 
 
 @_oracle(osup.quality_classifier_sql)
@@ -1719,7 +1700,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _par(spark, _docs(spark, sf_dir))
-    w, b = train_quality_classifier(training_sample(docs, sample=512))
+    w, b = train_quality_classifier(training_sample(docs))
     return quality_classifier_stage(docs, w, b)
 
 
@@ -1732,9 +1713,7 @@ def q_source_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     same pure function and applies them in plain SQL."""
     from pii_filter_spark.operators.mixing import temperature_sample
 
-    return temperature_sample(
-        _docs(spark, sf_dir), temperature=2.0, target_rows=200
-    )
+    return temperature_sample(_docs(spark, sf_dir))
 
 
 @_oracle(osup.pack_sequences_sql)
@@ -1753,7 +1732,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = bpe_exact_counts(
         _par(spark, _docs(spark, sf_dir)).select("doc_id", "text")
     ).withColumnRenamed("n_bpe_tokens", "n_tokens")
-    return pack_sequences(toks, seq_len=2048)
+    return pack_sequences(toks)
 
 
 @_oracle(r"""
@@ -1837,8 +1816,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.similarity import train_ivf_centroids
 
     emb = _emb_with_neardups(spark, sf_dir)
-    cents = train_ivf_centroids(emb, k=8, iters=8)
-    return semdedup(emb, cents, threshold=0.85)
+    cents = train_ivf_centroids(emb)
+    return semdedup(emb, cents)
 
 
 @_oracle("""
@@ -1869,9 +1848,7 @@ def q_embedding_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (broadcast matmul, no join)."""
     from pii_filter_spark.operators.similarity import cosine_near_pairs_exact
 
-    return cosine_near_pairs_exact(
-        _emb_with_neardups(spark, sf_dir), threshold=0.85
-    ).select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
+    return cosine_near_pairs_exact(_emb_with_neardups(spark, sf_dir)).select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
 
 
 @_oracle(osup.emb_near_pairs_lsh_sql)
@@ -1879,11 +1856,7 @@ def q_embedding_near_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SRP-bucketed scale path for the same near-dup discovery."""
     from pii_filter_spark.operators.similarity import cosine_near_pairs_lsh
 
-    # 64 planes / 8 chunks → 8-bit (256-way) buckets: ~16× fewer candidate
-    # cosines than 4-bit buckets at equal recall (~0.94 for cos≥0.87 pairs)
-    return cosine_near_pairs_lsh(
-        _emb_with_neardups(spark, sf_dir), threshold=0.85, planes=64, chunks=8
-    ).select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
+    return cosine_near_pairs_lsh(_emb_with_neardups(spark, sf_dir)).select("id_a", "id_b", F.round("cos_sim", 4).alias("cos_sim"))
 
 
 @_oracle(osup.bpe_token_totals_sql)
@@ -1923,9 +1896,7 @@ def q_bpe_gpt2_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _par(spark, _docs(spark, sf_dir)).select("source", "text")
-    counts = bpe_counts_from_merges_txt(
-        docs, frozen_merges_txt(), id_col="source"
-    )
+    counts = bpe_counts_from_merges_txt(docs, frozen_merges_txt())
     return counts.groupBy("source").agg(
         F.sum("n_bpe_tokens").alias("total_bpe_tokens"),
         F.max("n_bpe_tokens").alias("max_doc_tokens"),
@@ -2198,7 +2169,7 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 1_000_000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz")).alias("text"),
     ).where(F.col("doc_id") % 11 == 0)
-    return simhash_near_pairs(docs.unionByName(copies), max_hamming=6)
+    return simhash_near_pairs(docs.unionByName(copies))
 
 
 @_oracle(osup.langid_sql)
@@ -2297,7 +2268,7 @@ def q_webdataset_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     imgs = build_input_table(spark, 120, seed=42, num_partitions=8).select(
         "image_id", "bytes", "caption", "fmt", "w", "h"
     )
-    return write_webdataset(imgs, num_shards=8)
+    return write_webdataset(imgs)
 
 
 @_oracle(osup.cross_modal_dedup_sql)
@@ -2319,7 +2290,7 @@ def q_cross_modal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()  # feeds originals, re-encode, and zz branches
     )
     idx = F.substring("image_id", 5, 8).cast("int")
-    rehosted = reencode_variants(imgs.where(idx % 4 == 0), quality=90)
+    rehosted = reencode_variants(imgs.where(idx % 4 == 0))
     # digit-free unique captions: ccnet normalization maps every digit
     # to 0, so digit-bearing ids would collapse to ONE digest and weld
     # all re-encodes together through a text edge
@@ -2361,7 +2332,7 @@ def q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     inv = _docs(spark, sf_dir).select(
         "doc_id", F.length("text").cast("long").alias("size_bytes")
     )
-    return compaction_plan(inv, target_bytes=8192)
+    return compaction_plan(inv)
 
 
 @_oracle(osup.ccnet_normalize_sql)
@@ -2408,9 +2379,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query = (
         _emb(spark, sf_dir).where(F.col("vec_id") == 0).select("embedding").first()[0]
     )
-    out = cosine_topk_lsh(
-        _emb(spark, sf_dir), [float(x) for x in query], k=10, max_flip=6
-    )
+    out = cosine_topk_lsh(_emb(spark, sf_dir), [float(x) for x in query])
     return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
@@ -2430,7 +2399,7 @@ def q_embedding_prototypes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_filter_spark.operators.similarity import train_ivf_centroids
 
     emb = _emb(spark, sf_dir)
-    cents = train_ivf_centroids(emb, k=8, iters=8)
+    cents = train_ivf_centroids(emb)
     return flag_prototypes(prototypicality_scores(emb, cents))
 
 
@@ -2458,8 +2427,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     query = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
-    cents = train_ivf_centroids(emb, k=8, iters=8)
-    out = cosine_topk_ivf(emb, [float(x) for x in query], cents, k=10, nprobe=4)
+    cents = train_ivf_centroids(emb)
+    out = cosine_topk_ivf(emb, [float(x) for x in query], cents)
     return out.select("vec_id", F.round("cos_sim", 4).alias("cos_sim"))
 
 
@@ -2477,7 +2446,7 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("vec_id").collect()
     )
     queries = np.array([[float(x) for x in r["embedding"]] for r in qrows])
-    out = cosine_topk_batch(_emb(spark, sf_dir), queries, k=5)
+    out = cosine_topk_batch(_emb(spark, sf_dir), queries)
     return out.select(
         "query_idx", "vec_id", F.round("cos_sim", 4).alias("cos_sim"), "rank"
     )
@@ -2542,9 +2511,9 @@ def q_quality_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: quality + scrub over sf0.001 captions, one Python stage."""
-    from pii_filter_spark.operators.fused import fused_quality_scrub
+    from pii_filter_spark.pipeline import transform
 
-    df = fused_quality_scrub(_captions(spark, SF_DEFAULT))
+    df = transform(_captions(spark, SF_DEFAULT))
     return df.select(
         "doc_id", "keep", "drop_reasons", "scrubbed_caption", "scrub_count", "lang"
     )

@@ -5,7 +5,6 @@ Cluster submission (the north-rule path):
 
     zip -r pipeline.zip pii_filter_spark
     spark-submit --py-files pipeline.zip \
-        --conf spark.sql.adaptive.enabled=true \
         --conf spark.sql.execution.arrow.pyspark.enabled=true \
         jobs/run_scrub_job.py \
         --input  <catalog.table or parquet path> \

@@ -19,8 +19,11 @@ from typing import List, Tuple
 import numpy as np
 
 
-def encode_wav(pcm: np.ndarray, sample_rate: int = 16_000) -> bytes:
-    """float array in [-1, 1] (mono) -> 16-bit PCM WAVE bytes."""
+SAMPLE_RATE = 16_000
+
+
+def encode_wav(pcm: np.ndarray) -> bytes:
+    """float array in [-1, 1] (mono) -> 16-bit PCM WAVE bytes at SAMPLE_RATE."""
     x = np.clip(np.asarray(pcm, dtype=np.float64), -1.0, 1.0)
     ints = np.round(x * 32767.0).astype("<i2")
     data = ints.tobytes()
@@ -28,8 +31,8 @@ def encode_wav(pcm: np.ndarray, sample_rate: int = 16_000) -> bytes:
         "<HHIIHH",
         1,                 # PCM
         1,                 # mono
-        sample_rate,
-        sample_rate * 2,   # byte rate
+        SAMPLE_RATE,
+        SAMPLE_RATE * 2,   # byte rate
         2,                 # block align
         16,                # bits per sample
     )
@@ -92,8 +95,8 @@ def synth_tone(idx: int) -> np.ndarray:
     0.05–0.3 s — enough structure for RMS/ZCR features to differ
     per row. Pure function shared by the query and its oracle."""
     rng = np.random.default_rng((1234, idx))
-    n = int(16_000 * (0.05 + 0.25 * float(rng.random())))
-    t = np.arange(n, dtype=np.float64) / 16_000
+    n = int(SAMPLE_RATE * (0.05 + 0.25 * float(rng.random())))
+    t = np.arange(n, dtype=np.float64) / SAMPLE_RATE
     f1 = 110.0 * (1 + idx % 17)
     f2 = 60.0 * (1 + idx % 29)
     x = (

@@ -78,16 +78,17 @@ def _pretokens(text: str) -> List[str]:
     return PRETOK_RE.findall(text or "")
 
 
-def _train_merges(corpus: str, max_merges: int) -> List[Tuple[bytes, bytes]]:
-    """Deterministic BPE training: most-frequent adjacent symbol pair,
-    ties by smallest (bytes, bytes) pair; stop when nothing repeats."""
+def _train_merges() -> List[Tuple[bytes, bytes]]:
+    """Deterministic BPE training over the seed corpus: most-frequent
+    adjacent symbol pair, ties by smallest (bytes, bytes) pair; stop when
+    nothing repeats or after MAX_MERGES."""
     words: Dict[Tuple[bytes, ...], int] = {}
-    for tok in _pretokens(corpus):
+    for tok in _pretokens(_SEED_CORPUS):
         sym = tuple(bytes([b]) for b in tok.encode("utf-8"))
         if len(sym) >= 2:
             words[sym] = words.get(sym, 0) + 1
     merges: List[Tuple[bytes, bytes]] = []
-    for _ in range(max_merges):
+    for _ in range(MAX_MERGES):
         pairs: Dict[Tuple[bytes, bytes], int] = {}
         for sym, freq in words.items():
             for i in range(len(sym) - 1):
@@ -138,25 +139,6 @@ def _neg_key(pair: Tuple[bytes, bytes]) -> Tuple[_NegBytes, _NegBytes]:
     return (_NegBytes(pair[0]), _NegBytes(pair[1]))
 
 
-_RANKS: Dict[Tuple[bytes, bytes], int] | None = None
-
-
-def merge_ranks() -> Dict[Tuple[bytes, bytes], int]:
-    """The frozen merge table (trained once per process)."""
-    global _RANKS
-    if _RANKS is None:
-        _RANKS = {
-            p: i for i, p in enumerate(_train_merges(_SEED_CORPUS, MAX_MERGES))
-        }
-    return _RANKS
-
-
-@lru_cache(maxsize=65536)
-def _encode_pretoken(tok: str) -> int:
-    """Number of BPE tokens for one pre-token (lowest-rank-first merge)."""
-    return _merge_count(tok, merge_ranks())
-
-
 def _merge_count(tok: str, ranks: Dict[Tuple[bytes, bytes], int]) -> int:
     sym: List[bytes] = [bytes([b]) for b in tok.encode("utf-8")]
     while len(sym) >= 2:
@@ -169,16 +151,6 @@ def _merge_count(tok: str, ranks: Dict[Tuple[bytes, bytes], int]) -> int:
             break
         sym[best_i : best_i + 2] = [sym[best_i] + sym[best_i + 1]]
     return len(sym)
-
-
-def bpe_token_count(text: str) -> int:
-    """Exact BPE token count of `text` under the frozen vocab."""
-    return sum(_encode_pretoken(t) for t in _pretokens(text))
-
-
-def bpe_token_counts_batch(texts) -> List[int]:
-    """Vectorized-batch helper for the pandas UDF path."""
-    return [bpe_token_count(t if isinstance(t, str) else "") for t in texts]
 
 
 # --------------------------------------------------------------------------
@@ -195,6 +167,7 @@ def bpe_token_counts_batch(texts) -> List[int]:
 #     bpe = ByteBPE.from_merges_txt(open("merges.txt").read())
 #     bpe.count("some text")          # GPT-2-exact token count
 #
+# frozen_bpe() is the same counter over this repo's seed-trained table.
 # `to_merges_txt()` is the inverse — the repo's frozen table serialized in
 # the same format — which lets tests round-trip the parser and lets the
 # q_bpe_gpt2_counts query prove the seam end-to-end without network.
@@ -269,8 +242,7 @@ def to_merges_txt(merges: List[Tuple[bytes, bytes]]) -> str:
 
 class ByteBPE:
     """A byte-level BPE counter over an arbitrary merge table — the
-    vocab seam. Same pre-tokenizer and lowest-rank-first merge loop as
-    the module-level default; only the table differs."""
+    vocab seam: the pre-tokenizer, then lowest-rank-first merges."""
 
     __slots__ = ("ranks", "_cache")
 
@@ -299,9 +271,16 @@ class ByteBPE:
         return [self.count(t if isinstance(t, str) else "") for t in texts]
 
 
+@lru_cache(maxsize=1)
+def frozen_bpe() -> ByteBPE:
+    """The counter over the frozen seed-trained table (trained once per
+    process)."""
+    return ByteBPE(_train_merges())
+
+
 def frozen_merges_txt() -> str:
     """The repo's frozen seed-trained table serialized in the released
     wire format — the deterministic stand-in a real deployment replaces
     with the target model's `merges.txt`."""
-    ordered = sorted(merge_ranks().items(), key=lambda kv: kv[1])
+    ordered = sorted(frozen_bpe().ranks.items(), key=lambda kv: kv[1])
     return to_merges_txt([p for p, _ in ordered])

@@ -388,7 +388,7 @@ RULES: List[Rule] = [
         rf"\b(?:{_ORG_PRE})(?:\s+(?:(?:{_OCONN})\s+)?{_ORGW})+"
         rf"(?:\s+(?:{_ORG_SUF}))?"), 0, gate_words(ORG_PREFIXES)),
     Rule("ORGANIZACAO", re.compile(
-        rf"\b{_ORGW}(?:\s+{_ORGW})*\s+(?:{_ORG_SUF})"), 0,
+        rf"\b{_ORGW}(?:\s+{_ORGW})*\s+(?:{_ORG_SUF})(?!\w)"), 0,
         re.compile(rf"\s(?:{_ORG_SUF})")),
     Rule("ORGANIZACAO", re.compile(
         rf"\b{_ORGW}(?:\s+{_ORGW})*\s+(?:{_ORG_SUF_W})\b"), 0,

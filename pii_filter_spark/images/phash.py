@@ -72,11 +72,6 @@ def area_resize_hw(chan: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return (t[1:, 1:] - t[:-1, 1:] - t[1:, :-1] + t[:-1, :-1]) / area
 
 
-def area_resize(gray: np.ndarray, n: int = _N) -> np.ndarray:
-    """Exact area-average resample to n x n (fractional box filter)."""
-    return area_resize_hw(gray, n, n)
-
-
 def area_resize_rgb(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     """uint8 HxWx3 (or HxW) -> uint8 out_h x out_w x 3, per-channel exact
     area average, np.rint half-to-even rounding (deterministic)."""
@@ -93,7 +88,7 @@ def phash64(pixels: np.ndarray) -> int:
     """RGB (or gray) uint8 array -> signed 64-bit perceptual hash."""
     px = pixels.astype(np.float64)
     gray = px.mean(axis=2) if px.ndim == 3 else px
-    small = area_resize(gray, _N)
+    small = area_resize_hw(gray, _N, _N)
     coef = _DCT32 @ small @ _DCT32.T
     low = coef[:8, :8]
     flat = low.ravel()

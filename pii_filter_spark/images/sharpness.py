@@ -54,9 +54,9 @@ def gray_entropy(px: np.ndarray) -> float:
     return float(-(p * np.log2(p)).sum() + 0.0)
 
 
-def _box1d(a: np.ndarray, k: int, axis: int) -> np.ndarray:
-    """Mean over a clamped window of width k along `axis` (cumsum trick)."""
-    r = k // 2
+def _box1d(a: np.ndarray, axis: int) -> np.ndarray:
+    """Mean over a clamped window of width 7 along `axis` (cumsum trick)."""
+    r = 3
     n = a.shape[axis]
     zero = np.zeros_like(np.take(a, [0], axis=axis))
     cs = np.concatenate([zero, np.cumsum(a, axis=axis)], axis=axis)
@@ -77,6 +77,6 @@ def box_blur(px: np.ndarray) -> np.ndarray:
     a = px.astype(np.float64)
     if a.ndim == 2:
         a = a[:, :, None]
-    out = _box1d(_box1d(a, 7, 0), 7, 1)
+    out = _box1d(_box1d(a, 0), 1)
     out = np.clip(np.rint(out), 0, 255).astype(np.uint8)
     return out[:, :, 0] if px.ndim == 2 else out

@@ -14,21 +14,20 @@ Spark-first for the input_hint table (image_id, bytes, caption):
   * `keep = clip_sim >= threshold` is a codegen'd comparison — at
     10^12 rows the stage is embarrassingly parallel with ZERO shuffles.
 
-Model seam: real CLIP is a GPU model this container doesn't have, so
+Model seam: real CLIP is a GPU model that is not available here, so
 the two encoders are deterministic stand-ins with the REAL signature —
 `image_embedding(pixels) -> unit float64[DIM]` (decoded-pixel grid
 features through a fixed seeded projection) and
 `caption_embedding(text) -> unit float64[DIM]` (signed hashed
-bag-of-words, the fastText trick) — injectable via the `image_embed` /
-`text_embed` arguments exactly like the codec seam in images/codecs.py.
-Everything downstream of the seam (batching, schema, cosine, threshold,
-metrics) is the production operator.
+bag-of-words, the fastText trick). Everything downstream of them
+(batching, schema, cosine, threshold, metrics) is the production
+operator; a real encoder replaces these two functions.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Optional
+from typing import Optional
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -38,10 +37,9 @@ from .rowmap import map_rows
 
 DIM = 64
 _PROJ_SEED = 23
-DEFAULT_THRESHOLD = 0.28  # LAION EN threshold (Schuhmann et al. 2021) —
-# the value to run with a REAL CLIP encoder injected at the model seam.
-# The deterministic stand-in encoders are uncorrelated across modalities
-# (their cosine is ~N(0, DIM^-1/2)), so queries exercising the stub use
+# LAION's EN threshold is 0.28 (Schuhmann et al. 2021), the value for a
+# REAL CLIP encoder. The deterministic stand-in encoders are uncorrelated
+# across modalities (their cosine is ~N(0, DIM^-1/2)), so the gate uses
 # STUB_THRESHOLD, calibrated to that distribution's upper third — the
 # gate mechanics (fold cosine, codegen keep, loss accounting) are what
 # the stub exercises, not CLIP's semantics.
@@ -97,29 +95,22 @@ def caption_embedding(text: str) -> np.ndarray:
     return v / n if n > 0 else v
 
 
-def alignment_filter(
-    df: DataFrame,
-    threshold: float = DEFAULT_THRESHOLD,
-    image_embed: Callable[[np.ndarray], np.ndarray] = None,
-    text_embed: Callable[[str], np.ndarray] = None,
-) -> DataFrame:
+def alignment_filter(df: DataFrame) -> DataFrame:
     """(image_id, clip_sim, keep) for every image+caption row.
 
     clip_sim is the cosine of the two embeddings (both unit vectors, so
-    the JVM-side zip_with/aggregate dot IS the cosine); decode failures
-    yield clip_sim NULL and keep false.
+    the JVM-side zip_with/aggregate dot IS the cosine); keep is
+    clip_sim >= STUB_THRESHOLD. Decode failures yield clip_sim NULL and
+    keep false.
     """
-    img_fn = image_embed or image_embedding
-    txt_fn = text_embed or caption_embedding
-
     from ..images import decode_image
 
     def _embed(image_id, data, caption):
         try:
-            ie = img_fn(decode_image(bytes(data))).tolist()
+            ie = image_embedding(decode_image(bytes(data))).tolist()
         except ValueError:
             ie = None
-        yield image_id, ie, txt_fn(caption).tolist()
+        yield image_id, ie, caption_embedding(caption).tolist()
 
     emb = map_rows(df, ["image_id", "bytes", "caption"], _EMB_SCHEMA, _embed)
     dot = F.aggregate(
@@ -130,11 +121,11 @@ def alignment_filter(
     return emb.select(
         "image_id",
         F.round(dot, 4).alias("clip_sim"),
-        F.coalesce(dot >= F.lit(threshold), F.lit(False)).alias("keep"),
+        F.coalesce(dot >= F.lit(STUB_THRESHOLD), F.lit(False)).alias("keep"),
     )
 
 
-def alignment_row(rec: dict, threshold: float = DEFAULT_THRESHOLD):
+def alignment_row(rec: dict):
     """Pure-Python twin of one alignment_filter row (fixture oracles):
     same decode, same embeddings, same left-to-right fold dot."""
     from ..images import decode_image
@@ -148,4 +139,4 @@ def alignment_row(rec: dict, threshold: float = DEFAULT_THRESHOLD):
     acc = 0.0
     for a, b in zip(ie.tolist(), te.tolist()):
         acc += a * b
-    return rec["image_id"], acc, acc >= threshold
+    return rec["image_id"], acc, acc >= STUB_THRESHOLD

@@ -1,10 +1,7 @@
 """Audio-column operators: opaque `bytes` + typed metadata, like images.
 
 Clips decode with the RIFF/WAVE PCM codec (audio/wav.py — 8/16-bit, any
-channel count, mono downmix). `audio_features` takes the decoder as a
-parameter, the seam a production deployment fills with a
-soundfile/ffmpeg-backed `(bytes) -> (sample_rate, float32 mono ndarray)`
-for compressed containers. Everything Spark-side — Arrow batching
+channel count, mono downmix). Everything Spark-side — Arrow batching
 (rowmap.map_rows), column pruning, output schema — is real and tested.
 Rows the decoder rejects with ValueError (non-WAVE bytes included) are
 quarantined to NULL features / fingerprints, never a failed task.
@@ -24,17 +21,13 @@ AUDIO_FEATURE_SCHEMA = (
 )
 
 
-def audio_features(
-    df: DataFrame,
-    id_col: str = "image_id",
-    decoder=decode_wav,
-) -> DataFrame:
-    """Per-row acoustic features: duration, RMS, zero-crossing rate, peak.
-    Rows the decoder rejects with ValueError get NULL features."""
+def audio_features(df: DataFrame) -> DataFrame:
+    """Per-row acoustic features of (image_id, bytes): duration, RMS,
+    zero-crossing rate, peak. Rows decode_wav rejects get NULL features."""
 
     def _feat(audio_id, data):
         try:
-            sr, pcm = decoder(bytes(data))
+            sr, pcm = decode_wav(bytes(data))
         except ValueError:
             yield audio_id, None, None, None, None, None, None
             return
@@ -49,7 +42,7 @@ def audio_features(
             float(np.abs(pcm).max()) if n else 0.0,
         )
 
-    return map_rows(df, [id_col, "bytes"], AUDIO_FEATURE_SCHEMA, _feat)
+    return map_rows(df, ["image_id", "bytes"], AUDIO_FEATURE_SCHEMA, _feat)
 
 
 def audio_fingerprints(df: DataFrame) -> DataFrame:

@@ -20,7 +20,7 @@ never sorts the corpus — and that is exactly the shape here:
      windows run on an (id, lang, ppl) projection, never the text;
   3. the tercile cutoffs are DISCRETE order statistics of the sampled
      (rounded) perplexities, computed driver-side over the ≤
-     ``n_langs x sample_per_lang`` collected rows — the bounded-driver
+     ``n_langs x SAMPLE_PER_LANG`` collected rows — the bounded-driver
      -work pattern shared with the DSIR ratio table and IVF training;
   4. cutoffs broadcast back as a tiny (lang, t_head, t_mid) table; the
      bin assignment is one broadcast join + one codegen CASE. Zero
@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from .fused import caption_stage
 
 HEAD, MIDDLE, TAIL = "head", "middle", "tail"
+SAMPLE_PER_LANG = 256  # threshold-training rows per language
 
 
 def tercile_cutoffs(sorted_ppls: list) -> tuple:
@@ -60,7 +61,7 @@ def tercile_cutoffs(sorted_ppls: list) -> tuple:
     return t_head, t_mid
 
 
-def ccnet_bins(df: DataFrame, sample_per_lang: int = 256) -> DataFrame:
+def ccnet_bins(df: DataFrame) -> DataFrame:
     """(doc_id, lang, ppl, bin): CCNet head/middle/tail per language of
     each row's `text`."""
     spark = df.sparkSession
@@ -78,16 +79,16 @@ def ccnet_bins(df: DataFrame, sample_per_lang: int = 256) -> DataFrame:
     w1 = Window.partitionBy("lang", salt).orderBy(h, "doc_id")
     local = (
         scored.withColumn("_lrn", F.row_number().over(w1))
-        .where(F.col("_lrn") <= sample_per_lang)
+        .where(F.col("_lrn") <= SAMPLE_PER_LANG)
     )
     w2 = Window.partitionBy("lang").orderBy(h, "doc_id")
     sample = (
         local.withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= sample_per_lang)
+        .where(F.col("_rn") <= SAMPLE_PER_LANG)
         .select("lang", "ppl")
     )
 
-    # Bounded driver work: <= n_langs * sample_per_lang rows.
+    # Bounded driver work: <= n_langs * SAMPLE_PER_LANG rows.
     by_lang: dict = {}
     for r in sample.collect():
         by_lang.setdefault(r["lang"], []).append(r["ppl"])

@@ -8,11 +8,11 @@ count, and read amplification grows. Iceberg ships this as
 table seam the same two pieces:
 
 * `compaction_plan(df)` — the PLANNER: assign each file (any inventory
-  row with a size) to a compaction group of ~`target_bytes`, packing
+  row with a size) to a compaction group of ~TARGET_BYTES, packing
   largest-first so big files don't straddle groups. First-fit in
   (size DESC, id) order over a global exclusive prefix sum — the same
   two-phase banded cumsum as `operators/packing.py` (phase 1: per-band
-  totals, driver exclusive prefix over ≤ n_groups rows; phase 2:
+  totals, driver exclusive prefix over ≤ N_GROUPS rows; phase 2:
   bounded per-band window), except the bands here are SIZE bands
   (floor((max-size)/span)) because the pack order is by size, not id.
   Bands are monotone in the sort order and a pure function of size, so
@@ -37,20 +37,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 TARGET_BYTES = 8192
+N_GROUPS = 64  # size bands of the planner's two-phase prefix sum
 
 
-def compaction_plan(
-    df: DataFrame,
-    target_bytes: int = TARGET_BYTES,
-    n_groups: int = 64,
-) -> DataFrame:
+def compaction_plan(df: DataFrame) -> DataFrame:
     """(doc_id, size_bytes, cum_before, compaction_group) for a file inventory.
 
     compaction_group = exclusive-prefix-sum(size, over size DESC, id)
-    div target_bytes — contiguous ~target-sized groups, largest first.
+    div TARGET_BYTES — contiguous ~target-sized groups, largest first.
     """
-    if target_bytes <= 0:
-        raise ValueError("target_bytes must be > 0")
     bounds = df.agg(
         F.min("size_bytes").alias("lo"), F.max("size_bytes").alias("hi")
     ).collect()[0]
@@ -62,7 +57,7 @@ def compaction_plan(
             "compaction_group long",
         )
     lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    span = max(1, (hi - lo + n_groups) // n_groups)
+    span = max(1, (hi - lo + N_GROUPS) // N_GROUPS)
 
     base = df.select(
         F.col("doc_id"),
@@ -98,7 +93,7 @@ def compaction_plan(
         "cum_before"
     )
     return base.select(F.col("doc_id"), F.col("size_bytes"), cum).withColumn(
-        "compaction_group", F.expr(f"cum_before div {int(target_bytes)}")
+        "compaction_group", F.expr(f"cum_before div {TARGET_BYTES}")
     )
 
 
@@ -120,9 +115,7 @@ def compact_snapshot(
     total = sum(s for _, s in sizes)
     n_files = max(1, math.ceil(total / target_bytes))
     rows = df.count()
-    new_id = table_io.snapshot_write(
-        df.repartition(n_files), table_path, mode="overwrite"
-    )
+    new_id = table_io.snapshot_write(df.repartition(n_files), table_path)
     after = _data_file_sizes(table_path, snapshot_dir=f"s{new_id:05d}")
     return {
         "snapshot_id": new_id,

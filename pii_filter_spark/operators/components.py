@@ -230,9 +230,9 @@ def dedup_clusters(
     )
 
 
-def dedup_clusters_best(docs: DataFrame, pairs: DataFrame, score_col: str) -> DataFrame:
+def dedup_clusters_best(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Quality-aware survivor selection: per duplicate cluster keep the
-    HIGHEST-`score_col` member (ties break to the min id, so the result
+    HIGHEST-`score` member (ties break to the min id, so the result
     is deterministic).
 
     Production near-dup dedup keeps the best copy, not an arbitrary one
@@ -251,14 +251,14 @@ def dedup_clusters_best(docs: DataFrame, pairs: DataFrame, score_col: str) -> Da
     AQE reuses.
     """
     comp = connected_components(pairs)
-    labeled = docs.select("doc_id", score_col).join(
+    labeled = docs.select("doc_id", "score").join(
         comp.withColumnRenamed("id", "doc_id"), "doc_id", "left"
     )
     dup = labeled.where(F.col("component").isNotNull())
     # deterministic argmax: (score, -id) lexicographic via a struct —
     # max_by on the struct is a single map-side-combinable aggregate
     rank = F.struct(
-        F.col(score_col).alias("s"), (-F.col("doc_id")).alias("neg_id")
+        F.col("score").alias("s"), (-F.col("doc_id")).alias("neg_id")
     )
     winners = dup.groupBy("component").agg(
         F.max_by(F.col("doc_id"), rank).alias("_winner")
@@ -266,13 +266,13 @@ def dedup_clusters_best(docs: DataFrame, pairs: DataFrame, score_col: str) -> Da
     dup_out = dup.join(winners, "component").select(
         "doc_id",
         F.col("component").alias("cluster_id"),
-        F.col(score_col),
+        "score",
         (F.col("doc_id") == F.col("_winner")).alias("is_survivor"),
     )
     single_out = labeled.where(F.col("component").isNull()).select(
         "doc_id",
         F.col("doc_id").alias("cluster_id"),
-        F.col(score_col),
+        "score",
         F.lit(True).alias("is_survivor"),
     )
     return dup_out.unionByName(single_out)

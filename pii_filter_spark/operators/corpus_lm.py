@@ -17,7 +17,7 @@ the target slice). This operator is that trainer, Spark-first:
   "Large Language Models in Machine Translation" — map-side combine +
   reduce-by-gram), minus the sharded serving they needed pre-broadcast.
 
-  Phase 2 — bounded model extraction. The top-K grams by (count, gram)
+  Phase 2 — bounded model extraction. The top-K (TOP_K) grams by (count, gram)
   — deterministic tie-break — plus two scalar aggregates (total count,
   distinct-gram count V) come back to the driver: K+2 bounded rows,
   never corpus-sized. Add-one-smoothed negative log-probs are computed
@@ -50,6 +50,7 @@ from .rowmap import map_rows
 
 _BOS = "\x02"
 MICRO = 1_000_000
+TOP_K = 4096  # grams kept in a trained table; the rest score as OOV
 
 
 def trigrams(text: str) -> List[str]:
@@ -80,10 +81,10 @@ def trigram_counts(docs: DataFrame) -> DataFrame:
 
 
 def train_micronat_table(
-    counts: DataFrame, top_k: int = 4096, materialize: bool = True
+    counts: DataFrame, materialize: bool = True
 ) -> Tuple[Dict[str, int], int]:
     """(gram -> nll micro-nats, oov micro-nats) from global counts.
-    Driver-side work is bounded: top_k rows + 2 scalars collected;
+    Driver-side work is bounded: TOP_K rows + 2 scalars collected;
     add-one smoothing p = (cnt+1)/(total+V+1), OOV p = 1/(total+V+1).
 
     The counts table is localCheckpoint'd first (bounded: one row per
@@ -101,7 +102,7 @@ def train_micronat_table(
     total = int(total or 0)
     v = int(v or 0)
     top = (
-        counts.orderBy(F.desc("cnt"), "gram").limit(top_k).collect()
+        counts.orderBy(F.desc("cnt"), "gram").limit(TOP_K).collect()
     )
     denom = total + v + 1
     table = {
@@ -112,17 +113,12 @@ def train_micronat_table(
     return table, oov
 
 
-def corpus_lm_scores(
-    docs: DataFrame,
-    top_k: int = 4096,
-    train_docs: DataFrame | None = None,
-) -> DataFrame:
+def corpus_lm_scores(docs: DataFrame) -> DataFrame:
     """(doc_id, n_grams, nll_micronats): exact-integer negative
     log-likelihood of each doc's `text` under the trigram LM trained on
-    `train_docs` (default: the scored corpus itself — self-perplexity,
-    the CCNet quality signal). Zero shuffles in the scoring pass."""
-    counts = trigram_counts(docs if train_docs is None else train_docs)
-    table, oov = train_micronat_table(counts, top_k)
+    the scored corpus itself (self-perplexity, the CCNet quality
+    signal). Zero shuffles in the scoring pass."""
+    table, oov = train_micronat_table(trigram_counts(docs))
 
     def _score(doc_id, t):
         gs = trigrams(t if isinstance(t, str) else "")
@@ -136,9 +132,7 @@ def corpus_lm_scores(
     return out.withColumnRenamed("id", "doc_id")
 
 
-def corpus_lm_rows(
-    texts: List[Tuple], top_k: int = 4096
-) -> List[Tuple]:
+def corpus_lm_rows(texts: List[Tuple]) -> List[Tuple]:
     """Pure-Python twin of corpus_lm_scores for the fixture oracle:
     same trigrams(), same counting, same (count, gram) tie-break, same
     micro-nat quantization. texts = [(id, text), ...]."""
@@ -148,7 +142,7 @@ def corpus_lm_rows(
     total = sum(c.values())
     v = len(c)
     denom = total + v + 1
-    top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:top_k]
+    top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:TOP_K]
     table = {g: round(-math.log((n + 1) / denom) * MICRO) for g, n in top}
     oov = round(-math.log(1 / denom) * MICRO)
     out = []
@@ -212,8 +206,8 @@ def moore_lewis_scores(docs: DataFrame, in_domain) -> DataFrame:
         "gram", F.col("cnt_in").alias("cnt")
     )
     counts_gen = fused.select("gram", "cnt")
-    t_in, oov_in = train_micronat_table(counts_in, 4096, materialize=False)
-    t_gen, oov_gen = train_micronat_table(counts_gen, 4096, materialize=False)
+    t_in, oov_in = train_micronat_table(counts_in, materialize=False)
+    t_gen, oov_gen = train_micronat_table(counts_gen, materialize=False)
 
     def _score(doc_id, t):
         gs = trigrams(t if isinstance(t, str) else "")
@@ -245,7 +239,7 @@ def moore_lewis_rows(texts: list, in_domain_ids: set) -> list:
             c.update(trigrams(t or ""))
         total, v = sum(c.values()), len(c)
         denom = total + v + 1
-        top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:4096]
+        top = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:TOP_K]
         tb = {g: round(-math.log((n + 1) / denom) * MICRO) for g, n in top}
         return tb, round(-math.log(1 / denom) * MICRO)
 

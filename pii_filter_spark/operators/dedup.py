@@ -59,16 +59,17 @@ DEFAULT_MAX_BUCKET = 2048
 _VECTORIZE_FROM = 32
 
 
-def _band_keys(sig, bands: int, rows_per_band: int):
-    """Minhash band keys: xxhash64 over each band's raw longs + the band
-    index. (Casting the slice to a string before hashing cost ~1.6 s for
-    91k band keys in interpreted HOF eval; hashing the longs is ~30x
-    cheaper and groups identically.)"""
+def _band_keys():
+    """Minhash band keys of the `sig` column: xxhash64 over each band's
+    raw longs + the band index. (Casting the slice to a string before
+    hashing cost ~1.6 s for 91k band keys in interpreted HOF eval; hashing
+    the longs is ~30x cheaper and groups identically.)"""
+    rows_per_band = NUM_HASHES // BANDS
     return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(BANDS - 1)),
         lambda bnd: F.xxhash64(
             *[
-                F.element_at(sig, bnd * rows_per_band + j + 1)
+                F.element_at("sig", bnd * rows_per_band + j + 1)
                 for j in range(rows_per_band)
             ],
             bnd,
@@ -76,10 +77,10 @@ def _band_keys(sig, bands: int, rows_per_band: int):
     )
 
 
-def _chunk_keys(hash_col, bits: int, chunks: int):
-    """The low `bits` bits of a long split into `chunks` equal chunk
-    values, lowest chunk first."""
-    width = bits // chunks
+def _chunk_keys(hash_col, chunks: int):
+    """The 64 bits of a long split into `chunks` equal chunk values,
+    lowest chunk first."""
+    width = 64 // chunks
     mask = (1 << width) - 1
     return F.array(
         *[
@@ -241,19 +242,24 @@ def dedup_by_key(
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def _minhash_params(num_hashes: int, seed: int = 7):
-    rng = np.random.default_rng(seed)
+# the pair operators' banding: 16 bands of 4 hashes over 5-char shingles
+NUM_HASHES, BANDS, _SHINGLE_K = 64, 16, 5
+LSH_THRESHOLD = 0.5  # minimum signature agreement of a candidate pair
+
+
+def _minhash_params(num_hashes: int):
+    rng = np.random.default_rng(7)
     a = rng.integers(1, _MERSENNE, size=num_hashes, dtype=np.int64)
     b = rng.integers(0, _MERSENNE, size=num_hashes, dtype=np.int64)
     return a, b
 
 
 _SHINGLE_BASE = np.uint64(1000003)
-_SHINGLE_POWERS: dict = {}
+_SHINGLE_POWERS = _SHINGLE_BASE ** np.arange(_SHINGLE_K - 1, -1, -1, dtype=np.uint64)
 
 
-def _char_shingles(text: str, k: int) -> np.ndarray:
-    """Distinct k-char shingle hashes, numpy-vectorized.
+def _char_shingles(text: str) -> np.ndarray:
+    """Distinct _SHINGLE_K-char shingle hashes, numpy-vectorized.
 
     Polynomial rolling hash over unicode codepoints (uint64 wraparound,
     masked to 32 bits) — NOT builtin hash(): Python string hashing is
@@ -265,51 +271,40 @@ def _char_shingles(text: str, k: int) -> np.ndarray:
     naive per-window evaluation of the same polynomial.
     """
     t = " ".join(text.lower().split())
-    if len(t) < k:
-        t = t.ljust(k, "_")
-    powers = _SHINGLE_POWERS.get(k)
-    if powers is None:
-        powers = _SHINGLE_BASE ** np.arange(k - 1, -1, -1, dtype=np.uint64)
-        _SHINGLE_POWERS[k] = powers
+    if len(t) < _SHINGLE_K:
+        t = t.ljust(_SHINGLE_K, "_")
     cps = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    win = np.lib.stride_tricks.sliding_window_view(cps, k)
-    h = (win * powers).sum(axis=1) & np.uint64(_MAX_SHINGLE_HASH)
+    win = np.lib.stride_tricks.sliding_window_view(cps, _SHINGLE_K)
+    h = (win * _SHINGLE_POWERS).sum(axis=1) & np.uint64(_MAX_SHINGLE_HASH)
     return np.unique(h).astype(np.int64)
 
 
-def minhash_sig(
-    text, a: np.ndarray, b: np.ndarray, num_hashes: int, shingle_k: int
-) -> List[int]:
+def minhash_sig(text, a: np.ndarray, b: np.ndarray, num_hashes: int) -> List[int]:
     """Pure per-row signature — shared by the Spark UDF and the fixture
     oracle generator so both produce bit-identical values."""
     if not isinstance(text, str) or not text.strip():
         return [0] * num_hashes
-    sh = _char_shingles(text, shingle_k)
+    sh = _char_shingles(text)
     # (H, S) permutation hashes -> row-wise min
     hv = (a[:, None] * sh[None, :] + b[:, None]) % _MERSENNE
     return hv.min(axis=1).tolist()
 
 
-def minhash_signatures(df: DataFrame, num_hashes: int = 64) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     """(doc_id, sig array<long>) over `text`, 5-char shingles, seed 7 —
     one vectorized pandas UDF, O(shingles x H) numpy."""
     a, b = _minhash_params(num_hashes)
 
     @F.pandas_udf(ArrayType(LongType()))
     def _sig(texts: pd.Series) -> pd.Series:
-        return pd.Series([minhash_sig(t, a, b, num_hashes, 5) for t in texts])
+        return pd.Series([minhash_sig(t, a, b, num_hashes) for t in texts])
 
     return df.select("doc_id", _sig(F.col("text")).alias("sig"))
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.7,
-) -> DataFrame:
-    """Near-duplicate candidate pairs (id_a < id_b, est_jaccard >= threshold)
-    among the `text`s of a (doc_id, text) frame.
+def minhash_lsh_pairs(df: DataFrame) -> DataFrame:
+    """Near-duplicate candidate pairs (id_a < id_b, est_jaccard >=
+    LSH_THRESHOLD) among the `text`s of a (doc_id, text) frame.
 
     Plan shape: sig UDF (evaluated ONCE) → degenerate-signature filter →
     explode bands → groupBy (band, bucket) collect_list (one shuffle,
@@ -333,13 +328,13 @@ def minhash_lsh_pairs(
     # on (space-trim; rarer all-zero sigs, e.g. newline-only docs, pass
     # through identically in Spark and oracle and are bucket-capped).
     df = df.where(F.trim(F.col("text")) != "")
-    sigs = minhash_signatures(df, num_hashes)
+    sigs = minhash_signatures(df)
     # the band keys are not carried in the member struct: only the
     # banding needs them, and they'd add 128 B/member to the shuffle
     members = _bucket_members(
         sigs,
         F.struct(F.col("doc_id").alias("id"), F.col("sig")),
-        _band_keys("sig", bands, num_hashes // bands),
+        _band_keys(),
     )
 
     def _est(x, y):
@@ -350,7 +345,7 @@ def minhash_lsh_pairs(
                     lambda v: v == 1,
                 )
             ).cast("double")
-            / F.lit(num_hashes)
+            / F.lit(NUM_HASHES)
         )
 
     def _est_matrix(ms):
@@ -360,15 +355,15 @@ def minhash_lsh_pairs(
         eq = np.zeros((len(ms), len(ms)), dtype=np.int32)
         for c in sig.T:
             eq += c[:, None] == c[None, :]
-        return eq / float(num_hashes)
+        return eq / float(NUM_HASHES)
 
     return _bucket_pairs(
         members, "est_jaccard", "double", _est, _est_matrix,
-        lambda est: est >= threshold,
+        lambda est: est >= LSH_THRESHOLD,
     )
 
 
-def lsh_bucket_stats(df: DataFrame, bands: int = 16) -> DataFrame:
+def lsh_bucket_stats(df: DataFrame) -> DataFrame:
     """Bucket-size distribution of the 64-hash minhash banding of `text`
     — the diagnostic a corpus operator runs BEFORE a 100-TB dedup pass to
     check the bucket cap and predict candidate-pair volume. One row per
@@ -380,7 +375,7 @@ def lsh_bucket_stats(df: DataFrame, bands: int = 16) -> DataFrame:
     sigs = minhash_signatures(df)
     banded = sigs.select(
         # outer: see _bucket_members
-        F.posexplode_outer(_band_keys("sig", bands, 64 // bands))
+        F.posexplode_outer(_band_keys())
         .alias("band", "bucket")
     )
     sizes = banded.groupBy("band", "bucket").agg(
@@ -475,7 +470,7 @@ def hamming_near_pairs(
     members = _bucket_members(
         df,
         F.struct(F.col(id_col).alias("id"), F.col(hash_col).alias("sh")),
-        _chunk_keys(hash_col, 64, chunks),
+        _chunk_keys(hash_col, chunks),
     )
 
     def _hamming_matrix(ms):
@@ -504,8 +499,8 @@ _POPCOUNT16 = np.array(
 )
 
 
-def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """Near-dup pairs of (doc_id, text) docs by simhash —
+def simhash_near_pairs(df: DataFrame) -> DataFrame:
+    """Near-dup pairs of (doc_id, text) docs by simhash within hamming 6 —
     simhash_column ∘ hamming_near_pairs. Empty/whitespace docs are
     filtered on the INPUT text (not on simhash != 0: a filter referencing the UDF output gets pushed below
     the exchange and double-evaluates the UDF — see minhash_lsh_pairs);
@@ -513,7 +508,7 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     engines and are bucket-capped."""
     df = df.where(F.trim(F.col("text")) != "")
     sims = simhash_column(df)
-    return hamming_near_pairs(sims, "simhash", "doc_id", max_hamming)
+    return hamming_near_pairs(sims, "simhash", "doc_id", 6)
 
 
 # --------------------------------------------------------------------------

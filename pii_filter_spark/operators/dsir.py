@@ -28,18 +28,18 @@ oracle reproduces the result bit-for-bit:
   and AQE decisions.
 
 Scale shape (10^12 docs): explode tokens -> groupBy(bucket) with
-map-side partial aggregation into a <= num_buckets-row exact count
+map-side partial aggregation into a <= NUM_BUCKETS-row exact count
 table (bounded collect — the mixing.mixture_rates pattern) -> pure-
-Python log-ratios -> the <= num_buckets ratio values constant-fold into
+Python log-ratios -> the <= NUM_BUCKETS ratio values constant-fold into
 ONE literal array, and every raw document scores itself in place with a
 single `aggregate` higher-order function (per-token md5 bucket ->
 element_at into the literal -> exact long sum) -> TakeOrderedAndProject
-for the global top-k.  The scoring side therefore has ZERO shuffles: no
+for the global top-K.  The scoring side therefore has ZERO shuffles: no
 exploded-token exchange keyed by doc_id (the previous shape's dominant
 cost — token rows outnumber documents by the mean doc length), no join.
 No global sort of the corpus, no skew risk (md5 buckets are uniform by
 construction), and the only driver-side state is the count/ratio table,
-capped at num_buckets rows.  The integer micro-nat sum is
+capped at NUM_BUCKETS rows.  The integer micro-nat sum is
 order-independent, so the HOF fold is bit-identical to the previous
 groupBy sum and to the fixture oracle.  The token stream is recomputed
 for the two consumers rather than cached — at 100 TB a second columnar
@@ -56,52 +56,51 @@ from pyspark.sql import functions as F
 
 from .export_prep import half_up_int
 
+NUM_BUCKETS = 1024  # hashed token buckets
+ALPHA = 0.5  # additive smoothing of the bucket distributions
+K = 100  # documents selected
 
-def _token_array(text_col: str) -> Column:
-    """Whitespace tokens of lowercased text — the SAME tokenization as
+def _token_array() -> Column:
+    """Whitespace tokens of lowercased `text` — the SAME tokenization as
     textstats.top_ngrams / contamination_flags so one DuckDB recipe
     (regexp_replace + string_split + list_filter) oracles all of them."""
     return F.filter(
         F.split(
-            F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " "), " "
+            F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "
         ),
         lambda w: w != "",
     )
 
 
-def hashed_bucket(col: Column, num_buckets: int) -> Column:
-    """Portable token -> bucket hash: first 28 bits of md5, mod buckets.
-    Pure-Python twin: int(md5(w.encode()).hexdigest()[:7], 16) % buckets;
+def hashed_bucket(col: Column) -> Column:
+    """Portable token -> bucket hash: first 28 bits of md5, mod NUM_BUCKETS.
+    Pure-Python twin: int(md5(w.encode()).hexdigest()[:7], 16) % NUM_BUCKETS;
     DuckDB equivalent:
-    CAST(concat('0x', substr(md5(w), 1, 7)) AS BIGINT) % num_buckets."""
+    CAST(concat('0x', substr(md5(w), 1, 7)) AS BIGINT) % NUM_BUCKETS."""
     return F.pmod(
         F.conv(F.substring(F.md5(col.cast("binary")), 1, 7), 16, 10).cast("long"),
-        F.lit(num_buckets),
+        F.lit(NUM_BUCKETS),
     )
 
 
-def log_ratio_unats(
-    ct: int, cr: int, tt: int, tr: int, num_buckets: int, alpha: float = 0.5
-) -> int:
+def log_ratio_unats(ct: int, cr: int, tt: int, tr: int) -> int:
     """Smoothed log(p_target/p_raw) for one bucket, in integer micro-nats.
     Pure function of exact integer counts — the single place `ln` is ever
     evaluated; shared verbatim by the Spark plan (as literals) and the
     fixture oracle (oracle_support.dsir_selection_sql)."""
-    lr = math.log((ct + alpha) / (tt + alpha * num_buckets)) - math.log(
-        (cr + alpha) / (tr + alpha * num_buckets)
+    lr = math.log((ct + ALPHA) / (tt + ALPHA * NUM_BUCKETS)) - math.log(
+        (cr + ALPHA) / (tr + ALPHA * NUM_BUCKETS)
     )
     return half_up_int(lr * 1e6)
 
 
-def ratio_table_rows(
-    counts: Dict[int, Tuple[int, int]], num_buckets: int, alpha: float = 0.5
-) -> List[Tuple[int, int]]:
+def ratio_table_rows(counts: Dict[int, Tuple[int, int]]) -> List[Tuple[int, int]]:
     """(bucket, lr_unats) rows from exact per-bucket (target, raw) counts.
-    <= num_buckets rows — broadcastable by construction."""
+    <= NUM_BUCKETS rows — broadcastable by construction."""
     tt = sum(ct for ct, _ in counts.values())
     tr = sum(cr for _, cr in counts.values())
     return [
-        (b, log_ratio_unats(ct, cr, tt, tr, num_buckets, alpha))
+        (b, log_ratio_unats(ct, cr, tt, tr))
         for b, (ct, cr) in sorted(counts.items())
     ]
 
@@ -109,7 +108,7 @@ def ratio_table_rows(
 def _bucket_counts(tokens: DataFrame) -> Dict[int, Tuple[int, int]]:
     """Exact per-bucket (target, raw) token counts for a token frame
     with columns (_b: long bucket, _tgt: boolean).  Collected driver-side
-    (<= num_buckets rows, the bounded mixing.mixture_rates pattern)."""
+    (<= NUM_BUCKETS rows, the bounded mixing.mixture_rates pattern)."""
     return {
         int(r["_b"]): (int(r["ct"]), int(r["cr"]))
         for r in tokens.groupBy("_b")
@@ -121,35 +120,29 @@ def _bucket_counts(tokens: DataFrame) -> Dict[int, Tuple[int, int]]:
     }
 
 
-def dsir_select(
-    df: DataFrame,
-    is_target: Column,
-    *,
-    num_buckets: int = 1024,
-    k: int = 100,
-) -> DataFrame:
-    """Top-k raw documents by DSIR importance weight (smoothing alpha 0.5)
-    of their `text` against the target slice selected by `is_target`.
+def dsir_select(df: DataFrame, is_target: Column) -> DataFrame:
+    """Top-K raw documents by DSIR importance weight of their `text`
+    against the target slice selected by `is_target`.
     Returns (doc_id, dsir_weight_unats), deterministic under the total
     order (weight desc, id asc)."""
     tok = df.select(
         is_target.alias("_tgt"),
-        F.explode(_token_array("text")).alias("_w"),
-    ).select("_tgt", hashed_bucket(F.col("_w"), num_buckets).alias("_b"))
+        F.explode(_token_array()).alias("_w"),
+    ).select("_tgt", hashed_bucket(F.col("_w")).alias("_b"))
     counts = _bucket_counts(tok)
-    lr = dict(ratio_table_rows(counts, num_buckets))
+    lr = dict(ratio_table_rows(counts))
     # dense bucket -> micro-nat lookup; buckets never seen in the count
     # pass cannot appear at scoring time (scoring tokens are a subset of
     # counted tokens), but get the principled (0, 0) smoothed value
     tt = sum(ct for ct, _ in counts.values())
     tr = sum(cr for _, cr in counts.values())
-    empty = log_ratio_unats(0, 0, tt, tr, num_buckets)
+    empty = log_ratio_unats(0, 0, tt, tr)
     ratio_arr = F.array(
-        *[F.lit(int(lr.get(b, empty))) for b in range(num_buckets)]
+        *[F.lit(int(lr.get(b, empty))) for b in range(NUM_BUCKETS)]
     )  # all-literal CreateArray — constant-folds into ONE array literal
     scored = (
         df.where(~is_target)
-        .select(F.col("doc_id"), _token_array("text").alias("_toks"))
+        .select(F.col("doc_id"), _token_array().alias("_toks"))
         .where(F.size("_toks") > 0)
         .select(
             "doc_id",
@@ -159,11 +152,11 @@ def dsir_select(
                 lambda acc, w: acc
                 + F.element_at(
                     ratio_arr,
-                    (hashed_bucket(w, num_buckets) + F.lit(1)).cast("int"),
+                    (hashed_bucket(w) + F.lit(1)).cast("int"),
                 ),
             ).alias("dsir_weight_unats"),
         )
     )
     return scored.orderBy(
         F.desc("dsir_weight_unats"), F.asc("doc_id")
-    ).limit(k)
+    ).limit(K)

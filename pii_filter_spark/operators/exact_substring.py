@@ -11,23 +11,23 @@ operator the north rule's pipeline tier mandates.
 
 The paper's suffix-array construction is a shared-memory algorithm; the
 Spark-native equivalent is fixed-length shingle spans with stride 1:
-every duplicated `span_tokens`-gram beyond its global first occurrence
+every duplicated SPAN_TOKENS-gram beyond its global first occurrence
 is removed, which removes exactly the token set belonging to duplicated
-substrings of length >= span_tokens (the paper's own deployment uses a
-50-token threshold — a duplicated region of length L >= span covers
-L-span+1 duplicate grams whose union is the full region).
+substrings of length >= SPAN_TOKENS (a duplicated region of length
+L >= span covers L-span+1 duplicate grams whose union is the full
+region).
 
 Semantics (identical in Spark and the pure-Python fixture twin):
   * tokens = whitespace split of trimmed text (original case — the
     surviving text is reconstructed from them, single-space joined);
-  * span hash = md5 of span_tokens consecutive tokens joined with one
+  * span hash = md5 of SPAN_TOKENS consecutive tokens joined with one
     space, computed IN-ROW via higher-order functions (transform /
     sequence / slice) — no per-doc window, no Python;
   * the occurrence with the smallest (doc_id, start_idx) is kept;
     every token of every later occurrence is removed (overlapping
     removals union — same deterministic rule as span_dedup);
   * output per input row: (doc_id, n_tokens, n_removed, text_dedup).
-    Docs shorter than span_tokens survive intact.
+    Docs shorter than SPAN_TOKENS survive intact.
 
 Scale shape (100 TB): one codegen'd projection computes all span hashes
 in-row; one explode of (doc, start, hash) — narrow rows; ONE shuffle on
@@ -49,35 +49,29 @@ from pyspark.sql import functions as F
 
 from .quality_stage import ASCII_WS
 
-DEFAULT_SPAN_TOKENS = 50  # Lee et al. 2022's deployed threshold
+# Lee et al. 2022 deploy 50 tokens; the synthetic documents average ~54
+# tokens, so 20 keeps cross-document duplication visible
+SPAN_TOKENS = 20
 
 
-def _tokens_col(text_col: str):
+def _tokens_col():
     """array<string> of original-case whitespace tokens (trim + split +
     drop empties) — reconstruction-safe, same recipe as dsir/textstats.
     NULL text behaves as empty (the twin's `text or ""`)."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
+    txt = F.coalesce(F.col("text"), F.lit(""))
     return F.filter(
         F.split(F.regexp_replace(F.trim(txt), r"\s+", " "), " "),
         lambda w: w != "",
     )
 
 
-def exact_substring_dedup(
-    df: DataFrame,
-    span_tokens: int = DEFAULT_SPAN_TOKENS,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, n_tokens, n_removed, text_dedup) with every duplicated
-    span_tokens-gram beyond its global first occurrence removed."""
-    if span_tokens < 2:
-        raise ValueError("span_tokens must be >= 2")
-    span = F.lit(span_tokens)
+def exact_substring_dedup(df: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, n_removed, text_dedup) of (doc_id, text) rows,
+    with every duplicated SPAN_TOKENS-gram beyond its global first
+    occurrence removed."""
+    span = F.lit(SPAN_TOKENS)
 
-    toks = df.select(
-        F.col(id_col).alias("_id"), _tokens_col(text_col).alias("toks")
-    )
+    toks = df.select(F.col("doc_id").alias("_id"), _tokens_col().alias("toks"))
     n = F.size("toks")
     # all span hashes of one doc, computed in-row — no per-doc window
     span_hashes = F.when(
@@ -122,7 +116,7 @@ def exact_substring_dedup(
         ),
     )
     return joined.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         n.alias("n_tokens"),
         (n - F.size(kept)).alias("n_removed"),
         F.array_join(F.transform(kept, lambda p: p["x"]), " ").alias(
@@ -145,7 +139,7 @@ def _tokenize(text: str) -> List[str]:
 
 
 def exact_substring_dedup_rows(
-    rows: Iterable[Tuple[int, str]], span_tokens: int = DEFAULT_SPAN_TOKENS
+    rows: Iterable[Tuple[int, str]],
 ) -> List[Tuple[int, int, int, str]]:
     """Twin of exact_substring_dedup: processing docs in id order and
     spans in start order IS the (doc_id, start_idx) window order."""
@@ -154,13 +148,13 @@ def exact_substring_dedup_rows(
     removed: Dict[int, set] = {}
     for d in sorted(toks):
         ts = toks[d]
-        for i in range(len(ts) - span_tokens + 1):
+        for i in range(len(ts) - SPAN_TOKENS + 1):
             key = hashlib.md5(
-                " ".join(ts[i : i + span_tokens]).encode("utf-8")
+                " ".join(ts[i : i + SPAN_TOKENS]).encode("utf-8")
             ).hexdigest()
             if key in first:
                 removed.setdefault(d, set()).update(
-                    range(i, i + span_tokens)
+                    range(i, i + SPAN_TOKENS)
                 )
             else:
                 first[key] = (d, i)

@@ -82,28 +82,31 @@ def assign_aspect_buckets(df: DataFrame) -> DataFrame:
     )
 
 
-def assign_shards(df: DataFrame, num_shards: int) -> DataFrame:
+NUM_SHARDS = 8
+
+
+def assign_shards(df: DataFrame) -> DataFrame:
     """Adds (shard_id, pos_in_shard): portable md5-prefix shard hash of
     `image_id` and a 1-based position under the total order (md5 hex,
     image_id). One window shuffle over a uniform key; no global sort."""
     h = F.md5(F.col("image_id").cast("binary"))
     shard = F.pmod(
-        F.conv(F.substring(h, 1, 7), 16, 10).cast("long"), F.lit(num_shards)
+        F.conv(F.substring(h, 1, 7), 16, 10).cast("long"), F.lit(NUM_SHARDS)
     )
     out = df.withColumns({"shard_id": shard, "_h": h})
     w = Window.partitionBy("shard_id").orderBy("_h", "image_id")
     return out.withColumn("pos_in_shard", F.row_number().over(w)).drop("_h")
 
 
-def export_prep(df: DataFrame, num_shards: int = 8) -> DataFrame:
+def export_prep(df: DataFrame) -> DataFrame:
     """Bucketing + sharding over (image_id, w, h): the export manifest."""
-    return assign_shards(assign_aspect_buckets(df), num_shards).select(
+    return assign_shards(assign_aspect_buckets(df)).select(
         "image_id", "w", "h", "bucket_idx", "bucket_w", "bucket_h",
         "shard_id", "pos_in_shard",
     )
 
 
-def export_prep_rows(rows, num_shards: int = 8):
+def export_prep_rows(rows):
     """Pure-Python twin of export_prep for the fixture oracle: same
     quantized argmin, same md5 shard hash, same (md5, id) ordering.
     `rows` is an iterable of dicts with image_id/w/h."""
@@ -120,7 +123,7 @@ def export_prep_rows(rows, num_shards: int = 8):
             (
                 r["image_id"], r["w"], r["h"], i,
                 DEFAULT_BUCKETS[i][0], DEFAULT_BUCKETS[i][1],
-                int(hx[:7], 16) % num_shards, hx,
+                int(hx[:7], 16) % NUM_SHARDS, hx,
             )
         )
     out = []

@@ -20,12 +20,11 @@ selections keep their names in physical plans:
 
   * quality_stage       lang, ppl, rules    (caption_quality)
   * scrub_stage         scrub               (caption_scrub)
-  * fused_quality_scrub all four            (caption_quality_scrub) —
-                        the production path (pipeline.transform) and
-                        `entry()`.
+  * pipeline.transform  all four            (caption_quality_scrub) —
+                        the production path, and `entry()`.
 
 scrub_stage(quality_stage(df)) yields the same columns and values as
-fused_quality_scrub(df) (tests/test_spark_stages.py). Pattern, dictionary
+pipeline.transform(df) (tests/test_spark_stages.py). Pattern, dictionary
 and model state compile once per Python worker at module import.
 
 Counting: given a PartCounts accumulator, the UDF also reads `part_id`
@@ -188,8 +187,3 @@ def quality_stage(df: DataFrame) -> DataFrame:
 def scrub_stage(df: DataFrame) -> DataFrame:
     """Adds scrubbed_caption, pii_masked, scrub_count."""
     return caption_stage(df, ("scrub",), "caption")
-
-
-def fused_quality_scrub(df: DataFrame) -> DataFrame:
-    """quality_stage + scrub_stage columns in one Python stage."""
-    return caption_stage(df, ALL_LAYERS, "caption")

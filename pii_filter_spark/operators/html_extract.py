@@ -70,10 +70,10 @@ def strip_html(col: Column) -> Column:
     return F.trim(out)
 
 
-def strip_html_sql(expr: str) -> str:
-    """The SAME chain as DuckDB SQL (RE2 wants the explicit 'g' flag;
-    literal steps map to replace())."""
-    out = expr
+def strip_html_sql() -> str:
+    """The SAME chain as DuckDB SQL over the `html` column (RE2 wants the
+    explicit 'g' flag; literal steps map to replace())."""
+    out = "html"
     for kind, pat, rep in _STEPS:
         sql_pat = pat.replace("'", "''")
         sql_rep = rep.replace("'", "''")

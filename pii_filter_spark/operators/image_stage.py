@@ -24,7 +24,14 @@ from ..images import decode_image, psnr
 from ..images.codecs import encode_image
 from ..sources.synth import LOSSY_QUALITY
 from ..video.avi import decode_avi_mjpeg
+from .export_prep import DEFAULT_BUCKETS
 from .rowmap import map_rows
+
+FRAME_STRIDE = 2  # sample_video_frames keeps every 2nd frame
+REHOST_QUALITY = 90  # JPEG quality of the re-hosted copies
+# export resize targets: the SDXL buckets at 1/16 scale (ratio-driven,
+# and the synthetic inputs are thumbnails)
+RESIZE_BUCKETS: tuple = tuple((w // 16, h // 16) for w, h in DEFAULT_BUCKETS)
 
 VERIFY_SCHEMA = (
     "image_id string, decode_ok boolean, dims_ok boolean, "
@@ -99,9 +106,9 @@ FRAME_SCHEMA = (
 )
 
 
-def sample_video_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Every-Nth-frame sampling over a video `bytes` column of MJPEG AVI
-    clips (video/avi.py).
+def sample_video_frames(df: DataFrame) -> DataFrame:
+    """Every-FRAME_STRIDE-th-frame sampling over a video `bytes` column of
+    MJPEG AVI clips (video/avi.py).
 
     A row-mapping fan-out (one input row → many frame rows), Arrow-
     batched, column-pruned to (image_id, bytes). Clips the codec rejects
@@ -116,7 +123,7 @@ def sample_video_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
         except ValueError:
             return
         for idx, px in enumerate(frames):
-            if idx % every_n == 0:
+            if idx % FRAME_STRIDE == 0:
                 yield (
                     image_id, idx, px.shape[1], px.shape[0],
                     float(px.mean()), encode_image(px, "png"),
@@ -145,15 +152,15 @@ def compute_phash(df: DataFrame) -> DataFrame:
     )
 
 
-def reencode_variants(df: DataFrame, quality: int) -> DataFrame:
-    """Lossy re-encodes of each image (decode -> jpeg at `quality`) with
+def reencode_variants(df: DataFrame) -> DataFrame:
+    """Lossy re-encodes of each image (decode -> jpeg at REHOST_QUALITY) with
     "_re"-suffixed ids — the deterministic stand-in for the re-crawled /
     re-hosted copies a web corpus contains. Undecodable rows get no
     variant."""
 
     def _re(image_id, data):
         try:
-            out = encode_image(decode_image(bytes(data)), "jpeg", quality=quality)
+            out = encode_image(decode_image(bytes(data)), "jpeg", quality=REHOST_QUALITY)
         except ValueError:
             return
         yield image_id + "_re", out
@@ -161,10 +168,8 @@ def reencode_variants(df: DataFrame, quality: int) -> DataFrame:
     return map_rows(df, ["image_id", "bytes"], "image_id string, bytes binary", _re)
 
 
-def resize_export_row(
-    data: bytes, buckets: tuple, quality: int
-) -> tuple:
-    """Pure per-image export resize: decode -> pick the aspect bucket
+def resize_export_row(data: bytes) -> tuple:
+    """Pure per-image export resize: decode -> pick the RESIZE_BUCKETS entry
     minimizing |log(w/h) - log(bw/bh)| in integer micro-log units
     (EXACTLY export_prep's Catalyst argmin, ties to the lowest index) ->
     exact area-average resample to (bh, bw) -> re-encode through the
@@ -177,8 +182,7 @@ def resize_export_row(
     from ..images.phash import area_resize_rgb
     from .export_prep import _log_aspect_micro
 
-    if not buckets:
-        raise ValueError("buckets must be non-empty")
+    buckets = RESIZE_BUCKETS
     px = decode_image(bytes(data))
     h, w = px.shape[0], px.shape[1]
     la = _log_aspect_micro(float(w), float(h))
@@ -188,42 +192,29 @@ def resize_export_row(
     )
     bw, bh = buckets[best]
     out = area_resize_rgb(px, bh, bw)
-    jb = encode_jpeg(out, quality=quality)
+    jb = encode_jpeg(out, quality=LOSSY_QUALITY)
     return bw, bh, len(jb), hashlib.md5(jb).hexdigest(), jb
 
 
-def resize_to_buckets(
-    df: DataFrame,
-    buckets: tuple,
-    quality: int = LOSSY_QUALITY,
-    with_bytes: bool = False,
-) -> DataFrame:
+def resize_to_buckets(df: DataFrame) -> DataFrame:
     """Training-export resize: every image decoded, area-resampled to its
     SDXL-style aspect bucket, re-encoded as baseline JPEG — ONE Arrow
-    pass, bytes never shuffle. with_bytes=True emits the re-encoded
-    bytes for a writeback job; default emits scalar facts (len + md5) so
-    the driver query stays cheap to hash-check."""
-    if not buckets:
-        # misconfiguration must fail fast here — inside the task it
-        # would be swallowed by the per-row quarantine below
-        raise ValueError("buckets must be non-empty")
-    width = 5 if with_bytes else 4
+    pass, bytes never shuffle. Emits scalar facts (len + md5) so the
+    driver query stays cheap to hash-check."""
 
     def _resize(image_id, data):
         try:
-            facts = resize_export_row(data, buckets, quality)
+            facts = resize_export_row(data)
         except ValueError:
             # quarantine undecodable rows (null facts) instead of
             # failing the whole export task deterministically
             facts = (None,) * 5
-        yield (image_id, *facts[:width])
+        yield (image_id, *facts[:4])
 
     schema = (
         "image_id string, bucket_w int, bucket_h int, "
         "out_len long, out_md5 string"
     )
-    if with_bytes:
-        schema += ", out_bytes binary"
     return map_rows(df, ["image_id", "bytes"], schema, _resize)
 
 

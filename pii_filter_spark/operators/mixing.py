@@ -40,30 +40,29 @@ from pyspark.sql import functions as F
 
 _HASH_BITS = 60
 _HASH_SPACE = 1 << _HASH_BITS
+TEMPERATURE = 2.0  # XLM-R / mT5 flattening
+TARGET_ROWS = 200  # expected sample size
 
 
-def mixture_rates(
-    counts: Dict[str, int], temperature: float, target_rows: int
-) -> Dict[str, Tuple[float, int]]:
+def mixture_rates(counts: Dict[str, int]) -> Dict[str, Tuple[float, int]]:
     """source -> (keep_rate, integer threshold in the 60-bit hash space).
 
-    q_s ∝ (n_s / N)^(1/T), rate_s = min(1, q_s * target / n_s). Sources
-    are iterated in sorted order everywhere a float sum occurs.
+    q_s ∝ (n_s / N)^(1/T), rate_s = min(1, q_s * target / n_s) with
+    T = TEMPERATURE and target = TARGET_ROWS. Sources are iterated in
+    sorted order everywhere a float sum occurs.
     """
-    if temperature <= 0:
-        raise ValueError("temperature must be > 0")
     srcs = sorted(counts)
     n_total = float(sum(counts[s] for s in srcs))
     if n_total == 0:
         return {}
-    weights = {s: math.pow(counts[s] / n_total, 1.0 / temperature) for s in srcs}
+    weights = {s: math.pow(counts[s] / n_total, 1.0 / TEMPERATURE) for s in srcs}
     z = 0.0
     for s in srcs:
         z += weights[s]
     out = {}
     for s in srcs:
         q = weights[s] / z
-        rate = min(1.0, q * float(target_rows) / float(counts[s]))
+        rate = min(1.0, q * float(TARGET_ROWS) / float(counts[s]))
         out[s] = (rate, int(math.floor(rate * _HASH_SPACE)))
     return out
 
@@ -77,11 +76,7 @@ def hash60(col) -> "F.Column":
     ).cast("long")
 
 
-def temperature_sample(
-    df: DataFrame,
-    temperature: float,
-    target_rows: int,
-) -> DataFrame:
+def temperature_sample(df: DataFrame) -> DataFrame:
     """Rows surviving the temperature-mixed sample, with the applied
     per-source keep rate attached."""
     counts = {
@@ -89,7 +84,7 @@ def temperature_sample(
         for r in df.groupBy("source").count().collect()
         if r[0] is not None
     }
-    rates = mixture_rates(counts, temperature, target_rows)
+    rates = mixture_rates(counts)
     if not rates:
         return df.select(
             F.col("doc_id"),

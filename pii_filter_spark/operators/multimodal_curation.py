@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .alignment import DEFAULT_THRESHOLD, caption_embedding, image_embedding
+from .alignment import STUB_THRESHOLD, caption_embedding, image_embedding
 from .rowmap import map_rows
 
 _FUSED_SCHEMA = (
@@ -51,10 +51,7 @@ def _fused_decode_stage(df: DataFrame) -> DataFrame:
     return map_rows(df, ["image_id", "bytes", "caption"], _FUSED_SCHEMA, _go)
 
 
-def multimodal_curation(
-    df: DataFrame,
-    align_threshold: float = DEFAULT_THRESHOLD,
-) -> DataFrame:
+def multimodal_curation(df: DataFrame) -> DataFrame:
     """(image_id, quality_ok, align_ok, clip_sim, is_survivor, keep).
 
     keep = metadata quality AND alignment AND first occurrence of the
@@ -82,7 +79,7 @@ def multimodal_curation(
         "image_id",
         "pixel_phash",
         F.round(dot, 4).alias("clip_sim"),
-        F.coalesce(dot >= F.lit(align_threshold), F.lit(False)).alias(
+        F.coalesce(dot >= F.lit(STUB_THRESHOLD), F.lit(False)).alias(
             "align_ok"
         ),
     ).localCheckpoint()

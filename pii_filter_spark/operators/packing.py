@@ -29,8 +29,8 @@ addition is associative, so the two-phase result is bit-identical.
 
 Scale notes (100 TB): one shuffle (hash by grp for the window) plus one
 tiny agg; group count is chosen so each window partition holds ~rows/
-n_groups rows. Sparse or clustered ids skew group sizes but never break
-correctness; pass a larger `n_groups` to re-balance.
+N_GROUPS rows. Sparse or clustered ids skew group sizes but never break
+correctness.
 """
 
 from __future__ import annotations
@@ -38,16 +38,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+SEQ_LEN = 2048  # tokens per packed block
+N_GROUPS = 64  # contiguous id ranges of the two-phase prefix sum
 
-def pack_sequences(df: DataFrame, seq_len: int, n_groups: int = 64) -> DataFrame:
-    """Per-document packing coordinates for fixed-`seq_len` blocks.
+
+def pack_sequences(df: DataFrame) -> DataFrame:
+    """Per-document packing coordinates for fixed SEQ_LEN-token blocks.
 
     Returns (doc_id, n_tokens, tok_start, bin_id, bin_offset) where
     tok_start is the global exclusive token offset in id order,
-    bin_id = tok_start // seq_len and bin_offset = tok_start % seq_len.
+    bin_id = tok_start // SEQ_LEN and bin_offset = tok_start % SEQ_LEN.
     """
-    if seq_len <= 0:
-        raise ValueError("seq_len must be > 0")
     bounds = df.agg(
         F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
     ).collect()[0]
@@ -58,7 +59,7 @@ def pack_sequences(df: DataFrame, seq_len: int, n_groups: int = 64) -> DataFrame
             "bin_id long, bin_offset long",
         )
     lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    span = max(1, (hi - lo + n_groups) // n_groups)
+    span = max(1, (hi - lo + N_GROUPS) // N_GROUPS)
 
     grp = F.floor((F.col("doc_id") - F.lit(lo)) / F.lit(span)).alias("grp")
     base = df.select(
@@ -99,6 +100,6 @@ def pack_sequences(df: DataFrame, seq_len: int, n_groups: int = 64) -> DataFrame
         base.select(F.col("doc_id"), F.col("n_tokens"), start)
         # `div` is exact integral division — a double-typed `/` would
         # round above 2^53 token offsets, reachable at corpus scale.
-        .withColumn("bin_id", F.expr(f"tok_start div {int(seq_len)}"))
-        .withColumn("bin_offset", F.col("tok_start") % F.lit(seq_len))
+        .withColumn("bin_id", F.expr(f"tok_start div {SEQ_LEN}"))
+        .withColumn("bin_offset", F.col("tok_start") % F.lit(SEQ_LEN))
     )

@@ -12,11 +12,11 @@ The reference repo (a request-proxy PII scrubber,
 all; this operator supplies the LAION-shaped one for the north rule's
 image+caption curation tier.
 
-Stand-in weights (injectable seam, same policy as the CLIP encoders in
+Stand-in weights (same policy as the CLIP encoders in
 operators/alignment.py): `stub_head(name, dim)` derives a deterministic
 unit vector from md5 — the *released* head weights (LAION-Aesthetics
-v1's linear layer, CLIP-based-NSFW-Detector's final layer) drop into
-`probe_scores` unchanged as (k, dim) float rows. Thresholds below are
+v1's linear layer, CLIP-based-NSFW-Detector's final layer) replace
+`default_heads` as (k, dim) float rows. Thresholds below are
 calibrated to the STUB score distribution (cosine of a random unit head
 against 64-dim embeddings concentrates near 0, so the mapped aesthetic
 concentrates near 5.0 and the mapped NSFW probability near 0.5);
@@ -57,8 +57,8 @@ NSFW_MAX_MICRO = MICRO // 2  # p_nsfw < 0.5 (LAION real-head: ~0.1)
 
 
 def stub_head(name: str, dim: int) -> np.ndarray:
-    """Deterministic md5-derived unit vector — the injectable stand-in
-    for a released probe head (pure function of (name, dim))."""
+    """Deterministic md5-derived unit vector — the stand-in for a
+    released probe head (pure function of (name, dim))."""
     vals = []
     for j in range(dim):
         h = hashlib.md5(f"{name}:{j}".encode("utf-8")).hexdigest()
@@ -82,16 +82,14 @@ def _map_scores(sims: np.ndarray) -> Tuple[int, int]:
     return int(np.rint(aes * MICRO)), int(np.rint(nsfw * MICRO))
 
 
-def probe_scores(df: DataFrame, heads: Dict[str, np.ndarray] | None = None) -> DataFrame:
+def probe_scores(df: DataFrame) -> DataFrame:
     """(vec_id, aes_micro, nsfw_micro, keep) from `embedding` — one Arrow
     pass, no shuffle.
 
     keep = aes_micro >= AES_KEEP_MICRO AND nsfw_micro < NSFW_MAX_MICRO,
     evaluated as a codegen'd projection over the UDF output.
     """
-    if heads is None:
-        dim = len(df.select("embedding").first()[0])
-        heads = default_heads(dim)
+    heads = default_heads(len(df.select("embedding").first()[0]))
     mat = np.stack(
         [np.asarray(heads[n], dtype=np.float64) for n in ("aesthetic", "nsfw")]
     )
@@ -129,14 +127,10 @@ def probe_scores(df: DataFrame, heads: Dict[str, np.ndarray] | None = None) -> D
     )
 
 
-def probe_rows(
-    vecs: List[Tuple[int, Sequence[float]]],
-    heads: Dict[str, np.ndarray] | None = None,
-) -> List[tuple]:
+def probe_rows(vecs: List[Tuple[int, Sequence[float]]]) -> List[tuple]:
     """Pure twin of probe_scores for the fixture oracle.
     vecs = [(id, vector), ...]."""
-    if heads is None:
-        heads = default_heads(len(vecs[0][1]))
+    heads = default_heads(len(vecs[0][1]))
     hm = np.stack(
         [np.asarray(heads[n], dtype=np.float64) for n in ("aesthetic", "nsfw")]
     )

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 MICRO = 1_000_000
+DROP_FRAC = 0.1  # most-prototypical share of each cluster that D4 drops
 
 
 def prototypicality_scores(df: DataFrame, centroids: np.ndarray) -> DataFrame:
@@ -76,7 +77,7 @@ def prototypicality_scores(df: DataFrame, centroids: np.ndarray) -> DataFrame:
 
 def flag_prototypes(scores: DataFrame) -> DataFrame:
     """(vec_id, ivf_cluster, proto_micro, is_prototype): marks the
-    ceil(0.1 * cluster_size) most-prototypical rows per cluster
+    ceil(DROP_FRAC * cluster_size) most-prototypical rows per cluster
     (ties by lowest id — fully deterministic). D4 DROPS these."""
     w = Window.partitionBy("ivf_cluster").orderBy(
         F.desc("proto_micro"), F.asc("vec_id")
@@ -88,16 +89,12 @@ def flag_prototypes(scores: DataFrame) -> DataFrame:
         "proto_micro",
         (
             F.row_number().over(w)
-            <= F.ceil(F.count(F.lit(1)).over(wc) * F.lit(0.1))
+            <= F.ceil(F.count(F.lit(1)).over(wc) * F.lit(DROP_FRAC))
         ).alias("is_prototype"),
     )
 
 
-def prototypicality_rows(
-    vecs: list,
-    centroids: np.ndarray,
-    drop_frac: float = 0.1,
-) -> list:
+def prototypicality_rows(vecs: list, centroids: np.ndarray) -> list:
     """Pure twin of prototypicality_scores + flag_prototypes for the
     fixture oracle. vecs = [(id, vector), ...]."""
     import math
@@ -116,7 +113,7 @@ def prototypicality_rows(
     flags = {}
     for c, members in by_cluster.items():
         members.sort(key=lambda t: (-t[1], t[0]))
-        cut = math.ceil(len(members) * drop_frac)
+        cut = math.ceil(len(members) * DROP_FRAC)
         for rank, (i, _) in enumerate(members, start=1):
             flags[i] = rank <= cut
     return [(i, c, p, flags[i]) for i, c, p in scored]

@@ -55,6 +55,8 @@ from ..core.quality import TARGET_LANG, drop_reasons
 
 DIM = 1 << 13  # 8192 hashed feature buckets (64 KiB of float64 weights)
 PARETO_ALPHA = 9.0  # GPT-3's alpha (Brown et al. 2020, Appendix A)
+EPOCHS = 30  # full-batch gradient steps
+TRAIN_SAMPLE = 512  # docs in the bounded training sample
 
 _TOKEN_RE = re.compile(r"\w+", re.UNICODE)
 
@@ -134,10 +136,7 @@ def distill_label(text: str) -> int:
     return 1 if not drop_reasons(text, lang=TARGET_LANG, ppl=0.0) else 0
 
 
-def train_quality_classifier(
-    samples: List[Tuple[str, int]],
-    epochs: int = 30,
-) -> Tuple[List[float], float]:
+def train_quality_classifier(samples: List[Tuple[str, int]]) -> Tuple[List[float], float]:
     """Full-batch logistic regression, deterministic (see module doc).
 
     `samples` must already be in a canonical order (ascending id) —
@@ -155,7 +154,7 @@ def train_quality_classifier(
     w_neg = n / (2.0 * n_neg) if n_neg else 0.0
     w = [0.0] * DIM
     b = 0.0
-    for _ in range(epochs):
+    for _ in range(EPOCHS):
         grad: Dict[int, float] = {}
         gb = 0.0
         for feats, y in featurized:
@@ -171,10 +170,11 @@ def train_quality_classifier(
     return w, b
 
 
-def training_sample(df: DataFrame, sample: int = 512) -> List[Tuple[str, int]]:
-    """Bounded driver-side sample in ascending id order (cluster-
-    invariant, like train_ivf_centroids) with distilled labels."""
-    rows = df.select("doc_id", "text").orderBy("doc_id").limit(sample).collect()
+def training_sample(df: DataFrame) -> List[Tuple[str, int]]:
+    """Bounded driver-side sample of TRAIN_SAMPLE docs in ascending id
+    order (cluster-invariant, like train_ivf_centroids) with distilled
+    labels."""
+    rows = df.select("doc_id", "text").orderBy("doc_id").limit(TRAIN_SAMPLE).collect()
     return [(r[1], distill_label(r[1])) for r in rows]
 
 

@@ -20,12 +20,12 @@ from pyspark.sql import functions as F
 ASCII_WS = "[ \\t\\n\\x0B\\f\\r]+"
 
 
-def _staged_rules(df, text_col: str, carry_cols=()):
-    """Stage the token split once per row; returns the staged frame
-    (carry_cols..., text, _wc, _tok_chars, _hashes) and the PASS
+def _staged_rules(df, carry_cols=()):
+    """Stage the token split of `text` once per row; returns the staged
+    frame (carry_cols..., text, _wc, _tok_chars, _hashes) and the PASS
     condition of every rule over it, so heuristic_keep and
     rule_ablation share expressions and thresholds and cannot drift."""
-    c = F.col(text_col)
+    c = F.col("text")
     staged = df.select(
         *carry_cols, c, F.split(F.trim(c), ASCII_WS).alias("_toks")
     ).select(
@@ -51,25 +51,25 @@ def _staged_rules(df, text_col: str, carry_cols=()):
     return staged, passes
 
 
-def heuristic_keep(df, text_col: str, carry_cols):
-    """SQL-expressible C4/Gopher rule subset as a reusable stage: returns
-    (carry_cols..., keep boolean). Shared by the standalone
+def heuristic_keep(df, carry_cols):
+    """SQL-expressible C4/Gopher rule subset over `text` as a reusable
+    stage: returns (carry_cols..., keep boolean). Shared by the standalone
     quality_filter_heuristic query and the curation_pipeline
     composite so the thresholds cannot drift between them (their DuckDB
     oracles render the same rules)."""
-    staged, passes = _staged_rules(df, text_col, carry_cols)
+    staged, passes = _staged_rules(df, carry_cols)
     keep = functools.reduce(operator.and_, passes.values())
     return staged.select(*carry_cols, keep.alias("keep"))
 
 
-def rule_ablation(df, text_col: str = "text"):
+def rule_ablation(df):
     """Per-rule loss accounting over the heuristic_keep rule set: for
     every rule, how many docs FAIL it (n_fail) and how many are dropped
     by it ALONE (n_unique_fail — the docs that rule uniquely costs the
     corpus; the number ablation studies argue about). ONE pass: five
     boolean columns → one partial-aggregated global row → a 5-row
     stack; no UDF, one tiny final exchange."""
-    staged, passes = _staged_rules(df, text_col)
+    staged, passes = _staged_rules(df)
     flagged = staged.select(
         *[(~v).alias(f"_f_{k}") for k, v in passes.items()]
     )

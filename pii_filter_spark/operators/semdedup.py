@@ -37,27 +37,23 @@ from pyspark.sql import functions as F
 from .components import connected_components
 from .similarity import _cosine_member, cosine_pairs_from_buckets, ivf_assign
 
-
-def semdedup(
-    df: DataFrame,
-    centroids: "np.ndarray",
-    threshold: float = 0.85,
-) -> DataFrame:
+def semdedup(df: DataFrame, centroids: "np.ndarray") -> DataFrame:
     """(vec_id, ivf_cluster, keep) — keep=false for every non-smallest
-    member of a semantic-duplicate component."""
+    member of a semantic-duplicate component (pairs at cosine >=
+    similarity.NEAR_COS)."""
     assigned = ivf_assign(df, centroids).select(
         F.col("vec_id"), F.col("embedding"), F.col("ivf_cluster")
     )
     members = (
         assigned.select(
-            "ivf_cluster", _cosine_member("vec_id", "embedding").alias("m")
+            "ivf_cluster", _cosine_member().alias("m")
         )
         .where(F.col("m.nrm") > 0)
         .groupBy("ivf_cluster")
         .agg(F.collect_list("m").alias("ms"))
         .where(F.size("ms") > 1)
     )
-    pairs = cosine_pairs_from_buckets(members, threshold)
+    pairs = cosine_pairs_from_buckets(members)
     dropped = (
         connected_components(pairs)
         .where(F.col("id") != F.col("component"))

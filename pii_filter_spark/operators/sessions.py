@@ -18,16 +18,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+GAP_MINUTES = 360  # silence that ends a session
 
-def sessionize(df: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Per-user gap sessionization → one row per session.
+def sessionize(df: DataFrame) -> DataFrame:
+    """Per-user gap sessionization (GAP_MINUTES) → one row per session.
 
     Output: (user, session_idx, session_start, session_end, n_events,
     total_value). session_idx is 0-based in ts order per user; ties on
     ts break by event id for determinism.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap_s = gap_minutes * 60
+    gap_s = GAP_MINUTES * 60
     prev_ts = F.lag("ts").over(w)
     # Interval comparison keeps sub-second precision: unix_timestamp()
     # truncates to seconds, which would disagree with the fractional-epoch

@@ -39,20 +39,18 @@ def _unit_hash(col) -> "F.Column":
     )
 
 
-def kmv_distinct(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-    k: int = 64,
-) -> DataFrame:
-    """(key, n_hashes, kth_min, kmv_estimate) per key.
+K = 64  # minimum hash values kept per key
 
-    kmv_estimate = exact distinct count when a group has < k distinct
-    values, else (k-1)/u_k.
+
+def kmv_distinct(df: DataFrame) -> DataFrame:
+    """(event_type, n_hashes, kth_min, kmv_estimate): distinct `user_id`s
+    per `event_type`.
+
+    kmv_estimate = exact distinct count when a group has < K distinct
+    values, else (K-1)/u_K.
     """
-    hashed = df.select(
-        F.col(key_col), _unit_hash(F.col(value_col)).alias("_u")
-    ).distinct()
+    key = "event_type"
+    hashed = df.select(F.col(key), _unit_hash(F.col("user_id")).alias("_u")).distinct()
     # Two-phase top-k for hot keys: a single window per key would sort a
     # key's ENTIRE distinct-hash set in one task (billions of rows for a
     # hot key at 10^12 scale). Phase 1 keeps the k smallest per
@@ -61,23 +59,23 @@ def kmv_distinct(
     # after the distinct, so the order is total and the two-phase result
     # is row-identical to the single window.
     salt = F.pmod(F.xxhash64(F.col("_u")), F.lit(32))
-    w1 = Window.partitionBy(key_col, salt).orderBy("_u")
+    w1 = Window.partitionBy(key, salt).orderBy("_u")
     local = hashed.withColumn("_lrn", F.row_number().over(w1)).where(
-        F.col("_lrn") <= k
+        F.col("_lrn") <= K
     )
-    w = Window.partitionBy(key_col).orderBy("_u")
+    w = Window.partitionBy(key).orderBy("_u")
     topk = local.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= k
+        F.col("_rn") <= K
     )
-    agg = topk.groupBy(key_col).agg(
+    agg = topk.groupBy(key).agg(
         F.count(F.lit(1)).alias("n_hashes"),
         F.max("_u").alias("kth_min"),
     )
     est = F.when(
-        F.col("n_hashes") < k, F.col("n_hashes").cast("double")
-    ).otherwise((k - 1) / F.col("kth_min"))
+        F.col("n_hashes") < K, F.col("n_hashes").cast("double")
+    ).otherwise((K - 1) / F.col("kth_min"))
     return agg.select(
-        key_col,
+        key,
         "n_hashes",
         F.round("kth_min", 8).alias("kth_min"),
         F.round(est, 4).alias("kmv_estimate"),

@@ -15,25 +15,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SALT_COL = "_salt"
 
+def salted_count_by_key(df: DataFrame) -> DataFrame:
+    """Two-phase skew-safe count of events per `event_type`:
+    groupBy(event_type, salt) partial, then groupBy(event_type).
 
-def with_salt(df: DataFrame, id_col: str = "image_id") -> DataFrame:
-    """Deterministic per-row salt in [0, 16) derived from the row id (NOT
-    rand(), so retries/resumes land rows in the same bucket)."""
-    return df.withColumn(SALT_COL, F.pmod(F.xxhash64(F.col(id_col)), F.lit(16)))
-
-
-def salted_count_by_key(df: DataFrame, key: str, id_col: str = "image_id") -> DataFrame:
-    """Two-phase skew-safe count: groupBy(key, salt) partial, then groupBy(key).
-
-    Returns (key, cnt). Spark's hash aggregate already map-side combines,
-    but with a hot key every partial for that key still funnels into ONE
-    reducer task; the salt splits that reducer 16 ways.
+    Returns (event_type, cnt). Spark's hash aggregate already map-side
+    combines, but with a hot key every partial for that key still funnels
+    into ONE reducer task; the salt splits that reducer 16 ways. The salt
+    derives from `event_id` (NOT rand(), so retries/resumes land rows in
+    the same bucket).
     """
     partial = (
-        with_salt(df, id_col)
-        .groupBy(key, SALT_COL)
+        df.withColumn("_salt", F.pmod(F.xxhash64(F.col("event_id")), F.lit(16)))
+        .groupBy("event_type", "_salt")
         .agg(F.count(F.lit(1)).alias("_partial_cnt"))
     )
-    return partial.groupBy(key).agg(F.sum("_partial_cnt").alias("cnt"))
+    return partial.groupBy("event_type").agg(F.sum("_partial_cnt").alias("cnt"))

@@ -11,7 +11,7 @@ Semantics (identical in Spark and the DuckDB oracle):
     RE2-compatible pattern as operators/udtf_ops.SENTENCE_RE), indexed
     contiguously 0..n-1 AFTER the empty-filter — "consecutive sentences"
     means consecutive in the cleaned document;
-  * a span = `span_sentences` consecutive sentences joined with one
+  * a span = SPAN_SENTENCES consecutive sentences joined with one
     space, keyed by md5;
   * the occurrence with the smallest (doc_id, start_idx) is kept; every
     sentence of every later occurrence is removed (overlapping removals
@@ -38,34 +38,33 @@ from pyspark.sql import functions as F
 
 from .udtf_ops import SENTENCE_RE
 
+SPAN_SENTENCES = 3  # C4's three-sentence span
+
 # filter-AFTER-trim so indexes are contiguous over the cleaned sentences
 _SENTS_EXPR = (
-    "filter(transform(regexp_extract_all({col}, '{re}', 0), x -> trim(x)),"
+    "filter(transform(regexp_extract_all(text, '{re}', 0), x -> trim(x)),"
     " x -> x <> '')"
 )
 
 
-def sentences_expr(text_col: str):
-    """array<string> of trimmed, non-empty sentences of `text_col`."""
-    return F.expr(_SENTS_EXPR.format(col=text_col, re=SENTENCE_RE))
+def sentences_expr():
+    """array<string> of trimmed, non-empty sentences of `text`."""
+    return F.expr(_SENTS_EXPR.format(re=SENTENCE_RE))
 
 
-def span_dedup(df: DataFrame, span_sentences: int = 3) -> DataFrame:
+def span_dedup(df: DataFrame) -> DataFrame:
     """(doc_id, n_sentences, n_removed, text_dedup) with C4 span-dedup
     applied to `text`."""
-    if span_sentences < 2:
-        raise ValueError("span_sentences must be >= 2")
-
     sents = df.select(
         F.col("doc_id").alias("_id"),
-        F.posexplode_outer(sentences_expr("text")).alias(
+        F.posexplode_outer(sentences_expr()).alias(
             "sent_idx", "sentence"
         ),
     )
 
     w_doc = Window.partitionBy("_id").orderBy("sent_idx")
-    leads_s = [F.lead("sentence", i).over(w_doc) for i in range(span_sentences)]
-    leads_i = [F.lead("sent_idx", i).over(w_doc) for i in range(span_sentences)]
+    leads_s = [F.lead("sentence", i).over(w_doc) for i in range(SPAN_SENTENCES)]
+    leads_i = [F.lead("sent_idx", i).over(w_doc) for i in range(SPAN_SENTENCES)]
     spans = (
         sents.where(F.col("sentence").isNotNull())
         .select(

@@ -17,12 +17,12 @@ scan. The DuckDB oracle is plain SQL over the identical expression.
 
 from __future__ import annotations
 
-from typing import Dict, List, Tuple
+from typing import List, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SPLITS: List[Tuple[str, int]] = [
+SPLITS: List[Tuple[str, int]] = [
     ("train", 9800),   # cumulative thresholds out of denom
     ("val", 9900),
     ("test", 10000),
@@ -37,27 +37,18 @@ def split_bucket(id_col: Column) -> Column:
     )
 
 
-def assign_splits(df: DataFrame, splits: List[Tuple[str, int]] = None) -> DataFrame:
+def assign_splits(df: DataFrame) -> DataFrame:
     """Adds (split_bucket, split): hash-stable split membership.
 
-    `splits` is a list of (name, cumulative_threshold) ending at
-    10000; a row belongs to the first split whose threshold exceeds
-    its bucket. Membership never changes across runs/partitionings.
+    SPLITS lists (name, cumulative_threshold) up to 10000; a row belongs
+    to the first split whose threshold exceeds its bucket. Membership
+    never changes across runs/partitionings.
     """
-    splits = splits or DEFAULT_SPLITS
-    if splits[-1][1] != 10000:
-        raise ValueError("last split threshold must equal 10000")
-    if any(b[1] <= a[1] for a, b in zip(splits, splits[1:])):
-        raise ValueError("split thresholds must be strictly increasing")
     b = split_bucket(F.col("doc_id"))
     expr = None
-    for name, cum in splits[:-1]:
+    for name, cum in SPLITS[:-1]:
         cond = b < F.lit(cum)
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
             cond, F.lit(name)
         )
-    expr = (
-        F.lit(splits[-1][0]) if expr is None
-        else expr.otherwise(F.lit(splits[-1][0]))
-    )
-    return df.withColumns({"split_bucket": b, "split": expr})
+    return df.withColumns({"split_bucket": b, "split": expr.otherwise(F.lit(SPLITS[-1][0]))})

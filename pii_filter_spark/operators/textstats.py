@@ -45,19 +45,15 @@ def bpe_exact_counts(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     @pandas_udf("long")
     def _bpe(s: pd.Series) -> pd.Series:
-        from ..core.bpe import bpe_token_counts_batch
+        from ..core.bpe import frozen_bpe
 
-        return pd.Series(bpe_token_counts_batch(s), dtype="int64")
+        return pd.Series(frozen_bpe().counts_batch(s), dtype="int64")
 
     return df.select(F.col(id_col), _bpe(F.col("text")).alias("n_bpe_tokens"))
 
 
-def bpe_counts_from_merges_txt(
-    df: DataFrame,
-    merges_txt: str,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, n_bpe_tokens) under an ARBITRARY released-format vocabulary:
+def bpe_counts_from_merges_txt(df: DataFrame, merges_txt: str) -> DataFrame:
+    """(source, n_bpe_tokens) under an ARBITRARY released-format vocabulary:
     `merges_txt` is the content of a GPT-2-layout merges.txt (core/bpe
     parse_merges_txt), shipped to executors by closure capture (a merge
     table is ~KBs–1 MB — broadcast-variable territory is unnecessary) and
@@ -77,7 +73,7 @@ def bpe_counts_from_merges_txt(
             holder.append(ByteBPE.from_merges_txt(merges_txt))
         return pd.Series(holder[0].counts_batch(s), dtype="int64")
 
-    return df.select(F.col(id_col), _bpe(F.col("text")).alias("n_bpe_tokens"))
+    return df.select(F.col("source"), _bpe(F.col("text")).alias("n_bpe_tokens"))
 
 
 def fingerprints(df: DataFrame) -> DataFrame:
@@ -112,9 +108,9 @@ def perplexity_scores(df: DataFrame) -> DataFrame:
     )
 
 
-def stratified_take(df: DataFrame, stratum_col: str, n_per_stratum: int) -> DataFrame:
-    """Deterministic stratified subsample: the first n rows per stratum
-    in md5(doc_id)-order — the data-mixing/curation shape (cap each language
+def stratified_take(df: DataFrame, n_per_stratum: int) -> DataFrame:
+    """Deterministic stratified subsample: the first n rows per `lang`
+    stratum in md5(doc_id)-order — the data-mixing/curation shape (cap each language
     / source / quality bucket at a quota) with cluster-invariant row
     selection. md5 over the stringified id gives an order-stable,
     engine-portable pseudo-random permutation (same expression exists in
@@ -132,16 +128,16 @@ def stratified_take(df: DataFrame, stratum_col: str, n_per_stratum: int) -> Data
 
     h = F.md5(F.col("doc_id").cast("string"))
     salt = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(32))
-    w1 = Window.partitionBy(stratum_col, salt).orderBy(h, "doc_id")
+    w1 = Window.partitionBy("lang", salt).orderBy(h, "doc_id")
     local = (
         df.withColumn("_lrn", F.row_number().over(w1))
         .where(F.col("_lrn") <= n_per_stratum)
     )
-    w2 = Window.partitionBy(stratum_col).orderBy(h, "doc_id")
+    w2 = Window.partitionBy("lang").orderBy(h, "doc_id")
     return (
         local.withColumn("_rn", F.row_number().over(w2))
         .where(F.col("_rn") <= n_per_stratum)
-        .select(stratum_col, "doc_id", F.col("_rn").alias("sample_rank"))
+        .select("lang", "doc_id", F.col("_rn").alias("sample_rank"))
     )
 
 
@@ -253,8 +249,8 @@ def contamination_flags(docs: DataFrame, benchmark: DataFrame) -> DataFrame:
     )
 
 
-def top_ngrams(df: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
-    """Corpus-level vocabulary stats: the k most frequent word n-grams
+def top_ngrams(df: DataFrame) -> DataFrame:
+    """Corpus-level vocabulary stats: the 20 most frequent word bigrams
     with counts — the standard corpus-inspection step before choosing
     boilerplate/stop filters. Output: (ngram, cnt, rank), rank 1-based
     with (count desc, ngram asc) ties.
@@ -265,6 +261,8 @@ def top_ngrams(df: DataFrame, n: int = 2, k: int = 20) -> DataFrame:
     one tiny global sort of <= salt_buckets*k survivors — no global sort
     of the full vocabulary ever happens."""
     from pyspark.sql import Window
+
+    n, k = 2, 20
 
     toks = F.filter(
         F.split(F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " "), " "),

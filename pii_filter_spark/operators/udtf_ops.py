@@ -37,18 +37,13 @@ class SentenceSplit:
                 yield doc_id, i, s
 
 
-def split_sentences(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Apply the UDTF via SQL LATERAL over an arbitrary input frame."""
+def split_sentences(df: DataFrame) -> DataFrame:
+    """Apply the UDTF via SQL LATERAL over the (doc_id, caption) rows of
+    an arbitrary input frame."""
     spark = df.sparkSession
     spark.udtf.register("sentence_split", SentenceSplit)
-    # View name from the sanitized column names, NOT builtin hash():
-    # hash() is salted per process and collision-prone mod 10k, so two
-    # split_sentences calls with different column pairs could share (and
-    # overwrite) one global temp view.
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", f"doc_id__{text_col}")
-    view = f"_udtf_in_{safe}"
-    df.createOrReplaceTempView(view)
+    df.createOrReplaceTempView("_udtf_in_doc_id__caption")
     return spark.sql(
-        f"SELECT s.doc_id, s.sent_idx, s.sentence "
-        f"FROM {view}, LATERAL sentence_split(doc_id, {text_col}) s"
+        "SELECT s.doc_id, s.sent_idx, s.sentence "
+        "FROM _udtf_in_doc_id__caption, LATERAL sentence_split(doc_id, caption) s"
     )

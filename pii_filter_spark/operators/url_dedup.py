@@ -48,10 +48,10 @@ def normalize_url(col: Column) -> Column:
     return out
 
 
-def normalize_url_sql(expr: str) -> str:
-    """The SAME chain as DuckDB SQL over `expr` (RE2 needs the explicit
-    'g' flag where Java replaces all matches by default)."""
-    out = f"lower({expr})"
+def normalize_url_sql() -> str:
+    """The SAME chain as DuckDB SQL over the `url` column (RE2 needs the
+    explicit 'g' flag where Java replaces all matches by default)."""
+    out = "lower(url)"
     for pat, rep in _NORM_STEPS:
         # standard SQL strings don't process backslashes — quote-escape only
         sql_pat = pat.replace("'", "''")

@@ -21,11 +21,10 @@ Three rules, applied in priority order and reported as a `reason`:
 
 Every rule is pure Catalyst (regexp_extract / contains / CASE): one
 whole-stage-codegen projection, zero shuffles, and the DuckDB oracle is
-the identical expression chain. Scale shape (10^12 rows): with the
-production 4.6M-domain blocklist the literal `isin` becomes the
-provided DataFrame path — a broadcast LEFT join on the registered
-domain (still zero extra shuffles; the blocklist is ~100 MB
-broadcast-side).
+the identical expression chain. Scale shape (10^12 rows): a
+production 4.6M-domain blocklist would replace the literal `isin` with
+a broadcast LEFT join on the registered domain (still zero extra
+shuffles; the blocklist is ~100 MB broadcast-side).
 """
 
 from __future__ import annotations
@@ -76,14 +75,9 @@ def _host(norm: Column) -> Column:
     return F.regexp_replace(F.regexp_extract(norm, _HOST_RE, 1), _PORT_RE, "")
 
 
-def url_filter(df: DataFrame, blocklist_df: DataFrame | None = None) -> DataFrame:
+def url_filter(df: DataFrame) -> DataFrame:
     """(doc_id, url, host, domain, reason, keep): keep=true iff no rule
-    fires; reason names the first firing rule else NULL.
-
-    `blocklist_df` (one column `domain`) is the production-scale path:
-    a broadcast left join replaces the literal `isin`, everything else
-    identical.
-    """
+    fires; reason names the first firing rule else NULL."""
     norm = normalize_url(F.col("url"))
     host = _host(norm)
     out = df.select(
@@ -93,14 +87,7 @@ def url_filter(df: DataFrame, blocklist_df: DataFrame | None = None) -> DataFram
         F.regexp_extract(host, _DOMAIN_RE, 1).alias("domain"),
         norm.alias("_norm"),
     )
-    if blocklist_df is not None:
-        deny = blocklist_df.select(
-            F.col("domain"), F.lit(True).alias("_blocked")
-        )
-        out = out.join(F.broadcast(deny), "domain", "left")
-        blocked = F.coalesce(F.col("_blocked"), F.lit(False))
-    else:
-        blocked = F.col("domain").isin(*DEFAULT_BLOCKLIST)
+    blocked = F.col("domain").isin(*DEFAULT_BLOCKLIST)
     score = None
     for word, weight in sorted(DEFAULT_SOFT_WORDS.items()):
         term = F.when(F.col("_norm").contains(word), F.lit(weight)).otherwise(
@@ -122,11 +109,11 @@ def url_filter(df: DataFrame, blocklist_df: DataFrame | None = None) -> DataFram
     )
 
 
-def url_filter_sql(url_expr: str) -> dict:
+def url_filter_sql() -> dict:
     """The same rule chain as DuckDB SQL fragments (oracle parity):
     returns {'host': ..., 'domain': ..., 'reason': ...} expressions over
-    `url_expr`."""
-    norm = normalize_url_sql(url_expr)
+    the `url` column."""
+    norm = normalize_url_sql()
     host = (
         f"regexp_replace(regexp_extract({norm}, '{_HOST_RE}', 1), "
         f"'{_PORT_RE}', '')"

@@ -340,7 +340,7 @@ def webdataset_shards_sql(sf_dir: str) -> str:
             "caption": r["caption"], "fmt": r["fmt"],
             "w": r["w"], "h": r["h"],
         }
-        by_shard.setdefault(shard_of(r["image_id"], 8), []).append(row)
+        by_shard.setdefault(shard_of(r["image_id"]), []).append(row)
     rows = []
     for sid in sorted(by_shard):
         data = build_shard_tar(by_shard[sid])
@@ -358,8 +358,8 @@ def minhash_sql(sf_dir: str) -> str:
     q_minhash_signatures' fan-out-free projection."""
     from .operators.dedup import _minhash_params, minhash_sig
 
-    a, b = _minhash_params(32, 7)
-    rows = [(d, *minhash_sig(t, a, b, 32, 5)) for d, t in _read_docs(sf_dir)]
+    a, b = _minhash_params(32)
+    rows = [(d, *minhash_sig(t, a, b, 32)) for d, t in _read_docs(sf_dir)]
     cols = ["doc_id"] + [f"h{i:02d}" for i in range(32)]
     return _values_sql(rows, cols, ["BIGINT"] * 33)
 
@@ -415,8 +415,8 @@ def _nearest_centroid(vecs, cent) -> np.ndarray:
     return np.argmax(unit @ cent.T, axis=1)
 
 
-def _srp_sigs(mat: np.ndarray, planes: int, seed: int) -> np.ndarray:
-    rng = np.random.default_rng(seed)
+def _srp_sigs(mat: np.ndarray, planes: int) -> np.ndarray:
+    rng = np.random.default_rng(31)
     pl = rng.standard_normal((mat.shape[1], planes))
     bits = (mat @ pl) > 0
     return (bits.astype(np.int64) << np.arange(planes, dtype=np.int64)).sum(axis=1)
@@ -441,8 +441,8 @@ def ann_lsh_sql(sf_dir: str) -> str:
     """q_ann_lsh: 16-plane SRP candidates within 6 flipped bits of the
     query's signature."""
     ids, mat = _emb_matrix(sf_dir)
-    sigs = _srp_sigs(mat, 16, 31)
-    qsig = int(_srp_sigs(mat[[ids.index(0)]], 16, 31)[0])
+    sigs = _srp_sigs(mat, 16)
+    qsig = int(_srp_sigs(mat[[ids.index(0)]], 16)[0])
     cand = [
         i for i in range(len(ids)) if bin(int(sigs[i]) ^ qsig).count("1") <= 6
     ]
@@ -456,9 +456,7 @@ def embedding_prototypes_sql(sf_dir: str) -> str:
     from .operators.prototypes import prototypicality_rows
 
     ids, mat = _emb_matrix(sf_dir)
-    rows = prototypicality_rows(
-        list(zip(ids, mat)), _train_centroids(ids, mat), drop_frac=0.1
-    )
+    rows = prototypicality_rows(list(zip(ids, mat)), _train_centroids(ids, mat))
     return _values_sql(
         rows,
         ["vec_id", "ivf_cluster", "proto_micro", "is_prototype"],
@@ -527,7 +525,7 @@ def emb_near_pairs_lsh_sql(sf_dir: str) -> str:
     8 chunks of 8 bits."""
     ids, vecs = _emb_with_neardups(sf_dir)
     pairs = _cosine_pairs(
-        ids, vecs, _srp_sigs(np.stack(vecs), 64, 31), _chunk_keys(8)
+        ids, vecs, _srp_sigs(np.stack(vecs), 64), _chunk_keys(8)
     )
     return _values_sql(
         [(a, b, _round_like_spark(c)) for a, b, c in pairs],
@@ -639,8 +637,8 @@ def _minhash_rows(docs):
     that q_minhash_lsh_pairs and q_lsh_bucket_stats band."""
     from .operators.dedup import _minhash_params, minhash_sig
 
-    a, b = _minhash_params(64, 7)
-    return [(d, minhash_sig(t, a, b, 64, 5)) for d, t in docs]
+    a, b = _minhash_params(64)
+    return [(d, minhash_sig(t, a, b, 64)) for d, t in docs]
 
 
 def _minhash_band_keys(sig):
@@ -794,15 +792,10 @@ def image_resize_sql(sf_dir: str) -> str:
     length/md5 through the same pure resize_export_row (decode -> exact
     area resample -> real JPEG encode)."""
     from .operators.image_stage import resize_export_row
-    from .sources.synth import LOSSY_QUALITY
-
-    from __spark_entry__ import _RESIZE_BUCKETS
 
     rows = []
     for r in _synth_rows(200):
-        bw, bh, ln, md5, _ = resize_export_row(
-            bytes(r["bytes"]), _RESIZE_BUCKETS, LOSSY_QUALITY
-        )
+        bw, bh, ln, md5, _ = resize_export_row(bytes(r["bytes"]))
         rows.append((r["image_id"], bw, bh, ln, md5))
     return _values_sql(
         rows,
@@ -838,11 +831,11 @@ def clip_alignment_sql(sf_dir: str) -> str:
     """q_clip_alignment expected output via operators.alignment's
     pure-Python row twin (same decode, same stand-in encoders, same
     left-to-right fold dot, same HALF_UP rounding)."""
-    from .operators.alignment import STUB_THRESHOLD, alignment_row
+    from .operators.alignment import alignment_row
 
     rows = []
     for r in _synth_rows(300):
-        image_id, sim, keep = alignment_row(r, threshold=STUB_THRESHOLD)
+        image_id, sim, keep = alignment_row(r)
         rows.append(
             (image_id, None if sim is None else _round_like_spark(sim), keep)
         )
@@ -911,7 +904,7 @@ def refinedweb_sql(sf_dir: str) -> str:
         [(d, synth_page_py(d, t or "")) for d, t in _read_docs(sf_dir)],
     )
     extracted = con.execute(
-        f"SELECT doc_id, {strip_html_sql('html')} FROM pages ORDER BY doc_id"
+        f"SELECT doc_id, {strip_html_sql()} FROM pages ORDER BY doc_id"
     ).fetchall()
     con.close()
 
@@ -1008,7 +1001,7 @@ def export_prep_sql(sf_dir: str) -> str:
     (md5, id)-ordered position for the same synthetic corpus."""
     from .operators.export_prep import export_prep_rows
 
-    rows = export_prep_rows(_synth_rows(400), num_shards=8)
+    rows = export_prep_rows(_synth_rows(400))
     return _values_sql(
         rows,
         ["image_id", "w", "h", "bucket_idx", "bucket_w", "bucket_h",
@@ -1023,7 +1016,7 @@ def video_frame_sample_sql(sf_dir: str) -> str:
 
     rows = []
     for i in range(100):
-        clip = encode_avi_mjpeg(synth_clip(i), fps=10, quality=90)
+        clip = encode_avi_mjpeg(synth_clip(i), quality=90)
         _, frames = decode_avi_mjpeg(clip)
         for idx, px in enumerate(frames):
             if idx % 2:
@@ -1240,7 +1233,7 @@ def source_mixture_sql(sf_dir: str) -> str:
         ).fetchall()
     )
     con.close()
-    rates = mixture_rates(counts, 2.0, 200)
+    rates = mixture_rates(counts)
     vals = ",\n".join(
         f"('{s.replace(chr(39), chr(39) * 2)}', {t}::UBIGINT, {rate!r})"
         for s, (rate, t) in sorted(rates.items())
@@ -1334,7 +1327,7 @@ def exact_substring_sql(sf_dir: str) -> str:
     so the fixture is exact with no cross-engine float or window SQL."""
     from .operators.exact_substring import exact_substring_dedup_rows
 
-    rows = exact_substring_dedup_rows(_read_docs(sf_dir), 20)
+    rows = exact_substring_dedup_rows(_read_docs(sf_dir))
     return _values_sql(
         rows,
         ["doc_id", "n_tokens", "n_removed", "text_dedup"],
@@ -1385,11 +1378,11 @@ def bloom_seen_sql(sf_dir: str) -> str:
 def bpe_token_totals_sql(sf_dir: str) -> str:
     """q_bpe_token_totals expected output: per-source byte-level BPE totals
     through the SAME frozen tokenizer (core/bpe.py) — exact integers."""
-    from .core.bpe import bpe_token_count
+    from .core.bpe import frozen_bpe
 
     totals: dict = {}
     for _, src, t in _read_sourced_docs(sf_dir):
-        totals[src] = totals.get(src, 0) + bpe_token_count(t or "")
+        totals[src] = totals.get(src, 0) + frozen_bpe().count(t or "")
     return _values_sql(
         sorted(totals.items()),
         ["source", "total_bpe_tokens"],
@@ -1424,12 +1417,12 @@ def pack_sequences_sql(sf_dir: str) -> str:
     pure function the pandas UDF calls), re-derived with exact Python
     integers (associative, so Spark's two-phase grouped prefix sum is
     bit-identical by construction)."""
-    from .core.bpe import bpe_token_count
+    from .core.bpe import frozen_bpe
 
     docs = _read_docs(sf_dir)  # already ORDER BY doc_id
     rows, running = [], 0
     for d, t in docs:
-        n = bpe_token_count(t or "")
+        n = frozen_bpe().count(t or "")
         rows.append((d, n, running, running // 2048, running % 2048))
         running += n
     return _values_sql(
@@ -1461,7 +1454,7 @@ def dsir_selection_sql(sf_dir: str) -> str:
             counts[b] = (ct + 1, cr) if tgt else (ct, cr + 1)
         if not tgt:
             doc_buckets.append((d, bs))
-    lr = dict(ratio_table_rows(counts, 1024, 0.5))
+    lr = dict(ratio_table_rows(counts))
     scored = [
         (d, sum(lr[b] for b in bs)) for d, bs in doc_buckets if bs
     ]

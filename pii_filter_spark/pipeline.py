@@ -75,7 +75,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from .operators.fused import (
-    ALL_LAYERS, PartCounts, caption_stage, fused_quality_scrub, layer_ms, part_counts,
+    ALL_LAYERS, PartCounts, caption_stage, layer_ms, part_counts,
 )
 from .sources import table_io
 
@@ -169,10 +169,10 @@ def batch_input(spark: SparkSession, ranges: Dict[str, range], schema: StructTyp
 def transform(df: DataFrame) -> DataFrame:
     """The logical plan; bytes passes through untouched.
 
-    One Python stage computes the quality and scrub columns together
-    (operators/fused.fused_quality_scrub).
+    One Python stage (`caption_quality_scrub`) computes the quality and
+    scrub columns of `caption` together.
     """
-    return fused_quality_scrub(df)
+    return caption_stage(df, ALL_LAYERS, "caption")
 
 
 def batch_frame(src: DataFrame, parts: List[int], counts) -> DataFrame:

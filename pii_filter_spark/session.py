@@ -18,6 +18,7 @@ def get_spark(
     On a real cluster these land in spark-submit --conf; the defaults below
     are the ones the pipeline depends on:
       * AQE on (coalesce + skew-join split) — north rule "AQE-tuned shuffles";
+        Spark's own defaults since 3.2, so nothing sets them here;
       * Arrow pandas-UDF transfer on, with a small maxRecordsPerBatch because
         rows carry an image `bytes` column (MB-scale rows would otherwise
         produce multi-GB Arrow batches at 10^12-image scale);
@@ -32,9 +33,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # Input-split sizing. Two opposing costs: a pandas-UDF task pays a

@@ -100,36 +100,26 @@ def _publish(path: str, content: str) -> None:
     os.replace(tmp, path)
 
 
-def snapshot_write(
-    df: DataFrame,
-    table_path: str,
-    mode: str = "append",
-) -> int:
-    """Write `df` as a new snapshot of the table; returns its id.
+def snapshot_write(df: DataFrame, table_path: str) -> int:
+    """Write `df` as a new snapshot of the table that overwrites the
+    current one; returns its id.
 
-    mode="append": the new snapshot's file list is the parent's plus the
-    new files. mode="overwrite": the new list is just the new files —
-    but the parent's files stay on disk and its snapshot stays readable.
-    Data files land under data/s{id:05d}/ so concurrent historical reads
+    The new snapshot's file list is just the new files — but the
+    parent's files stay on disk and its snapshot stays readable. Data
+    files land under data/s{id:05d}/ so concurrent historical reads
     never race with new writes.
     """
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"snapshot_write mode must be append|overwrite, got {mode}")
     snaps = list_snapshots(table_path)
     parent = current_snapshot_id(table_path)
     new_id = (max((s["snapshot_id"] for s in snaps), default=0)) + 1
     rel_dir = os.path.join("data", f"s{new_id:05d}")
     out_dir = os.path.join(table_path, rel_dir)
     df.write.mode("errorifexists").parquet(out_dir)
-    inherited: List[str] = []
-    if mode == "append" and parent is not None:
-        by_id = {s["snapshot_id"]: s for s in snaps}
-        inherited = list(by_id[parent]["files"])
     snap = {
         "snapshot_id": new_id,
         "parent_id": parent,
-        "operation": mode,
-        "files": inherited + [rel_dir],
+        "operation": "overwrite",
+        "files": [rel_dir],
         "added_files": [rel_dir],
     }
     d = snapshots_dir(table_path)
@@ -181,15 +171,10 @@ def completed_part_ids(table_path: str) -> List[int]:
     return sorted(e["part_id"] for e in read_manifest(table_path))
 
 
-def merge_upsert(
-    spark: SparkSession,
-    table_path: str,
-    updates: DataFrame,
-    key_col: str,
-) -> int:
+def merge_upsert(spark: SparkSession, table_path: str, updates: DataFrame) -> int:
     """Copy-on-write MERGE into the snapshot table (the Iceberg CoW
-    shape): the new snapshot is updates ∪ (current rows whose key has no
-    update) — an UPDATE for existing keys, an INSERT for new ones,
+    shape), keyed by `doc_id`: the new snapshot is updates ∪ (current
+    rows whose key has no update) — an UPDATE for existing keys, an INSERT for new ones,
     atomically published as one snapshot; the parent snapshot stays
     readable (time travel covers pre-merge state).
 
@@ -201,7 +186,7 @@ def merge_upsert(
     no per-file stats index — the join shape is the part that carries
     to the real table format. Returns the new snapshot id."""
     current = read_table(spark, table_path)
-    keys = updates.select(key_col).distinct()
-    kept = current.join(keys, key_col, "left_anti")
+    keys = updates.select("doc_id").distinct()
+    kept = current.join(keys, "doc_id", "left_anti")
     merged = kept.unionByName(updates)
-    return snapshot_write(merged, table_path, mode="overwrite")
+    return snapshot_write(merged, table_path)

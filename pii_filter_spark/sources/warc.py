@@ -58,20 +58,14 @@ def gunzip_members(data: bytes) -> bytes:
     return b"".join(out)
 
 
-def build_record(
-    warc_type: str,
-    target_uri: str,
-    block: bytes,
-    record_id: str,
-    date: str = "2024-01-01T00:00:00Z",
-) -> bytes:
-    """One spec-shaped WARC record (deterministic: fixed date unless
-    given; header order fixed)."""
+def build_record(warc_type: str, target_uri: str, block: bytes, record_id: str) -> bytes:
+    """One spec-shaped WARC record (deterministic: fixed date, fixed
+    header order)."""
     headers = [
         b"WARC/1.0",
         b"WARC-Type: " + warc_type.encode(),
         b"WARC-Record-ID: <urn:uuid:" + record_id.encode() + b">",
-        b"WARC-Date: " + date.encode(),
+        b"WARC-Date: 2024-01-01T00:00:00Z",
         b"WARC-Target-URI: " + target_uri.encode(),
         b"Content-Length: " + str(len(block)).encode(),
     ]

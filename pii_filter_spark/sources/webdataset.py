@@ -19,9 +19,9 @@ tests — the custom writer exists for byte-determinism, not NIH.)
 
 Spark shape: `assign_shards`' portable md5 shard hash keys ONE groupBy
 shuffle; each shard's tar is built inside its own `applyInPandas`
-group task and written from the executor — no driver fan-in. At 10^12
-rows you pick num_shards so a shard holds the conventional ~10k
-samples; shard sizes are md5-uniform by construction (no skew).
+group task — no driver fan-in. At 10^12 rows NUM_SHARDS would be
+sized so a shard holds the conventional ~10k samples; shard sizes are
+md5-uniform by construction (no skew).
 """
 
 from __future__ import annotations
@@ -29,10 +29,10 @@ from __future__ import annotations
 import hashlib
 import io
 import json
-import os
 from typing import Iterable, List, Tuple
 
 BLOCK = 512
+NUM_SHARDS = 8
 
 
 def _header(name: str, size: int) -> bytes:
@@ -84,9 +84,9 @@ def sample_entries(image_id: str, img: bytes, caption: str, fmt: str,
     ]
 
 
-def shard_of(image_id: str, num_shards: int) -> int:
+def shard_of(image_id: str) -> int:
     """Portable md5-prefix shard hash — same recipe as assign_shards."""
-    return int(hashlib.md5(str(image_id).encode()).hexdigest()[:7], 16) % num_shards
+    return int(hashlib.md5(str(image_id).encode()).hexdigest()[:7], 16) % NUM_SHARDS
 
 
 def shard_order_key(image_id: str) -> Tuple[str, str]:
@@ -106,18 +106,16 @@ def build_shard_tar(rows: List[dict]) -> bytes:
     return tar_bytes(entries)
 
 
-def write_webdataset(df, num_shards: int, out_dir: str | None = None):
+def write_webdataset(df):
     """(shard_id, n_samples, tar_len, tar_md5) — one applyInPandas group
-    per shard builds its tar on the executor; with `out_dir`, each task
-    also writes `shard-{id:05d}.tar` there (executor-side, no driver
-    fan-in)."""
+    per shard of NUM_SHARDS builds its tar on the executor."""
     import pandas as pd
     from pyspark.sql import functions as F
 
     shard = F.pmod(
         F.conv(F.substring(F.md5(F.col("image_id").cast("string")), 1, 7),
                16, 10).cast("long"),
-        F.lit(num_shards),
+        F.lit(NUM_SHARDS),
     )
     keyed = df.select("image_id", "bytes", "caption", "fmt", "w", "h",
                       shard.alias("shard_id"))
@@ -126,12 +124,6 @@ def write_webdataset(df, num_shards: int, out_dir: str | None = None):
         rows = pdf.to_dict("records")
         data = build_shard_tar(rows)
         sid = int(pdf["shard_id"].iloc[0])
-        if out_dir:
-            os.makedirs(out_dir, exist_ok=True)
-            tmp = os.path.join(out_dir, f".shard-{sid:05d}.tar.tmp")
-            with open(tmp, "wb") as fh:
-                fh.write(data)
-            os.replace(tmp, os.path.join(out_dir, f"shard-{sid:05d}.tar"))
         return pd.DataFrame(
             [(sid, len(rows), len(data),
               hashlib.md5(data).hexdigest())],

@@ -26,6 +26,8 @@ import numpy as np
 
 from ..images.jpeg_codec import decode_jpeg, encode_jpeg
 
+FPS = 10
+
 
 def _chunk(cid: bytes, body: bytes) -> bytes:
     pad = b"\x00" if len(body) & 1 else b""
@@ -36,10 +38,8 @@ def _list(kind: bytes, body: bytes) -> bytes:
     return _chunk(b"LIST", kind + body)
 
 
-def encode_avi_mjpeg(
-    frames: List[np.ndarray], fps: int = 10, quality: int = 90
-) -> bytes:
-    """RGB uint8 frames (equal dims) -> single-stream MJPEG AVI."""
+def encode_avi_mjpeg(frames: List[np.ndarray], quality: int = 90) -> bytes:
+    """RGB uint8 frames (equal dims) -> single-stream MJPEG AVI at FPS."""
     if not frames:
         raise ValueError("need at least one frame")
     h, w = frames[0].shape[:2]
@@ -48,8 +48,8 @@ def encode_avi_mjpeg(
 
     avih = struct.pack(
         "<IIIIIIIIII4I",
-        1_000_000 // fps,      # microseconds per frame
-        max_sz * fps,          # max bytes per second
+        1_000_000 // FPS,      # microseconds per frame
+        max_sz * FPS,          # max bytes per second
         0,                     # padding granularity
         0x10,                  # AVIF_HASINDEX
         len(jpegs), 0, 1, max_sz, w, h, 0, 0, 0, 0,
@@ -57,7 +57,7 @@ def encode_avi_mjpeg(
     strh = struct.pack(
         "<4s4sIHHIIIIIIIIhhhh",
         b"vids", b"MJPG", 0, 0, 0, 0,
-        1, fps,                # scale, rate -> fps = rate/scale
+        1, FPS,                # scale, rate -> fps = rate/scale
         0, len(jpegs), max_sz, 0xFFFFFFFF & (2**32 - 1), 0,
         0, 0, w, h,            # rcFrame
     )
@@ -125,13 +125,12 @@ def _decode_avi_mjpeg(data: bytes) -> Tuple[float, List[np.ndarray]]:
     return fps, frames
 
 
-def synth_clip(idx: int, n_frames: int = None) -> List[np.ndarray]:
+def synth_clip(idx: int) -> List[np.ndarray]:
     """Deterministic per-id test clip: a drifting two-gradient pattern,
     3-6 frames of 24-40 px. Pure function shared by q_video_frame_sample
     and its fixture oracle."""
     rng = np.random.default_rng((777, idx))
-    if n_frames is None:
-        n_frames = 3 + idx % 4
+    n_frames = 3 + idx % 4
     w = int(rng.integers(24, 41))
     h = int(rng.integers(24, 41))
     gx = np.linspace(0, 255, w)
@@ -164,9 +163,9 @@ def planted_clips(idx: int) -> List[Tuple[str, bytes]]:
     q_video_near_dup. Pure function shared by the query's input builder
     and its fixture oracle."""
     frames = synth_clip(idx)
-    out = [(f"vid_{idx:06d}", encode_avi_mjpeg(frames, fps=10, quality=90))]
+    out = [(f"vid_{idx:06d}", encode_avi_mjpeg(frames, quality=90))]
     if idx % 4 == 0:
         out.append(
-            (f"vid_{idx:06d}_re", encode_avi_mjpeg(frames, fps=10, quality=70))
+            (f"vid_{idx:06d}_re", encode_avi_mjpeg(frames, quality=70))
         )
     return out

@@ -1,21 +1,20 @@
 """Byte-level BPE tokenizer (core/bpe.py): frozen-vocab determinism,
 no-OOV byte coverage, merge compression, and Spark pandas-UDF parity."""
 
-from pii_filter_spark.core.bpe import (
-    MAX_MERGES,
-    bpe_token_count,
-    bpe_token_counts_batch,
-    merge_ranks,
-)
+from pii_filter_spark.core.bpe import MAX_MERGES, frozen_bpe
+
+
+def bpe_token_count(text):
+    return frozen_bpe().count(text)
 
 
 def test_merge_table_is_frozen_and_deterministic():
-    r1 = merge_ranks()
+    r1 = frozen_bpe().ranks
     assert 0 < len(r1) <= MAX_MERGES
     # retraining from the seed reproduces the identical table
-    from pii_filter_spark.core.bpe import _SEED_CORPUS, _train_merges
+    from pii_filter_spark.core.bpe import _train_merges
 
-    r2 = {p: i for i, p in enumerate(_train_merges(_SEED_CORPUS, MAX_MERGES))}
+    r2 = {p: i for i, p in enumerate(_train_merges())}
     assert r1 == r2
 
 
@@ -35,7 +34,7 @@ def test_common_words_compress_below_bytes():
 
 def test_empty_and_null_handling():
     assert bpe_token_count("") == 0
-    assert bpe_token_counts_batch(["a b", None, ""]) == [
+    assert frozen_bpe().counts_batch(["a b", None, ""]) == [
         bpe_token_count("a b"),
         0,
         0,

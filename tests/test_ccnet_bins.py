@@ -7,6 +7,7 @@ from pii_filter_spark.core.perplexity import perplexity
 from pii_filter_spark.operators.ccnet_bins import (
     HEAD,
     MIDDLE,
+    SAMPLE_PER_LANG,
     TAIL,
     ccnet_bins,
     tercile_cutoffs,
@@ -23,7 +24,7 @@ def test_tercile_cutoffs_order_statistics():
     assert tercile_cutoffs([1.0, 2.0]) == (1.0, 2.0)
 
 
-def _twin(rows, sample_per_lang):
+def _twin(rows):
     """Driver-free twin of the operator: same md5-order bounded sample,
     same discrete tercile cutoffs, same <= comparisons."""
     lang = {d: detect_language(t) for d, t in rows}
@@ -34,7 +35,7 @@ def _twin(rows, sample_per_lang):
     cuts = {}
     for lg, ids in by_lang.items():
         ids.sort(key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i))
-        cuts[lg] = tercile_cutoffs(sorted(ppl[i] for i in ids[:sample_per_lang]))
+        cuts[lg] = tercile_cutoffs(sorted(ppl[i] for i in ids[:SAMPLE_PER_LANG]))
     out = {}
     for d, _ in rows:
         t_head, t_mid = cuts[lang[d]]
@@ -52,15 +53,19 @@ def test_ccnet_bins_matches_twin_and_terciles(spark):
         "The picture shows an employee smiling at the office camera",
         "qwk zzv xjq wvv kqz jxx",
     ]
-    rows = [(i, f"{base[i % len(base)]} variação {i * 37 % 11}") for i in range(60)]
+    # more rows per language than the threshold sample takes, so the
+    # md5-order sample decides the cutoffs
+    rows = [(i, f"{base[i % len(base)]} variação {i * 37 % 11}") for i in range(1200)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
 
     got = {
         r["doc_id"]: (r["lang"], r["ppl"], r["bin"])
-        for r in ccnet_bins(df, sample_per_lang=16).collect()
+        for r in ccnet_bins(df).collect()
     }
     assert len(got) == len(rows)
-    want = _twin(rows, sample_per_lang=16)
+    langs = [lang for lang, _, _ in got.values()]
+    assert max(langs.count(lg) for lg in set(langs)) > SAMPLE_PER_LANG
+    want = _twin(rows)
     assert {d: b for d, (_, _, b) in got.items()} == want
 
     # Within each language the bins must be ordered: every head ppl <=
@@ -76,12 +81,13 @@ def test_ccnet_bins_matches_twin_and_terciles(spark):
 
 
 def test_ccnet_bins_small_sample_still_covers_every_language(spark):
-    # sample_per_lang smaller than some strata: every row still binned
+    # SAMPLE_PER_LANG smaller than some strata: every row still binned
     # (the cutoff table has one row per observed language).
-    rows = [(i, "apenas texto curto em português número " + str(i)) for i in range(10)]
-    rows += [(100 + i, "short english caption text number " + str(i)) for i in range(3)]
+    n = SAMPLE_PER_LANG + 44
+    rows = [(i, "apenas texto curto em português número " + str(i)) for i in range(n)]
+    rows += [(n + i, "short english caption text number " + str(i)) for i in range(3)]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = ccnet_bins(df, sample_per_lang=4).collect()
+    out = ccnet_bins(df).collect()
     assert len(out) == len(rows)
     assert {r["bin"] for r in out} <= {HEAD, MIDDLE, TAIL}
 

@@ -1,6 +1,7 @@
 """Small-file compaction: bin-pack planner + snapshot rewrite."""
 
 from pii_filter_spark.operators.compaction import (
+    TARGET_BYTES,
     compact_snapshot,
     compaction_plan,
 )
@@ -21,21 +22,22 @@ def test_plan_matches_single_window_twin(spark):
     df = spark.createDataFrame(rows, "doc_id: long, size_bytes: long")
     got = {
         r["doc_id"]: (r["size_bytes"], r["cum_before"], r["compaction_group"])
-        for r in compaction_plan(df, target_bytes=1000, n_groups=8).collect()
+        for r in compaction_plan(df).collect()
     }
-    assert got == _twin(rows, 1000)
+    assert len({g for _, _, g in got.values()}) > 1
+    assert got == _twin(rows, TARGET_BYTES)
 
 
 def test_plan_groups_are_target_sized(spark):
-    rows = [(i, 100) for i in range(50)]
+    rows = [(i, TARGET_BYTES // 64) for i in range(5 * 64)]
     df = spark.createDataFrame(rows, "doc_id: long, size_bytes: long")
-    out = compaction_plan(df, target_bytes=1000, n_groups=4).collect()
+    out = compaction_plan(df).collect()
     by_grp = {}
     for r in out:
         by_grp.setdefault(r["compaction_group"], 0)
         by_grp[r["compaction_group"]] += r["size_bytes"]
-    # 50 * 100 = 5000 bytes -> exactly 5 full groups of 1000
-    assert by_grp == {g: 1000 for g in range(5)}
+    # 5 * 64 files of TARGET_BYTES / 64 -> exactly 5 full groups
+    assert by_grp == {g: TARGET_BYTES for g in range(5)}
 
 
 def test_plan_empty_input(spark):

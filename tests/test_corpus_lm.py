@@ -1,10 +1,12 @@
 """Distributed corpus-trained trigram LM (operators/corpus_lm.py):
-pure-twin parity, partition invariance, OOV handling, bounded top-K
-model, and the separate-train-corpus path."""
+pure-twin parity, partition invariance, OOV handling and the bounded
+top-K model."""
 
-import pytest
+from itertools import product
 
+from pii_filter_spark.operators import corpus_lm
 from pii_filter_spark.operators.corpus_lm import (
+    TOP_K,
     corpus_lm_rows,
     corpus_lm_scores,
     trigrams,
@@ -48,26 +50,29 @@ def test_identical_docs_score_identically(spark):
 
 
 def test_oov_scores_higher_than_in_domain(spark):
-    train = spark.createDataFrame(ROWS[:3], "doc_id long, text string")
     score = spark.createDataFrame(
-        [(10, "o gato subiu no telhado"), (11, "qqqq wwww kkkk jjjj vvvv")],
+        ROWS + [(10, "o gato subiu no telhado"), (11, "qqqq wwww kkkk jjjj vvvv")],
         "doc_id long, text string",
     )
-    got = {r["doc_id"]: r for r in
-           corpus_lm_scores(score, train_docs=train).collect()}
+    got = {r["doc_id"]: r for r in corpus_lm_scores(score).collect()}
     # per-gram NLL: junk made of unseen grams must cost more
     in_dom = got[10]["nll_micronats"] / got[10]["n_grams"]
     junk = got[11]["nll_micronats"] / got[11]["n_grams"]
     assert junk > in_dom
 
 
-def test_top_k_cap_falls_back_to_oov(spark):
-    df = spark.createDataFrame(ROWS, "doc_id long, text string")
-    capped = _collect(corpus_lm_scores(df, top_k=5))
-    exp = sorted(corpus_lm_rows([(i, t) for i, t in ROWS], top_k=5))
-    assert capped == exp
+def test_top_k_cap_falls_back_to_oov(spark, monkeypatch):
+    # every three-letter word, 40 to a doc: far more than TOP_K distinct grams
+    words = ["".join(p) for p in product("abcdefghijklmnopqrstuvwxyz", repeat=3)]
+    rows = ROWS + [(100 + i, " ".join(words[j:j + 40]))
+                   for i, j in enumerate(range(0, len(words), 40))]
+    assert len({g for _, t in rows for g in trigrams(t)}) > TOP_K
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    capped = _collect(corpus_lm_scores(df))
+    assert capped == sorted(corpus_lm_rows(rows))
     # and capping changes scores vs the uncapped model (OOV engaged)
-    assert capped != _collect(corpus_lm_scores(df))
+    monkeypatch.setattr(corpus_lm, "TOP_K", 10**9)
+    assert capped != sorted(corpus_lm_rows(rows))
 
 
 def test_trigram_extraction_shape():

@@ -30,7 +30,7 @@ def test_cross_modal_clusters(spark):
     )
     idx = F.substring("image_id", 5, 8).cast("int")
     # image near-dups: q90 re-encodes of idx%4==0 with unique captions
-    re = reencode_variants(imgs.where(idx % 4 == 0), quality=90)
+    re = reencode_variants(imgs.where(idx % 4 == 0))
     # digit-free so the digits->0 normalization can't weld them together
     re = re.withColumn(
         "caption",

@@ -48,9 +48,7 @@ def test_dedup_by_key_skew_safe(spark):
 def test_minhash_lsh_finds_planted_near_dups(spark, docs_with_dups):
     from pii_filter_spark.operators.dedup import minhash_lsh_pairs
 
-    pairs = minhash_lsh_pairs(
-        docs_with_dups, threshold=0.6, num_hashes=64, bands=16
-    ).toPandas()
+    pairs = minhash_lsh_pairs(docs_with_dups).toPandas()
     planted_exact = {(i, i + 10000) for i in range(50)}
     planted_near = {(i, i + 20000) for i in range(50)}
     got = {(int(a), int(b)) for a, b in zip(pairs.id_a, pairs.id_b)}
@@ -64,7 +62,7 @@ def test_minhash_lsh_finds_planted_near_dups(spark, docs_with_dups):
 def test_simhash_near_pairs(spark, docs_with_dups):
     from pii_filter_spark.operators.dedup import simhash_near_pairs
 
-    pairs = simhash_near_pairs(docs_with_dups, max_hamming=3).toPandas()
+    pairs = simhash_near_pairs(docs_with_dups).toPandas()
     got = {(int(a), int(b)) for a, b in zip(pairs.id_a, pairs.id_b)}
     assert {(i, i + 10000) for i in range(50)} <= got
     exact = pairs[(pairs.id_a < 10000) & (pairs.id_b - pairs.id_a == 10000)]
@@ -91,11 +89,11 @@ def test_char_shingles_match_naive_polynomial():
     of the same polynomial (the determinism contract for resume/retry)."""
     import numpy as np
     from pii_filter_spark.operators.dedup import (
-        _MAX_SHINGLE_HASH, _SHINGLE_BASE, _char_shingles,
+        _MAX_SHINGLE_HASH, _SHINGLE_BASE, _SHINGLE_K, _char_shingles,
     )
 
     for text in ["hello world example", "ação e reação já", "ab"]:
-        k = 5
+        k = _SHINGLE_K
         t = " ".join(text.lower().split())
         if len(t) < k:
             t = t.ljust(k, "_")
@@ -106,7 +104,7 @@ def test_char_shingles_match_naive_polynomial():
                 for ch in t[i:i + k]:
                     h = h * _SHINGLE_BASE + np.uint64(ord(ch))
                 naive.add(int(h & np.uint64(_MAX_SHINGLE_HASH)))
-        got = _char_shingles(text, k)
+        got = _char_shingles(text)
         assert sorted(naive) == got.tolist()
 
 
@@ -212,7 +210,7 @@ def test_minhash_lsh_degenerate_bucket_guard(spark, monkeypatch):
             "text"
         ),
     )
-    pairs = minhash_lsh_pairs(same.unionByName(empty), threshold=0.5).toPandas()
+    pairs = minhash_lsh_pairs(same.unionByName(empty)).toPandas()
     assert len(pairs) == n - 1                      # star, not quadratic
     assert (pairs.id_a == 0).all()                  # min-id representative
     assert set(pairs.id_b) == set(range(1, n))      # every doc reachable
@@ -233,7 +231,7 @@ def test_simhash_degenerate_bucket_guard(spark, monkeypatch):
     empty = spark.range(500).select(
         (F.col("id") + 100_000).alias("doc_id"), F.lit(" ").alias("text")
     )
-    pairs = simhash_near_pairs(same.unionByName(empty), max_hamming=3).toPandas()
+    pairs = simhash_near_pairs(same.unionByName(empty)).toPandas()
     assert len(pairs) == n - 1
     assert (pairs.id_a == 0).all()
     assert set(pairs.id_b) == set(range(1, n))
@@ -247,9 +245,9 @@ def test_lsh_cap_no_effect_below_threshold(spark, docs_with_dups, monkeypatch):
     import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.dedup import minhash_lsh_pairs
 
-    base = minhash_lsh_pairs(docs_with_dups, threshold=0.6).toPandas()
+    base = minhash_lsh_pairs(docs_with_dups).toPandas()
     monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", 10**9)
-    huge_cap = minhash_lsh_pairs(docs_with_dups, threshold=0.6).toPandas()
+    huge_cap = minhash_lsh_pairs(docs_with_dups).toPandas()
     key = lambda df: sorted(zip(df.id_a, df.id_b, df.est_jaccard))
     assert key(base) == key(huge_cap)
 
@@ -258,12 +256,11 @@ def test_lsh_bucket_stats_accounting(spark, docs_with_dups):
     """Histogram must account for every (doc, band) membership exactly
     once: sum(bucket_size * n_buckets) == bands * n_docs (no degenerate
     docs in this corpus), and candidate_pairs follows m*(m-1)/2."""
-    from pii_filter_spark.operators.dedup import lsh_bucket_stats
+    from pii_filter_spark.operators.dedup import BANDS, lsh_bucket_stats
 
-    bands = 16
-    stats = lsh_bucket_stats(docs_with_dups, bands=bands).toPandas()
+    stats = lsh_bucket_stats(docs_with_dups).toPandas()
     n_docs = docs_with_dups.count()
-    assert (stats.bucket_size * stats.n_buckets).sum() == bands * n_docs
+    assert (stats.bucket_size * stats.n_buckets).sum() == BANDS * n_docs
     for _, r in stats.iterrows():
         assert r.candidate_pairs == r.n_buckets * (r.bucket_size * (r.bucket_size - 1) // 2)
     # the 50 planted exact copies guarantee multi-member buckets exist
@@ -307,11 +304,11 @@ def test_vectorized_bucket_expansion_equals_native(spark):
               f"unique document number {i} with distinct words and content")
              for i in range(40)]
     df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    vec = minhash_lsh_pairs(df, threshold=0.5).toPandas()
+    vec = minhash_lsh_pairs(df).toPandas()
     old = D._VECTORIZE_FROM
     try:
         D._VECTORIZE_FROM = 10 ** 9  # force everything native
-        nat = minhash_lsh_pairs(df, threshold=0.5).toPandas()
+        nat = minhash_lsh_pairs(df).toPandas()
     finally:
         D._VECTORIZE_FROM = old
     key = lambda d: sorted(zip(d.id_a, d.id_b, d.est_jaccard))
@@ -383,7 +380,7 @@ def test_dedup_clusters_best_survivor_is_argmax(spark):
         "doc_id long, score long",
     )
     out = {r.doc_id: (r.cluster_id, r.is_survivor)
-           for r in dedup_clusters_best(docs, edges, "score").collect()}
+           for r in dedup_clusters_best(docs, edges).collect()}
     assert out[2] == (1, True)     # score 9, min id among the 9s
     assert out[3] == (1, False)    # tie loses to smaller id
     assert out[1] == (1, False)

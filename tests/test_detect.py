@@ -212,14 +212,19 @@ def test_fold_maps_ignorecase_matches_onto_gate_letters():
 
 def test_legal_suffix_org_needs_no_other_org_word():
     """The legal-suffix ORG grammar runs on its own suffix, also when no
-    other ORG word is in the text and the suffix ends in a dot."""
+    other ORG word is in the text and the suffix ends in a dot; a word
+    that only starts with a suffix ("MEU", "EPPX") is no suffix."""
     from pii_filter_spark.core.ner_dictionary import find_entities
     from tests.oracle.reference_semantics import ner_stage
 
     for text, org in [("A Petro S.A. cresceu.", "Petro S.A."),
-                      ("Loja Abc MEU ponto", "Loja Abc ME")]:
+                      ("Souza S.A. contratou", "Souza S.A."),
+                      ("Loja Abc ME ponto", "Loja Abc ME"),
+                      ("Flamengo MEU time", None),
+                      ("Aurora EPPX fim", None)]:
         got = [(d["type"], d["value"]) for d in find_entities(text)]
-        assert ("ORGANIZACAO", org) in got, got
+        orgs = [v for t, v in got if t == "ORGANIZACAO"]
+        assert orgs == ([org] if org else []), got
         assert got == [(h.type, h.value) for h in ner_stage(text)]
 
 

@@ -8,7 +8,7 @@ join, no cartesian product).
 
 from pyspark.sql import functions as F
 
-from pii_filter_spark.operators.dsir import dsir_select, hashed_bucket
+from pii_filter_spark.operators.dsir import K, NUM_BUCKETS, dsir_select, hashed_bucket
 from tests.plans import Plan
 
 
@@ -30,9 +30,7 @@ def _corpus(spark):
 
 
 def test_dsir_prefers_target_like_docs(spark):
-    out = dsir_select(
-        _corpus(spark), F.col("source") == "tgt", num_buckets=256, k=6
-    ).collect()
+    out = dsir_select(_corpus(spark), F.col("source") == "tgt").collect()
     weights = {r.doc_id: r.dsir_weight_unats for r in out}
     # every target-vocab doc outranks every cooking doc
     assert min(weights[d] for d in (10, 11, 12)) > max(
@@ -43,12 +41,17 @@ def test_dsir_prefers_target_like_docs(spark):
 
 
 def test_dsir_top_k_is_deterministic_total_order(spark):
-    df = _corpus(spark)
-    top2 = dsir_select(df, F.col("source") == "tgt", num_buckets=256, k=2)
-    a = [r.doc_id for r in top2.collect()]
-    b = [r.doc_id for r in top2.collect()]
-    assert a == b and len(a) == 2
-    assert set(a) <= {10, 11, 12}
+    # more raw docs than the selection keeps, so the top-K cut bites
+    cooking = spark.createDataFrame(
+        [(100 + i, "raw", f"stir the sauce {i} then season with salt {i % 7}")
+         for i in range(2 * K)],
+        ["doc_id", "source", "text"],
+    )
+    top = dsir_select(_corpus(spark).unionByName(cooking), F.col("source") == "tgt")
+    a = [r.doc_id for r in top.collect()]
+    b = [r.doc_id for r in top.collect()]
+    assert a == b and len(a) == K
+    assert set(a[:3]) == {10, 11, 12}
 
 
 def test_dsir_empty_and_whitespace_docs_drop_out(spark):
@@ -59,16 +62,16 @@ def test_dsir_empty_and_whitespace_docs_drop_out(spark):
         (4, "raw", "   \t  "),
     ]
     df = spark.createDataFrame(rows, ["doc_id", "source", "text"])
-    out = dsir_select(df, F.col("source") == "tgt", num_buckets=64, k=10)
+    out = dsir_select(df, F.col("source") == "tgt")
     assert [r.doc_id for r in out.collect()] == [2]
 
 
 def test_hashed_bucket_range(spark):
-    df = spark.range(200).select(
-        hashed_bucket(F.col("id").cast("string"), 32).alias("b")
+    df = spark.range(20 * NUM_BUCKETS).select(
+        hashed_bucket(F.col("id").cast("string")).alias("b")
     )
     mn, mx = df.agg(F.min("b"), F.max("b")).first()
-    assert 0 <= mn and mx <= 31
+    assert 0 <= mn and mx <= NUM_BUCKETS - 1
 
 
 def test_dsir_plan_zero_shuffle_scoring(spark):
@@ -76,9 +79,7 @@ def test_dsir_plan_zero_shuffle_scoring(spark):
     is one aggregate HOF per doc: scan -> project -> TakeOrdered. No
     join, no exchange — the exploded-token shuffle keyed by doc_id is
     gone from the scoring side entirely."""
-    plan = Plan(dsir_select(
-        _corpus(spark), F.col("source") == "tgt", num_buckets=256, k=6
-    ))
+    plan = Plan(dsir_select(_corpus(spark), F.col("source") == "tgt"))
     assert plan.has("TakeOrderedAndProject")
     assert not plan.has("Join")
     assert not plan.has("Exchange")

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from pii_filter_spark.operators.export_prep import (
     DEFAULT_BUCKETS,
+    NUM_SHARDS,
     assign_aspect_buckets,
     assign_shards,
     export_prep,
@@ -37,15 +38,15 @@ def test_shard_positions_are_dense_and_deterministic(spark):
     df = spark.createDataFrame(
         [(f"img{i}", 10 + i, 10) for i in range(50)], ["image_id", "w", "h"]
     )
-    out = assign_shards(df, num_shards=4).collect()
+    out = assign_shards(df).collect()
     by_shard = {}
     for r in out:
         by_shard.setdefault(r.shard_id, []).append(r.pos_in_shard)
-    assert set(by_shard) <= set(range(4))
+    assert set(by_shard) <= set(range(NUM_SHARDS))
     for positions in by_shard.values():
         assert sorted(positions) == list(range(1, len(positions) + 1))
     # deterministic across executions
-    again = assign_shards(df, num_shards=4).collect()
+    again = assign_shards(df).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
 
 
@@ -58,8 +59,8 @@ def test_spark_matches_pure_python_twin(spark):
         [(r["image_id"], r["w"], r["h"]) for r in rows],
         ["image_id", "w", "h"],
     )
-    got = sorted(map(tuple, export_prep(df, num_shards=8).collect()))
-    want = sorted(export_prep_rows(rows, num_shards=8))
+    got = sorted(map(tuple, export_prep(df).collect()))
+    want = sorted(export_prep_rows(rows))
     assert got == want
 
 

@@ -51,7 +51,7 @@ def test_duckdb_chain_is_identical(spark):
     con.execute("CREATE TABLE t (doc_id BIGINT, html VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?)",
                     [(i, h) for i, h, _ in CASES])
-    expr = strip_html_sql("html")
+    expr = strip_html_sql()
     duck_rows = {
         i: (t, nl, nc)
         for i, t, nl, nc in con.execute(

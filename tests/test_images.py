@@ -89,19 +89,19 @@ def test_jpeg_reencode_psnr_headroom():
 
 
 def test_sample_video_frames_plumbing(spark):
-    """Fan-out mapInPandas: one MJPEG AVI row -> every_n-sampled frame
-    rows, PNG re-encoded, deterministic across runs."""
+    """Fan-out mapInPandas: one MJPEG AVI row -> every-2nd-frame rows,
+    PNG re-encoded, deterministic across runs."""
     from pii_filter_spark.images import decode_image
     from pii_filter_spark.operators.image_stage import sample_video_frames
     from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
 
-    clips = [(f"v{i}", encode_avi_mjpeg(synth_clip(i), fps=10)) for i in range(6)]
+    clips = [(f"v{i}", encode_avi_mjpeg(synth_clip(i))) for i in range(6)]
     df = spark.createDataFrame(clips, "image_id string, bytes binary").repartition(3)
-    out = sample_video_frames(df, every_n=2).collect()
+    out = sample_video_frames(df).collect()
     assert sorted((r.video_id, r.frame_idx) for r in out) == sorted(
         (f"v{i}", idx) for i in range(6) for idx in range(0, len(synth_clip(i)), 2)
     )
-    again = sample_video_frames(df, every_n=2).collect()
+    again = sample_video_frames(df).collect()
     assert sorted((r.video_id, r.frame_idx) for r in out) == \
            sorted((r.video_id, r.frame_idx) for r in again)
     for r in out[:5]:
@@ -127,8 +127,8 @@ def test_audio_features_plumbing(spark):
         assert 0.0 < r.rms < 1.0
         assert 0.0 <= r.zero_crossing_rate <= 1.0
 
-    def deny(data):  # a decoder that refuses -> null features, no crash
-        raise ValueError("refused")
-
-    nulls = audio_features(df, decoder=deny).collect()
+    # bytes the decoder refuses -> null features, no crash
+    junk = spark.createDataFrame([(f"a{i}", b"refused") for i in range(8)],
+                                 "image_id string, bytes binary").repartition(2)
+    nulls = audio_features(junk).collect()
     assert len(nulls) == 8 and all(r.sample_rate is None for r in nulls)

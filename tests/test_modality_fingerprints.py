@@ -46,7 +46,7 @@ def test_audio_fp_short_and_silent_clips_do_not_crash():
 
 def _clip_fp(i, quality):
     frames = synth_clip(i)
-    data = encode_avi_mjpeg(frames, fps=10, quality=quality)
+    data = encode_avi_mjpeg(frames, quality=quality)
     decoded = decode_avi_mjpeg(data)[1]
     return phash64(decoded[len(decoded) // 2])
 
@@ -74,7 +74,7 @@ def test_spark_stages_match_pure_rows(spark):
         sr, dec = decode_wav(data)
         assert got[aid] == audio_fp64(dec, sr)
 
-    vrows = [(f"v{i}", encode_avi_mjpeg(synth_clip(i), fps=10, quality=90))
+    vrows = [(f"v{i}", encode_avi_mjpeg(synth_clip(i), quality=90))
              for i in range(4)]
     vdf = spark.createDataFrame(vrows, "video_id string, bytes binary")
     vg = {r["video_id"]: (r["n_frames"], r["mid_phash"])
@@ -90,7 +90,7 @@ def test_video_middle_frame_phash_quarantines_bad_rows(spark):
     from pii_filter_spark.video.avi import encode_avi_mjpeg, synth_clip
 
     rows = [
-        ("ok", bytes(encode_avi_mjpeg(synth_clip(3), fps=10, quality=90))),
+        ("ok", bytes(encode_avi_mjpeg(synth_clip(3), quality=90))),
         ("bad", b"\x00\x01 not an avi"),
     ]
     df = spark.createDataFrame(rows, "video_id: string, bytes: binary")

@@ -3,7 +3,6 @@ dedup of byte-copies, conjunction semantics, decode-failure rows."""
 
 from pyspark.sql import functions as F
 
-from pii_filter_spark.operators.alignment import STUB_THRESHOLD
 from pii_filter_spark.operators.multimodal_curation import (
     multimodal_curation,
 )
@@ -22,9 +21,7 @@ def _table(spark, n=18):
 def test_exact_copies_lose_to_min_id(spark):
     out = {
         r.image_id: r
-        for r in multimodal_curation(
-            _table(spark), align_threshold=STUB_THRESHOLD
-        ).collect()
+        for r in multimodal_curation(_table(spark)).collect()
     }
     for rid, r in out.items():
         if rid.startswith("zz_"):
@@ -36,9 +33,7 @@ def test_exact_copies_lose_to_min_id(spark):
 
 
 def test_keep_is_the_conjunction(spark):
-    for r in multimodal_curation(
-        _table(spark), align_threshold=STUB_THRESHOLD
-    ).collect():
+    for r in multimodal_curation(_table(spark)).collect():
         assert r.keep == (r.quality_ok and r.align_ok and r.is_survivor)
 
 

@@ -57,7 +57,7 @@ def test_spark_compute_phash_and_pairs(spark):
     imgs = build_input_table(spark, 24, seed=42, num_partitions=4).select(
         "image_id", "bytes"
     )
-    variants = reencode_variants(imgs, quality=90)
+    variants = reencode_variants(imgs)
     hashes = compute_phash(imgs.unionByName(variants))
     assert hashes.where("pixel_phash is null").count() == 0
     pairs = hamming_near_pairs(

@@ -36,29 +36,28 @@ def _vecs(n=40, dim=16, seed=3):
 
 def test_twin_parity_and_partition_invariance(spark):
     vecs = _vecs()
-    heads = default_heads(16)
-    expected = probe_rows(vecs, heads)
+    expected = probe_rows(vecs)
 
     df1 = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
     got1 = sorted(
-        tuple(r) for r in probe_scores(df1, heads).collect()
+        tuple(r) for r in probe_scores(df1).collect()
     )
     df8 = df1.repartition(8)
     got8 = sorted(
-        tuple(r) for r in probe_scores(df8, heads).collect()
+        tuple(r) for r in probe_scores(df8).collect()
     )
     assert got1 == sorted(map(tuple, expected))
     assert got1 == got8  # micro-rounding is partition-invariant
 
 
 def test_keep_rule_boundary():
-    # an embedding equal to the aesthetic head scores cosine 1.0 ->
+    # the 16-dim stub heads score 16-dim embeddings; an embedding equal
+    # to the aesthetic head scores cosine 1.0 ->
     # aes = 10.0 (kept side); equal to the nsfw head -> nsfw = 1.0
     # (dropped side)
     heads = default_heads(16)
     rows = probe_rows(
-        [(0, heads["aesthetic"].tolist()), (1, heads["nsfw"].tolist())],
-        heads,
+        [(0, heads["aesthetic"].tolist()), (1, heads["nsfw"].tolist())]
     )
     by_id = {r[0]: r for r in rows}
     assert by_id[0][1] == 10 * MICRO

@@ -37,7 +37,7 @@ def test_matches_pure_twin(spark, data):
     cents, vecs = data
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     got = _collect(flag_prototypes(prototypicality_scores(df, cents)))
-    exp = sorted(prototypicality_rows(vecs, cents, drop_frac=0.1))
+    exp = sorted(prototypicality_rows(vecs, cents))
     assert got == exp
 
 

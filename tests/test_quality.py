@@ -67,7 +67,7 @@ def test_filter_ablation_ws_class_matches_oracle_on_vertical_tab(spark):
     rows = [(1, "alpha\x0bbeta gamma"), (2, "one two three four")]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     got = {r["rule"]: (r["n_fail"], r["n_unique_fail"])
-           for r in rule_ablation(df, text_col="text").collect()}
+           for r in rule_ablation(df).collect()}
     # doc 1: VT splits -> 3 words (>=3 passes word_count)
     assert got["word_count"][0] == 0
 
@@ -95,6 +95,6 @@ def test_filter_ablation_fixture_oracle_matches_rule_ablation(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id: long, text: string")
     got = {r["rule"]: (r["n_fail"], r["n_unique_fail"])
-           for r in rule_ablation(df, text_col="text").collect()}
+           for r in rule_ablation(df).collect()}
     assert got == want
     assert all(n_fail > 0 for n_fail, _ in want.values())

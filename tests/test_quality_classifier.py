@@ -32,8 +32,8 @@ def _toy_corpus():
 
 
 def test_training_is_deterministic():
-    w1, b1 = train_quality_classifier(_toy_corpus(), epochs=10)
-    w2, b2 = train_quality_classifier(_toy_corpus(), epochs=10)
+    w1, b1 = train_quality_classifier(_toy_corpus())
+    w2, b2 = train_quality_classifier(_toy_corpus())
     assert w1 == w2 and b1 == b2
 
 
@@ -81,7 +81,7 @@ def test_pareto_keep_shape():
 def test_stage_matches_pure_scoring(spark):
     rows = [(i, t) for i, (t, _) in enumerate(_toy_corpus()[:20])]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    w, b = train_quality_classifier(training_sample(df, sample=20))
+    w, b = train_quality_classifier(training_sample(df))
     out = {r["doc_id"]: r for r in quality_classifier_stage(df, w, b).collect()}
     for i, t in rows:
         p = score_text(t, w, b)

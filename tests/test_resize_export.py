@@ -4,7 +4,6 @@ parity with export_prep's Catalyst argmin, and Spark-stage parity with
 the pure row function."""
 
 import numpy as np
-import pytest
 
 from pii_filter_spark.images.phash import area_resize_hw, area_resize_rgb
 
@@ -40,10 +39,7 @@ def test_gray_input_becomes_rgb():
 
 
 def test_bucket_choice_matches_export_prep_catalyst(spark):
-    from pii_filter_spark.operators.export_prep import (
-        DEFAULT_BUCKETS,
-        assign_aspect_buckets,
-    )
+    from pii_filter_spark.operators.export_prep import assign_aspect_buckets
     from pii_filter_spark.operators.image_stage import resize_export_row
     from pii_filter_spark.images.codecs import encode_image
 
@@ -58,10 +54,9 @@ def test_bucket_choice_matches_export_prep_catalyst(spark):
     }
     for k, (w, h) in enumerate(dims):
         img = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
-        bw, bh, _, _, _ = resize_export_row(
-            encode_image(img, "png"), DEFAULT_BUCKETS, 70
-        )
-        assert (bw, bh) == catalyst[f"i{k}"], (w, h)
+        bw, bh, _, _, _ = resize_export_row(encode_image(img, "png"))
+        # the resize buckets are export_prep's at 1/16 scale
+        assert (16 * bw, 16 * bh) == catalyst[f"i{k}"], (w, h)
 
 
 def test_spark_stage_matches_pure_rows(spark):
@@ -71,42 +66,32 @@ def test_spark_stage_matches_pure_rows(spark):
     )
     from pii_filter_spark.sources.synth import gen_row
 
-    buckets = ((32, 128), (64, 64), (128, 32))
     rows = [(r["image_id"], bytes(r["bytes"]))
             for r in (gen_row(7, i) for i in range(8))]
     df = spark.createDataFrame(rows, "image_id string, bytes binary")
     got = {r["image_id"]: (r["bucket_w"], r["bucket_h"], r["out_len"],
                            r["out_md5"])
-           for r in resize_to_buckets(df, buckets, quality=70).collect()}
+           for r in resize_to_buckets(df).collect()}
     for img_id, data in rows:
-        assert got[img_id] == resize_export_row(data, buckets, 70)[:4]
+        assert got[img_id] == resize_export_row(data)[:4]
 
 
-def test_with_bytes_emits_decodable_jpeg(spark):
+def test_with_bytes_emits_decodable_jpeg():
     from pii_filter_spark.images import decode_image
-    from pii_filter_spark.operators.image_stage import resize_to_buckets
+    from pii_filter_spark.operators.image_stage import resize_export_row
     from pii_filter_spark.sources.synth import gen_row
 
-    r = gen_row(7, 1)
-    df = spark.createDataFrame(
-        [(r["image_id"], bytes(r["bytes"]))], "image_id string, bytes binary"
-    )
-    out = resize_to_buckets(df, ((64, 64),), quality=70,
-                            with_bytes=True).collect()[0]
-    px = decode_image(bytes(out["out_bytes"]))
-    assert px.shape == (64, 64, 3)
-    assert len(bytes(out["out_bytes"])) == out["out_len"]
+    bw, bh, out_len, _, out_bytes = resize_export_row(bytes(gen_row(7, 1)["bytes"]))
+    px = decode_image(out_bytes)
+    assert px.shape == (bh, bw, 3)
+    assert len(out_bytes) == out_len
 
 
 def test_resize_quarantines_undecodable_and_rejects_empty_buckets(spark):
-    import pytest
-
     from pii_filter_spark.operators.image_stage import resize_to_buckets
 
     df = spark.createDataFrame(
         [("bad", b"not an image")], "image_id: string, bytes: binary"
     )
-    out = resize_to_buckets(df, buckets=((64, 64),)).collect()
+    out = resize_to_buckets(df).collect()
     assert len(out) == 1 and out[0]["out_md5"] is None
-    with pytest.raises(ValueError):
-        resize_to_buckets(df, buckets=())

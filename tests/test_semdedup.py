@@ -25,8 +25,8 @@ def _planted(spark, n=60, dim=16):
 
 def test_planted_duplicates_drop_min_id_survives(spark):
     df = _planted(spark)
-    cents = train_ivf_centroids(df, k=4, iters=5)
-    out = {r["vec_id"]: r for r in semdedup(df, cents, threshold=0.99).collect()}
+    cents = train_ivf_centroids(df)
+    out = {r["vec_id"]: r for r in semdedup(df, cents).collect()}
     assert len(out) == 70
     for i in range(10):
         # the copy pair (i, 1000+i) is near-identical: original kept
@@ -40,9 +40,9 @@ def test_planted_duplicates_drop_min_id_survives(spark):
 
 def test_partitioning_invariant(spark):
     df = _planted(spark)
-    cents = train_ivf_centroids(df, k=4, iters=5)
-    a = sorted(map(tuple, semdedup(df, cents, threshold=0.99).collect()))
+    cents = train_ivf_centroids(df)
+    a = sorted(map(tuple, semdedup(df, cents).collect()))
     b = sorted(
-        map(tuple, semdedup(df.repartition(7), cents, threshold=0.99).collect())
+        map(tuple, semdedup(df.repartition(7), cents).collect())
     )
     assert a == b

@@ -4,6 +4,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pii_filter_spark.operators.similarity import DIM
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -32,7 +34,7 @@ def test_bruteforce_matches_numpy(spark, emb, emb_np):
 
     ids, mat = emb_np
     query = mat[0].tolist()
-    got = cosine_topk_bruteforce(emb, query, k=10).collect()
+    got = cosine_topk_bruteforce(emb, query).collect()
     exp = _numpy_topk(ids, mat, query, 10)
     assert [r["vec_id"] for r in got] == [e[0] for e in exp]
     for r, e in zip(got, exp):
@@ -52,7 +54,7 @@ def test_lsh_recall_vs_bruteforce(spark, emb, emb_np):
         exact = {e[0] for e in _numpy_topk(ids, mat, query, 10)}
         approx = {
             r["vec_id"]
-            for r in cosine_topk_lsh(emb, query, k=10, planes=16, max_flip=6).collect()
+            for r in cosine_topk_lsh(emb, query).collect()
         }
         recalls.append(len(exact & approx) / 10)
     assert sum(recalls) / len(recalls) >= 0.5  # ANN: useful recall, not exact
@@ -90,13 +92,13 @@ def test_cosine_near_pairs_exact_vs_lsh(spark):
 
     exact = {
         (r.id_a, r.id_b): r.cos_sim
-        for r in cosine_near_pairs_exact(df, threshold=0.9).collect()
+        for r in cosine_near_pairs_exact(df).collect()
     }
     approx = {
         (r.id_a, r.id_b): r.cos_sim
-        for r in cosine_near_pairs_lsh(df, threshold=0.9, planes=16, chunks=4).collect()
+        for r in cosine_near_pairs_lsh(df).collect()
     }
-    assert len(exact) >= 15  # most planted dups survive the 0.9 threshold
+    assert len(exact) >= 15  # most planted dups survive the NEAR_COS threshold
     # LSH returns a subset of the exact pairs, with identical cosines
     assert set(approx) <= set(exact)
     for k, v in approx.items():
@@ -117,16 +119,16 @@ def test_ivf_topk_recall_vs_bruteforce(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     query = [float(x) for x in emb.where("vec_id = 7").first()["embedding"]]
-    cents = train_ivf_centroids(emb, k=8, iters=8)
+    cents = train_ivf_centroids(emb)
     assert cents.shape[1] == 64
     # determinism
-    cents2 = train_ivf_centroids(emb, k=8, iters=8)
+    cents2 = train_ivf_centroids(emb)
     assert np.allclose(cents, cents2)
 
-    exact = [r.vec_id for r in cosine_topk_bruteforce(emb, query, k=10).collect()]
+    exact = [r.vec_id for r in cosine_topk_bruteforce(emb, query).collect()]
     approx = [
         r.vec_id
-        for r in cosine_topk_ivf(emb, query, cents, k=10, nprobe=4).collect()
+        for r in cosine_topk_ivf(emb, query, cents).collect()
     ]
     assert approx[0] == 7  # the query vector itself
     overlap = len(set(exact) & set(approx)) / 10
@@ -143,18 +145,19 @@ def test_cosine_near_pairs_exact_enforces_row_bound(spark):
         F.array(*[F.rand(seed=3) for _ in range(4)]).alias("embedding"),
     )
     with pytest.raises(ValueError, match="cosine_near_pairs_lsh"):
-        cosine_near_pairs_exact(df, threshold=0.9, max_rows=10)
-    # at/below the bound it still works
-    out = cosine_near_pairs_exact(df, threshold=-1.1, max_rows=50)
+        cosine_near_pairs_exact(df, max_rows=10)
+    # at/below the bound it still works: the rows are (r, r, r, r), so
+    # every pair has cosine 1
+    out = cosine_near_pairs_exact(df, max_rows=50)
     assert out.count() == 50 * 49 / 2
 
 
 def test_lsh_drops_zero_norm_vectors(spark):
     from pii_filter_spark.operators.similarity import cosine_near_pairs_lsh
 
-    rows = [(1, [1.0] * 8), (2, [1.0] * 8), (3, [0.0] * 8)]
+    rows = [(1, [1.0] * DIM), (2, [1.0] * DIM), (3, [0.0] * DIM)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = cosine_near_pairs_lsh(df, threshold=0.5, planes=8, chunks=2, dim=8).collect()
+    got = cosine_near_pairs_lsh(df).collect()
     ids = {r.id_a for r in got} | {r.id_b for r in got}
     assert 3 not in ids  # zero-norm: no direction, no NaN pairs
     assert {(r.id_a, r.id_b) for r in got} == {(1, 2)}
@@ -171,16 +174,13 @@ def test_srp_lsh_degenerate_bucket_guard(spark, monkeypatch):
     n = 2000
     same = spark.range(n).select(
         F.col("id").alias("vec_id"),
-        F.array(*[F.lit(float(i + 1)) for i in range(8)]).alias("embedding"),
+        F.array(*[F.lit(float(i + 1)) for i in range(DIM)]).alias("embedding"),
     )
     zeros = spark.range(100).select(
         (F.col("id") + 100_000).alias("vec_id"),
-        F.array(*[F.lit(0.0)] * 8).alias("embedding"),
+        F.array(*[F.lit(0.0)] * DIM).alias("embedding"),
     )
-    pairs = cosine_near_pairs_lsh(
-        same.unionByName(zeros), threshold=0.9, planes=16, chunks=4,
-        dim=8,
-    ).toPandas()
+    pairs = cosine_near_pairs_lsh(same.unionByName(zeros)).toPandas()
     assert len(pairs) == n - 1
     assert (pairs.id_a == 0).all()
     assert set(pairs.id_b) == set(range(1, n))
@@ -195,18 +195,17 @@ def test_vectorized_cosine_buckets_equal_native(spark):
     import pii_filter_spark.operators.dedup as D
     from pii_filter_spark.operators.similarity import cosine_near_pairs_lsh
 
-    rows = [(i, [float(j + 1) * 0.1 for j in range(8)]) for i in range(60)]
-    rows += [(1000 + i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(8)])
+    rows = [(i, [float(j + 1) * 0.1 for j in range(DIM)]) for i in range(60)]
+    rows += [(1000 + i, [float((i * 7 + j * 3) % 11) - 5.0 for j in range(DIM)])
              for i in range(30)]
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["vec_id", "embedding"])
     )
-    kw = dict(threshold=0.9, planes=16, chunks=4, dim=8)
-    vec = cosine_near_pairs_lsh(df, **kw).toPandas()
+    vec = cosine_near_pairs_lsh(df).toPandas()
     old = D._VECTORIZE_FROM
     try:
         D._VECTORIZE_FROM = 10 ** 9
-        nat = cosine_near_pairs_lsh(df, **kw).toPandas()
+        nat = cosine_near_pairs_lsh(df).toPandas()
     finally:
         D._VECTORIZE_FROM = old
     key = lambda d: sorted(zip(d.id_a, d.id_b, d.cos_sim))  # exact doubles
@@ -224,8 +223,8 @@ def test_cosine_topk_batch_partition_invariant(spark, emb, emb_np):
 
     ids, mat = emb_np
     queries = mat[:3].astype(np.float64)
-    a = cosine_topk_batch(emb.repartition(7), queries, k=5).toPandas()
-    b = cosine_topk_batch(emb.repartition(2), queries, k=5).toPandas()
+    a = cosine_topk_batch(emb.repartition(7), queries).toPandas()
+    b = cosine_topk_batch(emb.repartition(2), queries).toPandas()
     key = lambda d: sorted(
         zip(d["query_idx"], d["rank"], d["vec_id"], d["cos_sim"])
     )  # d.rank would be the DataFrame METHOD, not the column

@@ -12,43 +12,19 @@ from pii_filter_spark.sources.table_io import (
 )
 
 
-def test_snapshot_append_and_time_travel(spark, tmp_path):
-    tbl = str(tmp_path / "tbl")
-    df1 = spark.range(10).select(F.col("id"), F.lit("a").alias("batch"))
-    df2 = spark.range(10, 25).select(F.col("id"), F.lit("b").alias("batch"))
-
-    s1 = snapshot_write(df1, tbl, mode="append")
-    s2 = snapshot_write(df2, tbl, mode="append")
-    assert (s1, s2) == (1, 2)
-    assert current_snapshot_id(tbl) == 2
-
-    # current read sees both batches; snapshot 1 sees only the first
-    assert read_table(spark, tbl).count() == 25
-    old = read_table(spark, tbl, snapshot_id=1)
-    assert old.count() == 10
-    assert {r.batch for r in old.collect()} == {"a"}
-
-    # snapshot metadata: parent chain + explicit file lists
-    snaps = {s["snapshot_id"]: s for s in list_snapshots(tbl)}
-    assert snaps[1]["parent_id"] is None
-    assert snaps[2]["parent_id"] == 1
-    assert len(snaps[2]["files"]) == 2
-    assert snaps[2]["added_files"] == [snaps[2]["files"][-1]]
-
-
 def test_snapshot_overwrite_keeps_history_readable(spark, tmp_path):
     """An overwrite supersedes the current pointer, but the previous
     snapshot's files are retained and stay readable — the core Iceberg
     time-travel guarantee the README's lineage story depends on."""
     tbl = str(tmp_path / "tbl")
-    snapshot_write(
+    s1 = snapshot_write(
         spark.range(5).select(F.col("id"), F.lit("old").alias("tag")), tbl
     )
     s2 = snapshot_write(
         spark.range(100, 103).select(F.col("id"), F.lit("new").alias("tag")),
         tbl,
-        mode="overwrite",
     )
+    assert (s1, s2) == (1, 2)
     assert current_snapshot_id(tbl) == s2 == 2
     assert read_table(spark, tbl).count() == 3          # overwritten view
     prev = read_table(spark, tbl, snapshot_id=1)        # time travel
@@ -58,46 +34,17 @@ def test_snapshot_overwrite_keeps_history_readable(spark, tmp_path):
     with pytest.raises(ValueError, match="snapshot 9 not found"):
         read_table(spark, tbl, snapshot_id=9)
 
+    # snapshot metadata: parent chain + explicit file lists
+    snaps = {s["snapshot_id"]: s for s in list_snapshots(tbl)}
+    assert snaps[1]["parent_id"] is None
+    assert snaps[2]["parent_id"] == 1
+    assert snaps[2]["files"] == snaps[2]["added_files"] != snaps[1]["files"]
+
 
 def test_plain_directory_read_unaffected(spark, tmp_path):
     p = str(tmp_path / "plain")
     spark.range(7).write.parquet(p)
     assert read_table(spark, p).count() == 7
-
-
-def test_streaming_foreachbatch_snapshot_sink(spark, tmp_path):
-    """Structured Streaming → snapshot log: each microbatch commits one
-    append snapshot (foreachBatch + snapshot_write), so a streaming
-    ingest gets the same time-travel/lineage surface as batch writes."""
-    src = str(tmp_path / "src")
-    tbl = str(tmp_path / "tbl")
-    ckpt = str(tmp_path / "ckpt")
-    # single part-file per input dir: maxFilesPerTrigger counts part
-    # files, and the microbatch count below depends on it
-    spark.range(0, 5).selectExpr("id", "'a' AS tag").repartition(1) \
-        .write.parquet(src + "/f1.parquet")
-    spark.range(5, 12).selectExpr("id", "'b' AS tag").repartition(1) \
-        .write.parquet(src + "/f2.parquet")
-    stream = (
-        spark.readStream.schema("id long, tag string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: snapshot_write(batch_df, tbl, "append")
-        )
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    snaps = list_snapshots(tbl)
-    assert len(snaps) == 2                      # one snapshot per microbatch
-    assert read_table(spark, tbl).count() == 12
-    first = read_table(spark, tbl, snapshot_id=1)
-    assert first.count() in (5, 7)              # one whole input file
-    assert len({r.tag for r in first.collect()}) == 1
 
 
 def test_merge_upsert_cow_semantics_and_time_travel(spark, tmp_path):
@@ -110,12 +57,12 @@ def test_merge_upsert_cow_semantics_and_time_travel(spark, tmp_path):
         [(i, f"t{i}", "base") for i in range(10)],
         "doc_id long, text string, rev string",
     )
-    s1 = table_io.snapshot_write(base, path, mode="overwrite")
+    s1 = table_io.snapshot_write(base, path)
     updates = spark.createDataFrame(
         [(2, "t2x", "upd"), (7, "t7x", "upd"), (100, "t100", "new")],
         "doc_id long, text string, rev string",
     )
-    s2 = table_io.merge_upsert(spark, path, updates, key_col="doc_id")
+    s2 = table_io.merge_upsert(spark, path, updates)
     assert s2 == s1 + 1
 
     merged = {r["doc_id"]: (r["text"], r["rev"])

@@ -2,9 +2,7 @@
 (operators/span_dedup.py) — first-occurrence keep, overlap-union
 removal, empty-doc passthrough, and boilerplate-at-scale boundedness."""
 
-import pytest
-
-from pii_filter_spark.operators.span_dedup import span_dedup
+from pii_filter_spark.operators.span_dedup import SPAN_SENTENCES, span_dedup
 
 
 def _collect(df):
@@ -57,13 +55,14 @@ def test_intra_document_repeat_is_removed(spark):
 
 
 def test_span_width_parameter_and_validation(spark):
-    rows = [(1, "A. B. C."), (2, "A. B. D.")]
+    # a shared run shorter than SPAN_SENTENCES is no duplicate span; one
+    # of exactly SPAN_SENTENCES is
+    rows = [(1, "A. B. C."), (2, "A. B. D."), (3, "E. A. B. C.")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = _collect(span_dedup(df, span_sentences=2))
+    out = _collect(span_dedup(df))
     assert out[1] == (3, 0, "A. B. C.")
-    assert out[2] == (3, 2, "D.")
-    with pytest.raises(ValueError):
-        span_dedup(df, span_sentences=1)
+    assert out[2] == (3, 0, "A. B. D.")
+    assert out[3] == (4, SPAN_SENTENCES, "E.")
 
 
 def test_boilerplate_cohort_bounded(spark):

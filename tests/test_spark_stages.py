@@ -6,11 +6,8 @@ FIXTURES.md B3, exercised through the real Arrow-batched plan.
 import pandas as pd
 import pytest
 
-from pii_filter_spark.operators.fused import (
-    fused_quality_scrub,
-    quality_stage,
-    scrub_stage,
-)
+from pii_filter_spark.operators.fused import quality_stage, scrub_stage
+from pii_filter_spark.pipeline import transform
 from pii_filter_spark.sources.synth import gen_pandas
 from tests.oracle import reference_semantics as oracle
 from tests.plans import Plan
@@ -85,11 +82,11 @@ def test_null_caption_safe(spark):
 
 
 def test_fused_stage_equals_chained_stages(spark, corpus):
-    """fused_quality_scrub must be plan-for-plan replaceable with
+    """transform must be plan-for-plan replaceable with
     scrub_stage(quality_stage(df)) — same columns, same values."""
     df, _ = corpus
     chained = scrub_stage(quality_stage(df))
-    fused = fused_quality_scrub(df)
+    fused = transform(df)
     assert fused.columns == chained.columns
     a = {r["image_id"]: r for r in chained.collect()}
     b = {r["image_id"]: r for r in fused.collect()}
@@ -105,7 +102,7 @@ def test_caption_paths_run_one_python_stage(spark, corpus, tmp_path):
     import __spark_entry__ as em
     from pii_filter_spark.operators.fused import PartCounts
     from pii_filter_spark.pipeline import (
-        batch_frame, batch_input, part_ranges, transform, with_part_id,
+        batch_frame, batch_input, part_ranges, with_part_id,
     )
     from pii_filter_spark.sources import table_io
 
@@ -149,19 +146,19 @@ def test_lsh_pair_operators_evaluate_their_signature_udf_once(spark, corpus):
         minhash_lsh_pairs,
         simhash_near_pairs,
     )
-    from pii_filter_spark.operators.similarity import cosine_near_pairs_lsh
+    from pii_filter_spark.operators.similarity import DIM, cosine_near_pairs_lsh
 
     df, _ = corpus
     docs = df.select(F.col("image_id").alias("doc_id"),
                      F.col("caption").alias("text"))
-    for pairs in (minhash_lsh_pairs(docs, threshold=0.5), simhash_near_pairs(docs)):
+    for pairs in (minhash_lsh_pairs(docs), simhash_near_pairs(docs)):
         assert Plan(pairs, executed=True).udfs_per_arrow_node() == [1]
 
     emb = spark.range(300, numPartitions=8).select(
         F.col("id").alias("vec_id"),
-        F.array(*[F.sin(F.col("id") % 40 + j) for j in range(8)]).alias("embedding"),
+        F.array(*[F.sin(F.col("id") % 40 + j) for j in range(DIM)]).alias("embedding"),
     )
-    pairs = cosine_near_pairs_lsh(emb, threshold=0.9, planes=16, chunks=4, dim=8)
+    pairs = cosine_near_pairs_lsh(emb)
     assert Plan(pairs, executed=True).udfs_per_arrow_node() == [1]
 
 

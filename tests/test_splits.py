@@ -2,8 +2,6 @@
 
 import hashlib
 
-import pytest
-
 from pii_filter_spark.operators.splits import assign_splits
 
 
@@ -31,12 +29,3 @@ def test_split_proportions_roughly_hold(spark):
               assign_splits(df).groupBy("split").count().collect()}
     assert 0.97 < counts["train"] / 20000 < 0.99
     assert counts["val"] > 0 and counts["test"] > 0
-
-
-def test_split_validation():
-    # thresholds must end at denom and be strictly increasing;
-    # validation fires before the DataFrame is touched
-    with pytest.raises(ValueError):
-        assign_splits(None, splits=[("a", 5000), ("b", 9000)])
-    with pytest.raises(ValueError):
-        assign_splits(None, splits=[("a", 9000), ("b", 9000), ("c", 10000)])

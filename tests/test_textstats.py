@@ -53,7 +53,7 @@ def test_sentence_split_udtf(spark):
 
     df = spark.createDataFrame(
         [(1, "Primeira frase. Segunda! Terceira? "), (2, None), (3, "Sem pontuacao")],
-        "doc_id long, text string",
+        "doc_id long, caption string",
     )
     rows = {(r.doc_id, r.sent_idx): r.sentence
             for r in split_sentences(df).collect()}
@@ -72,7 +72,7 @@ def test_stratified_take_deterministic_quota(spark):
         [(i, "a" if i % 2 else "b") for i in range(100)],
         "doc_id long, lang string",
     )
-    out = stratified_take(df, "lang", 5)
+    out = stratified_take(df, 5)
     rows = out.collect()
     by_stratum = {}
     for r in rows:
@@ -83,7 +83,7 @@ def test_stratified_take_deterministic_quota(spark):
                for v in by_stratum.values())
     # deterministic across partition layouts
     again = {(r.lang, r.sample_rank, r.doc_id)
-             for r in stratified_take(df.repartition(7), "lang", 5).collect()}
+             for r in stratified_take(df.repartition(7), 5).collect()}
     assert again == {(r.lang, r.sample_rank, r.doc_id) for r in rows}
 
 

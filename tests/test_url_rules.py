@@ -1,6 +1,6 @@
 """URL keep/drop rules (operators/url_rules.py): rule precedence,
-subdomain blocklist inheritance, integer word scoring, the DataFrame
-blocklist scale path, and the zero-shuffle plan claim."""
+subdomain blocklist inheritance, integer word scoring, and the
+zero-shuffle plan claim."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -54,16 +54,6 @@ def test_host_and_domain_extraction(urls):
     assert rows[7]["domain"] == "example.net"
 
 
-def test_blocklist_dataframe_path_matches_literal(spark, urls):
-    deny = spark.createDataFrame(
-        [("spam-casino.biz",), ("free-lottery.win",), ("miracle-pills.net",)],
-        ["domain"],
-    )
-    lit = sorted(map(tuple, url_filter(urls).collect()))
-    via_join = sorted(map(tuple, url_filter(urls, blocklist_df=deny).collect()))
-    assert lit == via_join
-
-
 def test_threshold_boundary(spark):
     # exactly at the threshold drops; one centi-point under keeps
     df = spark.createDataFrame(
@@ -79,10 +69,3 @@ def test_threshold_boundary(spark):
 
 def test_literal_path_plan_has_no_shuffle(urls):
     assert not Plan(url_filter(urls)).has("Exchange")
-
-
-def test_join_path_is_broadcast(spark, urls):
-    deny = spark.createDataFrame([("spam-casino.biz",)], ["domain"])
-    plan = Plan(url_filter(urls, blocklist_df=deny))
-    assert plan.has("BroadcastHashJoin") or plan.has("BroadcastNestedLoop")
-    assert not plan.has("SortMergeJoin")

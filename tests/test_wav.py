@@ -12,14 +12,14 @@ from pii_filter_spark.audio.wav import decode_wav, encode_wav, synth_tone
 
 def test_roundtrip_is_16bit_exact():
     x = synth_tone(7)
-    sr, y = decode_wav(encode_wav(x, 16_000))
+    sr, y = decode_wav(encode_wav(x))
     assert sr == 16_000 and len(y) == len(x)
     # quantization error bounded by one 16-bit step
     assert float(np.max(np.abs(y - x))) <= 1.0 / 32767.0 + 1e-9
 
 
 def test_container_structure_is_real_riff():
-    data = encode_wav(np.zeros(100), 8_000)
+    data = encode_wav(np.zeros(100))
     assert data[:4] == b"RIFF" and data[8:12] == b"WAVE"
     assert b"fmt " in data and b"data" in data
     # RIFF size field covers everything after the first 8 bytes
@@ -63,7 +63,8 @@ def test_default_decoder_dispatch(spark):
         [("wav", encode_wav(synth_tone(3))), ("blob", b"opaque blob")],
         "audio_id string, bytes binary",
     ).coalesce(1)
-    feats = {r.audio_id: r for r in audio_features(df, id_col="audio_id").collect()}
+    feats = {r.audio_id: r for r in
+             audio_features(df.withColumnRenamed("audio_id", "image_id")).collect()}
     assert feats["wav"].sample_rate == 16_000
     assert feats["wav"].n_samples == len(synth_tone(3))
     assert feats["blob"].sample_rate is None and feats["blob"].rms is None

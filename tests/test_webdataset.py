@@ -1,15 +1,17 @@
 """WebDataset shard export: ustar codec + Spark export read back with
 stdlib tarfile."""
 
+import hashlib
 import io
 import json
-import os
 import tarfile
 
 from pii_filter_spark.sources.synth import build_input_table
 from pii_filter_spark.sources.webdataset import (
+    NUM_SHARDS,
     build_shard_tar,
     sample_entries,
+    shard_of,
     tar_bytes,
     write_webdataset,
 )
@@ -44,19 +46,27 @@ def test_sample_entries_shape():
     assert b'"image_id":"k1"' in e["k1.json"]
 
 
-def test_spark_export_ingest_roundtrip(spark, tmp_path):
-    out = str(tmp_path / "wds")
+def test_spark_export_ingest_roundtrip(spark):
     imgs = build_input_table(spark, 60, seed=42, num_partitions=4).select(
         "image_id", "bytes", "caption", "fmt", "w", "h"
     )
-    facts = write_webdataset(imgs, num_shards=4, out_dir=out).collect()
-    assert sorted(r["shard_id"] for r in facts) == [0, 1, 2, 3]
-    assert sum(r["n_samples"] for r in facts) == 60
+    facts = {r["shard_id"]: r for r in write_webdataset(imgs).collect()}
+    assert sorted(facts) == list(range(NUM_SHARDS))
+    assert sum(r["n_samples"] for r in facts.values()) == 60
 
-    # read the shards back with stdlib tarfile: {key}.{ext} + .txt + .json
+    # rebuild each shard from its rows: the bytes are the executors' own
+    # (same length and md5), and stdlib tarfile reads them back into
+    # {key}.{ext} + .txt + .json
+    want = {r["image_id"]: r for r in imgs.collect()}
+    shards = {}
+    for r in want.values():
+        shards.setdefault(shard_of(r["image_id"]), []).append(r.asDict())
     got, n_read = {}, 0
-    for name in sorted(f for f in os.listdir(out) if f.endswith(".tar")):
-        with tarfile.open(os.path.join(out, name)) as tf:
+    for sid, rows in sorted(shards.items()):
+        data = build_shard_tar(rows)
+        assert (len(data), hashlib.md5(data).hexdigest()) == (
+            facts[sid]["tar_len"], facts[sid]["tar_md5"])
+        with tarfile.open(fileobj=io.BytesIO(data)) as tf:
             files = {m.name: tf.extractfile(m).read() for m in tf.getmembers()}
         keys = {n.rsplit(".", 1)[0] for n in files}
         n_read += len(keys)
@@ -68,7 +78,6 @@ def test_spark_export_ingest_roundtrip(spark, tmp_path):
                 "caption": files[f"{k}.txt"].decode("utf-8"),
                 "fmt": meta["fmt"], "w": meta["w"], "h": meta["h"],
             }
-    want = {r["image_id"]: r for r in imgs.collect()}
     assert n_read == len(got)
     assert set(got) == set(want)
     for k in want:

@@ -96,7 +96,6 @@ def main(sf_dir: str, only=None):
         SparkSession.builder.master("local[8]")
         .appName("oracle-check")
         .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "8g")
         .getOrCreate()
     )
